@@ -10,7 +10,7 @@ import graft.transform.GasTransform
   * SURVEY.md §3.1) collapsed into one Spark job:
   *
   *   discover CSVs → anti-join ledger → 24 h filter + timestamp synthesis →
-  *   unpivot → date-partitioned parquet store → ledger append.
+  *   unpivot → date-partitioned parquet store + side-table commit → ledger append.
   *
   * Ordering gives at-least-once with idempotent loads (= exactly-once
   * observable state): the store write is an idempotent per-day-partition
@@ -26,71 +26,41 @@ object GasPipeline {
     * reference's "skip" branch, ETL.py:96-98).
     *
     * The anti-joined survivors are persisted so the whole batch reads the
-    * input CSVs exactly once: without the cache, the emptiness probe, the
-    * store write and the ledger append would each re-scan the day's input
-    * (3-4 full reads at 100 TB ingest). The returned file list is collected
-    * once from the cache (one short row per new file) and handed back as a
-    * local frame, so consuming it never re-triggers the scan either. */
+    * input CSVs exactly once: without the cache, the file-name probe and
+    * the store write would each re-scan the day's input. The file names
+    * are collected once from the cache (one short row per new file); the
+    * store's side tables and the ledger are derived from them, and the
+    * returned local frame never re-triggers the scan either.
+    *
+    * The batch commits through [[LongStore.commitBatch]] before the ledger
+    * mark. `snapshot = true` selects the generation commit log
+    * ([[LongStore.writeSnapshot]]) instead of dynamic partition overwrite
+    * + `_manifest`: same rows, same idempotent replay, but re-ingesting a
+    * day never mutates committed files, so a reader covering that day
+    * ([[LongStore.readCommitted]]) gets true snapshot isolation — the
+    * contract the plain layout only gives disjoint windows (IngestStress). */
   def runBatch(spark: SparkSession, inputDir: String, storePath: String,
-      ledgerPath: String): DataFrame =
-    runBatch(spark, inputDir, storePath, ledgerPath, snapshot = false)
-
-  /** `snapshot = true` routes the store write through the generation
-    * commit log ([[LongStore.writeSnapshot]]) instead of dynamic
-    * partition overwrite + `_manifest`: same rows, same idempotent
-    * replay, but re-ingesting a day never mutates committed files, so a
-    * reader covering that day ([[LongStore.readCommitted]]) gets true
-    * snapshot isolation — the contract the plain layout only gives
-    * disjoint windows (IngestStress). The ledger ordering is unchanged:
-    * commit log before ledger mark, so a crash between replays into a
-    * fresh generation and readers never see a torn batch. */
-  def runBatch(spark: SparkSession, inputDir: String, storePath: String,
-      ledgerPath: String, snapshot: Boolean): DataFrame = {
+      ledgerPath: String, snapshot: Boolean = false): DataFrame = {
     val raw = GasIngest.readDayFiles(spark, inputDir)
     val ledger = GasIngest.readLedger(spark, ledgerPath)
     val fresh = GasIngest.unseenOnly(raw, ledger).persist()
     try {
       val names = fresh.select("file_name").distinct()
-        .collect().map(_.getString(0)).sorted
+        .collect().map(_.getString(0)).sorted.toIndexedSeq
       if (names.nonEmpty) {
-        val transformed = GasTransform(fresh)
         val long =
-          LongStore.unpivot(transformed.withColumnRenamed("file_name", "_src"))
+          LongStore.unpivot(GasTransform(fresh).withColumnRenamed("file_name", "_src"))
         // Writer parallelism scaled to the day-file size (the round-11
         // single-writer funnel finding — see LongStore.writersFor).
-        val writers = LongStore.writersFor(spark, inputDir)
-        if (snapshot) {
-          // generation write + commit log in one call; `_commits` plays
-          // the manifest's planning role AND the snapshot-pinning role
-          LongStore.writeSnapshot(long, storePath, names.toIndexedSeq,
-            writersPerPartition = writers)
-          ()
-        } else {
-          LongStore.write(long, storePath, writersPerPartition = writers)
-          // partition manifest BEFORE the ledger mark (crash between the
-          // two re-appends the same rows on replay; readWindow
-          // deduplicates) — entries come from the batch's file names,
-          // zero data reads
-          LongStore.appendManifest(spark, storePath, names.toIndexedSeq)
-        }
-        GasIngest.appendToLedger(fresh, ledgerPath)
+        LongStore.commitBatch(long, storePath, names,
+          LongStore.writersFor(spark, inputDir), snapshot)
+        GasIngest.appendToLedger(spark, names, ledgerPath)
       }
       import spark.implicits._
-      names.toSeq.toDF("file_name")
+      names.toDF("file_name")
     } finally fresh.unpersist()
   }
 
-  /** CLI twin of the reference DAG trigger — the whole 7-step Airflow DAG
-    * as one command a user runs end-to-end:
-    *
-    * {{{
-    * sbt "runMain graft.GasPipeline <inputDir> <storeDir> [ledgerDir]"
-    * }}}
-    *
-    * `ledgerDir` defaults to `<storeDir>/_ledger`. Re-running with the same
-    * arguments is a no-op (the ledger anti-join skips everything already
-    * loaded — the reference's "skip" branch). Exit code 0 either way;
-    * the processed-file count goes to stdout. */
   /** Testable core of [[main]]: argument handling + one batch run, on a
     * caller-owned session. The underscore-prefixed default ledger dir is
     * deliberate: parquet readers treat `_`-prefixed paths as hidden, so a
@@ -108,6 +78,17 @@ object GasPipeline {
        else names.mkString(": ", ", ", ""))
   }
 
+  /** CLI twin of the reference DAG trigger — the whole 7-step Airflow DAG
+    * as one command a user runs end-to-end:
+    *
+    * {{{
+    * sbt "runMain graft.GasPipeline <inputDir> <storeDir> [ledgerDir]"
+    * }}}
+    *
+    * `ledgerDir` defaults to `<storeDir>/_ledger`. Re-running with the same
+    * arguments is a no-op (the ledger anti-join skips everything already
+    * loaded — the reference's "skip" branch). Exit code 0 either way;
+    * the processed-file count goes to stdout. */
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.schema.GasSchema
+import graft.store.LongStore
 
 /** Ingest stage: file discovery + per-file idempotency (SURVEY.md §2.1, §2.3).
   *
@@ -54,19 +55,17 @@ object GasIngest {
     * load so a crash between load and append re-processes (idempotent
     * overwrite-by-day partitions make that safe; SURVEY.md §7.4).
     *
-    * Compacted past `compactThreshold` part files, exactly like the
-    * partition manifest ([[graft.store.LongStore.compactSmallFiles]]):
-    * at one batch per day the append-only ledger would itself become an
-    * N-file table whose per-batch read re-lists every historical append —
-    * the same relocated O(N-batches) term the manifest compaction removes.
-    * With the fold, the scheduler-tick ledger read is bounded by the
-    * threshold however many batches have run. */
-  def appendToLedger(processed: DataFrame, ledgerPath: String,
-      compactThreshold: Int = 16): Unit = {
-    processed.select(col("file_name")).distinct()
-      .withColumn("processed_at", current_timestamp())
-      .write.mode("append").parquet(ledgerPath)
-    graft.store.LongStore.compactSmallFiles(processed.sparkSession,
-      ledgerPath, compactThreshold, dedup = false)
+    * `names` are the batch's already-collected file names, so, like the
+    * partition manifest, the append costs zero data reads. It goes through
+    * the store's side-table protocol
+    * ([[graft.store.LongStore.appendSideTable]]): one file per batch,
+    * folded past 16 part files, so the scheduler-tick ledger read stays
+    * bounded however many batches have run. */
+  def appendToLedger(spark: SparkSession, names: Seq[String],
+      ledgerPath: String): Unit = {
+    import spark.implicits._
+    LongStore.appendSideTable(
+      names.toDF("file_name").withColumn("processed_at", current_timestamp()),
+      ledgerPath, dedup = false)
   }
 }

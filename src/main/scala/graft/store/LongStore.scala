@@ -48,27 +48,6 @@ object LongStore {
       .agg(first(col("_value")))
   }
 
-  /** S5 replacement: the engine's native "bucket" — parquet partitioned by
-    * source day, sub-partitioned by source file `_src` when the frame
-    * carries one. Overwrite is per-partition (dynamic), so re-processing a
-    * day-file is idempotent — that plus the ledger gives exactly-once
-    * (SURVEY.md §7.4).
-    *
-    * `_src` exists because "partition = day" only gives lossless idempotent
-    * overwrite if every day arrives in exactly one batch: two files sharing
-    * a `yyyymmdd` prefix but loaded in different batches (or one day split
-    * across streaming micro-batches by `maxFilesPerTrigger`) would otherwise
-    * clobber each other's rows. With (`_date`, `_src`) the overwrite unit is
-    * exactly one source file — re-processing a file rewrites only its own
-    * data. Readers still prune on `_date` alone. Falls back to event-day
-    * partitioning for frames without `_date` (e.g. non-file ingest). */
-  /** @param writersPerPartition parallel writer tasks per partition value.
-    *   The pre-write `repartition` on the partition columns produces one
-    *   file per partition (no small-file explosion) but also ONE task per
-    *   partition — a single huge day-file would funnel through one writer.
-    *   Raising this spreads each partition's rows over N tasks (N files),
-    *   trading file count for write parallelism; 1 keeps the compact
-    *   one-file-per-partition layout that suits day-file-sized inputs. */
   /** Writer-count heuristic for [[write]], from the INPUT day-file sizes:
     * the one-file-per-partition layout funnels a whole day through one
     * writer task, which the round-11 streaming cost ladder measured as
@@ -87,8 +66,50 @@ object LongStore {
       (maxBytes + (64L << 20) - 1) / (64L << 20))).toInt
   }
 
+  /** S5 replacement: the engine's native "bucket" — parquet partitioned by
+    * source day, sub-partitioned by source file `_src` when the frame
+    * carries one. Overwrite is per-partition (dynamic), so re-processing a
+    * day-file is idempotent — that plus the ledger gives exactly-once
+    * (SURVEY.md §7.4).
+    *
+    * `_src` exists because "partition = day" only gives lossless idempotent
+    * overwrite if every day arrives in exactly one batch: two files sharing
+    * a `yyyymmdd` prefix but loaded in different batches (or one day split
+    * across streaming micro-batches by `maxFilesPerTrigger`) would otherwise
+    * clobber each other's rows. With (`_date`, `_src`) the overwrite unit is
+    * exactly one source file — re-processing a file rewrites only its own
+    * data. Readers still prune on `_date` alone. Falls back to event-day
+    * partitioning for frames without `_date` (e.g. non-file ingest).
+    *
+    * @param writersPerPartition parallel writer tasks per partition value.
+    *   The pre-write `repartition` on the partition columns produces one
+    *   file per partition (no small-file explosion) but also ONE task per
+    *   partition — a single huge day-file would funnel through one writer.
+    *   Raising this spreads each partition's rows over N tasks (N files),
+    *   trading file count for write parallelism; 1 keeps the compact
+    *   one-file-per-partition layout that suits day-file-sized inputs. */
   def write(long: DataFrame, path: String, writersPerPartition: Int = 1): Unit =
     writeInternal(long, path, writersPerPartition, genCol = None)
+
+  /** One batch's commit — the single path through which both pipelines
+    * ([[graft.GasPipeline.runBatch]] and the streaming sink in
+    * [[graft.streaming.GasStream.pipeline]]) record what they loaded. The
+    * plain layout writes the data ([[write]]) and then appends the batch's
+    * partitions to `_manifest` ([[appendManifest]]); the snapshot layout
+    * writes a new generation and then appends it to the `_commits` log
+    * ([[writeSnapshot]]). The side-table rows come from `srcFiles`, the
+    * batch's source file names, so they cost zero data reads. The caller
+    * marks its ledger only after this returns: data, then manifest or
+    * commit log, then ledger, so a crash anywhere replays the batch into
+    * the same state. Read a plain store with [[readWindow]] and a snapshot
+    * store with [[readCommitted]]. */
+  def commitBatch(long: DataFrame, storePath: String, srcFiles: Seq[String],
+      writers: Int, snapshot: Boolean): Unit =
+    if (snapshot) { writeSnapshot(long, storePath, srcFiles, writers); () }
+    else {
+      write(long, storePath, writers)
+      appendManifest(long.sparkSession, storePath, srcFiles)
+    }
 
   private def writeInternal(long: DataFrame, path: String,
       writersPerPartition: Int, genCol: Option[String]): Unit = {
@@ -135,111 +156,92 @@ object LongStore {
     *
     * The `_` prefix hides it from store scans (Spark skips `_`-prefixed
     * paths), appends are one tiny file per ingest batch, and entries are
-    * derived from the batch's FILE NAMES (the `_date`-from-filename rule,
-    * [[graft.transform.GasTransform.synthesizeTimestamp]]) so maintaining
-    * it costs zero data reads. Crash-replay safe by the same argument as
-    * the store itself: a replayed batch re-appends the same rows and
-    * [[readWindow]] deduplicates — duplicates are tolerated, losses are
-    * impossible because the append precedes the ledger append that marks
-    * the batch done.
+    * derived from the batch's FILE NAMES ([[partitionRows]]) so
+    * maintaining it costs zero data reads. Crash-replay safe by the same
+    * argument as the store itself: a replayed batch re-appends the same
+    * rows and [[readWindow]] deduplicates — duplicates are tolerated,
+    * losses are impossible because the append precedes the ledger append
+    * that marks the batch done.
     *
     * CADENCE (round-14 verdict item 1): at the reference's one-batch-per-day
     * cadence the append-only design would accumulate one tiny file per day —
     * a 4,096-day store would carry a 4,096-file `_manifest` whose own cold
     * read re-introduces the O(N-batches) listing the manifest exists to
-    * remove. So every append runs [[compactManifest]]: past
-    * `compactThreshold` part files the manifest folds to one. Per-append
-    * cost is therefore bounded by the threshold, and a cold [[readWindow]]
-    * reads ≤ threshold+1 small files however many batches built the store. */
+    * remove. So every append folds the table ([[appendSideTable]]), and a
+    * cold [[readWindow]] reads ≤ 17 small files however many batches built
+    * the store. */
   def appendManifest(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, srcFiles: Seq[String],
-      compactThreshold: Int = 16): Unit = {
+      storePath: String, srcFiles: Seq[String]): Unit =
+    appendSideTable(partitionRows(spark, srcFiles), s"$storePath/_manifest",
+      dedup = true)
+
+  /** `(_date, _src)` side-table rows for a batch's source files: `_date`
+    * comes from the file name's `yyyymmdd`, the rule
+    * [[graft.transform.GasTransform.synthesizeTimestamp]] partitions the
+    * data by, so the rows name exactly the partitions the batch wrote. */
+  private def partitionRows(spark: org.apache.spark.sql.SparkSession,
+      srcFiles: Seq[String]): DataFrame = {
     import spark.implicits._
-    val rows = srcFiles.map { f =>
+    srcFiles.map { f =>
       val d = "\\d{8}".r.findFirstIn(f).getOrElse(
         throw new IllegalArgumentException(s"no yyyymmdd in file name: $f"))
       (java.sql.Date.valueOf(java.time.LocalDate.parse(d,
         java.time.format.DateTimeFormatter.BASIC_ISO_DATE)), f)
-    }
-    rows.toDF("_date", "_src").coalesce(1)
-      .write.mode("append").parquet(s"$storePath/_manifest")
-    compactManifest(spark, storePath, compactThreshold)
+    }.toDF("_date", "_src")
   }
 
-  /** Fold the `_manifest` small files into one when their count exceeds
-    * `threshold`. Crash-safe WITHOUT renames by an add-before-delete
-    * protocol: (1) list the current part files, (2) read exactly that list and
-    * append ONE deduplicated file alongside them (parquet's job commit
-    * makes it visible atomically), (3) delete the listed originals. A crash
-    * after (2) leaves duplicates — [[readWindow]]'s `distinct()` and the
-    * next compaction's dedup absorb them; a crash mid-(3) likewise. At no
-    * point is an entry only in a half-written file, so losses are
-    * impossible. Concurrent readers see either the originals, or originals
-    * + compacted (duplicates, deduped at read), or the compacted file. */
-  def compactManifest(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, threshold: Int): Unit =
-    compactSmallFiles(spark, s"$storePath/_manifest", threshold, dedup = true)
+  /** The one append protocol of the store's three side tables — the ledger
+    * ([[graft.ingest.GasIngest.appendToLedger]]), `_manifest`
+    * ([[appendManifest]]) and `_commits` ([[writeSnapshot]]): the batch's
+    * rows land as ONE new file, then the table folds past 16 part files
+    * ([[compactSmallFiles]]). Each side table grows by one file per batch,
+    * so without the fold its own per-batch read would re-list every
+    * historical append — the O(N-batches) term it exists to remove. */
+  private[graft] def appendSideTable(rows: DataFrame, dirPath: String,
+      dedup: Boolean): Unit = {
+    rows.coalesce(1).write.mode("append").parquet(dirPath)
+    compactSmallFiles(rows.sparkSession, dirPath, 16, dedup)
+  }
 
-  /** The shared small-file fold behind [[compactManifest]] and the ledger's
-    * compaction ([[graft.ingest.GasIngest.appendToLedger]]) — any
-    * append-per-batch parquet side table has the same cadence hole, and
-    * the same add-before-delete protocol closes it. `dedup` distincts the
-    * folded rows (right for the manifest, whose replay duplicates are
-    * semantic no-ops; the ledger keeps its rows — `processed_at` differs
-    * across replays and the anti-join is duplicate-tolerant anyway). */
-  /** SINGLE COMPACTING WRITER assumed (r15 ADVICE): the protocol is safe
-    * under concurrent READERS (they see originals, originals+folded, or
-    * folded — never a gap), but two concurrent COMPACTORS both list the
-    * same part files and the loser's fold read hits FileNotFound after
-    * the winner's delete phase. The ingest topology honors this by
-    * construction (one pipeline owns each store's side tables); as
-    * defense in depth the fold read retries once on a missing-file error
-    * with a fresh listing — the retry lands on the winner's folded file
-    * and the loser's pass becomes the no-op it should have been. */
+  /** Fold a side table's small files into one when their count exceeds
+    * `threshold`. Any append-per-batch parquet side table has the same
+    * cadence hole, and this add-before-delete protocol closes it without
+    * renames: (1) list the current part files, (2) read exactly that list
+    * and append ONE file alongside them (parquet's job commit makes it
+    * visible atomically), (3) delete the listed originals. A crash after
+    * (2) leaves duplicates — the readers' `distinct()`/`max` and the next
+    * fold's dedup absorb them; a crash mid-(3) likewise. At no point is an
+    * entry only in a half-written file, so losses are impossible.
+    * Concurrent readers see either the originals, or originals + folded
+    * (duplicates, deduped at read), or the folded file. `dedup` distincts
+    * the folded rows (right for `_manifest` and `_commits`, whose replay
+    * duplicates are semantic no-ops; the ledger keeps its rows —
+    * `processed_at` differs across replays and the anti-join is
+    * duplicate-tolerant anyway).
+    *
+    * SINGLE COMPACTING WRITER assumed (r15 ADVICE): two concurrent
+    * COMPACTORS both list the same part files and the loser's fold read
+    * hits FileNotFound after the winner's delete phase. The ingest
+    * topology honors this by construction (one pipeline owns each store's
+    * side tables); as defense in depth the pass runs under
+    * [[withMissingFileRetry]], so it re-lists, lands on the winner's folded
+    * file and becomes the no-op it should have been. */
   def compactSmallFiles(spark: org.apache.spark.sql.SparkSession,
       dirPath: String, threshold: Int, dedup: Boolean): Unit = {
     val dir = new org.apache.hadoop.fs.Path(dirPath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    var done = false
-    while (!done) {
+    withMissingFileRetry {
       val parts = fs.listStatus(dir).map(_.getPath)
         .filter(_.getName.startsWith("part-"))
-      if (parts.length <= threshold) done = true
-      else {
-        try {
-          val folded = spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
-          (if (dedup) folded.distinct() else folded).coalesce(1)
-            .write.mode("append").parquet(dir.toString)
-          parts.foreach(fs.delete(_, false))
-          done = true
-        } catch {
-          case e: Exception if attempt < 1 && causedByMissingFile(e) =>
-            attempt += 1 // re-list; a racing compactor's fold already landed
-        }
+      if (parts.length > threshold) {
+        val folded = spark.read.parquet(parts.map(_.toString).toIndexedSeq: _*)
+        (if (dedup) folded.distinct() else folded).coalesce(1)
+          .write.mode("append").parquet(dir.toString)
+        parts.foreach(fs.delete(_, false))
       }
     }
   }
 
-  /** Manifest-backed window read: resolve the partition DIRECTORIES for
-    * `[startDate, stopDate]` from `_manifest` and hand exactly those to
-    * the parquet reader (`basePath` keeps `_date`/`_src` partition-column
-    * derivation), so cold planning lists O(window) leaf dirs instead of
-    * the whole calendar. Result rows/schema are identical to a pruned
-    * full-store read — gs36's oracle pins that equivalence. The driver
-    * collect is O(window × files-per-day) short strings — the same
-    * bounded planning-time materialization Spark's own catalog partition
-    * pruning performs. An empty window falls back to the full-listing
-    * path under an always-false filter (correct, and only as slow as the
-    * plain reader on a corner no dashboard query hits).
-    *
-    * Constructed dirs are filtered through `FileSystem.exists` — a source
-    * file contributing ZERO store rows (empty/malformed CSV, or every row
-    * past the 24 h filter) writes a manifest entry but no `_date=/_src=`
-    * directory, and handing the phantom path to the reader would throw
-    * `Path does not exist` for any window covering that date. The probe
-    * is O(window) metadata calls, the same planning-time bound as the
-    * manifest read itself. */
   /** True when any link of the cause chain is a missing-file error —
     * Spark wraps executor-side FileNotFoundException in SparkException
     * layers (and Spark 4 has its own SparkFileNotFoundException), so the
@@ -254,24 +256,82 @@ object LongStore {
     false
   }
 
+  /** Bounded missing-file retry around a side-table read. A side table's
+    * fold ([[compactSmallFiles]]) can delete a part file between a
+    * reader's listing and its read (the add-before-delete protocol
+    * guarantees the folded superset file is already present, but not that
+    * the reader's stale list stays valid), and the read then throws
+    * FileNotFound. Retrying re-lists and lands on the folded file, so the
+    * read is safe under writer concurrency without any locking. The
+    * backoff (r15 ADVICE) matters: immediate retries can all land inside
+    * one add-before-delete window; a short jittered sleep lets the retry
+    * observe a post-fold listing. */
+  private def withMissingFileRetry[T](body: => T): T = {
+    var attempt = 0
+    var out: Option[T] = None
+    while (out.isEmpty) {
+      try out = Some(body)
+      catch {
+        case e: Exception if attempt < 3 && causedByMissingFile(e) =>
+          attempt += 1
+          Thread.sleep(40L * attempt + System.nanoTime() % 40L)
+      }
+    }
+    out.get
+  }
+
+  /** Manifest-backed window read of a plain store: resolve the partition
+    * DIRECTORIES for `[startDate, stopDate]` from `_manifest` and hand
+    * exactly those to the parquet reader ([[resolvePartitions]]), so cold
+    * planning lists O(window) leaf dirs instead of the whole calendar.
+    * Result rows/schema are identical to a pruned full-store read — gs36's
+    * oracle pins that equivalence. A snapshot store is read with
+    * [[readCommitted]] instead. */
   def readWindow(spark: org.apache.spark.sql.SparkSession, storePath: String,
-      startDate: String, stopDate: String): DataFrame = {
+      startDate: String, stopDate: String): DataFrame =
+    resolvePartitions(spark, storePath, startDate, stopDate, snapshot = false)
+
+  /** The partition resolver behind [[readWindow]] and [[readCommitted]]:
+    * read the side table (`_manifest`, or `_commits` for a snapshot store)
+    * under [[withMissingFileRetry]], keep the rows in
+    * `[startDate, stopDate]`, and hand the leaf directories they name to the
+    * parquet reader (`basePath` keeps the partition-column derivation).
+    * `_manifest` rows name `_date=D/_src=S` (`distinct` absorbs replay
+    * duplicates); `_commits` rows name the latest committed generation,
+    * `_date=D/_src=S/g=G` with `G = max(g)`. The driver collect is
+    * O(window × files-per-day) short strings — the same bounded
+    * planning-time materialization Spark's own catalog partition pruning
+    * performs. An empty window falls back to the full-listing path under
+    * an always-false filter (correct, and only as slow as the plain reader
+    * on a corner no dashboard query hits).
+    *
+    * Constructed dirs are filtered through `FileSystem.exists` — a source
+    * file contributing ZERO store rows (empty/malformed CSV, or every row
+    * past the 24 h filter) writes a side-table entry but no directory, and
+    * handing the phantom path to the reader would throw `Path does not
+    * exist` for any window covering that date. The probe is O(window)
+    * metadata calls, the same planning-time bound as the side-table read
+    * itself. */
+  private def resolvePartitions(spark: org.apache.spark.sql.SparkSession,
+      storePath: String, startDate: String, stopDate: String,
+      snapshot: Boolean): DataFrame = {
     val fs = new org.apache.hadoop.fs.Path(storePath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    /** One manifest resolution. A CONCURRENT compaction can delete a part
-      * file between this reader's listing and its read (the add-before-
-      * delete protocol guarantees the folded superset file is already
-      * present, but not that the reader's stale list stays valid) — the
-      * collect then throws FileNotFound. Retrying re-lists and lands on
-      * the compacted file, so a bounded retry makes the planning read
-      * safe under writer concurrency without any locking. */
-    def resolveDirs(): Array[String] =
-      spark.read.parquet(s"$storePath/_manifest")
+    val dirs = withMissingFileRetry {
+      val inWindow = spark.read
+        .parquet(s"$storePath/${if (snapshot) "_commits" else "_manifest"}")
         .filter(col("_date") >= lit(startDate).cast("date") &&
           col("_date") <= lit(stopDate).cast("date"))
-        .select(col("_date").cast("string"), col("_src")).distinct()
-        .collect()
-        .map(r => s"$storePath/_date=${r.getString(0)}/_src=${r.getString(1)}")
+      val parts =
+        if (snapshot)
+          inWindow.groupBy(col("_date").cast("string").as("d"), col("_src"))
+            .agg(max(col("g")).as("g"))
+        else inWindow.select(col("_date").cast("string"), col("_src")).distinct()
+      parts.collect()
+        .map { r =>
+          s"$storePath/_date=${r.getString(0)}/_src=${r.getString(1)}" +
+            (if (snapshot) s"/g=${r.getLong(2)}" else "")
+        }
         // Phantom-vs-transient (r15 ADVICE): a missing dir is either a
         // PHANTOM entry (source file contributed zero store rows — never
         // written, safe to drop) or a TRANSIENTLY absent partition mid-
@@ -281,26 +341,11 @@ object LongStore {
         // ms. A dir missing twice 50 ms apart is treated as phantom;
         // overlap-window reads under concurrent SAME-partition rewrite
         // remain best-effort (the IngestStress caveat) — the snapshot
-        // path ([[readCommitted]]) is the contract that closes that.
+        // layout ([[readCommitted]]) is the contract that closes that.
         .filter { d =>
           val p = new org.apache.hadoop.fs.Path(d)
           fs.exists(p) || { Thread.sleep(50); fs.exists(p) }
         }
-    val dirs = {
-      var attempt = 0
-      var out: Array[String] = null
-      while (out == null) {
-        try out = resolveDirs()
-        catch {
-          case e: Exception if attempt < 3 && causedByMissingFile(e) =>
-            attempt += 1
-            // backoff (r15 ADVICE): immediate retries can all land inside
-            // one add-before-delete compaction window; a short jittered
-            // sleep lets the retry observe a post-compaction listing
-            Thread.sleep(40L * attempt + System.nanoTime() % 40L)
-        }
-      }
-      out
     }
     if (dirs.isEmpty)
       spark.read.parquet(storePath).filter(lit(false))
@@ -349,23 +394,6 @@ object LongStore {
   // table's directory without the transaction log.
   // ------------------------------------------------------------------
 
-  /** Bounded missing-file retry around a side-table planning read — the
-    * listing races the add-before-delete compaction exactly like
-    * [[readWindow]]'s manifest read. */
-  private def withMissingFileRetry[T](body: => T): T = {
-    var attempt = 0
-    var out: Option[T] = None
-    while (out.isEmpty) {
-      try out = Some(body)
-      catch {
-        case e: Exception if attempt < 3 && causedByMissingFile(e) =>
-          attempt += 1
-          Thread.sleep(40L * attempt + System.nanoTime() % 40L)
-      }
-    }
-    out.get
-  }
-
   /** Next generation number = max committed + 1 (1 for a fresh store).
     * One tiny-parquet read at batch start; single-writer assumed. */
   def nextGen(spark: org.apache.spark.sql.SparkSession,
@@ -383,8 +411,8 @@ object LongStore {
     * repartition/sorted/dynamic-overwrite path as [[write]] (the overwrite
     * scrubs this generation's own crash leftovers and cannot touch other
     * generations — `g` is in the partitioning), then the generation
-    * commits by appending one log row per (_date, _src) partition,
-    * derived from `srcFiles` names exactly like [[appendManifest]] (zero
+    * commits by appending one `(_date, _src, g)` log row per partition,
+    * derived from `srcFiles` names like [[appendManifest]]'s rows (zero
     * data reads). Returns the committed generation. */
   def writeSnapshot(long: DataFrame, path: String, srcFiles: Seq[String],
       writersPerPartition: Int = 1): Long = {
@@ -392,53 +420,23 @@ object LongStore {
     val gen = nextGen(spark, path)
     writeInternal(long.withColumn("g", lit(gen)), path,
       writersPerPartition, genCol = Some("g"))
-    import spark.implicits._
-    val rows = srcFiles.map { f =>
-      val d = "\\d{8}".r.findFirstIn(f).getOrElse(
-        throw new IllegalArgumentException(s"no yyyymmdd in file name: $f"))
-      (java.sql.Date.valueOf(java.time.LocalDate.parse(d,
-        java.time.format.DateTimeFormatter.BASIC_ISO_DATE)), f, gen)
-    }
-    rows.toDF("_date", "_src", "g").coalesce(1)
-      .write.mode("append").parquet(s"$path/_commits")
-    compactSmallFiles(spark, s"$path/_commits", 16, dedup = true)
+    appendSideTable(partitionRows(spark, srcFiles).withColumn("g", lit(gen)),
+      s"$path/_commits", dedup = true)
     gen
   }
 
   /** Snapshot window read: latest committed generation per in-window
-    * partition, resolved from the `_commits` log and handed to the reader
-    * as explicit leaf directories (`basePath` keeps the partition-column
-    * derivation; the physical `g` column is dropped so results are
-    * schema-identical to [[readWindow]]). Committed generation files are
-    * immutable, so — unlike the plain store's overlap read — this read
-    * cannot observe a half-swapped partition or a vanished file while a
-    * writer re-ingests the same days; the only planning race is the log's
-    * own compaction, absorbed by the bounded retry. Phantom entries
-    * (a src file contributing zero rows) are dropped by the same
-    * re-probed existence filter as [[readWindow]]. */
+    * partition, resolved from the `_commits` log ([[resolvePartitions]]);
+    * the physical `g` column is dropped so results are schema-identical to
+    * [[readWindow]]. Committed generation files are immutable, so — unlike
+    * the plain store's overlap read — this read cannot observe a
+    * half-swapped partition or a vanished file while a writer re-ingests
+    * the same days; the only planning race is the log's own compaction,
+    * absorbed by the bounded retry. */
   def readCommitted(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, startDate: String, stopDate: String): DataFrame = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val dirs = withMissingFileRetry {
-      spark.read.parquet(s"$storePath/_commits")
-        .filter(col("_date") >= lit(startDate).cast("date") &&
-          col("_date") <= lit(stopDate).cast("date"))
-        .groupBy(col("_date").cast("string").as("d"), col("_src"))
-        .agg(max(col("g")).as("g"))
-        .collect()
-        .map(r => s"$storePath/_date=${r.getString(0)}/_src=${r.getString(1)}/g=${r.getLong(2)}")
-        .filter { d =>
-          val p = new org.apache.hadoop.fs.Path(d)
-          fs.exists(p) || { Thread.sleep(50); fs.exists(p) }
-        }
-    }
-    if (dirs.isEmpty)
-      spark.read.parquet(storePath).filter(lit(false)).drop("g")
-    else
-      spark.read.option("basePath", storePath)
-        .parquet(dirs.toIndexedSeq: _*).drop("g")
-  }
+      storePath: String, startDate: String, stopDate: String): DataFrame =
+    resolvePartitions(spark, storePath, startDate, stopDate, snapshot = true)
+      .drop("g")
 
   /** Garbage-collect superseded generations: for every partition in the
     * log, keep the newest `keepLast` generation directories and delete

@@ -49,18 +49,17 @@ object GasStream {
         // for the store write — the persist keeps this at one input scan
         val b = batch.persist()
         try {
-          LongStore.write(b, storePath, writersPerPartition = writers)
-          // manifest append AFTER the store write, mirroring the batch
-          // pipeline (GasPipeline.runBatch): a stream-built store plans
-          // window queries through LongStore.readWindow exactly like a
-          // batch-built one. foreachBatch is at-least-once; a replayed
-          // batch re-appends the same rows and readWindow/compaction
-          // deduplicate — the manifest's documented replay contract.
           val srcs = b.select("_src").distinct()
             .collect().map(_.getString(0)).sorted
+          // the batch pipeline's own commit (GasPipeline.runBatch): data,
+          // then manifest, so a stream-built store plans window queries
+          // through LongStore.readWindow exactly like a batch-built one.
+          // foreachBatch is at-least-once; a replayed batch re-appends the
+          // same rows and readWindow/compaction deduplicate — the
+          // manifest's documented replay contract.
           if (srcs.nonEmpty)
-            LongStore.appendManifest(batch.sparkSession, storePath,
-              srcs.toIndexedSeq)
+            LongStore.commitBatch(b, storePath, srcs.toIndexedSeq, writers,
+              snapshot = false)
         } finally { b.unpersist(); () }
       }
       .trigger(Trigger.AvailableNow())

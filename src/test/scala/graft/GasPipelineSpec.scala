@@ -15,6 +15,10 @@ class GasPipelineSpec extends SparkSpec {
     val input = Files.createDirectory(work.resolve("input"))
     val store = work.resolve("store").toString
     val ledger = work.resolve("ledger").toString
+    // the ledger holds exactly the processed names, each once: it is
+    // written from the batch's collected names, not a re-read of the data
+    def ledgered = spark.read.parquet(ledger).select("file_name")
+      .collect().map(_.getString(0)).toSeq.sorted
 
     Files.copy(resource("20161007_210049.csv"),
       input.resolve("20161007_210049.csv"), StandardCopyOption.REPLACE_EXISTING)
@@ -24,11 +28,13 @@ class GasPipelineSpec extends SparkSpec {
     assert(r1.collect().map(_.getString(0)).toSeq == Seq("20161007_210049.csv"))
     val n1 = spark.read.parquet(store).count()
     assert(n1 == 8 * 19) // 8 kept rows × 19 fields
+    assert(ledgered == Seq("20161007_210049.csv"))
 
     // run 2: same directory → skip branch, store untouched
     val r2 = GasPipeline.runBatch(spark, input.toString, store, ledger)
     assert(r2.count() == 0)
     assert(spark.read.parquet(store).count() == n1)
+    assert(ledgered == Seq("20161007_210049.csv"))
 
     // run 3: add a second file → only it is processed; store gains its day
     Files.copy(resource("20161008_120000.csv"),
@@ -36,6 +42,7 @@ class GasPipelineSpec extends SparkSpec {
     val r3 = GasPipeline.runBatch(spark, input.toString, store, ledger)
     assert(r3.collect().map(_.getString(0)).toSeq == Seq("20161008_120000.csv"))
     assert(spark.read.parquet(store).count() == n1 + 6 * 19)
+    assert(ledgered == Seq("20161007_210049.csv", "20161008_120000.csv"))
   }
 
   test("CLI entry: one command runs the whole DAG; default ledger is store-scan-invisible") {
