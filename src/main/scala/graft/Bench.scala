@@ -93,12 +93,6 @@ object Bench {
     val spillMemBytes = collection.mutable.Map.empty[String, Long]
     def timeOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
         pass: String): Unit = {
-      // per-query regime hook (round-15 verdict item 6): currently the
-      // uniform size-derived count — the per-family fixed-cpus split was
-      // tested and REJECTED on the 512× asymmetry (see
-      // StressSession.initialPartitionsFor's matrix); the hook stays so
-      // a future measured split has one seam to land in
-      graft.util.StressSession.applyRegime(spark, name, sfDir, cpus.toInt)
       // label every job with its query (guide §1.5) so event-log profiles
       // can attribute jobs and inter-job driver gaps per query
       spark.sparkContext.setJobDescription(s"$name pass $pass")

@@ -48,8 +48,7 @@ object GasPipeline {
       val names = fresh.select("file_name").distinct()
         .collect().map(_.getString(0)).sorted.toIndexedSeq
       if (names.nonEmpty) {
-        val long =
-          LongStore.unpivot(GasTransform(fresh).withColumnRenamed("file_name", "_src"))
+        val long = GasTransform.toLong(fresh)
         // Writer parallelism scaled to the day-file size (the round-11
         // single-writer funnel finding — see LongStore.writersFor).
         LongStore.commitBatch(long, storePath, names,

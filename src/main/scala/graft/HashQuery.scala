@@ -22,9 +22,6 @@ object HashQuery {
     val spark = graft.util.StressSession.builder(sfDir, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     args.foreach { name =>
-      // per-query regime hook — identical to Bench so the identity
-      // probe executes the configuration the bench measures
-      graft.util.StressSession.applyRegime(spark, name, sfDir, cpus.toInt)
       val df = SparkEntry.queries(name)(spark, sfDir)
       val cols = df.columns.sorted.map(c => col(s"`$c`"))
       // decimal(38,0) sum: ANSI-safe (no int64 overflow) and exact;

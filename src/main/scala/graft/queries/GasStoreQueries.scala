@@ -1,12 +1,14 @@
 package graft.queries
 
-import java.nio.file.Files
-
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.GasPipeline
+import graft.streaming.GasStream
+import graft.transform.GasTransform
+import graft.util.TempDirs
 
 /** Oracle-checked END-TO-END queries through the engine's own gas store:
   * fixture day-file CSVs → [[graft.GasPipeline.runBatch]] (ledger anti-join,
@@ -30,21 +32,13 @@ object GasStoreQueries {
     sys.props.getOrElse("graft.gas.fixture.dir", "/root/repo/src/test/resources/gas")
 
   /** Run the full batch pipeline into a temp store and read it back. The
-    * build is memoized per session — the fixture is static, so gs01-gs05
-    * (and repeated bench runs) share one pipeline execution and one temp
-    * dir instead of re-ingesting per query. The memo is WEAK-keyed so a
-    * stopped session can be collected rather than pinned for the process
-    * lifetime, and each temp store registers a shutdown-hook delete. */
-  private val built = new java.util.WeakHashMap[SparkSession, String]()
+    * build is memoized per session ([[TempDirs.perSession]]) — the fixture
+    * is static, so gs01-gs05 (and repeated bench runs) share one pipeline
+    * execution and one temp dir instead of re-ingesting per query. */
   private def storePath(spark: SparkSession): String =
-    built.synchronized {
-      Option(built.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-store")
-        deleteOnExit(work)
-        GasPipeline.runBatch(spark, fixtureDir, s"$work/store", s"$work/ledger")
-        built.put(spark, s"$work/store")
-        s"$work/store"
-      }
+    TempDirs.perSession(spark, "gas-store") { work =>
+      GasPipeline.runBatch(spark, fixtureDir, s"$work/store", s"$work/ledger")
+      s"$work/store"
     }
   private def store(spark: SparkSession): DataFrame =
     spark.read.parquet(storePath(spark))
@@ -56,18 +50,11 @@ object GasStoreQueries {
     * spec-verified to oracle-verified end-to-end: any divergence between
     * the batch and streaming transform/unpivot/store stacks flips the
     * compare red. */
-  private val builtStream = new java.util.WeakHashMap[SparkSession, String]()
   private def streamStorePath(spark: SparkSession): String =
-    builtStream.synchronized {
-      Option(builtStream.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-stream-store")
-        deleteOnExit(work)
-        graft.streaming.GasStream
-          .pipeline(spark, fixtureDir, s"$work/store", s"$work/ckpt")
-          .awaitTermination()
-        builtStream.put(spark, s"$work/store")
-        s"$work/store"
-      }
+    TempDirs.perSession(spark, "gas-stream-store") { work =>
+      GasStream.pipeline(spark, fixtureDir, s"$work/store", s"$work/ckpt")
+        .awaitTermination()
+      s"$work/store"
     }
   private def streamStore(spark: SparkSession): DataFrame =
     spark.read.parquet(streamStorePath(spark))
@@ -80,29 +67,75 @@ object GasStoreQueries {
     * raw-CSV oracle: resolving anything but exactly the latest committed
     * generation (a union of generations doubles rows; a vacuum overreach
     * drops them) flips the hash. */
-  private val builtSnapshot = new java.util.WeakHashMap[SparkSession, String]()
   private def snapshotStorePath(spark: SparkSession): String =
-    builtSnapshot.synchronized {
-      Option(builtSnapshot.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-snap-store")
-        deleteOnExit(work)
-        val store = s"$work/store"
-        GasPipeline.runBatch(spark, fixtureDir, store, s"$work/ledger",
-          snapshot = true)
-        // rewrite round: fresh ledger ⇒ same days land again as gen 2
-        GasPipeline.runBatch(spark, fixtureDir, store, s"$work/ledger2",
-          snapshot = true)
-        // retention floor: gen 1 dirs are garbage-collected; the read
-        // below must resolve (and find) gen 2 only
-        graft.store.LongStore.vacuumSnapshots(spark, store, keepLast = 1)
-        builtSnapshot.put(spark, store)
-        store
-      }
+    TempDirs.perSession(spark, "gas-snap-store") { work =>
+      val store = s"$work/store"
+      GasPipeline.runBatch(spark, fixtureDir, store, s"$work/ledger",
+        snapshot = true)
+      // rewrite round: fresh ledger ⇒ same days land again as gen 2
+      GasPipeline.runBatch(spark, fixtureDir, store, s"$work/ledger2",
+        snapshot = true)
+      // retention floor: gen 1 dirs are garbage-collected; the read
+      // below must resolve (and find) gen 2 only
+      graft.store.LongStore.vacuumSnapshots(spark, store, keepLast = 1)
+      store
     }
 
-  // one process-wide hook drains every registered store — see TempDirs
-  private def deleteOnExit(dir: java.nio.file.Path): Unit =
-    graft.util.TempDirs.deleteOnExit(dir)
+  /** The gs family's live long stream over the fixture, built on the GIVEN
+    * session (the rocks-pinned child for the transformWithState sinks —
+    * see [[withRocksDb]]), optionally narrowed to `fields`. */
+  private def liveLong(s: SparkSession, fields: Seq[String] = Nil,
+      maxFilesPerTrigger: Int = 13): DataFrame = {
+    val long = GasTransform.toLong(
+      GasStream.readStream(s, fixtureDir, maxFilesPerTrigger)).drop("_src")
+    if (fields.isEmpty) long else long.filter(col("_field").isin(fields: _*))
+  }
+
+  /** The family's standard two-field focus: per-key semantics proven on two
+    * fields as well as on nineteen, at 2/19ths the stream volume. */
+  private val coHumidity = Seq("CO (ppm)", "Humidity (%r.h.)")
+
+  /** Memoized APPEND-mode parquet sink: once per session under `key`, run
+    * the streaming frame `q` builds to completion (AvailableNow), then read
+    * its output back. The query starts on its frame's own session, so a
+    * frame built on a [[withRocksDb]] child keeps the provider pin. */
+  private def appendSinkOnce(spark: SparkSession, key: String)(
+      q: SparkSession => DataFrame): DataFrame = {
+    val out = TempDirs.perSession(spark, key) { work =>
+      runToEnd(q(spark).writeStream
+        .format("parquet")
+        .option("path", s"$work/out")
+        .option("checkpointLocation", s"$work/ckpt")
+        .outputMode("append"))
+      s"$work/out"
+    }
+    spark.read.parquet(out)
+  }
+
+  /** Start `sink` as one AvailableNow run and wait for it to drain. */
+  private def runToEnd(sink: DataStreamWriter[Row]): Unit =
+    sink.trigger(Trigger.AvailableNow()).start().awaitTermination()
+
+  /** Build a streaming frame with the state-store provider pinned to
+    * RocksDB on a CHILD SESSION scoped to this one query.
+    *
+    * `spark.newSession()` shares the SparkContext and SharedState but
+    * carries its own SessionState/SQLConf, so setting the provider here
+    * is invisible to the caller's session and to any OTHER query running
+    * concurrently — the round-11/12 "session-wide mutation, single-
+    * threaded drivers only" constraint is gone, and ConcurrencySpec runs
+    * these sink builds 4-way concurrent to prove it. `body` receives the
+    * child and must build its ENTIRE stream (source frames included) on
+    * it: a streaming query resolves confs from the session its frames
+    * were created on, so a parent-built source frame would silently
+    * escape the pin. */
+  private def withRocksDb(spark: SparkSession)(
+      body: SparkSession => DataFrame): DataFrame = {
+    val rocks = spark.newSession()
+    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    body(rocks)
+  }
 
   /** Result of the streaming SLIDING-window aggregation (gs07): the live
     * long stream → watermark → `window(_time, 2h, 1h)` mean per field →
@@ -115,47 +148,16 @@ object GasStoreQueries {
     * end ≤ max(_time) − 30 min). Scale shape: state is one (window, field)
     * row per open window — bounded by field cardinality × (window/slide),
     * never by stream volume; the sink is plain partitionable parquet. */
-  private val builtSliding = new java.util.WeakHashMap[SparkSession, String]()
-  private def slidingAgg(spark: SparkSession): DataFrame = {
-    val path = builtSliding.synchronized {
-      Option(builtSliding.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-sliding")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-        long.withWatermark("_time", "30 minutes")
-          .groupBy(window(col("_time"), "2 hours", "1 hour"), col("_field"))
-          .agg(count(lit(1)).as("n_points"),
-            sum(sumExactCol(col("_value"))).as("total"))
-          .select(col("window.start").as("_bucket"), col("_field"),
-            col("n_points"), col("total"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtSliding.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def slidingAgg(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-sliding") { s =>
+      liveLong(s).withWatermark("_time", "30 minutes")
+        .groupBy(window(col("_time"), "2 hours", "1 hour"), col("_field"))
+        .agg(count(lit(1)).as("n_points"),
+          sum(sumExactCol(col("_value"))).as("total"))
+        .select(col("window.start").as("_bucket"), col("_field"),
+          col("n_points"), col("total"))
     }
-    spark.read.parquet(path)
-  }
 
-  /** gs21's sink: streaming OHLC BARS — ts29's candlestick downsampling
-    * as a LIVE windowed aggregate: per (hourly window, field) the
-    * open/high/low/close + point count, where open/close are
-    * `min_by`/`max_by` keyed on event time — the SAME partial-merge
-    * aggregate shape as batch ts29, so the state store carries one
-    * 5-value record per open window (bounded by fields × open windows,
-    * never stream volume) and every micro-batch merges map-side.
-    * Append mode + 30 min watermark = gs07's window-sealing CONTRACT:
-    * a bar is emitted exactly once, when the watermark passes its end;
-    * the oracle replays the cutoff explicitly. */
   /** gs22's sink: STREAMING HISTOGRAM — ts15's distribution query as a
     * watermarked streaming aggregate (the live drift/quality monitor a
     * sensor fleet dashboard runs): per 6 h window × field × value bin,
@@ -165,38 +167,16 @@ object GasStoreQueries {
     * mode + 30 min watermark: a window's histogram is emitted exactly
     * once when the watermark passes its end; the oracle replays that
     * cutoff explicitly (gs07/gs21 discipline). */
-  private val builtHist = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamHistogram(spark: SparkSession): DataFrame = {
-    val path = builtHist.synchronized {
-      Option(builtHist.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-hist")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        long.withWatermark("_time", "30 minutes")
-          .groupBy(window(col("_time"), "6 hours"), col("_field"),
-            greatest(least(floor(col("_value") / 8.0), lit(15L)), lit(0L))
-              .as("bin"))
-          .agg(count(lit(1)).as("n_points"))
-          .select(col("window.start").as("_bucket"), col("_field"),
-            col("bin"), col("n_points"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtHist.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamHistogram(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-hist") { s =>
+      liveLong(s, coHumidity).withWatermark("_time", "30 minutes")
+        .groupBy(window(col("_time"), "6 hours"), col("_field"),
+          greatest(least(floor(col("_value") / 8.0), lit(15L)), lit(0L))
+            .as("bin"))
+        .agg(count(lit(1)).as("n_points"))
+        .select(col("window.start").as("_bucket"), col("_field"),
+          col("bin"), col("n_points"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs26's sink: STREAMING COUNT-MIN SKETCH — tx15's frequency sketch as
     * a live aggregate. The whole point of a CMS on a stream is that state
@@ -207,47 +187,25 @@ object GasStoreQueries {
     * hash family the oracle replays via hex-digit decode); the windowed
     * count is an ordinary partial-merge aggregate. Append mode + 30 min
     * watermark = the gs07/gs21/gs22 sealing contract. */
-  private val builtCms = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamCms(spark: SparkSession): DataFrame = {
-    val path = builtCms.synchronized {
-      Option(builtCms.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-cms")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        long
-          .withColumn("iv",
-            greatest(least(floor(col("_value")), lit(63L)), lit(0L)))
-          .select(col("_time"), col("_field"), explode(expr(
-            "transform(sequence(0, 3), j -> named_struct('seed', j, " +
-              "'bucket', cast(conv(substr(md5(cast(concat(cast(j as string), " +
-              "':', cast(iv as string)) as binary)), 1, 2), 16, 10) as int)))"))
-            .as("c"))
-          .select(col("_time"), col("_field"), col("c.seed").as("seed"),
-            col("c.bucket").as("bucket"))
-          .withWatermark("_time", "30 minutes")
-          .groupBy(window(col("_time"), "6 hours"), col("_field"),
-            col("seed"), col("bucket"))
-          .agg(count(lit(1)).as("cnt"))
-          .select(col("window.start").as("_bucket"), col("_field"),
-            col("seed"), col("bucket"), col("cnt"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtCms.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamCms(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-cms") { s =>
+      liveLong(s, coHumidity)
+        .withColumn("iv",
+          greatest(least(floor(col("_value")), lit(63L)), lit(0L)))
+        .select(col("_time"), col("_field"), explode(expr(
+          "transform(sequence(0, 3), j -> named_struct('seed', j, " +
+            "'bucket', cast(conv(substr(md5(cast(concat(cast(j as string), " +
+            "':', cast(iv as string)) as binary)), 1, 2), 16, 10) as int)))"))
+          .as("c"))
+        .select(col("_time"), col("_field"), col("c.seed").as("seed"),
+          col("c.bucket").as("bucket"))
+        .withWatermark("_time", "30 minutes")
+        .groupBy(window(col("_time"), "6 hours"), col("_field"),
+          col("seed"), col("bucket"))
+        .agg(count(lit(1)).as("cnt"))
+        .select(col("window.start").as("_bucket"), col("_field"),
+          col("seed"), col("bucket"), col("cnt"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs31's sink: UNION OF TWO INDEPENDENTLY-WATERMARKED STREAMS — two
     * sensor feeds (CO delayed ≤ 30 min, Humidity ≤ 60 min) landing in ONE
@@ -259,40 +217,18 @@ object GasStoreQueries {
     * max(Hum) − 60 min)). State: one (count, exact decimal total) record
     * per open window × field — bounded by construction. Append mode:
     * each window emitted exactly once. */
-  private val builtUnion = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamUnion(spark: SparkSession): DataFrame = {
-    val path = builtUnion.synchronized {
-      Option(builtUnion.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-union")
-        deleteOnExit(work)
-        def branch(field: String, delay: String) =
-          graft.store.LongStore.unpivot(
-            graft.transform.GasTransform(
-              graft.streaming.GasStream.readStream(spark, fixtureDir))
-              .withColumnRenamed("file_name", "_src")).drop("_src")
-            .filter(col("_field") === field)
-            .withWatermark("_time", delay)
-        branch("CO (ppm)", "30 minutes")
-          .unionByName(branch("Humidity (%r.h.)", "60 minutes"))
-          .groupBy(window(col("_time"), "6 hours"), col("_field"))
-          .agg(count(lit(1)).as("n_points"),
-            sum(col("_value").cast("decimal(18,6)")).as("total_dec"))
-          .select(col("window.start").as("_bucket"), col("_field"),
-            col("n_points"), col("total_dec"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtUnion.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamUnion(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-union") { s =>
+      def branch(field: String, delay: String) =
+        liveLong(s, Seq(field)).withWatermark("_time", delay)
+      branch("CO (ppm)", "30 minutes")
+        .unionByName(branch("Humidity (%r.h.)", "60 minutes"))
+        .groupBy(window(col("_time"), "6 hours"), col("_field"))
+        .agg(count(lit(1)).as("n_points"),
+          sum(col("_value").cast("decimal(18,6)")).as("total_dec"))
+        .select(col("window.start").as("_bucket"), col("_field"),
+          col("n_points"), col("total_dec"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs32's sink: STREAMING SET AGGREGATION — the occupied-bin SET per
     * (6 h window × field) via collect_set over the gs22 value bins,
@@ -303,39 +239,17 @@ object GasStoreQueries {
     * whatever the throughput — the collect that IS safe on a stream,
     * where collect_list of raw points would grow with volume. Append
     * mode + 30 min watermark = the gs07/gs22 sealing contract. */
-  private val builtBinSet = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamBinSet(spark: SparkSession): DataFrame = {
-    val path = builtBinSet.synchronized {
-      Option(builtBinSet.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-binset")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        long.withWatermark("_time", "30 minutes")
-          .groupBy(window(col("_time"), "6 hours"), col("_field"))
-          .agg(sort_array(collect_set(
-            greatest(least(floor(col("_value") / 8.0), lit(15L)), lit(0L))))
-            .as("bins"),
-            count(lit(1)).as("n_points"))
-          .select(col("window.start").as("_bucket"), col("_field"),
-            col("bins"), col("n_points"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtBinSet.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamBinSet(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-binset") { s =>
+      liveLong(s, coHumidity).withWatermark("_time", "30 minutes")
+        .groupBy(window(col("_time"), "6 hours"), col("_field"))
+        .agg(sort_array(collect_set(
+          greatest(least(floor(col("_value") / 8.0), lit(15L)), lit(0L))))
+          .as("bins"),
+          count(lit(1)).as("n_points"))
+        .select(col("window.start").as("_bucket"), col("_field"),
+          col("bins"), col("n_points"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs33's sink: STREAMING FIRST-DIGIT PROFILE — ts66's Benford
     * construct as a live aggregate (the data-forensics screen run at
@@ -345,43 +259,21 @@ object GasStoreQueries {
     * whose state is ≤ 9 digit cells per (open window × field) — bounded
     * by construction. Append mode + 30 min watermark = the gs07/gs22
     * sealing contract. */
-  private val builtDigits = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamDigitProfile(spark: SparkSession): DataFrame = {
-    val path = builtDigits.synchronized {
-      Option(builtDigits.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-digits")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        long
-          .withColumn("micro", expr(
-            "cast(cast(_value as decimal(18,6)) * 1000000 as bigint)"))
-          .filter(col("micro") > 0L)
-          .withColumn("digit", expr(
-            "cast(substring(cast(micro as string), 1, 1) as bigint)"))
-          .withWatermark("_time", "30 minutes")
-          .groupBy(window(col("_time"), "6 hours"), col("_field"),
-            col("digit"))
-          .agg(count(lit(1)).as("n_points"))
-          .select(col("window.start").as("_bucket"), col("_field"),
-            col("digit"), col("n_points"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtDigits.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamDigitProfile(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-digits") { s =>
+      liveLong(s, coHumidity)
+        .withColumn("micro", expr(
+          "cast(cast(_value as decimal(18,6)) * 1000000 as bigint)"))
+        .filter(col("micro") > 0L)
+        .withColumn("digit", expr(
+          "cast(substring(cast(micro as string), 1, 1) as bigint)"))
+        .withWatermark("_time", "30 minutes")
+        .groupBy(window(col("_time"), "6 hours"), col("_field"),
+          col("digit"))
+        .agg(count(lit(1)).as("n_points"))
+        .select(col("window.start").as("_bucket"), col("_field"),
+          col("digit"), col("n_points"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs25's sink: plain TUMBLING 6 h mean ingredients (count + exact
     * decimal total) per field — the simplest member of the windowed-sink
@@ -389,74 +281,41 @@ object GasStoreQueries {
     * bare downsampler). State: one 2-value record per open window ×
     * field — bounded by construction. Append mode + 30 min watermark =
     * the same sealing contract, replayed by the oracle. */
-  private val builtTumbling = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamTumblingMean(spark: SparkSession): DataFrame = {
-    val path = builtTumbling.synchronized {
-      Option(builtTumbling.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-tumbling")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        long.withWatermark("_time", "30 minutes")
-          .groupBy(window(col("_time"), "6 hours"), col("_field"))
-          .agg(count(lit(1)).as("n_points"),
-            sum(sumExactCol(col("_value"))).as("total"))
-          .select(col("window.start").as("_bucket"), col("_field"),
-            col("n_points"), col("total"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtTumbling.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamTumblingMean(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-tumbling") { s =>
+      liveLong(s, coHumidity).withWatermark("_time", "30 minutes")
+        .groupBy(window(col("_time"), "6 hours"), col("_field"))
+        .agg(count(lit(1)).as("n_points"),
+          sum(sumExactCol(col("_value"))).as("total"))
+        .select(col("window.start").as("_bucket"), col("_field"),
+          col("n_points"), col("total"))
     }
-    spark.read.parquet(path)
-  }
 
-  private val builtOhlc = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamOhlc(spark: SparkSession): DataFrame = {
-    val path = builtOhlc.synchronized {
-      Option(builtOhlc.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-ohlc")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Temperature (C)"))
-        long.withWatermark("_time", "30 minutes")
-          .groupBy(window(col("_time"), "1 hour"), col("_field"))
-          .agg(
-            min_by(col("_value"), col("_time")).as("open"),
-            max(col("_value")).as("high"),
-            min(col("_value")).as("low"),
-            max_by(col("_value"), col("_time")).as("close"),
-            count(lit(1)).as("n_points"))
-          .select(col("window.start").as("_bucket"), col("_field"),
-            col("open"), col("high"), col("low"), col("close"),
-            col("n_points"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtOhlc.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  /** gs21's sink: streaming OHLC BARS — ts29's candlestick downsampling
+    * as a LIVE windowed aggregate: per (hourly window, field) the
+    * open/high/low/close + point count, where open/close are
+    * `min_by`/`max_by` keyed on event time — the SAME partial-merge
+    * aggregate shape as batch ts29, so the state store carries one
+    * 5-value record per open window (bounded by fields × open windows,
+    * never stream volume) and every micro-batch merges map-side.
+    * Append mode + 30 min watermark = gs07's window-sealing CONTRACT:
+    * a bar is emitted exactly once, when the watermark passes its end;
+    * the oracle replays the cutoff explicitly. */
+  private def streamOhlc(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-ohlc") { s =>
+      liveLong(s, Seq("CO (ppm)", "Temperature (C)"))
+        .withWatermark("_time", "30 minutes")
+        .groupBy(window(col("_time"), "1 hour"), col("_field"))
+        .agg(
+          min_by(col("_value"), col("_time")).as("open"),
+          max(col("_value")).as("high"),
+          min(col("_value")).as("low"),
+          max_by(col("_value"), col("_time")).as("close"),
+          count(lit(1)).as("n_points"))
+        .select(col("window.start").as("_bucket"), col("_field"),
+          col("open"), col("high"), col("low"), col("close"),
+          col("n_points"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs08's sink: the live STREAM-STREAM interval join
     * ([[graft.streaming.GasStream.pairedReadings]]) run end-to-end — each
@@ -477,34 +336,13 @@ object GasStoreQueries {
     * pre-aggregate one side onto a window grid (gs07/gs29) or keep
     * last-value state and emit 1:1 enriched rows (the transformWithState
     * family) — all measured flat on the throughput ladder. */
-  private val builtJoin = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamJoin(spark: SparkSession): DataFrame = {
-    val path = builtJoin.synchronized {
-      Option(builtJoin.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-join")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-        graft.streaming.GasStream
-          .pairedReadings(long, "CO (ppm)", "Humidity (%r.h.)",
-            watermark = "26 hours", withinMinutes = 10)
-          .select(col("a_time"), col("a_value"), col("b_time"), col("b_value"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtJoin.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamJoin(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-join") { s =>
+      GasStream
+        .pairedReadings(liveLong(s), "CO (ppm)", "Humidity (%r.h.)",
+          watermark = "26 hours", withinMinutes = 10)
+        .select(col("a_time"), col("a_value"), col("b_time"), col("b_value"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs13's sink: the stream-stream LEFT OUTER interval join — gs08's
     * pairing, but CO readings with NO valid humidity reading (≥ 55 %r.h.)
@@ -517,35 +355,14 @@ object GasStoreQueries {
     * min(max aₜ, max valid bₜ) − 30 min stay withheld. That cutoff is the
     * same watermark CONTRACT gs07 pins, and the oracle replays it
     * explicitly. State stays rate × (watermark + interval), as in gs08. */
-  private val builtOuterJoin = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamOuterJoin(spark: SparkSession): DataFrame = {
-    val path = builtOuterJoin.synchronized {
-      Option(builtOuterJoin.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-ojoin")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-        graft.streaming.GasStream
-          .pairedReadings(long, "CO (ppm)", "Humidity (%r.h.)",
-            watermark = "30 minutes", withinMinutes = 10,
-            joinType = "left_outer", bMin = Some(55.0))
-          .select(col("a_time"), col("a_value"), col("b_time"), col("b_value"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtOuterJoin.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamOuterJoin(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-ojoin") { s =>
+      GasStream
+        .pairedReadings(liveLong(s), "CO (ppm)", "Humidity (%r.h.)",
+          watermark = "30 minutes", withinMinutes = 10,
+          joinType = "left_outer", bMin = Some(55.0))
+        .select(col("a_time"), col("a_value"), col("b_time"), col("b_value"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs14's sink: streaming SESSION WINDOWS (`session_window`, 2 h gap) in
     * append mode — the built-in merging-session aggregation next to the
@@ -556,37 +373,35 @@ object GasStoreQueries {
     * sessions ending after min/max-event − 30 min stay withheld — the
     * same replayable watermark contract as gs07/gs13. State is one row
     * per OPEN session per field, never stream length. */
-  private val builtSessions = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamSessions(spark: SparkSession): DataFrame = {
-    val path = builtSessions.synchronized {
-      Option(builtSessions.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-sessions")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-        long.withWatermark("_time", "30 minutes")
-          .groupBy(session_window(col("_time"), "2 hours"), col("_field"))
-          .agg(count(lit(1)).as("n_points"),
-            sum(sumExactCol(col("_value"))).as("total"))
-          .select(col("session_window.start").as("_start"),
-            col("session_window.end").as("_end"), col("_field"),
-            col("n_points"), col("total"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtSessions.put(spark, s"$work/out")
-        s"$work/out"
+  private def streamSessions(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-sessions") { s =>
+      liveLong(s).withWatermark("_time", "30 minutes")
+        .groupBy(session_window(col("_time"), "2 hours"), col("_field"))
+        .agg(count(lit(1)).as("n_points"),
+          sum(sumExactCol(col("_value"))).as("total"))
+        .select(col("session_window.start").as("_start"),
+          col("session_window.end").as("_end"), col("_field"),
+          col("n_points"), col("total"))
+    }
+
+  /** gs35's sink: REDELIVERY-SAFE enrichment — the gs09 dedup chained in
+    * front of gs34's as-of enrichment, in ONE streaming query (two stateful
+    * operators). This composition is load-bearing, not decorative: the
+    * enrich processor's monotone guard uses `>=` (same-instant context must
+    * apply), so an EXACTLY-REDELIVERED target row would pass the guard and
+    * double-emit — at-least-once sources therefore require
+    * `dropDuplicatesWithinWatermark` upstream, and this query proves the
+    * composition emits each enriched row exactly once by matching gs34's
+    * clean-stream oracle from a DOUBLED delivery of the same stream. */
+  private def streamDedupEnrich(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-dedup-enrich") { s =>
+      withRocksDb(s) { rocks =>
+        def long() = liveLong(rocks, coHumidity)
+        GasStream.lastValueEnrichStream(
+          GasStream.dedupeStream(long().unionAll(long()), watermark = "30 minutes"),
+          "CO (ppm)", "Humidity (%r.h.)", 55.0)
       }
     }
-    spark.read.parquet(path)
-  }
 
   /** gs09's sink: streaming EXACTLY-ONCE dedup under duplicate delivery —
     * the same day files are read by TWO independent file sources unioned
@@ -606,104 +421,17 @@ object GasStoreQueries {
     * oracle counts each raw point ONCE — a broken dedup doubles n_points
     * and flips the compare red (re-verified green after both changes:
     * the fixture's duplicates arrive in the same micro-batch, far inside
-    * any watermark). */
-  /** Run `body` (a streaming sink build) with the state-store provider
-    * pinned to RocksDB on a CHILD SESSION scoped to this one query.
-    *
-    * `spark.newSession()` shares the SparkContext and SharedState but
-    * carries its own SessionState/SQLConf, so setting the provider here
-    * is invisible to the caller's session and to any OTHER query running
-    * concurrently — the round-11/12 "session-wide mutation, single-
-    * threaded drivers only" constraint is gone, and ConcurrencySpec runs
-    * these sink builds 4-way concurrent to prove it. `body` receives the
-    * child and must build its ENTIRE stream (source frames included) on
-    * it: a streaming query resolves confs from the session its frames
-    * were created on, so a parent-built source frame would silently
-    * escape the pin. */
-  private def withRocksDb[T](spark: SparkSession)(body: SparkSession => T): T = {
-    val rocks = spark.newSession()
-    rocks.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    body(rocks)
-  }
-
-  /** The gs family's standard two-field long stream over the fixture,
-    * built on the GIVEN session (the rocks-pinned child for the
-    * transformWithState sinks — see [[withRocksDb]]). */
-  private def twoFieldLong(s: SparkSession): DataFrame =
-    graft.store.LongStore.unpivot(
-      graft.transform.GasTransform(
-        graft.streaming.GasStream.readStream(s, fixtureDir))
-        .withColumnRenamed("file_name", "_src")).drop("_src")
-      .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-
-  /** gs35's sink: REDELIVERY-SAFE enrichment — the gs09 dedup chained in
-    * front of gs34's as-of enrichment, in ONE streaming query (two stateful
-    * operators). This composition is load-bearing, not decorative: the
-    * enrich processor's monotone guard uses `>=` (same-instant context must
-    * apply), so an EXACTLY-REDELIVERED target row would pass the guard and
-    * double-emit — at-least-once sources therefore require
-    * `dropDuplicatesWithinWatermark` upstream, and this query proves the
-    * composition emits each enriched row exactly once by matching gs34's
-    * clean-stream oracle from a DOUBLED delivery of the same stream. */
-  private val builtDedupEnrich = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamDedupEnrich(spark: SparkSession): DataFrame = {
-    val path = builtDedupEnrich.synchronized {
-      Option(builtDedupEnrich.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-dedup-enrich")
-        deleteOnExit(work)
-        withRocksDb(spark) { rocks =>
-          def long() = twoFieldLong(rocks)
-          graft.streaming.GasStream
-            .lastValueEnrichStream(
-              graft.streaming.GasStream
-                .dedupeStream(long().unionAll(long()), watermark = "30 minutes"),
-              "CO (ppm)", "Humidity (%r.h.)", 55.0)
-            .writeStream
-            .format("parquet")
-            .option("path", s"$work/out")
-            .option("checkpointLocation", s"$work/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        builtDedupEnrich.put(spark, s"$work/out")
-        s"$work/out"
+    * any watermark). Dedup semantics are per-key, so the family's
+    * two-field focus proves them while the doubled stream stays 2/19ths
+    * the volume. */
+  private def streamDedup(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-dedup") { s =>
+      withRocksDb(s) { rocks =>
+        def long() = liveLong(rocks, coHumidity)
+        GasStream.dedupeStream(long().unionAll(long()), watermark = "30 minutes")
+          .select(col("_time"), col("_field"), col("_value"))
       }
     }
-    spark.read.parquet(path)
-  }
-
-  private val builtDedup = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamDedup(spark: SparkSession): DataFrame = {
-    val path = builtDedup.synchronized {
-      Option(builtDedup.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-dedup")
-        deleteOnExit(work)
-        // the family's standard two-field focus (gs07/gs22/gs27/...):
-        // dedup semantics are per-key, so two fields prove them as well
-        // as nineteen while the doubled stream stays 2/19ths the volume
-        withRocksDb(spark) { rocks =>
-          def long() = twoFieldLong(rocks)
-          graft.streaming.GasStream
-            .dedupeStream(long().unionAll(long()), watermark = "30 minutes")
-            .select(col("_time"), col("_field"), col("_value"))
-            .writeStream
-            .format("parquet")
-            .option("path", s"$work/out")
-            .option("checkpointLocation", s"$work/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        builtDedup.put(spark, s"$work/out")
-        s"$work/out"
-      }
-    }
-    spark.read.parquet(path)
-  }
 
   /** gs10's sink: the STREAMING EMA — the sequential per-series recursion
     * carried as keyed state ([[graft.streaming.GasStream.emaStream]]) —
@@ -712,32 +440,10 @@ object GasStoreQueries {
     * `WITH RECURSIVE`, so a stateful streaming operator is hash-verified
     * point-by-point (state carry-over, in-batch event-time ordering and
     * the smoothing arithmetic all land in every emitted row). */
-  private val builtEma = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamEma(spark: SparkSession): DataFrame = {
-    val path = builtEma.synchronized {
-      Option(builtEma.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-ema")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        graft.streaming.GasStream.emaStream(long, k = 0.2)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtEma.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamEma(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-ema") { s =>
+      GasStream.emaStream(liveLong(s, coHumidity), k = 0.2)
     }
-    spark.read.parquet(path)
-  }
 
   /** gs20's sink: STREAMING FOR-DURATION ALERTS
     * ([[graft.streaming.GasStream.alertStream]]) — ts32's pending-period
@@ -747,32 +453,10 @@ object GasStoreQueries {
     * oracle replays the gaps-and-islands episodes over the raw CSVs and
     * keeps only episodes a later below-threshold point has CLOSED —
     * the withheld-open-episode semantics verified exactly. */
-  private val builtAlerts = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamAlerts(spark: SparkSession): DataFrame = {
-    val path = builtAlerts.synchronized {
-      Option(builtAlerts.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-alerts")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        graft.streaming.GasStream.alertStream(long, threshold = 50.0)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtAlerts.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamAlerts(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-alerts") { s =>
+      GasStream.alertStream(liveLong(s, coHumidity), threshold = 50.0)
     }
-    spark.read.parquet(path)
-  }
 
   /** gs19's sink: the STREAMING KALMAN FILTER
     * ([[graft.streaming.GasStream.kalmanStream]]) — ts30's local-level
@@ -782,32 +466,10 @@ object GasStoreQueries {
     * oracle replays the identical per-step-rounded recursion over the raw
     * CSVs, hash-verifying state carry-over, in-batch event-time ordering
     * and the gain arithmetic point-by-point. */
-  private val builtKalman = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamKalman(spark: SparkSession): DataFrame = {
-    val path = builtKalman.synchronized {
-      Option(builtKalman.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-kalman")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        graft.streaming.GasStream.kalmanStream(long, q = 0.5, r = 4.0)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtKalman.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamKalman(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-kalman") { s =>
+      GasStream.kalmanStream(liveLong(s, coHumidity), q = 0.5, r = 4.0)
     }
-    spark.read.parquet(path)
-  }
 
   /** gs18's sink: the STREAMING DERIVATIVE
     * ([[graft.streaming.GasStream.rateStream]]) — ts09's per-series
@@ -817,32 +479,10 @@ object GasStoreQueries {
     * operator — state carry-over between micro-batches, the strict
     * monotone guard, the first-point seed — is hash-verified
     * point-by-point. */
-  private val builtRate = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamRate(spark: SparkSession): DataFrame = {
-    val path = builtRate.synchronized {
-      Option(builtRate.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-rate")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        graft.streaming.GasStream.rateStream(long)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtRate.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamRate(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-rate") { s =>
+      GasStream.rateStream(liveLong(s, coHumidity))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs15's sink: the STREAMING CUSUM drift detector — Page's sequential
     * changepoint recursion carried as keyed state, run end-to-end over
@@ -852,37 +492,21 @@ object GasStoreQueries {
     * `transformWithState` API
     * ([[graft.streaming.GasStream.CusumProcessor]]) — the
     * forward-compatible replacement for flatMapGroupsWithState — which
-    * REQUIRES the RocksDB state store, pinned here for this one query
-    * and restored after (the other streaming queries keep the default
-    * HDFS-backed store). The DuckDB oracle replays the identical clamped
+    * REQUIRES the RocksDB state store, pinned for this one query on a
+    * child session ([[withRocksDb]]); the caller's session and the other
+    * streaming queries keep the default HDFS-backed store. The DuckDB
+    * oracle replays the identical clamped
     * recursion (ts26's WITH RECURSIVE shape) over the raw CSVs, so the
     * stateful detector — state carry-over between micro-batches, in-batch
     * event-time ordering, clamp/alarm/reset arithmetic — is hash-verified
     * point-by-point ON THE NEW API. */
-  private val builtCusum = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamCusum(spark: SparkSession): DataFrame = {
-    val path = builtCusum.synchronized {
-      Option(builtCusum.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-cusum")
-        deleteOnExit(work)
-        withRocksDb(spark) { rocks =>
-          graft.streaming.GasStream
-            .cusumStreamTws(twoFieldLong(rocks), mu = 50.0, k = 5.0, h = 60.0)
-            .writeStream
-            .format("parquet")
-            .option("path", s"$work/out")
-            .option("checkpointLocation", s"$work/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        builtCusum.put(spark, s"$work/out")
-        s"$work/out"
+  private def streamCusum(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-cusum") { s =>
+      withRocksDb(s) { rocks =>
+        GasStream.cusumStreamTws(liveLong(rocks, coHumidity),
+          mu = 50.0, k = 5.0, h = 60.0)
       }
     }
-    spark.read.parquet(path)
-  }
 
   /** gs34's sink: [[graft.streaming.GasStream.lastValueEnrichStream]] —
     * the RATE-ROBUST stream-stream pairing form (1:1 last-value keyed-state
@@ -893,89 +517,37 @@ object GasStoreQueries {
     * LINEAR in rate and state is O(1) per key where the interval join's
     * output is rate² × interval by definition — the SLADDER measures it
     * flat per-row across the 3.5/28/112 Hz rungs. */
-  private val builtAsofEnrich = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamAsofEnrich(spark: SparkSession): DataFrame = {
-    val path = builtAsofEnrich.synchronized {
-      Option(builtAsofEnrich.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-asof-enrich")
-        deleteOnExit(work)
-        withRocksDb(spark) { rocks =>
-          graft.streaming.GasStream
-            .lastValueEnrichStream(twoFieldLong(rocks),
-              "CO (ppm)", "Humidity (%r.h.)", 55.0)
-            .writeStream
-            .format("parquet")
-            .option("path", s"$work/out")
-            .option("checkpointLocation", s"$work/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        builtAsofEnrich.put(spark, s"$work/out")
-        s"$work/out"
+  private def streamAsofEnrich(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-asof-enrich") { s =>
+      withRocksDb(s) { rocks =>
+        GasStream.lastValueEnrichStream(liveLong(rocks, coHumidity),
+          "CO (ppm)", "Humidity (%r.h.)", 55.0)
       }
     }
-    spark.read.parquet(path)
-  }
 
   /** gs27's sink: [[graft.streaming.GasStream.KmvProcessor]] — streaming
     * KMV distinct sketches on transformWithState MapState (window-start →
     * bottom-16 hash sketch), RocksDB-pinned like [[streamCusum]].
     * Snapshot rows append per micro-batch; the reader keeps max-n_seen. */
-  private val builtKmv = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamKmv(spark: SparkSession): DataFrame = {
-    val path = builtKmv.synchronized {
-      Option(builtKmv.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-kmv")
-        deleteOnExit(work)
-        withRocksDb(spark) { rocks =>
-          graft.streaming.GasStream
-            .kmvStream(twoFieldLong(rocks), windowUs = 21600000000L, k = 16)
-            .writeStream
-            .format("parquet")
-            .option("path", s"$work/out")
-            .option("checkpointLocation", s"$work/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        builtKmv.put(spark, s"$work/out")
-        s"$work/out"
+  private def streamKmv(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-kmv") { s =>
+      withRocksDb(s) { rocks =>
+        GasStream.kmvStream(liveLong(rocks, coHumidity),
+          windowUs = 21600000000L, k = 16)
       }
     }
-    spark.read.parquet(path)
-  }
 
   /** gs28's sink: [[graft.streaming.GasStream.TimerSealProcessor]] —
     * event-time-timer-sealed windows (RocksDB-pinned). Rows are emitted
     * exactly once, by the timer callback, so the reader takes them
     * as-is. */
-  private val builtSeal = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamTimerSeal(spark: SparkSession): DataFrame = {
-    val path = builtSeal.synchronized {
-      Option(builtSeal.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-seal")
-        deleteOnExit(work)
-        withRocksDb(spark) { rocks =>
-          graft.streaming.GasStream
-            .timerSealStream(twoFieldLong(rocks), windowUs = 21600000000L)
-            .writeStream
-            .format("parquet")
-            .option("path", s"$work/out")
-            .option("checkpointLocation", s"$work/ckpt")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-            .awaitTermination()
-        }
-        builtSeal.put(spark, s"$work/out")
-        s"$work/out"
+  private def streamTimerSeal(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-seal") { s =>
+      withRocksDb(s) { rocks =>
+        GasStream.timerSealStream(liveLong(rocks, coHumidity),
+          windowUs = 21600000000L)
       }
     }
-    spark.read.parquet(path)
-  }
 
   /** gs29's sink: CHAINED STREAMING AGGREGATIONS (Spark 4's
     * multiple-stateful-operator support): hourly per-field
@@ -989,41 +561,20 @@ object GasStoreQueries {
     * passes ITS end — by containment every hour inside a sealed bucket
     * is already sealed, so the oracle's replay is exactly "all points,
     * 6 h buckets with end ≤ max − 30 min". */
-  private val builtTwoLevel = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamTwoLevel(spark: SparkSession): DataFrame = {
-    val path = builtTwoLevel.synchronized {
-      Option(builtTwoLevel.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-twolevel")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-        long.withWatermark("_time", "30 minutes")
-          .groupBy(window(col("_time"), "1 hour"), col("_field"))
-          .agg(count(lit(1)).as("n_points"),
-            sum(sumExactCol(col("_value"))).as("total"))
-          .groupBy(window(window_time(col("window")), "6 hours"),
-            col("_field"))
-          .agg(count(lit(1)).as("n_hours"),
-            sum(col("n_points")).as("n_points"),
-            sum(col("total")).as("total"))
-          .select(col("window.start").as("_bucket"), col("_field"),
-            col("n_hours"), col("n_points"), col("total"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtTwoLevel.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamTwoLevel(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-twolevel") { s =>
+      liveLong(s).withWatermark("_time", "30 minutes")
+        .groupBy(window(col("_time"), "1 hour"), col("_field"))
+        .agg(count(lit(1)).as("n_points"),
+          sum(sumExactCol(col("_value"))).as("total"))
+        .groupBy(window(window_time(col("window")), "6 hours"),
+          col("_field"))
+        .agg(count(lit(1)).as("n_hours"),
+          sum(col("n_points")).as("n_points"),
+          sum(col("total")).as("total"))
+        .select(col("window.start").as("_bucket"), col("_field"),
+          col("n_hours"), col("n_points"), col("total"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs30's sink: COMPLETE output mode — the live dashboard-counter shape:
     * an unwindowed per-field aggregate whose WHOLE result table is
@@ -1033,33 +584,20 @@ object GasStoreQueries {
     * when |groups| is small — state AND output are the |fields|-row table
     * itself, which is exactly the global-counters use case; windowed/keyed
     * history stays in the append-mode queries (gs07-gs29). */
-  private val builtComplete = new java.util.WeakHashMap[SparkSession, String]()
   private def streamCompleteTotals(spark: SparkSession): DataFrame = {
-    val path = builtComplete.synchronized {
-      Option(builtComplete.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-complete")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-        long.groupBy(col("_field"))
-          .agg(count(lit(1)).as("n_points"),
-            sum(sumExactCol(col("_value"))).as("total"),
-            max(col("_time")).as("latest"))
-          .writeStream
-          .format("memory")
-          .queryName("gs30_totals")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("complete")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        spark.table("gs30_totals")
-          .write.mode("overwrite").parquet(s"$work/out")
-        builtComplete.put(spark, s"$work/out")
-        s"$work/out"
-      }
+    val path = TempDirs.perSession(spark, "gas-complete") { work =>
+      runToEnd(liveLong(spark).groupBy(col("_field"))
+        .agg(count(lit(1)).as("n_points"),
+          sum(sumExactCol(col("_value"))).as("total"),
+          max(col("_time")).as("latest"))
+        .writeStream
+        .format("memory")
+        .queryName("gs30_totals")
+        .option("checkpointLocation", s"$work/ckpt")
+        .outputMode("complete"))
+      spark.table("gs30_totals")
+        .write.mode("overwrite").parquet(s"$work/out")
+      s"$work/out"
     }
     spark.read.parquet(path)
   }
@@ -1075,36 +613,15 @@ object GasStoreQueries {
     * the oracle. Ranking is (value DESC, ts ASC) — the aggregator's
     * (sim DESC, c_id ASC) order with c_id = event-time micros — so the
     * emitted top-3 is deterministic and hash-comparable. */
-  private val builtTopK = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamTopK(spark: SparkSession): DataFrame = {
-    val path = builtTopK.synchronized {
-      Option(builtTopK.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-topk")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Temperature (C)"))
-        val topk = udaf(new graft.functions.TopKAggregator(3))
-        long.withWatermark("_time", "30 minutes")
-          .groupBy(window(col("_time"), "1 hour"), col("_field"))
-          .agg(topk(unix_micros(col("_time")), col("_value")).as("top"))
-          .select(col("window.start").as("_bucket"), col("_field"), col("top"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtTopK.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamTopK(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-topk") { s =>
+      val topk = udaf(new graft.functions.TopKAggregator(3))
+      liveLong(s, Seq("CO (ppm)", "Temperature (C)"))
+        .withWatermark("_time", "30 minutes")
+        .groupBy(window(col("_time"), "1 hour"), col("_field"))
+        .agg(topk(unix_micros(col("_time")), col("_value")).as("top"))
+        .select(col("window.start").as("_bucket"), col("_field"), col("top"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs17's sink: the STREAMING STATE-RUN HISTORY
     * ([[graft.streaming.GasStream.stateRuns]]) — closed status-bucket
@@ -1112,32 +629,10 @@ object GasStoreQueries {
     * band, run end-to-end over the live long stream. The oracle replays
     * gaps-and-islands over the raw CSVs and drops each series' final
     * (still-open) island — the withheld-tail contract. */
-  private val builtRuns = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamRuns(spark: SparkSession): DataFrame = {
-    val path = builtRuns.synchronized {
-      Option(builtRuns.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-runs")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-          .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
-        graft.streaming.GasStream.stateRuns(long)
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtRuns.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamRuns(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-runs") { s =>
+      GasStream.stateRuns(liveLong(s, coHumidity))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs11's sink: STREAM-STATIC enrichment join — every point of the live
     * long stream picks up its field's metadata (kind/unit/scale) from a
@@ -1148,42 +643,21 @@ object GasStoreQueries {
     * query (or `foreachBatch` re-reading it), never by shuffling the
     * stream. The oracle joins the same literal dimension to the raw-CSV
     * replay. */
-  private val builtEnrich = new java.util.WeakHashMap[SparkSession, String]()
-  private def streamEnrich(spark: SparkSession): DataFrame = {
-    val path = builtEnrich.synchronized {
-      Option(builtEnrich.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-enrich")
-        deleteOnExit(work)
-        import spark.implicits._
-        val dim = (Seq(
-          ("CO (ppm)", "target_gas", "ppb", 1000.0),
-          ("Humidity (%r.h.)", "ambient", "%r.h.", 1.0),
-          ("Temperature (C)", "ambient", "C", 1.0),
-          ("Flow rate (mL/min)", "control", "mL/min", 1.0),
-          ("Heater voltage (V)", "control", "mV", 1000.0)) ++
-          (1 to 14).map(i => (s"R$i (MOhm)", "sensor_resistance", "kOhm", 1000.0)))
-          .toDF("_field", "kind", "unit", "scale")
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-        long.join(broadcast(dim), Seq("_field"))
-          .select(col("_time"), col("_field"), col("kind"), col("unit"),
-            (col("_value") * col("scale")).as("scaled"))
-          .writeStream
-          .format("parquet")
-          .option("path", s"$work/out")
-          .option("checkpointLocation", s"$work/ckpt")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-          .awaitTermination()
-        builtEnrich.put(spark, s"$work/out")
-        s"$work/out"
-      }
+  private def streamEnrich(spark: SparkSession): DataFrame =
+    appendSinkOnce(spark, "gas-enrich") { s =>
+      import s.implicits._
+      val dim = (Seq(
+        ("CO (ppm)", "target_gas", "ppb", 1000.0),
+        ("Humidity (%r.h.)", "ambient", "%r.h.", 1.0),
+        ("Temperature (C)", "ambient", "C", 1.0),
+        ("Flow rate (mL/min)", "control", "mL/min", 1.0),
+        ("Heater voltage (V)", "control", "mV", 1000.0)) ++
+        (1 to 14).map(i => (s"R$i (MOhm)", "sensor_resistance", "kOhm", 1000.0)))
+        .toDF("_field", "kind", "unit", "scale")
+      liveLong(s).join(broadcast(dim), Seq("_field"))
+        .select(col("_time"), col("_field"), col("kind"), col("unit"),
+          (col("_value") * col("scale")).as("scaled"))
     }
-    spark.read.parquet(path)
-  }
 
   /** gs12's sink: the foreachBatch incremental UPSERT
     * ([[graft.streaming.GasStream.upsertLatest]]) — "latest reading per
@@ -1192,25 +666,14 @@ object GasStoreQueries {
     * genuinely runs incrementally (state from batch 1 merged with batch 2),
     * not as one big batch. The reduce is associative+commutative, so the
     * oracle is simply the per-field argmax over the raw CSVs. */
-  private val builtUpsert = new java.util.WeakHashMap[SparkSession, String]()
   private def streamUpsert(spark: SparkSession): DataFrame = {
-    val path = builtUpsert.synchronized {
-      Option(builtUpsert.get(spark)).getOrElse {
-        val work = Files.createTempDirectory("graft-gas-upsert")
-        deleteOnExit(work)
-        val long = graft.store.LongStore.unpivot(
-          graft.transform.GasTransform(
-            graft.streaming.GasStream.readStream(spark, fixtureDir,
-              maxFilesPerTrigger = 1))
-            .withColumnRenamed("file_name", "_src")).drop("_src")
-        graft.streaming.GasStream
-          .upsertLatest(long, s"$work/state", s"$work/ckpt")
-          .awaitTermination()
-        builtUpsert.put(spark, s"$work/state")
-        s"$work/state"
-      }
+    val path = TempDirs.perSession(spark, "gas-upsert") { work =>
+      GasStream.upsertLatest(liveLong(spark, maxFilesPerTrigger = 1),
+        s"$work/state", s"$work/ckpt")
+        .awaitTermination()
+      s"$work/state"
     }
-    spark.read.parquet(graft.streaming.GasStream.latestUpsertState(path))
+    spark.read.parquet(GasStream.latestUpsertState(path))
   }
 
   val queries: Map[String, Q] = Map(

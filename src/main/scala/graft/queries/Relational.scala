@@ -39,53 +39,38 @@ object Relational {
     * co-located buckets and plans with no Exchange under the join — the
     * "daily fact ⋈ fact on the same key" pattern at 100 TB. Table names
     * carry a dir tag so two dirs in one session can't alias. */
-  // weak-keyed on the session (a stopped session must not be pinned for
-  // the process lifetime), with a per-session dir map inside and a
-  // shutdown-hook delete for the temp files — same lifecycle discipline as
-  // GasStoreQueries' store memo
-  private val bucketedBuilt =
-    new java.util.WeakHashMap[SparkSession, collection.mutable.Map[String, (String, String)]]()
   private def bucketedTables(s: SparkSession, dir: String): (String, String) =
-    bucketedBuilt.synchronized {
-      val perDir = Option(bucketedBuilt.get(s)).getOrElse {
-        val m = collection.mutable.Map.empty[String, (String, String)]
-        bucketedBuilt.put(s, m)
-        m
-      }
-      perDir.getOrElseUpdate(dir, {
-        // full md5 hex of the dir, not String.hashCode: a 32-bit hash of two
-        // distinct dirs in one session could collide and silently overwrite
-        // the first dir's tables
-        val tag = java.security.MessageDigest.getInstance("MD5")
-          .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        val (liT, oT) = (s"graft_bkt_li_$tag", s"graft_bkt_o_$tag")
-        val work = java.nio.file.Files.createTempDirectory("graft-bucketed")
-        graft.util.TempDirs.deleteOnExit(work)
-        // Bucket count sized to the FACT volume (the round-12 128× census
-        // finding: a hard-coded 8 funneled the 2.4 GB fact write through 8
-        // sorter tasks and capped every later scan/join at 8-way
-        // parallelism — 13× wall clock at 4× data). ~64 MB of source per
-        // bucket, rounded up to a power of two, floor 8: every graded
-        // scale (≤ sf0.1) derives exactly the historical 8, so layouts and
-        // plan audits there are byte-identical. Both tables MUST share the
-        // count to co-locate — that is the bucketing contract, so it is
-        // derived once from the bigger (fact) side.
-        val liPath = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
-        val fs = liPath.getFileSystem(s.sparkContext.hadoopConfiguration)
-        val liBytes = fs.getContentSummary(liPath).getLength
-        val target = math.max(1L, (liBytes + (64L << 20) - 1) / (64L << 20))
-        var buckets = 8
-        while (buckets < target && buckets < 256) buckets <<= 1
-        graft.store.BucketedStore.write(
-          t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"),
-            col("l_extendedprice")),
-          liT, s"$work/li", "l_orderkey", buckets)
-        graft.store.BucketedStore.write(
-          t(s, dir, "orders").select(col("o_orderkey").as("l_orderkey"),
-            col("o_orderpriority")),
-          oT, s"$work/o", "l_orderkey", buckets)
-        (liT, oT)
-      })
+    graft.util.TempDirs.perSession(s, s"bucketed:$dir") { work =>
+      // full md5 hex of the dir, not String.hashCode: a 32-bit hash of two
+      // distinct dirs in one session could collide and silently overwrite
+      // the first dir's tables
+      val tag = java.security.MessageDigest.getInstance("MD5")
+        .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      val (liT, oT) = (s"graft_bkt_li_$tag", s"graft_bkt_o_$tag")
+      // Bucket count sized to the FACT volume (the round-12 128× census
+      // finding: a hard-coded 8 funneled the 2.4 GB fact write through 8
+      // sorter tasks and capped every later scan/join at 8-way
+      // parallelism — 13× wall clock at 4× data). ~64 MB of source per
+      // bucket, rounded up to a power of two, floor 8: every graded
+      // scale (≤ sf0.1) derives exactly the historical 8, so layouts and
+      // plan audits there are byte-identical. Both tables MUST share the
+      // count to co-locate — that is the bucketing contract, so it is
+      // derived once from the bigger (fact) side.
+      val liPath = new org.apache.hadoop.fs.Path(s"$dir/lineitem.parquet")
+      val fs = liPath.getFileSystem(s.sparkContext.hadoopConfiguration)
+      val liBytes = fs.getContentSummary(liPath).getLength
+      val target = math.max(1L, (liBytes + (64L << 20) - 1) / (64L << 20))
+      var buckets = 8
+      while (buckets < target && buckets < 256) buckets <<= 1
+      graft.store.BucketedStore.write(
+        t(s, dir, "lineitem").select(col("l_orderkey"), col("l_quantity"),
+          col("l_extendedprice")),
+        liT, s"$work/li", "l_orderkey", buckets)
+      graft.store.BucketedStore.write(
+        t(s, dir, "orders").select(col("o_orderkey").as("l_orderkey"),
+          col("o_orderpriority")),
+        oT, s"$work/o", "l_orderkey", buckets)
+      (liT, oT)
     }
 
   /** q29's SQL — ONE text, run verbatim by spark.sql() AND as the DuckDB
@@ -1835,128 +1820,73 @@ object Relational {
     sys.props.getOrElse("graft.jsonl.fixture",
       "/root/repo/src/test/resources/events_sample.jsonl")
 
-  /** ORC twin of the customer table, memoized per (session, dir) with the
-    * bucketed-tables lifecycle discipline. */
-  private val orcBuilt =
-    new java.util.WeakHashMap[SparkSession, collection.mutable.Map[String, String]]()
+  /** ORC twin of the customer table, memoized per (session, dir) by
+    * [[graft.util.TempDirs.perSession]]. */
   private def orcCustomer(s: SparkSession, dir: String): String =
-    orcBuilt.synchronized {
-      val perDir = Option(orcBuilt.get(s)).getOrElse {
-        val m = collection.mutable.Map.empty[String, String]
-        orcBuilt.put(s, m)
-        m
-      }
-      perDir.getOrElseUpdate(dir, {
-        val work = java.nio.file.Files.createTempDirectory("graft-orc")
-        graft.util.TempDirs.deleteOnExit(work)
-        t(s, dir, "customer")
-          .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
-          .write.mode("overwrite").orc(s"$work/customer")
-        s"$work/customer"
-      })
+    graft.util.TempDirs.perSession(s, s"orc:$dir") { work =>
+      t(s, dir, "customer")
+        .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
+        .write.mode("overwrite").orc(s"$work/customer")
+      s"$work/customer"
     }
 
   /** Two-generation orders store for q42: gen=1 files carry the LEGACY
     * column set (key, cust, totalprice), gen=2 the EVOLVED one (key, cust,
     * orderstatus, orderpriority) — written as separate parquet writes
     * under one partitioned root, memoized per (session, dir). */
-  private val evolvedBuilt =
-    new java.util.WeakHashMap[SparkSession, collection.mutable.Map[String, String]]()
   private def evolvedOrders(s: SparkSession, dir: String): String =
-    evolvedBuilt.synchronized {
-      val perDir = Option(evolvedBuilt.get(s)).getOrElse {
-        val m = collection.mutable.Map.empty[String, String]
-        evolvedBuilt.put(s, m)
-        m
-      }
-      perDir.getOrElseUpdate(dir, {
-        val work = java.nio.file.Files.createTempDirectory("graft-evolve")
-        graft.util.TempDirs.deleteOnExit(work)
-        val o = t(s, dir, "orders")
-        o.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-          .write.mode("overwrite").parquet(s"$work/store/gen=1")
-        o.filter(col("o_orderkey") % 2 === 1)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
-            col("o_orderpriority"))
-          .write.mode("overwrite").parquet(s"$work/store/gen=2")
-        s"$work/store"
-      })
+    graft.util.TempDirs.perSession(s, s"evolve:$dir") { work =>
+      val o = t(s, dir, "orders")
+      o.filter(col("o_orderkey") % 2 === 0)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
+        .write.mode("overwrite").parquet(s"$work/store/gen=1")
+      o.filter(col("o_orderkey") % 2 === 1)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
+          col("o_orderpriority"))
+        .write.mode("overwrite").parquet(s"$work/store/gen=2")
+      s"$work/store"
     }
 
   /** Hive-partitioned (by ship month) copy of lineitem, memoized per
     * (session, dir). Package-private so PlanAuditSpec can audit the DPP
     * plan over the exact store the registered query reads. */
-  private val monthPartBuilt =
-    new java.util.WeakHashMap[SparkSession, collection.mutable.Map[String, String]]()
   private[graft] def monthPartitionedLineitem(s: SparkSession, dir: String): String =
-    monthPartBuilt.synchronized {
-      val perDir = Option(monthPartBuilt.get(s)).getOrElse {
-        val m = collection.mutable.Map.empty[String, String]
-        monthPartBuilt.put(s, m)
-        m
-      }
-      perDir.getOrElseUpdate(dir, {
-        val work = java.nio.file.Files.createTempDirectory("graft-monthpart")
-        graft.util.TempDirs.deleteOnExit(work)
-        t(s, dir, "lineitem")
-          .withColumn("ship_mon", to_date(date_trunc("month", col("l_shipdate"))))
-          .write.mode("overwrite").partitionBy("ship_mon")
-          .parquet(s"$work/lineitem")
-        s"$work/lineitem"
-      })
+    graft.util.TempDirs.perSession(s, s"monthpart:$dir") { work =>
+      t(s, dir, "lineitem")
+        .withColumn("ship_mon", to_date(date_trunc("month", col("l_shipdate"))))
+        .write.mode("overwrite").partitionBy("ship_mon")
+        .parquet(s"$work/lineitem")
+      s"$work/lineitem"
     }
 
   /** Z-order clustered copy of events on (user_id, ts), memoized per
-    * (session, dir) with the bucketed-tables lifecycle discipline.
+    * (session, dir) by [[graft.util.TempDirs.perSession]].
     * Package-private so PlanAuditSpec can measure file skipping on the
     * exact layout the registered query reads. */
-  private val zorderBuilt =
-    new java.util.WeakHashMap[SparkSession, collection.mutable.Map[String, String]]()
   private[graft] def zorderedEvents(s: SparkSession, dir: String): String =
-    zorderBuilt.synchronized {
-      val perDir = Option(zorderBuilt.get(s)).getOrElse {
-        val m = collection.mutable.Map.empty[String, String]
-        zorderBuilt.put(s, m)
-        m
-      }
-      perDir.getOrElseUpdate(dir, {
-        val work = java.nio.file.Files.createTempDirectory("graft-zorder")
-        graft.util.TempDirs.deleteOnExit(work)
-        graft.store.ZOrderStore.write(
-          t(s, dir, "events"), "user_id", "ts", s"$work/events", cellBits = 6)
-        s"$work/events"
-      })
+    graft.util.TempDirs.perSession(s, s"zorder:$dir") { work =>
+      graft.store.ZOrderStore.write(
+        t(s, dir, "events"), "user_id", "ts", s"$work/events", cellBits = 6)
+      s"$work/events"
     }
 
   /** Fragmented (256 tiny files) and compacted (4 ts-range files) copies
     * of events, memoized per (session, dir). Returns the compacted path;
     * [[fragmentedEventsDir]] exposes the fragmented one for the file-count
     * audit. */
-  private val compactBuilt =
-    new java.util.WeakHashMap[SparkSession, collection.mutable.Map[String, (String, String)]]()
   private def compactedPair(s: SparkSession, dir: String): (String, String) =
-    compactBuilt.synchronized {
-      val perDir = Option(compactBuilt.get(s)).getOrElse {
-        val m = collection.mutable.Map.empty[String, (String, String)]
-        compactBuilt.put(s, m)
-        m
-      }
-      perDir.getOrElseUpdate(dir, {
-        val work = java.nio.file.Files.createTempDirectory("graft-compact")
-        graft.util.TempDirs.deleteOnExit(work)
-        val ev = t(s, dir, "events")
-        // the "before": streaming-ingest fragmentation, 256 tiny files
-        ev.repartition(256).write.mode("overwrite").parquet(s"$work/frag")
-        // the compaction rewrite: ONE pass, range-clustered on ts
-        s.read.parquet(s"$work/frag")
-          .repartitionByRange(4, col("ts"))
-          .sortWithinPartitions(col("ts"))
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", 500000)
-          .parquet(s"$work/compact")
-        (s"$work/frag", s"$work/compact")
-      })
+    graft.util.TempDirs.perSession(s, s"compact:$dir") { work =>
+      val ev = t(s, dir, "events")
+      // the "before": streaming-ingest fragmentation, 256 tiny files
+      ev.repartition(256).write.mode("overwrite").parquet(s"$work/frag")
+      // the compaction rewrite: ONE pass, range-clustered on ts
+      s.read.parquet(s"$work/frag")
+        .repartitionByRange(4, col("ts"))
+        .sortWithinPartitions(col("ts"))
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 500000)
+        .parquet(s"$work/compact")
+      (s"$work/frag", s"$work/compact")
     }
   private[graft] def fragmentedEventsDir(s: SparkSession, dir: String): String =
     compactedPair(s, dir)._1

@@ -1411,7 +1411,7 @@ object VectorOps {
             .localCheckpoint(true)
           // the corpus-sized assignment blocks are dead once the edge
           // list materializes (r17 unpersist discipline)
-          releaseBarrier(cells)
+          Barriers.release(cells)
           g
         },
         () => e.select(col("vec_id").as("cid"), col("emb").as("ce"),
@@ -1449,7 +1449,7 @@ object VectorOps {
           .localCheckpoint(true)
         // round N−1's visited blocks are dead once round N materializes
         // (the eager checkpoint above read them for the last time)
-        releaseBarrier(prev)
+        Barriers.release(prev)
         frontier = visited.withColumn("rn", row_number().over(wB))
           .filter(col("rn") <= 4).drop("rn")
       }
@@ -2361,7 +2361,7 @@ object VectorOps {
       val next = kmeansIter(e, c).localCheckpoint(true)
       // iteration N−1's blocks are dead once N materializes (r17, the
       // PageRank/CC unpersist discipline; no-op on the seed frame)
-      releaseBarrier(c)
+      Barriers.release(c)
       next
     }
   }
@@ -2392,7 +2392,7 @@ object VectorOps {
     // per-iteration barrier + superseded-frame release — see kmeansCentroids
     (1 to iters).foldLeft(seeds) { (c, _) =>
       val next = kmeansIter(e, c).localCheckpoint(true)
-      releaseBarrier(c)
+      Barriers.release(c)
       next
     }
   }

@@ -77,10 +77,6 @@ package object queries {
   def fanout(df: DataFrame): DataFrame =
     df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
-  /** Release the blocks of a SUPERSEDED eager `localCheckpoint` barrier —
-    * see [[graft.util.Barriers.release]] (shared with the operators). */
-  def releaseBarrier(df: DataFrame): Unit = graft.util.Barriers.release(df)
-
   /** Run independent driver-side materialization thunks CONCURRENTLY.
     *
     * Eager `localCheckpoint` barriers fix the exponential-plan problem of

@@ -32,7 +32,6 @@ object GasStream {
     * the ledger: a re-run with the same checkpoint skips seen files. */
   def pipeline(spark: SparkSession, inputDir: String, storePath: String,
       checkpoint: String): StreamingQuery = {
-    val transformed = GasTransform(readStream(spark, inputDir))
     // Writer parallelism scaled to the day-file size (the round-11
     // single-writer funnel finding — see LongStore.writersFor); computed
     // once at plan time from FS metadata, not per micro-batch.
@@ -40,7 +39,7 @@ object GasStream {
     // file_name rides along as `_src` so the store's overwrite unit is one
     // source file — a day split across micro-batches by maxFilesPerTrigger
     // can no longer clobber the day partition written by an earlier trigger.
-    LongStore.unpivot(transformed.withColumnRenamed("file_name", "_src"))
+    GasTransform.toLong(readStream(spark, inputDir))
       .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)

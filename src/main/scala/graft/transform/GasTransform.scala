@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.schema.GasSchema
+import graft.store.LongStore
 
 /** Transform stage: the reference's per-file dataflow (transform.py:11-49),
   * re-expressed as one Catalyst plan (SURVEY.md §2.2).
@@ -54,4 +55,11 @@ object GasTransform {
     * "filter first" ordering is what Catalyst pushdown automates anyway). */
   def apply(df: DataFrame): DataFrame =
     synthesizeTimestamp(truncate24h(df))
+
+  /** Day rows → long points: the transform, then the unpivot with the
+    * source file riding along as `_src` (the store's overwrite unit). The
+    * one wide→long step the batch pipeline, the streaming twin and the
+    * streaming queries share. */
+  def toLong(dayRows: DataFrame): DataFrame =
+    LongStore.unpivot(apply(dayRows).withColumnRenamed("file_name", "_src"))
 }

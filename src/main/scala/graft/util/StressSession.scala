@@ -37,6 +37,12 @@ import org.apache.spark.sql.SparkSession
   *    builders (`VectorOps.withHashAggBudget`), where the bound is a
   *    structural property of the aggregator, not a bench guess.
   *
+  * A PER-FAMILY override (fixed-cpus for the relational family) was
+  * tested and rejected in round 16 (SWEEP16, 128× and 512×): too many
+  * initial partitions costs ~13% scheduling overhead, too few is a cliff
+  * (q38 2.8× slower at 512×), so every family keeps the size-derived
+  * ceiling.
+  *
   * At sf0.1 and below the derivation floors to `cpus` — the graded bench
   * regime is byte-identical to rounds ≤12. SPARK_GRAFT_CONF
   * (';'-separated k=v pairs, applied last) overrides anything for
@@ -60,39 +66,6 @@ object StressSession {
     sys.env.get("SPARK_GRAFT_INITIAL_PARTITIONS").map(_.toInt).getOrElse {
       math.max(cpus, math.min(2048L, inputBytes(sfDir) >> 20).toInt)
     }
-
-  /** PER-FAMILY initial-partition override — TESTED AND REJECTED
-    * (round-15 verdict item 6, closed by measurement in round 16). The
-    * r15 band said the size-derived regime costs q38 +20.6% vs fixed-32
-    * at 128×, suggesting a relational-family fixed-cpus override. The
-    * r16 three-arm × two-rung matrix (SWEEP16, median-of-3 at 128×,
-    * single-pass at 512×, bounded-sort q38 in both) killed it:
-    *
-    *   128× (3 GB):  fixed-32 72.6 s | 384 84.3 s | 2048 82.0 s
-    *   512× (12 GB): fixed-32 661 s / 36 GB spill | 2048 238 s / 9.3 GB
-    *
-    * The costs are ASYMMETRIC: too many initial partitions is a ~13%
-    * scheduling overhead (AQE coalescing absorbs the rest), while too
-    * few is a CLIFF — at 512× the fixed floor forces ~3 GB+ of q38's
-    * ~8×-amplified join volume through each of 32 sort buffers and the
-    * query runs 2.8× slower. A per-family fixed floor is therefore a
-    * regression waiting one rung up the ladder; every family keeps the
-    * size-derived ceiling and q38's 128× premium is the insurance the
-    * 512× rung buys. SPARK_GRAFT_INITIAL_PARTITIONS stays the
-    * experiment lever (it produced this matrix). */
-  def initialPartitionsFor(name: String, sfDir: String, cpus: Int): Int =
-    initialPartitions(sfDir, cpus)
-
-  /** Apply the per-family regime on the shared session before running
-    * `name` — AQE reads the conf at execution, so a session-level set
-    * between queries is exactly a per-query regime. */
-  def applyRegime(spark: SparkSession, name: String, sfDir: String,
-      cpus: Int): Unit = {
-    val n = initialPartitionsFor(name, sfDir, cpus)
-    spark.conf.set(
-      "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-      (if (n > 0) n else cpus).toString)
-  }
 
   /** Builder with the regime applied; callers add their own confs before
     * getOrCreate() if needed. */

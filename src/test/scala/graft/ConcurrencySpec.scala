@@ -25,7 +25,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * gs22's HDFS-backed checkpoint would flip providers mid-build and
   * abort. Batch families (join, agg, text, vector, time-series,
   * multimodal) ride along to exercise plain concurrent Catalyst
-  * planning/execution on the shared context.
+  * planning/execution on the shared context. Every build shape the
+  * per-session memo (`graft.util.TempDirs.perSession`) serves runs cold
+  * under contention too: the batch, streaming and snapshot store builds
+  * (gs01/gs37/gs38), the foreachBatch upsert (gs12) and the
+  * complete-mode memory sink (gs30).
   *
   * Serial reference and concurrent run use SEPARATE sessions (memoized
   * streaming sinks are per-session, so the concurrent session builds its
@@ -44,7 +48,9 @@ class ConcurrencySpec extends SparkSpec {
     "v01_cosine_topk", "v05_ivf_ann",
     "mm08_phash_dedup",
     "gs22_stream_histogram",
-    "gs15_stream_cusum", "gs27_stream_kmv_distinct", "gs34_stream_asof_enrich")
+    "gs15_stream_cusum", "gs27_stream_kmv_distinct", "gs34_stream_asof_enrich",
+    "gs01_field_filter", "gs37_manifest_stream_store", "gs38_snapshot_time_range",
+    "gs12_stream_upsert", "gs30_stream_complete_totals")
 
   /** Canonical content hash: column names + every row rendered and
     * sorted, so physical row/partition order can't affect the digest. */

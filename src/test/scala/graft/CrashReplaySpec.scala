@@ -63,9 +63,8 @@ class CrashReplaySpec extends SparkSpec {
     val ledger = work.resolve("ledger").toString
     val raw = GasIngest.readDayFiles(spark, input)
     val fresh = GasIngest.unseenOnly(raw, GasIngest.readLedger(spark, ledger))
-    LongStore.write(
-      LongStore.unpivot(GasTransform(fresh).withColumnRenamed("file_name", "_src")),
-      store, writersPerPartition = writers)
+    LongStore.write(GasTransform.toLong(fresh), store,
+      writersPerPartition = writers)
     // CRASH: no ledger append — the files look unprocessed to the next run
 
     // ---- recovery: the real pipeline re-runs everything ---------------

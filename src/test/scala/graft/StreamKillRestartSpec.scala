@@ -6,7 +6,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.store.LongStore
 import graft.streaming.GasStream
 import graft.transform.GasTransform
 
@@ -70,9 +69,8 @@ class StreamKillRestartSpec extends SparkSpec {
   /** The gs family's long stream over a day-file dir, one file per
     * micro-batch (the batch-split contract both runs share). */
   private def longStream(input: String): DataFrame =
-    LongStore.unpivot(
-      GasTransform(GasStream.readStream(spark, input, maxFilesPerTrigger = 1))
-        .withColumnRenamed("file_name", "_src")).drop("_src")
+    GasTransform.toLong(GasStream.readStream(spark, input, maxFilesPerTrigger = 1))
+      .drop("_src")
       .filter(col("_field").isin("CO (ppm)", "Humidity (%r.h.)"))
 
   private def withRocks[T](body: => T): T = {
