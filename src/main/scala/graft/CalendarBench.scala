@@ -13,8 +13,8 @@ import graft.queries.GasQueries
   * `tools/make_gas_calendar.py` fixture (many consecutive THIN days, so
   * any super-linear cost is planning, never data):
   *
-  *  1. `ingest_s` — the full pipeline batch over N day files (ledger
-  *     anti-join, N-way dynamic-partition store write).
+  *  1. `ingest_s` — the full pipeline batch over N day files (listing
+  *     minus ledger, N-way dynamic-partition store write).
   *  2. `noop_rerun_s` — the idempotent re-run (ledger says all seen): the
   *     per-batch fixed cost a scheduler pays every tick at N partitions.
   *  3. `pruned_scan_cold_s` — Q3 (`GasQueries.timeRange`, a 2-day window)

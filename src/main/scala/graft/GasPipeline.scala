@@ -9,7 +9,7 @@ import graft.transform.GasTransform
 /** The whole reference ETL (Airflow DAG → Dask → parquet → InfluxDB,
   * SURVEY.md §3.1) collapsed into one Spark job:
   *
-  *   discover CSVs → anti-join ledger → 24 h filter + timestamp synthesis →
+  *   list CSVs minus ledger → 24 h filter + timestamp synthesis →
   *   unpivot → date-partitioned parquet store + side-table commit → ledger append.
   *
   * Ordering gives at-least-once with idempotent loads (= exactly-once
@@ -25,12 +25,11 @@ object GasPipeline {
     * frame of newly processed file names (empty ⇒ nothing new, the
     * reference's "skip" branch, ETL.py:96-98).
     *
-    * The anti-joined survivors are persisted so the whole batch reads the
-    * input CSVs exactly once: without the cache, the file-name probe and
-    * the store write would each re-scan the day's input. The file names
-    * are collected once from the cache (one short row per new file); the
-    * store's side tables and the ledger are derived from them, and the
-    * returned local frame never re-triggers the scan either.
+    * Discovery is ledger-first ([[GasIngest.discover]]): the batch is the
+    * directory listing minus the ledger's names, so a run with nothing new
+    * returns before any CSV is read, and otherwise reads exactly its unseen
+    * files, once, inside the store write. Header-only files are part of the
+    * batch and get ledgered like any other, so no tick re-reads them.
     *
     * The batch commits through [[LongStore.commitBatch]] before the ledger
     * mark. `snapshot = true` selects the generation commit log
@@ -41,23 +40,18 @@ object GasPipeline {
     * contract the plain layout only gives disjoint windows (IngestStress). */
   def runBatch(spark: SparkSession, inputDir: String, storePath: String,
       ledgerPath: String, snapshot: Boolean = false): DataFrame = {
-    val raw = GasIngest.readDayFiles(spark, inputDir)
-    val ledger = GasIngest.readLedger(spark, ledgerPath)
-    val fresh = GasIngest.unseenOnly(raw, ledger).persist()
-    try {
-      val names = fresh.select("file_name").distinct()
-        .collect().map(_.getString(0)).sorted.toIndexedSeq
-      if (names.nonEmpty) {
-        val long = GasTransform.toLong(fresh)
-        // Writer parallelism scaled to the day-file size (the round-11
-        // single-writer funnel finding — see LongStore.writersFor).
-        LongStore.commitBatch(long, storePath, names,
-          LongStore.writersFor(spark, inputDir), snapshot)
-        GasIngest.appendToLedger(spark, names, ledgerPath)
-      }
-      import spark.implicits._
-      names.toDF("file_name")
-    } finally fresh.unpersist()
+    val batch = GasIngest.discover(spark, inputDir, ledgerPath)
+    val names = batch.map(_.name)
+    if (batch.nonEmpty) {
+      val long = GasTransform.toLong(GasIngest.readFiles(spark, batch))
+      // Writer parallelism scaled to this batch's largest file (the
+      // round-11 single-writer funnel finding — see LongStore.writersFor).
+      LongStore.commitBatch(long, storePath, names,
+        LongStore.writersFor(batch.map(_.bytes).max), snapshot)
+      GasIngest.appendToLedger(spark, names, ledgerPath)
+    }
+    import spark.implicits._
+    names.toDF("file_name")
   }
 
   /** Testable core of [[main]]: argument handling + one batch run, on a
@@ -85,9 +79,9 @@ object GasPipeline {
     * }}}
     *
     * `ledgerDir` defaults to `<storeDir>/_ledger`. Re-running with the same
-    * arguments is a no-op (the ledger anti-join skips everything already
-    * loaded — the reference's "skip" branch). Exit code 0 either way;
-    * the processed-file count goes to stdout. */
+    * arguments is a no-op (discovery skips everything the ledger holds,
+    * without reading any data — the reference's "skip" branch). Exit code
+    * 0 either way; the processed-file count goes to stdout. */
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()

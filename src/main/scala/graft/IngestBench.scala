@@ -8,9 +8,9 @@ import org.apache.spark.sql.SparkSession
   * the reference pushes ≈4 M rows × 20 cols through
   * discover → dedup-check → transform → load inside a 10-minute Airflow
   * DAG timeout. This main runs the SAME pipeline shape
-  * ([[GasPipeline.runBatch]]: glob scan → ledger anti-join → 24 h filter →
-  * timestamp synthesis → unpivot → partitioned parquet store + ledger
-  * append) over a directory of day CSVs and prints one JSON line with the
+  * ([[GasPipeline.runBatch]]: directory listing minus the ledger → CSV
+  * read of the unseen files → 24 h filter → timestamp synthesis → unpivot
+  * → partitioned parquet store + ledger append) over a directory of day CSVs and prints one JSON line with the
   * wall time and the long-store row count.
   *
   * Usage: `graft.IngestBench <inputDir> [cpus]` (defaults to

@@ -11,7 +11,7 @@ import graft.transform.GasTransform
 import graft.util.TempDirs
 
 /** Oracle-checked END-TO-END queries through the engine's own gas store:
-  * fixture day-file CSVs → [[graft.GasPipeline.runBatch]] (ledger anti-join,
+  * fixture day-file CSVs → [[graft.GasPipeline.runBatch]] (ledger-first discovery,
   * 24 h filter, timestamp synthesis, unpivot, partitioned parquet store) →
   * [[GasQueries]] — i.e. the reference's actually-demonstrated Flux queries
   * (reference README.md:226, 243) answered by the engine's native store.

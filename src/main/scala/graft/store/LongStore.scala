@@ -48,22 +48,27 @@ object LongStore {
       .agg(first(col("_value")))
   }
 
-  /** Writer-count heuristic for [[write]], from the INPUT day-file sizes:
-    * the one-file-per-partition layout funnels a whole day through one
-    * writer task, which the round-11 streaming cost ladder measured as
-    * the dominant ingest cost at 8×/32× throughput (a 370 MB day file
-    * spent ~150 s in a single dynamic-partition parquet writer while 31
-    * cores idled). ~64 MB of raw CSV per writer (the unpivot expands
-    * bytes ~2-3×) keeps output files row-group-sized without a
-    * small-file explosion; fixture/1× inputs stay at one writer, so
-    * their layout is unchanged. Cost: one O(#files) FS metadata listing. */
+  /** Writer-count heuristic for [[write]], from the size of the batch's
+    * largest INPUT day file: the one-file-per-partition layout funnels a
+    * whole day through one writer task, which the round-11 streaming cost
+    * ladder measured as the dominant ingest cost at 8×/32× throughput (a
+    * 370 MB day file spent ~150 s in a single dynamic-partition parquet
+    * writer while 31 cores idled). ~64 MB of raw CSV per writer (the
+    * unpivot expands bytes ~2-3×) keeps output files row-group-sized
+    * without a small-file explosion; fixture/1× inputs stay at one writer,
+    * so their layout is unchanged. */
+  def writersFor(maxFileBytes: Long): Int =
+    math.max(1L, math.min(32L,
+      (maxFileBytes + (64L << 20) - 1) / (64L << 20))).toInt
+
+  /** The writer count for the largest `*.csv` in `inputDir`, for the
+    * streaming twin, which sizes its writers once at plan time. Cost: one
+    * O(#files) FS metadata listing. */
   def writersFor(spark: org.apache.spark.sql.SparkSession, inputDir: String): Int = {
     val p = new org.apache.hadoop.fs.Path(inputDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val st = fs.globStatus(new org.apache.hadoop.fs.Path(p, "*.csv"))
-    val maxBytes = if (st == null || st.isEmpty) 0L else st.map(_.getLen).max
-    math.max(1L, math.min(32L,
-      (maxBytes + (64L << 20) - 1) / (64L << 20))).toInt
+    writersFor(if (st == null || st.isEmpty) 0L else st.map(_.getLen).max)
   }
 
   /** S5 replacement: the engine's native "bucket" — parquet partitioned by
@@ -216,7 +221,7 @@ object LongStore {
     * (duplicates, deduped at read), or the folded file. `dedup` distincts
     * the folded rows (right for `_manifest` and `_commits`, whose replay
     * duplicates are semantic no-ops; the ledger keeps its rows —
-    * `processed_at` differs across replays and the anti-join is
+    * `processed_at` differs across replays and discovery's name set is
     * duplicate-tolerant anyway).
     *
     * SINGLE COMPACTING WRITER assumed (r15 ADVICE): two concurrent
@@ -301,9 +306,9 @@ object LongStore {
     * `_date=D/_src=S/g=G` with `G = max(g)`. The driver collect is
     * O(window × files-per-day) short strings — the same bounded
     * planning-time materialization Spark's own catalog partition pruning
-    * performs. An empty window falls back to the full-listing path under
-    * an always-false filter (correct, and only as slow as the plain reader
-    * on a corner no dashboard query hits).
+    * performs. An empty window — no entries, or only phantoms — is an empty
+    * frame of the store's declared columns ([[emptyStore]]), with no read
+    * of the store root, which may hold no data file at all.
     *
     * Constructed dirs are filtered through `FileSystem.exists` — a source
     * file contributing ZERO store rows (empty/malformed CSV, or every row
@@ -328,10 +333,8 @@ object LongStore {
             .agg(max(col("g")).as("g"))
         else inWindow.select(col("_date").cast("string"), col("_src")).distinct()
       parts.collect()
-        .map { r =>
-          s"$storePath/_date=${r.getString(0)}/_src=${r.getString(1)}" +
-            (if (snapshot) s"/g=${r.getLong(2)}" else "")
-        }
+        .map(r => partitionDir(storePath, r.getString(0), r.getString(1),
+          if (snapshot) Some(r.getLong(2)) else None))
         // Phantom-vs-transient (r15 ADVICE): a missing dir is either a
         // PHANTOM entry (source file contributed zero store rows — never
         // written, safe to drop) or a TRANSIENTLY absent partition mid-
@@ -347,11 +350,29 @@ object LongStore {
           fs.exists(p) || { Thread.sleep(50); fs.exists(p) }
         }
     }
-    if (dirs.isEmpty)
-      spark.read.parquet(storePath).filter(lit(false))
+    if (dirs.isEmpty) emptyStore(spark)
     else
       spark.read.option("basePath", storePath).parquet(dirs.toIndexedSeq: _*)
   }
+
+  /** The directory the partitioned writer gives `(_date, _src[, g])`. The
+    * `_src` value is path-escaped as the writer escapes it: an encoded
+    * file name's `%` is `%25` on disk, and no glob metacharacter reaches
+    * the reader. */
+  private def partitionDir(storePath: String, date: String, src: String,
+      gen: Option[Long]): String =
+    s"$storePath/_date=$date/" +
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .getPartitionPathString("_src", src) + gen.fold("")(g => s"/g=$g")
+
+  /** The columns a window read returns: [[GasSchema.longSchema]] plus the
+    * `_date` and `_src` partition columns. */
+  private def emptyStore(spark: org.apache.spark.sql.SparkSession): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      GasSchema.longSchema
+        .add("_date", org.apache.spark.sql.types.DateType)
+        .add("_src", org.apache.spark.sql.types.StringType))
 
   // ------------------------------------------------------------------
   // SNAPSHOT STORE (round-15 verdict item 4): the manifest promoted to a
@@ -461,7 +482,8 @@ object LongStore {
         .filter(col("rk") > keepLast)
         .select(col("_date").cast("string").as("d"), col("_src"), col("g"))
         .collect()
-        .map(r => s"$storePath/_date=${r.getString(0)}/_src=${r.getString(1)}/g=${r.getLong(2)}")
+        .map(r => partitionDir(storePath, r.getString(0), r.getString(1),
+          Some(r.getLong(2))))
     }
     stale.foreach { d =>
       fs.delete(new org.apache.hadoop.fs.Path(d), true); ()

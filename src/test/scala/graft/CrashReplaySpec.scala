@@ -51,7 +51,8 @@ class CrashReplaySpec extends SparkSpec {
     }
     // the multi-writer path must be under test even on the small fixture;
     // at a stress rung writersFor derives >1 from the file size itself
-    val writers = math.max(4, LongStore.writersFor(spark, input))
+    val writers = math.max(4,
+      LongStore.writersFor(GasIngest.listDayFiles(spark, input).map(_.bytes).max))
 
     // ---- reference: one clean run into its own store ----------------
     val cleanStore = work.resolve("clean_store").toString
@@ -61,8 +62,7 @@ class CrashReplaySpec extends SparkSpec {
     // store write and BEFORE the ledger append (the crash window) ------
     val store = work.resolve("store").toString
     val ledger = work.resolve("ledger").toString
-    val raw = GasIngest.readDayFiles(spark, input)
-    val fresh = GasIngest.unseenOnly(raw, GasIngest.readLedger(spark, ledger))
+    val fresh = GasIngest.readFiles(spark, GasIngest.discover(spark, input, ledger))
     LongStore.write(GasTransform.toLong(fresh), store,
       writersPerPartition = writers)
     // CRASH: no ledger append — the files look unprocessed to the next run

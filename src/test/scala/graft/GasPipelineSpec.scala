@@ -1,6 +1,18 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec,
+  QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.util.QueryExecutionListener
+
+import graft.store.LongStore
 
 /** Replays the reference's demo scenario (README.md:253-261): drop files →
   * processed; re-trigger → skipped; add new file → only it is processed.
@@ -10,15 +22,17 @@ class GasPipelineSpec extends SparkSpec {
   private def resource(name: String): Path =
     Paths.get(getClass.getResource(s"/gas/$name").getPath)
 
+  /** The ledger holds exactly the processed names, each once: it is
+    * written from the batch's discovered names, not a re-read of the data. */
+  private def ledgerNames(ledger: String): Seq[String] =
+    spark.read.parquet(ledger).select("file_name")
+      .collect().map(_.getString(0)).toSeq.sorted
+
   test("ledger idempotency: second run is a no-op; new file processed alone") {
     val work = Files.createTempDirectory("graft-pipe")
     val input = Files.createDirectory(work.resolve("input"))
     val store = work.resolve("store").toString
     val ledger = work.resolve("ledger").toString
-    // the ledger holds exactly the processed names, each once: it is
-    // written from the batch's collected names, not a re-read of the data
-    def ledgered = spark.read.parquet(ledger).select("file_name")
-      .collect().map(_.getString(0)).toSeq.sorted
 
     Files.copy(resource("20161007_210049.csv"),
       input.resolve("20161007_210049.csv"), StandardCopyOption.REPLACE_EXISTING)
@@ -28,13 +42,13 @@ class GasPipelineSpec extends SparkSpec {
     assert(r1.collect().map(_.getString(0)).toSeq == Seq("20161007_210049.csv"))
     val n1 = spark.read.parquet(store).count()
     assert(n1 == 8 * 19) // 8 kept rows × 19 fields
-    assert(ledgered == Seq("20161007_210049.csv"))
+    assert(ledgerNames(ledger) == Seq("20161007_210049.csv"))
 
     // run 2: same directory → skip branch, store untouched
     val r2 = GasPipeline.runBatch(spark, input.toString, store, ledger)
     assert(r2.count() == 0)
     assert(spark.read.parquet(store).count() == n1)
-    assert(ledgered == Seq("20161007_210049.csv"))
+    assert(ledgerNames(ledger) == Seq("20161007_210049.csv"))
 
     // run 3: add a second file → only it is processed; store gains its day
     Files.copy(resource("20161008_120000.csv"),
@@ -42,7 +56,7 @@ class GasPipelineSpec extends SparkSpec {
     val r3 = GasPipeline.runBatch(spark, input.toString, store, ledger)
     assert(r3.collect().map(_.getString(0)).toSeq == Seq("20161008_120000.csv"))
     assert(spark.read.parquet(store).count() == n1 + 6 * 19)
-    assert(ledgered == Seq("20161007_210049.csv", "20161008_120000.csv"))
+    assert(ledgerNames(ledger) == Seq("20161007_210049.csv", "20161008_120000.csv"))
   }
 
   test("CLI entry: one command runs the whole DAG; default ledger is store-scan-invisible") {
@@ -69,5 +83,105 @@ class GasPipelineSpec extends SparkSpec {
     val m2 = GasPipeline.cli(spark, Array(input.toString, store))
     assert(m2.contains("processed 0 new file(s)"), m2)
     assert(spark.read.parquet(store).count() == 8 * 19)
+  }
+
+  test("a header-only day file is ledgered once: run 1 returns it, run 2 is a no-op") {
+    val work = Files.createTempDirectory("graft-pipe-header")
+    val input = Files.createDirectory(work.resolve("input"))
+    val store = work.resolve("store").toString
+    val ledger = work.resolve("ledger").toString
+    val header = Files.readAllLines(resource("20161007_210049.csv")).get(0)
+    Files.write(input.resolve("20161009_000000.csv"), s"$header\n".getBytes("UTF-8"))
+
+    val r1 = GasPipeline.runBatch(spark, input.toString, store, ledger)
+    assert(r1.collect().map(_.getString(0)).toSeq == Seq("20161009_000000.csv"))
+    assert(ledgerNames(ledger) == Seq("20161009_000000.csv"))
+    // its day holds no rows, and reading it is an empty window, not an error
+    assert(LongStore.readWindow(spark, store, "2016-10-09", "2016-10-09").count() == 0)
+
+    val r2 = GasPipeline.runBatch(spark, input.toString, store, ledger)
+    assert(r2.count() == 0, "the header-only file was processed again")
+    assert(ledgerNames(ledger) == Seq("20161009_000000.csv"))
+  }
+
+  test("unusual file names: a space and glob brackets are processed once, under their encoded names") {
+    val work = Files.createTempDirectory("graft-pipe-names")
+    val input = Files.createDirectory(work.resolve("input"))
+    val store = work.resolve("store").toString
+    val ledger = work.resolve("ledger").toString
+    Seq("20161007_210049 copy.csv", "20161007_210049[1].csv").foreach { f =>
+      Files.copy(resource("20161007_210049.csv"), input.resolve(f))
+    }
+    // the form input_file_name() yields, which the ledger and `_src` keep
+    val encoded = Seq("20161007_210049%20copy.csv", "20161007_210049%5B1%5D.csv")
+
+    val r1 = GasPipeline.runBatch(spark, input.toString, store, ledger)
+    assert(r1.collect().map(_.getString(0)).toSeq == encoded)
+    assert(ledgerNames(ledger) == encoded)
+    assert(spark.read.parquet(store).select("_src").distinct()
+      .collect().map(_.getString(0)).toSeq.sorted == encoded)
+    assert(spark.read.parquet(store).count() == 2 * 8 * 19)
+    // the manifest-planned read finds both partitions under their escaped
+    // directory names
+    assert(LongStore.readWindow(spark, store, "2016-10-07", "2016-10-07")
+      .count() == 2 * 8 * 19)
+
+    val r2 = GasPipeline.runBatch(spark, input.toString, store, ledger)
+    assert(r2.count() == 0)
+    assert(ledgerNames(ledger) == encoded)
+  }
+
+  /** The CSV scans in an executed plan, walked like the benchmark's scan
+    * census: through adaptive plans, query stages, command results,
+    * subqueries and the plans behind cached frames. */
+  private def csvScans(plan: SparkPlan): Seq[FileSourceScanExec] = plan match {
+    case a: AdaptiveSparkPlanExec => csvScans(a.executedPlan)
+    case q: QueryStageExec => csvScans(q.plan)
+    case c: CommandResultExec => csvScans(c.commandPhysicalPlan)
+    case m: InMemoryTableScanExec => csvScans(m.relation.cachedPlan)
+    case s: FileSourceScanExec =>
+      if (s.relation.fileFormat.isInstanceOf[CSVFileFormat]) Seq(s) else Nil
+    case other => other.children.flatMap(csvScans) ++
+      other.subqueries.flatMap(csvScans)
+  }
+
+  test("scan count: a no-op run reads no CSV; the next run reads exactly the new file") {
+    val work = Files.createTempDirectory("graft-pipe-scans")
+    val input = Files.createDirectory(work.resolve("input"))
+    val store = work.resolve("store").toString
+    val ledger = work.resolve("ledger").toString
+    Files.copy(resource("20161007_210049.csv"), input.resolve("20161007_210049.csv"))
+
+    // a session of its own, so only this test's queries reach the listener
+    val s = spark.newSession()
+    val seen = new ConcurrentLinkedQueue[QueryExecution]()
+    s.listenerManager.register(new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.add(qe)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
+        seen.add(qe)
+    })
+    // listener events arrive asynchronously and in order: once a marker
+    // query has been delivered, every query before it has been too
+    def csvFilesScanned(body: => Unit): Seq[Long] = {
+      seen.clear()
+      body
+      val marker = s.range(1)
+      marker.collect()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!seen.asScala.exists(_ eq marker.queryExecution)) {
+        assert(System.nanoTime() < deadline, "the marker query was never delivered")
+        Thread.sleep(10)
+      }
+      seen.asScala.toSeq.flatMap(qe => csvScans(qe.executedPlan))
+        .map(_.metrics("numFiles").value)
+    }
+
+    assert(csvFilesScanned(GasPipeline.runBatch(s, input.toString, store, ledger)) == Seq(1L))
+    assert(csvFilesScanned(GasPipeline.runBatch(s, input.toString, store, ledger)).isEmpty,
+      "the no-op run scanned CSV")
+    Files.copy(resource("20161008_120000.csv"), input.resolve("20161008_120000.csv"))
+    assert(csvFilesScanned(GasPipeline.runBatch(s, input.toString, store, ledger)) == Seq(1L),
+      "the run after one new file did not scan exactly that file")
   }
 }

@@ -12,8 +12,8 @@ import graft.transform.GasTransform
 /** Pins the reference's transform semantics (SURVEY.md §1.4, §5 item 2). */
 class GasTransformSpec extends SparkSpec {
 
-  private def fixtures = GasIngest.readDayFiles(
-    spark, getClass.getResource("/gas").getPath)
+  private def fixtures = GasIngest.readFiles(spark,
+    GasIngest.listDayFiles(spark, getClass.getResource("/gas").getPath))
 
   test("fixture read: pinned 20-double schema + file_name column") {
     val df = fixtures

@@ -59,8 +59,8 @@ class ManifestSpec extends SparkSpec {
     val nDays = 40
     val start = java.time.LocalDate.of(2016, 10, 7)
 
-    // one batch per day — the reference's actual ingest cadence; the
-    // ledger anti-join scopes each batch to the day just dropped
+    // one batch per day — the reference's actual ingest cadence; ledger-
+    // first discovery scopes each batch to the day just dropped
     (0 until nDays).foreach { d =>
       writeDayFile(input, start.plusDays(d.toLong), rows = 3, seed = d)
       val processed = GasPipeline.runBatch(spark, input.toString, store, ledger,
@@ -155,6 +155,40 @@ class ManifestSpec extends SparkSpec {
 
   test("phantom commit-log entry (zero-row source file) cannot poison readCommitted") {
     phantomEntry(snapshot = true)
+  }
+
+  /** A store whose one source file is a phantom holds no data file: a
+    * window read over its date is empty, with the columns of a non-empty
+    * read. A fallback that reads the store root throws
+    * UNABLE_TO_INFER_SCHEMA here. */
+  private def allPhantomWindow(snapshot: Boolean): Unit = {
+    val work = Files.createTempDirectory("graft-manifest-all-phantom")
+    val input = Files.createDirectory(work.resolve("input"))
+    val store = work.resolve("store").toString
+    writeDayFile(input, java.time.LocalDate.of(2016, 10, 8), rows = 4, seed = 2,
+      suffix = "999999", t0 = 90000)
+    GasPipeline.runBatch(spark, input.toString, store,
+      work.resolve("l").toString, snapshot)
+    val empty = readLayout(store, snapshot, "2016-10-08", "2016-10-08")
+    assert(empty.count() == 0)
+
+    val full = Files.createDirectory(work.resolve("full"))
+    writeDayFile(full, java.time.LocalDate.of(2016, 10, 7), rows = 4, seed = 1)
+    val fullStore = work.resolve("full_store").toString
+    GasPipeline.runBatch(spark, full.toString, fullStore,
+      work.resolve("l2").toString, snapshot)
+    val rows = readLayout(fullStore, snapshot, "2016-10-07", "2016-10-07")
+    assert(rows.count() == 4 * 19)
+    assert(empty.schema.map(f => (f.name, f.dataType)) ==
+      rows.schema.map(f => (f.name, f.dataType)))
+  }
+
+  test("all-phantom window: a store with no data file reads as an empty frame") {
+    allPhantomWindow(snapshot = false)
+  }
+
+  test("all-phantom window, snapshot layout: readCommitted is an empty frame") {
+    allPhantomWindow(snapshot = true)
   }
 
   test("replay duplicates and repeated compaction are absorbed") {
