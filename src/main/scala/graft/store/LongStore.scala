@@ -49,27 +49,20 @@ object LongStore {
   }
 
   /** Writer-count heuristic for [[write]], from the size of the batch's
-    * largest INPUT day file: the one-file-per-partition layout funnels a
-    * whole day through one writer task, which the round-11 streaming cost
-    * ladder measured as the dominant ingest cost at 8×/32× throughput (a
-    * 370 MB day file spent ~150 s in a single dynamic-partition parquet
-    * writer while 31 cores idled). ~64 MB of raw CSV per writer (the
+    * largest INPUT day file, so writers are sized per batch: both
+    * [[graft.GasPipeline.runBatch]] and the streaming sink of
+    * [[graft.streaming.GasStream.pipeline]] pass their own batch's files.
+    * The one-file-per-partition layout funnels a whole day through one
+    * writer task, which the round-11 streaming cost ladder measured as the
+    * dominant ingest cost at 8×/32× throughput (a 370 MB day file spent
+    * ~150 s in a single dynamic-partition parquet writer while 31 cores
+    * idled). ~64 MB of raw CSV per writer (the
     * unpivot expands bytes ~2-3×) keeps output files row-group-sized
     * without a small-file explosion; fixture/1× inputs stay at one writer,
     * so their layout is unchanged. */
   def writersFor(maxFileBytes: Long): Int =
     math.max(1L, math.min(32L,
       (maxFileBytes + (64L << 20) - 1) / (64L << 20))).toInt
-
-  /** The writer count for the largest `*.csv` in `inputDir`, for the
-    * streaming twin, which sizes its writers once at plan time. Cost: one
-    * O(#files) FS metadata listing. */
-  def writersFor(spark: org.apache.spark.sql.SparkSession, inputDir: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(inputDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.globStatus(new org.apache.hadoop.fs.Path(p, "*.csv"))
-    writersFor(if (st == null || st.isEmpty) 0L else st.map(_.getLen).max)
-  }
 
   /** S5 replacement: the engine's native "bucket" — parquet partitioned by
     * source day, sub-partitioned by source file `_src` when the frame

@@ -1,10 +1,17 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.streaming.Offset
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
+import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog,
+  FileStreamSourceOffset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
 
+import graft.ingest.GasIngest.DayFile
 import graft.schema.GasSchema
 import graft.store.LongStore
 import graft.transform.GasTransform
@@ -17,25 +24,51 @@ import graft.transform.GasTransform
   */
 object GasStream {
 
-  /** Streaming read of the day-file directory with the pinned schema. */
+  /** Streaming read of the day-file directory with the pinned schema.
+    *
+    * `recursiveFileLookup` keeps each file to one read per micro-batch. The
+    * file source re-reads a batch's files with path globbing off, and in
+    * that mode Spark's path check returns EVERY path of the batch once for
+    * each path that holds a glob metacharacter (`[`, `]`, `{`, `}`, `*`,
+    * `?`): a batch holding `x[1].csv` read each of its other files twice,
+    * and the user's `globPaths` option cannot change it. The recursive
+    * lookup lists the batch's files by path, which drops the repeats. It
+    * also lists `*.csv` files in subdirectories of `dir`, which
+    * [[pipeline]] rejects. */
   def readStream(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 13): DataFrame =
     spark.readStream
       .schema(GasSchema.gasSchema)
       .option("header", "true")
       .option("pathGlobFilter", "*.csv")
+      .option("recursiveFileLookup", "true")
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(dir)
       .withColumn("file_name", element_at(split(input_file_name(), "/"), -1))
 
   /** Full streaming pipeline: transform → unpivot → date-partitioned store
     * via foreachBatch (the load stage, SURVEY.md §2.9). The checkpoint IS
-    * the ledger: a re-run with the same checkpoint skips seen files. */
+    * the ledger: a re-run with the same checkpoint skips seen files.
+    *
+    * Each micro-batch scans its input once, inside the store write, like
+    * [[graft.GasPipeline.runBatch]]. The sink takes the batch's files from
+    * the checkpoint on the driver ([[batchFiles]]): their names key `_src`
+    * and `_manifest`, so a file that yields no rows (header-only, or every
+    * sample past 24 h) is recorded like the batch records it, and their
+    * sizes set the writer count ([[LongStore.writersFor]]). foreachBatch is
+    * at-least-once; a replay of batch N reads the same log entries, so it
+    * re-commits the same files, and the store's per-file overwrite and
+    * `_manifest`'s dedup make that a no-op.
+    *
+    * A file below a subdirectory of `inputDir` fails the batch before any
+    * write, with its name: the batch pipeline reads only the directory's
+    * own files, so the stream would load data the batch never does.
+    *
+    * The sink reads Spark-internal classes (`FileStreamSourceLog`,
+    * `OffsetSeqLog`), pinned to the packages of Spark 4.1.2. */
   def pipeline(spark: SparkSession, inputDir: String, storePath: String,
       checkpoint: String): StreamingQuery = {
-    // Writer parallelism scaled to the day-file size (the round-11
-    // single-writer funnel finding — see LongStore.writersFor); computed
-    // once at plan time from FS metadata, not per micro-batch.
-    val writers = LongStore.writersFor(spark, inputDir)
+    val dir = new Path(inputDir)
+    val top = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(dir)
     // file_name rides along as `_src` so the store's overwrite unit is one
     // source file — a day split across micro-batches by maxFilesPerTrigger
     // can no longer clobber the day partition written by an earlier trigger.
@@ -43,26 +76,50 @@ object GasStream {
       .writeStream
       .outputMode(OutputMode.Append)
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        // one narrow pass for the batch's source files, then the batch read
-        // for the store write — the persist keeps this at one input scan
-        val b = batch.persist()
-        try {
-          val srcs = b.select("_src").distinct()
-            .collect().map(_.getString(0)).sorted
-          // the batch pipeline's own commit (GasPipeline.runBatch): data,
-          // then manifest, so a stream-built store plans window queries
-          // through LongStore.readWindow exactly like a batch-built one.
-          // foreachBatch is at-least-once; a replayed batch re-appends the
-          // same rows and readWindow/compaction deduplicate — the
-          // manifest's documented replay contract.
-          if (srcs.nonEmpty)
-            LongStore.commitBatch(b, storePath, srcs.toIndexedSeq, writers,
-              snapshot = false)
-        } finally { b.unpersist(); () }
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val files = batchFiles(batch.sparkSession, checkpoint, batchId)
+        val nested = files.filter(_.path.getParent != top)
+        if (nested.nonEmpty)
+          throw new IllegalStateException(s"stream input below a subdirectory of $top: " +
+            nested.map(_.path).mkString(", "))
+        // the batch pipeline's own commit (GasPipeline.runBatch): data,
+        // then manifest, so a stream-built store plans window queries
+        // through LongStore.readWindow exactly like a batch-built one.
+        if (files.nonEmpty)
+          LongStore.commitBatch(batch, storePath, files.map(_.name),
+            LongStore.writersFor(files.map(_.bytes).max), snapshot = false)
       }
       .trigger(Trigger.AvailableNow())
       .start()
+  }
+
+  /** The day files of micro-batch `batchId`, from the checkpoint alone. The
+    * offset log holds, per batch, the file source's end offset: the id of
+    * its last source-log entry. The batch covers the entries after the
+    * previous batch's end, up to its own; usually one, but more after a
+    * crash between a source-log write and the offset-log write. The source
+    * log lists each entry's files (its `get` also reads entries folded
+    * into a `.compact` file), under the URL-encoded path whose last
+    * segment `input_file_name()` yields. Sizes come from one FS metadata
+    * call per file. */
+  private def batchFiles(spark: SparkSession, checkpoint: String,
+      batchId: Long): Seq[DayFile] = {
+    val offsets = new OffsetSeqLog(spark, s"$checkpoint/offsets")
+    def end(id: Long): Long =
+      (if (id < 0) None else offsets.get(id)).flatMap(_.offsets.head)
+        .fold(-1L)(o => FileStreamSourceOffset(o.asInstanceOf[Offset]).logOffset)
+    val (first, last) = (end(batchId - 1) + 1, end(batchId))
+    if (first > last) Nil
+    else {
+      val log = new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark,
+        s"$checkpoint/sources/0")
+      log.get(Some(first), Some(last)).toSeq.flatMap(_._2).map { e =>
+        val p = SparkPath.fromUrlString(e.path).toPath
+        val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getFileStatus(p).getLen
+        DayFile(e.path.split('/').last, p, bytes)
+      }.sortBy(_.name)
+    }
   }
 
   /** Watermarked tumbling-window downsampling over a live long stream —

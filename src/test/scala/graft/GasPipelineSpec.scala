@@ -1,16 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.concurrent.ConcurrentLinkedQueue
-
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec,
-  QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.store.LongStore
 
@@ -131,20 +121,6 @@ class GasPipelineSpec extends SparkSpec {
     assert(ledgerNames(ledger) == encoded)
   }
 
-  /** The CSV scans in an executed plan, walked like the benchmark's scan
-    * census: through adaptive plans, query stages, command results,
-    * subqueries and the plans behind cached frames. */
-  private def csvScans(plan: SparkPlan): Seq[FileSourceScanExec] = plan match {
-    case a: AdaptiveSparkPlanExec => csvScans(a.executedPlan)
-    case q: QueryStageExec => csvScans(q.plan)
-    case c: CommandResultExec => csvScans(c.commandPhysicalPlan)
-    case m: InMemoryTableScanExec => csvScans(m.relation.cachedPlan)
-    case s: FileSourceScanExec =>
-      if (s.relation.fileFormat.isInstanceOf[CSVFileFormat]) Seq(s) else Nil
-    case other => other.children.flatMap(csvScans) ++
-      other.subqueries.flatMap(csvScans)
-  }
-
   test("scan count: a no-op run reads no CSV; the next run reads exactly the new file") {
     val work = Files.createTempDirectory("graft-pipe-scans")
     val input = Files.createDirectory(work.resolve("input"))
@@ -154,28 +130,10 @@ class GasPipelineSpec extends SparkSpec {
 
     // a session of its own, so only this test's queries reach the listener
     val s = spark.newSession()
-    val seen = new ConcurrentLinkedQueue[QueryExecution]()
-    s.listenerManager.register(new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.add(qe)
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit =
-        seen.add(qe)
-    })
-    // listener events arrive asynchronously and in order: once a marker
-    // query has been delivered, every query before it has been too
-    def csvFilesScanned(body: => Unit): Seq[Long] = {
-      seen.clear()
-      body
-      val marker = s.range(1)
-      marker.collect()
-      val deadline = System.nanoTime() + 30000000000L
-      while (!seen.asScala.exists(_ eq marker.queryExecution)) {
-        assert(System.nanoTime() < deadline, "the marker query was never delivered")
-        Thread.sleep(10)
-      }
-      seen.asScala.toSeq.flatMap(qe => csvScans(qe.executedPlan))
+    val census = new ScanCensus.Recorder(s)
+    def csvFilesScanned(body: => Unit): Seq[Long] =
+      census.queries(body).flatMap(qe => ScanCensus.csvScans(qe.executedPlan))
         .map(_.metrics("numFiles").value)
-    }
 
     assert(csvFilesScanned(GasPipeline.runBatch(s, input.toString, store, ledger)) == Seq(1L))
     assert(csvFilesScanned(GasPipeline.runBatch(s, input.toString, store, ledger)).isEmpty,
