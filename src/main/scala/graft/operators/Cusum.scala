@@ -40,7 +40,7 @@ object Cusum {
 
   /** One recursion step: detector sides (and alarm flag) BEFORE the point
     * → (S⁺, S⁻, alarm) AFTER it. Shared verbatim by the batch kernel
-    * ([[run]]) and the streaming keyed-state twin
+    * ([[run]]) and the step of the streaming keyed-state fold
     * ([[graft.streaming.GasStream.cusumStream]]), so "stream ≡ batch" is
     * true by construction, not by parallel maintenance. */
   def step(sp0: Double, sn0: Double, alarm0: Boolean, x: Double,

@@ -82,8 +82,8 @@ object GasStoreQueries {
     }
 
   /** The gs family's live long stream over the fixture, built on the GIVEN
-    * session (the rocks-pinned child for the transformWithState sinks —
-    * see [[withRocksDb]]), optionally narrowed to `fields`. */
+    * session (the rocks-pinned child for the RocksDB sinks — see
+    * [[withRocksDb]]), optionally narrowed to `fields`. */
   private def liveLong(s: SparkSession, fields: Seq[String] = Nil,
       maxFilesPerTrigger: Int = 13): DataFrame = {
     val long = GasTransform.toLong(
@@ -334,8 +334,8 @@ object GasStoreQueries {
     * above; it is the RESULT that is quadratic in rate). At fusion rates
     * like that, the production forms are the board's other shapes:
     * pre-aggregate one side onto a window grid (gs07/gs29) or keep
-    * last-value state and emit 1:1 enriched rows (the transformWithState
-    * family) — all measured flat on the throughput ladder. */
+    * last-value state and emit 1:1 enriched rows (gs34's keyed-state
+    * fold) — all measured flat on the throughput ladder. */
   private def streamJoin(spark: SparkSession): DataFrame =
     appendSinkOnce(spark, "gas-join") { s =>
       GasStream
@@ -387,7 +387,7 @@ object GasStoreQueries {
   /** gs35's sink: REDELIVERY-SAFE enrichment — the gs09 dedup chained in
     * front of gs34's as-of enrichment, in ONE streaming query (two stateful
     * operators). This composition is load-bearing, not decorative: the
-    * enrich processor's monotone guard uses `>=` (same-instant context must
+    * enrich fold's monotone guard uses `>=` (same-instant context must
     * apply), so an EXACTLY-REDELIVERED target row would pass the guard and
     * double-emit — at-least-once sources therefore require
     * `dropDuplicatesWithinWatermark` upstream, and this query proves the
@@ -417,7 +417,7 @@ object GasStoreQueries {
     * and the r11 32×-rate census measured the consequence — 368M input
     * rows → 184M in-memory state keys → GC death that took the
     * SparkContext down. RocksDB is pinned for the state store (the
-    * gs15/gs27 pattern) so even the bounded state lives off-heap. The
+    * gs27/gs28 pattern) so even the bounded state lives off-heap. The
     * oracle counts each raw point ONCE — a broken dedup doubles n_points
     * and flips the compare red (re-verified green after both changes:
     * the fixture's duplicates arrive in the same micro-batch, far inside
@@ -488,46 +488,35 @@ object GasStoreQueries {
     * changepoint recursion carried as keyed state, run end-to-end over
     * the live long stream for two fields with production-style FIXED
     * parameters (μ=50, k=5, h=60 — configuration, not estimated from the
-    * unbounded stream). Since round 8 this runs the kernel on Spark 4's
-    * `transformWithState` API
-    * ([[graft.streaming.GasStream.CusumProcessor]]) — the
-    * forward-compatible replacement for flatMapGroupsWithState — which
-    * REQUIRES the RocksDB state store, pinned for this one query on a
-    * child session ([[withRocksDb]]); the caller's session and the other
-    * streaming queries keep the default HDFS-backed store. The DuckDB
-    * oracle replays the identical clamped
-    * recursion (ts26's WITH RECURSIVE shape) over the raw CSVs, so the
-    * stateful detector — state carry-over between micro-batches, in-batch
-    * event-time ordering, clamp/alarm/reset arithmetic — is hash-verified
-    * point-by-point ON THE NEW API. */
+    * unbounded stream), on [[graft.streaming.GasStream.cusumStream]]'s
+    * keyed-state fold and the default state store. The DuckDB oracle
+    * replays the identical clamped recursion (ts26's WITH RECURSIVE shape)
+    * over the raw CSVs, so the stateful detector — state carry-over
+    * between micro-batches, in-batch event-time ordering,
+    * clamp/alarm/reset arithmetic — is hash-verified point-by-point. */
   private def streamCusum(spark: SparkSession): DataFrame =
     appendSinkOnce(spark, "gas-cusum") { s =>
-      withRocksDb(s) { rocks =>
-        GasStream.cusumStreamTws(liveLong(rocks, coHumidity),
-          mu = 50.0, k = 5.0, h = 60.0)
-      }
+      GasStream.cusumStream(liveLong(s, coHumidity), mu = 50.0, k = 5.0, h = 60.0)
     }
 
   /** gs34's sink: [[graft.streaming.GasStream.lastValueEnrichStream]] —
     * the RATE-ROBUST stream-stream pairing form (1:1 last-value keyed-state
-    * enrichment on transformWithState, RocksDB-pinned like [[streamCusum]]):
-    * every CO reading emitted exactly once, carrying the last VALID
-    * humidity (≥ 55.0, gs13's validity floor) as of its event time. This is
+    * enrichment on the default state store): every CO reading emitted
+    * exactly once, carrying the last VALID humidity (≥ 55.0, gs13's
+    * validity floor) as of its event time. This is
     * the production alternative the gs08/gs13 SWEEP32 note names: output is
     * LINEAR in rate and state is O(1) per key where the interval join's
     * output is rate² × interval by definition — the SLADDER measures it
     * flat per-row across the 3.5/28/112 Hz rungs. */
   private def streamAsofEnrich(spark: SparkSession): DataFrame =
     appendSinkOnce(spark, "gas-asof-enrich") { s =>
-      withRocksDb(s) { rocks =>
-        GasStream.lastValueEnrichStream(liveLong(rocks, coHumidity),
-          "CO (ppm)", "Humidity (%r.h.)", 55.0)
-      }
+      GasStream.lastValueEnrichStream(liveLong(s, coHumidity),
+        "CO (ppm)", "Humidity (%r.h.)", 55.0)
     }
 
   /** gs27's sink: [[graft.streaming.GasStream.KmvProcessor]] — streaming
     * KMV distinct sketches on transformWithState MapState (window-start →
-    * bottom-16 hash sketch), RocksDB-pinned like [[streamCusum]].
+    * bottom-16 hash sketch); transformWithState needs the RocksDB pin.
     * Snapshot rows append per micro-batch; the reader keeps max-n_seen. */
   private def streamKmv(spark: SparkSession): DataFrame =
     appendSinkOnce(spark, "gas-kmv") { s =>

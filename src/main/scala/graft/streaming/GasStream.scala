@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.Offset
 import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
 import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog,
@@ -10,6 +10,8 @@ import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.Row
+
+import scala.reflect.runtime.universe.TypeTag
 
 import graft.ingest.GasIngest.DayFile
 import graft.schema.GasSchema
@@ -252,7 +254,7 @@ object GasStream {
           val wmUs = state.getCurrentWatermarkMs() * 1000L
           val prior = state.getOption.map(_.sessions).getOrElse(Seq.empty)
           // sessionize this batch's events (empty on a pure timeout call)
-          val ts = rows.map(_._2.getTime * 1000L).toArray.sorted
+          val ts = rows.map(r => micros(r._2)).toArray.sorted
           val batch = Seq.newBuilder[SessionAgg]
           var cur: SessionAgg = null
           ts.foreach { t =>
@@ -284,8 +286,81 @@ object GasStream {
       .toDF()
   }
 
-  /** Per-key EMA recursion state: last smoothed value + last applied time. */
-  case class EmaState(ema: Double, lastUs: Long, n: Long)
+  /** Full-microsecond event time: `getTime` alone truncates to ms. */
+  private def micros(t: java.sql.Timestamp): Long =
+    Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+
+  /** One point as a [[perKeyFold]] step sees it: the group key, the point's
+    * event time (µs), value and order tag, and the key's last applied event
+    * time (`Long.MinValue` before the key's first point). */
+  private case class Pt(key: String, us: Long, v: Double, tag: Int, lastUs: Long)
+
+  /** The one per-key sequential fold behind the streaming kernels (EMA,
+    * CUSUM, Kalman, alert, rate, state runs, as-of enrich), on Structured
+    * Streaming's user-defined stateful operator (`flatMapGroupsWithState`,
+    * Append, no timeout). Per key and micro-batch it:
+    *  - sorts the group by (event time in µs, `tag`), stably, so points
+    *    tied on both keep their arrival order;
+    *  - applies a point iff its time is ≥ the key's last applied time (the
+    *    monotone guard: a straggler older than that is dropped, since a
+    *    sequential recursion cannot be re-run backwards — ts21/ts26/ts30
+    *    are the exact batch forms when order matters after the fact);
+    *  - keeps that last time beside the kernel's state `S`, and updates the
+    *    state iff a point applied.
+    * `step` maps (state, point) to the next state and at most one output
+    * row. Kernels pass a constant `tag`, except where points of one
+    * instant need an order (as-of enrich: context before target).
+    *
+    * API choice: `transformWithState` requires the RocksDB state store
+    * provider (AnalysisException on the default HDFS-backed store), so each
+    * query would have to pin the provider on a child session, and its
+    * richer state (named handles, several Value/List/MapStates per
+    * processor, TTL, timers) buys nothing for one case-class value per key:
+    * a processor body is line for line this fold. So the fold runs on
+    * `flatMapGroupsWithState`, on either provider; transformWithState is
+    * used where its features are (MapState in [[KmvProcessor]], timers in
+    * [[TimerSealProcessor]]).
+    *
+    * Memory bound: the fold materializes and sorts ONE key's share of ONE
+    * micro-batch (the operator gives no secondary-sort contract, so the
+    * event-time order is imposed here): O(max rows per key per micro-batch)
+    * × ~40 B/row. Under a rate source or continuous trigger that is rate ×
+    * trigger interval per key, a few thousand rows at any realistic rate.
+    * The degenerate corner is Trigger.AvailableNow over a one-key backlog
+    * (as-of enrich keys by measurement, and the fixture has one): the whole
+    * input is one key's one batch, 2.4 M rows ≈ 100 MB at the 28–112 Hz
+    * SLADDER rungs. Bound a bigger replay with maxFilesPerTrigger or a rate
+    * limit. */
+  private def perKeyFold[S: TypeTag, O <: Product : TypeTag](rows: DataFrame,
+      key: String, tag: Column, init: S)(step: (S, Pt) => (S, Option[O])): DataFrame = {
+    import rows.sparkSession.implicits._
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+    rows.select(col(key), col("_time"), col("_value"), tag)
+      .as[(String, java.sql.Timestamp, Double, Int)]
+      .groupByKey(_._1)
+      .flatMapGroupsWithState[(S, Long), O](OutputMode.Append(), GroupStateTimeout.NoTimeout) {
+        (k: String, group: Iterator[(String, java.sql.Timestamp, Double, Int)],
+            state: GroupState[(S, Long)]) =>
+          var (st, lastUs) = state.getOption.getOrElse((init, Long.MinValue))
+          var applied = false
+          val out = Seq.newBuilder[O]
+          group.map(r => (micros(r._2), r._4, r._3)).toArray
+            .sortBy(p => (p._1, p._2)) // a stable sort
+            .foreach { case (us, t, v) =>
+              if (us >= lastUs) {
+                val (next, o) = step(st, Pt(k, us, v, t, lastUs))
+                st = next; lastUs = us; applied = true
+                out ++= o
+              }
+            }
+          if (applied) state.update((st, lastUs))
+          out.result().iterator
+      }
+      .toDF()
+  }
+
+  /** Per-series EMA state: the last smoothed value and the points applied. */
+  case class EmaState(ema: Double, n: Long)
 
   /** One smoothed point emitted per applied input point. */
   case class EmaPoint(_field: String, ts_us: Long, value: Double, ema: Double, n: Long)
@@ -294,47 +369,19 @@ object GasStream {
     * ts21's closed-form batch EMA (PLANS.md): y_1 = x_1,
     * y_i = k·x_i + (1−k)·y_{i−1}, carried as one tiny record of keyed
     * state per series, so an infinite stream costs O(keys) state and zero
-    * re-reads. Within a micro-batch events are applied in event-time
-    * order; across batches the recursion is inherently sequential, so a
-    * straggler OLDER than the last applied point cannot retroactively
-    * re-smooth history — it is dropped, and the monotone guard makes that
-    * an explicit, documented semantics (the alternative — buffering the
-    * watermark horizon per key — buys exact replay at gap-fill cost;
-    * ts21 is the exact batch semantics when order matters after the
-    * fact). StatefulStreamSpec pins stream ≡ recursion across batches and
-    * the straggler drop. */
-  def emaStream(long: DataFrame, k: Double = 0.2): DataFrame = {
-    import long.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    long.select(col("_field"), col("_time"), col("_value"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[EmaState, EmaPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (field: String, rows: Iterator[(String, java.sql.Timestamp, Double)],
-            state: GroupState[EmaState]) =>
-          var st = state.getOption.getOrElse(EmaState(0.0, Long.MinValue, 0L))
-          val out = Seq.newBuilder[EmaPoint]
-          // full-microsecond event time: getTime alone truncates to ms
-          def micros(t: java.sql.Timestamp): Long =
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-          rows.toSeq.sortBy(r => micros(r._2)).foreach { case (_, t, v) =>
-            val us = micros(t)
-            if (us >= st.lastUs) { // monotone guard: drop stale stragglers
-              val y = if (st.n == 0L) v else k * v + (1 - k) * st.ema
-              st = EmaState(y, us, st.n + 1)
-              out += EmaPoint(field, us, v, y, st.n)
-            }
-          }
-          if (st.n > 0L) state.update(st)
-          out.result().iterator
-      }
-      .toDF()
-  }
+    * re-reads. Ordering is [[perKeyFold]]'s: event-time order within a
+    * batch, a straggler older than the last applied point is dropped (the
+    * alternative — buffering the watermark horizon per key — buys exact
+    * replay at gap-fill cost). StatefulStreamSpec pins stream ≡ recursion
+    * across batches and the straggler drop. */
+  def emaStream(long: DataFrame, k: Double = 0.2): DataFrame =
+    perKeyFold(long, "_field", lit(0), EmaState(0.0, 0L)) { (st, p) =>
+      val y = if (st.n == 0L) p.v else k * p.v + (1 - k) * st.ema
+      (EmaState(y, st.n + 1), Some(EmaPoint(p.key, p.us, p.v, y, st.n + 1)))
+    }
 
-  /** Per-key CUSUM detector state: both cumulative sides, the alarm flag,
-    * and the last applied event time (monotone guard, as in EMA). */
-  case class CusumState(sp: Double, sn: Double, alarm: Boolean, lastUs: Long)
+  /** Per-series CUSUM detector state: both cumulative sides and the alarm. */
+  case class CusumState(sp: Double, sn: Double, alarm: Boolean)
 
   /** One detector reading emitted per applied input point. */
   case class CusumPoint(_field: String, ts_us: Long, value: Double,
@@ -349,116 +396,14 @@ object GasStream {
     * series — a luxury an infinite stream doesn't have — the detector
     * takes its target mean and thresholds as configuration, exactly how
     * production CUSUM monitors are deployed (parameters from a training
-    * window, detection online). Ordering semantics are emaStream's:
-    * event-time order within a batch, monotone guard across batches
-    * (a straggler older than the last applied point is dropped —
-    * re-running a sequential detector backwards is not meaningful). */
+    * window, detection online). Ordering is [[perKeyFold]]'s. */
   def cusumStream(long: DataFrame, mu: Double, k: Double,
-      h: Double): DataFrame = {
-    import long.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    long.select(col("_field"), col("_time"), col("_value"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[CusumState, CusumPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (field: String, rows: Iterator[(String, java.sql.Timestamp, Double)],
-            state: GroupState[CusumState]) =>
-          var st = state.getOption
-            .getOrElse(CusumState(0.0, 0.0, alarm = false, Long.MinValue))
-          val out = Seq.newBuilder[CusumPoint]
-          def micros(t: java.sql.Timestamp): Long =
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-          rows.toSeq.sortBy(r => micros(r._2)).foreach { case (_, t, v) =>
-            val us = micros(t)
-            if (us >= st.lastUs) { // monotone guard: drop stale stragglers
-              val (sp, sn, alarm) =
-                graft.operators.Cusum.step(st.sp, st.sn, st.alarm, v, mu, k, h)
-              st = CusumState(sp, sn, alarm, us)
-              out += CusumPoint(field, us, v, sp, sn, alarm)
-            }
-          }
-          if (st.lastUs != Long.MinValue) state.update(st)
-          out.result().iterator
-      }
-      .toDF()
-  }
-
-  /** Spark 4 `transformWithState` twin of [[cusumStream]] — the SAME
-    * CUSUM kernel ([[graft.operators.Cusum.step]], same in-batch
-    * event-time sort, same monotone guard) on the forward-compatible
-    * state API: a [[org.apache.spark.sql.streaming.StatefulProcessor]]
-    * with a typed `ValueState` handle instead of
-    * `flatMapGroupsWithState`'s single implicit `GroupState`.
-    *
-    * API trade-off, measured on this kernel (recorded for the other
-    * seven kernels still on flatMapGroupsWithState):
-    *  - transformWithState REQUIRES the RocksDB state store provider
-    *    (AnalysisException on the default HDFS-backed store), so the
-    *    caller pins `spark.sql.streaming.stateStore.providerClass` for
-    *    the query — an operational dependency flatMapGroupsWithState
-    *    does not have;
-    *  - state declaration is richer (named handles, multiple
-    *    ValueState/ListState/MapState per processor, per-state TTL) —
-    *    for this kernel the ONE case-class value needs none of that,
-    *    so the body is line-for-line the flatMapGroupsWithState one;
-    *  - init/close lifecycle makes the handle wiring explicit, and the
-    *    same processor instance serves every key — no per-key closure
-    *    capture.
-    * Semantics are identical; gs15 hash-verifies the migrated kernel
-    * point-by-point against the same WITH RECURSIVE oracle replay. */
-  class CusumProcessor(mu: Double, k: Double, h: Double)
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, (String, java.sql.Timestamp, Double), CusumPoint] {
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var state: ValueState[CusumState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[CusumState]("cusum",
-        org.apache.spark.sql.Encoders.product[CusumState], TTLConfig.NONE)
-
-    override def handleInputRows(field: String,
-        rows: Iterator[(String, java.sql.Timestamp, Double)],
-        timerValues: TimerValues): Iterator[CusumPoint] = {
-      var st = if (state.exists()) state.get()
-        else CusumState(0.0, 0.0, alarm = false, Long.MinValue)
-      val out = Seq.newBuilder[CusumPoint]
-      def micros(t: java.sql.Timestamp): Long =
-        Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-      rows.toSeq.sortBy(r => micros(r._2)).foreach { case (_, t, v) =>
-        val us = micros(t)
-        if (us >= st.lastUs) { // monotone guard: drop stale stragglers
-          val (sp, sn, alarm) =
-            graft.operators.Cusum.step(st.sp, st.sn, st.alarm, v, mu, k, h)
-          st = CusumState(sp, sn, alarm, us)
-          out += CusumPoint(field, us, v, sp, sn, alarm)
-        }
-      }
-      if (st.lastUs != Long.MinValue) state.update(st)
-      out.result().iterator
+      h: Double): DataFrame =
+    perKeyFold(long, "_field", lit(0), CusumState(0.0, 0.0, alarm = false)) { (st, p) =>
+      val (sp, sn, alarm) =
+        graft.operators.Cusum.step(st.sp, st.sn, st.alarm, p.v, mu, k, h)
+      (CusumState(sp, sn, alarm), Some(CusumPoint(p.key, p.us, p.v, sp, sn, alarm)))
     }
-  }
-
-  /** [[cusumStream]] on the transformWithState API (see
-    * [[CusumProcessor]]). Caller must run the query on the RocksDB
-    * state store provider. */
-  def cusumStreamTws(long: DataFrame, mu: Double, k: Double,
-      h: Double): DataFrame = {
-    import long.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    long.select(col("_field"), col("_time"), col("_value"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .transformWithState(new CusumProcessor(mu, k, h),
-        TimeMode.None(), OutputMode.Append())
-      .toDF()
-  }
-
-  /** Per-key enrichment state: the last VALID context reading applied so
-    * far in event-time order, plus the family's monotone guard. O(1) per
-    * key — the whole point of the operator (see [[lastValueEnrichStream]]). */
-  case class EnrichState(ctxUs: Long, ctxVal: Double, hasCtx: Boolean,
-      lastUs: Long)
 
   /** One enriched target reading: the target point 1:1, carrying the
     * as-of context point (None until the first valid context arrives). */
@@ -471,102 +416,36 @@ object GasStream {
     * (e.g. humidity) as keyed state and emit every target reading (e.g.
     * CO) exactly once, enriched with the context as of its event time —
     * the classic as-of/backward join, served live. Output is 1:1 with the
-    * target stream and state is ONE value per key, so BOTH are linear in
-    * rate where the interval join's result is quadratic — this is the
-    * shape that survives sensor-fusion rates (the 112 Hz census rung that
-    * excludes gs08/gs13 by semantics).
+    * target stream and state is ONE (time, value) per key, so BOTH are
+    * linear in rate where the interval join's result is quadratic — this
+    * is the shape that survives sensor-fusion rates (the 112 Hz census
+    * rung that excludes gs08/gs13 by semantics).
     *
-    * Ordering contract (the gs10/gs15 family convention): event-time order
-    * within a batch with the context sorting BEFORE the target at the same
-    * instant (as-of uses ≤, and in the wide source both fields of one
-    * sample share a timestamp), monotone guard across batches — a
-    * straggler older than the last applied point is dropped, the
-    * redelivery discipline for a sequential operator. Unlike the
-    * append-mode window sinks there is NO watermark cutoff to replay:
+    * Only context readings whose value passes the `ctxMin` validity floor
+    * (gs13's threshold shape) enter state, so targets reach BACK over
+    * invalid ones. Keyed by `_measurement`, the long model's co-location
+    * key: a measurement's readings meet on one state partition, and
+    * parallelism scales with measurement (sensor) cardinality. Ordering is
+    * [[perKeyFold]]'s, with the context sorting BEFORE the target at the
+    * same instant (as-of uses ≤, and in the wide source both fields of one
+    * sample share a timestamp). There is NO watermark cutoff to replay:
     * every target row emits immediately, exactly once, so the DuckDB
-    * oracle is the plain as-of join over the raw CSVs. Runs on
-    * `transformWithState` (RocksDB provider required — see
-    * [[CusumProcessor]]'s API notes).
-    *
-    * MEMORY BOUND (applies to every SLADDER rate-ladder claim for gs34):
-    * `handleInputRows` materializes and sorts ONE KEY's share of ONE
-    * micro-batch (`rows.toSeq.sortBy` below — transformWithState gives no
-    * secondary-sort contract, so the event-time order the as-of needs
-    * must be imposed here). The task-memory bound is therefore
-    * O(max rows per key per micro-batch) × ~40 B/tuple. Under a RATE
-    * source or continuous trigger that is rate × trigger-interval per
-    * sensor — a few thousand rows at any realistic per-key rate. The
-    * DEGENERATE corner is Trigger.AvailableNow on a single-measurement
-    * fixture: the whole input is one key's one batch (2.4 M rows ≈
-    * ~100 MB at the 28–112 Hz SLADDER rungs — fine on this harness's
-    * executors, but the number to check before re-using the AvailableNow
-    * replay shape on a bigger backlog; production replays should bound
-    * the batch via maxFilesPerTrigger or a rate limit instead). */
-  class LastValueEnrichProcessor
-      extends org.apache.spark.sql.streaming.StatefulProcessor[
-        String, (String, java.sql.Timestamp, Double, Int), EnrichedPoint] {
-    import org.apache.spark.sql.streaming.{TimeMode, TimerValues, TTLConfig, ValueState}
-    @transient private var state: ValueState[EnrichState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[EnrichState]("enrich",
-        org.apache.spark.sql.Encoders.product[EnrichState], TTLConfig.NONE)
-
-    override def handleInputRows(key: String,
-        rows: Iterator[(String, java.sql.Timestamp, Double, Int)],
-        timerValues: TimerValues): Iterator[EnrichedPoint] = {
-      var st = if (state.exists()) state.get()
-        else EnrichState(0L, 0.0, hasCtx = false, Long.MinValue)
-      val out = Seq.newBuilder[EnrichedPoint]
-      def micros(t: java.sql.Timestamp): Long =
-        Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-      // context (tag 0) before target (tag 1) at equal event times: the
-      // as-of is ≤, so a target sees the context of its own sample
-      rows.toSeq.sortBy(r => (micros(r._2), r._4)).foreach {
-        case (_, t, v, tag) =>
-          val us = micros(t)
-          if (us >= st.lastUs) { // monotone guard: drop stale stragglers
-            if (tag == 0) st = EnrichState(us, v, hasCtx = true, us)
-            else {
-              out += EnrichedPoint(us, v,
-                if (st.hasCtx) Some(st.ctxUs) else None,
-                if (st.hasCtx) Some(st.ctxVal) else None)
-              st = st.copy(lastUs = us)
-            }
-          }
-      }
-      if (st.lastUs != Long.MinValue) state.update(st)
-      out.result().iterator
-    }
-  }
-
-  /** [[LastValueEnrichProcessor]] over the long gas stream: enrich every
-    * `targetField` reading with the last `contextField` reading whose
-    * value passes the `ctxMin` validity floor (gs13's threshold shape —
-    * invalid context never enters state, so targets reach BACK over it).
-    * Keyed by `_measurement`, the long model's co-location key: a
-    * measurement's readings meet on one state partition, and parallelism
-    * scales with measurement (sensor) cardinality — the production layout
-    * where a fleet of sensors spreads across the cluster. Caller must run
-    * the query on the RocksDB state store provider. */
+    * oracle is the plain as-of join over the raw CSVs. The guard's ≥ lets
+    * an exactly-redelivered target through, so at-least-once sources need
+    * [[dedupeStream]] upstream (gs35). */
   def lastValueEnrichStream(long: DataFrame, targetField: String,
-      contextField: String, ctxMin: Double): DataFrame = {
-    import long.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.TimeMode
-    long
-      .filter(col("_field") === targetField ||
-        (col("_field") === contextField && col("_value") >= ctxMin))
-      .select(col("_measurement"), col("_time"), col("_value"),
-        when(col("_field") === contextField, 0).otherwise(1).as("tag"))
-      .as[(String, java.sql.Timestamp, Double, Int)]
-      .groupByKey(_._1)
-      .transformWithState(new LastValueEnrichProcessor,
-        TimeMode.None(), OutputMode.Append())
-      .toDF()
-  }
+      contextField: String, ctxMin: Double): DataFrame =
+    perKeyFold(
+      long.filter(col("_field") === targetField ||
+        (col("_field") === contextField && col("_value") >= ctxMin)),
+      "_measurement", when(col("_field") === contextField, 0).otherwise(1),
+      Option.empty[(Long, Double)]) { (ctx, p) =>
+      if (p.tag == 0) (Some((p.us, p.v)), None)
+      else (ctx, Some(EnrichedPoint(p.us, p.v, ctx.map(_._1), ctx.map(_._2))))
+    }
 
-  /** Per-key Kalman state: estimate + variance + the monotone guard. */
-  case class KalmanStreamState(x: Double, p: Double, lastUs: Long, n: Long)
+  /** Per-series Kalman state: estimate + variance. */
+  case class KalmanStreamState(x: Double, p: Double)
 
   /** One filtered reading per applied input point. */
   case class KalmanPoint(_field: String, ts_us: Long, value: Double,
@@ -580,44 +459,19 @@ object GasStream {
     * state. Where ts30 estimates Q/R from the full series — a luxury an
     * infinite stream doesn't have — the streaming filter takes them as
     * configuration, exactly as gs15 takes its detector thresholds.
-    * Ordering semantics are emaStream's (event-time order within a batch,
-    * monotone guard across batches). */
-  def kalmanStream(long: DataFrame, q: Double, r: Double): DataFrame = {
-    import long.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    long.select(col("_field"), col("_time"), col("_value"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[KalmanStreamState, KalmanPoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (field: String, rows: Iterator[(String, java.sql.Timestamp, Double)],
-            state: GroupState[KalmanStreamState]) =>
-          var st = state.getOption
-            .getOrElse(KalmanStreamState(0.0, 0.0, Long.MinValue, 0L))
-          val out = Seq.newBuilder[KalmanPoint]
-          def micros(t: java.sql.Timestamp): Long =
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-          rows.toSeq.sortBy(r0 => micros(r0._2)).foreach { case (_, t, v) =>
-            val us = micros(t)
-            if (us >= st.lastUs) { // monotone guard: drop stale stragglers
-              val (x, p, k) =
-                if (st.n == 0L)
-                  (graft.operators.Kalman.round6(v),
-                    graft.operators.Kalman.round6(r), 1.0)
-                else graft.operators.Kalman.step(st.x, st.p, v, q, r)
-              st = KalmanStreamState(x, p, us, st.n + 1)
-              out += KalmanPoint(field, us, v, x, p, k)
-            }
-          }
-          if (st.n > 0L) state.update(st)
-          out.result().iterator
-      }
-      .toDF()
-  }
+    * Ordering is [[perKeyFold]]'s. */
+  def kalmanStream(long: DataFrame, q: Double, r: Double): DataFrame =
+    perKeyFold(long, "_field", lit(0), KalmanStreamState(0.0, 0.0)) { (st, pt) =>
+      val (x, p, k) =
+        if (pt.lastUs == Long.MinValue) // first point: x₁ = z₁, P₁ = R
+          (graft.operators.Kalman.round6(pt.v), graft.operators.Kalman.round6(r), 1.0)
+        else graft.operators.Kalman.step(st.x, st.p, pt.v, q, r)
+      (KalmanStreamState(x, p), Some(KalmanPoint(pt.key, pt.us, pt.v, x, p, k)))
+    }
 
-  /** Per-key alert state: the currently-open above-threshold episode. */
-  case class AlertState(n: Long, fireUs: Long, clearUs: Long, peak: Double,
-      lastUs: Long)
+  /** Per-series alert state: the currently-open above-threshold run (its
+    * last point's time, the clear time, is the fold's last applied time). */
+  case class AlertState(n: Long, fireUs: Long, peak: Double)
 
   /** One CLOSED alert episode (≥3 consecutive above-threshold points,
     * ended by a below-threshold observation). */
@@ -629,54 +483,26 @@ object GasStream {
     * 3rd consecutive above-threshold point and CLEARS when a point drops
     * below; one episode row (fire, clear, count, peak) is emitted the
     * moment the closing observation arrives. State is one open episode
-    * (4 longs + a double) per series — O(keys) however long the stream
-    * runs. A still-open episode is withheld by construction (nothing has
-    * closed it yet — gs17's discipline), which the oracle replays by
-    * requiring a later below-threshold point. Sub-3-point blips are
-    * discarded silently, exactly ts32's n >= 3 rule. Ordering semantics
-    * are emaStream's (in-batch event-time order, monotone guard). */
-  def alertStream(long: DataFrame, threshold: Double): DataFrame = {
-    import long.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    long.select(col("_field"), col("_time"), col("_value"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[AlertState, AlertEpisode](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (field: String, rows: Iterator[(String, java.sql.Timestamp, Double)],
-            state: GroupState[AlertState]) =>
-          var st = state.getOption
-            .getOrElse(AlertState(0L, 0L, 0L, 0.0, Long.MinValue))
-          val out = Seq.newBuilder[AlertEpisode]
-          def micros(t: java.sql.Timestamp): Long =
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-          rows.toSeq.sortBy(r => micros(r._2)).foreach { case (_, t, v) =>
-            val us = micros(t)
-            if (us >= st.lastUs) { // monotone guard: drop stale stragglers
-              if (v > threshold) {
-                val n = st.n + 1
-                st = AlertState(n,
-                  if (n == 3L) us else st.fireUs, us,
-                  if (n == 1L) v else math.max(st.peak, v), us)
-              } else if (st.n < 3L || us > st.clearUs) {
-                if (st.n >= 3L)
-                  out += AlertEpisode(field, st.fireUs, st.clearUs, st.n, st.peak)
-                st = AlertState(0L, 0L, 0L, 0.0, us)
-              }
-              // else: a below-threshold point TIED on the open episode's
-              // last above-threshold ts — the oracle's closer must be
-              // strictly later (b.ts_us > e.clear_us), so the episode
-              // stays open and the tied point is withheld.
-            }
-          }
-          state.update(st)
-          out.result().iterator
-      }
-      .toDF()
-  }
-
-  /** Per-key rate state: the last applied observation. */
-  case class RateState(lastUs: Long, lastValue: Double)
+    * per series — O(keys) however long the stream runs. A still-open
+    * episode is withheld by construction (nothing has closed it yet —
+    * gs17's discipline), which the oracle replays by requiring a later
+    * below-threshold point. Sub-3-point blips are discarded silently,
+    * exactly ts32's n >= 3 rule. Ordering is [[perKeyFold]]'s. */
+  def alertStream(long: DataFrame, threshold: Double): DataFrame =
+    perKeyFold(long, "_field", lit(0), AlertState(0L, 0L, 0.0)) { (st, p) =>
+      if (p.v > threshold) {
+        val n = st.n + 1
+        (AlertState(n, if (n == 3L) p.us else st.fireUs,
+          if (n == 1L) p.v else math.max(st.peak, p.v)), None)
+      } else if (st.n >= 3L && p.us == p.lastUs)
+        // a below-threshold point TIED on the open episode's clear time:
+        // the oracle's closer must be strictly later (b.ts_us >
+        // e.clear_us), so the episode stays open and the point is withheld
+        (st, None)
+      else (AlertState(0L, 0L, 0.0),
+        if (st.n >= 3L) Some(AlertEpisode(p.key, st.fireUs, p.lastUs, st.n, st.peak))
+        else None)
+    }
 
   /** One instantaneous rate per applied point after the first. */
   case class RatePoint(_field: String, ts_us: Long, value: Double,
@@ -684,48 +510,28 @@ object GasStream {
 
   /** Streaming DERIVATIVE — the UNBOUNDED-series form of ts09's lag-window
     * rate (Flux `derivative(unit: 1s)`): per series the instantaneous rate
-    * between consecutive observations, carried as ONE (ts, value) record
-    * of keyed state — an infinite stream costs O(keys) state where the
-    * batch form needs a sort-window over history. Numerics are EXACTLY
-    * ts09's: dv, dt_us/1e6 and the quotient are each a single
-    * correctly-rounded IEEE op, left unrounded, so the DuckDB lag replay
-    * is bit-identical. Ordering semantics are emaStream's (event-time
-    * order within a batch, monotone guard across batches), with a STRICT
-    * guard: a same-timestamp point would mean dt = 0 — no rate exists —
-    * so it neither emits nor advances state. The first point per series
-    * seeds state silently, mirroring ts09's dt IS NOT NULL filter. */
-  def rateStream(long: DataFrame): DataFrame = {
-    import long.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    long.select(col("_field"), col("_time"), col("_value"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[RateState, RatePoint](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (field: String, rows: Iterator[(String, java.sql.Timestamp, Double)],
-            state: GroupState[RateState]) =>
-          var st = state.getOption.getOrElse(RateState(Long.MinValue, 0.0))
-          val out = Seq.newBuilder[RatePoint]
-          def micros(t: java.sql.Timestamp): Long =
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-          rows.toSeq.sortBy(r => micros(r._2)).foreach { case (_, t, v) =>
-            val us = micros(t)
-            if (us > st.lastUs) { // strict: dt = 0 has no defined rate
-              if (st.lastUs != Long.MinValue)
-                out += RatePoint(field, us, v,
-                  (v - st.lastValue) / ((us - st.lastUs).toDouble / 1000000.0))
-              st = RateState(us, v)
-            }
-          }
-          if (st.lastUs != Long.MinValue) state.update(st)
-          out.result().iterator
-      }
-      .toDF()
-  }
+    * between consecutive observations, carried as the last value (its time
+    * is the fold's last applied time) — an infinite stream costs O(keys)
+    * state where the batch form needs a sort-window over history. Numerics
+    * are EXACTLY ts09's: dv, dt_us/1e6 and the quotient are each a single
+    * correctly-rounded IEEE op, left unrounded, so the DuckDB lag replay is
+    * bit-identical. Ordering is [[perKeyFold]]'s, with a STRICT guard: a
+    * same-timestamp point would mean dt = 0 — no rate exists — so it
+    * neither emits nor changes state. The first point per series seeds
+    * state silently, mirroring ts09's dt IS NOT NULL filter. */
+  def rateStream(long: DataFrame): DataFrame =
+    perKeyFold(long, "_field", lit(0), 0.0) { (last, p) =>
+      if (p.us == p.lastUs) (last, None)
+      else (p.v,
+        if (p.lastUs == Long.MinValue) None
+        else Some(RatePoint(p.key, p.us, p.v,
+          (p.v - last) / ((p.us - p.lastUs).toDouble / 1000000.0))))
+    }
 
-  /** Per-key run state: the currently-open status run (bucket, bounds,
-    * count) — the whole SCD2 "current row" in four longs. */
-  case class RunState(status: Long, startUs: Long, lastUs: Long, n: Long)
+  /** Per-series run state: the currently-open status run (bucket, start,
+    * count; its end is the fold's last applied time) — the whole SCD2
+    * "current row". */
+  case class RunState(status: Long, startUs: Long, n: Long)
 
   /** One CLOSED status run — a finished validity interval. */
   case class ClosedRun(_field: String, status: Long, start_us: Long,
@@ -737,45 +543,20 @@ object GasStream {
     * (⌊value/10⌋ — the "which alert band is this sensor in" quantizer);
     * when a point lands in a DIFFERENT bucket, the open run closes and is
     * EMITTED as a finished validity interval (status, start, end,
-    * n_points), and a new run opens. State is one 4-long run per series —
-    * the streaming history table costs O(|series|) memory however long
-    * the stream runs. The final still-open run is withheld by
-    * construction (nothing ever closes it), which the oracle replays by
-    * dropping each series' last island. Ordering semantics are
-    * emaStream's: event-time order within a batch, monotone guard across
-    * batches (stale stragglers drop — a closed interval is immutable
-    * history). */
-  def stateRuns(long: DataFrame): DataFrame = {
-    import long.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    long.select(col("_field"), col("_time"), col("_value"))
-      .as[(String, java.sql.Timestamp, Double)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[RunState, ClosedRun](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout) {
-        (field: String, rows: Iterator[(String, java.sql.Timestamp, Double)],
-            state: GroupState[RunState]) =>
-          def micros(t: java.sql.Timestamp): Long =
-            Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-          var st = state.getOption.orNull
-          val out = Seq.newBuilder[ClosedRun]
-          rows.toSeq.sortBy(r => micros(r._2)).foreach { case (_, t, v) =>
-            val us = micros(t)
-            val b = math.floor(v / 10.0).toLong
-            if (st == null) st = RunState(b, us, us, 1L)
-            else if (us >= st.lastUs) {
-              if (b == st.status) st = st.copy(lastUs = us, n = st.n + 1)
-              else {
-                out += ClosedRun(field, st.status, st.startUs, st.lastUs, st.n)
-                st = RunState(b, us, us, 1L)
-              }
-            }
-          }
-          if (st != null) state.update(st)
-          out.result().iterator
-      }
-      .toDF()
-  }
+    * n_points), and a new run opens. State is one run per series — the
+    * streaming history table costs O(|series|) memory however long the
+    * stream runs. The final still-open run is withheld by construction
+    * (nothing ever closes it), which the oracle replays by dropping each
+    * series' last island. Ordering is [[perKeyFold]]'s (stale stragglers
+    * drop — a closed interval is immutable history). */
+  def stateRuns(long: DataFrame): DataFrame =
+    perKeyFold(long, "_field", lit(0), RunState(0L, 0L, 0L)) { (st, p) =>
+      val b = math.floor(p.v / 10.0).toLong
+      if (p.lastUs != Long.MinValue && b == st.status) (st.copy(n = st.n + 1), None)
+      else (RunState(b, p.us, 1L), // the first point, or a band change, opens a run
+        if (p.lastUs == Long.MinValue) None
+        else Some(ClosedRun(p.key, st.status, st.startUs, p.lastUs, st.n)))
+    }
 
   /** foreachBatch INCREMENTAL UPSERT — the streaming MERGE/SCD1 sink
     * ("keep the latest reading per key"): every micro-batch reduces to its
@@ -934,8 +715,8 @@ object GasStream {
     }
   }
 
-  /** [[KmvProcessor]] over the long gas stream (RocksDB state store
-    * required, as with [[cusumStreamTws]]). The µs conversion and the
+  /** [[KmvProcessor]] over the long gas stream (transformWithState: the
+    * RocksDB state store is required). The µs conversion and the
     * 512-cell grid clamp run as codegen'd SQL BEFORE the typed boundary —
     * the SLADDER profile showed per-row JVM work inside the processor
     * (Timestamp decode, floor/clamp, hashing) dominating gs27's cost;
@@ -965,13 +746,12 @@ object GasStream {
   /** Per-window running aggregate while the window is open. */
   case class WinAgg(cnt: Long, sum: Long, mn: Long, mx: Long)
 
-  /** TIMER-SEALED tumbling windows on `transformWithState` — the third
-    * leg of the TWS showcase (gs15 ValueState, gs27 MapState, here
-    * EVENT-TIME TIMERS): rather than letting the built-in window
-    * aggregate decide emission, the processor owns the protocol —
-    * windows accumulate in MapState, a timer registered at each
-    * window's END fires once the WATERMARK passes it, and the expired-
-    * timer callback emits the sealed row and frees the state. This is
+  /** TIMER-SEALED tumbling windows on `transformWithState` — the second
+    * leg of the TWS showcase (gs27 MapState, here EVENT-TIME TIMERS):
+    * rather than letting the built-in window aggregate decide emission,
+    * the processor owns the protocol — windows accumulate in MapState, a
+    * timer registered at each window's END fires once the WATERMARK
+    * passes it, and the expired-timer callback emits the sealed row and frees the state. This is
     * the building block for custom emission policies the declarative
     * window can't express (early partial emits, per-key deadlines,
     * speculative seals); here it reproduces gs22's append-mode seal
@@ -995,8 +775,7 @@ object GasStream {
         rows: Iterator[(String, java.sql.Timestamp, Long)],
         timerValues: TimerValues): Iterator[SealedWindow] = {
       rows.foreach { case (_, t, micro) =>
-        val us = Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
-        val w = Math.floorDiv(us, windowUs) * windowUs
+        val w = Math.floorDiv(micros(t), windowUs) * windowUs
         val had = wins.containsKey(w)
         val cur = if (had) wins.getValue(w)
           else WinAgg(0L, 0L, Long.MaxValue, Long.MinValue)

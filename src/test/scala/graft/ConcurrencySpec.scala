@@ -19,12 +19,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The slice deliberately includes the historical mutation sites:
   * q40/q41 (child-session conf staging for bloom-filter join + aggregate
-  * pushdown) and the three RocksDB-pinned transformWithState sinks
-  * (gs15/gs27/gs34) running concurrently with a DEFAULT-provider
-  * streaming sink (gs22) — if the provider pin leaked across sessions,
-  * gs22's HDFS-backed checkpoint would flip providers mid-build and
-  * abort. Batch families (join, agg, text, vector, time-series,
-  * multimodal) ride along to exercise plain concurrent Catalyst
+  * pushdown) and the three RocksDB-pinned sinks (gs27's and gs28's
+  * transformWithState processors, gs35's dedup → as-of enrich chain)
+  * running concurrently with DEFAULT-provider streaming sinks (gs22, and
+  * the keyed-state folds of gs15/gs34) — if the provider pin leaked
+  * across sessions, a default-provider checkpoint would flip providers
+  * mid-build and abort. Batch families (join, agg, text, vector,
+  * time-series, multimodal) ride along to exercise plain concurrent Catalyst
   * planning/execution on the shared context. Every build shape the
   * per-session memo (`graft.util.TempDirs.perSession`) serves runs cold
   * under contention too: the batch, streaming and snapshot store builds
@@ -49,6 +50,7 @@ class ConcurrencySpec extends SparkSpec {
     "mm08_phash_dedup",
     "gs22_stream_histogram",
     "gs15_stream_cusum", "gs27_stream_kmv_distinct", "gs34_stream_asof_enrich",
+    "gs28_stream_timer_seal", "gs35_stream_dedup_enrich",
     "gs01_field_filter", "gs37_manifest_stream_store", "gs38_snapshot_time_range",
     "gs12_stream_upsert", "gs30_stream_complete_totals")
 

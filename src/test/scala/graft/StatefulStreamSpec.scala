@@ -148,6 +148,42 @@ class StatefulStreamSpec extends SparkSpec {
     assert(!rows.exists(r => r._1 == "A" && r._4 == 1L && r._2 == us("2016-10-07 06:00:00")))
   }
 
+  test("closedSessions keeps full-microsecond event time in bounds and gap arithmetic") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
+    val long = input.toDF().toDF("_time", "_field", "_value")
+
+    val q = GasStream.closedSessions(long, gapMinutes = 30, watermark = "10 minutes")
+      .writeStream.outputMode("append")
+      .format("memory").queryName("us_sessions").start()
+
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def us(s: String) = {
+      val t = ts(s)
+      Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+    }
+    // 30 min + 0.4 ms apart: one gap too far at µs precision, exactly one
+    // gap (so one session) if event time were truncated to milliseconds
+    input.addData(
+      (ts("2016-10-07 00:00:00.0005"), "A", 1.0),
+      (ts("2016-10-07 00:30:00.0009"), "A", 1.0),
+      (ts("2016-10-07 00:40:00.285714"), "A", 1.0))
+    q.processAllAvailable()
+    input.addData((ts("2016-10-07 06:00:00"), "B", 1.0))
+    q.processAllAvailable()
+    input.addData((ts("2016-10-07 07:00:00"), "B", 1.0))
+    q.processAllAvailable()
+    q.stop()
+
+    val rows = spark.sql("SELECT _field, start_us, end_us, n_points FROM us_sessions")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .filter(_._1 == "A").sortBy(_._2).toSeq
+    assert(rows == Seq(
+      ("A", us("2016-10-07 00:00:00.0005"), us("2016-10-07 00:00:00.0005"), 1L),
+      ("A", us("2016-10-07 00:30:00.0009"), us("2016-10-07 00:40:00.285714"), 2L)),
+      s"sessions lost sub-millisecond event time: $rows")
+  }
+
   test("streaming dedup drops redelivered points within the watermark horizon") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(java.sql.Timestamp, String, Double)]
@@ -325,11 +361,122 @@ class StatefulStreamSpec extends SparkSpec {
       s"alarm/reset sequence wrong: $got")
   }
 
+  test("streaming rate: first point seeds, same-timestamp tie is inert, state carries, stragglers drop") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
+    val long = input.toDF().toDF("_time", "_field", "_value")
+    val q = GasStream.rateStream(long)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("rate").start()
+
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def us(s: String) = ts(s).getTime * 1000L
+    input.addData(
+      (ts("2016-10-07 00:01:00"), "A", 10.0),  // seed: no rate yet
+      (ts("2016-10-07 00:01:10"), "A", 20.0),  // (20-10)/10 s
+      (ts("2016-10-07 00:01:00"), "B", 5.0))   // B's only point: seed only
+    q.processAllAvailable()
+    input.addData(
+      (ts("2016-10-07 00:01:10"), "A", 99.0),  // tie on the last point: inert
+      (ts("2016-10-07 00:00:30"), "A", 500.0), // straggler: dropped
+      (ts("2016-10-07 00:01:20"), "A", 40.0))  // (40-20)/10 s, batch-1 state
+    q.processAllAvailable()
+    input.addData(
+      (ts("2016-10-07 00:01:30"), "A", 70.0),  // (70-40)/10 s
+      (ts("2016-10-07 00:01:30"), "A", 70.0))  // in-batch tie: no 2nd rate
+    q.processAllAvailable()
+    q.stop()
+
+    val got = spark.sql("SELECT _field, ts_us, value, rate_per_s FROM rate ORDER BY ts_us")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
+    assert(got.toSeq == Seq(
+      ("A", us("2016-10-07 00:01:10"), 20.0, 1.0),
+      ("A", us("2016-10-07 00:01:20"), 40.0, 2.0),
+      ("A", us("2016-10-07 00:01:30"), 70.0, 3.0)),
+      s"rate stream wrong: ${got.toSeq}")
+  }
+
+  test("streaming alert fires at the 3rd point; a tied below-threshold point and an open episode are withheld") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
+    val long = input.toDF().toDF("_time", "_field", "_value")
+    val q = GasStream.alertStream(long, threshold = 50.0)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("alerts").start()
+
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    def us(s: String) = ts(s).getTime * 1000L
+    input.addData(
+      (ts("2016-10-07 00:01:00"), "A", 60.0),
+      (ts("2016-10-07 00:02:00"), "A", 70.0),
+      (ts("2016-10-07 00:01:00"), "B", 60.0),  // B: a 2-point blip,
+      (ts("2016-10-07 00:02:00"), "B", 61.0),
+      (ts("2016-10-07 00:03:00"), "B", 10.0))  // closed below 3 points
+    q.processAllAvailable()
+    input.addData((ts("2016-10-07 00:03:00"), "A", 65.0)) // 3rd point: fires
+    q.processAllAvailable()
+    assert(spark.sql("SELECT * FROM alerts").count() == 0,
+      "an open episode or a sub-3-point blip was emitted")
+    input.addData(
+      (ts("2016-10-07 00:03:00"), "A", 10.0),  // tied on the last point: withheld
+      (ts("2016-10-07 00:04:00"), "A", 80.0),  // the same episode goes on
+      (ts("2016-10-07 00:05:00"), "A", 20.0),  // closes it
+      (ts("2016-10-07 00:06:00"), "A", 90.0),  // a new episode fires ...
+      (ts("2016-10-07 00:07:00"), "A", 91.0),
+      (ts("2016-10-07 00:08:00"), "A", 92.0))  // ... and stays open
+    q.processAllAvailable()
+    q.stop()
+
+    val got = spark.sql("SELECT _field, fire_us, clear_us, n_points, peak FROM alerts")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getDouble(4)))
+    assert(got.toSeq == Seq(
+      ("A", us("2016-10-07 00:03:00"), us("2016-10-07 00:04:00"), 4L, 80.0)),
+      s"alert episodes wrong: ${got.toSeq}")
+  }
+
+  test("streaming Kalman equals Kalman.step/round6 across a batch boundary") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(java.sql.Timestamp, String, Double)]
+    val long = input.toDF().toDF("_time", "_field", "_value")
+    val q = GasStream.kalmanStream(long, q = 0.5, r = 4.0)
+      .writeStream.outputMode("append")
+      .format("memory").queryName("kalman").start()
+
+    def ts(s: String) = java.sql.Timestamp.valueOf(s)
+    input.addData(
+      (ts("2016-10-07 00:02:00"), "A", 12.3),  // out of order in the batch
+      (ts("2016-10-07 00:01:00"), "A", 10.0),
+      (ts("2016-10-07 00:01:00"), "B", 3.0))
+    q.processAllAvailable()
+    input.addData(
+      (ts("2016-10-07 00:03:00"), "A", 11.1),
+      (ts("2016-10-07 00:04:00"), "A", 15.7))
+    q.processAllAvailable()
+    q.stop()
+
+    val got = spark.sql(
+        "SELECT value, x_hat, p_var, k_gain FROM kalman WHERE _field = 'A' ORDER BY ts_us")
+      .collect().map(r => (r.getDouble(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+    import graft.operators.Kalman
+    val zs = Seq(10.0, 12.3, 11.1, 15.7)
+    val seed = (zs.head, Kalman.round6(zs.head), Kalman.round6(4.0), 1.0)
+    val want = zs.tail.scanLeft(seed) { case ((_, x, p, _), z) =>
+      val (x1, p1, k) = Kalman.step(x, p, z, 0.5, 4.0)
+      (z, x1, p1, k)
+    }
+    assert(got.toSeq == want, s"stream ${got.toSeq} vs Kalman.step $want")
+    val pts = zs.zipWithIndex.map { case (z, i) => Kalman.Point(i.toLong, i.toLong, z) }
+    assert(want == Kalman.run(pts.toArray, 0.5, 4.0).map(s => (s.z, s.xHat, s.p, s.kGain)))
+    assert(spark.sql("SELECT * FROM kalman WHERE _field = 'B'").count() == 1)
+  }
+
   test("transformWithState CUSUM twin emits the identical sequence across batches") {
-    // same fixture and batch split as the flatMapGroupsWithState test
-    // above — the Spark-4 StatefulProcessor migration (gs15) must be
-    // byte-identical, state carry-over and alarm reset included.
-    // transformWithState requires the RocksDB state store.
+    // same fixture and batch split as the default-store CUSUM test above,
+    // now run by the one kernel (cusumStream) on the RocksDB state store
+    // that the retired transformWithState twin required: the sequence must
+    // be identical on both providers, state carry-over and alarm reset
+    // included.
     implicit val sqlCtx = spark.sqlContext
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(providerKey)
@@ -338,7 +485,7 @@ class StatefulStreamSpec extends SparkSpec {
     try {
       val input = MemoryStream[(java.sql.Timestamp, String, Double)]
       val long = input.toDF().toDF("_time", "_field", "_value")
-      val q = GasStream.cusumStreamTws(long, mu = 10.0, k = 1.0, h = 5.0)
+      val q = GasStream.cusumStream(long, mu = 10.0, k = 1.0, h = 5.0)
         .writeStream.outputMode("append")
         .format("memory").queryName("cusum_tws").start()
       def ts(s: String) = java.sql.Timestamp.valueOf(s)
@@ -379,7 +526,7 @@ class StatefulStreamSpec extends SparkSpec {
     // never enters state, so later targets reach BACK across it — and
     // across the micro-batch boundary; (4) a straggler older than the
     // last applied point is dropped by the monotone guard.
-    // transformWithState requires the RocksDB state store.
+    // Run on the RocksDB state store, as the kill/restart legs are.
     implicit val sqlCtx = spark.sqlContext
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
     val prev = spark.conf.getOption(providerKey)

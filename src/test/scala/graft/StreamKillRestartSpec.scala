@@ -23,11 +23,11 @@ import graft.transform.GasTransform
   * log; on restart the engine re-executes exactly that batch from the
   * WAL against the state store's last COMMITTED version, and the parquet
   * sink's `_spark_metadata` manifest hides the cancelled attempt's
-  * orphan files. All three transformWithState shapes are exercised —
-  * gs15's CUSUM (ValueState), gs27's KMV sketches (MapState), gs34's
-  * as-of enrichment (ValueState + in-batch ordering contract) — on the
-  * RocksDB provider the API requires, which is also the store whose
-  * snapshot/changelog recovery is the one the claim rides on.
+  * orphan files. The keyed-state shapes are exercised — gs15's CUSUM and
+  * gs34's as-of enrichment (flatMapGroupsWithState folds, the latter with
+  * its in-batch ordering contract) and gs27's KMV sketches
+  * (transformWithState MapState) — all on the RocksDB provider, the
+  * store whose snapshot/changelog recovery the claim rides on.
   *
   * Kill placement: the killed run starts under a paced trigger with
   * `maxFilesPerTrigger=1` (one day file per micro-batch — the same batch
@@ -155,7 +155,7 @@ class StreamKillRestartSpec extends SparkSpec {
     }
 
   check("gs15_cusum") { long =>
-    GasStream.cusumStreamTws(long, mu = 50.0, k = 5.0, h = 60.0)
+    GasStream.cusumStream(long, mu = 50.0, k = 5.0, h = 60.0)
   }
   check("gs27_kmv") { long =>
     GasStream.kmvStream(long, windowUs = 21600000000L, k = 16)
@@ -164,11 +164,11 @@ class StreamKillRestartSpec extends SparkSpec {
     GasStream.lastValueEnrichStream(long, "CO (ppm)", "Humidity (%r.h.)", 55.0)
   }
 
-  // ---- round-14 legs (r13 verdict item 4): the non-transformWithState
-  // stateful families. The stream-stream interval JOIN carries the
+  // ---- round-14 legs (r13 verdict item 4): the other stateful
+  // families. The stream-stream interval JOIN carries the
   // largest state store on the board (both sides buffered to watermark +
   // interval); its recovery path — join state versions + WAL re-execution
-  // of the killed batch — is distinct from the keyed-state processors
+  // of the killed batch — is distinct from the keyed-state operators
   // covered above. gs14's built-in session_window exercises the merging
   // SESSION aggregation state, and gs17's flatMapGroupsWithState the
   // user-managed GroupState surface; all three must come back from a
