@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.Sessions
+
 /** Benchmark main: times every registered query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric":...,"queries":{...}}.
   *
@@ -29,7 +31,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Sessions.cpus(32)
     val (repeat, positional) = {
       val i = args.indexOf("--repeat")
       if (i >= 0 && i + 1 < args.length)
@@ -38,17 +40,18 @@ object Bench {
     }
     // Shuffle-partition regime (round-12 verdict item 1 — the q28 class
     // at the shuffle layer): a FIXED small shuffle.partitions is a fixed
-    // resource count against growing data. The full size-derived regime —
-    // input-derived AQE initial count, stress-gated 16 m coalescing
-    // target, bounded-buffer hash-aggregate threshold — lives in
-    // [[graft.util.StressSession]] with the round-13 measurements that
-    // chose each knob; at sf0.1 it floors to the fixed-cpus regime of
-    // rounds ≤12. Streaming is unaffected (AQE is disabled in stateful
-    // workloads; those keep shuffle.partitions = cpus, pinned per
-    // checkpoint).
-    val initialParts = graft.util.StressSession.initialPartitions(sfDir, cpus.toInt)
-    val spark = graft.util.StressSession.builder(sfDir, cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // resource count against growing data. The query session
+    // ([[graft.util.Sessions.query]]) derives the AQE initial count from
+    // input size, with the round-13 measurements that chose it; at sf0.1
+    // it floors to the fixed-cpus regime of rounds ≤12. Streaming is
+    // unaffected (AQE is disabled in stateful workloads; those keep
+    // shuffle.partitions = cpus, pinned per checkpoint).
+    Sessions.run(Sessions.query(sfDir, cpus))(
+      bench(_, sfDir, cpus, repeat, positional))
+  }
+
+  private def bench(spark: SparkSession, sfDir: String, cpus: Int,
+      repeat: Int, positional: Array[String]): Unit = {
     // Per-query spill accounting: the artifact carries the evidence that
     // per-partition shuffle volume stays bounded (or doesn't). Listener
     // events are posted asynchronously, so totals snapshot right after
@@ -130,7 +133,7 @@ object Bench {
     val canaryTimes = collection.mutable.ArrayBuffer.empty[Double]
     def canary(): Unit = {
       val t0 = System.nanoTime()
-      spark.range(0L, 400000000L, 1L, cpus.toInt)
+      spark.range(0L, 400000000L, 1L, cpus)
         .selectExpr("sum(id % 1000003) AS s")
         .write.format("noop").mode("overwrite").save()
       canaryTimes += (System.nanoTime() - t0) / 1e9
@@ -214,11 +217,9 @@ object Bench {
           System.getProperty("java.home"), "bin"), "java").getPath
         val cmd = Seq(javaBin) ++ opens ++ Seq(
           "-Djdk.reflect.useDirectMethodHandleAccessor=false", "-Xmx16g",
-          "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
           "-cp", cp, "graft.Bench", "--repeat", "1", name)
         val pb = new ProcessBuilder(cmd: _*)
         pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
         pb.environment().put("SPARK_GRAFT_RECHECK", "0")
         pb.environment().put("SPARK_GRAFT_BENCH_OUT", outFile.toString)
         pb.redirectOutput(ProcessBuilder.Redirect.DISCARD)
@@ -325,7 +326,7 @@ object Bench {
         s"""{"times":[${canaryTimes.map(num).mkString(",")}],"median":${num(med)},"band":[${num(canarySorted.head)},${num(canarySorted.last)}]}"""
       }
     val fullLine =
-      s"""{"metric":"total","value":$totalS,"unit":"sec","n_queries":${results.size},"queries":$qs,"failed":$failed,"noisy":$noisyJson,"isolated_recheck":$recheckJson,"initial_partitions":${if (initialParts > 0) initialParts else cpus.toInt},"spill_disk_mb":$spillJson,"spill_mem_mb":$spillMemJson,"host_canary":$canaryJson,"index_build_s":$indexBuildJson,"sf":"$sfDir","repeat":$repeat,"passes":$passesJson}"""
+      s"""{"metric":"total","value":$totalS,"unit":"sec","n_queries":${results.size},"queries":$qs,"failed":$failed,"noisy":$noisyJson,"isolated_recheck":$recheckJson,"initial_partitions":${spark.conf.get("spark.sql.adaptive.coalescePartitions.initialPartitionNum")},"spill_disk_mb":$spillJson,"spill_mem_mb":$spillMemJson,"host_canary":$canaryJson,"index_build_s":$indexBuildJson,"sf":"$sfDir","repeat":$repeat,"passes":$passesJson}"""
     // The complete per-query artifact goes to a FILE: the harness that
     // records the per-round bench keeps only a ~2000-char tail of the
     // process output, which decapitates a 166-query JSON line (r7's
@@ -369,6 +370,5 @@ object Bench {
         sb.append(tailStr).toString
       }
     println(stdoutLine)
-    spark.stop()
   }
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 
 import graft.queries.GasQueries
+import graft.util.Sessions
 
 /** CALENDAR-AXIS benchmark (round-12 verdict item 3): every other ladder
   * scales rows-per-day or rate over 13 day-partitions; 100 TB is YEARS of
@@ -67,18 +68,15 @@ object CalendarBench {
   def main(args: Array[String]): Unit = {
     val Array(inputDir, workDir) = args.take(2)
     val mode = args.lift(2).getOrElse("full")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    Sessions.run(Sessions.pipeline(Sessions.cpus(32))
       // plain (non-AQE) plans so the FileSourceScanExec under test is
       // directly addressable in the executed plan for metric extraction
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+      .config("spark.sql.adaptive.enabled", "false"))(
+      run(_, inputDir, workDir, mode))
+  }
 
+  private def run(spark: SparkSession, inputDir: String, workDir: String,
+      mode: String): Unit = {
     def timed[T](body: => T): (T, Double) = {
       val t0 = System.nanoTime()
       val r = body
@@ -186,7 +184,6 @@ object CalendarBench {
       println(s"""{"metric":"calendar_scan","mode":"$mode","days":$nDays,""" +
         s""""cold_s":${num(coldS)},"warm_s":${num(warmS)},""" +
         s""""scan_metrics":${mj(coldM)}}""")
-      spark.stop()
       return
     }
 
@@ -247,6 +244,5 @@ object CalendarBench {
       s""""scan_metrics_manifest":${mj(manColdM)},""" +
       s""""scan_metrics_cold":${mj(coldM)},"scan_metrics_warm":${mj(warmM)}}"""
     println(line)
-    spark.stop()
   }
 }

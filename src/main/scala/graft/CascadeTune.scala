@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.VectorOps
+import graft.util.Sessions
 
 /** PQ-CASCADE DIAL SWEEP (round-14 verdict item 3): v43's width-robust
   * cascade bought its d=1536 speedup (6.39× → 1.79× cost ratio vs d=64)
@@ -28,6 +30,10 @@ import graft.queries.VectorOps
 object CascadeTune {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: CascadeTune <corpusDir> k=..,s=..,t=..,c2=.. ...")
+    Sessions.run(Sessions.query(args(0), Sessions.cpus(32)))(tune(_, args))
+  }
+
+  private def tune(spark: SparkSession, args: Array[String]): Unit = {
     val dir = args(0)
     val arms = args.drop(1).toSeq.map { a =>
       val m = a.split(",").map { kv =>
@@ -36,11 +42,6 @@ object CascadeTune {
       (m("k"), m("s"), m("t"), m.getOrElse("c1", 100), m("c2"),
         m.getOrElse("w", 4), m.getOrElse("st", 0), m.getOrElse("m", 0))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.util.StressSession.builder(dir, cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.VectorFunctions.register(spark)
-
     val run = VectorOps.withHashAggBudget { (s, d) =>
       val e = VectorOps.emb(s, d)
       val qs = e.filter(expr("vec_id % 100 = 0"))
@@ -98,6 +99,5 @@ object CascadeTune {
     }
     println(s"""{"metric":"cascade_tune","corpus":"$dir","n_exact":$nExact,""" +
       s""""arms":[${rows.mkString(",")}]}""")
-    spark.stop()
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{Row, SparkSession}
+
+import graft.util.Sessions
 
 /** CONCURRENCY AT STRESS (round-13 verdict item 5): `ConcurrencySpec`
   * proves 4-way hash identity on CI-scale fixtures; a shared 100 TB
@@ -39,11 +40,11 @@ object ConcurrencyStress {
       val Array(n, d) = a.split("=", 2)
       (n, d)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.util.StressSession.builder(targets.head._2, cpus)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    Sessions.run(Sessions.query(targets.head._2, Sessions.cpus(32)))(
+      run(_, targets))
+  }
 
+  private def run(spark: SparkSession, targets: Seq[(String, String)]): Unit = {
     val spillDisk = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
@@ -58,16 +59,8 @@ object ConcurrencyStress {
     SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
 
     /** Run one query to its checksum row (the materializing action). */
-    def checksum(name: String, dir: String): (String, Long, Long) = {
-      val df = SparkEntry.queries(name)(spark, dir)
-      val cols = df.columns.sorted.map(c => col(s"`$c`"))
-      val r = df
-        .select(xxhash64(to_json(struct(cols: _*))).as("h"))
-        .agg(sum(col("h").cast("decimal(38,0)")).as("checksum"),
-          expr("bit_xor(h)").as("xorsum"), count(lit(1)).as("rows"))
-        .collect()(0)
-      (String.valueOf(r.get(0)), r.getLong(1), r.getLong(2))
-    }
+    def checksum(name: String, dir: String): Row =
+      HashQuery.checksum(SparkEntry.queries(name)(spark, dir))
 
     def num(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -86,24 +79,15 @@ object ConcurrencyStress {
     // ---- concurrent pass ---------------------------------------------
     val d0 = spillDisk.get()
     val t0 = System.nanoTime()
-    import scala.concurrent.{Await, Future, ExecutionContext}
-    import scala.concurrent.duration.Duration
-    // non-daemon pool threads would pin the forked JVM alive after main
-    // returns — always shut the pool down once the futures have resolved
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(targets.size)
-    val (concurrent, concWall, concSpill) =
-      try {
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val futures = targets.map { case (name, dir) =>
-          Future {
-            val s0 = System.nanoTime()
-            val cs = checksum(name, dir)
-            (name, (System.nanoTime() - s0) / 1e9, cs)
-          }
-        }
-        val rs = futures.map(Await.result(_, Duration.Inf))
-        (rs, (System.nanoTime() - t0) / 1e9, spillDisk.get() - d0)
-      } finally pool.shutdown()
+    val concurrent = graft.queries.inParallel(targets.map { case (name, dir) =>
+      () => {
+        val s0 = System.nanoTime()
+        val cs = checksum(name, dir)
+        (name, (System.nanoTime() - s0) / 1e9, cs)
+      }
+    }: _*)
+    val concWall = (System.nanoTime() - t0) / 1e9
+    val concSpill = spillDisk.get() - d0
 
     // ---- identity gate ------------------------------------------------
     serial.zip(concurrent).foreach { case ((n, _, _, sc), (n2, _, cc)) =>
@@ -120,7 +104,7 @@ object ConcurrencyStress {
         val key = if (targets.count(_._1 == n) > 1) s"$n#$i" else n
         s""""$key":{"serial_s":${num(s)},"serial_spill_mb":${num(sp / 1e6)},""" +
           s""""concurrent_s":${num(concS)},""" +
-          s""""checksum":"${cs._1}","rows":${cs._3}}"""
+          s""""checksum":"${cs.get(0)}","rows":${cs.get(2)}}"""
     }.mkString("{", ",", "}")
     val totalSerial = serial.map(_._2).sum
     println(s"""{"metric":"concurrency_stress","n_queries":${targets.size},""" +
@@ -129,6 +113,5 @@ object ConcurrencyStress {
       s""""concurrent_spill_mb":${num(concSpill / 1e6)},""" +
       s""""serial_spill_mb":${num(serial.map(_._3).sum / 1e6)},""" +
       s""""identity":"all checksums equal"}""")
-    spark.stop()
   }
 }

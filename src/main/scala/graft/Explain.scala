@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Sessions
 
 /** Plan-evidence main: print the EXECUTED physical plan of named registered
   * queries against SPARK_GRAFT_SF_DIR — the tool behind the scale-regime
@@ -16,22 +16,18 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // mirror Bench's shuffle-partition regime (graft.util.StressSession:
-    // size-derived AQE initial count + stress-gated coalescing knobs,
-    // same env overrides) so the recorded plan SHAPE is the shape the
-    // measured run executed
-    val spark = graft.util.StressSession.builder(sfDir, cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    args.foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
-      df.write.format("noop").mode("overwrite").save()
-      println(s"=== $name @ $sfDir ===")
-      // final adaptive plan only — the Initial Plan section pre-dates the
-      // runtime statistics this tool exists to observe
-      println(df.queryExecution.executedPlan.toString
-        .split("== Initial Plan ==").head)
+    // the query session Bench runs, so the recorded plan SHAPE is the
+    // shape the measured run executed
+    Sessions.run(Sessions.query(sfDir, Sessions.cpus(32))) { spark =>
+      args.foreach { name =>
+        val df = SparkEntry.queries(name)(spark, sfDir)
+        df.write.format("noop").mode("overwrite").save()
+        println(s"=== $name @ $sfDir ===")
+        // final adaptive plan only — the Initial Plan section pre-dates the
+        // runtime statistics this tool exists to observe
+        println(df.queryExecution.executedPlan.toString
+          .split("== Initial Plan ==").head)
+      }
     }
-    spark.stop()
   }
 }

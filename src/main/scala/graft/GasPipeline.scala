@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.ingest.GasIngest
 import graft.store.LongStore
 import graft.transform.GasTransform
+import graft.util.Sessions
 
 /** The whole reference ETL (Airflow DAG → Dask → parquet → InfluxDB,
   * SURVEY.md §3.1) collapsed into one Spark job:
@@ -82,16 +83,7 @@ object GasPipeline {
     * arguments is a no-op (discovery skips everything the ledger holds,
     * without reading any data — the reference's "skip" branch). Exit code
     * 0 either way; the processed-file count goes to stdout. */
-  def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try println(cli(spark, args))
-    finally spark.stop()
-  }
+  def main(args: Array[String]): Unit =
+    Sessions.run(Sessions.pipeline(Sessions.cpus(4)))(spark =>
+      println(cli(spark, args)))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.queries.GasQueries
 import graft.store.LongStore
+import graft.util.Sessions
 
 /** CONCURRENT INGEST + QUERY (round-14 verdict item 5): `ConcurrencyStress`
   * proves concurrent READERS bit-identical; the actual production topology
@@ -50,15 +51,13 @@ object IngestStress {
     require(args.length >= 2, "usage: IngestStress <dayFileDir> <workDir> [rounds]")
     val (inputDir, workDir) = (args(0), args(1))
     val rounds = args.lift(2).map(_.toInt).getOrElse(6)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    Sessions.run(Sessions.pipeline(Sessions.cpus(32)))(
+      run(_, inputDir, workDir, rounds))
+  }
 
+  private def run(spark: SparkSession, inputDir: String, workDir: String,
+      rounds: Int): Unit = {
+    import HashQuery.checksum
     val store = s"$workDir/store"
     val inPath = new org.apache.hadoop.fs.Path(inputDir)
     val fs = inPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -105,14 +104,6 @@ object IngestStress {
     }
 
     // ---- the reader battery -------------------------------------------
-    def checksum(df: DataFrame): (String, Long, Long) = {
-      val cols = df.columns.sorted.map(c => col(s"`$c`"))
-      val r = df.select(xxhash64(to_json(struct(cols: _*))).as("h"))
-        .agg(sum(col("h").cast("decimal(38,0)")).as("checksum"),
-          expr("bit_xor(h)").as("xorsum"), count(lit(1)).as("rows"))
-        .collect()(0)
-      (String.valueOf(r.get(0)), r.getLong(1), r.getLong(2))
-    }
     val proj = Seq(unix_micros(col("_time")).as("t_us"), col("_field"),
       col("_value"))
     // disjoint window: the store's first two days — settled history
@@ -249,6 +240,5 @@ object IngestStress {
       s""""overlap_snapshot_reader":{"ok":$sOk,"mismatch":$sBad,"error":$sErr},""" +
       s""""gate":"disjoint readers AND snapshot overlap reader """ +
       s"""checksum-identical under ${rounds} re-ingest rounds"}""")
-    spark.stop()
   }
 }

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.util.Sessions
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -9,20 +11,6 @@ object Verify {
     // optional 3rd arg (local iteration only): run just queries whose name
     // starts with the prefix; the driver always passes exactly 2 args
     val prefix = if (args.length > 2) args(2) else ""
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Inject the library extensions (canonical deployment shape) so the
-      // determinism-lint rule sees EVERY analysis in this session — in
-      // particular plans built and executed INSIDE a query builder
-      // (streaming micro-batches, training-loop side actions) that never
-      // appear in the returned DataFrame.
-      .withExtensions(new graft.functions.GraftExtensions)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Failures are caught per query so one broken plan can't zero the whole
     // dump — but they must be LOUD: round 6 lost all 38 events-table
@@ -30,34 +18,36 @@ object Verify {
     // dirs and the correctness gate graded what remained). The manifest
     // below records every failure next to the results.
     val failures = collection.mutable.ArrayBuffer.empty[(String, String)]
-    SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach { case (name, fn) =>
-      try {
-        // Isolate this query's analyses in the injected rule's drainable
-        // set (Verify is single-threaded between builders; streaming
-        // micro-batch threads run and complete INSIDE fn()).
-        graft.plans.DeterminismLint.drain()
-        val df = fn(spark, sfDir)
-        val during = graft.plans.DeterminismLint.drain()
-        // observability for the lint's per-shape occurrence band: the
-        // measured counts that calibrate DeterminismLint.maxDrainedPerShape
-        if (during.nonEmpty)
-          System.err.println(s"[verify] $name builder-time float-agg drains: " +
-            during.map(graft.plans.DeterminismLint.shapeOf).groupBy(identity)
-              .map { case (k, v) => s"$k x${v.size}" }.mkString(", "))
-        // Hard pre-gate (round-10 verdict item 7): the board-wide
-        // determinism lint runs on every dump, not just in specs — a
-        // query added without a spec run can't reach the driver carrying
-        // a raw float SUM/AVG outside the audited allowlist. A lint hit
-        // is recorded as a dump failure, which tools/check.py (and the
-        // driver's missing-result row) treats as a hard gate failure.
-        // `during` covers plans analyzed inside the builder (streaming
-        // sinks, side actions) that the returned plan never shows.
-        graft.plans.DeterminismLint.audit(name, df.queryExecution.analyzed, during)
-          .foreach(msg => throw new IllegalStateException(msg))
-        df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-      } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failures += name -> String.valueOf(e.getMessage)
+    Sessions.run(Sessions.query(sfDir, Sessions.cpus(4))) { spark =>
+      SparkEntry.queries.filter(_._1.startsWith(prefix)).foreach { case (name, fn) =>
+        try {
+          // Isolate this query's analyses in the injected rule's drainable
+          // set (Verify is single-threaded between builders; streaming
+          // micro-batch threads run and complete INSIDE fn()).
+          graft.plans.DeterminismLint.drain()
+          val df = fn(spark, sfDir)
+          val during = graft.plans.DeterminismLint.drain()
+          // observability for the lint's per-shape occurrence band: the
+          // measured counts that calibrate DeterminismLint.maxDrainedPerShape
+          if (during.nonEmpty)
+            System.err.println(s"[verify] $name builder-time float-agg drains: " +
+              during.map(graft.plans.DeterminismLint.shapeOf).groupBy(identity)
+                .map { case (k, v) => s"$k x${v.size}" }.mkString(", "))
+          // Hard pre-gate (round-10 verdict item 7): the board-wide
+          // determinism lint runs on every dump, not just in specs — a
+          // query added without a spec run can't reach the driver carrying
+          // a raw float SUM/AVG outside the audited allowlist. A lint hit
+          // is recorded as a dump failure, which tools/check.py (and the
+          // driver's missing-result row) treats as a hard gate failure.
+          // `during` covers plans analyzed inside the builder (streaming
+          // sinks, side actions) that the returned plan never shows.
+          graft.plans.DeterminismLint.audit(name, df.queryExecution.analyzed, during)
+            .foreach(msg => throw new IllegalStateException(msg))
+          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          failures += name -> String.valueOf(e.getMessage)
+        }
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
@@ -81,6 +71,5 @@ object Verify {
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} QUERIES FAILED: " +
         failures.map(_._1).mkString(", "))
-    spark.stop()
   }
 }

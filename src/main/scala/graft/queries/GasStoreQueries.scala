@@ -1194,61 +1194,42 @@ object GasStoreQueries {
        |  FROM read_csv('$fixtureDir/*.csv', header=true, filename=true)
        |  WHERE "Time (s)" <= 86400)""".stripMargin
 
+  /** gs02's raw-CSV replay of the time-range window, long form. gs36,
+    * gs37 and gs38 read the same window through other store layouts, and
+    * each keeps this replay as its ground truth. */
+  private val timeRangeReplay =
+    s"""$prelude,
+       |u AS (
+       |  UNPIVOT (SELECT * EXCLUDE ("Time (s)", filename) FROM raw)
+       |  ON COLUMNS(* EXCLUDE (_time)) INTO NAME _field VALUE _value)
+       |SELECT epoch_us(_time) AS t_us, _field, _value FROM u
+       |WHERE _time >= TIMESTAMP '2016-10-07 12:00:00'
+       |  AND _time < TIMESTAMP '2016-10-08 00:00:30'
+       |ORDER BY t_us, _field""".stripMargin
+
   val oracle: Map[String, String] = Map(
     "gs01_field_filter" ->
       s"""$prelude
          |SELECT epoch_us(_time) AS t_us, 'CO (ppm)' AS _field, "CO (ppm)" AS _value
          |FROM raw ORDER BY t_us""".stripMargin,
 
-    "gs02_time_range" ->
-      s"""$prelude,
-         |u AS (
-         |  UNPIVOT (SELECT * EXCLUDE ("Time (s)", filename) FROM raw)
-         |  ON COLUMNS(* EXCLUDE (_time)) INTO NAME _field VALUE _value)
-         |SELECT epoch_us(_time) AS t_us, _field, _value FROM u
-         |WHERE _time >= TIMESTAMP '2016-10-07 12:00:00'
-         |  AND _time < TIMESTAMP '2016-10-08 00:00:30'
-         |ORDER BY t_us, _field""".stripMargin,
+    "gs02_time_range" -> timeRangeReplay,
 
     // gs36 = gs02 planned through the manifest; the ground truth is the
     // SAME raw-CSV replay — a manifest hole (missing partition, stale
     // entry, wrong window arithmetic) drops rows and flips the hash
-    "gs36_manifest_time_range" ->
-      s"""$prelude,
-         |u AS (
-         |  UNPIVOT (SELECT * EXCLUDE ("Time (s)", filename) FROM raw)
-         |  ON COLUMNS(* EXCLUDE (_time)) INTO NAME _field VALUE _value)
-         |SELECT epoch_us(_time) AS t_us, _field, _value FROM u
-         |WHERE _time >= TIMESTAMP '2016-10-07 12:00:00'
-         |  AND _time < TIMESTAMP '2016-10-08 00:00:30'
-         |ORDER BY t_us, _field""".stripMargin,
+    "gs36_manifest_time_range" -> timeRangeReplay,
 
     // gs37 = gs36 over the streaming-built store; the ground truth stays
     // the raw-CSV replay, so a hole in the STREAMING manifest wiring
     // (missing append, wrong _src set, torn compaction) flips the hash
-    "gs37_manifest_stream_store" ->
-      s"""$prelude,
-         |u AS (
-         |  UNPIVOT (SELECT * EXCLUDE ("Time (s)", filename) FROM raw)
-         |  ON COLUMNS(* EXCLUDE (_time)) INTO NAME _field VALUE _value)
-         |SELECT epoch_us(_time) AS t_us, _field, _value FROM u
-         |WHERE _time >= TIMESTAMP '2016-10-07 12:00:00'
-         |  AND _time < TIMESTAMP '2016-10-08 00:00:30'
-         |ORDER BY t_us, _field""".stripMargin,
+    "gs37_manifest_stream_store" -> timeRangeReplay,
 
     // gs38 = gs36 over the snapshot (commit-log) store after a re-ingest
     // round + vacuum; the ground truth is STILL the single clean raw-CSV
     // replay — so a generation union (doubled rows), a stale-generation
     // read, or a vacuum overreach all flip the hash
-    "gs38_snapshot_time_range" ->
-      s"""$prelude,
-         |u AS (
-         |  UNPIVOT (SELECT * EXCLUDE ("Time (s)", filename) FROM raw)
-         |  ON COLUMNS(* EXCLUDE (_time)) INTO NAME _field VALUE _value)
-         |SELECT epoch_us(_time) AS t_us, _field, _value FROM u
-         |WHERE _time >= TIMESTAMP '2016-10-07 12:00:00'
-         |  AND _time < TIMESTAMP '2016-10-08 00:00:30'
-         |ORDER BY t_us, _field""".stripMargin,
+    "gs38_snapshot_time_range" -> timeRangeReplay,
 
     "gs03_field_day_mean" ->
       s"""$prelude,

@@ -87,23 +87,42 @@ package object queries {
     * Spark's scheduler happily runs jobs submitted from several driver
     * threads at once (optimization guide §2.6 — FIFO back-fill), so
     * independent barrier chains are submitted together and the wall cost
-    * is max(chain), not sum. Failures propagate: any thunk's exception
-    * rethrows here. Results keep argument order. */
+    * is max(chain), not sum. Results keep argument order.
+    *
+    * Each thunk runs on its own thread of a pool that lives for this call
+    * (shut down before it returns), with the caller's active session, and tags its Spark jobs with this
+    * call's job tag (a tag, not a job group, so the caller's own group stays
+    * on the jobs). The first thunk to throw cancels the tag: its siblings'
+    * jobs end as cancelled instead of running to the end, and the exception
+    * rethrows once every sibling has returned, so no job of this call
+    * outlives it. */
   def inParallel[T](thunks: (() => T)*): Seq[T] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    // propagate the caller's active session onto the pool threads (r16
-    // ADVICE): a thunk that parses standalone expr()/builds frames on a
-    // fresh ForkJoinPool thread would otherwise fall back to the default
-    // session — or a STALE one (e.g. a query's ObjectHashAggregate-
-    // threshold child session left active by an earlier concurrent run)
-    val active = SparkSession.getActiveSession
-    val fs = thunks.map(t => Future {
-      active.foreach(SparkSession.setActiveSession)
+    import java.util.concurrent.{ExecutionException, ExecutorCompletionService, Executors, TimeUnit}
+    val session = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+    val tag = s"graft-inParallel-${java.util.UUID.randomUUID}"
+    val pool = Executors.newFixedThreadPool(math.max(thunks.size, 1))
+    val done = new ExecutorCompletionService[T](pool)
+    val futures = thunks.map(t => done.submit { () =>
+      session.foreach { s =>
+        SparkSession.setActiveSession(s)
+        s.sparkContext.addJobTag(tag)
+        s.sparkContext.setInterruptOnCancel(true)
+      }
       t()
     })
-    fs.map(Await.result(_, Duration.Inf))
+    def cancel(): Unit = session.foreach(_.sparkContext.cancelJobsWithTag(tag))
+    try {
+      thunks.foreach { _ =>
+        try done.take().get()
+        catch { case e: ExecutionException => throw e.getCause }
+      }
+      futures.map(_.get())
+    } catch { case e: Throwable =>
+      cancel()
+      pool.shutdown()
+      // a sibling still planning submits its job after the first cancel
+      while (!pool.awaitTermination(100, TimeUnit.MILLISECONDS)) cancel()
+      throw e
+    } finally pool.shutdown()
   }
-
 }
