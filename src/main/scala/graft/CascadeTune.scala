@@ -64,7 +64,6 @@ object CascadeTune {
         else {
           val b0 = System.nanoTime()
           val pre = VectorOps.withHashAggBudget { (s, d) =>
-            graft.functions.VectorFunctions.register(s)
             val e = VectorOps.emb(s, d)
             val dd = e.select(size(col("emb"))).head().getInt(0)
             val wv = if (w > 0) w else VectorOps.derivedWords(dd)
@@ -77,7 +76,6 @@ object CascadeTune {
         }
       val t0 = System.nanoTime()
       val armRun = VectorOps.withHashAggBudget { (s, d) =>
-        graft.functions.VectorFunctions.register(s)
         val casc =
           if (st == 1)
             VectorOps.cascadePqStored(s, d, k = k, stride = s0, steps = t,

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.expr
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Native Catalyst expression for the similarity-search hot path.
@@ -571,16 +571,23 @@ object VectorFunctions {
   }
 
   /** Register the native functions in the session's function registry
-    * (idempotent) so they are usable from SQL and `expr(...)`. */
+    * (idempotent) so they are usable from SQL and `expr(...)`. Replacing a
+    * function the registry already holds logs a WARN per function. */
   def register(spark: SparkSession): Unit =
     injectable.foreach { case (name, builder) =>
       spark.sessionState.functionRegistry
         .createOrReplaceTempFunction(name, builder, "built-in")
     }
 
-  /** `dot(a, b)` over two array<double> columns via the native expression. */
-  def dot(spark: SparkSession, a: String, b: String): Column = {
-    register(spark)
-    expr(s"graft_dot($a, $b)")
+  /** Register only the native functions the session's registry lacks. A
+    * session built with [[GraftExtensions]] already holds them all, so this
+    * leaves it untouched; a session without the extensions (the test
+    * suite's, or `newSession()` of one) gets them here. */
+  def ensure(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    injectable.foreach { case (name, builder) =>
+      if (!registry.functionExists(FunctionIdentifier(name)))
+        registry.createOrReplaceTempFunction(name, builder, "built-in")
+    }
   }
 }

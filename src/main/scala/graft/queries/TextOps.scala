@@ -115,16 +115,38 @@ object TextOps {
       .agg(sum(col("nb")).as("n_bigrams"), sum(col("nb") * col("lr")).as("w"))
   }
 
-  val queries: Map[String, Q] = Map(
+  /** Injected markup fixtures — shared verbatim by tx46 and its oracle. */
+  private val TX46_HTML_ROW =
+    "<p>Hello <b>world</b> &amp; friends</p>  <div class=\"x\">tail" +
+      "   text &lt;kept&gt;</div>"
+  private val TX46_BROKEN_ROW =
+    "plain &quot;quoted&quot; start <span>open tag never closed " +
+      "and   wide   gaps"
+
+  /** Fixed BPE merge vocabulary, in rank order. Valid by construction: every
+    * rule's left/right part is a single character or the product of a
+    * strictly earlier rule. */
+  private val bpeMerges: Seq[(String, String)] = Seq(
+    "t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n", "an" -> "d",
+    "e" -> "r", "o" -> "n", "r" -> "e", "a" -> "t", "e" -> "n",
+    "o" -> "r", "e" -> "s", "s" -> "t", "in" -> "g", "o" -> "u",
+    "c" -> "h", "l" -> "l", "w" -> "h", "th" -> "at", "ou" -> "r")
+
+  private val dTok = raw"regexp_split_to_array(trim(lower(text)), '\s+')"
+  private val dStop = "('the', 'a', 'of', 'and', 'to', 'in', 'is')"
+
+  val specs: Seq[QuerySpec] = Seq(
     // exact dedup by content hash: keep lowest doc_id per identical text
-    "tx01_exact_dedup" -> ((s, dir) =>
+    QuerySpec("tx01_exact_dedup", (s, dir) =>
       docs(s, dir)
         .groupBy(md5(col("text").cast("binary")).as("text_hash"))
         .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"))
-        .orderBy(col("keep_id"))),
+        .orderBy(col("keep_id")),
+      """SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
+        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin),
 
     // token counting + corpus stats per (lang, source)
-    "tx02_token_stats" -> ((s, dir) =>
+    QuerySpec("tx02_token_stats", (s, dir) =>
       docs(s, dir)
         .withColumn("n_tokens", expr(s"size($tokExpr)").cast("long"))
         .groupBy(col("lang"), col("source"))
@@ -133,10 +155,16 @@ object TextOps {
           (sum(col("n_tokens")).cast("double") / count(lit(1))).as("avg_tokens"),
           (sum(col("n_chars")).cast("double") / count(lit(1))).as("avg_chars"),
           max(col("n_tokens")).as("max_tokens"))
-        .orderBy(col("lang"), col("source"))),
+        .orderBy(col("lang"), col("source")),
+      s"""WITH d AS (SELECT lang, source, n_chars, len($dTok) AS n_tokens FROM documents)
+         |SELECT lang, source, COUNT(*) AS n_docs,
+         |  CAST(SUM(n_tokens) AS DOUBLE) / COUNT(*) AS avg_tokens,
+         |  CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars,
+         |  MAX(n_tokens) AS max_tokens
+         |FROM d GROUP BY lang, source ORDER BY lang, source""".stripMargin),
 
     // per-document quality scoring (length / punctuation / stopword ratios)
-    "tx03_quality_score" -> ((s, dir) =>
+    QuerySpec("tx03_quality_score", (s, dir) =>
       fanout(docs(s, dir))
         .withColumn("n_tokens", expr(s"size($tokExpr)").cast("long"))
         .withColumn("n_stop",
@@ -150,10 +178,22 @@ object TextOps {
             lit(0.6) * least(lit(1.0), col("n_tokens").cast("double") / lit(100.0)), 6))
         .select(col("doc_id"), col("n_tokens"), col("n_stop"), col("n_punct"),
           col("stop_ratio"), col("char_per_token"), col("quality_score"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""WITH d AS (
+         |  SELECT doc_id, text,
+         |    len($dTok) AS n_tokens,
+         |    len(list_filter($dTok, t -> t IN $dStop)) AS n_stop,
+         |    length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct
+         |  FROM documents)
+         |SELECT doc_id, n_tokens, n_stop, n_punct,
+         |  CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio,
+         |  CAST(length(text) AS DOUBLE) / n_tokens AS char_per_token,
+         |  ROUND(0.4 * (CAST(n_stop AS DOUBLE) / n_tokens)
+         |      + 0.6 * LEAST(1.0, CAST(n_tokens AS DOUBLE) / 100.0), 6) AS quality_score
+         |FROM d ORDER BY doc_id""".stripMargin),
 
     // heuristic language ID (stopword-profile scoring) vs. the labeled lang
-    "tx04_langid_confusion" -> ((s, dir) =>
+    QuerySpec("tx04_langid_confusion", (s, dir) =>
       fanout(docs(s, dir))
         .withColumn("stop_ratio",
           expr(s"size(filter($tokExpr, t -> t IN $stopList))").cast("double") /
@@ -161,10 +201,17 @@ object TextOps {
         .withColumn("predicted", when(col("stop_ratio") >= 0.08, "en").otherwise("other"))
         .groupBy(col("predicted"), col("lang"))
         .agg(count(lit(1)).as("n"))
-        .orderBy(col("predicted"), col("lang"))),
+        .orderBy(col("predicted"), col("lang")),
+      s"""WITH d AS (
+         |  SELECT lang,
+         |    CAST(len(list_filter($dTok, t -> t IN $dStop)) AS DOUBLE) / len($dTok) AS stop_ratio
+         |  FROM documents)
+         |SELECT CASE WHEN stop_ratio >= 0.08 THEN 'en' ELSE 'other' END AS predicted,
+         |  lang, COUNT(*) AS n
+         |FROM d GROUP BY predicted, lang ORDER BY predicted, lang""".stripMargin),
 
     // MinHash + LSH banding: near-duplicate candidate pairs
-    "tx05_minhash_pairs" -> ((s, dir) => {
+    QuerySpec("tx05_minhash_pairs", (s, dir) => {
       val bd = bandSignatures(fanout(docs(s, dir)), shingleWords = 3)
       val a = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_a"))
       val c = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_b"))
@@ -173,7 +220,23 @@ object TextOps {
         .groupBy(col("doc_a"), col("doc_b"))
         .agg(count(lit(1)).as("n_shared_bands"))
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    },
+      s"""WITH toks AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |sh AS (
+         |  SELECT DISTINCT doc_id,
+         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
+         |  FROM toks WHERE len(tk) >= 3),
+         |hs AS (
+         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
+         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
+         |bd AS (
+         |  SELECT doc_id, j // 4 AS b,
+         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
+         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
+         |  FROM hs GROUP BY doc_id, j // 4)
+         |SELECT a.doc_id AS doc_a, c.doc_id AS doc_b, COUNT(*) AS n_shared_bands
+         |FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig AND a.doc_id < c.doc_id
+         |GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b""".stripMargin),
 
     // exact n-gram Jaccard on a deterministic pair sample, INTERSECTING
     // pairs only — the tx35-style shingle-keyed inverted-index join
@@ -185,7 +248,7 @@ object TextOps {
     // the 1/37 × 1/41 id sample is what bounds the posting lists).
     // Zero-intersection pairs carry jaccard 0 by definition and are no
     // longer enumerated.
-    "tx06_ngram_jaccard" -> ((s, dir) => {
+    QuerySpec("tx06_ngram_jaccard", (s, dir) => {
       val sh = fanout(docs(s, dir))
         .selectExpr("doc_id", s"$tokExpr AS tk")
         .where(expr("size(tk) >= 3"))
@@ -211,15 +274,35 @@ object TextOps {
         .withColumn("jaccard", col("n_inter").cast("double") / col("n_union"))
         .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_union"), col("jaccard"))
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    },
+      s"""WITH sh AS (
+         |  SELECT doc_id,
+         |    list_distinct(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
+         |  FROM (SELECT doc_id, $dTok AS tk FROM documents) WHERE len(tk) >= 3),
+         |p AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |    len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_inter,
+         |    len(a.sh) + len(b.sh) - len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_union
+         |  FROM sh a, sh b
+         |  WHERE a.doc_id % 37 = 0 AND b.doc_id % 41 = 0 AND a.doc_id < b.doc_id)
+         |SELECT doc_a, doc_b, CAST(n_inter AS BIGINT) AS n_inter,
+         |  CAST(n_union AS BIGINT) AS n_union,
+         |  CAST(n_inter AS DOUBLE) / n_union AS jaccard
+         |FROM p WHERE n_inter >= 1 ORDER BY doc_a, doc_b""".stripMargin),
 
     // document fingerprint: 64-char polynomial rolling hash mod 1e9+7
-    "tx07_fingerprint" -> ((s, dir) =>
+    QuerySpec("tx07_fingerprint", (s, dir) =>
       fanout(docs(s, dir))
         .withColumn("fp", expr(
           "aggregate(sequence(1, least(length(text), 64)), 0L, (acc, i) -> pmod(acc * 31 + ascii(substring(text, i, 1)), 1000000007))"))
         .select(col("doc_id"), col("fp"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      """SELECT doc_id,
+        |  list_reduce(
+        |    list_prepend(0::BIGINT,
+        |      list_transform(range(1, least(length(text), 64) + 1), i -> ascii(substr(text, i, 1)))),
+        |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fp
+        |FROM documents ORDER BY doc_id""".stripMargin),
 
     // SimHash near-dup: 64-bit signature from token hashes, LSH-banded into
     // 2×32-bit bands, candidate pairs scored by hamming distance. Like
@@ -229,14 +312,13 @@ object TextOps {
     // corpus put ~2.4M pairs in buckets at sf0.1; 32-bit bands cut that to
     // ~150k while still catching everything within hamming 8 of a dup in
     // at least one half.
-    "tx08_simhash_pairs" -> ((s, dir) => {
+    QuerySpec("tx08_simhash_pairs", (s, dir) => {
       // The whole 64-bit signature is ONE per-row expression
       // (graft.functions.SimHashExpr): tokenize + distinct + md5 + majority
       // in a single pass per document — no token explode, no shuffle at all
       // before the (band, value) bucket join, which is exactly the shuffle
       // LSH needs anyway. (Earlier layouts shuffled |token| or 16×|token|
       // rows through one or two groupBys first.)
-      graft.functions.VectorFunctions.register(s)
       // (doc_id, 16-char hash) per row — barriered: both bucket-join sides
       // re-ran the full tokenize+hash+majority signature pass otherwise
       // (r16; Barriers.eager = SWEEP17's A/B lever)
@@ -267,11 +349,41 @@ object TextOps {
         .filter(col("hamming") <= 8)
         .select(col("doc_a"), col("doc_b"), col("n_shared_bands"), col("hamming"))
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    },
+      s"""WITH toks AS (SELECT DISTINCT doc_id, unnest($dTok) AS tok FROM documents),
+         |h AS (SELECT doc_id, md5(tok) AS h FROM toks),
+         |bits AS (
+         |  SELECT doc_id, i,
+         |    ((strpos('0123456789abcdef', substr(h, 1 + CAST(i // 4 AS INT), 1)) - 1)
+         |      >> (3 - CAST(i % 4 AS INT))) & 1 AS bit
+         |  FROM h, range(0, 64) t(i)),
+         |sb AS (SELECT doc_id, i, CASE WHEN SUM(2 * bit - 1) > 0 THEN 1 ELSE 0 END AS sbit
+         |       FROM bits GROUP BY doc_id, i),
+         |nib AS (SELECT doc_id, i // 4 AS ni,
+         |    substr('0123456789abcdef', CAST(SUM(sbit << CAST(3 - (i % 4) AS INT)) AS INT) + 1, 1) AS ch
+         |  FROM sb GROUP BY doc_id, i // 4),
+         |sig AS (SELECT doc_id, string_agg(ch, '' ORDER BY ni) AS simhash FROM nib GROUP BY doc_id),
+         |bands AS (SELECT doc_id, simhash, b, substr(simhash, CAST(1 + 8 * b AS INT), 8) AS band
+         |          FROM sig, range(0, 2) t(b)),
+         |p AS (
+         |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
+         |    a.simhash AS sig_a, c.simhash AS sig_b, COUNT(*) AS n_shared_bands
+         |  FROM bands a JOIN bands c ON a.b = c.b AND a.band = c.band AND a.doc_id < c.doc_id
+         |  GROUP BY 1, 2, 3, 4),
+         |hd AS (
+         |  SELECT doc_a, doc_b, n_shared_bands,
+         |    CAST(list_sum(list_transform(range(1, 17), q ->
+         |      CAST(substr('0112122312232334',
+         |        1 + CAST(xor(strpos('0123456789abcdef', substr(sig_a, CAST(q AS INT), 1)) - 1,
+         |                     strpos('0123456789abcdef', substr(sig_b, CAST(q AS INT), 1)) - 1) AS INT), 1) AS INT)))
+         |      AS INT) AS hamming
+         |  FROM p)
+         |SELECT doc_a, doc_b, n_shared_bands, hamming
+         |FROM hd WHERE hamming <= 8 ORDER BY doc_a, doc_b""".stripMargin),
 
     // token counting, BPE-ish: word/number/punctuation regex vs whitespace
     // (the cheap pre-tokenizer estimate; tx10 is the real merge-table BPE)
-    "tx09_bpe_tokens" -> ((s, dir) =>
+    QuerySpec("tx09_bpe_tokens", (s, dir) =>
       fanout(docs(s, dir))
         .withColumn("ws_tokens", expr(s"size($tokExpr)").cast("long"))
         .withColumn("bpe_tokens",
@@ -282,7 +394,15 @@ object TextOps {
           sum(col("ws_tokens")).as("total_ws_tokens"),
           sum(col("bpe_tokens")).as("total_bpe_tokens"),
           (sum(col("bpe_tokens")).cast("double") / sum(col("ws_tokens"))).as("bpe_per_ws"))
-        .orderBy(col("lang"))),
+        .orderBy(col("lang")),
+      s"""WITH d AS (SELECT lang, len($dTok) AS ws_tokens,
+         |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS bpe_tokens
+         |  FROM documents)
+         |SELECT lang, COUNT(*) AS n_docs,
+         |  CAST(SUM(ws_tokens) AS BIGINT) AS total_ws_tokens,
+         |  CAST(SUM(bpe_tokens) AS BIGINT) AS total_bpe_tokens,
+         |  CAST(SUM(bpe_tokens) AS DOUBLE) / SUM(ws_tokens) AS bpe_per_ws
+         |FROM d GROUP BY lang ORDER BY lang""".stripMargin),
 
     // REAL merge-table BPE token counting: greedy application of a fixed
     // 20-rule merge vocabulary in rank order. Tokens are parenthesis-wrapped
@@ -296,7 +416,7 @@ object TextOps {
     // which no rule ranked < k can reference. Token count = remaining '('.
     // All ops are codegen'd string builtins — narrow, no shuffle before the
     // per-language aggregate.
-    "tx10_bpe_merge_tokens" -> ((s, dir) => {
+    QuerySpec("tx10_bpe_merge_tokens", (s, dir) => {
       val wrapped =
         "regexp_replace(regexp_replace(lower(text), '[^a-z]+', ' '), '([a-z])', '($1)')"
       val merged = bpeMerges.foldLeft(wrapped) { case (acc, (x, y)) =>
@@ -307,7 +427,18 @@ object TextOps {
         .selectExpr("doc_id", "lang",
           "cast(length(m) - length(replace(m, '(', '')) as long) AS bpe_tokens")
         .orderBy(col("doc_id"))
-    }),
+    },
+      {
+        val wrapped =
+          raw"regexp_replace(regexp_replace(lower(text), '[^a-z]+', ' ', 'g'), '([a-z])', '(\1)', 'g')"
+        val merged = bpeMerges.foldLeft(wrapped) { case (acc, (x, y)) =>
+          s"replace($acc, '($x)($y)', '($x$y)')"
+        }
+        s"""SELECT doc_id, lang,
+           |  CAST(length(m) - length(replace(m, '(', '')) AS BIGINT) AS bpe_tokens
+           |FROM (SELECT doc_id, lang, $merged AS m FROM documents)
+           |ORDER BY doc_id""".stripMargin
+      }),
 
     // the DEDUP DECISION on top of MinHash-LSH (tx05 lists candidate pairs;
     // this emits the per-document keep/drop verdict an LLM-data pipeline
@@ -317,7 +448,7 @@ object TextOps {
     // single min-neighbor pass, not transitive closure: LSH duplicate
     // groups are bucket-cliques, where the two coincide; chains longer
     // than one hop would need an iterated propagation.)
-    "tx11_neardup_dedup" -> ((s, dir) => {
+    QuerySpec("tx11_neardup_dedup", (s, dir) => {
       val bd = bandSignatures(fanout(docs(s, dir)), shingleWords = 3)
       val a = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_a"))
       val c = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_b"))
@@ -329,7 +460,28 @@ object TextOps {
         .join(canon, Seq("doc_id"), "left")
         .withColumn("is_kept", col("canonical_id").isNull)
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""WITH toks AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |sh AS (
+         |  SELECT DISTINCT doc_id,
+         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
+         |  FROM toks WHERE len(tk) >= 3),
+         |hs AS (
+         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
+         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
+         |bd AS (
+         |  SELECT doc_id, j // 4 AS b,
+         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
+         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
+         |  FROM hs GROUP BY doc_id, j // 4),
+         |canon AS (
+         |  SELECT c.doc_id AS doc_id, MIN(a.doc_id) AS canonical_id
+         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
+         |    AND a.doc_id < c.doc_id
+         |  GROUP BY c.doc_id)
+         |SELECT d.doc_id, canonical_id, canonical_id IS NULL AS is_kept
+         |FROM documents d LEFT JOIN canon USING (doc_id)
+         |ORDER BY d.doc_id""".stripMargin),
 
     // QUALITY-BASED SURVIVORSHIP — the "which copy do we keep" decision a
     // dedup run makes AFTER clustering: tx14 keeps the minimum id (an
@@ -339,7 +491,7 @@ object TextOps {
     // One max-struct aggregate per component on top of tx14's component
     // assignment — the survivor pick adds a single component-keyed
     // shuffle over the (tiny) per-doc frame, nothing over pair scale.
-    "tx36_dedup_survivorship" -> ((s, dir) => {
+    QuerySpec("tx36_dedup_survivorship", (s, dir) => {
       val bd = bandSignatures(fanout(docs(s, dir)), shingleWords = 3)
       val a = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_a"))
       val c = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_b"))
@@ -361,7 +513,46 @@ object TextOps {
         .select(col("doc_id"), col("component"), col("n_chars"),
           col("survivor_id"), col("is_survivor"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // tx14's component replay + a rank-argmax survivor pick
+      // (n_chars DESC, doc_id ASC — the same deterministic tie rule)
+      s"""WITH RECURSIVE toks AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |sh AS (
+         |  SELECT DISTINCT doc_id,
+         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
+         |  FROM toks WHERE len(tk) >= 3),
+         |hs AS (
+         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
+         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
+         |bd AS (
+         |  SELECT doc_id, j // 4 AS b,
+         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
+         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
+         |  FROM hs GROUP BY doc_id, j // 4),
+         |pairs AS (
+         |  SELECT DISTINCT a.doc_id AS src, c.doc_id AS dst
+         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
+         |    AND a.doc_id < c.doc_id),
+         |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+         |verts AS (SELECT DISTINCT src AS id FROM sym),
+         |reach(id, r) AS (
+         |  SELECT id, id FROM verts
+         |  UNION
+         |  SELECT s.src, reach.r FROM sym s JOIN reach ON s.dst = reach.id),
+         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
+         |wc AS (
+         |  SELECT d.doc_id, d.n_chars,
+         |    COALESCE(comp.label, d.doc_id) AS component
+         |  FROM documents d LEFT JOIN comp ON comp.id = d.doc_id),
+         |sv AS (
+         |  SELECT component, doc_id AS survivor_id FROM (
+         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY component
+         |      ORDER BY n_chars DESC, doc_id) AS rn FROM wc)
+         |  WHERE rn = 1)
+         |SELECT wc.doc_id, wc.component, wc.n_chars, sv.survivor_id,
+         |  wc.doc_id = sv.survivor_id AS is_survivor
+         |FROM wc JOIN sv USING (component)
+         |ORDER BY wc.doc_id""".stripMargin),
 
     // POINTWISE MUTUAL INFORMATION collocations — the corpus-statistics
     // pass behind phrase mining and tokenizer-merge candidates: which
@@ -378,7 +569,7 @@ object TextOps {
     // integer-ratio quotient — the tx21/cn03 discipline, 6-dp-rounded.
     // Top-50 by (pmi DESC, w1, w2) is a total order → deterministic
     // TakeOrderedAndProject.
-    "tx37_pmi_bigrams" -> ((s, dir) => {
+    QuerySpec("tx37_pmi_bigrams", (s, dir) => {
       val tk = fanout(docs(s, dir))
         .select(col("doc_id"), expr(tokExpr).as("toks"))
         .filter(size(col("toks")) >= 2)
@@ -399,7 +590,26 @@ object TextOps {
         .select(col("w1"), col("w2"), col("c_ab"), col("pmi"))
         .orderBy(col("pmi").desc, col("w1"), col("w2"))
         .limit(50)
-    }),
+    },
+      // bigram slots via unnest + generate_subscripts (the v17-proven
+      // form) and a pos+1 self-join; same 6-dp ln of one exact
+      // integer-ratio quotient (DuckDB ln = natural log)
+      s"""WITH t AS (SELECT doc_id, $dTok AS toks FROM documents),
+         |t2 AS (SELECT * FROM t WHERE len(toks) >= 2),
+         |u AS (SELECT doc_id, unnest(toks) AS w,
+         |        generate_subscripts(toks, 1) AS pos FROM t2),
+         |b AS (SELECT a.w AS w1, c.w AS w2 FROM u a JOIN u c
+         |      ON c.doc_id = a.doc_id AND c.pos = a.pos + 1),
+         |n AS (SELECT COUNT(*) AS nn FROM b),
+         |c1 AS (SELECT w1 AS w, COUNT(*) AS ca FROM b GROUP BY 1),
+         |c2 AS (SELECT w2 AS w, COUNT(*) AS cb FROM b GROUP BY 1),
+         |ab AS (SELECT w1, w2, COUNT(*) AS c_ab FROM b GROUP BY 1, 2
+         |       HAVING COUNT(*) >= 5)
+         |SELECT ab.w1, ab.w2, c_ab,
+         |  ROUND(ln(CAST(c_ab * nn AS DOUBLE)
+         |    / CAST(c1.ca * c2.cb AS DOUBLE)), 6) AS pmi
+         |FROM ab JOIN c1 ON c1.w = ab.w1 JOIN c2 ON c2.w = ab.w2, n
+         |ORDER BY pmi DESC, w1, w2 LIMIT 50""".stripMargin),
 
     // ZIPF SLOPE + HEAPS COUNTS per source — the corpus-health statistics
     // a curation pipeline checks before trusting a crawl slice: natural
@@ -415,7 +625,7 @@ object TextOps {
     // conversion is the same round-to-nearest on every engine. Scale
     // shape: the word-count aggregate is vocab-bounded; the rank window
     // partitions by source over the vocab frame, never the corpus.
-    "tx38_zipf_heaps" -> ((s, dir) => {
+    QuerySpec("tx38_zipf_heaps", (s, dir) => {
       val wc = fanout(docs(s, dir))
         .select(col("source"), explode(expr(tokExpr)).as("w"))
         .groupBy(col("source"), col("w")).agg(count(lit(1)).as("c"))
@@ -440,7 +650,41 @@ object TextOps {
         .select(col("source"), col("n_tokens"), col("n_types"),
           col("zipf_slope"))
         .orderBy(col("source"))
-    }),
+    },
+      // the same exact-int64 OLS kernel: 6-dp ln pinned through a decimal
+      // into micro-units, int64 sums (CAST per the typed-sum rule), one
+      // final division of two exact int64s
+      s"""WITH wc AS (
+         |  SELECT source, w, COUNT(*) AS c FROM (
+         |    SELECT source, unnest($dTok) AS w FROM documents)
+         |  GROUP BY 1, 2),
+         |stats AS (
+         |  SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
+         |    COUNT(*) AS n_types
+         |  FROM wc GROUP BY 1),
+         |top AS (SELECT * FROM (
+         |    SELECT source, w, c,
+         |      CAST(ROW_NUMBER() OVER (PARTITION BY source
+         |        ORDER BY c DESC, w) AS BIGINT) AS rank
+         |    FROM wc) WHERE rank <= 100),
+         |xy AS (
+         |  SELECT source,
+         |    CAST(CAST(round(ln(CAST(rank AS DOUBLE)), 6) AS DECIMAL(18,6))
+         |      * 1000000 AS BIGINT) AS x6,
+         |    CAST(CAST(round(ln(CAST(c AS DOUBLE)), 6) AS DECIMAL(18,6))
+         |      * 1000000 AS BIGINT) AS y6
+         |  FROM top),
+         |fit AS (
+         |  SELECT source, COUNT(*) AS n,
+         |    CAST(SUM(x6) AS BIGINT) AS sx, CAST(SUM(y6) AS BIGINT) AS sy,
+         |    CAST(SUM(x6 * y6) AS BIGINT) AS sxy,
+         |    CAST(SUM(x6 * x6) AS BIGINT) AS sxx
+         |  FROM xy GROUP BY 1)
+         |SELECT s.source, s.n_tokens, s.n_types,
+         |  CAST(n * sxy - sx * sy AS DOUBLE)
+         |    / CAST(n * sxx - sx * sx AS DOUBLE) AS zipf_slope
+         |FROM stats s JOIN fit USING (source)
+         |ORDER BY source""".stripMargin),
 
     // TRANSITIVE-CLOSURE dedup groups — the shippable corpus-dedup verdict.
     // tx11's single-hop pass keeps doc C of a chain A~B~C when A,C share no
@@ -449,7 +693,7 @@ object TextOps {
     // every doc maps to the minimum id reachable through ANY chain of LSH
     // near-dup links. Cost: the tx05 pair pipeline + 2-3 label iterations of
     // two vertex-keyed shuffles each over the (tiny) vertex frame.
-    "tx14_dedup_groups" -> ((s, dir) => {
+    QuerySpec("tx14_dedup_groups", (s, dir) => {
       val bd = bandSignatures(fanout(docs(s, dir)), shingleWords = 3)
       val a = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_a"))
       val c = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_b"))
@@ -464,7 +708,38 @@ object TextOps {
         .withColumn("is_kept", col("canonical_id") === col("doc_id"))
         .select(col("doc_id"), col("canonical_id"), col("is_kept"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // same band/pair pipeline as tx05, then min-reachable-id per vertex via
+      // a recursive CTE — DuckDB's semi-naive evaluation of the same fixpoint
+      // the Spark side iterates explicitly
+      s"""WITH RECURSIVE toks AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |sh AS (
+         |  SELECT DISTINCT doc_id,
+         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
+         |  FROM toks WHERE len(tk) >= 3),
+         |hs AS (
+         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
+         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
+         |bd AS (
+         |  SELECT doc_id, j // 4 AS b,
+         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
+         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
+         |  FROM hs GROUP BY doc_id, j // 4),
+         |pairs AS (
+         |  SELECT DISTINCT a.doc_id AS src, c.doc_id AS dst
+         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
+         |    AND a.doc_id < c.doc_id),
+         |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+         |verts AS (SELECT DISTINCT src AS id FROM sym),
+         |reach(id, r) AS (
+         |  SELECT id, id FROM verts
+         |  UNION
+         |  SELECT s.src, reach.r FROM sym s JOIN reach ON s.dst = reach.id),
+         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id)
+         |SELECT d.doc_id, COALESCE(comp.label, d.doc_id) AS canonical_id,
+         |  COALESCE(comp.label, d.doc_id) = d.doc_id AS is_kept
+         |FROM documents d LEFT JOIN comp ON comp.id = d.doc_id
+         |ORDER BY d.doc_id""".stripMargin),
 
     // DEDUP CLUSTER-SIZE DISTRIBUTION — the REPORT a dedup run ships
     // with (how much is duplicated, and in what shape: a histogram
@@ -473,7 +748,7 @@ object TextOps {
     // twice: per-cluster size, then per-size (n_clusters, n_docs).
     // Scale shape: tx14's pipeline + two tiny hash aggregates (bounded
     // by |clusters| then by |distinct sizes|).
-    "tx34_dedup_cluster_stats" -> ((s, dir) => {
+    QuerySpec("tx34_dedup_cluster_stats", (s, dir) => {
       val bd = bandSignatures(fanout(docs(s, dir)), shingleWords = 3)
       val a = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_a"))
       val c = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_b"))
@@ -491,7 +766,41 @@ object TextOps {
         .agg(count(lit(1)).as("n_clusters"))
         .withColumn("n_docs", col("cluster_size") * col("n_clusters"))
         .orderBy(col("cluster_size"))
-    }),
+    },
+      // tx14's component replay rolled up to the size histogram
+      s"""WITH RECURSIVE toks AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |sh AS (
+         |  SELECT DISTINCT doc_id,
+         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
+         |  FROM toks WHERE len(tk) >= 3),
+         |hs AS (
+         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
+         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
+         |bd AS (
+         |  SELECT doc_id, j // 4 AS b,
+         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
+         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
+         |  FROM hs GROUP BY doc_id, j // 4),
+         |pairs AS (
+         |  SELECT DISTINCT a.doc_id AS src, c.doc_id AS dst
+         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
+         |    AND a.doc_id < c.doc_id),
+         |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+         |verts AS (SELECT DISTINCT src AS id FROM sym),
+         |reach(id, r) AS (
+         |  SELECT id, id FROM verts
+         |  UNION
+         |  SELECT s.src, reach.r FROM sym s JOIN reach ON s.dst = reach.id),
+         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
+         |sizes AS (
+         |  SELECT COALESCE(comp.label, d.doc_id) AS canonical_id,
+         |    COUNT(*) AS cluster_size
+         |  FROM documents d LEFT JOIN comp ON comp.id = d.doc_id
+         |  GROUP BY canonical_id)
+         |SELECT cluster_size, COUNT(*) AS n_clusters,
+         |  cluster_size * COUNT(*) AS n_docs
+         |FROM sizes GROUP BY cluster_size
+         |ORDER BY cluster_size""".stripMargin),
 
     // CONTAINMENT dedup — the ASYMMETRIC near-dup detector symmetric
     // Jaccard misses: a short doc pasted inside a long one scores
@@ -506,7 +815,7 @@ object TextOps {
     // arrive as pair-keyed counts from one groupBy; sizes join back on
     // doc id. Both containment directions are checked; pairs at ≥ 0.5
     // in either direction are reported.
-    "tx35_containment_dedup" -> ((s, dir) => {
+    QuerySpec("tx35_containment_dedup", (s, dir) => {
       val sh = fanout(docs(s, dir))
         .selectExpr("doc_id", s"$tokExpr AS tk")
         .where(expr("size(tk) >= 3"))
@@ -534,7 +843,32 @@ object TextOps {
         .select(col("doc_a"), col("doc_b"), col("n_inter"), col("n_a"),
           col("n_b"), col("containment"))
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    },
+      // full replay of the df-capped containment pipeline: same shingles,
+      // same df ≤ 50 cap, same pair counts, same IEEE divisions
+      s"""WITH sh AS (
+         |  SELECT doc_id,
+         |    unnest(list_distinct(list_transform(range(1, len(tk) - 1),
+         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS s
+         |  FROM (SELECT doc_id, $dTok AS tk FROM documents)
+         |  WHERE len(tk) >= 3),
+         |df AS (SELECT s, COUNT(*) AS d FROM sh GROUP BY s),
+         |rare AS (SELECT sh.doc_id, sh.s FROM sh JOIN df USING (s)
+         |         WHERE d <= 50),
+         |sz AS (SELECT doc_id, COUNT(*) AS n_sh FROM rare GROUP BY doc_id),
+         |p AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
+         |  FROM rare a JOIN rare b USING (s) WHERE a.doc_id < b.doc_id
+         |  GROUP BY 1, 2)
+         |SELECT doc_a, doc_b, n_inter, sa.n_sh AS n_a, sb.n_sh AS n_b,
+         |  greatest(CAST(n_inter AS DOUBLE) / sa.n_sh,
+         |           CAST(n_inter AS DOUBLE) / sb.n_sh) AS containment
+         |FROM p
+         |JOIN sz sa ON sa.doc_id = doc_a
+         |JOIN sz sb ON sb.doc_id = doc_b
+         |WHERE greatest(CAST(n_inter AS DOUBLE) / sa.n_sh,
+         |               CAST(n_inter AS DOUBLE) / sb.n_sh) >= 0.5
+         |ORDER BY doc_a, doc_b""".stripMargin),
 
     // LEAKAGE-FREE train/test split: assigning raw doc ids to splits leaks
     // whenever two near-duplicates straddle the boundary (the
@@ -544,7 +878,7 @@ object TextOps {
     // the tx20 reproducible-hash discipline on the COMPONENT id, so every
     // member of a dup cluster lands on the same side by construction.
     // Scale: tx14's pipeline + one map-side hash — no new shuffles.
-    "tx33_leakage_free_split" -> ((s, dir) => {
+    QuerySpec("tx33_leakage_free_split", (s, dir) => {
       val bd = bandSignatures(fanout(docs(s, dir)), shingleWords = 3)
       val a = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_a"))
       val c = bd.select(col("b"), col("band_sig"), col("doc_id").as("doc_b"))
@@ -561,13 +895,49 @@ object TextOps {
             "train").otherwise("test"))
         .select(col("doc_id"), col("component"), col("split"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // tx14's component replay + the split-hash assignment on the
+      // component id — same-cluster-same-side falls out arithmetically
+      s"""WITH RECURSIVE toks AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |sh AS (
+         |  SELECT DISTINCT doc_id,
+         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
+         |  FROM toks WHERE len(tk) >= 3),
+         |hs AS (
+         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
+         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
+         |bd AS (
+         |  SELECT doc_id, j // 4 AS b,
+         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
+         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
+         |  FROM hs GROUP BY doc_id, j // 4),
+         |pairs AS (
+         |  SELECT DISTINCT a.doc_id AS src, c.doc_id AS dst
+         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
+         |    AND a.doc_id < c.doc_id),
+         |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+         |verts AS (SELECT DISTINCT src AS id FROM sym),
+         |reach(id, r) AS (
+         |  SELECT id, id FROM verts
+         |  UNION
+         |  SELECT s.src, reach.r FROM sym s JOIN reach ON s.dst = reach.id),
+         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
+         |asg AS (
+         |  SELECT d.doc_id, COALESCE(comp.label, d.doc_id) AS component
+         |  FROM documents d LEFT JOIN comp ON comp.id = d.doc_id)
+         |SELECT doc_id, component,
+         |  CASE WHEN ((strpos('0123456789abcdef',
+         |      substr(md5('split:' || component), 1, 1)) - 1) * 16
+         |    + (strpos('0123456789abcdef',
+         |      substr(md5('split:' || component), 2, 1)) - 1)) % 10 < 9
+         |  THEN 'train' ELSE 'test' END AS split
+         |FROM asg ORDER BY doc_id""".stripMargin),
 
     // Gopher-style repetition quality signal: the duplicate-3-gram fraction
     // per document (1 - distinct/total shingles). High values mean looping
     // or boilerplate text — a standard drop rule in LLM-corpus filtering.
     // Narrow per-row work + no shuffle before the final sort.
-    "tx12_repetition" -> ((s, dir) =>
+    QuerySpec("tx12_repetition", (s, dir) =>
       fanout(docs(s, dir))
         .selectExpr("doc_id", s"$tokExpr AS tk")
         .where(expr("size(tk) >= 3"))
@@ -581,14 +951,23 @@ object TextOps {
           // cross-engine; the round was the ts29-class half-way hazard
           lit(1.0) - col("n_distinct").cast("double") / col("n_shingles"))
         .withColumn("drop_repetitive", col("rep_ratio") > 0.2)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      s"""WITH sh AS (
+         |  SELECT doc_id,
+         |    list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS sh
+         |  FROM (SELECT doc_id, $dTok AS tk FROM documents) WHERE len(tk) >= 3)
+         |SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles,
+         |  CAST(len(list_distinct(sh)) AS BIGINT) AS n_distinct,
+         |  1.0 - CAST(len(list_distinct(sh)) AS DOUBLE) / len(sh) AS rep_ratio,
+         |  (1.0 - CAST(len(list_distinct(sh)) AS DOUBLE) / len(sh)) > 0.2 AS drop_repetitive
+         |FROM sh ORDER BY doc_id""".stripMargin),
 
     // PII redaction pass: scrub email / phone / IPv4 patterns and count
     // redactions. The fixture corpus is synthetic, so deterministic PII is
     // INJECTED first (every 7th doc gains an email, every 11th a phone,
     // every 13th an IP) — the operator under test is the scrubber itself,
     // and the oracle replays injection + scrub.
-    "tx13_pii_scrub" -> ((s, dir) => {
+    QuerySpec("tx13_pii_scrub", (s, dir) => {
       val emailRe = "[a-z0-9._]+@[a-z0-9-]+\\\\.[a-z]{2,}"
       val phoneRe = "\\\\+1-[0-9]{3}-[0-9]{3}-[0-9]{4}"
       val ipRe = "[0-9]{1,3}\\\\.[0-9]{1,3}\\\\.[0-9]{1,3}\\\\.[0-9]{1,3}"
@@ -606,7 +985,26 @@ object TextOps {
           "cast((length(clean) - length(replace(clean, '<IP>', ''))) div 4 as long) AS n_ip",
           "md5(cast(clean as binary)) AS clean_md5")
         .orderBy(col("doc_id"))
-    }),
+    },
+      raw"""WITH r AS (
+           |  SELECT doc_id, text ||
+           |    CASE WHEN doc_id % 7 = 0 THEN ' contact user' || doc_id || '@example.com' ELSE '' END ||
+           |    CASE WHEN doc_id % 11 = 0 THEN ' call +1-555-867-5309' ELSE '' END ||
+           |    CASE WHEN doc_id % 13 = 0 THEN ' host 10.0.0.7' ELSE '' END AS raw
+           |  FROM documents),
+           |c AS (
+           |  SELECT doc_id,
+           |    regexp_replace(regexp_replace(regexp_replace(raw,
+           |      '[a-z0-9._]+@[a-z0-9-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
+           |      '\+1-[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g'),
+           |      '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '<IP>', 'g') AS clean
+           |  FROM r)
+           |SELECT doc_id,
+           |  CAST((length(clean) - length(replace(clean, '<EMAIL>', ''))) // 7 AS BIGINT) AS n_email,
+           |  CAST((length(clean) - length(replace(clean, '<PHONE>', ''))) // 7 AS BIGINT) AS n_phone,
+           |  CAST((length(clean) - length(replace(clean, '<IP>', ''))) // 4 AS BIGINT) AS n_ip,
+           |  md5(clean) AS clean_md5
+           |FROM c ORDER BY doc_id""".stripMargin),
 
     // Approximate token frequency via a COUNT-MIN SKETCH, expressed
     // relationally: d=4 hash rows × w=256 buckets. Each token occurrence
@@ -621,7 +1019,7 @@ object TextOps {
     // by collision mass). The top-20-by-exact comparison side is the
     // accuracy diagnostic: both engines build the identical sketch, so
     // n_est and overcount hash-match exactly.
-    "tx15_cms_heavy_hitters" -> ((s, dir) => {
+    QuerySpec("tx15_cms_heavy_hitters", (s, dir) => {
       val toks = fanout(docs(s, dir)).select(explode(expr(tokExpr)).as("token"))
       val cellStructs = (0 until 4).map(j =>
         s"named_struct('seed', $j, 'bucket', cast(conv(substr(md5(cast(concat('$j', ':', token) as binary)), 1, 2), 16, 10) as int))")
@@ -646,7 +1044,38 @@ object TextOps {
         .select(col("rnk"), col("token"), col("n_exact"), col("n_est"),
           col("overcount"))
         .orderBy(col("rnk"))
-    }),
+    },
+      // identical count-min sketch replay: same md5-derived (seed, bucket)
+      // cells (bucket = first md5 byte via nibble arithmetic), same min-over-
+      // rows estimate, so n_est/overcount match the engine bit-for-bit
+      s"""WITH toks AS (SELECT unnest($dTok) AS token FROM documents),
+         |cell AS (
+         |  SELECT j::VARCHAR AS js, md5(j::VARCHAR || ':' || token) AS h
+         |  FROM toks, range(0, 4) t(j)),
+         |cells AS (
+         |  SELECT js, 16 * (strpos('0123456789abcdef', substr(h, 1, 1)) - 1)
+         |            + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) AS bucket,
+         |    COUNT(*) AS cnt
+         |  FROM cell GROUP BY 1, 2),
+         |exact AS (SELECT token, COUNT(*) AS n_exact FROM toks GROUP BY token),
+         |top AS (SELECT token, n_exact,
+         |    ROW_NUMBER() OVER (ORDER BY n_exact DESC, token) AS rnk
+         |  FROM exact ORDER BY n_exact DESC, token LIMIT 20),
+         |probe AS (
+         |  SELECT rnk, token, n_exact, j::VARCHAR AS js,
+         |    md5(j::VARCHAR || ':' || token) AS h
+         |  FROM top, range(0, 4) t(j)),
+         |est AS (
+         |  SELECT rnk, token, n_exact, MIN(cnt) AS n_est
+         |  FROM (SELECT rnk, token, n_exact, js,
+         |          16 * (strpos('0123456789abcdef', substr(h, 1, 1)) - 1)
+         |          + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) AS bucket
+         |        FROM probe) p
+         |  JOIN cells USING (js, bucket)
+         |  GROUP BY rnk, token, n_exact)
+         |SELECT CAST(rnk AS BIGINT) AS rnk, token, n_exact, n_est,
+         |  n_est - n_exact AS overcount
+         |FROM est ORDER BY rnk""".stripMargin),
 
     // TF-IDF keyword extraction — the classic corpus-statistics text op:
     // tf = in-doc term count, idf = ln(N/df), top-3 terms per doc by
@@ -660,7 +1089,7 @@ object TextOps {
     // payloads past the first explode. Numerics: idf's ln sees the exact
     // IEEE quotient N/df (≤ |docs| distinct inputs) and tf·idf is rounded
     // at 6 dp before ranking, so both engines rank identically.
-    "tx16_tfidf_keywords" -> ((s, dir) => {
+    QuerySpec("tx16_tfidf_keywords", (s, dir) => {
       val tf = fanout(docs(s, dir))
         .select(col("doc_id"), explode(expr(tokExpr)).as("token"))
         .filter(col("token") =!= "")
@@ -679,7 +1108,22 @@ object TextOps {
         .filter(col("rnk") <= 3)
         .select(col("doc_id"), col("rnk"), col("token"), col("tfidf"))
         .orderBy(col("doc_id"), col("rnk"))
-    }),
+    },
+      s"""WITH tf AS (
+         |  SELECT doc_id, tok AS token, COUNT(*) AS tf
+         |  FROM (SELECT doc_id, unnest($dTok) AS tok FROM documents)
+         |  WHERE tok <> '' GROUP BY doc_id, tok),
+         |n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM tf),
+         |dfr AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
+         |x AS (
+         |  SELECT tf.doc_id, tf.token,
+         |    ROUND(CAST(tf.tf AS DOUBLE)
+         |      * ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)), 6) AS tfidf
+         |  FROM tf JOIN dfr USING (token), n),
+         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
+         |        ORDER BY tfidf DESC, token) AS rnk FROM x)
+         |SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, token, tfidf
+         |FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin),
 
     // Corpus-level boilerplate detection (the CCNet/RefinedWeb paragraph-
     // dedup shape, adapted to newline-free text): documents are cut into
@@ -692,7 +1136,7 @@ object TextOps {
     // 128-bit hash (no skew); the re-join probes the SAME exchange (AQE
     // reuse), and the per-doc rollup is one partial+final hash aggregate
     // on doc_id. Nothing is ever O(corpus²).
-    "tx17_boilerplate_chunks" -> ((s, dir) => {
+    QuerySpec("tx17_boilerplate_chunks", (s, dir) => {
       val chunks = fanout(docs(s, dir))
         .selectExpr("doc_id", s"$tokExpr AS tk")
         // guard before sequence(): Spark's sequence(1, 0) steps DOWN
@@ -715,7 +1159,23 @@ object TextOps {
             greatest(coalesce(col("n_chunks"), lit(0L)), lit(1L)).cast("double"))
             .as("dup_frac"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |i0 AS (SELECT doc_id, tk,
+         |         unnest(generate_series(1, len(tk) // 10)) AS i FROM tk),
+         |ch AS (SELECT doc_id,
+         |         md5(array_to_string(tk[(i-1)*10+1 : (i-1)*10+10], ' ')) AS ch
+         |       FROM i0),
+         |freq AS (SELECT ch, COUNT(DISTINCT doc_id) AS ndocs FROM ch GROUP BY ch),
+         |per AS (SELECT c.doc_id, COUNT(*) AS n_chunks,
+         |          SUM(CASE WHEN f.ndocs >= 2 THEN 1 ELSE 0 END) AS dup_chunks
+         |        FROM ch c JOIN freq f ON c.ch = f.ch GROUP BY c.doc_id)
+         |SELECT d.doc_id,
+         |  CAST(COALESCE(n_chunks, 0) AS BIGINT) AS n_chunks,
+         |  CAST(COALESCE(dup_chunks, 0) AS BIGINT) AS dup_chunks,
+         |  CAST(COALESCE(dup_chunks, 0) AS DOUBLE)
+         |    / CAST(greatest(COALESCE(n_chunks, 0), 1) AS DOUBLE) AS dup_frac
+         |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY d.doc_id""".stripMargin),
 
     // Benchmark decontamination (the PaLM/GPT-3 eval-overlap rule): a doc
     // is flagged when ≥5% of its sliding 8-token n-grams appear in the
@@ -729,7 +1189,7 @@ object TextOps {
     // the only exchange is the final per-doc rollup on doc_id. This is the
     // decontamination plan that survives 100 TB: corpus-side work is
     // embarrassingly parallel, benchmark-side state is O(eval suite).
-    "tx18_decontaminate" -> ((s, dir) => {
+    QuerySpec("tx18_decontaminate", (s, dir) => {
       val grams = fanout(docs(s, dir))
         .selectExpr("doc_id", s"$tokExpr AS tk")
         .where(expr("size(tk) >= 8"))
@@ -752,7 +1212,26 @@ object TextOps {
             greatest(coalesce(col("n_grams"), lit(0L)), lit(1L)).cast("double")
             >= 0.05).as("flagged"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |i0 AS (SELECT doc_id, tk,
+         |         unnest(generate_series(1, len(tk) - 7)) AS i
+         |       FROM tk WHERE len(tk) >= 8),
+         |g AS (SELECT doc_id,
+         |        md5(array_to_string(tk[i : i+7], ' ')) AS g
+         |      FROM i0),
+         |bench AS (SELECT DISTINCT g FROM g WHERE doc_id % 20 = 0),
+         |per AS (SELECT s.doc_id, COUNT(*) AS n_grams,
+         |          SUM(CASE WHEN b.g IS NOT NULL THEN 1 ELSE 0 END) AS contaminated
+         |        FROM (SELECT * FROM g WHERE doc_id % 20 <> 0) s
+         |        LEFT JOIN bench b ON s.g = b.g GROUP BY s.doc_id)
+         |SELECT d.doc_id,
+         |  CAST(COALESCE(n_grams, 0) AS BIGINT) AS n_grams,
+         |  CAST(COALESCE(contaminated, 0) AS BIGINT) AS contaminated,
+         |  CAST(COALESCE(contaminated, 0) AS DOUBLE)
+         |    / CAST(greatest(COALESCE(n_grams, 0), 1) AS DOUBLE) >= 0.05 AS flagged
+         |FROM documents d LEFT JOIN per USING (doc_id)
+         |WHERE d.doc_id % 20 <> 0 ORDER BY d.doc_id""".stripMargin),
 
     // GPT-style training-sequence packing (concat-and-chunk): documents are
     // concatenated in doc_id order into one token stream and cut into fixed
@@ -766,7 +1245,7 @@ object TextOps {
     // window where it is cheap, then come back as broadcast base offsets
     // and the within-bucket running sum is window-partitioned by bucket,
     // fully parallel. One narrow shuffle + one broadcast total.
-    "tx19_pack_sequences" -> ((s, dir) => {
+    QuerySpec("tx19_pack_sequences", (s, dir) => {
       import org.apache.spark.sql.expressions.Window
       val d = docs(s, dir)
         .selectExpr("doc_id", s"cast(size($tokExpr) as bigint) AS n_tok",
@@ -787,7 +1266,20 @@ object TextOps {
           "(tok_offset + n_tok - 1) div 512 - tok_offset div 512 + 1 AS n_seqs",
           "(tok_offset + n_tok - 1) div 512 > tok_offset div 512 AS crosses_seq")
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""WITH d AS (SELECT doc_id, len($dTok) AS n_tok FROM documents),
+         |o AS (SELECT doc_id, n_tok,
+         |  COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tok_offset
+         |  FROM d)
+         |SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
+         |  CAST(tok_offset AS BIGINT) AS tok_offset,
+         |  CAST(tok_offset // 512 AS BIGINT) AS seq_first,
+         |  CAST((tok_offset + n_tok - 1) // 512 AS BIGINT) AS seq_last,
+         |  CAST((tok_offset + n_tok - 1) // 512 - tok_offset // 512 + 1 AS BIGINT)
+         |    AS n_seqs,
+         |  (tok_offset + n_tok - 1) // 512 > tok_offset // 512 AS crosses_seq
+         |FROM o ORDER BY doc_id""".stripMargin),
 
     // Deterministic stratified sampling for training-mixture construction
     // (the Pile/ROOTS per-source weighting): each language stratum gets a
@@ -797,7 +1289,7 @@ object TextOps {
     // zero shuffle, and at 100 TB it composes with any scan since it only
     // needs the key and stratum columns. Thresholds are hex-string
     // compares: md5 is lowercase fixed-width, so lexicographic == numeric.
-    "tx20_stratified_sample" -> ((s, dir) =>
+    QuerySpec("tx20_stratified_sample", (s, dir) =>
       docs(s, dir)
         .withColumn("skey",
           substring(md5(col("doc_id").cast("string").cast("binary")), 1, 8))
@@ -807,8 +1299,14 @@ object TextOps {
             .otherwise(lit("80000000")))                 // rate 0.50
         .filter(col("skey") < col("thr"))
         .select(col("doc_id"), col("lang"), col("skey"))
-        .orderBy(col("doc_id")))
-    ,
+        .orderBy(col("doc_id")),
+      """WITH d AS (SELECT doc_id, lang,
+        |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS skey FROM documents)
+        |SELECT doc_id, lang, skey FROM d
+        |WHERE skey < CASE WHEN lang = 'en' THEN '40000000'
+        |                  WHEN lang = 'zh' THEN 'c0000000'
+        |                  ELSE '80000000' END
+        |ORDER BY doc_id""".stripMargin),
 
     // Unigram log-probability scoring — the PERPLEXITY FILTER of LLM data
     // curation (CCNet/Gopher-style: drop documents whose tokens are
@@ -821,7 +1319,7 @@ object TextOps {
     // token frequencies are one hash agg; the corpus total is a 1-row
     // broadcast; the per-doc rollup is a second hash agg on doc_id. The
     // tf frame is computed once and reused for both the LM and the scan.
-    "tx21_unigram_logprob" -> ((s, dir) => {
+    QuerySpec("tx21_unigram_logprob", (s, dir) => {
       val tf = fanout(docs(s, dir))
         .select(col("doc_id"), explode(expr(tokExpr)).as("token"))
         .filter(col("token") =!= "")
@@ -845,7 +1343,26 @@ object TextOps {
             .as("avg_nll"))
         .withColumn("flagged", col("avg_nll") >= 8.0)
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""WITH tf AS (
+         |  SELECT doc_id, tok AS token, COUNT(*) AS tf
+         |  FROM (SELECT doc_id, unnest($dTok) AS tok FROM documents)
+         |  WHERE tok <> '' GROUP BY doc_id, tok),
+         |freq AS (SELECT token, SUM(tf) AS cnt FROM tf GROUP BY token),
+         |tot AS (SELECT SUM(cnt) AS total FROM freq),
+         |terms AS (
+         |  SELECT tf.doc_id, tf.tf,
+         |    CAST(ROUND(CAST(tf.tf AS DOUBLE) *
+         |      ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE)), 6)
+         |      AS DECIMAL(18,6)) AS term
+         |  FROM tf JOIN freq USING (token), tot),
+         |d AS (
+         |  SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tok,
+         |    -CAST(SUM(term) AS DOUBLE) / CAST(SUM(tf) AS DOUBLE)
+         |      AS avg_nll
+         |  FROM terms GROUP BY doc_id)
+         |SELECT doc_id, n_tok, avg_nll, avg_nll >= 8.0 AS flagged
+         |FROM d ORDER BY doc_id""".stripMargin),
 
     // Per-domain quota capping (crawl de-biasing: no single domain may
     // contribute more than `cap` documents; C4/RefinedWeb-style host-level
@@ -858,7 +1375,7 @@ object TextOps {
     // each domain's quota to a hash threshold (cap / count, one broadcast
     // join) so the cap becomes a map-side predicate like tx20, exact up to
     // hash-uniformity instead of exactly-cap.
-    "tx22_domain_quota" -> ((s, dir) => {
+    QuerySpec("tx22_domain_quota", (s, dir) => {
       val w = Window.partitionBy(col("source")).orderBy(col("skey"), col("doc_id"))
       docs(s, dir)
         .withColumn("skey",
@@ -867,7 +1384,15 @@ object TextOps {
         .withColumn("kept", col("qrank") <= 15)
         .select(col("doc_id"), col("source"), col("skey"), col("qrank"), col("kept"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      """WITH d AS (SELECT doc_id, source,
+        |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS skey FROM documents)
+        |SELECT doc_id, source, skey,
+        |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS qrank,
+        |  ROW_NUMBER() OVER w <= 15 AS kept
+        |FROM d
+        |WINDOW w AS (PARTITION BY source ORDER BY skey, doc_id)
+        |ORDER BY doc_id""".stripMargin),
 
     // Negative sampling for contrastive training (SimCLR/DPR-style: each
     // anchor needs k "random" negatives, but training-data builds must be
@@ -880,7 +1405,7 @@ object TextOps {
     // exactly the cost of any keyed lookup. No RNG state anywhere, so
     // retries, speculative tasks and engine swaps all produce the same
     // pairs (the oracle replays the arithmetic bit-for-bit).
-    "tx23_negative_pairs" -> ((s, dir) => {
+    QuerySpec("tx23_negative_pairs", (s, dir) => {
       val d = docs(s, dir).select(col("doc_id"), col("source"))
       val n = d.agg(count(lit(1)).as("n"))
       val cands = fanout(d).crossJoin(broadcast(n))
@@ -897,7 +1422,21 @@ object TextOps {
           col("source").as("anchor_source"), col("neg_source"),
           (col("source") === col("neg_source")).as("same_source"))
         .orderBy(col("doc_id"), col("j"))
-    }),
+    },
+      // identical Knuth-hash index arithmetic — BIGINT end to end
+      """WITH nn AS (SELECT COUNT(*) AS n FROM documents),
+        |c AS (
+        |  SELECT d.doc_id, d.source, j,
+        |    (d.doc_id * 2654435761 + j * 40503) % nn.n AS c0, nn.n AS n
+        |  FROM documents d, nn, (SELECT unnest([1,2,3,4]) AS j)),
+        |x AS (
+        |  SELECT doc_id, source, CAST(j AS BIGINT) AS j,
+        |    CASE WHEN c0 = doc_id THEN (c0 + 1) % n ELSE c0 END AS neg_id
+        |  FROM c)
+        |SELECT x.doc_id, x.j, x.neg_id, x.source AS anchor_source,
+        |  d2.source AS neg_source, x.source = d2.source AS same_source
+        |FROM x JOIN documents d2 ON d2.doc_id = x.neg_id
+        |ORDER BY x.doc_id, x.j""".stripMargin),
 
     // Chunk-level dedup REWRITE — the C4/RefinedWeb cleanup step tx17 only
     // MEASURES: drop every repeated 10-token chunk from the corpus except
@@ -912,7 +1451,7 @@ object TextOps {
     // one groupBy doc_id with an array_sort — two shuffles total, both on
     // uniform md5 keys, no skew. Output length: clean_n_chars shows the
     // bytes the rewrite saves.
-    "tx24_chunk_dedup_rewrite" -> ((s, dir) => {
+    QuerySpec("tx24_chunk_dedup_rewrite", (s, dir) => {
       val chunks = fanout(docs(s, dir))
         .selectExpr("doc_id", s"$tokExpr AS tk")
         .where(expr("size(tk) >= 1"))
@@ -935,7 +1474,25 @@ object TextOps {
             .as("clean_text"))
         .withColumn("clean_n_chars", length(col("clean_text")).cast("long"))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // same 10-token chunking (incl. the tail chunk), keep = global first
+      // occurrence by (doc_id, idx), reassemble in idx order
+      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |i0 AS (SELECT doc_id, tk,
+         |         unnest(generate_series(1, (len(tk) + 9) // 10)) AS i
+         |       FROM tk WHERE len(tk) >= 1),
+         |ch AS (SELECT doc_id, CAST(i - 1 AS INT) AS idx,
+         |         array_to_string(tk[(i-1)*10+1 : (i-1)*10+10], ' ') AS chunk
+         |       FROM i0),
+         |k AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(chunk)
+         |        ORDER BY doc_id, idx) = 1 AS keep FROM ch)
+         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks,
+         |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
+         |  COALESCE(string_agg(chunk, ' ' ORDER BY idx) FILTER (WHERE keep),
+         |           '') AS clean_text,
+         |  CAST(length(COALESCE(string_agg(chunk, ' ' ORDER BY idx)
+         |    FILTER (WHERE keep), '')) AS BIGINT) AS clean_n_chars
+         |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin),
 
     // Interpolated BIGRAM LM scoring — the step up from tx21's unigram
     // perplexity filter toward the n-gram LM filters real pipelines run
@@ -954,7 +1511,7 @@ object TextOps {
     // each bigram's p is one fixed IEEE tree, ln(p) is 6-dp-rounded into
     // exact-decimal per-doc sums (tx21's discipline), so partitioning
     // can't move a hash.
-    "tx25_bigram_logprob" -> ((s, dir) => {
+    QuerySpec("tx25_bigram_logprob", (s, dir) => {
       val w = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       val toks = fanout(docs(s, dir))
         .select(col("doc_id"), posexplode(expr(tokExpr)).as(Seq("pos", "w1")))
@@ -987,7 +1544,38 @@ object TextOps {
           (col("avg_micro").cast("double") / 1000000.0).as("avg_nll"))
         .withColumn("flagged", col("avg_nll") >= 3.5)
         .orderBy(col("doc_id"))
-    }),
+    },
+      s"""WITH toks AS (
+         |  SELECT doc_id, pos, w1 FROM (
+         |    SELECT doc_id, unnest(arr) AS w1, generate_subscripts(arr, 1) AS pos
+         |    FROM (SELECT doc_id, $dTok AS arr FROM documents))
+         |  WHERE w1 <> ''),
+         |b0 AS (
+         |  SELECT doc_id, w1,
+         |    lead(w1) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
+         |  FROM toks),
+         |b2 AS (SELECT doc_id, w1, w2 FROM b0 WHERE w2 IS NOT NULL),
+         |bc AS (SELECT w1, w2, COUNT(*) AS bc FROM b2 GROUP BY w1, w2),
+         |pc AS (SELECT w1, SUM(bc) AS pc FROM bc GROUP BY w1),
+         |uc AS (SELECT w1 AS w2u, COUNT(*) AS uc FROM toks GROUP BY w1),
+         |tot AS (SELECT SUM(uc) AS total FROM uc),
+         |terms AS (
+         |  SELECT b2.doc_id,
+         |    CAST(ROUND(ln(
+         |      0.7 * (CAST(bc.bc AS DOUBLE) / CAST(pc.pc AS DOUBLE))
+         |      + 0.3 * (CAST(uc.uc AS DOUBLE) / CAST(tot.total AS DOUBLE))), 6)
+         |      AS DECIMAL(18,6)) AS term
+         |  FROM b2 JOIN bc USING (w1, w2) JOIN pc USING (w1)
+         |  JOIN uc ON b2.w2 = uc.w2u, tot),
+         |d0 AS (SELECT doc_id, COUNT(*) AS n_bigrams,
+         |    CAST(-SUM(term) * 1000000 AS BIGINT) AS x
+         |  FROM terms GROUP BY doc_id),
+         |d AS (SELECT doc_id, n_bigrams,
+         |    CAST((2 * x + n_bigrams) // (2 * n_bigrams) AS DOUBLE)
+         |      / 1000000.0 AS avg_nll
+         |  FROM d0)
+         |SELECT doc_id, n_bigrams, avg_nll, avg_nll >= 3.5 AS flagged
+         |FROM d ORDER BY doc_id""".stripMargin),
 
     // EXACT SUBSTRING dedup (Lee et al. 2021, "Deduplicating Training Data
     // Makes Language Models Better") — the span-granular upgrade of tx24's
@@ -1003,7 +1591,7 @@ object TextOps {
     // window; reassembly is tx24's per-doc collect_list. No quadratic
     // stage — the O(n²) suffix comparison of the paper collapses into the
     // hash-equality join.
-    "tx26_substring_dedup" -> ((s, dir) => {
+    QuerySpec("tx26_substring_dedup", (s, dir) => {
       val k = 5
       // three consumers (gram stream, clean-text rebuild, final stats) —
       // barrier the tokenize pass once (r16; the v16 `af` materialization
@@ -1054,7 +1642,45 @@ object TextOps {
         .na.fill(0L, Seq("n_dup_grams", "n_covered", "n_spans"))
         .withColumn("clean_text", coalesce(col("clean_text"), lit("")))
         .orderBy(col("doc_id"))
-    }),
+    },
+      // full replay of the span dedup: same overlapping 5-gram md5 stream,
+      // ≥2-occurrence hashes, position coverage, gaps-and-islands span
+      // merge, and uncovered-token reassembly
+      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |base AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n, tk FROM tk),
+         |g AS (
+         |  SELECT doc_id, i, md5(array_to_string(tk[i : i + 4], ' ')) AS h
+         |  FROM (SELECT doc_id, tk,
+         |          unnest(generate_series(1, len(tk) - 4)) AS i
+         |        FROM base WHERE n >= 5)),
+         |dh AS (SELECT h FROM g GROUP BY h HAVING COUNT(*) > 1),
+         |ds AS (SELECT doc_id, i FROM g JOIN dh USING (h)),
+         |cov AS (SELECT DISTINCT doc_id, t FROM
+         |  (SELECT doc_id, unnest(generate_series(i, i + 4)) AS t FROM ds)),
+         |isl AS (SELECT doc_id, t,
+         |    t - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY t) AS grp
+         |  FROM cov),
+         |sp AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_covered,
+         |    CAST(COUNT(DISTINCT grp) AS BIGINT) AS n_spans
+         |  FROM isl GROUP BY doc_id),
+         |dc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_grams
+         |  FROM ds GROUP BY doc_id),
+         |tp AS (SELECT doc_id, unnest(tk) AS tok,
+         |    CAST(generate_subscripts(tk, 1) AS BIGINT) AS t FROM base),
+         |cl AS (SELECT tp.doc_id,
+         |    string_agg(tok, ' ' ORDER BY tp.t) AS clean_text
+         |  FROM tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.t = tp.t
+         |  WHERE cov.t IS NULL GROUP BY tp.doc_id)
+         |SELECT b.doc_id, b.n AS n_tokens,
+         |  COALESCE(dc.n_dup_grams, 0) AS n_dup_grams,
+         |  COALESCE(sp.n_covered, 0) AS n_covered,
+         |  COALESCE(sp.n_spans, 0) AS n_spans,
+         |  COALESCE(cl.clean_text, '') AS clean_text
+         |FROM base b
+         |LEFT JOIN dc USING (doc_id)
+         |LEFT JOIN sp USING (doc_id)
+         |LEFT JOIN cl ON cl.doc_id = b.doc_id
+         |ORDER BY b.doc_id""".stripMargin),
 
     // N-GRAM NOVELTY scoring — the "information gain" dedup diagnostic
     // (what does doc d add that the corpus BEFORE it didn't have?): every
@@ -1067,7 +1693,7 @@ object TextOps {
     // ownership is ONE min-aggregate keyed on the gram hash; attaching it
     // back is the same hash-keyed shuffle — no pairwise stage at all
     // (novelty needs no pair enumeration, unlike tx05/tx08).
-    "tx27_ngram_novelty" -> ((s, dir) => {
+    QuerySpec("tx27_ngram_novelty", (s, dir) => {
       val k = 3
       val grams = fanout(docs(s, dir))
         .selectExpr("doc_id", s"$tokExpr AS tk")
@@ -1090,7 +1716,26 @@ object TextOps {
           col("n_novel").cast("double") / col("n_grams").cast("double"))
         .withColumn("derivative", col("novelty") < 0.3)
         .orderBy(col("doc_id"))
-    }),
+    },
+      // same 3-gram stream; first ownership = min doc_id per gram hash
+      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |g AS (
+         |  SELECT doc_id, md5(array_to_string(tk[i : i + 2], ' ')) AS h
+         |  FROM (SELECT doc_id, tk,
+         |          unnest(generate_series(1, len(tk) - 2)) AS i
+         |        FROM tk WHERE len(tk) >= 3)),
+         |fd AS (SELECT h, MIN(doc_id) AS first_doc FROM g GROUP BY h),
+         |a AS (
+         |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
+         |    CAST(SUM(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)
+         |      AS BIGINT) AS n_novel
+         |  FROM g JOIN fd USING (h) GROUP BY doc_id)
+         |SELECT doc_id, n_grams, n_novel,
+         |  CAST(n_novel AS DOUBLE) / CAST(n_grams AS DOUBLE)
+         |    AS novelty,
+         |  (CAST(n_novel AS DOUBLE) / CAST(n_grams AS DOUBLE)) < 0.3
+         |    AS derivative
+         |FROM a ORDER BY doc_id""".stripMargin),
 
     // MINHASH ESTIMATOR ACCURACY — the sketch-quality verdict for the
     // tx05/tx11 dedup family (the discipline q19/q25 set for HLL and
@@ -1102,7 +1747,7 @@ object TextOps {
     // corpus. Scale shape: signatures are the same linear aggregates as
     // tx05; the pair frame is the bounded diagnostic sample, never the
     // corpus.
-    "tx28_minhash_accuracy" -> ((s, dir) => {
+    QuerySpec("tx28_minhash_accuracy", (s, dir) => {
       // Accuracy DIAGNOSTIC on a scale-capped pair sample (the v37/mm08
       // stride discipline; r11 32× sweep measured 152 s pre-fix): the
       // fixed 1/37 × 1/41 grid is n²/1517 pairs — quadratic — and the
@@ -1143,7 +1788,41 @@ object TextOps {
         .select(col("doc_a"), col("doc_b"), col("n_match"), col("est"),
           col("jaccard"), col("abs_err"))
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    },
+      // same 16 salted-md5 minhash components (tx05's hs CTE) compared
+      // position-wise; true Jaccard from tx06's shingle sets
+      s"""WITH toks AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |shl AS (
+         |  SELECT DISTINCT doc_id,
+         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
+         |  FROM toks WHERE len(tk) >= 3),
+         |hs AS (
+         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
+         |  FROM shl, range(0, 16) t(j) GROUP BY doc_id, j),
+         |sg AS (SELECT doc_id, list(sig ORDER BY j) AS sg FROM hs GROUP BY doc_id),
+         |ss AS (
+         |  SELECT doc_id,
+         |    list_distinct(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
+         |  FROM toks WHERE len(tk) >= 3),
+         |p AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |    CAST(len(list_filter(range(1, 17),
+         |      i -> sa.sg[CAST(i AS INT)] = sb.sg[CAST(i AS INT)])) AS BIGINT)
+         |      AS n_match,
+         |    len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_inter,
+         |    len(a.sh) + len(b.sh)
+         |      - len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_union
+         |  FROM ss a
+         |  JOIN ss b ON a.doc_id % 37 = 0 AND b.doc_id % 41 = 0
+         |    AND a.doc_id < b.doc_id
+         |  JOIN sg sa ON sa.doc_id = a.doc_id
+         |  JOIN sg sb ON sb.doc_id = b.doc_id)
+         |SELECT doc_a, doc_b, n_match,
+         |  CAST(n_match AS DOUBLE) / 16.0 AS est,
+         |  CAST(n_inter AS DOUBLE) / n_union AS jaccard,
+         |  abs(CAST(n_match AS DOUBLE) / 16.0
+         |    - CAST(n_inter AS DOUBLE) / n_union) AS abs_err
+         |FROM p ORDER BY doc_a, doc_b""".stripMargin),
 
     // DSIR-style importance weights (Xie et al. 2023, "Data Selection for
     // Language Models via Importance Resampling"): hashed-bigram bag-of-
@@ -1158,11 +1837,16 @@ object TextOps {
     // is one ln of one IEEE quotient of exact-integer products rounded to
     // 6 dp (the tx21/tx25 discipline), and the per-doc sum is exact
     // decimal arithmetic — bit-identical in DuckDB.
-    "tx29_dsir_importance" -> ((s, dir) =>
+    QuerySpec("tx29_dsir_importance", (s, dir) =>
       dsirWeights(s, dir)
         .select(col("doc_id"), col("n_bigrams"),
           col("w").cast("double").as("log_weight"), (col("w") > 0).as("selected"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // full replay: hashed-bigram buckets, target/raw histograms with add-1
+      // smoothing, 6-dp-rounded per-bucket log-ratio, exact decimal doc sum
+      s"""WITH $dsirSql
+         |SELECT doc_id, n_bigrams, CAST(w AS DOUBLE) AS log_weight, w > 0 AS selected
+         |FROM d ORDER BY doc_id""".stripMargin),
 
     // The RESAMPLING step DSIR's weights exist for (Xie et al. 2023 §2;
     // Vieira 2014's Gumbel-top-k): draw a fixed-size corpus WITHOUT
@@ -1174,7 +1858,7 @@ object TextOps {
     // per-row arithmetic and the only coordination is one
     // TakeOrderedAndProject top-k (no global sort, no sequential urn
     // walk). The rank window runs AFTER the limit, on k rows.
-    "tx31_gumbel_sample" -> ((s, dir) => {
+    QuerySpec("tx31_gumbel_sample", (s, dir) => {
       val keyed = dsirWeights(s, dir)
         .withColumn("u",
           (expr("cast(conv(substr(md5(cast(concat('smp:', doc_id) as binary)), 1, 6), 16, 10) as bigint)")
@@ -1187,7 +1871,25 @@ object TextOps {
         .select(col("rank"), col("doc_id"), col("n_bigrams"),
           col("w").cast("double").as("log_weight"), col("skey"))
         .orderBy(col("rank"))
-    }),
+    },
+      // the same weights perturbed by the replayed Gumbel noise
+      // (u from 6 md5 nibbles, g = -ln(-ln(u))), top-64 keys kept
+      s"""WITH $dsirSql,
+         |keyed AS (
+         |  SELECT doc_id, n_bigrams, CAST(w AS DOUBLE) AS log_weight,
+         |    ROUND(CAST(w AS DOUBLE) + (-ln(-ln(
+         |      (CAST(list_sum(list_transform(range(0, 6), i ->
+         |        CAST(strpos('0123456789abcdef',
+         |          substr(md5('smp:' || doc_id), CAST(i + 1 AS INT), 1)) - 1
+         |        AS BIGINT) << CAST(4 * (5 - i) AS INT))) AS DOUBLE) + 0.5)
+         |      / 16777216.0))), 6) AS skey
+         |  FROM d),
+         |top AS (
+         |  SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY skey DESC, doc_id)
+         |    AS BIGINT) AS rank
+         |  FROM keyed)
+         |SELECT rank, doc_id, n_bigrams, log_weight, skey
+         |FROM top WHERE rank <= 64 ORDER BY rank""".stripMargin),
 
     // Gopher-style quality rule battery (Rae et al. 2021, appendix A1.1):
     // the standard pre-training document filters as an AND of per-doc
@@ -1197,7 +1899,7 @@ object TextOps {
     // L/n ≥ 3.0), so the verdicts are bit-exact with zero float ops.
     // Scale shape: pure per-row expressions over the token array — one
     // narrow map stage, no shuffle at all before the output sort.
-    "tx30_gopher_rules" -> ((s, dir) =>
+    QuerySpec("tx30_gopher_rules", (s, dir) =>
       fanout(docs(s, dir))
         .selectExpr("doc_id", s"$tokExpr AS tk")
         .withColumn("n_words", expr("size(tk)").cast("long"))
@@ -1224,7 +1926,31 @@ object TextOps {
           col("n_stopwords"), col("n_alpha"), col("max_tf"),
           col("ok_word_count"), col("ok_word_len"), col("ok_stopwords"),
           col("ok_alpha"), col("ok_top_token"), col("keep"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id")),
+      // integer cross-multiplication replay of every rule
+      s"""WITH d AS (
+         |  SELECT doc_id, $dTok AS tk FROM documents),
+         |m AS (
+         |  SELECT doc_id,
+         |    CAST(len(tk) AS BIGINT) AS n_words,
+         |    CAST(list_sum(list_transform(tk, t -> length(t))) AS BIGINT) AS sum_word_len,
+         |    CAST(len(list_filter(['the', 'a', 'of', 'and', 'to', 'in', 'is'],
+         |      sw -> list_contains(tk, sw))) AS BIGINT) AS n_stopwords,
+         |    CAST(len(list_filter(tk, t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
+         |    CAST(list_max(list_transform(list_distinct(tk),
+         |      t -> len(list_filter(tk, x -> x = t)))) AS BIGINT) AS max_tf
+         |  FROM d)
+         |SELECT doc_id, n_words, sum_word_len, n_stopwords, n_alpha, max_tf,
+         |  n_words >= 50 AND n_words <= 100000 AS ok_word_count,
+         |  3 * n_words <= sum_word_len AND sum_word_len <= 10 * n_words AS ok_word_len,
+         |  n_stopwords >= 2 AS ok_stopwords,
+         |  5 * n_alpha >= 4 * n_words AS ok_alpha,
+         |  5 * max_tf <= n_words AS ok_top_token,
+         |  n_words >= 50 AND n_words <= 100000
+         |    AND 3 * n_words <= sum_word_len AND sum_word_len <= 10 * n_words
+         |    AND n_stopwords >= 2 AND 5 * n_alpha >= 4 * n_words
+         |    AND 5 * max_tf <= n_words AS keep
+         |FROM m ORDER BY doc_id""".stripMargin),
 
     // The FILTER FUNNEL — the pipeline-health report every corpus team
     // reads before training: how many documents survive each CUMULATIVE
@@ -1236,7 +1962,7 @@ object TextOps {
     // counts, unpivoted to ordered report rows. Scale shape: the dedup
     // stage's content-hash window is the only shuffle; everything after
     // is map-side bookkeeping over booleans.
-    "tx32_filter_funnel" -> ((s, dir) => {
+    QuerySpec("tx32_filter_funnel", (s, dir) => {
       val wHash = Window.partitionBy(md5(col("text").cast("binary")))
       val flags = fanout(docs(s, dir))
         .withColumn("is_canonical", col("doc_id") === min(col("doc_id")).over(wHash))
@@ -1278,7 +2004,48 @@ object TextOps {
             named_struct('stage', '2_gopher',      'n_surviving', s2),
             named_struct('stage', '3_quality',     'n_surviving', s3)))""")
         .orderBy(col("stage"))
-    }),
+    },
+      // the same cumulative conjunctions replayed as one aggregate
+      s"""WITH f AS (
+         |  SELECT doc_id, text, $dTok AS tk,
+         |    doc_id = MIN(doc_id) OVER (PARTITION BY md5(text)) AS is_canonical
+         |  FROM documents),
+         |m AS (
+         |  SELECT is_canonical,
+         |    CAST(len(tk) AS BIGINT) AS n_words,
+         |    CAST(list_sum(list_transform(tk, t -> length(t))) AS BIGINT)
+         |      AS sum_word_len,
+         |    CAST(len(list_filter(['the', 'a', 'of', 'and', 'to', 'in', 'is'],
+         |      sw -> list_contains(tk, sw))) AS BIGINT) AS n_stopwords,
+         |    CAST(len(list_filter(tk, t -> regexp_matches(t, '[a-z]'))) AS BIGINT)
+         |      AS n_alpha,
+         |    CAST(list_max(list_transform(list_distinct(tk),
+         |      t -> len(list_filter(tk, x -> x = t)))) AS BIGINT) AS max_tf,
+         |    CAST(len(list_filter(tk, t -> t IN $dStop)) AS BIGINT) AS n_stop_occ
+         |  FROM f),
+         |g AS (
+         |  SELECT is_canonical,
+         |    n_words >= 50 AND n_words <= 100000
+         |      AND 3 * n_words <= sum_word_len AND sum_word_len <= 10 * n_words
+         |      AND n_stopwords >= 2 AND 5 * n_alpha >= 4 * n_words
+         |      AND 5 * max_tf <= n_words AS gopher_keep,
+         |    ROUND(0.4 * (CAST(n_stop_occ AS DOUBLE) / n_words)
+         |        + 0.6 * LEAST(1.0, CAST(n_words AS DOUBLE) / 100.0), 6) >= 0.5
+         |      AS quality_keep
+         |  FROM m),
+         |agg AS (
+         |  SELECT CAST(COUNT(*) AS BIGINT) AS s0,
+         |    CAST(SUM(CASE WHEN is_canonical THEN 1 ELSE 0 END) AS BIGINT) AS s1,
+         |    CAST(SUM(CASE WHEN is_canonical AND gopher_keep THEN 1 ELSE 0 END)
+         |      AS BIGINT) AS s2,
+         |    CAST(SUM(CASE WHEN is_canonical AND gopher_keep AND quality_keep
+         |      THEN 1 ELSE 0 END) AS BIGINT) AS s3
+         |  FROM g)
+         |SELECT '0_all' AS stage, s0 AS n_surviving FROM agg
+         |UNION ALL SELECT '1_exact_dedup', s1 FROM agg
+         |UNION ALL SELECT '2_gopher', s2 FROM agg
+         |UNION ALL SELECT '3_quality', s3 FROM agg
+         |ORDER BY stage""".stripMargin),
 
     // CONTENT-DEFINED CHUNKING dedup (the rsync/LBFS/FastCDC shape used
     // for storage- and dataset-level dedup): chunk boundaries fall where
@@ -1307,7 +2074,7 @@ object TextOps {
     // keep 5 bits); never cut at the very end (the tail chunk closes
     // at length(text) in the finish lambda). Mod-32 gives ~32-char
     // expected chunks on this corpus's text lengths.
-    "tx39_cdc_chunk_dedup" -> ((s, dir) =>
+    QuerySpec("tx39_cdc_chunk_dedup", (s, dir) =>
       cdcChunkRows(s, dir)
         // no min-size constraint in the cutter (that needs sequential
         // state — FastCDC's normalization); instead the INVENTORY keeps
@@ -1320,7 +2087,40 @@ object TextOps {
           count(lit(1)).as("n_occ"))
         .filter(col("n_occ") > 1)
         .select(col("chunk_hash"), col("chunk_len"), col("n_docs"), col("n_occ"))
-        .orderBy(col("n_occ").desc, col("chunk_hash"))),
+        .orderBy(col("n_occ").desc, col("chunk_hash")),
+      // CDC replay: same md5-of-trailing-window boundary hash (first two
+      // hex nibbles via the dsir strpos idiom = Spark's conv(substr(md5,
+      // 1, 2), 16, 10)), mod-32 boundaries; COUNT/COUNT(DISTINCT) are
+      // BIGINT on both engines (no sum to pin)
+      """WITH bd AS (
+        |  SELECT doc_id, text,
+        |    list_filter(range(8, length(text) + 1), i ->
+        |      i < length(text) AND
+        |      ((strpos('0123456789abcdef',
+        |          substr(md5(substr(text, CAST(i - 7 AS INT), 8)), 1, 1)) - 1) * 16
+        |       + (strpos('0123456789abcdef',
+        |          substr(md5(substr(text, CAST(i - 7 AS INT), 8)), 2, 1)) - 1))
+        |        % 32 = 0) AS bs
+        |  FROM documents),
+        |ct AS (
+        |  SELECT doc_id, text,
+        |    list_concat(list_concat([0::BIGINT], bs),
+        |      [CAST(length(text) AS BIGINT)]) AS cuts
+        |  FROM bd),
+        |ch AS (
+        |  SELECT doc_id,
+        |    unnest(list_transform(range(1, len(cuts)), k ->
+        |      substr(text, CAST(list_extract(cuts, CAST(k AS INT)) + 1 AS INT),
+        |        CAST(list_extract(cuts, CAST(k + 1 AS INT))
+        |          - list_extract(cuts, CAST(k AS INT)) AS INT)))) AS chunk
+        |  FROM ct)
+        |SELECT md5(chunk) AS chunk_hash,
+        |  CAST(MAX(length(chunk)) AS BIGINT) AS chunk_len,
+        |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
+        |  COUNT(*) AS n_occ
+        |FROM ch WHERE length(chunk) >= 4
+        |GROUP BY chunk_hash HAVING COUNT(*) > 1
+        |ORDER BY n_occ DESC, chunk_hash""".stripMargin),
 
     // CROSS-SOURCE DUPLICATION MATRIX — tx39's chunks rolled up to the
     // report a curation team actually reads: for every source pair, how
@@ -1333,7 +2133,7 @@ object TextOps {
     // the cutter (the v16/v28 lesson) — then a self-join on the hash
     // whose fan-out per hash is bounded by the SOURCE count, not the
     // corpus; the pair frame is ≤ |sources|² rows.
-    "tx40_cross_source_dup" -> ((s, dir) => {
+    QuerySpec("tx40_cross_source_dup", (s, dir) => {
       val ch = cdcChunkRows(s, dir)
         .filter(length(col("chunk")) >= 4)
         .select(col("source"), expr("md5(cast(chunk as binary))").as("h"))
@@ -1354,7 +2154,46 @@ object TextOps {
         .select(col("source_a"), col("source_b"), col("n_a"), col("n_b"),
           col("n_shared"), col("containment"))
         .orderBy(col("source_a"), col("source_b"))
-    }),
+    },
+      // tx39's chunk CTEs with source carried through, distinct
+      // (source, hash) sets, pair overlap + unrounded containment;
+      // COUNT is BIGINT on both engines
+      """WITH bd AS (
+        |  SELECT doc_id, source, text,
+        |    list_filter(range(8, length(text) + 1), i ->
+        |      i < length(text) AND
+        |      ((strpos('0123456789abcdef',
+        |          substr(md5(substr(text, CAST(i - 7 AS INT), 8)), 1, 1)) - 1) * 16
+        |       + (strpos('0123456789abcdef',
+        |          substr(md5(substr(text, CAST(i - 7 AS INT), 8)), 2, 1)) - 1))
+        |        % 32 = 0) AS bs
+        |  FROM documents),
+        |ct AS (
+        |  SELECT doc_id, source, text,
+        |    list_concat(list_concat([0::BIGINT], bs),
+        |      [CAST(length(text) AS BIGINT)]) AS cuts
+        |  FROM bd),
+        |ch AS (
+        |  SELECT doc_id, source,
+        |    unnest(list_transform(range(1, len(cuts)), k ->
+        |      substr(text, CAST(list_extract(cuts, CAST(k AS INT)) + 1 AS INT),
+        |        CAST(list_extract(cuts, CAST(k + 1 AS INT))
+        |          - list_extract(cuts, CAST(k AS INT)) AS INT)))) AS chunk
+        |  FROM ct),
+        |ch2 AS (SELECT DISTINCT source, md5(chunk) AS h
+        |        FROM ch WHERE length(chunk) >= 4),
+        |per AS (SELECT source, COUNT(*) AS n FROM ch2 GROUP BY source),
+        |pairs AS (
+        |  SELECT a.source AS source_a, b.source AS source_b,
+        |    COUNT(*) AS n_shared
+        |  FROM ch2 a JOIN ch2 b ON a.h = b.h AND a.source < b.source
+        |  GROUP BY 1, 2)
+        |SELECT source_a, source_b, pa.n AS n_a, pb.n AS n_b, n_shared,
+        |  CAST(n_shared AS DOUBLE) / LEAST(pa.n, pb.n) AS containment
+        |FROM pairs
+        |JOIN per pa ON pa.source = source_a
+        |JOIN per pb ON pb.source = source_b
+        |ORDER BY source_a, source_b""".stripMargin),
 
     // B-BIT MINWISE HASHING (Li & König 2010) — the storage-optimal
     // MinHash variant: keep only the LOW 4 BITS of each of the 16
@@ -1368,7 +2207,7 @@ object TextOps {
     // dedup index actually buys. All estimates are dyadic or fixed IEEE
     // trees (m is k/16, C and 1−C are exact binary fractions) — no
     // rounding anywhere.
-    "tx42_bbit_minhash" -> ((s, dir) => {
+    QuerySpec("tx42_bbit_minhash", (s, dir) => {
       // same scale-capped sample-first shape as tx28 (r11 32× sweep:
       // 248 s pre-fix — the worst outlier on the tx board)
       val strideK = math.max(1L, docs(s, dir).count() / 500L)
@@ -1415,7 +2254,48 @@ object TextOps {
           col("est_full"), col("est_4bit"), col("jaccard"),
           col("err_full"), col("err_4bit"))
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    },
+      s"""WITH toks AS (SELECT doc_id, $dTok AS tk FROM documents),
+         |shl AS (
+         |  SELECT DISTINCT doc_id,
+         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
+         |  FROM toks WHERE len(tk) >= 3),
+         |hs AS (
+         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
+         |  FROM shl, range(0, 16) t(j) GROUP BY doc_id, j),
+         |sg AS (SELECT doc_id, list(sig ORDER BY j) AS sg,
+         |         list(strpos('0123456789abcdef', substr(sig, 32, 1)) - 1
+         |              ORDER BY j) AS bb
+         |       FROM hs GROUP BY doc_id),
+         |ss AS (
+         |  SELECT doc_id,
+         |    list_distinct(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
+         |  FROM toks WHERE len(tk) >= 3),
+         |p AS (
+         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |    CAST(len(list_filter(range(1, 17),
+         |      i -> sa.sg[CAST(i AS INT)] = sb.sg[CAST(i AS INT)])) AS BIGINT)
+         |      AS n_match,
+         |    CAST(len(list_filter(range(1, 17),
+         |      i -> sa.bb[CAST(i AS INT)] = sb.bb[CAST(i AS INT)])) AS BIGINT)
+         |      AS n_match4,
+         |    len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_inter,
+         |    len(a.sh) + len(b.sh)
+         |      - len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_union
+         |  FROM ss a
+         |  JOIN ss b ON a.doc_id % 37 = 0 AND b.doc_id % 41 = 0
+         |    AND a.doc_id < b.doc_id
+         |  JOIN sg sa ON sa.doc_id = a.doc_id
+         |  JOIN sg sb ON sb.doc_id = b.doc_id)
+         |SELECT doc_a, doc_b, n_match, n_match4,
+         |  CAST(n_match AS DOUBLE) / 16.0 AS est_full,
+         |  (CAST(n_match4 AS DOUBLE) / 16.0 - 0.0625) / 0.9375 AS est_4bit,
+         |  CAST(n_inter AS DOUBLE) / n_union AS jaccard,
+         |  abs(CAST(n_match AS DOUBLE) / 16.0
+         |    - CAST(n_inter AS DOUBLE) / n_union) AS err_full,
+         |  abs((CAST(n_match4 AS DOUBLE) / 16.0 - 0.0625) / 0.9375
+         |    - CAST(n_inter AS DOUBLE) / n_union) AS err_4bit
+         |FROM p ORDER BY doc_a, doc_b""".stripMargin),
 
     // MOSS-style WINNOWING fingerprints (Schleimer et al. 2003) — the
     // plagiarism-detection / local-dedup shape missing from the tx05/tx08
@@ -1432,7 +2312,7 @@ object TextOps {
     // fan-out discipline), so bucket sizes are capped and nothing is
     // O(n²). The distinct fingerprint frame feeds four consumers (per-doc
     // counts, the cap, both join sides) -> one eager checkpoint.
-    "tx41_winnow_fingerprints" -> ((s, dir) => {
+    QuerySpec("tx41_winnow_fingerprints", (s, dir) => {
       val horner = (0 until 8).foldLeft("0L")((acc, i) =>
         s"($acc * 31 + ascii(substring(text, p + $i, 1)))")
       val keyed = fanout(docs(s, dir))
@@ -1470,7 +2350,37 @@ object TextOps {
         .select(col("doc_a"), col("doc_b"), col("n_a"), col("n_b"),
           col("n_shared"), col("containment"))
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    },
+      {
+        val horner = (0 until 8).foldLeft("CAST(0 AS BIGINT)")((acc, i) =>
+          s"($acc * 31 + ascii(substr(text, CAST(p + $i AS INT), 1)))")
+        s"""WITH pos AS (
+           |  SELECT doc_id, text, unnest(range(1, length(text) - 6)) AS p
+           |  FROM documents WHERE length(text) >= 11),
+           |h AS (
+           |  SELECT doc_id, p, ($horner) % 1000000007 AS hh
+           |  FROM pos),
+           |k AS (
+           |  SELECT doc_id, p,
+           |    MIN(hh * 1024 - p) OVER (PARTITION BY doc_id ORDER BY p
+           |      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS ky
+           |  FROM h),
+           |fps AS (
+           |  SELECT DISTINCT doc_id, ky // 1024 + 1 AS fh FROM k WHERE p >= 4),
+           |per AS (SELECT doc_id, COUNT(*) AS nfp FROM fps GROUP BY doc_id),
+           |rare AS (SELECT fh FROM fps GROUP BY fh HAVING COUNT(*) <= 10),
+           |capped AS (SELECT f.* FROM fps f JOIN rare USING (fh)),
+           |pairs AS (
+           |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
+           |  FROM capped a JOIN capped b ON a.fh = b.fh AND a.doc_id < b.doc_id
+           |  GROUP BY 1, 2 HAVING COUNT(*) >= 3)
+           |SELECT doc_a, doc_b, pa.nfp AS n_a, pb.nfp AS n_b, n_shared,
+           |  CAST(n_shared AS DOUBLE) / LEAST(pa.nfp, pb.nfp) AS containment
+           |FROM pairs
+           |JOIN per pa ON pa.doc_id = doc_a
+           |JOIN per pb ON pb.doc_id = doc_b
+           |ORDER BY doc_a, doc_b""".stripMargin
+      }),
 
     // RAKE KEYWORD EXTRACTION (Rose et al. 2010): candidate phrases are
     // maximal runs of non-stopword tokens (gaps-and-islands split at the
@@ -1484,7 +2394,7 @@ object TextOps {
     // token explode is map-side, the island split is one (doc)-keyed
     // window over tokens, word stats one hash agg (vocabulary-bounded,
     // broadcast back), and the final top-15 is TakeOrderedAndProject.
-    "tx43_rake_keywords" -> ((s, dir) => {
+    QuerySpec("tx43_rake_keywords", (s, dir) => {
       val wd = Window.partitionBy(col("doc_id")).orderBy(col("pos"))
       val toks = fanout(docs(s, dir))
         .select(col("doc_id"), posexplode(expr(tokExpr)).as(Seq("pos", "w")))
@@ -1530,7 +2440,45 @@ object TextOps {
         .select(col("rnk"), col("phrase"), col("n_words"), col("n_occur"),
           col("n_docs"), col("score_ppm"))
         .orderBy(col("rnk"))
-    }),
+    },
+      s"""WITH toks AS (
+         |  SELECT doc_id, unnest($dTok) AS w,
+         |    generate_subscripts($dTok, 1) AS pos
+         |  FROM documents),
+         |t2 AS (
+         |  SELECT doc_id, pos, w,
+         |    (w IN ('the', 'a', 'of', 'and', 'to', 'in', 'is') OR w = '')
+         |      AS stop
+         |  FROM toks),
+         |m AS (
+         |  SELECT doc_id, pos, w, grp FROM (
+         |    SELECT doc_id, pos, w, stop,
+         |      SUM(CASE WHEN stop THEN 1 ELSE 0 END) OVER (
+         |        PARTITION BY doc_id ORDER BY pos
+         |        ROWS UNBOUNDED PRECEDING) AS grp
+         |    FROM t2) WHERE NOT stop),
+         |ph AS (
+         |  SELECT doc_id, grp, string_agg(w, ' ' ORDER BY pos) AS phrase,
+         |    COUNT(*) AS n_words
+         |  FROM m GROUP BY 1, 2 HAVING COUNT(*) <= 4),
+         |ws AS (
+         |  SELECT w, COUNT(*) AS freq, SUM(n_words) AS deg
+         |  FROM m JOIN ph USING (doc_id, grp) GROUP BY w),
+         |wsc AS (SELECT w, (deg * 1000000) // freq AS score_ppm FROM ws),
+         |ps AS (
+         |  SELECT m.doc_id, m.grp, ph.phrase, ph.n_words,
+         |    SUM(score_ppm) AS p_score
+         |  FROM m JOIN ph USING (doc_id, grp) JOIN wsc USING (w)
+         |  GROUP BY 1, 2, 3, 4),
+         |agg AS (
+         |  SELECT phrase, CAST(n_words AS BIGINT) AS n_words,
+         |    COUNT(*) AS n_occur, COUNT(DISTINCT doc_id) AS n_docs,
+         |    CAST(MAX(p_score) AS BIGINT) AS score_ppm
+         |  FROM ps GROUP BY 1, 2)
+         |SELECT CAST(ROW_NUMBER() OVER (ORDER BY score_ppm DESC, phrase)
+         |    AS BIGINT) AS rnk,
+         |  phrase, n_words, n_occur, n_docs, score_ppm
+         |FROM agg ORDER BY score_ppm DESC, phrase LIMIT 15""".stripMargin),
 
     // CHAR-TRIGRAM LANGUAGE ID (Cavnar & Trenkle 1994 out-of-place
     // measure) — the n-gram-profile upgrade of tx04's stopword heuristic:
@@ -1543,7 +2491,7 @@ object TextOps {
     // per doc, bounded fan-out ×254), lang profiles are a ≤20×|langs|
     // broadcast, per-doc scoring one (doc)-keyed aggregate, and the
     // confusion rollup is |langs|² cells.
-    "tx44_chartrigram_langid" -> ((s, dir) => {
+    QuerySpec("tx44_chartrigram_langid", (s, dir) => {
       // NOT checkpointed (the round-12 128× census OOM): materializing the
       // EXPLODED frame caches |docs| × 254 rows — 162 M at the 128× rung —
       // and that storage pressure starved the downstream per-doc hash
@@ -1590,1196 +2538,7 @@ object TextOps {
         .agg(count(lit(1)).cast("long").as("n_docs"),
           sum(col("sum_d")).cast("long").as("sum_dist"))
         .orderBy(col("actual"), col("predicted"))
-    }),
-
-    // READABILITY SCORING (Flesch reading-ease + Flesch–Kincaid grade —
-    // the difficulty dial an instruction-data curriculum filters on):
-    // words = \S+ islands, sentences = [.!?]+ terminator groups (floored
-    // at 1 so headline-like fragments still score), syllables = the
-    // standard vowel-group heuristic [aeiouy]+ over the lowercased text.
-    // All three counts are integers from THREE regexp passes sharing one
-    // scan (RE2/Java-regex-common character classes only — no \b, no
-    // lookaround); the two scores are each ONE fixed IEEE tree over those
-    // integers. Patterns go through the DataFrame API (lit), never a SQL
-    // string literal, so no escape-processing divergence can creep in.
-    // Pure map-side per-doc work + presentation sort — embarrassingly
-    // parallel at any corpus size.
-    "tx45_readability" -> ((s, dir) =>
-      fanout(docs(s, dir))
-        .withColumn("n_words",
-          size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
-            .cast("long"))
-        .withColumn("n_sentences",
-          size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
-            .cast("long"))
-        .withColumn("n_syllables",
-          size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"),
-            lit(0))).cast("long"))
-        .withColumn("wp", greatest(col("n_words"), lit(1L)).cast("double"))
-        .withColumn("sp", greatest(col("n_sentences"), lit(1L))
-          .cast("double"))
-        .select(col("doc_id"), col("n_words"), col("n_sentences"),
-          col("n_syllables"),
-          round(lit(206.835) - lit(1.015) * (col("wp") / col("sp"))
-            - lit(84.6) * (col("n_syllables").cast("double") / col("wp")), 6)
-            .as("fre"),
-          round(lit(0.39) * (col("wp") / col("sp"))
-            + lit(11.8) * (col("n_syllables").cast("double") / col("wp"))
-            - lit(15.59), 6).as("fk_grade"))
-        .orderBy(col("doc_id"))),
-
-    // MARKUP STRIP (the HTML-cleanup pass every web-corpus pipeline runs
-    // before quality/dedup): drop <...> tags, decode the four core
-    // entities, collapse whitespace runs, trim. The corpus rows are
-    // plain text (0 tags — they prove the pass is a no-op on clean
-    // input); two INJECTED rows carry real markup — nested tags, an
-    // unclosed tag, entities, multi-space runs — shared verbatim with
-    // the oracle (mm02's injected-fixture discipline), so the tag
-    // regex, entity order and collapse behavior are all hash-pinned.
-    // Pure map-side; patterns via the DataFrame API (no SQL-literal
-    // escape divergence).
-    "tx46_markup_strip" -> ((s, dir) => {
-      val base = docs(s, dir).select(col("doc_id"), col("text"))
-      val extra = s.range(1).select(lit(1000001L).as("doc_id"),
-        lit(TX46_HTML_ROW).as("text"))
-        .unionByName(s.range(1).select(lit(1000002L).as("doc_id"),
-          lit(TX46_BROKEN_ROW).as("text")))
-      fanout(base.unionByName(extra))
-        .withColumn("n_tags",
-          size(regexp_extract_all(col("text"), lit("<[^>]*>"), lit(0)))
-            .cast("long"))
-        .withColumn("stripped",
-          regexp_replace(col("text"), "<[^>]*>", " "))
-        .withColumn("decoded",
-          regexp_replace(regexp_replace(regexp_replace(regexp_replace(
-            col("stripped"), "&amp;", "&"), "&lt;", "<"), "&gt;", ">"),
-            "&quot;", "\""))
-        .withColumn("clean",
-          trim(regexp_replace(col("decoded"), "\\s+", " ")))
-        .select(col("doc_id"), col("n_tags"),
-          length(col("text")).cast("long").as("raw_len"),
-          length(col("clean")).cast("long").as("clean_len"),
-          substring(col("clean"), 1, 48).as("clean_prefix"))
-        .orderBy(col("doc_id"))
-    }),
-
-    // UNIGRAM TOTAL-VARIATION DRIFT (the distribution-shift check a
-    // corpus pipeline runs between two slices before mixing them —
-    // TVD = ½ Σ_w |p₀(w) − p₁(w)| over the shared vocabulary): slices
-    // are the deterministic doc_id parity halves; the per-token drift
-    // score |c₀·N₁ − c₁·N₀| and the TVD numerator stay EXACT int64
-    // cross-multiplications (never per-token float ratios, whose sum
-    // would be order-dependent), with ONE final IEEE division for the
-    // reported TVD. Output: the 10 most drifted tokens, each row also
-    // carrying the corpus-level TVD. Scale: one token-keyed count
-    // aggregate + a one-row totals broadcast + a top-10
-    // TakeOrderedAndProject over the vocabulary — never the corpus.
-    "tx47_unigram_tvd_drift" -> ((s, dir) => {
-      val tok = fanout(docs(s, dir))
-        .selectExpr("doc_id", s"explode($tokExpr) AS tk")
-      val cnt = tok.groupBy(col("tk"))
-        .agg(sum(when(expr("doc_id % 2 = 0"), 1L).otherwise(0L)).as("c0"),
-          sum(when(expr("doc_id % 2 = 1"), 1L).otherwise(0L)).as("c1"))
-      val tot = cnt.agg(sum(col("c0")).as("n0"), sum(col("c1")).as("n1"))
-      val scored = cnt.crossJoin(broadcast(tot))
-        .withColumn("drift_num", abs(col("c0") * col("n1") -
-          col("c1") * col("n0")))
-      val tvd = scored.agg(sum(col("drift_num")).as("sn"),
-        max(col("n0")).as("n0"), max(col("n1")).as("n1"))
-        .select(col("n0"), col("n1"),
-          expr("cast(sn as double) / cast(2 * n0 * n1 as double)")
-            .as("tvd"))
-      scored.select(col("tk"), col("c0"), col("c1"), col("drift_num"))
-        .orderBy(col("drift_num").desc, col("tk"))
-        .limit(10)
-        .crossJoin(broadcast(tvd))
-        .orderBy(col("drift_num").desc, col("tk"))
-    })
-  )
-
-  /** Injected markup fixtures — shared verbatim by tx46 and its oracle. */
-  private val TX46_HTML_ROW =
-    "<p>Hello <b>world</b> &amp; friends</p>  <div class=\"x\">tail" +
-      "   text &lt;kept&gt;</div>"
-  private val TX46_BROKEN_ROW =
-    "plain &quot;quoted&quot; start <span>open tag never closed " +
-      "and   wide   gaps"
-
-  /** tx39's single-fold CDC cutter as a shared (doc_id, source, chunk)
-    * stream — one md5 per character position (see the tx39 comment for
-    * the CollapseProject history), explode_outer so the implicit
-    * size()>0 filter of plain explode can't push the fold into the
-    * scan. Shared by tx39 (chunk inventory) and tx40 (source matrix). */
-  private def cdcChunkRows(s: SparkSession, dir: String): DataFrame =
-    fanout(docs(s, dir))
-      .selectExpr("doc_id", "source",
-        """aggregate(
-             sequence(8, greatest(length(text), 8)),
-             named_struct('p', 0L, 'cs', cast(array() as array<string>)),
-             (acc, i) -> if(i < length(text) AND
-                 cast(conv(substr(md5(cast(substring(text, cast(i - 7 as int), 8) as binary)), 1, 2), 16, 10) as bigint) % 32 = 0,
-               named_struct('p', i,
-                 'cs', concat(acc.cs, array(substring(text, cast(acc.p + 1 as int), cast(i - acc.p as int))))),
-               acc),
-             acc -> concat(acc.cs, array(substring(text, cast(acc.p + 1 as int), cast(length(text) - acc.p as int))))) AS chunks""")
-      .select(col("doc_id"), col("source"),
-        explode_outer(col("chunks")).as("chunk"))
-
-  /** Fixed BPE merge vocabulary, in rank order. Valid by construction: every
-    * rule's left/right part is a single character or the product of a
-    * strictly earlier rule. */
-  private val bpeMerges: Seq[(String, String)] = Seq(
-    "t" -> "h", "th" -> "e", "i" -> "n", "a" -> "n", "an" -> "d",
-    "e" -> "r", "o" -> "n", "r" -> "e", "a" -> "t", "e" -> "n",
-    "o" -> "r", "e" -> "s", "s" -> "t", "in" -> "g", "o" -> "u",
-    "c" -> "h", "l" -> "l", "w" -> "h", "th" -> "at", "ou" -> "r")
-
-  private val dTok = raw"regexp_split_to_array(trim(lower(text)), '\s+')"
-  private val dStop = "('the', 'a', 'of', 'and', 'to', 'in', 'is')"
-
-  /** Shared DuckDB replay of [[dsirWeights]] — CTE bodies only (no WITH),
-    * ending in `d(doc_id, n_bigrams, w)`. */
-  private def dsirSql: String =
-    s"""toks AS (SELECT doc_id, source, $dTok AS tk FROM documents),
-       |bg AS (
-       |  SELECT doc_id, source,
-       |    unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg
-       |  FROM toks WHERE len(tk) >= 2),
-       |db AS (
-       |  SELECT doc_id, source,
-       |    CAST(((strpos('0123456789abcdef', substr(md5(bg), 1, 1)) - 1) * 16
-       |      + (strpos('0123456789abcdef', substr(md5(bg), 2, 1)) - 1)) % 64 AS INT) AS bucket,
-       |    COUNT(*) AS nb
-       |  FROM bg GROUP BY doc_id, source, 3),
-       |rawb AS (SELECT bucket, SUM(nb) AS raw FROM db GROUP BY bucket),
-       |tgtb AS (SELECT bucket, SUM(nb) AS tgt FROM db WHERE source = 'src0' GROUP BY bucket),
-       |tots AS (SELECT (SELECT SUM(raw) FROM rawb) AS tot_r,
-       |                (SELECT SUM(tgt) FROM tgtb) AS tot_t),
-       |lr AS (
-       |  SELECT rawb.bucket,
-       |    CAST(ROUND(ln(CAST((COALESCE(tgt, 0) + 1) * (tot_r + 64) AS DOUBLE)
-       |      / CAST((raw + 1) * (tot_t + 64) AS DOUBLE)), 6) AS DECIMAL(18,6)) AS lr
-       |  FROM rawb LEFT JOIN tgtb ON rawb.bucket = tgtb.bucket, tots),
-       |d AS (
-       |  SELECT doc_id, CAST(SUM(nb) AS BIGINT) AS n_bigrams, SUM(nb * lr) AS w
-       |  FROM db JOIN lr USING (bucket) GROUP BY doc_id)""".stripMargin
-
-  val oracle: Map[String, String] = Map(
-    "tx01_exact_dedup" ->
-      """SELECT md5(text) AS text_hash, MIN(doc_id) AS keep_id, COUNT(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY keep_id""".stripMargin,
-
-    "tx02_token_stats" ->
-      s"""WITH d AS (SELECT lang, source, n_chars, len($dTok) AS n_tokens FROM documents)
-         |SELECT lang, source, COUNT(*) AS n_docs,
-         |  CAST(SUM(n_tokens) AS DOUBLE) / COUNT(*) AS avg_tokens,
-         |  CAST(SUM(n_chars) AS DOUBLE) / COUNT(*) AS avg_chars,
-         |  MAX(n_tokens) AS max_tokens
-         |FROM d GROUP BY lang, source ORDER BY lang, source""".stripMargin,
-
-    "tx03_quality_score" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, text,
-         |    len($dTok) AS n_tokens,
-         |    len(list_filter($dTok, t -> t IN $dStop)) AS n_stop,
-         |    length(text) - length(regexp_replace(text, '[^\\w\\s]', '', 'g')) AS n_punct
-         |  FROM documents)
-         |SELECT doc_id, n_tokens, n_stop, n_punct,
-         |  CAST(n_stop AS DOUBLE) / n_tokens AS stop_ratio,
-         |  CAST(length(text) AS DOUBLE) / n_tokens AS char_per_token,
-         |  ROUND(0.4 * (CAST(n_stop AS DOUBLE) / n_tokens)
-         |      + 0.6 * LEAST(1.0, CAST(n_tokens AS DOUBLE) / 100.0), 6) AS quality_score
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    "tx04_langid_confusion" ->
-      s"""WITH d AS (
-         |  SELECT lang,
-         |    CAST(len(list_filter($dTok, t -> t IN $dStop)) AS DOUBLE) / len($dTok) AS stop_ratio
-         |  FROM documents)
-         |SELECT CASE WHEN stop_ratio >= 0.08 THEN 'en' ELSE 'other' END AS predicted,
-         |  lang, COUNT(*) AS n
-         |FROM d GROUP BY predicted, lang ORDER BY predicted, lang""".stripMargin,
-
-    "tx05_minhash_pairs" ->
-      s"""WITH toks AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
-         |  FROM toks WHERE len(tk) >= 3),
-         |hs AS (
-         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
-         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
-         |bd AS (
-         |  SELECT doc_id, j // 4 AS b,
-         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
-         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
-         |  FROM hs GROUP BY doc_id, j // 4)
-         |SELECT a.doc_id AS doc_a, c.doc_id AS doc_b, COUNT(*) AS n_shared_bands
-         |FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig AND a.doc_id < c.doc_id
-         |GROUP BY doc_a, doc_b ORDER BY doc_a, doc_b""".stripMargin,
-
-    "tx06_ngram_jaccard" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM (SELECT doc_id, $dTok AS tk FROM documents) WHERE len(tk) >= 3),
-         |p AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_inter,
-         |    len(a.sh) + len(b.sh) - len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_union
-         |  FROM sh a, sh b
-         |  WHERE a.doc_id % 37 = 0 AND b.doc_id % 41 = 0 AND a.doc_id < b.doc_id)
-         |SELECT doc_a, doc_b, CAST(n_inter AS BIGINT) AS n_inter,
-         |  CAST(n_union AS BIGINT) AS n_union,
-         |  CAST(n_inter AS DOUBLE) / n_union AS jaccard
-         |FROM p WHERE n_inter >= 1 ORDER BY doc_a, doc_b""".stripMargin,
-
-    "tx07_fingerprint" ->
-      """SELECT doc_id,
-        |  list_reduce(
-        |    list_prepend(0::BIGINT,
-        |      list_transform(range(1, least(length(text), 64) + 1), i -> ascii(substr(text, i, 1)))),
-        |    (acc, c) -> (acc * 31 + c) % 1000000007) AS fp
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "tx08_simhash_pairs" ->
-      s"""WITH toks AS (SELECT DISTINCT doc_id, unnest($dTok) AS tok FROM documents),
-         |h AS (SELECT doc_id, md5(tok) AS h FROM toks),
-         |bits AS (
-         |  SELECT doc_id, i,
-         |    ((strpos('0123456789abcdef', substr(h, 1 + CAST(i // 4 AS INT), 1)) - 1)
-         |      >> (3 - CAST(i % 4 AS INT))) & 1 AS bit
-         |  FROM h, range(0, 64) t(i)),
-         |sb AS (SELECT doc_id, i, CASE WHEN SUM(2 * bit - 1) > 0 THEN 1 ELSE 0 END AS sbit
-         |       FROM bits GROUP BY doc_id, i),
-         |nib AS (SELECT doc_id, i // 4 AS ni,
-         |    substr('0123456789abcdef', CAST(SUM(sbit << CAST(3 - (i % 4) AS INT)) AS INT) + 1, 1) AS ch
-         |  FROM sb GROUP BY doc_id, i // 4),
-         |sig AS (SELECT doc_id, string_agg(ch, '' ORDER BY ni) AS simhash FROM nib GROUP BY doc_id),
-         |bands AS (SELECT doc_id, simhash, b, substr(simhash, CAST(1 + 8 * b AS INT), 8) AS band
-         |          FROM sig, range(0, 2) t(b)),
-         |p AS (
-         |  SELECT a.doc_id AS doc_a, c.doc_id AS doc_b,
-         |    a.simhash AS sig_a, c.simhash AS sig_b, COUNT(*) AS n_shared_bands
-         |  FROM bands a JOIN bands c ON a.b = c.b AND a.band = c.band AND a.doc_id < c.doc_id
-         |  GROUP BY 1, 2, 3, 4),
-         |hd AS (
-         |  SELECT doc_a, doc_b, n_shared_bands,
-         |    CAST(list_sum(list_transform(range(1, 17), q ->
-         |      CAST(substr('0112122312232334',
-         |        1 + CAST(xor(strpos('0123456789abcdef', substr(sig_a, CAST(q AS INT), 1)) - 1,
-         |                     strpos('0123456789abcdef', substr(sig_b, CAST(q AS INT), 1)) - 1) AS INT), 1) AS INT)))
-         |      AS INT) AS hamming
-         |  FROM p)
-         |SELECT doc_a, doc_b, n_shared_bands, hamming
-         |FROM hd WHERE hamming <= 8 ORDER BY doc_a, doc_b""".stripMargin,
-
-    "tx09_bpe_tokens" ->
-      s"""WITH d AS (SELECT lang, len($dTok) AS ws_tokens,
-         |  len(regexp_extract_all(lower(text), '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS bpe_tokens
-         |  FROM documents)
-         |SELECT lang, COUNT(*) AS n_docs,
-         |  CAST(SUM(ws_tokens) AS BIGINT) AS total_ws_tokens,
-         |  CAST(SUM(bpe_tokens) AS BIGINT) AS total_bpe_tokens,
-         |  CAST(SUM(bpe_tokens) AS DOUBLE) / SUM(ws_tokens) AS bpe_per_ws
-         |FROM d GROUP BY lang ORDER BY lang""".stripMargin,
-
-    "tx10_bpe_merge_tokens" -> {
-      val wrapped =
-        raw"regexp_replace(regexp_replace(lower(text), '[^a-z]+', ' ', 'g'), '([a-z])', '(\1)', 'g')"
-      val merged = bpeMerges.foldLeft(wrapped) { case (acc, (x, y)) =>
-        s"replace($acc, '($x)($y)', '($x$y)')"
-      }
-      s"""SELECT doc_id, lang,
-         |  CAST(length(m) - length(replace(m, '(', '')) AS BIGINT) AS bpe_tokens
-         |FROM (SELECT doc_id, lang, $merged AS m FROM documents)
-         |ORDER BY doc_id""".stripMargin
     },
-
-    "tx12_repetition" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id,
-         |    list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]) AS sh
-         |  FROM (SELECT doc_id, $dTok AS tk FROM documents) WHERE len(tk) >= 3)
-         |SELECT doc_id, CAST(len(sh) AS BIGINT) AS n_shingles,
-         |  CAST(len(list_distinct(sh)) AS BIGINT) AS n_distinct,
-         |  1.0 - CAST(len(list_distinct(sh)) AS DOUBLE) / len(sh) AS rep_ratio,
-         |  (1.0 - CAST(len(list_distinct(sh)) AS DOUBLE) / len(sh)) > 0.2 AS drop_repetitive
-         |FROM sh ORDER BY doc_id""".stripMargin,
-
-    "tx13_pii_scrub" ->
-      raw"""WITH r AS (
-           |  SELECT doc_id, text ||
-           |    CASE WHEN doc_id % 7 = 0 THEN ' contact user' || doc_id || '@example.com' ELSE '' END ||
-           |    CASE WHEN doc_id % 11 = 0 THEN ' call +1-555-867-5309' ELSE '' END ||
-           |    CASE WHEN doc_id % 13 = 0 THEN ' host 10.0.0.7' ELSE '' END AS raw
-           |  FROM documents),
-           |c AS (
-           |  SELECT doc_id,
-           |    regexp_replace(regexp_replace(regexp_replace(raw,
-           |      '[a-z0-9._]+@[a-z0-9-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-           |      '\+1-[0-9]{3}-[0-9]{3}-[0-9]{4}', '<PHONE>', 'g'),
-           |      '[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}', '<IP>', 'g') AS clean
-           |  FROM r)
-           |SELECT doc_id,
-           |  CAST((length(clean) - length(replace(clean, '<EMAIL>', ''))) // 7 AS BIGINT) AS n_email,
-           |  CAST((length(clean) - length(replace(clean, '<PHONE>', ''))) // 7 AS BIGINT) AS n_phone,
-           |  CAST((length(clean) - length(replace(clean, '<IP>', ''))) // 4 AS BIGINT) AS n_ip,
-           |  md5(clean) AS clean_md5
-           |FROM c ORDER BY doc_id""".stripMargin,
-
-    // same band/pair pipeline as tx05, then min-reachable-id per vertex via
-    // a recursive CTE — DuckDB's semi-naive evaluation of the same fixpoint
-    // the Spark side iterates explicitly
-    "tx14_dedup_groups" ->
-      s"""WITH RECURSIVE toks AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
-         |  FROM toks WHERE len(tk) >= 3),
-         |hs AS (
-         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
-         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
-         |bd AS (
-         |  SELECT doc_id, j // 4 AS b,
-         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
-         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
-         |  FROM hs GROUP BY doc_id, j // 4),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS src, c.doc_id AS dst
-         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
-         |    AND a.doc_id < c.doc_id),
-         |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-         |verts AS (SELECT DISTINCT src AS id FROM sym),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM verts
-         |  UNION
-         |  SELECT s.src, reach.r FROM sym s JOIN reach ON s.dst = reach.id),
-         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id)
-         |SELECT d.doc_id, COALESCE(comp.label, d.doc_id) AS canonical_id,
-         |  COALESCE(comp.label, d.doc_id) = d.doc_id AS is_kept
-         |FROM documents d LEFT JOIN comp ON comp.id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // tx14's component replay rolled up to the size histogram
-    "tx34_dedup_cluster_stats" ->
-      s"""WITH RECURSIVE toks AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
-         |  FROM toks WHERE len(tk) >= 3),
-         |hs AS (
-         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
-         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
-         |bd AS (
-         |  SELECT doc_id, j // 4 AS b,
-         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
-         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
-         |  FROM hs GROUP BY doc_id, j // 4),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS src, c.doc_id AS dst
-         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
-         |    AND a.doc_id < c.doc_id),
-         |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-         |verts AS (SELECT DISTINCT src AS id FROM sym),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM verts
-         |  UNION
-         |  SELECT s.src, reach.r FROM sym s JOIN reach ON s.dst = reach.id),
-         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
-         |sizes AS (
-         |  SELECT COALESCE(comp.label, d.doc_id) AS canonical_id,
-         |    COUNT(*) AS cluster_size
-         |  FROM documents d LEFT JOIN comp ON comp.id = d.doc_id
-         |  GROUP BY canonical_id)
-         |SELECT cluster_size, COUNT(*) AS n_clusters,
-         |  cluster_size * COUNT(*) AS n_docs
-         |FROM sizes GROUP BY cluster_size
-         |ORDER BY cluster_size""".stripMargin,
-
-    // tx14's component replay + a rank-argmax survivor pick
-    // (n_chars DESC, doc_id ASC — the same deterministic tie rule)
-    "tx36_dedup_survivorship" ->
-      s"""WITH RECURSIVE toks AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
-         |  FROM toks WHERE len(tk) >= 3),
-         |hs AS (
-         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
-         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
-         |bd AS (
-         |  SELECT doc_id, j // 4 AS b,
-         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
-         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
-         |  FROM hs GROUP BY doc_id, j // 4),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS src, c.doc_id AS dst
-         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
-         |    AND a.doc_id < c.doc_id),
-         |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-         |verts AS (SELECT DISTINCT src AS id FROM sym),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM verts
-         |  UNION
-         |  SELECT s.src, reach.r FROM sym s JOIN reach ON s.dst = reach.id),
-         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
-         |wc AS (
-         |  SELECT d.doc_id, d.n_chars,
-         |    COALESCE(comp.label, d.doc_id) AS component
-         |  FROM documents d LEFT JOIN comp ON comp.id = d.doc_id),
-         |sv AS (
-         |  SELECT component, doc_id AS survivor_id FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY component
-         |      ORDER BY n_chars DESC, doc_id) AS rn FROM wc)
-         |  WHERE rn = 1)
-         |SELECT wc.doc_id, wc.component, wc.n_chars, sv.survivor_id,
-         |  wc.doc_id = sv.survivor_id AS is_survivor
-         |FROM wc JOIN sv USING (component)
-         |ORDER BY wc.doc_id""".stripMargin,
-
-    // bigram slots via unnest + generate_subscripts (the v17-proven
-    // form) and a pos+1 self-join; same 6-dp ln of one exact
-    // integer-ratio quotient (DuckDB ln = natural log)
-    "tx37_pmi_bigrams" ->
-      s"""WITH t AS (SELECT doc_id, $dTok AS toks FROM documents),
-         |t2 AS (SELECT * FROM t WHERE len(toks) >= 2),
-         |u AS (SELECT doc_id, unnest(toks) AS w,
-         |        generate_subscripts(toks, 1) AS pos FROM t2),
-         |b AS (SELECT a.w AS w1, c.w AS w2 FROM u a JOIN u c
-         |      ON c.doc_id = a.doc_id AND c.pos = a.pos + 1),
-         |n AS (SELECT COUNT(*) AS nn FROM b),
-         |c1 AS (SELECT w1 AS w, COUNT(*) AS ca FROM b GROUP BY 1),
-         |c2 AS (SELECT w2 AS w, COUNT(*) AS cb FROM b GROUP BY 1),
-         |ab AS (SELECT w1, w2, COUNT(*) AS c_ab FROM b GROUP BY 1, 2
-         |       HAVING COUNT(*) >= 5)
-         |SELECT ab.w1, ab.w2, c_ab,
-         |  ROUND(ln(CAST(c_ab * nn AS DOUBLE)
-         |    / CAST(c1.ca * c2.cb AS DOUBLE)), 6) AS pmi
-         |FROM ab JOIN c1 ON c1.w = ab.w1 JOIN c2 ON c2.w = ab.w2, n
-         |ORDER BY pmi DESC, w1, w2 LIMIT 50""".stripMargin,
-
-    // the same exact-int64 OLS kernel: 6-dp ln pinned through a decimal
-    // into micro-units, int64 sums (CAST per the typed-sum rule), one
-    // final division of two exact int64s
-    "tx38_zipf_heaps" ->
-      s"""WITH wc AS (
-         |  SELECT source, w, COUNT(*) AS c FROM (
-         |    SELECT source, unnest($dTok) AS w FROM documents)
-         |  GROUP BY 1, 2),
-         |stats AS (
-         |  SELECT source, CAST(SUM(c) AS BIGINT) AS n_tokens,
-         |    COUNT(*) AS n_types
-         |  FROM wc GROUP BY 1),
-         |top AS (SELECT * FROM (
-         |    SELECT source, w, c,
-         |      CAST(ROW_NUMBER() OVER (PARTITION BY source
-         |        ORDER BY c DESC, w) AS BIGINT) AS rank
-         |    FROM wc) WHERE rank <= 100),
-         |xy AS (
-         |  SELECT source,
-         |    CAST(CAST(round(ln(CAST(rank AS DOUBLE)), 6) AS DECIMAL(18,6))
-         |      * 1000000 AS BIGINT) AS x6,
-         |    CAST(CAST(round(ln(CAST(c AS DOUBLE)), 6) AS DECIMAL(18,6))
-         |      * 1000000 AS BIGINT) AS y6
-         |  FROM top),
-         |fit AS (
-         |  SELECT source, COUNT(*) AS n,
-         |    CAST(SUM(x6) AS BIGINT) AS sx, CAST(SUM(y6) AS BIGINT) AS sy,
-         |    CAST(SUM(x6 * y6) AS BIGINT) AS sxy,
-         |    CAST(SUM(x6 * x6) AS BIGINT) AS sxx
-         |  FROM xy GROUP BY 1)
-         |SELECT s.source, s.n_tokens, s.n_types,
-         |  CAST(n * sxy - sx * sy AS DOUBLE)
-         |    / CAST(n * sxx - sx * sx AS DOUBLE) AS zipf_slope
-         |FROM stats s JOIN fit USING (source)
-         |ORDER BY source""".stripMargin,
-
-    // full replay of the df-capped containment pipeline: same shingles,
-    // same df ≤ 50 cap, same pair counts, same IEEE divisions
-    "tx35_containment_dedup" ->
-      s"""WITH sh AS (
-         |  SELECT doc_id,
-         |    unnest(list_distinct(list_transform(range(1, len(tk) - 1),
-         |      i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2]))) AS s
-         |  FROM (SELECT doc_id, $dTok AS tk FROM documents)
-         |  WHERE len(tk) >= 3),
-         |df AS (SELECT s, COUNT(*) AS d FROM sh GROUP BY s),
-         |rare AS (SELECT sh.doc_id, sh.s FROM sh JOIN df USING (s)
-         |         WHERE d <= 50),
-         |sz AS (SELECT doc_id, COUNT(*) AS n_sh FROM rare GROUP BY doc_id),
-         |p AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_inter
-         |  FROM rare a JOIN rare b USING (s) WHERE a.doc_id < b.doc_id
-         |  GROUP BY 1, 2)
-         |SELECT doc_a, doc_b, n_inter, sa.n_sh AS n_a, sb.n_sh AS n_b,
-         |  greatest(CAST(n_inter AS DOUBLE) / sa.n_sh,
-         |           CAST(n_inter AS DOUBLE) / sb.n_sh) AS containment
-         |FROM p
-         |JOIN sz sa ON sa.doc_id = doc_a
-         |JOIN sz sb ON sb.doc_id = doc_b
-         |WHERE greatest(CAST(n_inter AS DOUBLE) / sa.n_sh,
-         |               CAST(n_inter AS DOUBLE) / sb.n_sh) >= 0.5
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // tx14's component replay + the split-hash assignment on the
-    // component id — same-cluster-same-side falls out arithmetically
-    "tx33_leakage_free_split" ->
-      s"""WITH RECURSIVE toks AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
-         |  FROM toks WHERE len(tk) >= 3),
-         |hs AS (
-         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
-         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
-         |bd AS (
-         |  SELECT doc_id, j // 4 AS b,
-         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
-         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
-         |  FROM hs GROUP BY doc_id, j // 4),
-         |pairs AS (
-         |  SELECT DISTINCT a.doc_id AS src, c.doc_id AS dst
-         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
-         |    AND a.doc_id < c.doc_id),
-         |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-         |verts AS (SELECT DISTINCT src AS id FROM sym),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM verts
-         |  UNION
-         |  SELECT s.src, reach.r FROM sym s JOIN reach ON s.dst = reach.id),
-         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id),
-         |asg AS (
-         |  SELECT d.doc_id, COALESCE(comp.label, d.doc_id) AS component
-         |  FROM documents d LEFT JOIN comp ON comp.id = d.doc_id)
-         |SELECT doc_id, component,
-         |  CASE WHEN ((strpos('0123456789abcdef',
-         |      substr(md5('split:' || component), 1, 1)) - 1) * 16
-         |    + (strpos('0123456789abcdef',
-         |      substr(md5('split:' || component), 2, 1)) - 1)) % 10 < 9
-         |  THEN 'train' ELSE 'test' END AS split
-         |FROM asg ORDER BY doc_id""".stripMargin,
-
-    "tx11_neardup_dedup" ->
-      s"""WITH toks AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |sh AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
-         |  FROM toks WHERE len(tk) >= 3),
-         |hs AS (
-         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
-         |  FROM sh, range(0, 16) t(j) GROUP BY doc_id, j),
-         |bd AS (
-         |  SELECT doc_id, j // 4 AS b,
-         |    md5(string_agg(lpad(j::VARCHAR, 2, '0') || ':' || sig, '|'
-         |        ORDER BY lpad(j::VARCHAR, 2, '0') || ':' || sig)) AS band_sig
-         |  FROM hs GROUP BY doc_id, j // 4),
-         |canon AS (
-         |  SELECT c.doc_id AS doc_id, MIN(a.doc_id) AS canonical_id
-         |  FROM bd a JOIN bd c ON a.b = c.b AND a.band_sig = c.band_sig
-         |    AND a.doc_id < c.doc_id
-         |  GROUP BY c.doc_id)
-         |SELECT d.doc_id, canonical_id, canonical_id IS NULL AS is_kept
-         |FROM documents d LEFT JOIN canon USING (doc_id)
-         |ORDER BY d.doc_id""".stripMargin,
-
-    // identical count-min sketch replay: same md5-derived (seed, bucket)
-    // cells (bucket = first md5 byte via nibble arithmetic), same min-over-
-    // rows estimate, so n_est/overcount match the engine bit-for-bit
-    "tx15_cms_heavy_hitters" ->
-      s"""WITH toks AS (SELECT unnest($dTok) AS token FROM documents),
-         |cell AS (
-         |  SELECT j::VARCHAR AS js, md5(j::VARCHAR || ':' || token) AS h
-         |  FROM toks, range(0, 4) t(j)),
-         |cells AS (
-         |  SELECT js, 16 * (strpos('0123456789abcdef', substr(h, 1, 1)) - 1)
-         |            + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) AS bucket,
-         |    COUNT(*) AS cnt
-         |  FROM cell GROUP BY 1, 2),
-         |exact AS (SELECT token, COUNT(*) AS n_exact FROM toks GROUP BY token),
-         |top AS (SELECT token, n_exact,
-         |    ROW_NUMBER() OVER (ORDER BY n_exact DESC, token) AS rnk
-         |  FROM exact ORDER BY n_exact DESC, token LIMIT 20),
-         |probe AS (
-         |  SELECT rnk, token, n_exact, j::VARCHAR AS js,
-         |    md5(j::VARCHAR || ':' || token) AS h
-         |  FROM top, range(0, 4) t(j)),
-         |est AS (
-         |  SELECT rnk, token, n_exact, MIN(cnt) AS n_est
-         |  FROM (SELECT rnk, token, n_exact, js,
-         |          16 * (strpos('0123456789abcdef', substr(h, 1, 1)) - 1)
-         |          + (strpos('0123456789abcdef', substr(h, 2, 1)) - 1) AS bucket
-         |        FROM probe) p
-         |  JOIN cells USING (js, bucket)
-         |  GROUP BY rnk, token, n_exact)
-         |SELECT CAST(rnk AS BIGINT) AS rnk, token, n_exact, n_est,
-         |  n_est - n_exact AS overcount
-         |FROM est ORDER BY rnk""".stripMargin,
-
-    "tx16_tfidf_keywords" ->
-      s"""WITH tf AS (
-         |  SELECT doc_id, tok AS token, COUNT(*) AS tf
-         |  FROM (SELECT doc_id, unnest($dTok) AS tok FROM documents)
-         |  WHERE tok <> '' GROUP BY doc_id, tok),
-         |n AS (SELECT COUNT(DISTINCT doc_id) AS n_docs FROM tf),
-         |dfr AS (SELECT token, COUNT(*) AS df FROM tf GROUP BY token),
-         |x AS (
-         |  SELECT tf.doc_id, tf.token,
-         |    ROUND(CAST(tf.tf AS DOUBLE)
-         |      * ln(CAST(n_docs AS DOUBLE) / CAST(df AS DOUBLE)), 6) AS tfidf
-         |  FROM tf JOIN dfr USING (token), n),
-         |r AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY doc_id
-         |        ORDER BY tfidf DESC, token) AS rnk FROM x)
-         |SELECT doc_id, CAST(rnk AS BIGINT) AS rnk, token, tfidf
-         |FROM r WHERE rnk <= 3 ORDER BY doc_id, rnk""".stripMargin,
-
-    "tx17_boilerplate_chunks" ->
-      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |i0 AS (SELECT doc_id, tk,
-         |         unnest(generate_series(1, len(tk) // 10)) AS i FROM tk),
-         |ch AS (SELECT doc_id,
-         |         md5(array_to_string(tk[(i-1)*10+1 : (i-1)*10+10], ' ')) AS ch
-         |       FROM i0),
-         |freq AS (SELECT ch, COUNT(DISTINCT doc_id) AS ndocs FROM ch GROUP BY ch),
-         |per AS (SELECT c.doc_id, COUNT(*) AS n_chunks,
-         |          SUM(CASE WHEN f.ndocs >= 2 THEN 1 ELSE 0 END) AS dup_chunks
-         |        FROM ch c JOIN freq f ON c.ch = f.ch GROUP BY c.doc_id)
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(n_chunks, 0) AS BIGINT) AS n_chunks,
-         |  CAST(COALESCE(dup_chunks, 0) AS BIGINT) AS dup_chunks,
-         |  CAST(COALESCE(dup_chunks, 0) AS DOUBLE)
-         |    / CAST(greatest(COALESCE(n_chunks, 0), 1) AS DOUBLE) AS dup_frac
-         |FROM documents d LEFT JOIN per USING (doc_id) ORDER BY d.doc_id""".stripMargin,
-
-    "tx18_decontaminate" ->
-      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |i0 AS (SELECT doc_id, tk,
-         |         unnest(generate_series(1, len(tk) - 7)) AS i
-         |       FROM tk WHERE len(tk) >= 8),
-         |g AS (SELECT doc_id,
-         |        md5(array_to_string(tk[i : i+7], ' ')) AS g
-         |      FROM i0),
-         |bench AS (SELECT DISTINCT g FROM g WHERE doc_id % 20 = 0),
-         |per AS (SELECT s.doc_id, COUNT(*) AS n_grams,
-         |          SUM(CASE WHEN b.g IS NOT NULL THEN 1 ELSE 0 END) AS contaminated
-         |        FROM (SELECT * FROM g WHERE doc_id % 20 <> 0) s
-         |        LEFT JOIN bench b ON s.g = b.g GROUP BY s.doc_id)
-         |SELECT d.doc_id,
-         |  CAST(COALESCE(n_grams, 0) AS BIGINT) AS n_grams,
-         |  CAST(COALESCE(contaminated, 0) AS BIGINT) AS contaminated,
-         |  CAST(COALESCE(contaminated, 0) AS DOUBLE)
-         |    / CAST(greatest(COALESCE(n_grams, 0), 1) AS DOUBLE) >= 0.05 AS flagged
-         |FROM documents d LEFT JOIN per USING (doc_id)
-         |WHERE d.doc_id % 20 <> 0 ORDER BY d.doc_id""".stripMargin,
-
-    "tx19_pack_sequences" ->
-      s"""WITH d AS (SELECT doc_id, len($dTok) AS n_tok FROM documents),
-         |o AS (SELECT doc_id, n_tok,
-         |  COALESCE(SUM(n_tok) OVER (ORDER BY doc_id
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS tok_offset
-         |  FROM d)
-         |SELECT doc_id, CAST(n_tok AS BIGINT) AS n_tok,
-         |  CAST(tok_offset AS BIGINT) AS tok_offset,
-         |  CAST(tok_offset // 512 AS BIGINT) AS seq_first,
-         |  CAST((tok_offset + n_tok - 1) // 512 AS BIGINT) AS seq_last,
-         |  CAST((tok_offset + n_tok - 1) // 512 - tok_offset // 512 + 1 AS BIGINT)
-         |    AS n_seqs,
-         |  (tok_offset + n_tok - 1) // 512 > tok_offset // 512 AS crosses_seq
-         |FROM o ORDER BY doc_id""".stripMargin,
-
-    "tx20_stratified_sample" ->
-      """WITH d AS (SELECT doc_id, lang,
-        |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS skey FROM documents)
-        |SELECT doc_id, lang, skey FROM d
-        |WHERE skey < CASE WHEN lang = 'en' THEN '40000000'
-        |                  WHEN lang = 'zh' THEN 'c0000000'
-        |                  ELSE '80000000' END
-        |ORDER BY doc_id""".stripMargin,
-
-    "tx21_unigram_logprob" ->
-      s"""WITH tf AS (
-         |  SELECT doc_id, tok AS token, COUNT(*) AS tf
-         |  FROM (SELECT doc_id, unnest($dTok) AS tok FROM documents)
-         |  WHERE tok <> '' GROUP BY doc_id, tok),
-         |freq AS (SELECT token, SUM(tf) AS cnt FROM tf GROUP BY token),
-         |tot AS (SELECT SUM(cnt) AS total FROM freq),
-         |terms AS (
-         |  SELECT tf.doc_id, tf.tf,
-         |    CAST(ROUND(CAST(tf.tf AS DOUBLE) *
-         |      ln(CAST(cnt AS DOUBLE) / CAST(total AS DOUBLE)), 6)
-         |      AS DECIMAL(18,6)) AS term
-         |  FROM tf JOIN freq USING (token), tot),
-         |d AS (
-         |  SELECT doc_id, CAST(SUM(tf) AS BIGINT) AS n_tok,
-         |    -CAST(SUM(term) AS DOUBLE) / CAST(SUM(tf) AS DOUBLE)
-         |      AS avg_nll
-         |  FROM terms GROUP BY doc_id)
-         |SELECT doc_id, n_tok, avg_nll, avg_nll >= 8.0 AS flagged
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    "tx22_domain_quota" ->
-      """WITH d AS (SELECT doc_id, source,
-        |  substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) AS skey FROM documents)
-        |SELECT doc_id, source, skey,
-        |  CAST(ROW_NUMBER() OVER w AS BIGINT) AS qrank,
-        |  ROW_NUMBER() OVER w <= 15 AS kept
-        |FROM d
-        |WINDOW w AS (PARTITION BY source ORDER BY skey, doc_id)
-        |ORDER BY doc_id""".stripMargin,
-
-    // identical Knuth-hash index arithmetic — BIGINT end to end
-    "tx23_negative_pairs" ->
-      """WITH nn AS (SELECT COUNT(*) AS n FROM documents),
-        |c AS (
-        |  SELECT d.doc_id, d.source, j,
-        |    (d.doc_id * 2654435761 + j * 40503) % nn.n AS c0, nn.n AS n
-        |  FROM documents d, nn, (SELECT unnest([1,2,3,4]) AS j)),
-        |x AS (
-        |  SELECT doc_id, source, CAST(j AS BIGINT) AS j,
-        |    CASE WHEN c0 = doc_id THEN (c0 + 1) % n ELSE c0 END AS neg_id
-        |  FROM c)
-        |SELECT x.doc_id, x.j, x.neg_id, x.source AS anchor_source,
-        |  d2.source AS neg_source, x.source = d2.source AS same_source
-        |FROM x JOIN documents d2 ON d2.doc_id = x.neg_id
-        |ORDER BY x.doc_id, x.j""".stripMargin,
-
-    // same 10-token chunking (incl. the tail chunk), keep = global first
-    // occurrence by (doc_id, idx), reassemble in idx order
-    "tx24_chunk_dedup_rewrite" ->
-      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |i0 AS (SELECT doc_id, tk,
-         |         unnest(generate_series(1, (len(tk) + 9) // 10)) AS i
-         |       FROM tk WHERE len(tk) >= 1),
-         |ch AS (SELECT doc_id, CAST(i - 1 AS INT) AS idx,
-         |         array_to_string(tk[(i-1)*10+1 : (i-1)*10+10], ' ') AS chunk
-         |       FROM i0),
-         |k AS (SELECT *, ROW_NUMBER() OVER (PARTITION BY md5(chunk)
-         |        ORDER BY doc_id, idx) = 1 AS keep FROM ch)
-         |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_chunks,
-         |  CAST(SUM(CASE WHEN keep THEN 1 ELSE 0 END) AS BIGINT) AS n_kept,
-         |  COALESCE(string_agg(chunk, ' ' ORDER BY idx) FILTER (WHERE keep),
-         |           '') AS clean_text,
-         |  CAST(length(COALESCE(string_agg(chunk, ' ' ORDER BY idx)
-         |    FILTER (WHERE keep), '')) AS BIGINT) AS clean_n_chars
-         |FROM k GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    "tx25_bigram_logprob" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, pos, w1 FROM (
-         |    SELECT doc_id, unnest(arr) AS w1, generate_subscripts(arr, 1) AS pos
-         |    FROM (SELECT doc_id, $dTok AS arr FROM documents))
-         |  WHERE w1 <> ''),
-         |b0 AS (
-         |  SELECT doc_id, w1,
-         |    lead(w1) OVER (PARTITION BY doc_id ORDER BY pos) AS w2
-         |  FROM toks),
-         |b2 AS (SELECT doc_id, w1, w2 FROM b0 WHERE w2 IS NOT NULL),
-         |bc AS (SELECT w1, w2, COUNT(*) AS bc FROM b2 GROUP BY w1, w2),
-         |pc AS (SELECT w1, SUM(bc) AS pc FROM bc GROUP BY w1),
-         |uc AS (SELECT w1 AS w2u, COUNT(*) AS uc FROM toks GROUP BY w1),
-         |tot AS (SELECT SUM(uc) AS total FROM uc),
-         |terms AS (
-         |  SELECT b2.doc_id,
-         |    CAST(ROUND(ln(
-         |      0.7 * (CAST(bc.bc AS DOUBLE) / CAST(pc.pc AS DOUBLE))
-         |      + 0.3 * (CAST(uc.uc AS DOUBLE) / CAST(tot.total AS DOUBLE))), 6)
-         |      AS DECIMAL(18,6)) AS term
-         |  FROM b2 JOIN bc USING (w1, w2) JOIN pc USING (w1)
-         |  JOIN uc ON b2.w2 = uc.w2u, tot),
-         |d0 AS (SELECT doc_id, COUNT(*) AS n_bigrams,
-         |    CAST(-SUM(term) * 1000000 AS BIGINT) AS x
-         |  FROM terms GROUP BY doc_id),
-         |d AS (SELECT doc_id, n_bigrams,
-         |    CAST((2 * x + n_bigrams) // (2 * n_bigrams) AS DOUBLE)
-         |      / 1000000.0 AS avg_nll
-         |  FROM d0)
-         |SELECT doc_id, n_bigrams, avg_nll, avg_nll >= 3.5 AS flagged
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // full replay of the span dedup: same overlapping 5-gram md5 stream,
-    // ≥2-occurrence hashes, position coverage, gaps-and-islands span
-    // merge, and uncovered-token reassembly
-    "tx26_substring_dedup" ->
-      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |base AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n, tk FROM tk),
-         |g AS (
-         |  SELECT doc_id, i, md5(array_to_string(tk[i : i + 4], ' ')) AS h
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(generate_series(1, len(tk) - 4)) AS i
-         |        FROM base WHERE n >= 5)),
-         |dh AS (SELECT h FROM g GROUP BY h HAVING COUNT(*) > 1),
-         |ds AS (SELECT doc_id, i FROM g JOIN dh USING (h)),
-         |cov AS (SELECT DISTINCT doc_id, t FROM
-         |  (SELECT doc_id, unnest(generate_series(i, i + 4)) AS t FROM ds)),
-         |isl AS (SELECT doc_id, t,
-         |    t - ROW_NUMBER() OVER (PARTITION BY doc_id ORDER BY t) AS grp
-         |  FROM cov),
-         |sp AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_covered,
-         |    CAST(COUNT(DISTINCT grp) AS BIGINT) AS n_spans
-         |  FROM isl GROUP BY doc_id),
-         |dc AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_dup_grams
-         |  FROM ds GROUP BY doc_id),
-         |tp AS (SELECT doc_id, unnest(tk) AS tok,
-         |    CAST(generate_subscripts(tk, 1) AS BIGINT) AS t FROM base),
-         |cl AS (SELECT tp.doc_id,
-         |    string_agg(tok, ' ' ORDER BY tp.t) AS clean_text
-         |  FROM tp LEFT JOIN cov ON cov.doc_id = tp.doc_id AND cov.t = tp.t
-         |  WHERE cov.t IS NULL GROUP BY tp.doc_id)
-         |SELECT b.doc_id, b.n AS n_tokens,
-         |  COALESCE(dc.n_dup_grams, 0) AS n_dup_grams,
-         |  COALESCE(sp.n_covered, 0) AS n_covered,
-         |  COALESCE(sp.n_spans, 0) AS n_spans,
-         |  COALESCE(cl.clean_text, '') AS clean_text
-         |FROM base b
-         |LEFT JOIN dc USING (doc_id)
-         |LEFT JOIN sp USING (doc_id)
-         |LEFT JOIN cl ON cl.doc_id = b.doc_id
-         |ORDER BY b.doc_id""".stripMargin,
-
-    // same 3-gram stream; first ownership = min doc_id per gram hash
-    "tx27_ngram_novelty" ->
-      s"""WITH tk AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |g AS (
-         |  SELECT doc_id, md5(array_to_string(tk[i : i + 2], ' ')) AS h
-         |  FROM (SELECT doc_id, tk,
-         |          unnest(generate_series(1, len(tk) - 2)) AS i
-         |        FROM tk WHERE len(tk) >= 3)),
-         |fd AS (SELECT h, MIN(doc_id) AS first_doc FROM g GROUP BY h),
-         |a AS (
-         |  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_grams,
-         |    CAST(SUM(CASE WHEN first_doc = doc_id THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_novel
-         |  FROM g JOIN fd USING (h) GROUP BY doc_id)
-         |SELECT doc_id, n_grams, n_novel,
-         |  CAST(n_novel AS DOUBLE) / CAST(n_grams AS DOUBLE)
-         |    AS novelty,
-         |  (CAST(n_novel AS DOUBLE) / CAST(n_grams AS DOUBLE)) < 0.3
-         |    AS derivative
-         |FROM a ORDER BY doc_id""".stripMargin,
-
-    // same 16 salted-md5 minhash components (tx05's hs CTE) compared
-    // position-wise; true Jaccard from tx06's shingle sets
-    "tx28_minhash_accuracy" ->
-      s"""WITH toks AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |shl AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
-         |  FROM toks WHERE len(tk) >= 3),
-         |hs AS (
-         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
-         |  FROM shl, range(0, 16) t(j) GROUP BY doc_id, j),
-         |sg AS (SELECT doc_id, list(sig ORDER BY j) AS sg FROM hs GROUP BY doc_id),
-         |ss AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM toks WHERE len(tk) >= 3),
-         |p AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    CAST(len(list_filter(range(1, 17),
-         |      i -> sa.sg[CAST(i AS INT)] = sb.sg[CAST(i AS INT)])) AS BIGINT)
-         |      AS n_match,
-         |    len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_inter,
-         |    len(a.sh) + len(b.sh)
-         |      - len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_union
-         |  FROM ss a
-         |  JOIN ss b ON a.doc_id % 37 = 0 AND b.doc_id % 41 = 0
-         |    AND a.doc_id < b.doc_id
-         |  JOIN sg sa ON sa.doc_id = a.doc_id
-         |  JOIN sg sb ON sb.doc_id = b.doc_id)
-         |SELECT doc_a, doc_b, n_match,
-         |  CAST(n_match AS DOUBLE) / 16.0 AS est,
-         |  CAST(n_inter AS DOUBLE) / n_union AS jaccard,
-         |  abs(CAST(n_match AS DOUBLE) / 16.0
-         |    - CAST(n_inter AS DOUBLE) / n_union) AS abs_err
-         |FROM p ORDER BY doc_a, doc_b""".stripMargin,
-
-    // full replay: hashed-bigram buckets, target/raw histograms with add-1
-    // smoothing, 6-dp-rounded per-bucket log-ratio, exact decimal doc sum
-    "tx29_dsir_importance" ->
-      s"""WITH $dsirSql
-         |SELECT doc_id, n_bigrams, CAST(w AS DOUBLE) AS log_weight, w > 0 AS selected
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // the same weights perturbed by the replayed Gumbel noise
-    // (u from 6 md5 nibbles, g = -ln(-ln(u))), top-64 keys kept
-    "tx31_gumbel_sample" ->
-      s"""WITH $dsirSql,
-         |keyed AS (
-         |  SELECT doc_id, n_bigrams, CAST(w AS DOUBLE) AS log_weight,
-         |    ROUND(CAST(w AS DOUBLE) + (-ln(-ln(
-         |      (CAST(list_sum(list_transform(range(0, 6), i ->
-         |        CAST(strpos('0123456789abcdef',
-         |          substr(md5('smp:' || doc_id), CAST(i + 1 AS INT), 1)) - 1
-         |        AS BIGINT) << CAST(4 * (5 - i) AS INT))) AS DOUBLE) + 0.5)
-         |      / 16777216.0))), 6) AS skey
-         |  FROM d),
-         |top AS (
-         |  SELECT *, CAST(ROW_NUMBER() OVER (ORDER BY skey DESC, doc_id)
-         |    AS BIGINT) AS rank
-         |  FROM keyed)
-         |SELECT rank, doc_id, n_bigrams, log_weight, skey
-         |FROM top WHERE rank <= 64 ORDER BY rank""".stripMargin,
-
-    // integer cross-multiplication replay of every rule
-    "tx30_gopher_rules" ->
-      s"""WITH d AS (
-         |  SELECT doc_id, $dTok AS tk FROM documents),
-         |m AS (
-         |  SELECT doc_id,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk, t -> length(t))) AS BIGINT) AS sum_word_len,
-         |    CAST(len(list_filter(['the', 'a', 'of', 'and', 'to', 'in', 'is'],
-         |      sw -> list_contains(tk, sw))) AS BIGINT) AS n_stopwords,
-         |    CAST(len(list_filter(tk, t -> regexp_matches(t, '[a-z]'))) AS BIGINT) AS n_alpha,
-         |    CAST(list_max(list_transform(list_distinct(tk),
-         |      t -> len(list_filter(tk, x -> x = t)))) AS BIGINT) AS max_tf
-         |  FROM d)
-         |SELECT doc_id, n_words, sum_word_len, n_stopwords, n_alpha, max_tf,
-         |  n_words >= 50 AND n_words <= 100000 AS ok_word_count,
-         |  3 * n_words <= sum_word_len AND sum_word_len <= 10 * n_words AS ok_word_len,
-         |  n_stopwords >= 2 AS ok_stopwords,
-         |  5 * n_alpha >= 4 * n_words AS ok_alpha,
-         |  5 * max_tf <= n_words AS ok_top_token,
-         |  n_words >= 50 AND n_words <= 100000
-         |    AND 3 * n_words <= sum_word_len AND sum_word_len <= 10 * n_words
-         |    AND n_stopwords >= 2 AND 5 * n_alpha >= 4 * n_words
-         |    AND 5 * max_tf <= n_words AS keep
-         |FROM m ORDER BY doc_id""".stripMargin,
-
-    // the same cumulative conjunctions replayed as one aggregate
-    "tx32_filter_funnel" ->
-      s"""WITH f AS (
-         |  SELECT doc_id, text, $dTok AS tk,
-         |    doc_id = MIN(doc_id) OVER (PARTITION BY md5(text)) AS is_canonical
-         |  FROM documents),
-         |m AS (
-         |  SELECT is_canonical,
-         |    CAST(len(tk) AS BIGINT) AS n_words,
-         |    CAST(list_sum(list_transform(tk, t -> length(t))) AS BIGINT)
-         |      AS sum_word_len,
-         |    CAST(len(list_filter(['the', 'a', 'of', 'and', 'to', 'in', 'is'],
-         |      sw -> list_contains(tk, sw))) AS BIGINT) AS n_stopwords,
-         |    CAST(len(list_filter(tk, t -> regexp_matches(t, '[a-z]'))) AS BIGINT)
-         |      AS n_alpha,
-         |    CAST(list_max(list_transform(list_distinct(tk),
-         |      t -> len(list_filter(tk, x -> x = t)))) AS BIGINT) AS max_tf,
-         |    CAST(len(list_filter(tk, t -> t IN $dStop)) AS BIGINT) AS n_stop_occ
-         |  FROM f),
-         |g AS (
-         |  SELECT is_canonical,
-         |    n_words >= 50 AND n_words <= 100000
-         |      AND 3 * n_words <= sum_word_len AND sum_word_len <= 10 * n_words
-         |      AND n_stopwords >= 2 AND 5 * n_alpha >= 4 * n_words
-         |      AND 5 * max_tf <= n_words AS gopher_keep,
-         |    ROUND(0.4 * (CAST(n_stop_occ AS DOUBLE) / n_words)
-         |        + 0.6 * LEAST(1.0, CAST(n_words AS DOUBLE) / 100.0), 6) >= 0.5
-         |      AS quality_keep
-         |  FROM m),
-         |agg AS (
-         |  SELECT CAST(COUNT(*) AS BIGINT) AS s0,
-         |    CAST(SUM(CASE WHEN is_canonical THEN 1 ELSE 0 END) AS BIGINT) AS s1,
-         |    CAST(SUM(CASE WHEN is_canonical AND gopher_keep THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS s2,
-         |    CAST(SUM(CASE WHEN is_canonical AND gopher_keep AND quality_keep
-         |      THEN 1 ELSE 0 END) AS BIGINT) AS s3
-         |  FROM g)
-         |SELECT '0_all' AS stage, s0 AS n_surviving FROM agg
-         |UNION ALL SELECT '1_exact_dedup', s1 FROM agg
-         |UNION ALL SELECT '2_gopher', s2 FROM agg
-         |UNION ALL SELECT '3_quality', s3 FROM agg
-         |ORDER BY stage""".stripMargin,
-
-    // CDC replay: same md5-of-trailing-window boundary hash (first two
-    // hex nibbles via the dsir strpos idiom = Spark's conv(substr(md5,
-    // 1, 2), 16, 10)), mod-32 boundaries; COUNT/COUNT(DISTINCT) are
-    // BIGINT on both engines (no sum to pin)
-    "tx39_cdc_chunk_dedup" ->
-      """WITH bd AS (
-        |  SELECT doc_id, text,
-        |    list_filter(range(8, length(text) + 1), i ->
-        |      i < length(text) AND
-        |      ((strpos('0123456789abcdef',
-        |          substr(md5(substr(text, CAST(i - 7 AS INT), 8)), 1, 1)) - 1) * 16
-        |       + (strpos('0123456789abcdef',
-        |          substr(md5(substr(text, CAST(i - 7 AS INT), 8)), 2, 1)) - 1))
-        |        % 32 = 0) AS bs
-        |  FROM documents),
-        |ct AS (
-        |  SELECT doc_id, text,
-        |    list_concat(list_concat([0::BIGINT], bs),
-        |      [CAST(length(text) AS BIGINT)]) AS cuts
-        |  FROM bd),
-        |ch AS (
-        |  SELECT doc_id,
-        |    unnest(list_transform(range(1, len(cuts)), k ->
-        |      substr(text, CAST(list_extract(cuts, CAST(k AS INT)) + 1 AS INT),
-        |        CAST(list_extract(cuts, CAST(k + 1 AS INT))
-        |          - list_extract(cuts, CAST(k AS INT)) AS INT)))) AS chunk
-        |  FROM ct)
-        |SELECT md5(chunk) AS chunk_hash,
-        |  CAST(MAX(length(chunk)) AS BIGINT) AS chunk_len,
-        |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
-        |  COUNT(*) AS n_occ
-        |FROM ch WHERE length(chunk) >= 4
-        |GROUP BY chunk_hash HAVING COUNT(*) > 1
-        |ORDER BY n_occ DESC, chunk_hash""".stripMargin,
-
-    // tx39's chunk CTEs with source carried through, distinct
-    // (source, hash) sets, pair overlap + unrounded containment;
-    // COUNT is BIGINT on both engines
-    "tx40_cross_source_dup" ->
-      """WITH bd AS (
-        |  SELECT doc_id, source, text,
-        |    list_filter(range(8, length(text) + 1), i ->
-        |      i < length(text) AND
-        |      ((strpos('0123456789abcdef',
-        |          substr(md5(substr(text, CAST(i - 7 AS INT), 8)), 1, 1)) - 1) * 16
-        |       + (strpos('0123456789abcdef',
-        |          substr(md5(substr(text, CAST(i - 7 AS INT), 8)), 2, 1)) - 1))
-        |        % 32 = 0) AS bs
-        |  FROM documents),
-        |ct AS (
-        |  SELECT doc_id, source, text,
-        |    list_concat(list_concat([0::BIGINT], bs),
-        |      [CAST(length(text) AS BIGINT)]) AS cuts
-        |  FROM bd),
-        |ch AS (
-        |  SELECT doc_id, source,
-        |    unnest(list_transform(range(1, len(cuts)), k ->
-        |      substr(text, CAST(list_extract(cuts, CAST(k AS INT)) + 1 AS INT),
-        |        CAST(list_extract(cuts, CAST(k + 1 AS INT))
-        |          - list_extract(cuts, CAST(k AS INT)) AS INT)))) AS chunk
-        |  FROM ct),
-        |ch2 AS (SELECT DISTINCT source, md5(chunk) AS h
-        |        FROM ch WHERE length(chunk) >= 4),
-        |per AS (SELECT source, COUNT(*) AS n FROM ch2 GROUP BY source),
-        |pairs AS (
-        |  SELECT a.source AS source_a, b.source AS source_b,
-        |    COUNT(*) AS n_shared
-        |  FROM ch2 a JOIN ch2 b ON a.h = b.h AND a.source < b.source
-        |  GROUP BY 1, 2)
-        |SELECT source_a, source_b, pa.n AS n_a, pb.n AS n_b, n_shared,
-        |  CAST(n_shared AS DOUBLE) / LEAST(pa.n, pb.n) AS containment
-        |FROM pairs
-        |JOIN per pa ON pa.source = source_a
-        |JOIN per pb ON pb.source = source_b
-        |ORDER BY source_a, source_b""".stripMargin,
-
-    "tx42_bbit_minhash" ->
-      s"""WITH toks AS (SELECT doc_id, $dTok AS tk FROM documents),
-         |shl AS (
-         |  SELECT DISTINCT doc_id,
-         |    unnest(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS shingle
-         |  FROM toks WHERE len(tk) >= 3),
-         |hs AS (
-         |  SELECT doc_id, j, MIN(md5(j::VARCHAR || ':' || shingle)) AS sig
-         |  FROM shl, range(0, 16) t(j) GROUP BY doc_id, j),
-         |sg AS (SELECT doc_id, list(sig ORDER BY j) AS sg,
-         |         list(strpos('0123456789abcdef', substr(sig, 32, 1)) - 1
-         |              ORDER BY j) AS bb
-         |       FROM hs GROUP BY doc_id),
-         |ss AS (
-         |  SELECT doc_id,
-         |    list_distinct(list_transform(range(1, len(tk) - 1), i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS sh
-         |  FROM toks WHERE len(tk) >= 3),
-         |p AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |    CAST(len(list_filter(range(1, 17),
-         |      i -> sa.sg[CAST(i AS INT)] = sb.sg[CAST(i AS INT)])) AS BIGINT)
-         |      AS n_match,
-         |    CAST(len(list_filter(range(1, 17),
-         |      i -> sa.bb[CAST(i AS INT)] = sb.bb[CAST(i AS INT)])) AS BIGINT)
-         |      AS n_match4,
-         |    len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_inter,
-         |    len(a.sh) + len(b.sh)
-         |      - len(list_filter(a.sh, x -> list_contains(b.sh, x))) AS n_union
-         |  FROM ss a
-         |  JOIN ss b ON a.doc_id % 37 = 0 AND b.doc_id % 41 = 0
-         |    AND a.doc_id < b.doc_id
-         |  JOIN sg sa ON sa.doc_id = a.doc_id
-         |  JOIN sg sb ON sb.doc_id = b.doc_id)
-         |SELECT doc_a, doc_b, n_match, n_match4,
-         |  CAST(n_match AS DOUBLE) / 16.0 AS est_full,
-         |  (CAST(n_match4 AS DOUBLE) / 16.0 - 0.0625) / 0.9375 AS est_4bit,
-         |  CAST(n_inter AS DOUBLE) / n_union AS jaccard,
-         |  abs(CAST(n_match AS DOUBLE) / 16.0
-         |    - CAST(n_inter AS DOUBLE) / n_union) AS err_full,
-         |  abs((CAST(n_match4 AS DOUBLE) / 16.0 - 0.0625) / 0.9375
-         |    - CAST(n_inter AS DOUBLE) / n_union) AS err_4bit
-         |FROM p ORDER BY doc_a, doc_b""".stripMargin,
-
-    "tx41_winnow_fingerprints" -> {
-      val horner = (0 until 8).foldLeft("CAST(0 AS BIGINT)")((acc, i) =>
-        s"($acc * 31 + ascii(substr(text, CAST(p + $i AS INT), 1)))")
-      s"""WITH pos AS (
-         |  SELECT doc_id, text, unnest(range(1, length(text) - 6)) AS p
-         |  FROM documents WHERE length(text) >= 11),
-         |h AS (
-         |  SELECT doc_id, p, ($horner) % 1000000007 AS hh
-         |  FROM pos),
-         |k AS (
-         |  SELECT doc_id, p,
-         |    MIN(hh * 1024 - p) OVER (PARTITION BY doc_id ORDER BY p
-         |      ROWS BETWEEN 3 PRECEDING AND CURRENT ROW) AS ky
-         |  FROM h),
-         |fps AS (
-         |  SELECT DISTINCT doc_id, ky // 1024 + 1 AS fh FROM k WHERE p >= 4),
-         |per AS (SELECT doc_id, COUNT(*) AS nfp FROM fps GROUP BY doc_id),
-         |rare AS (SELECT fh FROM fps GROUP BY fh HAVING COUNT(*) <= 10),
-         |capped AS (SELECT f.* FROM fps f JOIN rare USING (fh)),
-         |pairs AS (
-         |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-         |  FROM capped a JOIN capped b ON a.fh = b.fh AND a.doc_id < b.doc_id
-         |  GROUP BY 1, 2 HAVING COUNT(*) >= 3)
-         |SELECT doc_a, doc_b, pa.nfp AS n_a, pb.nfp AS n_b, n_shared,
-         |  CAST(n_shared AS DOUBLE) / LEAST(pa.nfp, pb.nfp) AS containment
-         |FROM pairs
-         |JOIN per pa ON pa.doc_id = doc_a
-         |JOIN per pb ON pb.doc_id = doc_b
-         |ORDER BY doc_a, doc_b""".stripMargin
-    },
-
-    "tx43_rake_keywords" ->
-      s"""WITH toks AS (
-         |  SELECT doc_id, unnest($dTok) AS w,
-         |    generate_subscripts($dTok, 1) AS pos
-         |  FROM documents),
-         |t2 AS (
-         |  SELECT doc_id, pos, w,
-         |    (w IN ('the', 'a', 'of', 'and', 'to', 'in', 'is') OR w = '')
-         |      AS stop
-         |  FROM toks),
-         |m AS (
-         |  SELECT doc_id, pos, w, grp FROM (
-         |    SELECT doc_id, pos, w, stop,
-         |      SUM(CASE WHEN stop THEN 1 ELSE 0 END) OVER (
-         |        PARTITION BY doc_id ORDER BY pos
-         |        ROWS UNBOUNDED PRECEDING) AS grp
-         |    FROM t2) WHERE NOT stop),
-         |ph AS (
-         |  SELECT doc_id, grp, string_agg(w, ' ' ORDER BY pos) AS phrase,
-         |    COUNT(*) AS n_words
-         |  FROM m GROUP BY 1, 2 HAVING COUNT(*) <= 4),
-         |ws AS (
-         |  SELECT w, COUNT(*) AS freq, SUM(n_words) AS deg
-         |  FROM m JOIN ph USING (doc_id, grp) GROUP BY w),
-         |wsc AS (SELECT w, (deg * 1000000) // freq AS score_ppm FROM ws),
-         |ps AS (
-         |  SELECT m.doc_id, m.grp, ph.phrase, ph.n_words,
-         |    SUM(score_ppm) AS p_score
-         |  FROM m JOIN ph USING (doc_id, grp) JOIN wsc USING (w)
-         |  GROUP BY 1, 2, 3, 4),
-         |agg AS (
-         |  SELECT phrase, CAST(n_words AS BIGINT) AS n_words,
-         |    COUNT(*) AS n_occur, COUNT(DISTINCT doc_id) AS n_docs,
-         |    CAST(MAX(p_score) AS BIGINT) AS score_ppm
-         |  FROM ps GROUP BY 1, 2)
-         |SELECT CAST(ROW_NUMBER() OVER (ORDER BY score_ppm DESC, phrase)
-         |    AS BIGINT) AS rnk,
-         |  phrase, n_words, n_occur, n_docs, score_ppm
-         |FROM agg ORDER BY score_ppm DESC, phrase LIMIT 15""".stripMargin,
-
-    "tx44_chartrigram_langid" ->
       """WITH base AS (
         |  SELECT doc_id, lang, substr(lower(text), 1, 256) AS t
         |  FROM documents
@@ -2820,11 +2579,45 @@ object TextOps {
         |    FROM dist) WHERE rn = 1)
         |SELECT lang AS actual, plang AS predicted, COUNT(*) AS n_docs,
         |  CAST(SUM(sum_d) AS BIGINT) AS sum_dist
-        |FROM pick GROUP BY 1, 2 ORDER BY actual, predicted""".stripMargin,
+        |FROM pick GROUP BY 1, 2 ORDER BY actual, predicted""".stripMargin),
 
-    // the same three RE2/Java-common patterns (backslashes literal in a
-    // DuckDB string), then the identical one-tree score spellings
-    "tx45_readability" ->
+    // READABILITY SCORING (Flesch reading-ease + Flesch–Kincaid grade —
+    // the difficulty dial an instruction-data curriculum filters on):
+    // words = \S+ islands, sentences = [.!?]+ terminator groups (floored
+    // at 1 so headline-like fragments still score), syllables = the
+    // standard vowel-group heuristic [aeiouy]+ over the lowercased text.
+    // All three counts are integers from THREE regexp passes sharing one
+    // scan (RE2/Java-regex-common character classes only — no \b, no
+    // lookaround); the two scores are each ONE fixed IEEE tree over those
+    // integers. Patterns go through the DataFrame API (lit), never a SQL
+    // string literal, so no escape-processing divergence can creep in.
+    // Pure map-side per-doc work + presentation sort — embarrassingly
+    // parallel at any corpus size.
+    QuerySpec("tx45_readability", (s, dir) =>
+      fanout(docs(s, dir))
+        .withColumn("n_words",
+          size(regexp_extract_all(col("text"), lit("\\S+"), lit(0)))
+            .cast("long"))
+        .withColumn("n_sentences",
+          size(regexp_extract_all(col("text"), lit("[.!?]+"), lit(0)))
+            .cast("long"))
+        .withColumn("n_syllables",
+          size(regexp_extract_all(lower(col("text")), lit("[aeiouy]+"),
+            lit(0))).cast("long"))
+        .withColumn("wp", greatest(col("n_words"), lit(1L)).cast("double"))
+        .withColumn("sp", greatest(col("n_sentences"), lit(1L))
+          .cast("double"))
+        .select(col("doc_id"), col("n_words"), col("n_sentences"),
+          col("n_syllables"),
+          round(lit(206.835) - lit(1.015) * (col("wp") / col("sp"))
+            - lit(84.6) * (col("n_syllables").cast("double") / col("wp")), 6)
+            .as("fre"),
+          round(lit(0.39) * (col("wp") / col("sp"))
+            + lit(11.8) * (col("n_syllables").cast("double") / col("wp"))
+            - lit(15.59), 6).as("fk_grade"))
+        .orderBy(col("doc_id")),
+      // the same three RE2/Java-common patterns (backslashes literal in a
+      // DuckDB string), then the identical one-tree score spellings
       """WITH c AS (
         |  SELECT doc_id,
         |    CAST(len(regexp_extract_all(text, '\S+')) AS BIGINT)
@@ -2845,12 +2638,45 @@ object TextOps {
         |  ROUND(0.39 * (wp / sp)
         |    + 11.8 * (CAST(n_syllables AS DOUBLE) / wp) - 15.59, 6)
         |    AS fk_grade
-        |FROM p ORDER BY doc_id""".stripMargin,
+        |FROM p ORDER BY doc_id""".stripMargin),
 
-    // same injected fixtures verbatim; DuckDB regexp_replace needs the
-    // 'g' flag (Spark's replaces all matches by default), entities via
-    // replace() which is all-occurrences on both
-    "tx46_markup_strip" ->
+    // MARKUP STRIP (the HTML-cleanup pass every web-corpus pipeline runs
+    // before quality/dedup): drop <...> tags, decode the four core
+    // entities, collapse whitespace runs, trim. The corpus rows are
+    // plain text (0 tags — they prove the pass is a no-op on clean
+    // input); two INJECTED rows carry real markup — nested tags, an
+    // unclosed tag, entities, multi-space runs — shared verbatim with
+    // the oracle (mm02's injected-fixture discipline), so the tag
+    // regex, entity order and collapse behavior are all hash-pinned.
+    // Pure map-side; patterns via the DataFrame API (no SQL-literal
+    // escape divergence).
+    QuerySpec("tx46_markup_strip", (s, dir) => {
+      val base = docs(s, dir).select(col("doc_id"), col("text"))
+      val extra = s.range(1).select(lit(1000001L).as("doc_id"),
+        lit(TX46_HTML_ROW).as("text"))
+        .unionByName(s.range(1).select(lit(1000002L).as("doc_id"),
+          lit(TX46_BROKEN_ROW).as("text")))
+      fanout(base.unionByName(extra))
+        .withColumn("n_tags",
+          size(regexp_extract_all(col("text"), lit("<[^>]*>"), lit(0)))
+            .cast("long"))
+        .withColumn("stripped",
+          regexp_replace(col("text"), "<[^>]*>", " "))
+        .withColumn("decoded",
+          regexp_replace(regexp_replace(regexp_replace(regexp_replace(
+            col("stripped"), "&amp;", "&"), "&lt;", "<"), "&gt;", ">"),
+            "&quot;", "\""))
+        .withColumn("clean",
+          trim(regexp_replace(col("decoded"), "\\s+", " ")))
+        .select(col("doc_id"), col("n_tags"),
+          length(col("text")).cast("long").as("raw_len"),
+          length(col("clean")).cast("long").as("clean_len"),
+          substring(col("clean"), 1, 48).as("clean_prefix"))
+        .orderBy(col("doc_id"))
+    },
+      // same injected fixtures verbatim; DuckDB regexp_replace needs the
+      // 'g' flag (Spark's replaces all matches by default), entities via
+      // replace() which is all-occurrences on both
       ("""WITH extra AS (
         |  SELECT 1000001 AS doc_id, '""" + TX46_HTML_ROW + """' AS text
         |  UNION ALL
@@ -2872,11 +2698,42 @@ object TextOps {
         |  CAST(length(text) AS BIGINT) AS raw_len,
         |  CAST(length(clean) AS BIGINT) AS clean_len,
         |  substr(clean, 1, 48) AS clean_prefix
-        |FROM c ORDER BY doc_id""").stripMargin,
+        |FROM c ORDER BY doc_id""").stripMargin),
 
-    // identical parity halves and int64 cross-multiplied drift; the TVD
-    // division is the same one tree
-    "tx47_unigram_tvd_drift" ->
+    // UNIGRAM TOTAL-VARIATION DRIFT (the distribution-shift check a
+    // corpus pipeline runs between two slices before mixing them —
+    // TVD = ½ Σ_w |p₀(w) − p₁(w)| over the shared vocabulary): slices
+    // are the deterministic doc_id parity halves; the per-token drift
+    // score |c₀·N₁ − c₁·N₀| and the TVD numerator stay EXACT int64
+    // cross-multiplications (never per-token float ratios, whose sum
+    // would be order-dependent), with ONE final IEEE division for the
+    // reported TVD. Output: the 10 most drifted tokens, each row also
+    // carrying the corpus-level TVD. Scale: one token-keyed count
+    // aggregate + a one-row totals broadcast + a top-10
+    // TakeOrderedAndProject over the vocabulary — never the corpus.
+    QuerySpec("tx47_unigram_tvd_drift", (s, dir) => {
+      val tok = fanout(docs(s, dir))
+        .selectExpr("doc_id", s"explode($tokExpr) AS tk")
+      val cnt = tok.groupBy(col("tk"))
+        .agg(sum(when(expr("doc_id % 2 = 0"), 1L).otherwise(0L)).as("c0"),
+          sum(when(expr("doc_id % 2 = 1"), 1L).otherwise(0L)).as("c1"))
+      val tot = cnt.agg(sum(col("c0")).as("n0"), sum(col("c1")).as("n1"))
+      val scored = cnt.crossJoin(broadcast(tot))
+        .withColumn("drift_num", abs(col("c0") * col("n1") -
+          col("c1") * col("n0")))
+      val tvd = scored.agg(sum(col("drift_num")).as("sn"),
+        max(col("n0")).as("n0"), max(col("n1")).as("n1"))
+        .select(col("n0"), col("n1"),
+          expr("cast(sn as double) / cast(2 * n0 * n1 as double)")
+            .as("tvd"))
+      scored.select(col("tk"), col("c0"), col("c1"), col("drift_num"))
+        .orderBy(col("drift_num").desc, col("tk"))
+        .limit(10)
+        .crossJoin(broadcast(tvd))
+        .orderBy(col("drift_num").desc, col("tk"))
+    },
+      // identical parity halves and int64 cross-multiplied drift; the TVD
+      // division is the same one tree
       s"""WITH tok AS (
         |  SELECT doc_id, unnest($dTok) AS tk FROM documents),
         |cnt AS (
@@ -2900,6 +2757,53 @@ object TextOps {
         |  SELECT tk, c0, c1, drift_num FROM scored
         |  ORDER BY drift_num DESC, tk LIMIT 10)
         |SELECT top.tk, top.c0, top.c1, top.drift_num, tv.n0, tv.n1, tv.tvd
-        |FROM top, tv ORDER BY drift_num DESC, tk""".stripMargin
+        |FROM top, tv ORDER BY drift_num DESC, tk""".stripMargin)
   )
+
+  /** tx39's single-fold CDC cutter as a shared (doc_id, source, chunk)
+    * stream — one md5 per character position (see the tx39 comment for
+    * the CollapseProject history), explode_outer so the implicit
+    * size()>0 filter of plain explode can't push the fold into the
+    * scan. Shared by tx39 (chunk inventory) and tx40 (source matrix). */
+  private def cdcChunkRows(s: SparkSession, dir: String): DataFrame =
+    fanout(docs(s, dir))
+      .selectExpr("doc_id", "source",
+        """aggregate(
+             sequence(8, greatest(length(text), 8)),
+             named_struct('p', 0L, 'cs', cast(array() as array<string>)),
+             (acc, i) -> if(i < length(text) AND
+                 cast(conv(substr(md5(cast(substring(text, cast(i - 7 as int), 8) as binary)), 1, 2), 16, 10) as bigint) % 32 = 0,
+               named_struct('p', i,
+                 'cs', concat(acc.cs, array(substring(text, cast(acc.p + 1 as int), cast(i - acc.p as int))))),
+               acc),
+             acc -> concat(acc.cs, array(substring(text, cast(acc.p + 1 as int), cast(length(text) - acc.p as int))))) AS chunks""")
+      .select(col("doc_id"), col("source"),
+        explode_outer(col("chunks")).as("chunk"))
+
+  /** Shared DuckDB replay of [[dsirWeights]] — CTE bodies only (no WITH),
+    * ending in `d(doc_id, n_bigrams, w)`. */
+  private def dsirSql: String =
+    s"""toks AS (SELECT doc_id, source, $dTok AS tk FROM documents),
+       |bg AS (
+       |  SELECT doc_id, source,
+       |    unnest(list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])) AS bg
+       |  FROM toks WHERE len(tk) >= 2),
+       |db AS (
+       |  SELECT doc_id, source,
+       |    CAST(((strpos('0123456789abcdef', substr(md5(bg), 1, 1)) - 1) * 16
+       |      + (strpos('0123456789abcdef', substr(md5(bg), 2, 1)) - 1)) % 64 AS INT) AS bucket,
+       |    COUNT(*) AS nb
+       |  FROM bg GROUP BY doc_id, source, 3),
+       |rawb AS (SELECT bucket, SUM(nb) AS raw FROM db GROUP BY bucket),
+       |tgtb AS (SELECT bucket, SUM(nb) AS tgt FROM db WHERE source = 'src0' GROUP BY bucket),
+       |tots AS (SELECT (SELECT SUM(raw) FROM rawb) AS tot_r,
+       |                (SELECT SUM(tgt) FROM tgtb) AS tot_t),
+       |lr AS (
+       |  SELECT rawb.bucket,
+       |    CAST(ROUND(ln(CAST((COALESCE(tgt, 0) + 1) * (tot_r + 64) AS DOUBLE)
+       |      / CAST((raw + 1) * (tot_t + 64) AS DOUBLE)), 6) AS DECIMAL(18,6)) AS lr
+       |  FROM rawb LEFT JOIN tgtb ON rawb.bucket = tgtb.bucket, tots),
+       |d AS (
+       |  SELECT doc_id, CAST(SUM(nb) AS BIGINT) AS n_bigrams, SUM(nb * lr) AS w
+       |  FROM db JOIN lr USING (bucket) GROUP BY doc_id)""".stripMargin
 }

@@ -86,20 +86,42 @@ object TimeSeries {
       |    COUNT(*) AS n_total
       |  FROM events GROUP BY event_type""".stripMargin
 
-  val queries: Map[String, Q] = Map(
-    "ts01_field_filter" -> ((s, dir) => fieldFilter(ev(s, dir), "purchase")),
+  /** digit → Benford log₁₀(1+1/d) probability as a CASE over shared
+    * literal spellings — embedded VERBATIM in the ts66 oracle (both
+    * engines parse the same decimal literal to the same double on
+    * promotion). */
+  private val BenfordPCase: String =
+    "case digit when 1 then 0.301029995663981" +
+      " when 2 then 0.176091259055681 when 3 then 0.1249387366083" +
+      " when 4 then 0.096910013008056 when 5 then 0.079181246047625" +
+      " when 6 then 0.066946789630613 when 7 then 0.057991946977687" +
+      " when 8 then 0.051152522447381 else 0.045757490560675 end"
 
-    "ts02_time_range" -> ((s, dir) =>
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("ts01_field_filter", (s, dir) => fieldFilter(ev(s, dir), "purchase"),
+      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, value
+        |FROM events WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin),
+
+    QuerySpec("ts02_time_range", (s, dir) =>
       timeRange(ev(s, dir), "2024-01-10 00:00:00", "2024-01-20 00:00:00")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), sumExact(col("value")).as("total_value"))
-        .orderBy(col("event_type"))),
+        .orderBy(col("event_type")),
+      """SELECT event_type, COUNT(*) AS n,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
+        |FROM events
+        |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00'
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
-    "ts03_downsample_1h" -> ((s, dir) => aggregateWindow(ev(s, dir), "1 hour")),
+    QuerySpec("ts03_downsample_1h", (s, dir) => aggregateWindow(ev(s, dir), "1 hour"),
+      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS bucket, event_type,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_value,
+        |  MIN(value) AS min_value, MAX(value) AS max_value, COUNT(*) AS n
+        |FROM events GROUP BY bucket, event_type ORDER BY bucket, event_type""".stripMargin),
 
     // as-of join: each purchase picks up the most recent preceding error of
     // the same user (inclusive), the canonical sensor-enrichment shape
-    "ts04_asof_join" -> ((s, dir) => {
+    QuerySpec("ts04_asof_join", (s, dir) => {
       val e = ev(s, dir)
       val purchases = e.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts"), col("value"))
@@ -110,10 +132,16 @@ object TimeSeries {
         .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("ts_us"),
           col("value"), col("err_event_id").as("last_error_id"))
         .orderBy(col("event_id"))
-    }),
+    },
+      """SELECT a.event_id, a.user_id, epoch_us(a.ts) AS ts_us, a.value,
+        |  b.event_id AS last_error_id
+        |FROM (SELECT * FROM events WHERE event_type = 'purchase') a
+        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') b
+        |  ON a.user_id = b.user_id AND a.ts >= b.ts
+        |ORDER BY a.event_id""".stripMargin),
 
     // sessionization with a 30-minute inactivity gap per user
-    "ts05_sessionize" -> ((s, dir) => {
+    QuerySpec("ts05_sessionize", (s, dir) => {
       val sessions = ev(s, dir)
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events"))
@@ -123,7 +151,20 @@ object TimeSeries {
           sum(col("n_events")).as("n_events"),
           max(col("n_events")).as("max_session_events"))
         .orderBy(col("user_id"))
-    }),
+    },
+      """WITH d AS (
+        |  SELECT user_id, ts,
+        |    CASE WHEN lag(ts) OVER w IS NULL
+        |         OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
+        |s AS (
+        |  SELECT user_id,
+        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM d),
+        |g AS (SELECT user_id, sid, COUNT(*) AS n FROM s GROUP BY user_id, sid)
+        |SELECT user_id, COUNT(*) AS n_sessions, CAST(SUM(n) AS BIGINT) AS n_events,
+        |  MAX(n) AS max_session_events
+        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // gap-fill + forward-fill interpolation (Flux `fill(usePrevious:)`):
     // a generated hourly spine per field, left-joined to the downsampled
@@ -131,7 +172,7 @@ object TimeSeries {
     // The spine is derived per-field from min/max (tiny aggregate), the
     // join keys on (field, bucket), and the fill is one window pass —
     // all linear, one shuffle each.
-    "ts07_gap_fill" -> ((s, dir) => {
+    QuerySpec("ts07_gap_fill", (s, dir) => {
       val hourly = ev(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("bucket"), col("event_type"))
         .agg(avgExact(col("value")).as("v"))
@@ -147,10 +188,25 @@ object TimeSeries {
         .select(date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
           col("event_type"), col("v_filled"), col("filled"))
         .orderBy(col("event_type"), col("bucket"))
-    }),
+    },
+      """WITH hourly AS (
+        |  SELECT date_trunc('hour', ts) AS bucket, event_type,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS v
+        |  FROM events GROUP BY bucket, event_type),
+        |rng AS (SELECT event_type, MIN(bucket) AS mn, MAX(bucket) AS mx
+        |        FROM hourly GROUP BY event_type),
+        |spine AS (SELECT event_type, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS bucket
+        |          FROM rng),
+        |j AS (SELECT s.event_type, s.bucket, h.v
+        |      FROM spine s LEFT JOIN hourly h ON s.event_type = h.event_type AND s.bucket = h.bucket)
+        |SELECT strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket, event_type,
+        |  last_value(v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY bucket
+        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled,
+        |  v IS NULL AS filled
+        |FROM j ORDER BY event_type, bucket""".stripMargin),
 
     // inter-arrival gap statistics per user (lag over event time)
-    "ts06_gap_stats" -> ((s, dir) => {
+    QuerySpec("ts06_gap_stats", (s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       ev(s, dir)
         .withColumn("ts_us", unix_micros(col("ts")))
@@ -162,13 +218,21 @@ object TimeSeries {
           max(col("gap_us")).as("max_gap_us"),
           (sum(col("gap_us")).cast("double") / (count(lit(1)) * lit(1000000.0))).as("avg_gap_s"))
         .orderBy(col("user_id"))
-    }),
+    },
+      """WITH d AS (
+        |  SELECT user_id,
+        |    epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
+        |  FROM events)
+        |SELECT user_id, COUNT(*) AS n_gaps, MAX(gap_us) AS max_gap_us,
+        |  CAST(SUM(gap_us) AS DOUBLE) / (COUNT(*) * 1000000.0) AS avg_gap_s
+        |FROM d WHERE gap_us IS NOT NULL
+        |GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // Flux `movingAverage(n: 3)` over the downsampled series: a trailing
     // 3-bucket rows-frame window per field. The frame sum goes through the
     // exact-decimal recipe so sliding-frame evaluation order (Spark folds,
     // DuckDB may use a segment tree) can't perturb the float result.
-    "ts08_moving_avg" -> ((s, dir) => {
+    QuerySpec("ts08_moving_avg", (s, dir) => {
       // both means are integer-micro half-up ([[halfUpMean6]]): a double
       // round(sx/n, 6) is engine-dependent at exact half-way quotients
       val hourly = ev(s, dir)
@@ -184,13 +248,26 @@ object TimeSeries {
         .select(date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
           col("event_type"), col("v"), col("mov_avg"))
         .orderBy(col("event_type"), col("bucket"))
-    }),
+    },
+      """WITH hourly AS (
+        |  SELECT date_trunc('hour', ts) AS bucket, event_type,
+        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS v
+        |  FROM events GROUP BY bucket, event_type)
+        |SELECT strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket, event_type, v,
+        |  CAST((2 * CAST(SUM(CAST(v AS DECIMAL(18,6))) OVER w * 1000000 AS BIGINT)
+        |        + COUNT(*) OVER w) // (2 * COUNT(*) OVER w) AS DOUBLE)
+        |    / 1000000.0 AS mov_avg
+        |FROM hourly
+        |WINDOW w AS (PARTITION BY event_type ORDER BY bucket
+        |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
+        |ORDER BY event_type, bucket""".stripMargin),
 
     // time-RANGE window frame (vs ts08's rows frame): for every event, the
     // exact-decimal sum of the same field's values in the trailing hour —
     // value-based frames include timestamp peers identically in both
     // engines, so results are deterministic under ties.
-    "ts10_trailing_window" -> ((s, dir) => {
+    QuerySpec("ts10_trailing_window", (s, dir) => {
       val w = Window.partitionBy(col("event_type")).orderBy(col("ts_us"))
         .rangeBetween(-3600000000L, 0)
       ev(s, dir)
@@ -201,7 +278,14 @@ object TimeSeries {
         .select(col("event_type"), col("ts_us"), col("event_id"), col("value"),
           col("trail_1h_sum"), col("trail_1h_n"))
         .orderBy(col("event_type"), col("ts_us"), col("event_id"))
-    }),
+    },
+      """SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE) AS trail_1h_sum,
+        |  COUNT(*) OVER w AS trail_1h_n
+        |FROM events
+        |WINDOW w AS (PARTITION BY event_type ORDER BY epoch_us(ts)
+        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
+        |ORDER BY event_type, ts_us, event_id""".stripMargin),
 
     // Flux `derivative(unit: 1s)`: per-user instantaneous rate between
     // consecutive events — one lag window, one shuffle on the key.
@@ -210,7 +294,7 @@ object TimeSeries {
     // so both engines produce bit-identical doubles. (A round(x, 6) here
     // diverges: Spark rounds the exact binary expansion via BigDecimal
     // HALF_UP while DuckDB rounds via scaled nearbyint.)
-    "ts09_derivative" -> ((s, dir) => {
+    QuerySpec("ts09_derivative", (s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
       ev(s, dir)
         .withColumn("ts_us", unix_micros(col("ts")))
@@ -221,7 +305,16 @@ object TimeSeries {
           col("dv") / (col("dt_us").cast("double") / 1000000.0))
         .select(col("user_id"), col("ts_us"), col("event_id"), col("rate_per_s"))
         .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-    }),
+    },
+      """WITH d AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
+        |    value - lag(value) OVER w AS dv,
+        |    epoch_us(ts) - lag(epoch_us(ts)) OVER w AS dt_us
+        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
+        |SELECT user_id, ts_us, event_id,
+        |  dv / (CAST(dt_us AS DOUBLE) / 1000000.0) AS rate_per_s
+        |FROM d WHERE dt_us IS NOT NULL AND dt_us > 0
+        |ORDER BY user_id, ts_us, event_id""".stripMargin),
 
     // Flux `timeWeightedAvg` / `integral`: per field, each observation is
     // weighted by the time until the NEXT observation (last-observation-
@@ -231,7 +324,7 @@ object TimeSeries {
     // weight value·dt_us is an EXACT decimal product and the sum is
     // order-independent; the only float ops are the two final divisions
     // (single correctly-rounded IEEE ops, bit-identical across engines).
-    "ts11_time_weighted_avg" -> ((s, dir) => {
+    QuerySpec("ts11_time_weighted_avg", (s, dir) => {
       val w = Window.partitionBy(col("event_type"))
         .orderBy(col("ts_us"), col("event_id"))
       ev(s, dir)
@@ -247,7 +340,18 @@ object TimeSeries {
           (col("span_us").cast("double") / lit(1000000.0)).as("span_s"),
           (col("wsum").cast("double") / col("span_us").cast("double")).as("twa"))
         .orderBy(col("event_type"))
-    }),
+    },
+      """WITH t AS (
+        |  SELECT event_type, epoch_us(ts) AS ts_us, value,
+        |    lead(epoch_us(ts)) OVER (PARTITION BY event_type
+        |      ORDER BY epoch_us(ts), event_id) - epoch_us(ts) AS dt_us
+        |  FROM events)
+        |SELECT event_type, COUNT(*) AS n_segments,
+        |  CAST(SUM(dt_us) AS DOUBLE) / 1000000.0 AS span_s,
+        |  CAST(SUM(CAST(value AS DECIMAL(18,6)) * dt_us) AS DOUBLE)
+        |    / CAST(SUM(dt_us) AS DOUBLE) AS twa
+        |FROM t WHERE dt_us IS NOT NULL
+        |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // Flux `interpolate.linear`: ts07's hourly spine, but missing buckets
     // get the LINEAR blend of the bracketing observations instead of the
@@ -257,7 +361,7 @@ object TimeSeries {
     // (field, bucket) ordering — same single-shuffle shape as ts07. The
     // blend is three IEEE ops on exact inputs (the fraction's operands are
     // exact longs), so both engines emit identical bits.
-    "ts12_interpolate_linear" -> ((s, dir) => {
+    QuerySpec("ts12_interpolate_linear", (s, dir) => {
       val hourly = ev(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("bucket"), col("event_type"))
         .agg(count(lit(1)).as("nh"), sum(sumExactCol(col("value"))).as("sh"))
@@ -289,7 +393,35 @@ object TimeSeries {
         .select(date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
           col("event_type"), col("v"), col("v_interp"), col("interpolated"))
         .orderBy(col("event_type"), col("bucket"))
-    }),
+    },
+      """WITH hourly AS (
+        |  SELECT date_trunc('hour', ts) AS bucket, event_type,
+        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS v
+        |  FROM events GROUP BY bucket, event_type),
+        |rng AS (SELECT event_type, MIN(bucket) AS mn, MAX(bucket) AS mx
+        |        FROM hourly GROUP BY event_type),
+        |spine AS (SELECT event_type, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS bucket
+        |          FROM rng),
+        |j AS (SELECT s.event_type, s.bucket, epoch_us(s.bucket) AS t_us, h.v
+        |      FROM spine s LEFT JOIN hourly h ON s.event_type = h.event_type AND s.bucket = h.bucket),
+        |x AS (SELECT *,
+        |    last_value(v IGNORE NULLS) OVER wb AS pv,
+        |    last_value(CASE WHEN v IS NOT NULL THEN t_us END IGNORE NULLS) OVER wb AS pt,
+        |    first_value(v IGNORE NULLS) OVER wf AS nv,
+        |    first_value(CASE WHEN v IS NOT NULL THEN t_us END IGNORE NULLS) OVER wf AS nt
+        |  FROM j
+        |  WINDOW wb AS (PARTITION BY event_type ORDER BY bucket
+        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
+        |         wf AS (PARTITION BY event_type ORDER BY bucket
+        |           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
+        |SELECT strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket, event_type, v,
+        |  CASE WHEN v IS NOT NULL THEN v
+        |       WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
+        |         pv + (nv - pv) * (CAST(t_us - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE))
+        |  END AS v_interp,
+        |  v IS NULL AS interpolated
+        |FROM x ORDER BY event_type, bucket""".stripMargin),
 
     // Flux `increase()`: monotonic-counter total per series. Each step
     // contributes (v − prev) when the counter moved forward, or v itself
@@ -301,7 +433,7 @@ object TimeSeries {
     // ts09's shape. Numerics: contributions are exact decimals (value has
     // ≤ 2 fractional digits), so the running sum is order-independent and
     // the final cast to double is one deterministic conversion per row.
-    "ts13_increase" -> ((s, dir) => {
+    QuerySpec("ts13_increase", (s, dir) => {
       val w = Window.partitionBy(col("user_id")).orderBy(col("ts_us"), col("event_id"))
       val run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
       ev(s, dir)
@@ -317,7 +449,24 @@ object TimeSeries {
         .select(col("user_id"), col("ts_us"), col("event_id"), col("value"),
           col("increase"))
         .orderBy(col("user_id"), col("ts_us"), col("event_id"))
-    }),
+    },
+      """WITH w AS (
+        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, value,
+        |    lag(CAST(value AS DECIMAL(18,6))) OVER
+        |      (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev
+        |  FROM events),
+        |c AS (SELECT *,
+        |    CASE WHEN prev IS NULL THEN NULL
+        |         WHEN CAST(value AS DECIMAL(18,6)) >= prev
+        |           THEN CAST(value AS DECIMAL(18,6)) - prev
+        |         ELSE CAST(value AS DECIMAL(18,6)) END AS contrib
+        |  FROM w)
+        |SELECT user_id, ts_us, event_id, value,
+        |  CAST(COALESCE(SUM(contrib) OVER
+        |    (PARTITION BY user_id ORDER BY ts_us, event_id
+        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS DOUBLE)
+        |    AS increase
+        |FROM c ORDER BY user_id, ts_us, event_id""".stripMargin),
 
     // Flux `pearsonr(x:, y:, on: ["_time"])` — cross-series correlation:
     // align two fields on a common hourly bucket (inner join keeps only
@@ -331,7 +480,7 @@ object TimeSeries {
     // keyed on the bucket, one equi-join on the bucket key, then a single
     // partial+final global aggregate — nothing wider than the bucket
     // cardinality ever shuffles.
-    "ts14_pearson_corr" -> ((s, dir) => {
+    QuerySpec("ts14_pearson_corr", (s, dir) => {
       val hourly = ev(s, dir)
         .groupBy(date_trunc("hour", col("ts")).as("bucket"), col("event_type"))
         .agg(sum(sumExactCol(col("value"))).as("v")) // stays decimal: no double round-trip
@@ -352,7 +501,33 @@ object TimeSeries {
             (sqrt(col("n_buckets").cast("double") * col("sxx") - col("sx") * col("sx")) *
              sqrt(col("n_buckets").cast("double") * col("syy") - col("sy") * col("sy"))), 6)
             .as("pearson_r"))
-    }),
+    },
+      """WITH hourly AS (
+        |  SELECT date_trunc('hour', ts) AS bucket, event_type,
+        |    SUM(CAST(value AS DECIMAL(18,6))) AS v
+        |  FROM events GROUP BY 1, 2),
+        |j AS (
+        |  -- DECIMAL(19,6), not (18,6): DuckDB multiplies two width-18
+        |  -- decimals on its int64 fast path and range-checks the product
+        |  -- against DECIMAL(18) capacity — hourly sums at sf0.1 overflow
+        |  -- it (x·y ≈ 2.6e18 > 1e18). Width 19 forces the int128 path;
+        |  -- values and exactness are unchanged, so the Spark side
+        |  -- (decimal(18,6) products in Catalyst, always 128-bit) agrees.
+        |  SELECT CAST(x.v AS DECIMAL(19,6)) AS x, CAST(y.v AS DECIMAL(19,6)) AS y
+        |  FROM (SELECT * FROM hourly WHERE event_type = 'purchase') x
+        |  JOIN (SELECT * FROM hourly WHERE event_type = 'view') y USING (bucket)),
+        |m AS (
+        |  SELECT COUNT(*) AS n_buckets,
+        |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
+        |    CAST(SUM(x * y) AS DOUBLE) AS sxy,
+        |    CAST(SUM(x * x) AS DOUBLE) AS sxx,
+        |    CAST(SUM(y * y) AS DOUBLE) AS syy
+        |  FROM j)
+        |SELECT n_buckets,
+        |  ROUND((CAST(n_buckets AS DOUBLE) * sxy - sx * sy) /
+        |    (sqrt(CAST(n_buckets AS DOUBLE) * sxx - sx * sx) *
+        |     sqrt(CAST(n_buckets AS DOUBLE) * syy - sy * sy)), 6) AS pearson_r
+        |FROM m""".stripMargin),
 
     // Flux `histogram(bins: [1, 5, 25, 125, 625])` — cumulative le-style
     // distribution per field (the Prometheus classic-histogram shape Flux
@@ -360,7 +535,7 @@ object TimeSeries {
     // conditional sum in a single pass over the scan — no per-bucket
     // shuffles, no explode before aggregation; the 6-row-per-field fan-out
     // happens AFTER the aggregate where cardinality is |fields|.
-    "ts15_histogram" -> ((s, dir) =>
+    QuerySpec("ts15_histogram", (s, dir) =>
       histCounts(ev(s, dir))
         .selectExpr("event_type",
           """stack(6, 0L, '1.0',   le0,
@@ -369,7 +544,17 @@ object TimeSeries {
             |         3L, '125.0', le3,
             |         4L, '625.0', le4,
             |         5L, '+Inf',  n_total) AS (bin, le, n_le)""".stripMargin)
-        .orderBy(col("event_type"), col("bin"))),
+        .orderBy(col("event_type"), col("bin")),
+      s"""WITH h AS ($histCountsSql)
+         |SELECT event_type, bin, le, n_le FROM (
+         |  SELECT event_type, CAST(0 AS BIGINT) AS bin, '1.0' AS le,
+         |         CAST(le0 AS BIGINT) AS n_le FROM h
+         |  UNION ALL SELECT event_type, 1, '5.0', CAST(le1 AS BIGINT) FROM h
+         |  UNION ALL SELECT event_type, 2, '25.0', CAST(le2 AS BIGINT) FROM h
+         |  UNION ALL SELECT event_type, 3, '125.0', CAST(le3 AS BIGINT) FROM h
+         |  UNION ALL SELECT event_type, 4, '625.0', CAST(le4 AS BIGINT) FROM h
+         |  UNION ALL SELECT event_type, 5, '+Inf', CAST(n_total AS BIGINT) FROM h)
+         |ORDER BY event_type, bin""".stripMargin),
 
     // Flux `stateDuration` + `stateCount` (monitoring: "how long has this
     // sensor been above threshold") — consecutive in-state runs found with
@@ -379,7 +564,7 @@ object TimeSeries {
     // out-of-state rows report Flux's -1 sentinel. Scale shape: three
     // window passes all partitioned by the SAME series key (one shuffle,
     // sort reused), integer arithmetic end to end.
-    "ts17_state_duration" -> ((s, dir) => {
+    QuerySpec("ts17_state_duration", (s, dir) => {
       val w = Window.partitionBy(col("event_type")).orderBy(col("ts_us"), col("event_id"))
       val wIsland = Window
         .partitionBy(col("event_type"), col("in_state"), col("island"))
@@ -401,7 +586,24 @@ object TimeSeries {
         .select(col("event_type"), col("ts_us"), col("event_id"), col("value"),
           col("in_state"), col("state_count"), col("state_duration_us"))
         .orderBy(col("event_type"), col("ts_us"), col("event_id"))
-    }),
+    },
+      """WITH x AS (
+        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
+        |    value > 100.0 AS in_state,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY epoch_us(ts), event_id) AS rn,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type, value > 100.0
+        |      ORDER BY epoch_us(ts), event_id) AS rns
+        |  FROM events),
+        |i AS (SELECT *, rn - rns AS island FROM x)
+        |SELECT event_type, ts_us, event_id, value, in_state,
+        |  CASE WHEN in_state THEN ROW_NUMBER() OVER w ELSE -1 END AS state_count,
+        |  CASE WHEN in_state THEN ts_us - MIN(ts_us) OVER w ELSE -1 END
+        |    AS state_duration_us
+        |FROM i
+        |WINDOW w AS (PARTITION BY event_type, in_state, island
+        |             ORDER BY ts_us, event_id)
+        |ORDER BY event_type, ts_us, event_id""".stripMargin),
 
     // Flux `histogramQuantile(quantile: 0.5)` — the Prometheus estimator:
     // walk the cumulative buckets to the first one covering q·total, then
@@ -409,10 +611,14 @@ object TimeSeries {
     // conditional-sum aggregate as ts15; the estimator is ONE fixed
     // expression tree over exact long counts (mirrored token-for-token by
     // the oracle), so the double arithmetic is bit-identical.
-    "ts16_histogram_quantile" -> ((s, dir) =>
+    QuerySpec("ts16_histogram_quantile", (s, dir) =>
       histCounts(ev(s, dir))
         .selectExpr("event_type", "n_total", s"round($histQuantileSql, 6) AS q50")
-        .orderBy(col("event_type"))),
+        .orderBy(col("event_type")),
+      s"""WITH h AS ($histCountsSql)
+         |SELECT event_type, CAST(n_total AS BIGINT) AS n_total,
+         |  ROUND($histQuantileSql, 6) AS q50
+         |FROM h ORDER BY event_type""".stripMargin),
 
     // Ordered conversion funnel (view → click → purchase), the canonical
     // product-analytics shape: a user converts stage k only with an event
@@ -422,7 +628,7 @@ object TimeSeries {
     // share ONE user_id hash partitioning (unordered frames, so no sort
     // either), and the final per-user groupBy reuses that same exchange:
     // the whole funnel costs exactly one shuffle of the events scan.
-    "ts18_funnel" -> ((s, dir) => {
+    QuerySpec("ts18_funnel", (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
       ev(s, dir)
         .withColumn("ts_us", unix_micros(col("ts")))
@@ -444,7 +650,22 @@ object TimeSeries {
             .when(col("first_view_us").isNotNull, 1L)
             .otherwise(0L))
         .orderBy(col("user_id"))
-    }),
+    },
+      """WITH e AS (
+        |  SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
+        |a AS (SELECT *, MIN(CASE WHEN event_type = 'view' THEN ts_us END)
+        |        OVER (PARTITION BY user_id) AS fv FROM e),
+        |b AS (SELECT *, MIN(CASE WHEN event_type = 'click' AND ts_us > fv
+        |        THEN ts_us END) OVER (PARTITION BY user_id) AS fc FROM a),
+        |c AS (SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts_us > fc
+        |        THEN ts_us END) OVER (PARTITION BY user_id) AS fp FROM b)
+        |SELECT user_id, MIN(fv) AS first_view_us, MIN(fc) AS first_click_us,
+        |  MIN(fp) AS first_purchase_us,
+        |  CAST(CASE WHEN MIN(fp) IS NOT NULL THEN 3
+        |            WHEN MIN(fc) IS NOT NULL THEN 2
+        |            WHEN MIN(fv) IS NOT NULL THEN 1
+        |            ELSE 0 END AS BIGINT) AS stage
+        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // Signup-cohort weekly retention matrix: cohort = ISO week of the
     // user's first signup; a user is retained in week-offset k if they
@@ -453,7 +674,7 @@ object TimeSeries {
     // distinct (user, week) — both shuffles are keyed on user_id and the
     // final matrix agg is keyed on (cohort_week, offset) whose cardinality
     // is weeks² — tiny. Rate is one IEEE division over exact longs.
-    "ts19_retention" -> ((s, dir) => {
+    QuerySpec("ts19_retention", (s, dir) => {
       val e = ev(s, dir)
       val cohort = e.filter(col("event_type") === "signup")
         .groupBy(col("user_id"))
@@ -478,7 +699,24 @@ object TimeSeries {
           // exactly on a 6th-decimal half-way point (ts29 class)
           (col("n_active").cast("double") / col("n_cohort")).as("retention"))
         .orderBy(col("cohort_week"), col("week_offset"))
-    }),
+    },
+      """WITH cohort AS (
+        |  SELECT user_id, date_trunc('week', MIN(ts)) AS cw
+        |  FROM events WHERE event_type = 'signup' GROUP BY user_id),
+        |sizes AS (SELECT cw, COUNT(*) AS n_cohort FROM cohort GROUP BY cw),
+        |activity AS (
+        |  SELECT DISTINCT user_id, date_trunc('week', ts) AS week FROM events),
+        |active AS (
+        |  SELECT c.cw, CAST(datediff('day', c.cw, a.week) / 7 AS BIGINT) AS week_offset,
+        |    COUNT(*) AS n_active
+        |  FROM activity a JOIN cohort c ON a.user_id = c.user_id
+        |  WHERE a.week >= c.cw
+        |  GROUP BY c.cw, week_offset)
+        |SELECT strftime(x.cw, '%Y-%m-%d') AS cohort_week, x.week_offset,
+        |  x.n_active, s.n_cohort,
+        |  CAST(x.n_active AS DOUBLE) / s.n_cohort AS retention
+        |FROM active x JOIN sizes s ON x.cw = s.cw
+        |ORDER BY cohort_week, week_offset""".stripMargin),
 
     // Mergeable-sketch incremental rollup — the 100 TB aggregation story:
     // history is summarized ONCE into per-day HLL sketches (DataSketches
@@ -490,7 +728,7 @@ object TimeSeries {
     // estimate must land within 5% of the exact distinct count (at this
     // cardinality HLL runs in sparse mode and is near-exact; a broken
     // sketch or merge flips the booleans and the hash).
-    "ts20_hll_merge" -> ((s, dir) => {
+    QuerySpec("ts20_hll_merge", (s, dir) => {
       val e = ev(s, dir)
       val daily = e.groupBy(to_date(col("ts")).as("day"))
         .agg(hll_sketch_agg(col("user_id")).as("sk"),
@@ -508,7 +746,15 @@ object TimeSeries {
         .select(col("n_days"), col("n_days_ok"), col("n_exact"),
           (abs(col("merged_est") - col("n_exact")).cast("double") /
             col("n_exact") <= 0.05).as("merged_ok"))
-    }),
+    },
+      // the oracle asserts the ACCURACY verdict (see the query's scaladoc):
+      // exact counts from raw events, booleans as literals — a broken
+      // sketch/merge on the engine side flips day_ok/merged_ok and the hash
+      """SELECT CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days,
+        |  CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days_ok,
+        |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact,
+        |  TRUE AS merged_ok
+        |FROM events""".stripMargin),
 
     // Flux `exponentialMovingAverage` (k = 2/(n+1), n = 9 → k = 0.2,
     // seeded with the first observation): y_i = (1-k)^(i-1)·x_1 +
@@ -525,7 +771,7 @@ object TimeSeries {
     // series key instead (mapGroupsWithState — GasStream), or as the
     // truncated-kernel window approximation; this closed form is the
     // oracle-checkable batch semantics.
-    "ts21_ema" -> ((s, dir) => {
+    QuerySpec("ts21_ema", (s, dir) => {
       val daily = ev(s, dir)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("nd"), sum(sumExactCol(col("value"))).as("sd"))
@@ -550,7 +796,36 @@ object TimeSeries {
         .select(col("event_type"), date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("i"), round(col("acc"), 6).cast("double").as("ema"))
         .orderBy(col("event_type"), col("i"))
-    }),
+    },
+      """WITH daily AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day,
+        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
+        |  FROM events GROUP BY event_type, day),
+        |idx AS (
+        |  SELECT event_type, day, x,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS BIGINT)
+        |      AS i
+        |  FROM daily),
+        |pairs AS (
+        |  SELECT a.event_type, a.day, a.i, b.i AS j, b.x AS xj,
+        |    CASE WHEN a.i - b.i = 0 THEN CAST(1.0 AS DOUBLE)
+        |         -- elements MUST be double: a DECIMAL(2,1) 0.8 would make
+        |         -- list_reduce round the accumulator back to 1 dp each step
+        |         ELSE list_reduce(list_transform(range(a.i - b.i),
+        |                            z -> CAST(0.8 AS DOUBLE)),
+        |                          (acc, z) -> acc * z) END AS f
+        |  FROM idx a JOIN idx b
+        |    ON a.event_type = b.event_type AND b.i <= a.i),
+        |terms AS (
+        |  SELECT event_type, day, i,
+        |    CAST(ROUND((CASE WHEN j = 1 THEN f ELSE 0.2 * f END) * xj, 12)
+        |      AS DECIMAL(28,12)) AS term
+        |  FROM pairs)
+        |SELECT event_type, strftime(day, '%Y-%m-%d') AS day, i,
+        |  CAST(ROUND(SUM(term), 6) AS DOUBLE) AS ema
+        |FROM terms GROUP BY event_type, day, i
+        |ORDER BY event_type, i""".stripMargin),
 
     // Brown's DOUBLE exponential smoothing — the trend-aware forecasting
     // step up from ts21 (the non-seasonal core of Flux `holtWinters`):
@@ -562,7 +837,7 @@ object TimeSeries {
     // final level/trend/forecast are one shared IEEE tree over 6-dp
     // values. Same scale shape as ts21: per-series O(len²) with bounded
     // len, keyed shuffles only.
-    "ts22_double_exp_smooth" -> ((s, dir) => {
+    QuerySpec("ts22_double_exp_smooth", (s, dir) => {
       val daily = ev(s, dir)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("nd"), sum(sumExactCol(col("value"))).as("sd"))
@@ -583,7 +858,32 @@ object TimeSeries {
           round(lit(2.0) * col("s1") - col("s2") +
             lit(0.25) * (col("s1") - col("s2")), 6).as("forecast_next"))
         .orderBy(col("event_type"), col("i"))
-    }),
+    },
+      s"""WITH daily0 AS (
+         |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
+         |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+         |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
+         |  FROM events GROUP BY g, day),
+         |daily AS (
+         |  SELECT g, day, x,
+         |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY day) AS BIGINT) AS i
+         |  FROM daily0),
+         |ser1 AS (SELECT g, i, x FROM daily),
+         |${emaSql("ser1", "e1")},
+         |s1 AS (SELECT g, i, CAST(ROUND(ema, 6) AS DOUBLE) AS s1 FROM e1),
+         |ser2 AS (SELECT g, i, s1 AS x FROM s1),
+         |${emaSql("ser2", "e2")},
+         |s2 AS (SELECT g, i, CAST(ROUND(ema, 6) AS DOUBLE) AS s2 FROM e2)
+         |SELECT d.g AS event_type, strftime(d.day, '%Y-%m-%d') AS day, d.i,
+         |  s1.s1, s2.s2,
+         |  ROUND(2.0 * s1.s1 - s2.s2, 6) AS level,
+         |  ROUND(0.25 * (s1.s1 - s2.s2), 6) AS trend,
+         |  ROUND(2.0 * s1.s1 - s2.s2 + 0.25 * (s1.s1 - s2.s2), 6)
+         |    AS forecast_next
+         |FROM daily d
+         |JOIN s1 ON s1.g = d.g AND s1.i = d.i
+         |JOIN s2 ON s2.g = d.g AND s2.i = d.i
+         |ORDER BY event_type, d.i""".stripMargin),
 
     // ADDITIVE SEASONAL DECOMPOSITION + deseasonalized trend forecast —
     // the seasonal completion of ts22, i.e. the full level+trend+season
@@ -600,7 +900,7 @@ object TimeSeries {
     // is one tiny (series × 7) aggregate joined back broadcast-style; the
     // smoothing passes are ts21's per-series closed form (bounded len);
     // nothing new shuffles beyond the series key.
-    "ts23_seasonal_forecast" -> ((s, dir) => {
+    QuerySpec("ts23_seasonal_forecast", (s, dir) => {
       val daily = ev(s, dir)
         .groupBy(col("event_type"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("nd"), sum(sumExactCol(col("value"))).as("sd"))
@@ -652,7 +952,49 @@ object TimeSeries {
           col("x"), col("sidx"), col("y").as("deseason"),
           col("level"), col("trend"), col("forecast_next"))
         .orderBy(col("event_type"), col("i"))
-    }),
+    },
+      s"""WITH daily0 AS (
+         |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
+         |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+         |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
+         |  FROM events GROUP BY g, day),
+         |daily AS (
+         |  SELECT g, day, x,
+         |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY day) AS BIGINT) AS i
+         |  FROM daily0),
+         |dailyp AS (SELECT *, CAST((i - 1) % 7 AS BIGINT) AS p FROM daily),
+         |mu AS (
+         |  SELECT g,
+         |    CAST((2 * CAST(SUM(CAST(x AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+         |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS gmu
+         |  FROM dailyp GROUP BY g),
+         |pm AS (
+         |  SELECT g, p,
+         |    CAST((2 * CAST(SUM(CAST(x AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+         |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS pmu
+         |  FROM dailyp GROUP BY g, p),
+         |seas AS (SELECT pm.g, pm.p, ROUND(pm.pmu - mu.gmu, 6) AS sidx
+         |         FROM pm JOIN mu ON mu.g = pm.g),
+         |de AS (
+         |  SELECT d.g, d.day, d.i, d.p, d.x, s.sidx, ROUND(d.x - s.sidx, 6) AS y
+         |  FROM dailyp d JOIN seas s ON s.g = d.g AND s.p = d.p),
+         |ser1 AS (SELECT g, i, y AS x FROM de),
+         |${emaSql("ser1", "e1")},
+         |s1 AS (SELECT g, i, CAST(ROUND(ema, 6) AS DOUBLE) AS s1 FROM e1),
+         |ser2 AS (SELECT g, i, s1 AS x FROM s1),
+         |${emaSql("ser2", "e2")},
+         |s2 AS (SELECT g, i, CAST(ROUND(ema, 6) AS DOUBLE) AS s2 FROM e2)
+         |SELECT de.g AS event_type, strftime(de.day, '%Y-%m-%d') AS day, de.i,
+         |  de.x, de.sidx, de.y AS deseason,
+         |  ROUND(2.0 * s1.s1 - s2.s2, 6) AS level,
+         |  ROUND(0.25 * (s1.s1 - s2.s2), 6) AS trend,
+         |  ROUND(ROUND(2.0 * s1.s1 - s2.s2, 6) + ROUND(0.25 * (s1.s1 - s2.s2), 6)
+         |        + ns.sidx, 6) AS forecast_next
+         |FROM de
+         |JOIN s1 ON s1.g = de.g AND s1.i = de.i
+         |JOIN s2 ON s2.g = de.g AND s2.i = de.i
+         |JOIN seas ns ON ns.g = de.g AND ns.p = de.i % 7
+         |ORDER BY event_type, de.i""".stripMargin),
 
     // LTTB (largest-triangle-three-buckets) downsampling — Grafana's
     // shape-preserving "2M points → 20 points" visual downsampler, run as
@@ -662,7 +1004,7 @@ object TimeSeries {
     // WITH RECURSIVE (argmax via NOT EXISTS, ties to the earliest point),
     // so every selected point — and therefore every triangle-area
     // comparison against the running previous pick — is hash-verified.
-    "ts24_lttb_downsample" -> ((s, dir) => {
+    QuerySpec("ts24_lttb_downsample", (s, dir) => {
       val sp = s
       import sp.implicits._
       ev(s, dir)
@@ -678,7 +1020,62 @@ object TimeSeries {
         }
         .toDF("event_type", "k", "x_us", "y")
         .orderBy(col("event_type"), col("k"))
-    }),
+    },
+      // pick-by-pick LTTB replay: centroids from exact sums, the recursion
+      // advances one bucket per step, argmax-by-area via NOT EXISTS with
+      // ties to the earliest point — the same IEEE area tree as the engine.
+      // Series with no interior to thin (n <= buckets+2 = 22) bypass the
+      // recursion entirely (k = position), mirroring the engine's
+      // pass-through — they would otherwise stall the recursion on sparse
+      // bucket numbering and divide by zero at n = 2.
+      """WITH RECURSIVE
+        |pts AS (
+        |  SELECT event_type AS g, epoch_us(ts) AS xus,
+        |    CAST(epoch_us(ts) AS DOUBLE) AS xd, value AS y,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY ts, event_id) AS BIGINT) AS i,
+        |    COUNT(*) OVER (PARTITION BY event_type) AS n
+        |  FROM events),
+        |short AS (SELECT g, i - 1 AS k, xus, y FROM pts WHERE n <= 22),
+        |mids AS (SELECT *, (i - 2) * 20 // (n - 2) AS b FROM pts
+        |         WHERE n > 22 AND i >= 2 AND i <= n - 1),
+        |cent AS (
+        |  SELECT g, b, CAST(SUM(xus) AS DOUBLE) / COUNT(*) AS cx,
+        |    CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS cy
+        |  FROM mids GROUP BY g, b),
+        |lastp AS (SELECT g, xus, xd, y FROM pts WHERE i = n AND n > 22),
+        |cand AS (
+        |  SELECT m.g, m.b, m.i, m.xus, m.xd, m.y,
+        |    COALESCE(c.cx, l.xd) AS cx, COALESCE(c.cy, l.y) AS cy
+        |  FROM mids m
+        |  LEFT JOIN cent c ON c.g = m.g AND c.b = m.b + 1
+        |  JOIN lastp l ON l.g = m.g),
+        |rec AS (
+        |  SELECT g, CAST(0 AS BIGINT) AS k, xus AS selxus, xd AS selxd,
+        |    y AS sely
+        |  FROM pts WHERE i = 1 AND n > 22
+        |  UNION ALL
+        |  SELECT r.g, r.k + 1, p.xus, p.xd, p.y
+        |  FROM rec r JOIN cand p ON p.g = r.g AND p.b = r.k
+        |  WHERE NOT EXISTS (
+        |    SELECT 1 FROM cand p2
+        |    WHERE p2.g = p.g AND p2.b = p.b AND (
+        |      ABS((r.selxd - p2.cx) * (p2.y - r.sely)
+        |          - (r.selxd - p2.xd) * (p2.cy - r.sely))
+        |        > ABS((r.selxd - p.cx) * (p.y - r.sely)
+        |              - (r.selxd - p.xd) * (p.cy - r.sely))
+        |      OR (ABS((r.selxd - p2.cx) * (p2.y - r.sely)
+        |               - (r.selxd - p2.xd) * (p2.cy - r.sely))
+        |            = ABS((r.selxd - p.cx) * (p.y - r.sely)
+        |                  - (r.selxd - p.xd) * (p.cy - r.sely))
+        |          AND p2.i < p.i))))
+        |SELECT event_type, k, x_us, y FROM (
+        |  SELECT g AS event_type, k, selxus AS x_us, sely AS y FROM rec
+        |  UNION ALL
+        |  SELECT g, CAST(21 AS BIGINT), xus, y FROM lastp
+        |  UNION ALL
+        |  SELECT g, k, xus, y FROM short)
+        |ORDER BY event_type, k""".stripMargin),
 
     // Anomaly detection — the monitoring verdict a sensor pipeline actually
     // pages on, with the two standard detectors side by side: (a) a rolling
@@ -697,7 +1094,7 @@ object TimeSeries {
     // rank-windows + two tiny per-series aggregates joined back by
     // broadcast (|series| rows). MAD = 0 (constant-majority series) yields
     // a null robust score, not ±Inf.
-    "ts25_anomaly_detect" -> ((s, dir) => {
+    QuerySpec("ts25_anomaly_detect", (s, dir) => {
       val keyed = ev(s, dir)
         .withColumn("ts_us", unix_micros(col("ts")))
         .withColumn("xd", col("value").cast("decimal(18,6)"))
@@ -760,7 +1157,58 @@ object TimeSeries {
           round(col("z_rob_raw"), 6).as("z_robust"),
           (abs(col("z_rob_raw")) > 3.5).as("robust_flag"))
         .orderBy(col("event_type"), col("ts_us"), col("event_id"))
-    }),
+    },
+      // the same exact-decimal rolling moments, rank-based median/MAD and
+      // fixed IEEE score trees as the engine — no interpolating percentile
+      // anywhere, so there is nothing engine-specific to diverge
+      """WITH k AS (
+        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
+        |    CAST(value AS DECIMAL(18,6)) AS xd
+        |  FROM events),
+        |r AS (
+        |  SELECT *,
+        |    COUNT(*) OVER w24 AS n24,
+        |    CAST(SUM(xd) OVER w24 AS DOUBLE) AS sx,
+        |    CAST(SUM(CAST(xd * xd AS DECIMAL(38,12))) OVER w24 AS DOUBLE) AS sxx
+        |  FROM k
+        |  WINDOW w24 AS (PARTITION BY event_type ORDER BY ts_us, event_id
+        |                 ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)),
+        |mr AS (
+        |  SELECT event_type, xd,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY xd, event_id) AS rn,
+        |    COUNT(*) OVER (PARTITION BY event_type) AS n
+        |  FROM k),
+        |m AS (
+        |  SELECT event_type, CAST((MIN(xd) + MAX(xd)) / 2 AS DECIMAL(18,6)) AS med
+        |  FROM mr WHERE rn = (n + 1) // 2 OR rn = n // 2 + 1
+        |  GROUP BY event_type),
+        |ar AS (
+        |  SELECT k.event_type, k.event_id,
+        |    CAST(ABS(xd - med) AS DECIMAL(18,6)) AS adev
+        |  FROM k JOIN m USING (event_type)),
+        |ar2 AS (
+        |  SELECT event_type, adev,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY adev, event_id) AS rn,
+        |    COUNT(*) OVER (PARTITION BY event_type) AS n
+        |  FROM ar),
+        |md AS (
+        |  SELECT event_type, CAST((MIN(adev) + MAX(adev)) / 2 AS DECIMAL(18,6)) AS mad
+        |  FROM ar2 WHERE rn = (n + 1) // 2 OR rn = n // 2 + 1
+        |  GROUP BY event_type),
+        |scored AS (
+        |  SELECT r.event_type, r.ts_us, r.event_id, r.value,
+        |    (r.sxx - r.sx * r.sx / 24.0) / 24.0 AS vr,
+        |    CASE WHEN r.n24 = 24 AND (r.sxx - r.sx * r.sx / 24.0) / 24.0 > 0.0
+        |         THEN (r.value - r.sx / 24.0)
+        |              / sqrt((r.sxx - r.sx * r.sx / 24.0) / 24.0) END AS zr,
+        |    CASE WHEN CAST(md.mad AS DOUBLE) > 0.0
+        |         THEN 0.6745 * (r.value - CAST(m.med AS DOUBLE))
+        |              / CAST(md.mad AS DOUBLE) END AS zb
+        |  FROM r JOIN m USING (event_type) JOIN md USING (event_type))
+        |SELECT event_type, ts_us, event_id, value,
+        |  ROUND(zr, 6) AS z_roll, ABS(zr) > 3.0 AS roll_flag,
+        |  ROUND(zb, 6) AS z_robust, ABS(zb) > 3.5 AS robust_flag
+        |FROM scored ORDER BY event_type, ts_us, event_id""".stripMargin),
 
     // CUSUM changepoint detection (Page 1954) — ts25 flags point outliers;
     // CUSUM catches sustained LEVEL SHIFTS those z-scores miss, because
@@ -773,7 +1221,7 @@ object TimeSeries {
     // one shuffle on the series key; the parameter frame is |series| rows
     // joined back by broadcast. The DuckDB oracle replays the recursion
     // step-for-step (WITH RECURSIVE), including the post-alarm reset.
-    "ts26_cusum_changepoint" -> ((s, dir) => {
+    QuerySpec("ts26_cusum_changepoint", (s, dir) => {
       val sp = s
       import sp.implicits._
       val base = ev(s, dir).select(col("event_type"),
@@ -808,7 +1256,51 @@ object TimeSeries {
         }
         .toDF("event_type", "ts_us", "event_id", "value", "sp", "sn", "alarm")
         .orderBy(col("event_type"), col("ts_us"), col("event_id"))
-    }),
+    },
+      // step-for-step CUSUM replay: same exact-decimal parameter moments,
+      // same per-step round(…, 6) recursion incl. the post-alarm reset —
+      // the alarm predicate is re-derived from (sp, sn, h) at each hop
+      """WITH RECURSIVE
+        |pts AS (
+        |  SELECT event_type AS g, epoch_us(ts) AS ts_us, event_id, value AS x,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY ts, event_id) AS BIGINT) AS i
+        |  FROM events),
+        |st AS (
+        |  SELECT event_type AS g, COUNT(*) AS n,
+        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx,
+        |    SUM(CAST(CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6))
+        |        AS DECIMAL(38,12))) AS sxx
+        |  FROM events GROUP BY event_type),
+        |sg AS (
+        |  SELECT g,
+        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n) AS DOUBLE)
+        |      / 1000000.0 AS mu,
+        |    ROUND(sqrt(greatest(0, CAST(sxx AS DOUBLE) / n
+        |      - (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n))), 6) AS sigma
+        |  FROM st),
+        |pr AS (SELECT g, mu, ROUND(0.5 * sigma, 6) AS kk,
+        |              ROUND(4.0 * sigma, 6) AS h FROM sg),
+        |rec AS (
+        |  SELECT p.g, p.i, p.ts_us, p.event_id, p.x,
+        |    ROUND(greatest(0, ROUND(p.x - r.mu - r.kk, 6)), 6) AS sp,
+        |    ROUND(greatest(0, ROUND(r.mu - p.x - r.kk, 6)), 6) AS sn
+        |  FROM pts p JOIN pr r USING (g) WHERE p.i = 1
+        |  UNION ALL
+        |  SELECT p.g, p.i, p.ts_us, p.event_id, p.x,
+        |    ROUND(greatest(0,
+        |      (CASE WHEN q.sp > r.h OR q.sn > r.h THEN 0 ELSE q.sp END)
+        |      + ROUND(p.x - r.mu - r.kk, 6)), 6),
+        |    ROUND(greatest(0,
+        |      (CASE WHEN q.sp > r.h OR q.sn > r.h THEN 0 ELSE q.sn END)
+        |      + ROUND(r.mu - p.x - r.kk, 6)), 6)
+        |  FROM rec q
+        |  JOIN pts p ON p.g = q.g AND p.i = q.i + 1
+        |  JOIN pr r ON r.g = p.g)
+        |SELECT q.g AS event_type, q.ts_us, q.event_id, q.x AS value,
+        |  q.sp, q.sn, (q.sp > r.h OR q.sn > r.h) AS alarm
+        |FROM rec q JOIN pr r USING (g)
+        |ORDER BY event_type, ts_us, event_id""".stripMargin),
 
     // Autocorrelation function (ACF, lags 1–10) — the seasonality
     // diagnostic that JUSTIFIES ts23's period-7 decomposition: a weekly
@@ -818,14 +1310,19 @@ object TimeSeries {
     // share the series sort), so the plan is one shuffle on the series
     // key; terms are rounded to 12 dp and summed as exact decimals, so
     // the aggregate is order-independent under any partitioning.
-    "ts27_acf" -> ((s, dir) => {
+    QuerySpec("ts27_acf", (s, dir) => {
       val base = ev(s, dir).select(col("event_type").as("g"),
         unix_micros(col("ts")).as("ts_us"), col("event_id"), col("value"))
       acf10(base)
         .select(col("g").as("event_type"), col("lag").cast("long").as("lag"),
           col("acf"), col("n_pairs"))
         .orderBy(col("event_type"), col("lag"))
-    }),
+    },
+      // same centered series by row-number self-join at each lag, same
+      // 12-dp-rounded terms summed as exact decimals
+      s"""WITH $acf10Sql
+         |SELECT g AS event_type, CAST(lag AS BIGINT) AS lag, acf, n_pairs
+         |FROM a ORDER BY event_type, lag""".stripMargin),
 
     // AUTOMATIC PERIOD DETECTION — the DECISION on top of ts27's
     // measurement (the auto-seasonality knob a forecasting pipeline
@@ -835,7 +1332,7 @@ object TimeSeries {
     // the standard |r| > 2/√n significance verdict (Bartlett's
     // white-noise band). Same single-sort plan as ts27; the argmax adds
     // one |series|×10-row aggregate.
-    "ts40_auto_period" -> ((s, dir) => {
+    QuerySpec("ts40_auto_period", (s, dir) => {
       val base = ev(s, dir).select(col("event_type").as("g"),
         unix_micros(col("ts")).as("ts_us"), col("event_id"), col("value"))
       acf10(base)
@@ -851,7 +1348,19 @@ object TimeSeries {
           (col("best.acf") >
             lit(2.0) / sqrt(col("n_max").cast("double"))).as("is_seasonal"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // same ACF table; argmax by (acf DESC, lag) rank; Bartlett 2/√n band
+      s"""WITH $acf10Sql,
+         |mx AS (SELECT g, MAX(n_pairs) AS n_max FROM a GROUP BY g),
+         |b AS (SELECT g, lag, acf,
+         |        ROW_NUMBER() OVER (PARTITION BY g ORDER BY acf DESC, lag)
+         |          AS rnk
+         |      FROM a)
+         |SELECT b.g AS event_type, CAST(b.lag AS BIGINT) AS best_lag,
+         |  b.acf AS best_acf,
+         |  b.acf > 2.0 / sqrt(CAST(m.n_max AS DOUBLE)) AS is_seasonal
+         |FROM b JOIN mx m USING (g) WHERE rnk = 1
+         |ORDER BY event_type""".stripMargin),
 
     // ROBUST rolling anomaly — the median/MAD upgrade of ts25's
     // mean/stddev z-score: one outlier inflates a trailing stddev enough
@@ -868,7 +1377,7 @@ object TimeSeries {
     // partitioning every other ts window query uses; the oracle replays
     // the frame as a rank self-join (plain ANSI, no list-window
     // functions, per the round-9 portability policy).
-    "ts41_rolling_robust_z" -> ((s, dir) => {
+    QuerySpec("ts41_rolling_robust_z", (s, dir) => {
       val w = Window.partitionBy(col("event_type"))
         .orderBy(col("ts_us"), col("event_id")).rowsBetween(-14, 0)
       ev(s, dir)
@@ -888,7 +1397,49 @@ object TimeSeries {
         .select(col("event_type"), col("ts_us"), col("event_id"),
           col("value"), col("med"), col("mad"), col("is_anomaly"))
         .orderBy(col("event_type"), col("ts_us"), col("event_id"))
-    }),
+    },
+      // rank-self-join replay of the 15-point rolling median/MAD: the frame
+      // is j.rn ∈ [i.rn−14, i.rn]; median = (v@⌈n/2⌉ + v@⌊n/2⌋+1)/2 via two
+      // single-row CASE sums (exact — the zero terms are IEEE-neutral), MAD
+      // repeats it on |v−med|. Plain ANSI window/join SQL only.
+      """WITH e AS (
+        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY ts, event_id) AS rn
+        |  FROM events),
+        |w AS (
+        |  SELECT i.event_type, i.rn, j.value AS v
+        |  FROM e i JOIN e j ON j.event_type = i.event_type
+        |    AND j.rn BETWEEN i.rn - 14 AND i.rn),
+        |r AS (
+        |  SELECT event_type, rn, v,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type, rn ORDER BY v) AS vr,
+        |    COUNT(*) OVER (PARTITION BY event_type, rn) AS n
+        |  FROM w),
+        |med AS (
+        |  SELECT event_type, rn,
+        |    (SUM(CASE WHEN vr = (n + 1) // 2 THEN v ELSE 0 END)
+        |     + SUM(CASE WHEN vr = (n + 2) // 2 THEN v ELSE 0 END)) / 2 AS med
+        |  FROM r GROUP BY event_type, rn, n),
+        |d AS (
+        |  SELECT w.event_type, w.rn, abs(w.v - m.med) AS dv
+        |  FROM w JOIN med m ON m.event_type = w.event_type AND m.rn = w.rn),
+        |rd AS (
+        |  SELECT event_type, rn, dv,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type, rn ORDER BY dv) AS vr,
+        |    COUNT(*) OVER (PARTITION BY event_type, rn) AS n
+        |  FROM d),
+        |mad AS (
+        |  SELECT event_type, rn,
+        |    (SUM(CASE WHEN vr = (n + 1) // 2 THEN dv ELSE 0 END)
+        |     + SUM(CASE WHEN vr = (n + 2) // 2 THEN dv ELSE 0 END)) / 2 AS mad
+        |  FROM rd GROUP BY event_type, rn, n)
+        |SELECT e.event_type, e.ts_us, e.event_id, e.value, m.med, md.mad,
+        |  abs(e.value - m.med) > 3.0 * md.mad AS is_anomaly
+        |FROM e
+        |JOIN med m ON m.event_type = e.event_type AND m.rn = e.rn
+        |JOIN mad md ON md.event_type = e.event_type AND md.rn = e.rn
+        |ORDER BY e.event_type, e.ts_us, e.event_id""".stripMargin),
 
     // POPULATION STABILITY INDEX day-over-day — the data-DRIFT monitor a
     // training pipeline runs on every feature column: PSI =
@@ -906,7 +1457,7 @@ object TimeSeries {
     // aggregation order). Scale shape: counts compress to
     // |types|·|days|·8 rows BEFORE any join; the day-over-day self-join
     // and the final rollup ride that tiny frame.
-    "ts42_psi_drift" -> ((s, dir) => {
+    QuerySpec("ts42_psi_drift", (s, dir) => {
       // The compressed frame is referenced by three branches (day frame,
       // densify, totals) whose differing column pruning defeats
       // ReuseExchange — without materialization the 100 TB events scan
@@ -950,7 +1501,45 @@ object TimeSeries {
           col("psi_dec").cast("double").as("psi"),
           col("n_cur"), col("n_prev"))
         .orderBy(col("event_type"), col("day"))
-    }),
+    },
+      // same power-of-two bins, Laplace smoothing, single 6-dp ln of the
+      // integer-ratio quotient, 12-dp decimal terms — DuckDB ln() is
+      // natural log (its log() is base-10, the classic trap)
+      """WITH binned AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day,
+        |    CAST(greatest(least(floor(value / 16.0), 7), 0) AS BIGINT)
+        |      AS bin,
+        |    COUNT(*) AS n
+        |  FROM events GROUP BY 1, 2, 3),
+        |frame AS (SELECT DISTINCT event_type, day FROM binned),
+        |dense AS (
+        |  SELECT f.event_type, f.day, t.bin, COALESCE(bi.n, 0) AS n
+        |  FROM frame f CROSS JOIN range(0, 8) t(bin)
+        |  LEFT JOIN binned bi ON bi.event_type = f.event_type
+        |    AND bi.day = f.day AND bi.bin = t.bin),
+        |tot AS (SELECT event_type, day, SUM(n) AS tot FROM dense
+        |        GROUP BY event_type, day),
+        |cells AS (SELECT d.event_type, d.day, d.bin, d.n, tt.tot
+        |          FROM dense d JOIN tot tt USING (event_type, day)),
+        |j AS (
+        |  SELECT c.event_type, c.day, c.bin, c.n AS nc, c.tot AS tc,
+        |    p.n AS np, p.tot AS tp
+        |  FROM cells c JOIN cells p ON p.event_type = c.event_type
+        |    AND p.day + 1 = c.day AND p.bin = c.bin),
+        |terms AS (
+        |  SELECT event_type, day, nc, np,
+        |    CAST(ROUND(
+        |      ((CAST(nc + 1 AS DOUBLE) / (tc + 8))
+        |        - (CAST(np + 1 AS DOUBLE) / (tp + 8)))
+        |      * ROUND(ln(CAST((nc + 1) * (tp + 8) AS DOUBLE)
+        |                 / ((np + 1) * (tc + 8))), 6)
+        |    , 12) AS DECIMAL(28,12)) AS term
+        |  FROM j)
+        |SELECT event_type, day, CAST(SUM(term) AS DOUBLE) AS psi,
+        |  CAST(SUM(nc) AS BIGINT) AS n_cur,
+        |  CAST(SUM(np) AS BIGINT) AS n_prev
+        |FROM terms GROUP BY event_type, day
+        |ORDER BY event_type, day""".stripMargin),
 
     // WEEKDAY×HOUR SEASONAL PROFILE — the dashboard heatmap behind every
     // "is this normal for a Tuesday 3 pm?" question: mean value per
@@ -960,7 +1549,7 @@ object TimeSeries {
     // (0=Monday) ≡ DuckDB isodow()−1. Means are halfUpMean6 (cell counts
     // routinely hit the 2-adic round-on-quotient shapes). One hash
     // aggregate into ≤ 7×24 cells — compression is the whole plan.
-    "ts46_weekday_profile" -> ((s, dir) =>
+    QuerySpec("ts46_weekday_profile", (s, dir) =>
       ev(s, dir)
         .groupBy(expr("weekday(ts)").cast("long").as("dow"),
           expr("hour(ts)").cast("long").as("hod"))
@@ -968,7 +1557,17 @@ object TimeSeries {
           sum(col("value").cast("decimal(18,6)")).as("sx"))
         .withColumn("mean_value", halfUpMean6("sx", "n"))
         .select(col("dow"), col("hod"), col("n"), col("mean_value"))
-        .orderBy(col("dow"), col("hod"))),
+        .orderBy(col("dow"), col("hod")),
+      // isodow−1 ≡ Spark weekday (ISO, 0=Monday); halfUpMean6 oracle twin
+      """SELECT CAST(isodow(CAST(ts AS DATE)) - 1 AS BIGINT) AS dow,
+        |  CAST(hour(ts) AS BIGINT) AS hod,
+        |  COUNT(*) AS n,
+        |  CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000
+        |          AS BIGINT)
+        |        + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0
+        |    AS mean_value
+        |FROM events GROUP BY dow, hod
+        |ORDER BY dow, hod""".stripMargin),
 
     // GAPS-AND-ISLANDS SESSIONIZATION (batch twin of gs14's streaming
     // sessions): per-user event islands split at >30 min silence — the
@@ -980,7 +1579,7 @@ object TimeSeries {
     // hash key. Duration comes from MAX−MIN, and the only window SUM
     // (the island id) is CAST in the oracle's final projection — DuckDB
     // would otherwise type it HUGEINT (the round-9 class, now gated).
-    "ts47_user_sessions" -> ((s, dir) => {
+    QuerySpec("ts47_user_sessions", (s, dir) => {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("us"), col("event_id"))
       ev(s, dir)
@@ -998,7 +1597,26 @@ object TimeSeries {
           col("start_us"), col("end_us"),
           (col("end_us") - col("start_us")).as("dur_us"), col("n_events"))
         .orderBy(col("user_id"), col("session_seq"))
-    }),
+    },
+      // lag → break-flag → running-sum islands; all integer µs. The island
+      // id is a window SUM, so the final projection pins it to BIGINT
+      // (DuckDB types window SUM(INTEGER) as HUGEINT — the typed-sum rule)
+      """WITH e AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+        |f AS (
+        |  SELECT *, CASE WHEN LAG(us) OVER w IS NULL
+        |      OR us - LAG(us) OVER w > 1800000000
+        |    THEN 1 ELSE 0 END AS brk
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        |g AS (
+        |  SELECT *, SUM(brk) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM f)
+        |SELECT user_id, CAST(sid AS BIGINT) AS session_seq,
+        |  MIN(us) AS start_us, MAX(us) AS end_us,
+        |  MAX(us) - MIN(us) AS dur_us, COUNT(*) AS n_events
+        |FROM g GROUP BY user_id, sid
+        |ORDER BY user_id, session_seq""".stripMargin),
 
     // SEASONAL-NAIVE FORECAST BASELINE (MASE-style): how much better is
     // "same hour yesterday" than "previous hour" as a zero-parameter
@@ -1011,7 +1629,7 @@ object TimeSeries {
     // operands in identical order on both engines. Scale shape: events
     // compress to one row per (type, hour) FIRST; both lag joins ride
     // that tiny frame on its (type, hour) hash key.
-    "ts48_seasonal_baseline" -> ((s, dir) => {
+    QuerySpec("ts48_seasonal_baseline", (s, dir) => {
       val hourly = ev(s, dir)
         .groupBy(col("event_type"),
           expr("unix_micros(ts) div 3600000000").as("hr"))
@@ -1035,7 +1653,35 @@ object TimeSeries {
         .select(col("event_type"), col("n24"), col("s24_us"),
           col("n1"), col("s1_us"), col("mase"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // exact integer micro-unit hourly means (the halfUpMean6 kernel in
+      // BIGINT form), exact |Δ| sums, three IEEE divisions in pinned order
+      """WITH hourly AS (
+        |  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+        |    COUNT(*) AS n,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |      AS s_us
+        |  FROM events GROUP BY 1, 2),
+        |hm AS (SELECT event_type, hr, (2 * s_us + n) // (2 * n) AS hm_us
+        |       FROM hourly),
+        |m24 AS (
+        |  SELECT a.event_type, SUM(abs(a.hm_us - b.hm_us)) AS s24_us,
+        |    COUNT(*) AS n24
+        |  FROM hm a JOIN hm b ON b.event_type = a.event_type
+        |    AND b.hr = a.hr - 24
+        |  GROUP BY 1),
+        |m1 AS (
+        |  SELECT a.event_type, SUM(abs(a.hm_us - b.hm_us)) AS s1_us,
+        |    COUNT(*) AS n1
+        |  FROM hm a JOIN hm b ON b.event_type = a.event_type
+        |    AND b.hr = a.hr - 1
+        |  GROUP BY 1)
+        |SELECT m24.event_type, n24, CAST(s24_us AS BIGINT) AS s24_us,
+        |  n1, CAST(s1_us AS BIGINT) AS s1_us,
+        |  (CAST(s24_us AS DOUBLE) / CAST(n24 AS DOUBLE))
+        |    / (CAST(s1_us AS DOUBLE) / CAST(n1 AS DOUBLE)) AS mase
+        |FROM m24 JOIN m1 USING (event_type)
+        |ORDER BY event_type""".stripMargin),
 
     // SLO BURN-RATE — the Google-SRE multi-window alert ts32's
     // threshold-for-duration rule can't express: alarm only when the
@@ -1048,7 +1694,7 @@ object TimeSeries {
     // wrong on sparse hours). Scale shape: events compress to one row
     // per hour FIRST; the unpartitioned window then runs over the tiny
     // |hours| frame, not the event stream.
-    "ts45_burn_rate" -> ((s, dir) => {
+    QuerySpec("ts45_burn_rate", (s, dir) => {
       val hourly = ev(s, dir)
         .groupBy(expr("unix_micros(date_trunc('hour', ts)) div 3600000000")
           .as("hi"))
@@ -1067,7 +1713,30 @@ object TimeSeries {
         .select(col("hi"), col("n_tot"), col("n_err"), col("n_tot_6h"),
           col("n_err_6h"), col("r1"), col("r6"), col("burn_alert"))
         .orderBy(col("hi"))
-    }),
+    },
+      // hourly compression + the same integer-indexed RANGE frame; casts
+      // pin DuckDB's HUGEINT sums back to BIGINT
+      """WITH hourly AS (
+        |  SELECT epoch_us(date_trunc('hour', ts)) // 3600000000 AS hi,
+        |    COUNT(*) AS n_tot,
+        |    CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
+        |      AS BIGINT) AS n_err
+        |  FROM events GROUP BY hi),
+        |w AS (
+        |  SELECT hi, n_tot, n_err,
+        |    CAST(SUM(n_tot) OVER (ORDER BY hi
+        |      RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS BIGINT)
+        |      AS n_tot_6h,
+        |    CAST(SUM(n_err) OVER (ORDER BY hi
+        |      RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS BIGINT)
+        |      AS n_err_6h
+        |  FROM hourly)
+        |SELECT hi, n_tot, n_err, n_tot_6h, n_err_6h,
+        |  CAST(n_err AS DOUBLE) / n_tot AS r1,
+        |  CAST(n_err_6h AS DOUBLE) / n_tot_6h AS r6,
+        |  CAST(n_err AS DOUBLE) / n_tot > 0.25
+        |    AND CAST(n_err_6h AS DOUBLE) / n_tot_6h > 0.22 AS burn_alert
+        |FROM w ORDER BY hi""".stripMargin),
 
     // ROLLING DISTINCT — 7-day active users per event_type, the window
     // aggregate that CANNOT decompose (distinct isn't summable across
@@ -1089,7 +1758,7 @@ object TimeSeries {
     // 1-day count), group size is the 7-day count, and `n_active_1d ≥ 1`
     // reproduces the only-days-present-in-data frame without a join.
     // One events scan, two hash shuffles, no joins at all.
-    "ts44_rolling_distinct" -> ((s, dir) =>
+    QuerySpec("ts44_rolling_distinct", (s, dir) =>
       ev(s, dir)
         .select(col("event_type"), to_date(col("ts")).as("day"),
           col("user_id"))
@@ -1106,7 +1775,26 @@ object TimeSeries {
         .filter(col("n_active_1d") >= 1)
         .select(col("event_type"), col("day"), col("n_active_1d"),
           col("n_active_7d"))
-        .orderBy(col("event_type"), col("day"))),
+        .orderBy(col("event_type"), col("day")),
+      // same dedup → 7-way fan-out → dedup → count; day + o is DATE
+      // integer-day arithmetic on both engines
+      """WITH du AS (
+        |  SELECT DISTINCT event_type, CAST(ts AS DATE) AS day, user_id
+        |  FROM events),
+        |fan AS (
+        |  SELECT event_type, user_id,
+        |    day + CAST(o AS INTEGER) AS wday, MIN(o) AS mo
+        |  FROM du, range(0, 7) t(o)
+        |  GROUP BY event_type, user_id, wday),
+        |agg AS (
+        |  SELECT event_type, wday AS day,
+        |    COUNT(*) AS n_active_7d,
+        |    CAST(SUM(CASE WHEN mo = 0 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_active_1d
+        |  FROM fan GROUP BY event_type, wday)
+        |SELECT event_type, day, n_active_1d, n_active_7d
+        |FROM agg WHERE n_active_1d >= 1
+        |ORDER BY event_type, day""".stripMargin),
 
     // NEAREST-direction as-of join (pandas merge_asof direction='nearest')
     // — ts04 answers "what was the state BEFORE this event"; this answers
@@ -1119,7 +1807,7 @@ object TimeSeries {
     // deduped per (user, µs) first (the operator's uniqueness contract);
     // the left is a 1/10 sample so the oracle's per-key candidate join
     // stays bounded.
-    "ts43_asof_nearest" -> ((s, dir) => {
+    QuerySpec("ts43_asof_nearest", (s, dir) => {
       val e = ev(s, dir)
       val clicks = e
         .filter(col("event_type") === "click" && col("event_id") % 10 === 0)
@@ -1142,7 +1830,33 @@ object TimeSeries {
               lit("backward"))
             .otherwise(lit("forward")).as("direction"))
         .orderBy(col("event_id"))
-    }),
+    },
+      // candidate-join replay of the nearest pick: rank per click by
+      // (|Δt|, earlier-first) — the second key IS the backward tie rule;
+      // LEFT JOIN keeps clicks whose user never purchased
+      """WITH l AS (
+        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us
+        |  FROM events WHERE event_type = 'click' AND event_id % 10 = 0),
+        |r0 AS (
+        |  SELECT user_id, epoch_us(ts) AS rts, value, event_id,
+        |    ROW_NUMBER() OVER (PARTITION BY user_id, epoch_us(ts)
+        |      ORDER BY event_id) AS dn
+        |  FROM events WHERE event_type = 'purchase'),
+        |r AS (SELECT user_id, rts, value, event_id FROM r0 WHERE dn = 1),
+        |cand AS (
+        |  SELECT l.event_id, r.event_id AS p_id, r.rts, r.value,
+        |    ROW_NUMBER() OVER (PARTITION BY l.event_id
+        |      ORDER BY abs(r.rts - l.ts_us), r.rts) AS rk
+        |  FROM l JOIN r USING (user_id))
+        |SELECT l.event_id, l.user_id, l.ts_us,
+        |  c.p_id AS near_purchase_id, c.rts AS near_ts_us,
+        |  c.value AS near_value,
+        |  CASE WHEN c.p_id IS NULL THEN NULL
+        |       WHEN c.rts <= l.ts_us THEN 'backward'
+        |       ELSE 'forward' END AS direction
+        |FROM l LEFT JOIN (SELECT * FROM cand WHERE rk = 1) c
+        |  ON c.event_id = l.event_id
+        |ORDER BY l.event_id""".stripMargin),
 
     // Cross-correlation — ts27 asks "does a series repeat itself?"; ts28
     // asks "does series A LEAD series B?" (the ops question behind
@@ -1155,7 +1869,7 @@ object TimeSeries {
     // is ONE fixed IEEE tree both engines evaluate identically. Scale
     // shape: the bucket frame is |types| × |hours| rows — aggregation
     // compresses first, so the lag join runs on the TINY frame.
-    "ts28_cross_correlation" -> ((s, dir) => {
+    QuerySpec("ts28_cross_correlation", (s, dir) => {
       val b = ev(s, dir)
         .groupBy(col("event_type"),
           (unix_micros(date_trunc("hour", col("ts"))) / lit(3600000000L))
@@ -1189,7 +1903,41 @@ object TimeSeries {
               - col("sx").cast("double") * col("sy").cast("double"))
               / sqrt(col("vx") * col("vy"))), 6).as("xcorr"))
         .orderBy(col("ta"), col("tb"), col("lag"))
-    }),
+    },
+      // same integer epoch-hour alignment, same exact-decimal moment sums,
+      // same single IEEE tree for r
+      """WITH b AS (
+        |  SELECT event_type,
+        |    epoch_us(date_trunc('hour', ts)) // 3600000000 AS hi,
+        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS m
+        |  FROM events GROUP BY event_type, hi),
+        |lags AS (SELECT unnest(range(-3, 4)) AS lag),
+        |mom AS (
+        |  SELECT a.event_type AS ta, c.event_type AS tb, l.lag,
+        |    COUNT(*) AS n,
+        |    SUM(CAST(a.m AS DECIMAL(18,6))) AS sx,
+        |    SUM(CAST(c.m AS DECIMAL(18,6))) AS sy,
+        |    SUM(CAST(ROUND(a.m * c.m, 12) AS DECIMAL(28,12))) AS sxy,
+        |    SUM(CAST(ROUND(a.m * a.m, 12) AS DECIMAL(28,12))) AS sxx,
+        |    SUM(CAST(ROUND(c.m * c.m, 12) AS DECIMAL(28,12))) AS syy
+        |  FROM b a
+        |  JOIN lags l ON true
+        |  JOIN b c ON a.event_type < c.event_type AND c.hi = a.hi + l.lag
+        |  GROUP BY ta, tb, l.lag),
+        |v AS (
+        |  SELECT *,
+        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS vx,
+        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS vy
+        |  FROM mom)
+        |SELECT ta, tb, CAST(lag AS BIGINT) AS lag, n AS n_overlap,
+        |  ROUND(CASE WHEN vx > 0.0 AND vy > 0.0 THEN
+        |    (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / sqrt(vx * vy)
+        |  END, 6) AS xcorr
+        |FROM v ORDER BY ta, tb, lag""".stripMargin),
 
     // OHLC/VWAP bar downsampling — the financial-market shape of the
     // Grafana aggregateWindow family (ts03 keeps one statistic per bucket;
@@ -1201,7 +1949,7 @@ object TimeSeries {
     // VWAP weighs price by the `props.k` quantity with exact-decimal
     // price×qty sums (value has 2 decimals, k is an integer — DECIMAL(28,6)
     // is exact) so the aggregation order can't move the 6th decimal.
-    "ts29_ohlc_bars" -> ((s, dir) =>
+    QuerySpec("ts29_ohlc_bars", (s, dir) =>
       ev(s, dir)
         .withColumn("day", to_date(col("ts")))
         .withColumn("qty", get_json_object(col("props"), "$.k").cast("long"))
@@ -1223,7 +1971,38 @@ object TimeSeries {
           // precedent) — so no rounding at all.
           (col("pv").cast("double") / col("volume").cast("double"))
             .as("vwap"))
-        .orderBy(col("event_type"), col("day"))),
+        .orderBy(col("event_type"), col("day")),
+      // Portability note (round 9): the previous form used DuckDB's
+      // json_extract_string and in-aggregate first/last(... ORDER BY ...) —
+      // both version-sensitive across DuckDB releases (the only two red
+      // oracles on the round-8 board were the only two using
+      // json_extract_string). Rewritten to the q17-proven regexp_extract
+      // form plus a plain window-rank CTE (ANSI, identical on every
+      // DuckDB) — value-identical to the json form on this data, where
+      // props is always {"k": N}.
+      """WITH e AS (
+        |  SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id, value,
+        |    CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT) AS qty
+        |  FROM events),
+        |r AS (
+        |  SELECT *,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type, day
+        |      ORDER BY ts, event_id) AS rn_a,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type, day
+        |      ORDER BY ts DESC, event_id DESC) AS rn_d
+        |  FROM e)
+        |SELECT event_type, day,
+        |  MAX(CASE WHEN rn_a = 1 THEN value END) AS open,
+        |  MAX(value) AS high,
+        |  MIN(value) AS low,
+        |  MAX(CASE WHEN rn_d = 1 THEN value END) AS close,
+        |  COUNT(*) AS n_trades,
+        |  CAST(SUM(qty) AS BIGINT) AS volume,
+        |  CAST(SUM(CAST(ROUND(value * qty, 6) AS DECIMAL(28,6))) AS DOUBLE)
+        |    / CAST(SUM(qty) AS DOUBLE) AS vwap
+        |FROM r
+        |GROUP BY event_type, day
+        |ORDER BY event_type, day""".stripMargin),
 
     // 1-D local-level Kalman filter — the optimal-denoiser upgrade of
     // ts21's fixed-α EMA: the smoothing weight is the Kalman GAIN,
@@ -1237,7 +2016,7 @@ object TimeSeries {
     // the series key; the parameter frame is |series| rows broadcast
     // back. Every step-assignment is 6-dp-rounded, so the DuckDB WITH
     // RECURSIVE replay reproduces the doubles bit-for-bit.
-    "ts30_kalman_filter" -> ((s, dir) => {
+    QuerySpec("ts30_kalman_filter", (s, dir) => {
       val sp = s
       import sp.implicits._
       val base = ev(s, dir).select(col("event_type"),
@@ -1274,7 +2053,50 @@ object TimeSeries {
         .toDF("event_type", "ts_us", "event_id", "value", "x_hat", "p_var",
           "k_gain")
         .orderBy(col("event_type"), col("ts_us"), col("event_id"))
-    }),
+    },
+      // step-for-step Kalman replay: same exact-decimal parameter moments
+      // (R = variance clamped at 1e-6, Q = R/10), same 6-dp-rounded
+      // predict→gain→update recursion; init x₁ = z₁, P₁ = R, K₁ = 1
+      """WITH RECURSIVE
+        |pts AS (
+        |  SELECT event_type AS g, epoch_us(ts) AS ts_us, event_id, value AS z,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY ts, event_id) AS BIGINT) AS i
+        |  FROM events),
+        |st AS (
+        |  SELECT event_type AS g, COUNT(*) AS n,
+        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx,
+        |    SUM(CAST(CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6))
+        |        AS DECIMAL(38,12))) AS sxx
+        |  FROM events GROUP BY event_type),
+        |pr AS (
+        |  SELECT g, rr,
+        |    CAST((CAST(ROUND(rr * 1000000) AS BIGINT) + 5) // 10 AS DOUBLE)
+        |      / 1000000.0 AS qq
+        |  FROM (SELECT g,
+        |    ROUND(greatest(1e-6, CAST(sxx AS DOUBLE) / n
+        |      - (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n)), 6) AS rr
+        |  FROM st)),
+        |rec AS (
+        |  SELECT p.g, p.i, p.ts_us, p.event_id, p.z,
+        |    ROUND(p.z, 6) AS x, ROUND(r.rr, 6) AS pv,
+        |    CAST(1.0 AS DOUBLE) AS kg
+        |  FROM pts p JOIN pr r USING (g) WHERE p.i = 1
+        |  UNION ALL
+        |  SELECT p.g, p.i, p.ts_us, p.event_id, p.z,
+        |    ROUND(q.x + ROUND(
+        |      ROUND(ROUND(q.pv + r.qq, 6) / (ROUND(q.pv + r.qq, 6) + r.rr), 6)
+        |      * ROUND(p.z - q.x, 6), 6), 6),
+        |    ROUND((1.0 -
+        |      ROUND(ROUND(q.pv + r.qq, 6) / (ROUND(q.pv + r.qq, 6) + r.rr), 6))
+        |      * ROUND(q.pv + r.qq, 6), 6),
+        |    ROUND(ROUND(q.pv + r.qq, 6) / (ROUND(q.pv + r.qq, 6) + r.rr), 6)
+        |  FROM rec q
+        |  JOIN pts p ON p.g = q.g AND p.i = q.i + 1
+        |  JOIN pr r ON r.g = p.g)
+        |SELECT g AS event_type, ts_us, event_id, z AS value,
+        |  x AS x_hat, pv AS p_var, kg AS k_gain
+        |FROM rec ORDER BY event_type, ts_us, event_id""".stripMargin),
 
     // M4 visual downsampling (Jugel et al., VLDB 2014) — the OTHER chart
     // downsampler: where LTTB (ts24) picks perceptually-salient points via
@@ -1286,7 +2108,7 @@ object TimeSeries {
     // series' [min, max] span computed in ALL-INTEGER µs arithmetic
     // ((ts−t0)·w div span — exact, no FP boundary drift); first/last are
     // min_by/max_by on the (ts, event_id) total order.
-    "ts31_m4_downsample" -> ((s, dir) => {
+    QuerySpec("ts31_m4_downsample", (s, dir) => {
       val w = 100
       val base = ev(s, dir).select(col("event_type"),
         unix_micros(col("ts")).as("ts_us"), col("event_id"), col("value"))
@@ -1308,7 +2130,28 @@ object TimeSeries {
           max(col("ts_us")).as("t_last"),
           count(lit(1)).as("n"))
         .orderBy(col("event_type"), col("bucket"))
-    }),
+    },
+      // same all-integer bucket arithmetic; first/last by (ts, event_id)
+      """WITH pts AS (
+        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value
+        |  FROM events),
+        |sp AS (
+        |  SELECT event_type, MIN(ts_us) AS t0, MAX(ts_us) AS t1
+        |  FROM pts GROUP BY event_type),
+        |b AS (
+        |  SELECT p.event_type, p.ts_us, p.event_id, p.value,
+        |    least(99, (p.ts_us - s.t0) * 100 // (s.t1 - s.t0 + 1)) AS bucket
+        |  FROM pts p JOIN sp s USING (event_type))
+        |SELECT event_type, bucket,
+        |  MIN(value) AS v_min,
+        |  MAX(value) AS v_max,
+        |  first(value ORDER BY ts_us, event_id) AS v_first,
+        |  last(value ORDER BY ts_us, event_id) AS v_last,
+        |  MIN(ts_us) AS t_first,
+        |  MAX(ts_us) AS t_last,
+        |  COUNT(*) AS n
+        |FROM b GROUP BY event_type, bucket
+        |ORDER BY event_type, bucket""".stripMargin),
 
     // ALERT RULES with a FOR-duration (the Grafana/Prometheus alerting
     // contract the reference's dashboards imply): "alert when value > 50
@@ -1320,7 +2163,7 @@ object TimeSeries {
     // → island group; per-island position picks the firing point — a
     // single shuffle, no sequential kernel needed because the rule is a
     // pure function of the run, not a recursion.
-    "ts32_alert_rules" -> ((s, dir) => {
+    QuerySpec("ts32_alert_rules", (s, dir) => {
       val wAll = Window.partitionBy(col("event_type"))
         .orderBy(col("ts_us"), col("event_id"))
       // islands of CONSECUTIVE above-threshold points need global
@@ -1343,7 +2186,29 @@ object TimeSeries {
         .select(col("event_type"), col("fire_us"), col("clear_us"),
           col("n_points"), col("peak"))
         .orderBy(col("event_type"), col("fire_us"))
-    }),
+    },
+      // same islands: global rank minus survivor rank; fire at pos 3
+      """WITH pts AS (
+        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY ts, event_id) AS rn
+        |  FROM events),
+        |c AS (
+        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
+        |    ORDER BY ts_us, event_id) AS rs
+        |  FROM pts WHERE value > 50),
+        |i AS (
+        |  SELECT *, rn - rs AS grp,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type, rn - rs
+        |      ORDER BY ts_us, event_id) AS pos
+        |  FROM c)
+        |SELECT event_type,
+        |  MIN(CASE WHEN pos = 3 THEN ts_us END) AS fire_us,
+        |  MAX(ts_us) AS clear_us,
+        |  COUNT(*) AS n_points,
+        |  MAX(value) AS peak
+        |FROM i GROUP BY event_type, grp HAVING COUNT(*) >= 3
+        |ORDER BY event_type, fire_us""".stripMargin),
 
     // CLASSICAL additive decomposition x = trend + seasonal + resid over
     // the hourly series (period 24): trend is the textbook 2×24 CENTERED
@@ -1364,11 +2229,15 @@ object TimeSeries {
     // DuckDB `//` floors — they agree only for non-negatives).
     // Differences of micro-grid values are micro-grid, so the remaining
     // round() calls sit maximally far from any boundary.
-    "ts33_decompose" -> ((s, dir) =>
+    QuerySpec("ts33_decompose", (s, dir) =>
       decomposeHourly(s, dir)
         .select(col("g").as("event_type"), col("h_us"), col("x"),
           col("trend"), col("sidx"), col("resid"))
-        .orderBy(col("event_type"), col("h_us"))),
+        .orderBy(col("event_type"), col("h_us")),
+      // the same 2×24 centered MA + hour-of-day seasonal replay
+      s"""WITH $decomposeSql
+         |SELECT g AS event_type, h_us, x, trend, sidx, resid
+         |FROM dc ORDER BY event_type, h_us""".stripMargin),
 
     // SEASONAL / TREND STRENGTH (Hyndman & Athanasopoulos FPP3 §4.4's
     // STL-feature measures): F_s = max(0, 1 − Var(resid)/Var(sidx+resid))
@@ -1379,7 +2248,7 @@ object TimeSeries {
     // the 6-dp grid, squares on the 12-dp grid — DECIMAL(38,12) is
     // lossless) with the single final division/subtraction tree in IEEE,
     // rounded once.
-    "ts36_seasonal_strength" -> ((s, dir) => {
+    QuerySpec("ts36_seasonal_strength", (s, dir) => {
       def varCols(c: String) = Seq(
         sum(col(c).cast("decimal(18,6)")).as(s"s_$c"),
         sum((col(c).cast("decimal(18,6)") * col(c).cast("decimal(18,6)"))
@@ -1402,7 +2271,38 @@ object TimeSeries {
           round(greatest(lit(0.0), lit(1.0) - col("var_resid") / col("var_tr")), 6)
             .as("trend_strength"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // Hyndman's strength measures over the same components: variances
+      // from exact decimal power sums, one IEEE tree each, rounded once
+      s"""WITH $decomposeSql,
+         |c AS (SELECT g, resid, ROUND(sidx + resid, 6) AS sr,
+         |             ROUND(trend + resid, 6) AS tr2 FROM dc),
+         |a AS (
+         |  SELECT g, COUNT(*) AS n,
+         |    SUM(CAST(resid AS DECIMAL(18,6))) AS s_resid,
+         |    SUM(CAST(CAST(resid AS DECIMAL(19,6)) * CAST(resid AS DECIMAL(19,6))
+         |        AS DECIMAL(38,12))) AS q_resid,
+         |    SUM(CAST(sr AS DECIMAL(18,6))) AS s_sr,
+         |    SUM(CAST(CAST(sr AS DECIMAL(19,6)) * CAST(sr AS DECIMAL(19,6))
+         |        AS DECIMAL(38,12))) AS q_sr,
+         |    SUM(CAST(tr2 AS DECIMAL(18,6))) AS s_tr2,
+         |    SUM(CAST(CAST(tr2 AS DECIMAL(19,6)) * CAST(tr2 AS DECIMAL(19,6))
+         |        AS DECIMAL(38,12))) AS q_tr2
+         |  FROM c GROUP BY g)
+         |SELECT g AS event_type, n,
+         |  ROUND(GREATEST(0.0, 1.0 -
+         |    (CAST(q_resid AS DOUBLE) / n
+         |      - (CAST(s_resid AS DOUBLE) / n) * (CAST(s_resid AS DOUBLE) / n))
+         |    / (CAST(q_sr AS DOUBLE) / n
+         |      - (CAST(s_sr AS DOUBLE) / n) * (CAST(s_sr AS DOUBLE) / n))), 6)
+         |    AS seasonal_strength,
+         |  ROUND(GREATEST(0.0, 1.0 -
+         |    (CAST(q_resid AS DOUBLE) / n
+         |      - (CAST(s_resid AS DOUBLE) / n) * (CAST(s_resid AS DOUBLE) / n))
+         |    / (CAST(q_tr2 AS DOUBLE) / n
+         |      - (CAST(s_tr2 AS DOUBLE) / n) * (CAST(s_tr2 AS DOUBLE) / n))), 6)
+         |    AS trend_strength
+         |FROM a ORDER BY event_type""".stripMargin),
 
     // FORECAST BACKTEST — the evaluation half every forecaster (ts22/ts23)
     // needs: per series, the mean absolute error of the PERSISTENCE
@@ -1415,7 +2315,7 @@ object TimeSeries {
     // both MAEs are integer-micro half-up quotients (positive, so no
     // div/floor offset needed); the ratio is one IEEE division of two
     // exact integers, NULL when the naive error is zero.
-    "ts34_forecast_backtest" -> ((s, dir) => {
+    QuerySpec("ts34_forecast_backtest", (s, dir) => {
       val w = Window.partitionBy(col("g")).orderBy(col("day"))
       val daily = ev(s, dir)
         .groupBy(col("event_type").as("g"), to_date(col("ts")).as("day"))
@@ -1441,7 +2341,37 @@ object TimeSeries {
           expr("cast(pm as double) / cast(nullif(sm, 0L) as double)")
             .as("mase_ratio"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // the same lag-1/lag-7 error arithmetic in integer micro-units
+      """WITH d0 AS (
+        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
+        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
+        |  FROM events GROUP BY g, day),
+        |d AS (
+        |  SELECT g, day, x,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY day) AS BIGINT) AS i,
+        |    lag(x, 1) OVER (PARTITION BY g ORDER BY day) AS lag1,
+        |    lag(x, 7) OVER (PARTITION BY g ORDER BY day) AS lag7
+        |  FROM d0),
+        |er AS (
+        |  SELECT g, abs(x - lag1) AS ep, abs(x - lag7) AS es
+        |  FROM d WHERE i > 7),
+        |ag AS (
+        |  SELECT g, COUNT(*) AS n_eval,
+        |    CAST(SUM(CAST(ep AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS spm,
+        |    CAST(SUM(CAST(es AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS ssm
+        |  FROM er GROUP BY g),
+        |mm AS (
+        |  SELECT g, n_eval,
+        |    (2 * spm + n_eval) // (2 * n_eval) AS pm,
+        |    (2 * ssm + n_eval) // (2 * n_eval) AS sm
+        |  FROM ag)
+        |SELECT g AS event_type, n_eval,
+        |  CAST(pm AS DOUBLE) / 1000000.0 AS mae_persist,
+        |  CAST(sm AS DOUBLE) / 1000000.0 AS mae_snaive,
+        |  CAST(pm AS DOUBLE) / CAST(nullif(sm, 0) AS DOUBLE) AS mase_ratio
+        |FROM mm ORDER BY event_type""".stripMargin),
 
     // THEIL–SEN robust trend (Sen 1968): slope = the LOWER MEDIAN of all
     // pairwise slopes (xⱼ−xᵢ)/(j−i) per series — the outlier-resistant
@@ -1455,7 +2385,7 @@ object TimeSeries {
     // is a bounded downsampled series (here: ~30 daily points → ~435
     // pairs per series, one broadcast self-join); unbounded series want
     // the windowed repeated-median variant, same kernel.
-    "ts35_theilsen_trend" -> ((s, dir) => {
+    QuerySpec("ts35_theilsen_trend", (s, dir) => {
       val daily = ev(s, dir)
         .groupBy(col("event_type").as("g"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("nd"), sum(sumExactCol(col("value"))).as("sd"))
@@ -1484,7 +2414,40 @@ object TimeSeries {
         .select(col("g").as("event_type"), col("n").as("n_days"),
           col("n_pairs"), col("ts_slope"), col("resid").as("ts_intercept"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // pairwise slopes + lower-median selection replayed rank-for-rank
+      """WITH d0 AS (
+        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
+        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
+        |  FROM events GROUP BY g, day),
+        |d AS (
+        |  SELECT g, x,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY day) AS BIGINT) AS i
+        |  FROM d0),
+        |p AS (
+        |  SELECT a.g, (b.x - a.x) / CAST(b.i - a.i AS DOUBLE) AS slope
+        |  FROM d a JOIN d b ON a.g = b.g AND a.i < b.i),
+        |ms AS (
+        |  SELECT g, m AS n_pairs, slope AS ts_slope FROM (
+        |    SELECT g, slope,
+        |      CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY slope) AS BIGINT)
+        |        AS rn,
+        |      CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS m
+        |    FROM p) WHERE rn = (m + 1) // 2),
+        |r AS (
+        |  SELECT d.g, ms.n_pairs, ms.ts_slope,
+        |    d.x - ms.ts_slope * CAST(d.i AS DOUBLE) AS resid
+        |  FROM d JOIN ms ON ms.g = d.g)
+        |SELECT g AS event_type, n AS n_days, n_pairs, ts_slope,
+        |  resid AS ts_intercept
+        |FROM (
+        |  SELECT g, n_pairs, ts_slope, resid,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY resid) AS BIGINT)
+        |      AS rn,
+        |    CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n
+        |  FROM r) WHERE rn = (n + 1) // 2
+        |ORDER BY event_type""".stripMargin),
 
     // SEASONAL-ROBUST ANOMALY DETECTION (the S-H-ESD idea, Hochenbaum/
     // Vallis/Kejariwal 2017, in its median/MAD form): ts25 z-scores the
@@ -1501,7 +2464,7 @@ object TimeSeries {
     // exchange) and the med/MAD frames join back broadcast (|series|
     // rows). Per-series medians at 100 TB hourly grain are |hours| rows
     // per key — bounded by retention, not event volume.
-    "ts37_seasonal_anomaly" -> ((s, dir) => {
+    QuerySpec("ts37_seasonal_anomaly", (s, dir) => {
       val base = decomposeHourly(s, dir)
         .select(col("g"), col("h_us"), col("x"), col("resid"))
       val wg = Window.partitionBy(col("g"))
@@ -1525,7 +2488,30 @@ object TimeSeries {
         .select(col("g").as("event_type"), col("h_us"), col("x"),
           col("resid"), col("rscore"), (col("rscore") > 3.0).as("is_anomaly"))
         .orderBy(col("event_type"), col("h_us"))
-    }),
+    },
+      // same components; lower-median med/MAD by rank, one IEEE score tree
+      s"""WITH $decomposeSql,
+         |base AS (SELECT g, h_us, x, resid FROM dc),
+         |rmed AS (
+         |  SELECT g, resid AS med FROM (
+         |    SELECT g, resid,
+         |      ROW_NUMBER() OVER (PARTITION BY g ORDER BY resid) AS rn,
+         |      COUNT(*) OVER (PARTITION BY g) AS m
+         |    FROM base) WHERE rn = (m + 1) // 2),
+         |dev AS (
+         |  SELECT b.g, b.h_us, b.x, b.resid, abs(b.resid - r.med) AS adev
+         |  FROM base b JOIN rmed r USING (g)),
+         |mmad AS (
+         |  SELECT g, adev AS mad FROM (
+         |    SELECT g, adev,
+         |      ROW_NUMBER() OVER (PARTITION BY g ORDER BY adev) AS rn,
+         |      COUNT(*) OVER (PARTITION BY g) AS m
+         |    FROM dev) WHERE rn = (m + 1) // 2)
+         |SELECT d.g AS event_type, d.h_us, d.x, d.resid,
+         |  d.adev / (1.4826 * greatest(mm.mad, 1e-9)) AS rscore,
+         |  (d.adev / (1.4826 * greatest(mm.mad, 1e-9))) > 3.0 AS is_anomaly
+         |FROM dev d JOIN mmad mm USING (g)
+         |ORDER BY event_type, h_us""".stripMargin),
 
     // DAILY QUANTILE BANDS (p10/p50/p90) — the Grafana percentile-band
     // panel (and the latency-SLO shape: "p90 by day"): per (series, day)
@@ -1538,7 +2524,7 @@ object TimeSeries {
     // rank + one hash aggregate on the SAME (series, day) partitioning —
     // a single shuffle; the conditional max-when selection is partial-
     // aggregatable map-side.
-    "ts39_quantile_bands" -> ((s, dir) => {
+    QuerySpec("ts39_quantile_bands", (s, dir) => {
       val base = ev(s, dir).select(col("event_type").as("g"),
         to_date(col("ts")).as("day"), col("value"), col("event_id"))
       val w = Window.partitionBy(col("g"), col("day"))
@@ -1559,7 +2545,21 @@ object TimeSeries {
           date_format(col("day"), "yyyy-MM-dd").as("day"),
           col("n_points"), col("p10"), col("p50"), col("p90"))
         .orderBy(col("event_type"), col("day"))
-    }),
+    },
+      // rank-selected lower quantiles, integer index arithmetic
+      """WITH r AS (
+        |  SELECT event_type AS g, CAST(ts AS DATE) AS day, value,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type, CAST(ts AS DATE)
+        |      ORDER BY value, event_id) AS rn,
+        |    COUNT(*) OVER (PARTITION BY event_type, CAST(ts AS DATE)) AS n
+        |  FROM events)
+        |SELECT g AS event_type, strftime(day, '%Y-%m-%d') AS day,
+        |  MAX(n) AS n_points,
+        |  MAX(CASE WHEN rn = (n + 9) // 10 THEN value END) AS p10,
+        |  MAX(CASE WHEN rn = (n + 1) // 2 THEN value END) AS p50,
+        |  MAX(CASE WHEN rn = (9 * n + 9) // 10 THEN value END) AS p90
+        |FROM r GROUP BY g, day
+        |ORDER BY event_type, day""".stripMargin),
 
     // SAX MOTIF DISCOVERY (Lin et al.'s Symbolic Aggregate approXimation,
     // the classic TS pattern-mining front end): PAA = hourly mean →
@@ -1575,7 +2575,7 @@ object TimeSeries {
     // partitions by event_type over that tiny frame, and the motif rank
     // is a second window over ≤ 64 words per type. Gap hours break words
     // (lead-hr continuity check) instead of silently bridging silence.
-    "ts49_sax_motifs" -> ((s, dir) => {
+    QuerySpec("ts49_sax_motifs", (s, dir) => {
       val hourly = ev(s, dir)
         .groupBy(col("event_type"),
           expr("unix_micros(ts) div 3600000000").as("hr"))
@@ -1603,7 +2603,38 @@ object TimeSeries {
         .filter(col("rnk") <= 3)
         .select(col("event_type"), col("word"), col("n"), col("rnk"))
         .orderBy(col("event_type"), col("rnk"))
-    }),
+    },
+      // SAX: halfUpMean6 hourly means, fixed power-of-two breakpoints
+      // (floor(v/16) is exact IEEE), lead-hr continuity gates gap hours;
+      // COUNT is BIGINT on both engines (no sum to pin)
+      """WITH hourly AS (
+        |  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
+        |    COUNT(*) AS n,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
+        |      AS s_us
+        |  FROM events GROUP BY 1, 2),
+        |sym AS (
+        |  SELECT event_type, hr,
+        |    substr('abcd', CAST(GREATEST(LEAST(FLOOR(
+        |      (CAST((2 * s_us + n) // (2 * n) AS DOUBLE) / 1000000.0)
+        |        / 16.0), 3.0), 0.0) AS INT) + 1, 1) AS s
+        |  FROM hourly),
+        |wd AS (
+        |  SELECT event_type, hr, s,
+        |    LEAD(s, 1) OVER w AS s2, LEAD(hr, 1) OVER w AS h2,
+        |    LEAD(s, 2) OVER w AS s3, LEAD(hr, 2) OVER w AS h3
+        |  FROM sym WINDOW w AS (PARTITION BY event_type ORDER BY hr)),
+        |c AS (
+        |  SELECT event_type, s || s2 || s3 AS word, COUNT(*) AS n
+        |  FROM wd WHERE h2 = hr + 1 AND h3 = hr + 2
+        |  GROUP BY 1, 2),
+        |r AS (
+        |  SELECT event_type, word, n,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY n DESC, word) AS BIGINT) AS rnk
+        |  FROM c)
+        |SELECT event_type, word, n, rnk FROM r WHERE rnk <= 3
+        |ORDER BY event_type, rnk""".stripMargin),
 
     // INTERVAL UNION / DAILY COVERAGE (the sweep-line op plain SQL is
     // famously bad at): from ts47's per-user sessions, how many µs of
@@ -1623,7 +2654,7 @@ object TimeSeries {
     // over the calendar; within one day the window is bounded by that
     // day's session count (sub-day clipping with boundary stitching is
     // the refinement if a single day's sessions outgrow a partition).
-    "ts50_interval_coverage" -> ((s, dir) => {
+    QuerySpec("ts50_interval_coverage", (s, dir) => {
       val dayUs = 86400000000L
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("us"), col("event_id"))
@@ -1674,7 +2705,57 @@ object TimeSeries {
         .select(col("day"), col("n_sessions"), col("covered_us"),
           col("max_conc"), col("coverage"))
         .orderBy(col("day"))
-    }),
+    },
+      // sweep-line replay: ts47's session CTE, day-clipped segments via a
+      // correlated generate_series, ±1 deltas, running-sum concurrency.
+      // Window SUMs (sid, cum) and the CASE sums are HUGEINT in DuckDB —
+      // every surviving projection pins BIGINT per the typed-sum rule;
+      // positive integer // is floor on both engines.
+      """WITH e AS (
+        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
+        |f AS (
+        |  SELECT *, CASE WHEN LAG(us) OVER w IS NULL
+        |      OR us - LAG(us) OVER w > 1800000000
+        |    THEN 1 ELSE 0 END AS brk
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
+        |g AS (
+        |  SELECT *, SUM(brk) OVER (PARTITION BY user_id
+        |    ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
+        |  FROM f),
+        |sess AS (
+        |  SELECT user_id, MIN(us) AS start_us, MAX(us) AS end_us
+        |  FROM g GROUP BY user_id, sid),
+        |segd AS (
+        |  SELECT user_id, start_us, end_us,
+        |    unnest(range(start_us // 86400000000,
+        |                 end_us // 86400000000 + 1)) AS day
+        |  FROM sess),
+        |seg AS (
+        |  SELECT user_id, day,
+        |    GREATEST(start_us, day * 86400000000) AS s,
+        |    LEAST(end_us, (day + 1) * 86400000000) AS e
+        |  FROM segd),
+        |sweep AS (
+        |  SELECT day, s AS us, 1 AS delta, user_id FROM seg
+        |  UNION ALL
+        |  SELECT day, e, -1, user_id FROM seg),
+        |w2 AS (
+        |  SELECT day, us, delta,
+        |    SUM(delta) OVER (PARTITION BY day
+        |      ORDER BY us, delta DESC, user_id
+        |      ROWS UNBOUNDED PRECEDING) AS cum,
+        |    LEAD(us) OVER (PARTITION BY day
+        |      ORDER BY us, delta DESC, user_id) AS nxt
+        |  FROM sweep)
+        |SELECT day,
+        |  CAST(SUM(CASE WHEN delta = 1 THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_sessions,
+        |  CAST(SUM(CASE WHEN cum > 0 THEN COALESCE(nxt, us) - us
+        |    ELSE 0 END) AS BIGINT) AS covered_us,
+        |  CAST(MAX(cum) AS BIGINT) AS max_conc,
+        |  CAST(SUM(CASE WHEN cum > 0 THEN COALESCE(nxt, us) - us
+        |    ELSE 0 END) AS DOUBLE) / 86400000000.0 AS coverage
+        |FROM w2 GROUP BY day ORDER BY day""".stripMargin),
 
     // Offline changepoint detection by BINARY SEGMENTATION (depth 2) — the
     // classic recursive complement to ts26's ONLINE sequential CUSUM: find
@@ -1688,7 +2769,7 @@ object TimeSeries {
     // so the raw scan is one hash aggregate and every window below it is
     // per-series over ≤ |hours| rows; the frame feeds both recursion
     // levels, so it is checkpointed once (the ts42 multi-consumer rule).
-    "ts51_changepoint_binseg" -> ((s, dir) => {
+    QuerySpec("ts51_changepoint_binseg", (s, dir) => {
       val hourly = ev(s, dir)
         .withColumn("bucket", date_trunc("hour", col("ts")))
         .withColumn("xd", col("value").cast("decimal(18,6)"))
@@ -1740,7 +2821,63 @@ object TimeSeries {
           col("stat"), col("m").as("seg_len"))
       lvl1.unionByName(lvl2)
         .orderBy(col("event_type"), col("level"), col("seg"))
-    }),
+    },
+      // All-integer (centi-unit) binary segmentation; HUGEINT appears only in
+      // intermediate window sums, every FINAL projection pins BIGINT/INT.
+      """WITH hourly AS (
+        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 100 AS BIGINT) AS sc
+        |  FROM events GROUP BY 1, 2),
+        |pts AS (
+        |  SELECT event_type, bucket, sc,
+        |    CAST(ROW_NUMBER() OVER w AS BIGINT) AS i,
+        |    CAST(SUM(sc) OVER (PARTITION BY event_type ORDER BY bucket
+        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cs
+        |  FROM hourly WINDOW w AS (PARTITION BY event_type ORDER BY bucket)),
+        |tot AS (
+        |  SELECT event_type, COUNT(*) AS n, CAST(SUM(sc) AS BIGINT) AS sn
+        |  FROM hourly GROUP BY 1),
+        |l1r AS (
+        |  SELECT p.event_type, p.i, p.bucket,
+        |    ABS(t.n * p.cs - p.i * t.sn) AS stat, t.n,
+        |    ROW_NUMBER() OVER (PARTITION BY p.event_type
+        |      ORDER BY ABS(t.n * p.cs - p.i * t.sn) DESC, p.i) AS rk
+        |  FROM pts p JOIN tot t USING (event_type)
+        |  WHERE p.i < t.n),
+        |l1 AS (SELECT * FROM l1r WHERE rk = 1),
+        |lvl1 AS (
+        |  SELECT event_type, 1 AS level, 0 AS seg,
+        |    strftime(bucket, '%Y-%m-%d %H:%M:%S') AS split_bucket,
+        |    CAST(stat AS BIGINT) AS stat, CAST(n AS BIGINT) AS seg_len
+        |  FROM l1),
+        |segd AS (
+        |  SELECT p.event_type, p.bucket, p.sc,
+        |    CASE WHEN p.i <= l.i THEN 0 ELSE 1 END AS seg
+        |  FROM pts p JOIN l1 l USING (event_type)),
+        |pts2 AS (
+        |  SELECT event_type, seg, bucket, sc,
+        |    CAST(ROW_NUMBER() OVER w2 AS BIGINT) AS j,
+        |    CAST(SUM(sc) OVER (PARTITION BY event_type, seg ORDER BY bucket
+        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cs2
+        |  FROM segd
+        |  WINDOW w2 AS (PARTITION BY event_type, seg ORDER BY bucket)),
+        |tot2 AS (
+        |  SELECT event_type, seg, COUNT(*) AS m, CAST(SUM(sc) AS BIGINT) AS sm
+        |  FROM segd GROUP BY 1, 2),
+        |l2r AS (
+        |  SELECT p.event_type, p.seg, p.bucket,
+        |    ABS(t.m * p.cs2 - p.j * t.sm) AS stat, t.m,
+        |    ROW_NUMBER() OVER (PARTITION BY p.event_type, p.seg
+        |      ORDER BY ABS(t.m * p.cs2 - p.j * t.sm) DESC, p.j) AS rk
+        |  FROM pts2 p JOIN tot2 t USING (event_type, seg)
+        |  WHERE t.m >= 4 AND p.j < t.m),
+        |lvl2 AS (
+        |  SELECT event_type, 2 AS level, seg,
+        |    strftime(bucket, '%Y-%m-%d %H:%M:%S') AS split_bucket,
+        |    CAST(stat AS BIGINT) AS stat, CAST(m AS BIGINT) AS seg_len
+        |  FROM l2r WHERE rk = 1)
+        |SELECT * FROM lvl1 UNION ALL SELECT * FROM lvl2
+        |ORDER BY event_type, level, seg""".stripMargin),
 
     // ROLLING WINDOW CORRELATION between two series (click × view hourly
     // means, trailing 24 h) — the co-movement monitor ts14's whole-series
@@ -1752,7 +2889,7 @@ object TimeSeries {
     // runs over the hourly-COMPRESSED two-column frame (≤ |hours| rows —
     // the documented compressed-frame exception; per-(pair) partitioning
     // is the 100 TB sharding axis when many pairs are tracked).
-    "ts53_rolling_corr" -> ((s, dir) => {
+    QuerySpec("ts53_rolling_corr", (s, dir) => {
       val hourly = ev(s, dir)
         .filter(col("event_type").isin("click", "view"))
         .withColumn("bucket", date_trunc("hour", col("ts")))
@@ -1791,7 +2928,49 @@ object TimeSeries {
         .select(date_format(col("bucket"), "yyyy-MM-dd HH:mm:ss").as("bucket"),
           col("r"))
         .orderBy(col("bucket"))
-    }),
+    },
+      """WITH hourly AS (
+        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
+        |  FROM events WHERE event_type IN ('click', 'view')
+        |  GROUP BY 1, 2),
+        |hm AS (
+        |  SELECT event_type, bucket,
+        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
+        |      AS DOUBLE) / 1e6 AS hm
+        |  FROM hourly),
+        |xy AS (
+        |  SELECT a.bucket, a.hm AS x, b.hm AS y
+        |  FROM hm a JOIN hm b ON a.bucket = b.bucket
+        |  WHERE a.event_type = 'click' AND b.event_type = 'view'),
+        |p AS (
+        |  SELECT bucket, CAST(x AS DECIMAL(18,6)) AS xd,
+        |    CAST(y AS DECIMAL(18,6)) AS yd,
+        |    CAST(ROUND(x * y, 12) AS DECIMAL(28,12)) AS pxy,
+        |    CAST(ROUND(x * x, 12) AS DECIMAL(28,12)) AS pxx,
+        |    CAST(ROUND(y * y, 12) AS DECIMAL(28,12)) AS pyy
+        |  FROM xy),
+        |wnd AS (
+        |  SELECT bucket,
+        |    ROW_NUMBER() OVER wo AS rn,
+        |    SUM(xd) OVER w AS sx, SUM(yd) OVER w AS sy,
+        |    SUM(pxy) OVER w AS sxy, SUM(pxx) OVER w AS sxx,
+        |    SUM(pyy) OVER w AS syy
+        |  FROM p
+        |  WINDOW wo AS (ORDER BY bucket),
+        |    w AS (ORDER BY bucket ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)),
+        |rr AS (
+        |  SELECT bucket,
+        |    24 * CAST(sxy AS DOUBLE)
+        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS num,
+        |    sqrt((24 * CAST(sxx AS DOUBLE)
+        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+        |      * (24 * CAST(syy AS DOUBLE)
+        |        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS den
+        |  FROM wnd WHERE rn >= 24)
+        |SELECT strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket,
+        |  CASE WHEN den > 0 THEN ROUND(num / den, 6) END AS r
+        |FROM rr ORDER BY bucket""".stripMargin),
 
     // Maximum drawdown per series — the classic peak-to-trough metric, on
     // the hourly CLOSE (last value in each hour, deterministic by
@@ -1802,7 +2981,7 @@ object TimeSeries {
     // window runs on the hourly-compressed frame (≤ |hours| rows per
     // series); the raw scan is a single filter + row_number per (type,
     // hour) partition, which at 100 TB rides the store's date partitioning.
-    "ts52_max_drawdown" -> ((s, dir) => {
+    QuerySpec("ts52_max_drawdown", (s, dir) => {
       val wLast = Window.partitionBy(col("event_type"), col("bucket"))
         .orderBy(col("ts").desc, col("event_id").desc)
       val close = ev(s, dir)
@@ -1825,7 +3004,33 @@ object TimeSeries {
           col("runmax").as("peak_value"), col("close").as("trough_value"),
           col("dd").as("max_dd"), col("n_underwater"))
         .orderBy(col("event_type"))
-    }),
+    },
+      """WITH cl AS (
+        |  SELECT event_type, bucket, cl FROM (
+        |    SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |      value AS cl,
+        |      ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
+        |        ORDER BY ts DESC, event_id DESC) AS rn
+        |    FROM events) WHERE rn = 1),
+        |dd AS (
+        |  SELECT event_type, bucket, cl,
+        |    MAX(cl) OVER (PARTITION BY event_type ORDER BY bucket
+        |      ROWS UNBOUNDED PRECEDING) AS runmax
+        |  FROM cl),
+        |d2 AS (
+        |  SELECT event_type, bucket, cl, runmax, runmax - cl AS ddv FROM dd),
+        |r AS (
+        |  SELECT event_type, bucket, cl, runmax, ddv,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY ddv DESC, bucket) AS rk,
+        |    SUM(CASE WHEN ddv > 0 THEN 1 ELSE 0 END)
+        |      OVER (PARTITION BY event_type) AS nu
+        |  FROM d2)
+        |SELECT event_type,
+        |  strftime(bucket, '%Y-%m-%d %H:%M:%S') AS trough_bucket,
+        |  runmax AS peak_value, cl AS trough_value, ddv AS max_dd,
+        |  CAST(nu AS BIGINT) AS n_underwater
+        |FROM r WHERE rk = 1 ORDER BY event_type""".stripMargin),
 
     // HURST R/S LADDER (Hurst 1951; Mandelbrot–Wallis rescaled range):
     // long-range-dependence diagnostic ts27's ACF can't give — mean R/S
@@ -1841,7 +3046,7 @@ object TimeSeries {
     // the hourly-COMPRESSED frame (≤ |hours| rows/series — documented
     // exception), every window partitioned by (series, n, block); at
     // 100 TB with many series the same plan shards on the series key.
-    "ts54_hurst_rs" -> ((s, dir) => {
+    QuerySpec("ts54_hurst_rs", (s, dir) => {
       val hourly = ev(s, dir)
         .withColumn("bucket", date_trunc("hour", col("ts")))
         .groupBy(col("event_type"), col("bucket"))
@@ -1888,7 +3093,63 @@ object TimeSeries {
         .select(col("event_type"), col("block_n"), col("n_blocks"),
           col("mean_rs"), col("max_rs"), col("growth_vs_half"))
         .orderBy(col("event_type"), col("block_n"))
-    }),
+    },
+      """WITH hourly AS (
+        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |hm AS (
+        |  SELECT event_type,
+        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
+        |      AS DOUBLE) / 1e6 AS x,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY bucket) AS i
+        |  FROM hourly),
+        |f AS (
+        |  SELECT event_type, CAST(i AS BIGINT) AS i,
+        |    CAST(x AS DECIMAL(14,6)) AS xd, bn,
+        |    (CAST(i AS BIGINT) - 1) // bn AS blk
+        |  FROM hm CROSS JOIN (VALUES (CAST(16 AS BIGINT)), (32), (64))
+        |    AS s(bn)),
+        |b0 AS (
+        |  SELECT *,
+        |    SUM(xd) OVER (PARTITION BY event_type, bn, blk) AS sum_x,
+        |    COUNT(*) OVER (PARTITION BY event_type, bn, blk) AS m
+        |  FROM f),
+        |b1 AS (
+        |  SELECT event_type, bn, blk, i,
+        |    CAST(CAST(bn AS DECIMAL(10,0)) * xd - sum_x AS DECIMAL(14,6))
+        |      AS y
+        |  FROM b0 WHERE m = bn),
+        |b2 AS (
+        |  SELECT event_type, bn, blk, y,
+        |    SUM(y) OVER (PARTITION BY event_type, bn, blk ORDER BY i
+        |      ROWS UNBOUNDED PRECEDING) AS cz
+        |  FROM b1),
+        |g AS (
+        |  SELECT event_type, bn, blk, MAX(cz) AS maxc, MIN(cz) AS minc,
+        |    SUM(CAST(CAST(y AS DECIMAL(20,6)) * y AS DECIMAL(30,12)))
+        |      AS ss
+        |  FROM b2 GROUP BY 1, 2, 3),
+        |rsb AS (
+        |  SELECT event_type, bn,
+        |    ROUND((CAST(maxc - minc AS DOUBLE) / CAST(bn AS DOUBLE))
+        |      / sqrt(CAST(ss AS DOUBLE) / CAST(bn * bn * bn AS DOUBLE)), 6)
+        |      AS rs
+        |  FROM g
+        |  WHERE sqrt(CAST(ss AS DOUBLE) / CAST(bn * bn * bn AS DOUBLE)) > 0),
+        |agg AS (
+        |  SELECT event_type, bn AS block_n, COUNT(*) AS n_blocks,
+        |    SUM(CAST(rs AS DECIMAL(18,6))) AS srs, MAX(rs) AS max_rs
+        |  FROM rsb GROUP BY 1, 2),
+        |m2 AS (
+        |  SELECT event_type, block_n, n_blocks,
+        |    CAST((2 * CAST(srs * 1000000 AS BIGINT) + n_blocks)
+        |      // (2 * n_blocks) AS DOUBLE) / 1e6 AS mean_rs, max_rs
+        |  FROM agg)
+        |SELECT event_type, block_n, n_blocks, mean_rs, max_rs,
+        |  ROUND(mean_rs / LAG(mean_rs, 1) OVER (PARTITION BY event_type
+        |    ORDER BY block_n), 6) AS growth_vs_half
+        |FROM m2 ORDER BY event_type, block_n""".stripMargin),
 
     // VARIANCE-RATIO TEST (Lo–MacKinlay 1988, uncorrected population
     // form): VR(k) = Var(x_t − x_{t−k}) / (k · Var(x_t − x_{t−1})) over
@@ -1902,7 +3163,7 @@ object TimeSeries {
     // k-returns, no bias correction (documented). Scale: two hash
     // aggregates over the hourly-compressed frame joined on the series
     // key; windows partitioned per series throughout.
-    "ts55_variance_ratio" -> ((s, dir) => {
+    QuerySpec("ts55_variance_ratio", (s, dir) => {
       val w = Window.partitionBy(col("event_type")).orderBy(col("i"))
       val hourly = ev(s, dir)
         .withColumn("bucket", date_trunc("hour", col("ts")))
@@ -1962,7 +3223,57 @@ object TimeSeries {
             " (cast(k * nk * nk as double) * v1), 6)"))
         .select(col("event_type"), col("k"), col("nk"), col("vr"))
         .orderBy(col("event_type"), col("k"))
-    }),
+    },
+      """WITH hourly AS (
+        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
+        |  FROM events GROUP BY 1, 2),
+        |hm AS (
+        |  SELECT event_type,
+        |    CAST(CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
+        |      AS DOUBLE) / 1e6 AS DECIMAL(14,6)) AS xd,
+        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY bucket)
+        |      AS BIGINT) AS i
+        |  FROM hourly),
+        |base AS (
+        |  SELECT event_type, COUNT(*) AS n1,
+        |    CAST(SUM(r1) AS DECIMAL(14,6)) AS s1,
+        |    SUM(CAST(CAST(r1 AS DECIMAL(20,6)) * r1 AS DECIMAL(30,12)))
+        |      AS qq1
+        |  FROM (
+        |    SELECT event_type,
+        |      CAST(xd - LAG(xd, 1) OVER (PARTITION BY event_type ORDER BY i)
+        |        AS DECIMAL(14,6)) AS r1
+        |    FROM hm)
+        |  WHERE r1 IS NOT NULL GROUP BY event_type),
+        |bv AS (
+        |  SELECT event_type, n1,
+        |    CAST(n1 AS DOUBLE) * CAST(qq1 AS DOUBLE)
+        |      - CAST(CAST(s1 AS DECIMAL(20,6)) * s1 AS DOUBLE) AS v1
+        |  FROM base),
+        |rk AS (
+        |  SELECT a.event_type, s.k,
+        |    CAST(a.xd - b.xd AS DECIMAL(14,6)) AS rkv
+        |  FROM hm a
+        |  CROSS JOIN (VALUES (CAST(2 AS BIGINT)), (4), (8)) AS s(k)
+        |  JOIN hm b ON b.event_type = a.event_type AND b.i = a.i - s.k),
+        |ka AS (
+        |  SELECT event_type, k, COUNT(*) AS nk,
+        |    CAST(SUM(rkv) AS DECIMAL(14,6)) AS sk,
+        |    SUM(CAST(CAST(rkv AS DECIMAL(20,6)) * rkv AS DECIMAL(30,12)))
+        |      AS qqk
+        |  FROM rk GROUP BY 1, 2),
+        |kv AS (
+        |  SELECT event_type, k, nk,
+        |    CAST(nk AS DOUBLE) * CAST(qqk AS DOUBLE)
+        |      - CAST(CAST(sk AS DECIMAL(20,6)) * sk AS DOUBLE) AS vk
+        |  FROM ka)
+        |SELECT kv.event_type, kv.k, kv.nk,
+        |  ROUND((vk * CAST(n1 * n1 AS DOUBLE)) /
+        |    (CAST(k * nk * nk AS DOUBLE) * v1), 6) AS vr
+        |FROM kv JOIN bv ON bv.event_type = kv.event_type
+        |WHERE v1 > 0
+        |ORDER BY kv.event_type, kv.k""".stripMargin),
 
     // PAIR COINTEGRATION (Engle–Granger two-step, DF form without lag
     // terms): hedge ratio β = Cov(x,y)/Var(x) over the click/view hourly
@@ -1977,7 +3288,7 @@ object TimeSeries {
     // exact operands. Scale: everything after the hourly rollup runs on
     // the ≤|hours| two-column frame; with many pairs the same plan
     // shards on the pair key.
-    "ts56_pair_cointegration" -> ((s, dir) => {
+    QuerySpec("ts56_pair_cointegration", (s, dir) => {
       val hourly = ev(s, dir)
         .filter(col("event_type").isin("click", "view"))
         .withColumn("bucket", date_trunc("hour", col("ts")))
@@ -2028,7 +3339,67 @@ object TimeSeries {
           round(lit(1.0) + col("gamma"), 6).as("rho"),
           round(sqrt(expr("cast(se2 as double)")
             / col("n_diff").cast("double")), 6).as("resid_sd"))
-    }),
+    },
+      """WITH hourly AS (
+        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
+        |  FROM events WHERE event_type IN ('click', 'view')
+        |  GROUP BY 1, 2),
+        |hm AS (
+        |  SELECT event_type, bucket,
+        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
+        |      AS DOUBLE) / 1e6 AS hm
+        |  FROM hourly),
+        |xy AS (
+        |  SELECT a.bucket, a.hm AS x, b.hm AS y
+        |  FROM hm a JOIN hm b ON a.bucket = b.bucket
+        |  WHERE a.event_type = 'click' AND b.event_type = 'view'),
+        |p2 AS (
+        |  SELECT bucket, x, y,
+        |    CAST(x AS DECIMAL(14,6)) AS xd, CAST(y AS DECIMAL(14,6)) AS yd,
+        |    CAST(CAST(CAST(x AS DECIMAL(14,6)) AS DECIMAL(20,6))
+        |      * CAST(x AS DECIMAL(14,6)) AS DECIMAL(30,12)) AS pxx,
+        |    CAST(CAST(CAST(x AS DECIMAL(14,6)) AS DECIMAL(20,6))
+        |      * CAST(y AS DECIMAL(14,6)) AS DECIMAL(30,12)) AS pxy
+        |  FROM xy),
+        |mom AS (
+        |  SELECT COUNT(*) AS n, CAST(SUM(xd) AS DECIMAL(14,6)) AS sx,
+        |    CAST(SUM(yd) AS DECIMAL(14,6)) AS sy,
+        |    SUM(pxx) AS sxx, SUM(pxy) AS sxy
+        |  FROM p2),
+        |b AS (
+        |  SELECT n,
+        |    (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
+        |    (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS beta
+        |  FROM mom),
+        |e AS (
+        |  SELECT CAST(ROUND(y - beta * x, 6) AS DECIMAL(14,6)) AS e6,
+        |    ROW_NUMBER() OVER (ORDER BY p2.bucket) AS i, n, beta
+        |  FROM p2, b),
+        |d AS (
+        |  SELECT i, n, beta, e6, LAG(e6, 1) OVER (ORDER BY i) AS ep
+        |  FROM e),
+        |d2 AS (
+        |  SELECT n, beta, e6, ep, CAST(e6 - ep AS DECIMAL(14,6)) AS de
+        |  FROM d WHERE ep IS NOT NULL),
+        |g AS (
+        |  SELECT n, beta, COUNT(*) AS n_diff,
+        |    SUM(CAST(CAST(ep AS DECIMAL(20,6)) * ep AS DECIMAL(30,12)))
+        |      AS see,
+        |    SUM(CAST(CAST(ep AS DECIMAL(20,6)) * de AS DECIMAL(30,12)))
+        |      AS sed,
+        |    SUM(CAST(CAST(e6 AS DECIMAL(20,6)) * e6 AS DECIMAL(30,12)))
+        |      AS se2
+        |  FROM d2 GROUP BY 1, 2)
+        |SELECT CAST(n AS BIGINT) AS n, CAST(n_diff AS BIGINT) AS n_diff,
+        |  ROUND(beta, 6) AS beta,
+        |  ROUND(CAST(sed AS DOUBLE) / CAST(see AS DOUBLE), 6) AS gamma,
+        |  ROUND(1.0 + CAST(sed AS DOUBLE) / CAST(see AS DOUBLE), 6) AS rho,
+        |  ROUND(sqrt(CAST(se2 AS DOUBLE) / CAST(n_diff AS DOUBLE)), 6)
+        |    AS resid_sd
+        |FROM g""".stripMargin),
 
     // OUT-OF-ORDER ARRIVAL diagnostic — the ingest-quality metric that
     // sizes a stream's WATERMARK: in arrival order (event_id), how often
@@ -2038,7 +3409,7 @@ object TimeSeries {
     // both engines agree) trends the disorder rate per type. One window
     // sort per type, then a plain aggregate — O(n log n) in each
     // partition, no pair blowup.
-    "ts59_out_of_order" -> ((s, dir) => {
+    QuerySpec("ts59_out_of_order", (s, dir) => {
       val w = Window.partitionBy(col("event_type")).orderBy(col("event_id"))
       ev(s, dir)
         .select(col("event_type"), col("event_id"),
@@ -2056,7 +3427,21 @@ object TimeSeries {
         .select(col("event_type"), col("n"), col("n_inversions"),
           col("max_backstep_us"), col("inv_ppm"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // same lag-in-arrival-order replay; `//` vs `div` agree (positive)
+      """WITH o AS (
+        |  SELECT event_type, epoch_us(ts) AS us,
+        |    LAG(epoch_us(ts), 1) OVER (PARTITION BY event_type
+        |      ORDER BY event_id) AS prev_us
+        |  FROM events)
+        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+        |  CAST(SUM(CASE WHEN us < prev_us THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_inversions,
+        |  CAST(COALESCE(MAX(CASE WHEN us < prev_us THEN prev_us - us END),
+        |    0) AS BIGINT) AS max_backstep_us,
+        |  CAST(SUM(CASE WHEN us < prev_us THEN 1 ELSE 0 END) * 1000000
+        |    // (COUNT(*) - 1) AS BIGINT) AS inv_ppm
+        |FROM o GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // GRANGER CAUSALITY (lag-1, both directions): does last hour's click
     // level improve the prediction of this hour's view level beyond
@@ -2071,7 +3456,7 @@ object TimeSeries {
     // data-dependent; the hour grid is not). Plan: one events scan to
     // the hourly frame, one tiny self-join, both directions ride the
     // SAME joined frame via a 2-struct explode, one final aggregate.
-    "ts58_granger_causality" -> ((s, dir) => {
+    QuerySpec("ts58_granger_causality", (s, dir) => {
       val hourly = ev(s, dir)
         .filter(col("event_type").isin("click", "view"))
         .withColumn("bucket", date_trunc("hour", col("ts")))
@@ -2140,7 +3525,90 @@ object TimeSeries {
           round(expr("1.0 - rssr / cyy"), 6).as("r2_r"),
           round(expr("1.0 - rssu / cyy"), 6).as("r2_u"))
         .orderBy(col("direction"))
-    }),
+    },
+      // identical moment pipeline; the two directions are the two SELECTs
+      // of a UNION ALL; every double expression is token-matched to the
+      // Spark tree (decimal multiplies carry the (20,6) widen — DuckDB
+      // multiplies DECIMAL(14,6) pairs in int64 and overflows without it)
+      """WITH hourly AS (
+        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
+        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
+        |  FROM events WHERE event_type IN ('click', 'view')
+        |  GROUP BY 1, 2),
+        |hm AS (
+        |  SELECT event_type, bucket,
+        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
+        |      AS DOUBLE) / 1e6 AS hm
+        |  FROM hourly),
+        |cur AS (
+        |  SELECT a.bucket, a.hm AS c, b.hm AS v
+        |  FROM hm a JOIN hm b ON a.bucket = b.bucket
+        |  WHERE a.event_type = 'click' AND b.event_type = 'view'),
+        |pairs AS (
+        |  SELECT t.bucket, t.c, t.v, p.c AS cp, p.v AS vp
+        |  FROM cur t JOIN cur p
+        |    ON p.bucket + INTERVAL 1 HOUR = t.bucket),
+        |dirs AS (
+        |  SELECT 'click->view' AS direction, v AS y, vp AS yl, cp AS xl
+        |  FROM pairs
+        |  UNION ALL
+        |  SELECT 'view->click', c, cp, vp FROM pairs),
+        |p2 AS (
+        |  SELECT direction,
+        |    CAST(y AS DECIMAL(14,6)) AS yd,
+        |    CAST(yl AS DECIMAL(14,6)) AS y1,
+        |    CAST(xl AS DECIMAL(14,6)) AS x1
+        |  FROM dirs),
+        |p3 AS (
+        |  SELECT direction, yd, y1, x1,
+        |    CAST(CAST(yd AS DECIMAL(20,6)) * yd AS DECIMAL(30,12)) AS pyy,
+        |    CAST(CAST(y1 AS DECIMAL(20,6)) * y1 AS DECIMAL(30,12)) AS p11,
+        |    CAST(CAST(x1 AS DECIMAL(20,6)) * x1 AS DECIMAL(30,12)) AS p22,
+        |    CAST(CAST(y1 AS DECIMAL(20,6)) * yd AS DECIMAL(30,12)) AS p1y,
+        |    CAST(CAST(x1 AS DECIMAL(20,6)) * yd AS DECIMAL(30,12)) AS p2y,
+        |    CAST(CAST(y1 AS DECIMAL(20,6)) * x1 AS DECIMAL(30,12)) AS p12
+        |  FROM p2),
+        |mom AS (
+        |  SELECT direction, COUNT(*) AS n,
+        |    CAST(SUM(yd) AS DECIMAL(14,6)) AS sy,
+        |    CAST(SUM(y1) AS DECIMAL(14,6)) AS s1,
+        |    CAST(SUM(x1) AS DECIMAL(14,6)) AS s2,
+        |    SUM(pyy) AS syy, SUM(p11) AS s11, SUM(p22) AS s22,
+        |    SUM(p1y) AS s1y, SUM(p2y) AS s2y, SUM(p12) AS s12
+        |  FROM p3 GROUP BY direction),
+        |cm AS (
+        |  SELECT direction, n,
+        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS cyy,
+        |    CAST(n AS DOUBLE) * CAST(s11 AS DOUBLE)
+        |      - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) AS c11,
+        |    CAST(n AS DOUBLE) * CAST(s22 AS DOUBLE)
+        |      - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) AS c22,
+        |    CAST(n AS DOUBLE) * CAST(s1y AS DOUBLE)
+        |      - CAST(s1 AS DOUBLE) * CAST(sy AS DOUBLE) AS c1y,
+        |    CAST(n AS DOUBLE) * CAST(s2y AS DOUBLE)
+        |      - CAST(s2 AS DOUBLE) * CAST(sy AS DOUBLE) AS c2y,
+        |    CAST(n AS DOUBLE) * CAST(s12 AS DOUBLE)
+        |      - CAST(s1 AS DOUBLE) * CAST(s2 AS DOUBLE) AS c12
+        |  FROM mom),
+        |sol AS (
+        |  SELECT direction, n, cyy, c11, c1y, c2y,
+        |    (c1y * c22 - c2y * c12) / (c11 * c22 - c12 * c12) AS b1,
+        |    (c2y * c11 - c1y * c12) / (c11 * c22 - c12 * c12) AS b2
+        |  FROM cm),
+        |rss AS (
+        |  SELECT direction, n, cyy, b1, b2,
+        |    cyy - b1 * c1y - b2 * c2y AS rssu,
+        |    cyy - c1y * c1y / c11 AS rssr
+        |  FROM sol)
+        |SELECT direction, CAST(n AS BIGINT) AS n,
+        |  ROUND(b1, 6) AS beta_ylag,
+        |  ROUND(b2, 6) AS beta_xlag,
+        |  ROUND((rssr - rssu) * (CAST(n AS DOUBLE) - 3.0) / rssu, 6)
+        |    AS f_stat,
+        |  ROUND(1.0 - rssr / cyy, 6) AS r2_r,
+        |  ROUND(1.0 - rssu / cyy, 6) AS r2_u
+        |FROM rss ORDER BY direction""".stripMargin),
 
     // ALLEN'S INTERVAL ALGEBRA: classify each day's 'error' activity
     // interval against its 'purchase' interval into one of the 13 Allen
@@ -2153,7 +3621,7 @@ object TimeSeries {
     // (conditional min/max to a |days|-row frame); the classification is
     // a map-side CASE over that tiny frame. Intervals are closed, in
     // exact epoch micros.
-    "ts57_allen_relations" -> ((s, dir) => {
+    QuerySpec("ts57_allen_relations", (s, dir) => {
       ev(s, dir)
         .filter(col("event_type").isin("error", "purchase"))
         .withColumn("day", to_date(col("ts")))
@@ -2182,7 +3650,34 @@ object TimeSeries {
         .select(col("day"), col("sa"), col("ea"), col("sb"), col("eb"),
           col("relation"))
         .orderBy(col("day"))
-    }),
+    },
+      // the identical CASE ladder — relation names agree string-for-string
+      """WITH iv AS (
+        |  SELECT CAST(ts AS DATE) AS day,
+        |    MIN(CASE WHEN event_type = 'error' THEN epoch_us(ts) END) AS sa,
+        |    MAX(CASE WHEN event_type = 'error' THEN epoch_us(ts) END) AS ea,
+        |    MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
+        |      AS sb,
+        |    MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
+        |      AS eb
+        |  FROM events WHERE event_type IN ('error', 'purchase')
+        |  GROUP BY 1)
+        |SELECT day, sa, ea, sb, eb,
+        |  CASE WHEN sa = sb AND ea = eb THEN 'equals'
+        |       WHEN ea < sb THEN 'before'
+        |       WHEN sa > eb THEN 'after'
+        |       WHEN ea = sb THEN 'meets'
+        |       WHEN eb = sa THEN 'met_by'
+        |       WHEN sa = sb AND ea < eb THEN 'starts'
+        |       WHEN sa = sb THEN 'started_by'
+        |       WHEN ea = eb AND sa > sb THEN 'finishes'
+        |       WHEN ea = eb THEN 'finished_by'
+        |       WHEN sa > sb AND ea < eb THEN 'during'
+        |       WHEN sa < sb AND ea > eb THEN 'contains'
+        |       WHEN sa < sb THEN 'overlaps'
+        |       ELSE 'overlapped_by' END AS relation
+        |FROM iv WHERE sa IS NOT NULL AND sb IS NOT NULL
+        |ORDER BY day""".stripMargin),
 
     // MANN–KENDALL TREND TEST (the nonparametric partner of ts35's
     // Theil–Sen slope): per event_type, S = Σ_{i<j} sign(x_j − x_i) over
@@ -2197,7 +3692,7 @@ object TimeSeries {
     // ONE fixed IEEE tree over those integers. Scale: the pair join runs
     // on the PRE-COMPRESSED hourly frame (|hours|² per series, ts35's
     // class — 720² here), never on raw events; many series shard on g.
-    "ts60_mann_kendall" -> ((s, dir) => {
+    QuerySpec("ts60_mann_kendall", (s, dir) => {
       val h = hourlyMicroMean(s, dir).localCheckpoint(true)
       val later = h.select(col("g"), col("bucket").as("bj"), col("m").as("mj"))
       val sStat = h.join(later, Seq("g"))
@@ -2224,7 +3719,39 @@ object TimeSeries {
             " (cast(n as double) * (cast(n as double) - 1.0) / 2.0)"), 6)
             .as("tau"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // integer micro-unit hourly means -> all-integer S / ties / variance
+      // polynomial; z and tau are the identical one-tree IEEE spellings
+      s"""WITH $hourlyMicroSql,
+        |pr AS (
+        |  SELECT a.g,
+        |    CASE WHEN b.m > a.m THEN 1 WHEN b.m < a.m THEN -1 ELSE 0 END
+        |      AS sgn
+        |  FROM hm a JOIN hm b ON a.g = b.g AND a.bucket < b.bucket),
+        |s AS (SELECT g, CAST(SUM(sgn) AS BIGINT) AS s_stat FROM pr
+        |      GROUP BY g),
+        |tie AS (
+        |  SELECT g,
+        |    CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
+        |  FROM (SELECT g, m, COUNT(*) AS t FROM hm GROUP BY g, m)
+        |  GROUP BY g),
+        |nn AS (SELECT g, COUNT(*) AS n FROM hm GROUP BY g),
+        |vv AS (
+        |  SELECT s.g, nn.n, s.s_stat, tie.tie_term,
+        |    CAST(nn.n * (nn.n - 1) * (2 * nn.n + 5) - tie.tie_term
+        |      AS BIGINT) AS var_num
+        |  FROM s JOIN tie ON s.g = tie.g JOIN nn ON s.g = nn.g)
+        |SELECT g AS event_type, n, s_stat, tie_term, var_num,
+        |  ROUND(CASE WHEN s_stat > 0 THEN
+        |      (CAST(s_stat AS DOUBLE) - 1.0)
+        |        / sqrt(CAST(var_num AS DOUBLE) / 18.0)
+        |    WHEN s_stat < 0 THEN
+        |      (CAST(s_stat AS DOUBLE) + 1.0)
+        |        / sqrt(CAST(var_num AS DOUBLE) / 18.0)
+        |    ELSE 0.0 END, 6) AS z,
+        |  ROUND(CAST(s_stat AS DOUBLE) /
+        |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) / 2.0), 6) AS tau
+        |FROM vv ORDER BY event_type""".stripMargin),
 
     // WILDER RSI, SMA-14 form (the momentum oscillator, on the simple
     // 14-bucket moving averages rather than the recursive smoothing — the
@@ -2238,7 +3765,7 @@ object TimeSeries {
     // OBSERVED buckets (documented: gaps collapse, no fill) — the grid
     // join stays out of the hot path. One scan, one shuffle to the hourly
     // frame, one window sort per series.
-    "ts61_rsi" -> ((s, dir) => {
+    QuerySpec("ts61_rsi", (s, dir) => {
       val w = Window.partitionBy(col("g")).orderBy(col("bucket"))
       val d = hourlyMicroMean(s, dir)
         .withColumn("delta", col("m") - lag(col("m"), 1).over(w))
@@ -2256,7 +3783,31 @@ object TimeSeries {
             " else cast((g14 * 100000000) div (g14 + l14) as double) / 1e6" +
             " end").as("rsi"))
         .orderBy(col("event_type"), col("bucket"))
-    }),
+    },
+      // integer gains/losses, 14-row window sums, RSI as the exact
+      // floor-division in micro-units (both operands non-negative)
+      s"""WITH $hourlyMicroSql,
+        |d AS (
+        |  SELECT g, bucket,
+        |    m - lag(m, 1) OVER (PARTITION BY g ORDER BY bucket) AS delta
+        |  FROM hm),
+        |gl AS (
+        |  SELECT g, bucket,
+        |    GREATEST(delta, 0) AS gain, GREATEST(-delta, 0) AS loss
+        |  FROM d WHERE delta IS NOT NULL),
+        |r AS (
+        |  SELECT g, bucket,
+        |    ROW_NUMBER() OVER (PARTITION BY g ORDER BY bucket) AS rn,
+        |    CAST(SUM(gain) OVER (PARTITION BY g ORDER BY bucket
+        |      ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS BIGINT) AS g14,
+        |    CAST(SUM(loss) OVER (PARTITION BY g ORDER BY bucket
+        |      ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS BIGINT) AS l14
+        |  FROM gl)
+        |SELECT g AS event_type, bucket, g14 AS gain_sum, l14 AS loss_sum,
+        |  CASE WHEN g14 + l14 = 0 THEN CAST(50.0 AS DOUBLE)
+        |    ELSE CAST((g14 * 100000000) // (g14 + l14) AS DOUBLE) / 1e6
+        |  END AS rsi
+        |FROM r WHERE rn >= 14 ORDER BY event_type, bucket""".stripMargin),
 
     // WALD–WOLFOWITZ RUNS TEST (randomness screen): per event_type, code
     // each hourly mean as above/not-above the series' own mean threshold
@@ -2270,7 +3821,7 @@ object TimeSeries {
     // integers; μ/σ²/z are ONE fixed IEEE tree; a degenerate series
     // (all one side) pins z to 0. Same scale shape as ts60 minus the
     // pair join: hourly frame, one window sort, one aggregate.
-    "ts62_runs_test" -> ((s, dir) => {
+    QuerySpec("ts62_runs_test", (s, dir) => {
       val h = hourlyMicroMean(s, dir)
       val thr = h.groupBy(col("g"))
         .agg(expr("sum(m) div count(1)").as("tau_m"))
@@ -2296,7 +3847,35 @@ object TimeSeries {
             "  / (cast(n as double) * cast(n as double)" +
             "     * (cast(n as double) - 1.0))) end"), 6).as("z"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // identical integer coding (equal-to-threshold counts as below), runs
+      // by lag-breaks, one-tree z with the degenerate-series guard
+      s"""WITH $hourlyMicroSql,
+        |thr AS (SELECT g, SUM(m) // COUNT(*) AS tau_m FROM hm GROUP BY g),
+        |coded AS (
+        |  SELECT hm.g, hm.bucket,
+        |    CASE WHEN hm.m > thr.tau_m THEN 1 ELSE 0 END AS sgn
+        |  FROM hm JOIN thr ON hm.g = thr.g),
+        |brks AS (
+        |  SELECT g, sgn,
+        |    lag(sgn, 1) OVER (PARTITION BY g ORDER BY bucket) AS prev
+        |  FROM coded),
+        |agg AS (
+        |  SELECT g, COUNT(*) AS n, CAST(SUM(sgn) AS BIGINT) AS n_above,
+        |    CAST(SUM(CASE WHEN prev IS NULL OR sgn <> prev THEN 1 ELSE 0
+        |      END) AS BIGINT) AS n_runs
+        |  FROM brks GROUP BY g)
+        |SELECT g AS event_type, n, n_above, n_runs,
+        |  ROUND(CASE WHEN n_above = 0 OR n_above = n THEN 0.0 ELSE
+        |    (CAST(n_runs AS DOUBLE) -
+        |     (1.0 + 2.0 * CAST(n_above * (n - n_above) AS DOUBLE)
+        |      / CAST(n AS DOUBLE))) /
+        |    sqrt(2.0 * CAST(n_above * (n - n_above) AS DOUBLE)
+        |     * (2.0 * CAST(n_above * (n - n_above) AS DOUBLE)
+        |        - CAST(n AS DOUBLE))
+        |     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
+        |        * (CAST(n AS DOUBLE) - 1.0))) END, 6) AS z
+        |FROM agg ORDER BY event_type""".stripMargin),
 
     // RUNNING-RECORD TRACKER ("new all-time high" alerts — the
     // monitoring twin of ts32's threshold rules, but the threshold is
@@ -2308,7 +3887,7 @@ object TimeSeries {
     // aggregate. Record cadence falling off is the signature of a
     // saturating metric; records clustering late signals regime change —
     // first/last record timestamps expose both.
-    "ts63_record_highs" -> ((s, dir) => {
+    QuerySpec("ts63_record_highs", (s, dir) => {
       val w = Window.partitionBy(col("g")).orderBy(col("bucket"))
         .rowsBetween(Window.unboundedPreceding, -1)
       hourlyMicroMean(s, dir)
@@ -2326,7 +3905,25 @@ object TimeSeries {
         .select(col("g").as("event_type"), col("n"), col("n_records"),
           col("first_record"), col("last_record"), col("max_micro"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // same strictly-greater-than-running-max coding (first row a record
+      // by vacuous truth); all integer micro-units
+      s"""WITH $hourlyMicroSql,
+        |r AS (
+        |  SELECT g, bucket, m,
+        |    MAX(m) OVER (PARTITION BY g ORDER BY bucket
+        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
+        |  FROM hm),
+        |coded AS (
+        |  SELECT g, bucket, m,
+        |    CASE WHEN pm IS NULL OR m > pm THEN 1 ELSE 0 END AS is_rec
+        |  FROM r)
+        |SELECT g AS event_type, COUNT(*) AS n,
+        |  CAST(SUM(is_rec) AS BIGINT) AS n_records,
+        |  MIN(CASE WHEN is_rec = 1 THEN bucket END) AS first_record,
+        |  MAX(CASE WHEN is_rec = 1 THEN bucket END) AS last_record,
+        |  MAX(m) AS max_micro
+        |FROM coded GROUP BY g ORDER BY event_type""".stripMargin),
 
     // DAILY DOWNTIME/SLA REPORT (the ops rollup behind ts45's burn rate):
     // per day, how many of the 24 hour slots saw at least one 'error'
@@ -2337,7 +3934,7 @@ object TimeSeries {
     // are gaps-and-islands (slot − row_number is constant inside an
     // island). Scale: everything after the distinct (day, hour) collapse
     // runs on ≤ 24·|days| rows.
-    "ts64_downtime_sla" -> ((s, dir) => {
+    QuerySpec("ts64_downtime_sla", (s, dir) => {
       val errHours = ev(s, dir)
         .filter(col("event_type") === "error")
         .select(to_date(col("ts")).as("day"),
@@ -2363,7 +3960,34 @@ object TimeSeries {
         .select(col("day"), col("error_hours"), col("uptime_hours"),
           col("longest_clear_run"))
         .orderBy(col("day"))
-    }),
+    },
+      // identical grid/islands construction; counts pinned BIGINT
+      """WITH eh AS (
+        |  SELECT DISTINCT CAST(ts AS DATE) AS day,
+        |    CAST(extract(hour FROM ts) AS BIGINT) AS hr
+        |  FROM events WHERE event_type = 'error'),
+        |grid AS (
+        |  SELECT d.day, CAST(t.hr AS BIGINT) AS hr
+        |  FROM (SELECT DISTINCT day FROM eh) d, range(0, 24) t(hr)),
+        |clear AS (
+        |  SELECT g.day, g.hr FROM grid g
+        |  WHERE NOT EXISTS (SELECT 1 FROM eh
+        |    WHERE eh.day = g.day AND eh.hr = g.hr)),
+        |runs AS (
+        |  SELECT day,
+        |    hr - (ROW_NUMBER() OVER (PARTITION BY day ORDER BY hr) - 1)
+        |      AS grp
+        |  FROM clear),
+        |longest AS (
+        |  SELECT day, CAST(MAX(run_len) AS BIGINT) AS longest_clear_run
+        |  FROM (SELECT day, grp, COUNT(*) AS run_len FROM runs
+        |        GROUP BY day, grp)
+        |  GROUP BY day)
+        |SELECT e.day, COUNT(*) AS error_hours,
+        |  24 - COUNT(*) AS uptime_hours,
+        |  COALESCE(MAX(l.longest_clear_run), 0) AS longest_clear_run
+        |FROM eh e LEFT JOIN longest l ON e.day = l.day
+        |GROUP BY e.day ORDER BY e.day""".stripMargin),
 
     // TWO-SAMPLE KOLMOGOROV–SMIRNOV TEST (distribution-drift detection —
     // the nonparametric sibling of ts42's binned PSI, but bin-free): per
@@ -2376,7 +4000,7 @@ object TimeSeries {
     // 1.358·√((n1+n2)/(n1·n2)) are IEEE — each ONE fixed tree, with the
     // reject flag compared on the identical trees so even the boundary
     // agrees. One window sort per type over the DISTINCT value frame.
-    "ts65_ks_two_sample" -> ((s, dir) => {
+    QuerySpec("ts65_ks_two_sample", (s, dir) => {
       val pts = ev(s, dir)
         .withColumn("mval",
           expr("cast(cast(value as decimal(18,6)) * 1000000 as bigint)"))
@@ -2407,7 +4031,42 @@ object TimeSeries {
             " > 1.358 * sqrt((cast(n1 as double) + cast(n2 as double))" +
             " / (cast(n1 as double) * cast(n2 as double)))").as("reject"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // identical integer ECDF cross-multiplication; distinct mvals per
+      // group make the default RANGE cumsum frame equal to ROWS
+      """WITH pts AS (
+        |  SELECT event_type AS g,
+        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS mval,
+        |    CASE WHEN extract(day FROM ts) <= 15 THEN 1 ELSE 0 END AS h1
+        |  FROM events),
+        |cells AS (
+        |  SELECT g, mval, CAST(SUM(h1) AS BIGINT) AS c1,
+        |    CAST(SUM(1 - h1) AS BIGINT) AS c2
+        |  FROM pts GROUP BY g, mval),
+        |cum AS (
+        |  SELECT g, c1, c2,
+        |    CAST(SUM(c1) OVER (PARTITION BY g ORDER BY mval) AS BIGINT)
+        |      AS cum1,
+        |    CAST(SUM(c2) OVER (PARTITION BY g ORDER BY mval) AS BIGINT)
+        |      AS cum2
+        |  FROM cells),
+        |tot AS (
+        |  SELECT g, CAST(SUM(c1) AS BIGINT) AS n1,
+        |    CAST(SUM(c2) AS BIGINT) AS n2
+        |  FROM cells GROUP BY g),
+        |d AS (
+        |  SELECT c.g, t.n1, t.n2,
+        |    MAX(abs(c.cum1 * t.n2 - c.cum2 * t.n1)) AS d_num
+        |  FROM cum c JOIN tot t ON c.g = t.g
+        |  GROUP BY c.g, t.n1, t.n2)
+        |SELECT g AS event_type, n1, n2, d_num,
+        |  ROUND(CAST(d_num AS DOUBLE)
+        |    / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS d,
+        |  CAST(d_num AS DOUBLE)
+        |    / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))
+        |    > 1.358 * sqrt((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))
+        |      / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))) AS reject
+        |FROM d ORDER BY event_type""".stripMargin),
 
     // BENFORD FIRST-DIGIT AUDIT (the data-forensics screen for
     // fabricated or clipped numeric feeds): per event_type, the observed
@@ -2418,7 +4077,7 @@ object TimeSeries {
     // expected counts and chi² terms are each ONE fixed IEEE tree over
     // (n, literal p_d) — the nine Benford constants are shared literal
     // spellings. Zero-valued points are excluded (no leading digit).
-    "ts66_benford_digits" -> ((s, dir) => {
+    QuerySpec("ts66_benford_digits", (s, dir) => {
       val pts = ev(s, dir)
         .withColumn("mval",
           expr("cast(cast(value as decimal(18,6)) * 1000000 as bigint)"))
@@ -2436,7 +4095,29 @@ object TimeSeries {
             " * (cast(obs as double) - cast(n as double) * p)" +
             " / (cast(n as double) * p)"), 6).as("chi2_term"))
         .orderBy(col("event_type"), col("digit"))
-    }),
+    },
+      // int64 decimal rendering is portable (float formatting is not);
+      // the Benford CASE literals are the identical spellings
+      s"""WITH pts AS (
+        |  SELECT event_type,
+        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS mval
+        |  FROM events),
+        |pos AS (
+        |  SELECT event_type,
+        |    CAST(substr(CAST(mval AS VARCHAR), 1, 1) AS BIGINT) AS digit
+        |  FROM pts WHERE mval > 0),
+        |obs AS (SELECT event_type, digit, COUNT(*) AS obs FROM pos
+        |        GROUP BY 1, 2),
+        |tot AS (SELECT event_type, COUNT(*) AS n FROM pos GROUP BY 1),
+        |j AS (
+        |  SELECT o.event_type, o.digit, o.obs, t.n, $BenfordPCase AS p
+        |  FROM obs o JOIN tot t ON o.event_type = t.event_type)
+        |SELECT event_type, digit, obs, n,
+        |  ROUND(CAST(n AS DOUBLE) * p, 6) AS expected,
+        |  ROUND((CAST(obs AS DOUBLE) - CAST(n AS DOUBLE) * p)
+        |    * (CAST(obs AS DOUBLE) - CAST(n AS DOUBLE) * p)
+        |    / (CAST(n AS DOUBLE) * p), 6) AS chi2_term
+        |FROM j ORDER BY event_type, digit""".stripMargin),
 
     // PEAK DETECTION (the alert-dedup primitive behind "notify on the
     // SPIKE, not on every elevated sample"): per event_type, hourly
@@ -2445,7 +4126,7 @@ object TimeSeries {
     // (m − max of the up-to-4 neighbors, absent ones floored to −1,
     // valid because micro means are ≥ 0). All integer micro-units; the
     // four neighbor columns share ONE window sort per series.
-    "ts67_peaks" -> ((s, dir) => {
+    QuerySpec("ts67_peaks", (s, dir) => {
       val w = Window.partitionBy(col("g")).orderBy(col("bucket"))
       hourlyMicroMean(s, dir)
         .withColumn("pm1", lag(col("m"), 1).over(w))
@@ -2460,7 +4141,21 @@ object TimeSeries {
             coalesce(col("pm2"), lit(-1L)),
             coalesce(col("nm2"), lit(-1L)))).as("prominence"))
         .orderBy(col("event_type"), col("bucket"))
-    }),
+    },
+      // identical strict-both-neighbors rule and −1-floored ±2 prominence
+      s"""WITH $hourlyMicroSql,
+        |nb AS (
+        |  SELECT g, bucket, m,
+        |    lag(m, 1) OVER w AS pm1, lead(m, 1) OVER w AS nm1,
+        |    lag(m, 2) OVER w AS pm2, lead(m, 2) OVER w AS nm2
+        |  FROM hm WINDOW w AS (PARTITION BY g ORDER BY bucket))
+        |SELECT g AS event_type, bucket, m,
+        |  m - GREATEST(COALESCE(pm1, -1), COALESCE(nm1, -1),
+        |    COALESCE(pm2, -1), COALESCE(nm2, -1)) AS prominence
+        |FROM nb
+        |WHERE pm1 IS NOT NULL AND nm1 IS NOT NULL
+        |  AND m > pm1 AND m > nm1
+        |ORDER BY event_type, bucket""".stripMargin),
 
     // TRIMMED MEAN (the robust location estimate a metrics pipeline
     // publishes when single outliers must not move the headline number):
@@ -2472,7 +4167,7 @@ object TimeSeries {
     // sums exact decimals, means the shared (2·sx·10⁶+n) div (2n)
     // fragment (values ≥ 0 per the ts61 dataset contract). Scale: one
     // window sort per series + one aggregate, series-keyed shuffles.
-    "ts68_trimmed_mean" -> ((s, dir) => {
+    QuerySpec("ts68_trimmed_mean", (s, dir) => {
       val wr = Window.partitionBy(col("g"))
         .orderBy(col("value"), col("event_id"))
       ev(s, dir)
@@ -2500,7 +4195,28 @@ object TimeSeries {
             " + cast(coalesce(assert_true(sx >= 0), 0) as bigint))" +
             " div (2 * n)").as("mean_micro"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // identical (value, event_id)-ranked trim set; counts pinned BIGINT
+      """WITH rk AS (
+        |  SELECT event_type AS g, event_id, value,
+        |    ROW_NUMBER() OVER (PARTITION BY event_type
+        |      ORDER BY value, event_id) AS r,
+        |    COUNT(*) OVER (PARTITION BY event_type) AS n
+        |  FROM events),
+        |ag AS (
+        |  SELECT g, MAX(n) AS n, MAX(n // 10) AS k_trim,
+        |    SUM(CASE WHEN r > n // 10 AND r <= n - n // 10
+        |      THEN CAST(value AS DECIMAL(18,6)) END) AS tsum,
+        |    CAST(SUM(CASE WHEN r > n // 10 AND r <= n - n // 10
+        |      THEN 1 END) AS BIGINT) AS tn,
+        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx
+        |  FROM rk GROUP BY g)
+        |SELECT g AS event_type, CAST(n AS BIGINT) AS n,
+        |  CAST(k_trim AS BIGINT) AS k_trim,
+        |  (2 * CAST(tsum * 1000000 AS BIGINT) + tn) // (2 * tn)
+        |    AS trimmed_micro,
+        |  (2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n) AS mean_micro
+        |FROM ag ORDER BY event_type""".stripMargin),
 
     // SHEWHART INDIVIDUALS / MOVING-RANGE CONTROL CHART (the SPC
     // workhorse behind "is this hour out of control?"): per event_type
@@ -2512,7 +4228,7 @@ object TimeSeries {
     // anywhere in the query). Output: chart geometry + breach census
     // per series. One window sort (the lag) + two aggregates, all
     // series-keyed; the geometry joins back as a broadcast.
-    "ts69_individuals_chart" -> ((s, dir) => {
+    QuerySpec("ts69_individuals_chart", (s, dir) => {
       val w = Window.partitionBy(col("g")).orderBy(col("bucket"))
       val hm = hourlyMicroMean(s, dir)
         .withColumn("pm", lag(col("m"), 1).over(w))
@@ -2537,7 +4253,36 @@ object TimeSeries {
         .select(col("g").as("event_type"), col("n_hours"), col("center"),
           col("mrbar"), col("n_breach"), col("first_breach"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // identical integer chart geometry and 1000/2660 cross-multiplied
+      // breach rule
+      s"""WITH $hourlyMicroSql,
+        |lg AS (
+        |  SELECT g, bucket, m,
+        |    lag(m, 1) OVER (PARTITION BY g ORDER BY bucket) AS pm
+        |  FROM hm),
+        |geom AS (
+        |  SELECT g, COUNT(*) AS n_hours, SUM(m) AS sm,
+        |    SUM(CASE WHEN pm IS NOT NULL THEN abs(m - pm) END) AS smr,
+        |    CAST(SUM(CASE WHEN pm IS NOT NULL THEN 1 END) AS BIGINT)
+        |      AS nmr
+        |  FROM lg GROUP BY g),
+        |gm AS (
+        |  SELECT g, CAST(n_hours AS BIGINT) AS n_hours,
+        |    (2 * CAST(sm AS BIGINT) + n_hours) // (2 * n_hours) AS center,
+        |    (2 * CAST(smr AS BIGINT) + nmr) // (2 * GREATEST(nmr, 1))
+        |      AS mrbar
+        |  FROM geom),
+        |coded AS (
+        |  SELECT l.g, gm.n_hours, gm.center, gm.mrbar, l.bucket,
+        |    CASE WHEN abs(l.m - gm.center) * 1000 > gm.mrbar * 2660
+        |      THEN 1 ELSE 0 END AS breach
+        |  FROM lg l JOIN gm ON l.g = gm.g)
+        |SELECT g AS event_type, n_hours, center, mrbar,
+        |  CAST(SUM(breach) AS BIGINT) AS n_breach,
+        |  MIN(CASE WHEN breach = 1 THEN bucket END) AS first_breach
+        |FROM coded GROUP BY g, n_hours, center, mrbar
+        |ORDER BY event_type""".stripMargin),
 
     // COX–STUART TREND TEST (the sign-test cousin of ts60's Mann–Kendall:
     // O(n) paired comparisons instead of O(n²), the cheap first screen a
@@ -2550,7 +4295,7 @@ object TimeSeries {
     // final IEEE tree (sqrt is correctly rounded by IEEE-754, so the
     // cn03 libm-drift class does not apply). Pairing is a row_number
     // self-join on the pre-compressed hourly frame (ts60's cost class).
-    "ts70_cox_stuart" -> ((s, dir) => {
+    QuerySpec("ts70_cox_stuart", (s, dir) => {
       val w = Window.partitionBy(col("g")).orderBy(col("bucket"))
       val idx = hourlyMicroMean(s, dir)
         .withColumn("i", row_number().over(w).cast("long"))
@@ -2570,7 +4315,31 @@ object TimeSeries {
             " cast(2 * greatest(n_pos, n_neg) - mp as double)" +
             " / sqrt(cast(mp as double)) end").as("z"))
         .orderBy(col("event_type"))
-    }),
+    },
+      // identical i ↔ i+⌊n/2⌋ pairing and one-tree z (sqrt is
+      // IEEE-correctly-rounded on both engines)
+      s"""WITH $hourlyMicroSql,
+        |idx AS (
+        |  SELECT g, m,
+        |    ROW_NUMBER() OVER (PARTITION BY g ORDER BY bucket) AS i,
+        |    COUNT(*) OVER (PARTITION BY g) AS n
+        |  FROM hm),
+        |p AS (
+        |  SELECT a.g,
+        |    CAST(SUM(CASE WHEN b.m > a.m THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_pos,
+        |    CAST(SUM(CASE WHEN b.m < a.m THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_neg
+        |  FROM idx a JOIN idx b
+        |    ON a.g = b.g AND b.i = a.i + (a.n - a.n // 2)
+        |  WHERE a.i <= a.n // 2
+        |  GROUP BY a.g)
+        |SELECT g AS event_type, n_pos, n_neg,
+        |  n_pos + n_neg AS n_pairs,
+        |  CASE WHEN n_pos + n_neg = 0 THEN 0.0 ELSE
+        |    CAST(2 * GREATEST(n_pos, n_neg) - (n_pos + n_neg) AS DOUBLE)
+        |    / sqrt(CAST(n_pos + n_neg AS DOUBLE)) END AS z
+        |FROM p ORDER BY event_type""".stripMargin),
 
     // OLS TREND LINE (the least-squares complement to ts35's robust
     // Theil–Sen — the slope a dashboard draws): per event_type over the
@@ -2583,7 +4352,7 @@ object TimeSeries {
     // oracle. r² is deliberately NOT emitted: Σm² at micro scale exceeds
     // exact-double range and ts14 already owns correlation. Scale: one
     // aggregate over the pre-compressed hourly frame per series.
-    "ts71_ols_trend" -> ((s, dir) => {
+    QuerySpec("ts71_ols_trend", (s, dir) => {
       val w = Window.partitionBy(col("g")).orderBy(col("bucket"))
       hourlyMicroMean(s, dir)
         .withColumn("i", row_number().over(w).cast("long"))
@@ -2603,7 +4372,30 @@ object TimeSeries {
             " * cast(n * (n + 1) div 2 as double)) / cast(n as double)")
             .as("intercept_micro"))
         .orderBy(col("event_type"))
-    })
+    },
+      // identical closed-form index moments and one-tree normal equations
+      s"""WITH $hourlyMicroSql,
+        |idx AS (
+        |  SELECT g, m,
+        |    ROW_NUMBER() OVER (PARTITION BY g ORDER BY bucket) AS i
+        |  FROM hm),
+        |ag AS (
+        |  SELECT g, COUNT(*) AS n,
+        |    CAST(SUM(m) AS BIGINT) AS sy,
+        |    CAST(SUM(i * m) AS BIGINT) AS sxy
+        |  FROM idx GROUP BY g)
+        |SELECT g AS event_type, CAST(n AS BIGINT) AS n, sy, sxy,
+        |  CAST(n * sxy - (n * (n + 1) // 2) * sy AS DOUBLE)
+        |    / CAST(n * (n * (n + 1) * (2 * n + 1) // 6)
+        |    - (n * (n + 1) // 2) * (n * (n + 1) // 2) AS DOUBLE)
+        |    AS slope_micro_per_hour,
+        |  (CAST(sy AS DOUBLE)
+        |    - CAST(n * sxy - (n * (n + 1) // 2) * sy AS DOUBLE)
+        |    / CAST(n * (n * (n + 1) * (2 * n + 1) // 6)
+        |    - (n * (n + 1) // 2) * (n * (n + 1) // 2) AS DOUBLE)
+        |    * CAST(n * (n + 1) // 2 AS DOUBLE)) / CAST(n AS DOUBLE)
+        |    AS intercept_micro
+        |FROM ag ORDER BY event_type""".stripMargin)
   )
 
   /** Closed-form EMA over a keyed indexed series (g, i, x) — ts21's kernel
@@ -2692,17 +4484,6 @@ object TimeSeries {
           .as("acf"),
         col("n_pairs"))
   }
-
-  /** digit → Benford log₁₀(1+1/d) probability as a CASE over shared
-    * literal spellings — embedded VERBATIM in the ts66 oracle (both
-    * engines parse the same decimal literal to the same double on
-    * promotion). */
-  private val BenfordPCase: String =
-    "case digit when 1 then 0.301029995663981" +
-      " when 2 then 0.176091259055681 when 3 then 0.1249387366083" +
-      " when 4 then 0.096910013008056 when 5 then 0.079181246047625" +
-      " when 6 then 0.066946789630613 when 7 then 0.057991946977687" +
-      " when 8 then 0.051152522447381 else 0.045757490560675 end"
 
   /** Shared DuckDB replay of [[hourlyMicroMean]] — one CTE body (no WITH)
     * ending in `hm(g, bucket, m)` with m the exact micro-unit BIGINT mean. */
@@ -2883,1929 +4664,6 @@ object TimeSeries {
       .agg(les.head, (les.tail :+ count(lit(1)).as("n_total")): _*)
   }
 
-
-  val oracle: Map[String, String] = Map(
-    "ts01_field_filter" ->
-      """SELECT event_id, epoch_us(ts) AS ts_us, user_id, value
-        |FROM events WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin,
-
-    "ts02_time_range" ->
-      """SELECT event_type, COUNT(*) AS n,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        |FROM events
-        |WHERE ts >= TIMESTAMP '2024-01-10 00:00:00' AND ts < TIMESTAMP '2024-01-20 00:00:00'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "ts03_downsample_1h" ->
-      """SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS bucket, event_type,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS avg_value,
-        |  MIN(value) AS min_value, MAX(value) AS max_value, COUNT(*) AS n
-        |FROM events GROUP BY bucket, event_type ORDER BY bucket, event_type""".stripMargin,
-
-    "ts04_asof_join" ->
-      """SELECT a.event_id, a.user_id, epoch_us(a.ts) AS ts_us, a.value,
-        |  b.event_id AS last_error_id
-        |FROM (SELECT * FROM events WHERE event_type = 'purchase') a
-        |ASOF LEFT JOIN (SELECT * FROM events WHERE event_type = 'error') b
-        |  ON a.user_id = b.user_id AND a.ts >= b.ts
-        |ORDER BY a.event_id""".stripMargin,
-
-    "ts05_sessionize" ->
-      """WITH d AS (
-        |  SELECT user_id, ts,
-        |    CASE WHEN lag(ts) OVER w IS NULL
-        |         OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE THEN 1 ELSE 0 END AS new_s
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)),
-        |s AS (
-        |  SELECT user_id,
-        |    SUM(new_s) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM d),
-        |g AS (SELECT user_id, sid, COUNT(*) AS n FROM s GROUP BY user_id, sid)
-        |SELECT user_id, COUNT(*) AS n_sessions, CAST(SUM(n) AS BIGINT) AS n_events,
-        |  MAX(n) AS max_session_events
-        |FROM g GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "ts07_gap_fill" ->
-      """WITH hourly AS (
-        |  SELECT date_trunc('hour', ts) AS bucket, event_type,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS v
-        |  FROM events GROUP BY bucket, event_type),
-        |rng AS (SELECT event_type, MIN(bucket) AS mn, MAX(bucket) AS mx
-        |        FROM hourly GROUP BY event_type),
-        |spine AS (SELECT event_type, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS bucket
-        |          FROM rng),
-        |j AS (SELECT s.event_type, s.bucket, h.v
-        |      FROM spine s LEFT JOIN hourly h ON s.event_type = h.event_type AND s.bucket = h.bucket)
-        |SELECT strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket, event_type,
-        |  last_value(v IGNORE NULLS) OVER (PARTITION BY event_type ORDER BY bucket
-        |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_filled,
-        |  v IS NULL AS filled
-        |FROM j ORDER BY event_type, bucket""".stripMargin,
-
-    "ts06_gap_stats" ->
-      """WITH d AS (
-        |  SELECT user_id,
-        |    epoch_us(ts) - lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-        |  FROM events)
-        |SELECT user_id, COUNT(*) AS n_gaps, MAX(gap_us) AS max_gap_us,
-        |  CAST(SUM(gap_us) AS DOUBLE) / (COUNT(*) * 1000000.0) AS avg_gap_s
-        |FROM d WHERE gap_us IS NOT NULL
-        |GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "ts08_moving_avg" ->
-      """WITH hourly AS (
-        |  SELECT date_trunc('hour', ts) AS bucket, event_type,
-        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS v
-        |  FROM events GROUP BY bucket, event_type)
-        |SELECT strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket, event_type, v,
-        |  CAST((2 * CAST(SUM(CAST(v AS DECIMAL(18,6))) OVER w * 1000000 AS BIGINT)
-        |        + COUNT(*) OVER w) // (2 * COUNT(*) OVER w) AS DOUBLE)
-        |    / 1000000.0 AS mov_avg
-        |FROM hourly
-        |WINDOW w AS (PARTITION BY event_type ORDER BY bucket
-        |  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_type, bucket""".stripMargin,
-
-    "ts10_trailing_window" ->
-      """SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE) AS trail_1h_sum,
-        |  COUNT(*) OVER w AS trail_1h_n
-        |FROM events
-        |WINDOW w AS (PARTITION BY event_type ORDER BY epoch_us(ts)
-        |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_type, ts_us, event_id""".stripMargin,
-
-    "ts09_derivative" ->
-      """WITH d AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id,
-        |    value - lag(value) OVER w AS dv,
-        |    epoch_us(ts) - lag(epoch_us(ts)) OVER w AS dt_us
-        |  FROM events WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id))
-        |SELECT user_id, ts_us, event_id,
-        |  dv / (CAST(dt_us AS DOUBLE) / 1000000.0) AS rate_per_s
-        |FROM d WHERE dt_us IS NOT NULL AND dt_us > 0
-        |ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "ts11_time_weighted_avg" ->
-      """WITH t AS (
-        |  SELECT event_type, epoch_us(ts) AS ts_us, value,
-        |    lead(epoch_us(ts)) OVER (PARTITION BY event_type
-        |      ORDER BY epoch_us(ts), event_id) - epoch_us(ts) AS dt_us
-        |  FROM events)
-        |SELECT event_type, COUNT(*) AS n_segments,
-        |  CAST(SUM(dt_us) AS DOUBLE) / 1000000.0 AS span_s,
-        |  CAST(SUM(CAST(value AS DECIMAL(18,6)) * dt_us) AS DOUBLE)
-        |    / CAST(SUM(dt_us) AS DOUBLE) AS twa
-        |FROM t WHERE dt_us IS NOT NULL
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "ts12_interpolate_linear" ->
-      """WITH hourly AS (
-        |  SELECT date_trunc('hour', ts) AS bucket, event_type,
-        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS v
-        |  FROM events GROUP BY bucket, event_type),
-        |rng AS (SELECT event_type, MIN(bucket) AS mn, MAX(bucket) AS mx
-        |        FROM hourly GROUP BY event_type),
-        |spine AS (SELECT event_type, unnest(generate_series(mn, mx, INTERVAL 1 HOUR)) AS bucket
-        |          FROM rng),
-        |j AS (SELECT s.event_type, s.bucket, epoch_us(s.bucket) AS t_us, h.v
-        |      FROM spine s LEFT JOIN hourly h ON s.event_type = h.event_type AND s.bucket = h.bucket),
-        |x AS (SELECT *,
-        |    last_value(v IGNORE NULLS) OVER wb AS pv,
-        |    last_value(CASE WHEN v IS NOT NULL THEN t_us END IGNORE NULLS) OVER wb AS pt,
-        |    first_value(v IGNORE NULLS) OVER wf AS nv,
-        |    first_value(CASE WHEN v IS NOT NULL THEN t_us END IGNORE NULLS) OVER wf AS nt
-        |  FROM j
-        |  WINDOW wb AS (PARTITION BY event_type ORDER BY bucket
-        |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW),
-        |         wf AS (PARTITION BY event_type ORDER BY bucket
-        |           ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING))
-        |SELECT strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket, event_type, v,
-        |  CASE WHEN v IS NOT NULL THEN v
-        |       WHEN pv IS NOT NULL AND nv IS NOT NULL THEN
-        |         pv + (nv - pv) * (CAST(t_us - pt AS DOUBLE) / CAST(nt - pt AS DOUBLE))
-        |  END AS v_interp,
-        |  v IS NULL AS interpolated
-        |FROM x ORDER BY event_type, bucket""".stripMargin,
-
-    "ts13_increase" ->
-      """WITH w AS (
-        |  SELECT user_id, epoch_us(ts) AS ts_us, event_id, value,
-        |    lag(CAST(value AS DECIMAL(18,6))) OVER
-        |      (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS prev
-        |  FROM events),
-        |c AS (SELECT *,
-        |    CASE WHEN prev IS NULL THEN NULL
-        |         WHEN CAST(value AS DECIMAL(18,6)) >= prev
-        |           THEN CAST(value AS DECIMAL(18,6)) - prev
-        |         ELSE CAST(value AS DECIMAL(18,6)) END AS contrib
-        |  FROM w)
-        |SELECT user_id, ts_us, event_id, value,
-        |  CAST(COALESCE(SUM(contrib) OVER
-        |    (PARTITION BY user_id ORDER BY ts_us, event_id
-        |     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0) AS DOUBLE)
-        |    AS increase
-        |FROM c ORDER BY user_id, ts_us, event_id""".stripMargin,
-
-    "ts14_pearson_corr" ->
-      """WITH hourly AS (
-        |  SELECT date_trunc('hour', ts) AS bucket, event_type,
-        |    SUM(CAST(value AS DECIMAL(18,6))) AS v
-        |  FROM events GROUP BY 1, 2),
-        |j AS (
-        |  -- DECIMAL(19,6), not (18,6): DuckDB multiplies two width-18
-        |  -- decimals on its int64 fast path and range-checks the product
-        |  -- against DECIMAL(18) capacity — hourly sums at sf0.1 overflow
-        |  -- it (x·y ≈ 2.6e18 > 1e18). Width 19 forces the int128 path;
-        |  -- values and exactness are unchanged, so the Spark side
-        |  -- (decimal(18,6) products in Catalyst, always 128-bit) agrees.
-        |  SELECT CAST(x.v AS DECIMAL(19,6)) AS x, CAST(y.v AS DECIMAL(19,6)) AS y
-        |  FROM (SELECT * FROM hourly WHERE event_type = 'purchase') x
-        |  JOIN (SELECT * FROM hourly WHERE event_type = 'view') y USING (bucket)),
-        |m AS (
-        |  SELECT COUNT(*) AS n_buckets,
-        |    CAST(SUM(x) AS DOUBLE) AS sx, CAST(SUM(y) AS DOUBLE) AS sy,
-        |    CAST(SUM(x * y) AS DOUBLE) AS sxy,
-        |    CAST(SUM(x * x) AS DOUBLE) AS sxx,
-        |    CAST(SUM(y * y) AS DOUBLE) AS syy
-        |  FROM j)
-        |SELECT n_buckets,
-        |  ROUND((CAST(n_buckets AS DOUBLE) * sxy - sx * sy) /
-        |    (sqrt(CAST(n_buckets AS DOUBLE) * sxx - sx * sx) *
-        |     sqrt(CAST(n_buckets AS DOUBLE) * syy - sy * sy)), 6) AS pearson_r
-        |FROM m""".stripMargin,
-
-    "ts17_state_duration" ->
-      """WITH x AS (
-        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
-        |    value > 100.0 AS in_state,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY epoch_us(ts), event_id) AS rn,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type, value > 100.0
-        |      ORDER BY epoch_us(ts), event_id) AS rns
-        |  FROM events),
-        |i AS (SELECT *, rn - rns AS island FROM x)
-        |SELECT event_type, ts_us, event_id, value, in_state,
-        |  CASE WHEN in_state THEN ROW_NUMBER() OVER w ELSE -1 END AS state_count,
-        |  CASE WHEN in_state THEN ts_us - MIN(ts_us) OVER w ELSE -1 END
-        |    AS state_duration_us
-        |FROM i
-        |WINDOW w AS (PARTITION BY event_type, in_state, island
-        |             ORDER BY ts_us, event_id)
-        |ORDER BY event_type, ts_us, event_id""".stripMargin,
-
-    "ts15_histogram" ->
-      s"""WITH h AS ($histCountsSql)
-         |SELECT event_type, bin, le, n_le FROM (
-         |  SELECT event_type, CAST(0 AS BIGINT) AS bin, '1.0' AS le,
-         |         CAST(le0 AS BIGINT) AS n_le FROM h
-         |  UNION ALL SELECT event_type, 1, '5.0', CAST(le1 AS BIGINT) FROM h
-         |  UNION ALL SELECT event_type, 2, '25.0', CAST(le2 AS BIGINT) FROM h
-         |  UNION ALL SELECT event_type, 3, '125.0', CAST(le3 AS BIGINT) FROM h
-         |  UNION ALL SELECT event_type, 4, '625.0', CAST(le4 AS BIGINT) FROM h
-         |  UNION ALL SELECT event_type, 5, '+Inf', CAST(n_total AS BIGINT) FROM h)
-         |ORDER BY event_type, bin""".stripMargin,
-
-    "ts16_histogram_quantile" ->
-      s"""WITH h AS ($histCountsSql)
-         |SELECT event_type, CAST(n_total AS BIGINT) AS n_total,
-         |  ROUND($histQuantileSql, 6) AS q50
-         |FROM h ORDER BY event_type""".stripMargin,
-
-    "ts18_funnel" ->
-      """WITH e AS (
-        |  SELECT user_id, event_type, epoch_us(ts) AS ts_us FROM events),
-        |a AS (SELECT *, MIN(CASE WHEN event_type = 'view' THEN ts_us END)
-        |        OVER (PARTITION BY user_id) AS fv FROM e),
-        |b AS (SELECT *, MIN(CASE WHEN event_type = 'click' AND ts_us > fv
-        |        THEN ts_us END) OVER (PARTITION BY user_id) AS fc FROM a),
-        |c AS (SELECT *, MIN(CASE WHEN event_type = 'purchase' AND ts_us > fc
-        |        THEN ts_us END) OVER (PARTITION BY user_id) AS fp FROM b)
-        |SELECT user_id, MIN(fv) AS first_view_us, MIN(fc) AS first_click_us,
-        |  MIN(fp) AS first_purchase_us,
-        |  CAST(CASE WHEN MIN(fp) IS NOT NULL THEN 3
-        |            WHEN MIN(fc) IS NOT NULL THEN 2
-        |            WHEN MIN(fv) IS NOT NULL THEN 1
-        |            ELSE 0 END AS BIGINT) AS stage
-        |FROM c GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "ts19_retention" ->
-      """WITH cohort AS (
-        |  SELECT user_id, date_trunc('week', MIN(ts)) AS cw
-        |  FROM events WHERE event_type = 'signup' GROUP BY user_id),
-        |sizes AS (SELECT cw, COUNT(*) AS n_cohort FROM cohort GROUP BY cw),
-        |activity AS (
-        |  SELECT DISTINCT user_id, date_trunc('week', ts) AS week FROM events),
-        |active AS (
-        |  SELECT c.cw, CAST(datediff('day', c.cw, a.week) / 7 AS BIGINT) AS week_offset,
-        |    COUNT(*) AS n_active
-        |  FROM activity a JOIN cohort c ON a.user_id = c.user_id
-        |  WHERE a.week >= c.cw
-        |  GROUP BY c.cw, week_offset)
-        |SELECT strftime(x.cw, '%Y-%m-%d') AS cohort_week, x.week_offset,
-        |  x.n_active, s.n_cohort,
-        |  CAST(x.n_active AS DOUBLE) / s.n_cohort AS retention
-        |FROM active x JOIN sizes s ON x.cw = s.cw
-        |ORDER BY cohort_week, week_offset""".stripMargin,
-
-    // the oracle asserts the ACCURACY verdict (see the query's scaladoc):
-    // exact counts from raw events, booleans as literals — a broken
-    // sketch/merge on the engine side flips day_ok/merged_ok and the hash
-    "ts20_hll_merge" ->
-      """SELECT CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days,
-        |  CAST(COUNT(DISTINCT CAST(ts AS DATE)) AS BIGINT) AS n_days_ok,
-        |  CAST(COUNT(DISTINCT user_id) AS BIGINT) AS n_exact,
-        |  TRUE AS merged_ok
-        |FROM events""".stripMargin,
-
-    "ts21_ema" ->
-      """WITH daily AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
-        |  FROM events GROUP BY event_type, day),
-        |idx AS (
-        |  SELECT event_type, day, x,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY day) AS BIGINT)
-        |      AS i
-        |  FROM daily),
-        |pairs AS (
-        |  SELECT a.event_type, a.day, a.i, b.i AS j, b.x AS xj,
-        |    CASE WHEN a.i - b.i = 0 THEN CAST(1.0 AS DOUBLE)
-        |         -- elements MUST be double: a DECIMAL(2,1) 0.8 would make
-        |         -- list_reduce round the accumulator back to 1 dp each step
-        |         ELSE list_reduce(list_transform(range(a.i - b.i),
-        |                            z -> CAST(0.8 AS DOUBLE)),
-        |                          (acc, z) -> acc * z) END AS f
-        |  FROM idx a JOIN idx b
-        |    ON a.event_type = b.event_type AND b.i <= a.i),
-        |terms AS (
-        |  SELECT event_type, day, i,
-        |    CAST(ROUND((CASE WHEN j = 1 THEN f ELSE 0.2 * f END) * xj, 12)
-        |      AS DECIMAL(28,12)) AS term
-        |  FROM pairs)
-        |SELECT event_type, strftime(day, '%Y-%m-%d') AS day, i,
-        |  CAST(ROUND(SUM(term), 6) AS DOUBLE) AS ema
-        |FROM terms GROUP BY event_type, day, i
-        |ORDER BY event_type, i""".stripMargin,
-
-    "ts22_double_exp_smooth" ->
-      s"""WITH daily0 AS (
-         |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-         |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-         |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
-         |  FROM events GROUP BY g, day),
-         |daily AS (
-         |  SELECT g, day, x,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY day) AS BIGINT) AS i
-         |  FROM daily0),
-         |ser1 AS (SELECT g, i, x FROM daily),
-         |${emaSql("ser1", "e1")},
-         |s1 AS (SELECT g, i, CAST(ROUND(ema, 6) AS DOUBLE) AS s1 FROM e1),
-         |ser2 AS (SELECT g, i, s1 AS x FROM s1),
-         |${emaSql("ser2", "e2")},
-         |s2 AS (SELECT g, i, CAST(ROUND(ema, 6) AS DOUBLE) AS s2 FROM e2)
-         |SELECT d.g AS event_type, strftime(d.day, '%Y-%m-%d') AS day, d.i,
-         |  s1.s1, s2.s2,
-         |  ROUND(2.0 * s1.s1 - s2.s2, 6) AS level,
-         |  ROUND(0.25 * (s1.s1 - s2.s2), 6) AS trend,
-         |  ROUND(2.0 * s1.s1 - s2.s2 + 0.25 * (s1.s1 - s2.s2), 6)
-         |    AS forecast_next
-         |FROM daily d
-         |JOIN s1 ON s1.g = d.g AND s1.i = d.i
-         |JOIN s2 ON s2.g = d.g AND s2.i = d.i
-         |ORDER BY event_type, d.i""".stripMargin,
-
-    "ts23_seasonal_forecast" ->
-      s"""WITH daily0 AS (
-         |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-         |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-         |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
-         |  FROM events GROUP BY g, day),
-         |daily AS (
-         |  SELECT g, day, x,
-         |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY day) AS BIGINT) AS i
-         |  FROM daily0),
-         |dailyp AS (SELECT *, CAST((i - 1) % 7 AS BIGINT) AS p FROM daily),
-         |mu AS (
-         |  SELECT g,
-         |    CAST((2 * CAST(SUM(CAST(x AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-         |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS gmu
-         |  FROM dailyp GROUP BY g),
-         |pm AS (
-         |  SELECT g, p,
-         |    CAST((2 * CAST(SUM(CAST(x AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-         |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS pmu
-         |  FROM dailyp GROUP BY g, p),
-         |seas AS (SELECT pm.g, pm.p, ROUND(pm.pmu - mu.gmu, 6) AS sidx
-         |         FROM pm JOIN mu ON mu.g = pm.g),
-         |de AS (
-         |  SELECT d.g, d.day, d.i, d.p, d.x, s.sidx, ROUND(d.x - s.sidx, 6) AS y
-         |  FROM dailyp d JOIN seas s ON s.g = d.g AND s.p = d.p),
-         |ser1 AS (SELECT g, i, y AS x FROM de),
-         |${emaSql("ser1", "e1")},
-         |s1 AS (SELECT g, i, CAST(ROUND(ema, 6) AS DOUBLE) AS s1 FROM e1),
-         |ser2 AS (SELECT g, i, s1 AS x FROM s1),
-         |${emaSql("ser2", "e2")},
-         |s2 AS (SELECT g, i, CAST(ROUND(ema, 6) AS DOUBLE) AS s2 FROM e2)
-         |SELECT de.g AS event_type, strftime(de.day, '%Y-%m-%d') AS day, de.i,
-         |  de.x, de.sidx, de.y AS deseason,
-         |  ROUND(2.0 * s1.s1 - s2.s2, 6) AS level,
-         |  ROUND(0.25 * (s1.s1 - s2.s2), 6) AS trend,
-         |  ROUND(ROUND(2.0 * s1.s1 - s2.s2, 6) + ROUND(0.25 * (s1.s1 - s2.s2), 6)
-         |        + ns.sidx, 6) AS forecast_next
-         |FROM de
-         |JOIN s1 ON s1.g = de.g AND s1.i = de.i
-         |JOIN s2 ON s2.g = de.g AND s2.i = de.i
-         |JOIN seas ns ON ns.g = de.g AND ns.p = de.i % 7
-         |ORDER BY event_type, de.i""".stripMargin,
-
-    // pick-by-pick LTTB replay: centroids from exact sums, the recursion
-    // advances one bucket per step, argmax-by-area via NOT EXISTS with
-    // ties to the earliest point — the same IEEE area tree as the engine.
-    // Series with no interior to thin (n <= buckets+2 = 22) bypass the
-    // recursion entirely (k = position), mirroring the engine's
-    // pass-through — they would otherwise stall the recursion on sparse
-    // bucket numbering and divide by zero at n = 2.
-    "ts24_lttb_downsample" ->
-      """WITH RECURSIVE
-        |pts AS (
-        |  SELECT event_type AS g, epoch_us(ts) AS xus,
-        |    CAST(epoch_us(ts) AS DOUBLE) AS xd, value AS y,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS BIGINT) AS i,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events),
-        |short AS (SELECT g, i - 1 AS k, xus, y FROM pts WHERE n <= 22),
-        |mids AS (SELECT *, (i - 2) * 20 // (n - 2) AS b FROM pts
-        |         WHERE n > 22 AND i >= 2 AND i <= n - 1),
-        |cent AS (
-        |  SELECT g, b, CAST(SUM(xus) AS DOUBLE) / COUNT(*) AS cx,
-        |    CAST(SUM(CAST(y AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS cy
-        |  FROM mids GROUP BY g, b),
-        |lastp AS (SELECT g, xus, xd, y FROM pts WHERE i = n AND n > 22),
-        |cand AS (
-        |  SELECT m.g, m.b, m.i, m.xus, m.xd, m.y,
-        |    COALESCE(c.cx, l.xd) AS cx, COALESCE(c.cy, l.y) AS cy
-        |  FROM mids m
-        |  LEFT JOIN cent c ON c.g = m.g AND c.b = m.b + 1
-        |  JOIN lastp l ON l.g = m.g),
-        |rec AS (
-        |  SELECT g, CAST(0 AS BIGINT) AS k, xus AS selxus, xd AS selxd,
-        |    y AS sely
-        |  FROM pts WHERE i = 1 AND n > 22
-        |  UNION ALL
-        |  SELECT r.g, r.k + 1, p.xus, p.xd, p.y
-        |  FROM rec r JOIN cand p ON p.g = r.g AND p.b = r.k
-        |  WHERE NOT EXISTS (
-        |    SELECT 1 FROM cand p2
-        |    WHERE p2.g = p.g AND p2.b = p.b AND (
-        |      ABS((r.selxd - p2.cx) * (p2.y - r.sely)
-        |          - (r.selxd - p2.xd) * (p2.cy - r.sely))
-        |        > ABS((r.selxd - p.cx) * (p.y - r.sely)
-        |              - (r.selxd - p.xd) * (p.cy - r.sely))
-        |      OR (ABS((r.selxd - p2.cx) * (p2.y - r.sely)
-        |               - (r.selxd - p2.xd) * (p2.cy - r.sely))
-        |            = ABS((r.selxd - p.cx) * (p.y - r.sely)
-        |                  - (r.selxd - p.xd) * (p.cy - r.sely))
-        |          AND p2.i < p.i))))
-        |SELECT event_type, k, x_us, y FROM (
-        |  SELECT g AS event_type, k, selxus AS x_us, sely AS y FROM rec
-        |  UNION ALL
-        |  SELECT g, CAST(21 AS BIGINT), xus, y FROM lastp
-        |  UNION ALL
-        |  SELECT g, k, xus, y FROM short)
-        |ORDER BY event_type, k""".stripMargin,
-
-    // the same exact-decimal rolling moments, rank-based median/MAD and
-    // fixed IEEE score trees as the engine — no interpolating percentile
-    // anywhere, so there is nothing engine-specific to diverge
-    "ts25_anomaly_detect" ->
-      """WITH k AS (
-        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
-        |    CAST(value AS DECIMAL(18,6)) AS xd
-        |  FROM events),
-        |r AS (
-        |  SELECT *,
-        |    COUNT(*) OVER w24 AS n24,
-        |    CAST(SUM(xd) OVER w24 AS DOUBLE) AS sx,
-        |    CAST(SUM(CAST(xd * xd AS DECIMAL(38,12))) OVER w24 AS DOUBLE) AS sxx
-        |  FROM k
-        |  WINDOW w24 AS (PARTITION BY event_type ORDER BY ts_us, event_id
-        |                 ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)),
-        |mr AS (
-        |  SELECT event_type, xd,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY xd, event_id) AS rn,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS n
-        |  FROM k),
-        |m AS (
-        |  SELECT event_type, CAST((MIN(xd) + MAX(xd)) / 2 AS DECIMAL(18,6)) AS med
-        |  FROM mr WHERE rn = (n + 1) // 2 OR rn = n // 2 + 1
-        |  GROUP BY event_type),
-        |ar AS (
-        |  SELECT k.event_type, k.event_id,
-        |    CAST(ABS(xd - med) AS DECIMAL(18,6)) AS adev
-        |  FROM k JOIN m USING (event_type)),
-        |ar2 AS (
-        |  SELECT event_type, adev,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY adev, event_id) AS rn,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS n
-        |  FROM ar),
-        |md AS (
-        |  SELECT event_type, CAST((MIN(adev) + MAX(adev)) / 2 AS DECIMAL(18,6)) AS mad
-        |  FROM ar2 WHERE rn = (n + 1) // 2 OR rn = n // 2 + 1
-        |  GROUP BY event_type),
-        |scored AS (
-        |  SELECT r.event_type, r.ts_us, r.event_id, r.value,
-        |    (r.sxx - r.sx * r.sx / 24.0) / 24.0 AS vr,
-        |    CASE WHEN r.n24 = 24 AND (r.sxx - r.sx * r.sx / 24.0) / 24.0 > 0.0
-        |         THEN (r.value - r.sx / 24.0)
-        |              / sqrt((r.sxx - r.sx * r.sx / 24.0) / 24.0) END AS zr,
-        |    CASE WHEN CAST(md.mad AS DOUBLE) > 0.0
-        |         THEN 0.6745 * (r.value - CAST(m.med AS DOUBLE))
-        |              / CAST(md.mad AS DOUBLE) END AS zb
-        |  FROM r JOIN m USING (event_type) JOIN md USING (event_type))
-        |SELECT event_type, ts_us, event_id, value,
-        |  ROUND(zr, 6) AS z_roll, ABS(zr) > 3.0 AS roll_flag,
-        |  ROUND(zb, 6) AS z_robust, ABS(zb) > 3.5 AS robust_flag
-        |FROM scored ORDER BY event_type, ts_us, event_id""".stripMargin,
-
-    // step-for-step CUSUM replay: same exact-decimal parameter moments,
-    // same per-step round(…, 6) recursion incl. the post-alarm reset —
-    // the alarm predicate is re-derived from (sp, sn, h) at each hop
-    "ts26_cusum_changepoint" ->
-      """WITH RECURSIVE
-        |pts AS (
-        |  SELECT event_type AS g, epoch_us(ts) AS ts_us, event_id, value AS x,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS BIGINT) AS i
-        |  FROM events),
-        |st AS (
-        |  SELECT event_type AS g, COUNT(*) AS n,
-        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx,
-        |    SUM(CAST(CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6))
-        |        AS DECIMAL(38,12))) AS sxx
-        |  FROM events GROUP BY event_type),
-        |sg AS (
-        |  SELECT g,
-        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n) AS DOUBLE)
-        |      / 1000000.0 AS mu,
-        |    ROUND(sqrt(greatest(0, CAST(sxx AS DOUBLE) / n
-        |      - (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n))), 6) AS sigma
-        |  FROM st),
-        |pr AS (SELECT g, mu, ROUND(0.5 * sigma, 6) AS kk,
-        |              ROUND(4.0 * sigma, 6) AS h FROM sg),
-        |rec AS (
-        |  SELECT p.g, p.i, p.ts_us, p.event_id, p.x,
-        |    ROUND(greatest(0, ROUND(p.x - r.mu - r.kk, 6)), 6) AS sp,
-        |    ROUND(greatest(0, ROUND(r.mu - p.x - r.kk, 6)), 6) AS sn
-        |  FROM pts p JOIN pr r USING (g) WHERE p.i = 1
-        |  UNION ALL
-        |  SELECT p.g, p.i, p.ts_us, p.event_id, p.x,
-        |    ROUND(greatest(0,
-        |      (CASE WHEN q.sp > r.h OR q.sn > r.h THEN 0 ELSE q.sp END)
-        |      + ROUND(p.x - r.mu - r.kk, 6)), 6),
-        |    ROUND(greatest(0,
-        |      (CASE WHEN q.sp > r.h OR q.sn > r.h THEN 0 ELSE q.sn END)
-        |      + ROUND(r.mu - p.x - r.kk, 6)), 6)
-        |  FROM rec q
-        |  JOIN pts p ON p.g = q.g AND p.i = q.i + 1
-        |  JOIN pr r ON r.g = p.g)
-        |SELECT q.g AS event_type, q.ts_us, q.event_id, q.x AS value,
-        |  q.sp, q.sn, (q.sp > r.h OR q.sn > r.h) AS alarm
-        |FROM rec q JOIN pr r USING (g)
-        |ORDER BY event_type, ts_us, event_id""".stripMargin,
-
-    // same centered series by row-number self-join at each lag, same
-    // 12-dp-rounded terms summed as exact decimals
-    "ts27_acf" ->
-      s"""WITH $acf10Sql
-         |SELECT g AS event_type, CAST(lag AS BIGINT) AS lag, acf, n_pairs
-         |FROM a ORDER BY event_type, lag""".stripMargin,
-
-    // same ACF table; argmax by (acf DESC, lag) rank; Bartlett 2/√n band
-    "ts40_auto_period" ->
-      s"""WITH $acf10Sql,
-         |mx AS (SELECT g, MAX(n_pairs) AS n_max FROM a GROUP BY g),
-         |b AS (SELECT g, lag, acf,
-         |        ROW_NUMBER() OVER (PARTITION BY g ORDER BY acf DESC, lag)
-         |          AS rnk
-         |      FROM a)
-         |SELECT b.g AS event_type, CAST(b.lag AS BIGINT) AS best_lag,
-         |  b.acf AS best_acf,
-         |  b.acf > 2.0 / sqrt(CAST(m.n_max AS DOUBLE)) AS is_seasonal
-         |FROM b JOIN mx m USING (g) WHERE rnk = 1
-         |ORDER BY event_type""".stripMargin,
-
-    // same integer epoch-hour alignment, same exact-decimal moment sums,
-    // same single IEEE tree for r
-    "ts28_cross_correlation" ->
-      """WITH b AS (
-        |  SELECT event_type,
-        |    epoch_us(date_trunc('hour', ts)) // 3600000000 AS hi,
-        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS m
-        |  FROM events GROUP BY event_type, hi),
-        |lags AS (SELECT unnest(range(-3, 4)) AS lag),
-        |mom AS (
-        |  SELECT a.event_type AS ta, c.event_type AS tb, l.lag,
-        |    COUNT(*) AS n,
-        |    SUM(CAST(a.m AS DECIMAL(18,6))) AS sx,
-        |    SUM(CAST(c.m AS DECIMAL(18,6))) AS sy,
-        |    SUM(CAST(ROUND(a.m * c.m, 12) AS DECIMAL(28,12))) AS sxy,
-        |    SUM(CAST(ROUND(a.m * a.m, 12) AS DECIMAL(28,12))) AS sxx,
-        |    SUM(CAST(ROUND(c.m * c.m, 12) AS DECIMAL(28,12))) AS syy
-        |  FROM b a
-        |  JOIN lags l ON true
-        |  JOIN b c ON a.event_type < c.event_type AND c.hi = a.hi + l.lag
-        |  GROUP BY ta, tb, l.lag),
-        |v AS (
-        |  SELECT *,
-        |    CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) AS vx,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS vy
-        |  FROM mom)
-        |SELECT ta, tb, CAST(lag AS BIGINT) AS lag, n AS n_overlap,
-        |  ROUND(CASE WHEN vx > 0.0 AND vy > 0.0 THEN
-        |    (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) / sqrt(vx * vy)
-        |  END, 6) AS xcorr
-        |FROM v ORDER BY ta, tb, lag""".stripMargin,
-
-    // Portability note (round 9): the previous form used DuckDB's
-    // json_extract_string and in-aggregate first/last(... ORDER BY ...) —
-    // both version-sensitive on the driver's DuckDB (the only two red
-    // oracles on the round-8 board were the only two using
-    // json_extract_string). Rewritten to the q17-proven regexp_extract
-    // form plus a plain window-rank CTE (ANSI, identical on every
-    // DuckDB) — value-identical to the json form on this data, where
-    // props is always {"k": N}.
-    "ts29_ohlc_bars" ->
-      """WITH e AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day, ts, event_id, value,
-        |    CAST(regexp_extract(props, '"k":\s*(\d+)', 1) AS BIGINT) AS qty
-        |  FROM events),
-        |r AS (
-        |  SELECT *,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type, day
-        |      ORDER BY ts, event_id) AS rn_a,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type, day
-        |      ORDER BY ts DESC, event_id DESC) AS rn_d
-        |  FROM e)
-        |SELECT event_type, day,
-        |  MAX(CASE WHEN rn_a = 1 THEN value END) AS open,
-        |  MAX(value) AS high,
-        |  MIN(value) AS low,
-        |  MAX(CASE WHEN rn_d = 1 THEN value END) AS close,
-        |  COUNT(*) AS n_trades,
-        |  CAST(SUM(qty) AS BIGINT) AS volume,
-        |  CAST(SUM(CAST(ROUND(value * qty, 6) AS DECIMAL(28,6))) AS DOUBLE)
-        |    / CAST(SUM(qty) AS DOUBLE) AS vwap
-        |FROM r
-        |GROUP BY event_type, day
-        |ORDER BY event_type, day""".stripMargin,
-
-    // rank-self-join replay of the 15-point rolling median/MAD: the frame
-    // is j.rn ∈ [i.rn−14, i.rn]; median = (v@⌈n/2⌉ + v@⌊n/2⌋+1)/2 via two
-    // single-row CASE sums (exact — the zero terms are IEEE-neutral), MAD
-    // repeats it on |v−med|. Plain ANSI window/join SQL only.
-    "ts41_rolling_robust_z" ->
-      """WITH e AS (
-        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |w AS (
-        |  SELECT i.event_type, i.rn, j.value AS v
-        |  FROM e i JOIN e j ON j.event_type = i.event_type
-        |    AND j.rn BETWEEN i.rn - 14 AND i.rn),
-        |r AS (
-        |  SELECT event_type, rn, v,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type, rn ORDER BY v) AS vr,
-        |    COUNT(*) OVER (PARTITION BY event_type, rn) AS n
-        |  FROM w),
-        |med AS (
-        |  SELECT event_type, rn,
-        |    (SUM(CASE WHEN vr = (n + 1) // 2 THEN v ELSE 0 END)
-        |     + SUM(CASE WHEN vr = (n + 2) // 2 THEN v ELSE 0 END)) / 2 AS med
-        |  FROM r GROUP BY event_type, rn, n),
-        |d AS (
-        |  SELECT w.event_type, w.rn, abs(w.v - m.med) AS dv
-        |  FROM w JOIN med m ON m.event_type = w.event_type AND m.rn = w.rn),
-        |rd AS (
-        |  SELECT event_type, rn, dv,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type, rn ORDER BY dv) AS vr,
-        |    COUNT(*) OVER (PARTITION BY event_type, rn) AS n
-        |  FROM d),
-        |mad AS (
-        |  SELECT event_type, rn,
-        |    (SUM(CASE WHEN vr = (n + 1) // 2 THEN dv ELSE 0 END)
-        |     + SUM(CASE WHEN vr = (n + 2) // 2 THEN dv ELSE 0 END)) / 2 AS mad
-        |  FROM rd GROUP BY event_type, rn, n)
-        |SELECT e.event_type, e.ts_us, e.event_id, e.value, m.med, md.mad,
-        |  abs(e.value - m.med) > 3.0 * md.mad AS is_anomaly
-        |FROM e
-        |JOIN med m ON m.event_type = e.event_type AND m.rn = e.rn
-        |JOIN mad md ON md.event_type = e.event_type AND md.rn = e.rn
-        |ORDER BY e.event_type, e.ts_us, e.event_id""".stripMargin,
-
-    // same power-of-two bins, Laplace smoothing, single 6-dp ln of the
-    // integer-ratio quotient, 12-dp decimal terms — DuckDB ln() is
-    // natural log (its log() is base-10, the classic trap)
-    "ts42_psi_drift" ->
-      """WITH binned AS (
-        |  SELECT event_type, CAST(ts AS DATE) AS day,
-        |    CAST(greatest(least(floor(value / 16.0), 7), 0) AS BIGINT)
-        |      AS bin,
-        |    COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2, 3),
-        |frame AS (SELECT DISTINCT event_type, day FROM binned),
-        |dense AS (
-        |  SELECT f.event_type, f.day, t.bin, COALESCE(bi.n, 0) AS n
-        |  FROM frame f CROSS JOIN range(0, 8) t(bin)
-        |  LEFT JOIN binned bi ON bi.event_type = f.event_type
-        |    AND bi.day = f.day AND bi.bin = t.bin),
-        |tot AS (SELECT event_type, day, SUM(n) AS tot FROM dense
-        |        GROUP BY event_type, day),
-        |cells AS (SELECT d.event_type, d.day, d.bin, d.n, tt.tot
-        |          FROM dense d JOIN tot tt USING (event_type, day)),
-        |j AS (
-        |  SELECT c.event_type, c.day, c.bin, c.n AS nc, c.tot AS tc,
-        |    p.n AS np, p.tot AS tp
-        |  FROM cells c JOIN cells p ON p.event_type = c.event_type
-        |    AND p.day + 1 = c.day AND p.bin = c.bin),
-        |terms AS (
-        |  SELECT event_type, day, nc, np,
-        |    CAST(ROUND(
-        |      ((CAST(nc + 1 AS DOUBLE) / (tc + 8))
-        |        - (CAST(np + 1 AS DOUBLE) / (tp + 8)))
-        |      * ROUND(ln(CAST((nc + 1) * (tp + 8) AS DOUBLE)
-        |                 / ((np + 1) * (tc + 8))), 6)
-        |    , 12) AS DECIMAL(28,12)) AS term
-        |  FROM j)
-        |SELECT event_type, day, CAST(SUM(term) AS DOUBLE) AS psi,
-        |  CAST(SUM(nc) AS BIGINT) AS n_cur,
-        |  CAST(SUM(np) AS BIGINT) AS n_prev
-        |FROM terms GROUP BY event_type, day
-        |ORDER BY event_type, day""".stripMargin,
-
-    // isodow−1 ≡ Spark weekday (ISO, 0=Monday); halfUpMean6 oracle twin
-    "ts46_weekday_profile" ->
-      """SELECT CAST(isodow(CAST(ts AS DATE)) - 1 AS BIGINT) AS dow,
-        |  CAST(hour(ts) AS BIGINT) AS hod,
-        |  COUNT(*) AS n,
-        |  CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000
-        |          AS BIGINT)
-        |        + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0
-        |    AS mean_value
-        |FROM events GROUP BY dow, hod
-        |ORDER BY dow, hod""".stripMargin,
-
-    // lag → break-flag → running-sum islands; all integer µs. The island
-    // id is a window SUM, so the final projection pins it to BIGINT
-    // (DuckDB types window SUM(INTEGER) as HUGEINT — the typed-sum rule)
-    "ts47_user_sessions" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |f AS (
-        |  SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-        |      OR us - LAG(us) OVER w > 1800000000
-        |    THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |g AS (
-        |  SELECT *, SUM(brk) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM f)
-        |SELECT user_id, CAST(sid AS BIGINT) AS session_seq,
-        |  MIN(us) AS start_us, MAX(us) AS end_us,
-        |  MAX(us) - MIN(us) AS dur_us, COUNT(*) AS n_events
-        |FROM g GROUP BY user_id, sid
-        |ORDER BY user_id, session_seq""".stripMargin,
-
-    // exact integer micro-unit hourly means (the halfUpMean6 kernel in
-    // BIGINT form), exact |Δ| sums, three IEEE divisions in pinned order
-    "ts48_seasonal_baseline" ->
-      """WITH hourly AS (
-        |  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-        |    COUNT(*) AS n,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      AS s_us
-        |  FROM events GROUP BY 1, 2),
-        |hm AS (SELECT event_type, hr, (2 * s_us + n) // (2 * n) AS hm_us
-        |       FROM hourly),
-        |m24 AS (
-        |  SELECT a.event_type, SUM(abs(a.hm_us - b.hm_us)) AS s24_us,
-        |    COUNT(*) AS n24
-        |  FROM hm a JOIN hm b ON b.event_type = a.event_type
-        |    AND b.hr = a.hr - 24
-        |  GROUP BY 1),
-        |m1 AS (
-        |  SELECT a.event_type, SUM(abs(a.hm_us - b.hm_us)) AS s1_us,
-        |    COUNT(*) AS n1
-        |  FROM hm a JOIN hm b ON b.event_type = a.event_type
-        |    AND b.hr = a.hr - 1
-        |  GROUP BY 1)
-        |SELECT m24.event_type, n24, CAST(s24_us AS BIGINT) AS s24_us,
-        |  n1, CAST(s1_us AS BIGINT) AS s1_us,
-        |  (CAST(s24_us AS DOUBLE) / CAST(n24 AS DOUBLE))
-        |    / (CAST(s1_us AS DOUBLE) / CAST(n1 AS DOUBLE)) AS mase
-        |FROM m24 JOIN m1 USING (event_type)
-        |ORDER BY event_type""".stripMargin,
-
-    // hourly compression + the same integer-indexed RANGE frame; casts
-    // pin DuckDB's HUGEINT sums back to BIGINT
-    "ts45_burn_rate" ->
-      """WITH hourly AS (
-        |  SELECT epoch_us(date_trunc('hour', ts)) // 3600000000 AS hi,
-        |    COUNT(*) AS n_tot,
-        |    CAST(SUM(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-        |      AS BIGINT) AS n_err
-        |  FROM events GROUP BY hi),
-        |w AS (
-        |  SELECT hi, n_tot, n_err,
-        |    CAST(SUM(n_tot) OVER (ORDER BY hi
-        |      RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS n_tot_6h,
-        |    CAST(SUM(n_err) OVER (ORDER BY hi
-        |      RANGE BETWEEN 5 PRECEDING AND CURRENT ROW) AS BIGINT)
-        |      AS n_err_6h
-        |  FROM hourly)
-        |SELECT hi, n_tot, n_err, n_tot_6h, n_err_6h,
-        |  CAST(n_err AS DOUBLE) / n_tot AS r1,
-        |  CAST(n_err_6h AS DOUBLE) / n_tot_6h AS r6,
-        |  CAST(n_err AS DOUBLE) / n_tot > 0.25
-        |    AND CAST(n_err_6h AS DOUBLE) / n_tot_6h > 0.22 AS burn_alert
-        |FROM w ORDER BY hi""".stripMargin,
-
-    // same dedup → 7-way fan-out → dedup → count; day + o is DATE
-    // integer-day arithmetic on both engines
-    "ts44_rolling_distinct" ->
-      """WITH du AS (
-        |  SELECT DISTINCT event_type, CAST(ts AS DATE) AS day, user_id
-        |  FROM events),
-        |fan AS (
-        |  SELECT event_type, user_id,
-        |    day + CAST(o AS INTEGER) AS wday, MIN(o) AS mo
-        |  FROM du, range(0, 7) t(o)
-        |  GROUP BY event_type, user_id, wday),
-        |agg AS (
-        |  SELECT event_type, wday AS day,
-        |    COUNT(*) AS n_active_7d,
-        |    CAST(SUM(CASE WHEN mo = 0 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_active_1d
-        |  FROM fan GROUP BY event_type, wday)
-        |SELECT event_type, day, n_active_1d, n_active_7d
-        |FROM agg WHERE n_active_1d >= 1
-        |ORDER BY event_type, day""".stripMargin,
-
-    // candidate-join replay of the nearest pick: rank per click by
-    // (|Δt|, earlier-first) — the second key IS the backward tie rule;
-    // LEFT JOIN keeps clicks whose user never purchased
-    "ts43_asof_nearest" ->
-      """WITH l AS (
-        |  SELECT event_id, user_id, epoch_us(ts) AS ts_us
-        |  FROM events WHERE event_type = 'click' AND event_id % 10 = 0),
-        |r0 AS (
-        |  SELECT user_id, epoch_us(ts) AS rts, value, event_id,
-        |    ROW_NUMBER() OVER (PARTITION BY user_id, epoch_us(ts)
-        |      ORDER BY event_id) AS dn
-        |  FROM events WHERE event_type = 'purchase'),
-        |r AS (SELECT user_id, rts, value, event_id FROM r0 WHERE dn = 1),
-        |cand AS (
-        |  SELECT l.event_id, r.event_id AS p_id, r.rts, r.value,
-        |    ROW_NUMBER() OVER (PARTITION BY l.event_id
-        |      ORDER BY abs(r.rts - l.ts_us), r.rts) AS rk
-        |  FROM l JOIN r USING (user_id))
-        |SELECT l.event_id, l.user_id, l.ts_us,
-        |  c.p_id AS near_purchase_id, c.rts AS near_ts_us,
-        |  c.value AS near_value,
-        |  CASE WHEN c.p_id IS NULL THEN NULL
-        |       WHEN c.rts <= l.ts_us THEN 'backward'
-        |       ELSE 'forward' END AS direction
-        |FROM l LEFT JOIN (SELECT * FROM cand WHERE rk = 1) c
-        |  ON c.event_id = l.event_id
-        |ORDER BY l.event_id""".stripMargin,
-
-    // step-for-step Kalman replay: same exact-decimal parameter moments
-    // (R = variance clamped at 1e-6, Q = R/10), same 6-dp-rounded
-    // predict→gain→update recursion; init x₁ = z₁, P₁ = R, K₁ = 1
-    "ts30_kalman_filter" ->
-      """WITH RECURSIVE
-        |pts AS (
-        |  SELECT event_type AS g, epoch_us(ts) AS ts_us, event_id, value AS z,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS BIGINT) AS i
-        |  FROM events),
-        |st AS (
-        |  SELECT event_type AS g, COUNT(*) AS n,
-        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx,
-        |    SUM(CAST(CAST(value AS DECIMAL(19,6)) * CAST(value AS DECIMAL(19,6))
-        |        AS DECIMAL(38,12))) AS sxx
-        |  FROM events GROUP BY event_type),
-        |pr AS (
-        |  SELECT g, rr,
-        |    CAST((CAST(ROUND(rr * 1000000) AS BIGINT) + 5) // 10 AS DOUBLE)
-        |      / 1000000.0 AS qq
-        |  FROM (SELECT g,
-        |    ROUND(greatest(1e-6, CAST(sxx AS DOUBLE) / n
-        |      - (CAST(sx AS DOUBLE) / n) * (CAST(sx AS DOUBLE) / n)), 6) AS rr
-        |  FROM st)),
-        |rec AS (
-        |  SELECT p.g, p.i, p.ts_us, p.event_id, p.z,
-        |    ROUND(p.z, 6) AS x, ROUND(r.rr, 6) AS pv,
-        |    CAST(1.0 AS DOUBLE) AS kg
-        |  FROM pts p JOIN pr r USING (g) WHERE p.i = 1
-        |  UNION ALL
-        |  SELECT p.g, p.i, p.ts_us, p.event_id, p.z,
-        |    ROUND(q.x + ROUND(
-        |      ROUND(ROUND(q.pv + r.qq, 6) / (ROUND(q.pv + r.qq, 6) + r.rr), 6)
-        |      * ROUND(p.z - q.x, 6), 6), 6),
-        |    ROUND((1.0 -
-        |      ROUND(ROUND(q.pv + r.qq, 6) / (ROUND(q.pv + r.qq, 6) + r.rr), 6))
-        |      * ROUND(q.pv + r.qq, 6), 6),
-        |    ROUND(ROUND(q.pv + r.qq, 6) / (ROUND(q.pv + r.qq, 6) + r.rr), 6)
-        |  FROM rec q
-        |  JOIN pts p ON p.g = q.g AND p.i = q.i + 1
-        |  JOIN pr r ON r.g = p.g)
-        |SELECT g AS event_type, ts_us, event_id, z AS value,
-        |  x AS x_hat, pv AS p_var, kg AS k_gain
-        |FROM rec ORDER BY event_type, ts_us, event_id""".stripMargin,
-
-    // same all-integer bucket arithmetic; first/last by (ts, event_id)
-    "ts31_m4_downsample" ->
-      """WITH pts AS (
-        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value
-        |  FROM events),
-        |sp AS (
-        |  SELECT event_type, MIN(ts_us) AS t0, MAX(ts_us) AS t1
-        |  FROM pts GROUP BY event_type),
-        |b AS (
-        |  SELECT p.event_type, p.ts_us, p.event_id, p.value,
-        |    least(99, (p.ts_us - s.t0) * 100 // (s.t1 - s.t0 + 1)) AS bucket
-        |  FROM pts p JOIN sp s USING (event_type))
-        |SELECT event_type, bucket,
-        |  MIN(value) AS v_min,
-        |  MAX(value) AS v_max,
-        |  first(value ORDER BY ts_us, event_id) AS v_first,
-        |  last(value ORDER BY ts_us, event_id) AS v_last,
-        |  MIN(ts_us) AS t_first,
-        |  MAX(ts_us) AS t_last,
-        |  COUNT(*) AS n
-        |FROM b GROUP BY event_type, bucket
-        |ORDER BY event_type, bucket""".stripMargin,
-
-    // same islands: global rank minus survivor rank; fire at pos 3
-    "ts32_alert_rules" ->
-      """WITH pts AS (
-        |  SELECT event_type, epoch_us(ts) AS ts_us, event_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY ts, event_id) AS rn
-        |  FROM events),
-        |c AS (
-        |  SELECT *, ROW_NUMBER() OVER (PARTITION BY event_type
-        |    ORDER BY ts_us, event_id) AS rs
-        |  FROM pts WHERE value > 50),
-        |i AS (
-        |  SELECT *, rn - rs AS grp,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type, rn - rs
-        |      ORDER BY ts_us, event_id) AS pos
-        |  FROM c)
-        |SELECT event_type,
-        |  MIN(CASE WHEN pos = 3 THEN ts_us END) AS fire_us,
-        |  MAX(ts_us) AS clear_us,
-        |  COUNT(*) AS n_points,
-        |  MAX(value) AS peak
-        |FROM i GROUP BY event_type, grp HAVING COUNT(*) >= 3
-        |ORDER BY event_type, fire_us""".stripMargin,
-
-    // the same 2×24 centered MA + hour-of-day seasonal replay
-    "ts33_decompose" ->
-      s"""WITH $decomposeSql
-         |SELECT g AS event_type, h_us, x, trend, sidx, resid
-         |FROM dc ORDER BY event_type, h_us""".stripMargin,
-
-    // rank-selected lower quantiles, integer index arithmetic
-    "ts39_quantile_bands" ->
-      """WITH r AS (
-        |  SELECT event_type AS g, CAST(ts AS DATE) AS day, value,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type, CAST(ts AS DATE)
-        |      ORDER BY value, event_id) AS rn,
-        |    COUNT(*) OVER (PARTITION BY event_type, CAST(ts AS DATE)) AS n
-        |  FROM events)
-        |SELECT g AS event_type, strftime(day, '%Y-%m-%d') AS day,
-        |  MAX(n) AS n_points,
-        |  MAX(CASE WHEN rn = (n + 9) // 10 THEN value END) AS p10,
-        |  MAX(CASE WHEN rn = (n + 1) // 2 THEN value END) AS p50,
-        |  MAX(CASE WHEN rn = (9 * n + 9) // 10 THEN value END) AS p90
-        |FROM r GROUP BY g, day
-        |ORDER BY event_type, day""".stripMargin,
-
-    // same components; lower-median med/MAD by rank, one IEEE score tree
-    "ts37_seasonal_anomaly" ->
-      s"""WITH $decomposeSql,
-         |base AS (SELECT g, h_us, x, resid FROM dc),
-         |rmed AS (
-         |  SELECT g, resid AS med FROM (
-         |    SELECT g, resid,
-         |      ROW_NUMBER() OVER (PARTITION BY g ORDER BY resid) AS rn,
-         |      COUNT(*) OVER (PARTITION BY g) AS m
-         |    FROM base) WHERE rn = (m + 1) // 2),
-         |dev AS (
-         |  SELECT b.g, b.h_us, b.x, b.resid, abs(b.resid - r.med) AS adev
-         |  FROM base b JOIN rmed r USING (g)),
-         |mmad AS (
-         |  SELECT g, adev AS mad FROM (
-         |    SELECT g, adev,
-         |      ROW_NUMBER() OVER (PARTITION BY g ORDER BY adev) AS rn,
-         |      COUNT(*) OVER (PARTITION BY g) AS m
-         |    FROM dev) WHERE rn = (m + 1) // 2)
-         |SELECT d.g AS event_type, d.h_us, d.x, d.resid,
-         |  d.adev / (1.4826 * greatest(mm.mad, 1e-9)) AS rscore,
-         |  (d.adev / (1.4826 * greatest(mm.mad, 1e-9))) > 3.0 AS is_anomaly
-         |FROM dev d JOIN mmad mm USING (g)
-         |ORDER BY event_type, h_us""".stripMargin,
-
-    // Hyndman's strength measures over the same components: variances
-    // from exact decimal power sums, one IEEE tree each, rounded once
-    "ts36_seasonal_strength" ->
-      s"""WITH $decomposeSql,
-         |c AS (SELECT g, resid, ROUND(sidx + resid, 6) AS sr,
-         |             ROUND(trend + resid, 6) AS tr2 FROM dc),
-         |a AS (
-         |  SELECT g, COUNT(*) AS n,
-         |    SUM(CAST(resid AS DECIMAL(18,6))) AS s_resid,
-         |    SUM(CAST(CAST(resid AS DECIMAL(19,6)) * CAST(resid AS DECIMAL(19,6))
-         |        AS DECIMAL(38,12))) AS q_resid,
-         |    SUM(CAST(sr AS DECIMAL(18,6))) AS s_sr,
-         |    SUM(CAST(CAST(sr AS DECIMAL(19,6)) * CAST(sr AS DECIMAL(19,6))
-         |        AS DECIMAL(38,12))) AS q_sr,
-         |    SUM(CAST(tr2 AS DECIMAL(18,6))) AS s_tr2,
-         |    SUM(CAST(CAST(tr2 AS DECIMAL(19,6)) * CAST(tr2 AS DECIMAL(19,6))
-         |        AS DECIMAL(38,12))) AS q_tr2
-         |  FROM c GROUP BY g)
-         |SELECT g AS event_type, n,
-         |  ROUND(GREATEST(0.0, 1.0 -
-         |    (CAST(q_resid AS DOUBLE) / n
-         |      - (CAST(s_resid AS DOUBLE) / n) * (CAST(s_resid AS DOUBLE) / n))
-         |    / (CAST(q_sr AS DOUBLE) / n
-         |      - (CAST(s_sr AS DOUBLE) / n) * (CAST(s_sr AS DOUBLE) / n))), 6)
-         |    AS seasonal_strength,
-         |  ROUND(GREATEST(0.0, 1.0 -
-         |    (CAST(q_resid AS DOUBLE) / n
-         |      - (CAST(s_resid AS DOUBLE) / n) * (CAST(s_resid AS DOUBLE) / n))
-         |    / (CAST(q_tr2 AS DOUBLE) / n
-         |      - (CAST(s_tr2 AS DOUBLE) / n) * (CAST(s_tr2 AS DOUBLE) / n))), 6)
-         |    AS trend_strength
-         |FROM a ORDER BY event_type""".stripMargin,
-
-    // the same lag-1/lag-7 error arithmetic in integer micro-units
-    "ts34_forecast_backtest" ->
-      """WITH d0 AS (
-        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
-        |  FROM events GROUP BY g, day),
-        |d AS (
-        |  SELECT g, day, x,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY day) AS BIGINT) AS i,
-        |    lag(x, 1) OVER (PARTITION BY g ORDER BY day) AS lag1,
-        |    lag(x, 7) OVER (PARTITION BY g ORDER BY day) AS lag7
-        |  FROM d0),
-        |er AS (
-        |  SELECT g, abs(x - lag1) AS ep, abs(x - lag7) AS es
-        |  FROM d WHERE i > 7),
-        |ag AS (
-        |  SELECT g, COUNT(*) AS n_eval,
-        |    CAST(SUM(CAST(ep AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS spm,
-        |    CAST(SUM(CAST(es AS DECIMAL(18,6))) * 1000000 AS BIGINT) AS ssm
-        |  FROM er GROUP BY g),
-        |mm AS (
-        |  SELECT g, n_eval,
-        |    (2 * spm + n_eval) // (2 * n_eval) AS pm,
-        |    (2 * ssm + n_eval) // (2 * n_eval) AS sm
-        |  FROM ag)
-        |SELECT g AS event_type, n_eval,
-        |  CAST(pm AS DOUBLE) / 1000000.0 AS mae_persist,
-        |  CAST(sm AS DOUBLE) / 1000000.0 AS mae_snaive,
-        |  CAST(pm AS DOUBLE) / CAST(nullif(sm, 0) AS DOUBLE) AS mase_ratio
-        |FROM mm ORDER BY event_type""".stripMargin,
-
-    // pairwise slopes + lower-median selection replayed rank-for-rank
-    "ts35_theilsen_trend" ->
-      """WITH d0 AS (
-        |  SELECT event_type AS g, CAST(ts AS DATE) AS day,
-        |    CAST((2 * CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |          + COUNT(*)) // (2 * COUNT(*)) AS DOUBLE) / 1000000.0 AS x
-        |  FROM events GROUP BY g, day),
-        |d AS (
-        |  SELECT g, x,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY day) AS BIGINT) AS i
-        |  FROM d0),
-        |p AS (
-        |  SELECT a.g, (b.x - a.x) / CAST(b.i - a.i AS DOUBLE) AS slope
-        |  FROM d a JOIN d b ON a.g = b.g AND a.i < b.i),
-        |ms AS (
-        |  SELECT g, m AS n_pairs, slope AS ts_slope FROM (
-        |    SELECT g, slope,
-        |      CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY slope) AS BIGINT)
-        |        AS rn,
-        |      CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS m
-        |    FROM p) WHERE rn = (m + 1) // 2),
-        |r AS (
-        |  SELECT d.g, ms.n_pairs, ms.ts_slope,
-        |    d.x - ms.ts_slope * CAST(d.i AS DOUBLE) AS resid
-        |  FROM d JOIN ms ON ms.g = d.g)
-        |SELECT g AS event_type, n AS n_days, n_pairs, ts_slope,
-        |  resid AS ts_intercept
-        |FROM (
-        |  SELECT g, n_pairs, ts_slope, resid,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY g ORDER BY resid) AS BIGINT)
-        |      AS rn,
-        |    CAST(COUNT(*) OVER (PARTITION BY g) AS BIGINT) AS n
-        |  FROM r) WHERE rn = (n + 1) // 2
-        |ORDER BY event_type""".stripMargin,
-
-    // SAX: halfUpMean6 hourly means, fixed power-of-two breakpoints
-    // (floor(v/16) is exact IEEE), lead-hr continuity gates gap hours;
-    // COUNT is BIGINT on both engines (no sum to pin)
-    "ts49_sax_motifs" ->
-      """WITH hourly AS (
-        |  SELECT event_type, epoch_us(ts) // 3600000000 AS hr,
-        |    COUNT(*) AS n,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 1000000 AS BIGINT)
-        |      AS s_us
-        |  FROM events GROUP BY 1, 2),
-        |sym AS (
-        |  SELECT event_type, hr,
-        |    substr('abcd', CAST(GREATEST(LEAST(FLOOR(
-        |      (CAST((2 * s_us + n) // (2 * n) AS DOUBLE) / 1000000.0)
-        |        / 16.0), 3.0), 0.0) AS INT) + 1, 1) AS s
-        |  FROM hourly),
-        |wd AS (
-        |  SELECT event_type, hr, s,
-        |    LEAD(s, 1) OVER w AS s2, LEAD(hr, 1) OVER w AS h2,
-        |    LEAD(s, 2) OVER w AS s3, LEAD(hr, 2) OVER w AS h3
-        |  FROM sym WINDOW w AS (PARTITION BY event_type ORDER BY hr)),
-        |c AS (
-        |  SELECT event_type, s || s2 || s3 AS word, COUNT(*) AS n
-        |  FROM wd WHERE h2 = hr + 1 AND h3 = hr + 2
-        |  GROUP BY 1, 2),
-        |r AS (
-        |  SELECT event_type, word, n,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY n DESC, word) AS BIGINT) AS rnk
-        |  FROM c)
-        |SELECT event_type, word, n, rnk FROM r WHERE rnk <= 3
-        |ORDER BY event_type, rnk""".stripMargin,
-
-    // sweep-line replay: ts47's session CTE, day-clipped segments via a
-    // correlated generate_series, ±1 deltas, running-sum concurrency.
-    // Window SUMs (sid, cum) and the CASE sums are HUGEINT in DuckDB —
-    // every surviving projection pins BIGINT per the typed-sum rule;
-    // positive integer // is floor on both engines.
-    "ts50_interval_coverage" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
-        |f AS (
-        |  SELECT *, CASE WHEN LAG(us) OVER w IS NULL
-        |      OR us - LAG(us) OVER w > 1800000000
-        |    THEN 1 ELSE 0 END AS brk
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY us, event_id)),
-        |g AS (
-        |  SELECT *, SUM(brk) OVER (PARTITION BY user_id
-        |    ORDER BY us, event_id ROWS UNBOUNDED PRECEDING) AS sid
-        |  FROM f),
-        |sess AS (
-        |  SELECT user_id, MIN(us) AS start_us, MAX(us) AS end_us
-        |  FROM g GROUP BY user_id, sid),
-        |segd AS (
-        |  SELECT user_id, start_us, end_us,
-        |    unnest(range(start_us // 86400000000,
-        |                 end_us // 86400000000 + 1)) AS day
-        |  FROM sess),
-        |seg AS (
-        |  SELECT user_id, day,
-        |    GREATEST(start_us, day * 86400000000) AS s,
-        |    LEAST(end_us, (day + 1) * 86400000000) AS e
-        |  FROM segd),
-        |sweep AS (
-        |  SELECT day, s AS us, 1 AS delta, user_id FROM seg
-        |  UNION ALL
-        |  SELECT day, e, -1, user_id FROM seg),
-        |w2 AS (
-        |  SELECT day, us, delta,
-        |    SUM(delta) OVER (PARTITION BY day
-        |      ORDER BY us, delta DESC, user_id
-        |      ROWS UNBOUNDED PRECEDING) AS cum,
-        |    LEAD(us) OVER (PARTITION BY day
-        |      ORDER BY us, delta DESC, user_id) AS nxt
-        |  FROM sweep)
-        |SELECT day,
-        |  CAST(SUM(CASE WHEN delta = 1 THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_sessions,
-        |  CAST(SUM(CASE WHEN cum > 0 THEN COALESCE(nxt, us) - us
-        |    ELSE 0 END) AS BIGINT) AS covered_us,
-        |  CAST(MAX(cum) AS BIGINT) AS max_conc,
-        |  CAST(SUM(CASE WHEN cum > 0 THEN COALESCE(nxt, us) - us
-        |    ELSE 0 END) AS DOUBLE) / 86400000000.0 AS coverage
-        |FROM w2 GROUP BY day ORDER BY day""".stripMargin,
-
-    // All-integer (centi-unit) binary segmentation; HUGEINT appears only in
-    // intermediate window sums, every FINAL projection pins BIGINT/INT.
-    "ts51_changepoint_binseg" ->
-      """WITH hourly AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    CAST(SUM(CAST(value AS DECIMAL(18,6))) * 100 AS BIGINT) AS sc
-        |  FROM events GROUP BY 1, 2),
-        |pts AS (
-        |  SELECT event_type, bucket, sc,
-        |    CAST(ROW_NUMBER() OVER w AS BIGINT) AS i,
-        |    CAST(SUM(sc) OVER (PARTITION BY event_type ORDER BY bucket
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cs
-        |  FROM hourly WINDOW w AS (PARTITION BY event_type ORDER BY bucket)),
-        |tot AS (
-        |  SELECT event_type, COUNT(*) AS n, CAST(SUM(sc) AS BIGINT) AS sn
-        |  FROM hourly GROUP BY 1),
-        |l1r AS (
-        |  SELECT p.event_type, p.i, p.bucket,
-        |    ABS(t.n * p.cs - p.i * t.sn) AS stat, t.n,
-        |    ROW_NUMBER() OVER (PARTITION BY p.event_type
-        |      ORDER BY ABS(t.n * p.cs - p.i * t.sn) DESC, p.i) AS rk
-        |  FROM pts p JOIN tot t USING (event_type)
-        |  WHERE p.i < t.n),
-        |l1 AS (SELECT * FROM l1r WHERE rk = 1),
-        |lvl1 AS (
-        |  SELECT event_type, 1 AS level, 0 AS seg,
-        |    strftime(bucket, '%Y-%m-%d %H:%M:%S') AS split_bucket,
-        |    CAST(stat AS BIGINT) AS stat, CAST(n AS BIGINT) AS seg_len
-        |  FROM l1),
-        |segd AS (
-        |  SELECT p.event_type, p.bucket, p.sc,
-        |    CASE WHEN p.i <= l.i THEN 0 ELSE 1 END AS seg
-        |  FROM pts p JOIN l1 l USING (event_type)),
-        |pts2 AS (
-        |  SELECT event_type, seg, bucket, sc,
-        |    CAST(ROW_NUMBER() OVER w2 AS BIGINT) AS j,
-        |    CAST(SUM(sc) OVER (PARTITION BY event_type, seg ORDER BY bucket
-        |      ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cs2
-        |  FROM segd
-        |  WINDOW w2 AS (PARTITION BY event_type, seg ORDER BY bucket)),
-        |tot2 AS (
-        |  SELECT event_type, seg, COUNT(*) AS m, CAST(SUM(sc) AS BIGINT) AS sm
-        |  FROM segd GROUP BY 1, 2),
-        |l2r AS (
-        |  SELECT p.event_type, p.seg, p.bucket,
-        |    ABS(t.m * p.cs2 - p.j * t.sm) AS stat, t.m,
-        |    ROW_NUMBER() OVER (PARTITION BY p.event_type, p.seg
-        |      ORDER BY ABS(t.m * p.cs2 - p.j * t.sm) DESC, p.j) AS rk
-        |  FROM pts2 p JOIN tot2 t USING (event_type, seg)
-        |  WHERE t.m >= 4 AND p.j < t.m),
-        |lvl2 AS (
-        |  SELECT event_type, 2 AS level, seg,
-        |    strftime(bucket, '%Y-%m-%d %H:%M:%S') AS split_bucket,
-        |    CAST(stat AS BIGINT) AS stat, CAST(m AS BIGINT) AS seg_len
-        |  FROM l2r WHERE rk = 1)
-        |SELECT * FROM lvl1 UNION ALL SELECT * FROM lvl2
-        |ORDER BY event_type, level, seg""".stripMargin,
-
-    "ts53_rolling_corr" ->
-      """WITH hourly AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
-        |  FROM events WHERE event_type IN ('click', 'view')
-        |  GROUP BY 1, 2),
-        |hm AS (
-        |  SELECT event_type, bucket,
-        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
-        |      AS DOUBLE) / 1e6 AS hm
-        |  FROM hourly),
-        |xy AS (
-        |  SELECT a.bucket, a.hm AS x, b.hm AS y
-        |  FROM hm a JOIN hm b ON a.bucket = b.bucket
-        |  WHERE a.event_type = 'click' AND b.event_type = 'view'),
-        |p AS (
-        |  SELECT bucket, CAST(x AS DECIMAL(18,6)) AS xd,
-        |    CAST(y AS DECIMAL(18,6)) AS yd,
-        |    CAST(ROUND(x * y, 12) AS DECIMAL(28,12)) AS pxy,
-        |    CAST(ROUND(x * x, 12) AS DECIMAL(28,12)) AS pxx,
-        |    CAST(ROUND(y * y, 12) AS DECIMAL(28,12)) AS pyy
-        |  FROM xy),
-        |wnd AS (
-        |  SELECT bucket,
-        |    ROW_NUMBER() OVER wo AS rn,
-        |    SUM(xd) OVER w AS sx, SUM(yd) OVER w AS sy,
-        |    SUM(pxy) OVER w AS sxy, SUM(pxx) OVER w AS sxx,
-        |    SUM(pyy) OVER w AS syy
-        |  FROM p
-        |  WINDOW wo AS (ORDER BY bucket),
-        |    w AS (ORDER BY bucket ROWS BETWEEN 23 PRECEDING AND CURRENT ROW)),
-        |rr AS (
-        |  SELECT bucket,
-        |    24 * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE) AS num,
-        |    sqrt((24 * CAST(sxx AS DOUBLE)
-        |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-        |      * (24 * CAST(syy AS DOUBLE)
-        |        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) AS den
-        |  FROM wnd WHERE rn >= 24)
-        |SELECT strftime(bucket, '%Y-%m-%d %H:%M:%S') AS bucket,
-        |  CASE WHEN den > 0 THEN ROUND(num / den, 6) END AS r
-        |FROM rr ORDER BY bucket""".stripMargin,
-
-    "ts52_max_drawdown" ->
-      """WITH cl AS (
-        |  SELECT event_type, bucket, cl FROM (
-        |    SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |      value AS cl,
-        |      ROW_NUMBER() OVER (PARTITION BY event_type, date_trunc('hour', ts)
-        |        ORDER BY ts DESC, event_id DESC) AS rn
-        |    FROM events) WHERE rn = 1),
-        |dd AS (
-        |  SELECT event_type, bucket, cl,
-        |    MAX(cl) OVER (PARTITION BY event_type ORDER BY bucket
-        |      ROWS UNBOUNDED PRECEDING) AS runmax
-        |  FROM cl),
-        |d2 AS (
-        |  SELECT event_type, bucket, cl, runmax, runmax - cl AS ddv FROM dd),
-        |r AS (
-        |  SELECT event_type, bucket, cl, runmax, ddv,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY ddv DESC, bucket) AS rk,
-        |    SUM(CASE WHEN ddv > 0 THEN 1 ELSE 0 END)
-        |      OVER (PARTITION BY event_type) AS nu
-        |  FROM d2)
-        |SELECT event_type,
-        |  strftime(bucket, '%Y-%m-%d %H:%M:%S') AS trough_bucket,
-        |  runmax AS peak_value, cl AS trough_value, ddv AS max_dd,
-        |  CAST(nu AS BIGINT) AS n_underwater
-        |FROM r WHERE rk = 1 ORDER BY event_type""".stripMargin,
-
-    "ts54_hurst_rs" ->
-      """WITH hourly AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |hm AS (
-        |  SELECT event_type,
-        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
-        |      AS DOUBLE) / 1e6 AS x,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY bucket) AS i
-        |  FROM hourly),
-        |f AS (
-        |  SELECT event_type, CAST(i AS BIGINT) AS i,
-        |    CAST(x AS DECIMAL(14,6)) AS xd, bn,
-        |    (CAST(i AS BIGINT) - 1) // bn AS blk
-        |  FROM hm CROSS JOIN (VALUES (CAST(16 AS BIGINT)), (32), (64))
-        |    AS s(bn)),
-        |b0 AS (
-        |  SELECT *,
-        |    SUM(xd) OVER (PARTITION BY event_type, bn, blk) AS sum_x,
-        |    COUNT(*) OVER (PARTITION BY event_type, bn, blk) AS m
-        |  FROM f),
-        |b1 AS (
-        |  SELECT event_type, bn, blk, i,
-        |    CAST(CAST(bn AS DECIMAL(10,0)) * xd - sum_x AS DECIMAL(14,6))
-        |      AS y
-        |  FROM b0 WHERE m = bn),
-        |b2 AS (
-        |  SELECT event_type, bn, blk, y,
-        |    SUM(y) OVER (PARTITION BY event_type, bn, blk ORDER BY i
-        |      ROWS UNBOUNDED PRECEDING) AS cz
-        |  FROM b1),
-        |g AS (
-        |  SELECT event_type, bn, blk, MAX(cz) AS maxc, MIN(cz) AS minc,
-        |    SUM(CAST(CAST(y AS DECIMAL(20,6)) * y AS DECIMAL(30,12)))
-        |      AS ss
-        |  FROM b2 GROUP BY 1, 2, 3),
-        |rsb AS (
-        |  SELECT event_type, bn,
-        |    ROUND((CAST(maxc - minc AS DOUBLE) / CAST(bn AS DOUBLE))
-        |      / sqrt(CAST(ss AS DOUBLE) / CAST(bn * bn * bn AS DOUBLE)), 6)
-        |      AS rs
-        |  FROM g
-        |  WHERE sqrt(CAST(ss AS DOUBLE) / CAST(bn * bn * bn AS DOUBLE)) > 0),
-        |agg AS (
-        |  SELECT event_type, bn AS block_n, COUNT(*) AS n_blocks,
-        |    SUM(CAST(rs AS DECIMAL(18,6))) AS srs, MAX(rs) AS max_rs
-        |  FROM rsb GROUP BY 1, 2),
-        |m2 AS (
-        |  SELECT event_type, block_n, n_blocks,
-        |    CAST((2 * CAST(srs * 1000000 AS BIGINT) + n_blocks)
-        |      // (2 * n_blocks) AS DOUBLE) / 1e6 AS mean_rs, max_rs
-        |  FROM agg)
-        |SELECT event_type, block_n, n_blocks, mean_rs, max_rs,
-        |  ROUND(mean_rs / LAG(mean_rs, 1) OVER (PARTITION BY event_type
-        |    ORDER BY block_n), 6) AS growth_vs_half
-        |FROM m2 ORDER BY event_type, block_n""".stripMargin,
-
-    "ts55_variance_ratio" ->
-      """WITH hourly AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
-        |  FROM events GROUP BY 1, 2),
-        |hm AS (
-        |  SELECT event_type,
-        |    CAST(CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
-        |      AS DOUBLE) / 1e6 AS DECIMAL(14,6)) AS xd,
-        |    CAST(ROW_NUMBER() OVER (PARTITION BY event_type ORDER BY bucket)
-        |      AS BIGINT) AS i
-        |  FROM hourly),
-        |base AS (
-        |  SELECT event_type, COUNT(*) AS n1,
-        |    CAST(SUM(r1) AS DECIMAL(14,6)) AS s1,
-        |    SUM(CAST(CAST(r1 AS DECIMAL(20,6)) * r1 AS DECIMAL(30,12)))
-        |      AS qq1
-        |  FROM (
-        |    SELECT event_type,
-        |      CAST(xd - LAG(xd, 1) OVER (PARTITION BY event_type ORDER BY i)
-        |        AS DECIMAL(14,6)) AS r1
-        |    FROM hm)
-        |  WHERE r1 IS NOT NULL GROUP BY event_type),
-        |bv AS (
-        |  SELECT event_type, n1,
-        |    CAST(n1 AS DOUBLE) * CAST(qq1 AS DOUBLE)
-        |      - CAST(CAST(s1 AS DECIMAL(20,6)) * s1 AS DOUBLE) AS v1
-        |  FROM base),
-        |rk AS (
-        |  SELECT a.event_type, s.k,
-        |    CAST(a.xd - b.xd AS DECIMAL(14,6)) AS rkv
-        |  FROM hm a
-        |  CROSS JOIN (VALUES (CAST(2 AS BIGINT)), (4), (8)) AS s(k)
-        |  JOIN hm b ON b.event_type = a.event_type AND b.i = a.i - s.k),
-        |ka AS (
-        |  SELECT event_type, k, COUNT(*) AS nk,
-        |    CAST(SUM(rkv) AS DECIMAL(14,6)) AS sk,
-        |    SUM(CAST(CAST(rkv AS DECIMAL(20,6)) * rkv AS DECIMAL(30,12)))
-        |      AS qqk
-        |  FROM rk GROUP BY 1, 2),
-        |kv AS (
-        |  SELECT event_type, k, nk,
-        |    CAST(nk AS DOUBLE) * CAST(qqk AS DOUBLE)
-        |      - CAST(CAST(sk AS DECIMAL(20,6)) * sk AS DOUBLE) AS vk
-        |  FROM ka)
-        |SELECT kv.event_type, kv.k, kv.nk,
-        |  ROUND((vk * CAST(n1 * n1 AS DOUBLE)) /
-        |    (CAST(k * nk * nk AS DOUBLE) * v1), 6) AS vr
-        |FROM kv JOIN bv ON bv.event_type = kv.event_type
-        |WHERE v1 > 0
-        |ORDER BY kv.event_type, kv.k""".stripMargin,
-
-    "ts56_pair_cointegration" ->
-      """WITH hourly AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
-        |  FROM events WHERE event_type IN ('click', 'view')
-        |  GROUP BY 1, 2),
-        |hm AS (
-        |  SELECT event_type, bucket,
-        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
-        |      AS DOUBLE) / 1e6 AS hm
-        |  FROM hourly),
-        |xy AS (
-        |  SELECT a.bucket, a.hm AS x, b.hm AS y
-        |  FROM hm a JOIN hm b ON a.bucket = b.bucket
-        |  WHERE a.event_type = 'click' AND b.event_type = 'view'),
-        |p2 AS (
-        |  SELECT bucket, x, y,
-        |    CAST(x AS DECIMAL(14,6)) AS xd, CAST(y AS DECIMAL(14,6)) AS yd,
-        |    CAST(CAST(CAST(x AS DECIMAL(14,6)) AS DECIMAL(20,6))
-        |      * CAST(x AS DECIMAL(14,6)) AS DECIMAL(30,12)) AS pxx,
-        |    CAST(CAST(CAST(x AS DECIMAL(14,6)) AS DECIMAL(20,6))
-        |      * CAST(y AS DECIMAL(14,6)) AS DECIMAL(30,12)) AS pxy
-        |  FROM xy),
-        |mom AS (
-        |  SELECT COUNT(*) AS n, CAST(SUM(xd) AS DECIMAL(14,6)) AS sx,
-        |    CAST(SUM(yd) AS DECIMAL(14,6)) AS sy,
-        |    SUM(pxx) AS sxx, SUM(pxy) AS sxy
-        |  FROM p2),
-        |b AS (
-        |  SELECT n,
-        |    (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-        |    (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-        |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) AS beta
-        |  FROM mom),
-        |e AS (
-        |  SELECT CAST(ROUND(y - beta * x, 6) AS DECIMAL(14,6)) AS e6,
-        |    ROW_NUMBER() OVER (ORDER BY p2.bucket) AS i, n, beta
-        |  FROM p2, b),
-        |d AS (
-        |  SELECT i, n, beta, e6, LAG(e6, 1) OVER (ORDER BY i) AS ep
-        |  FROM e),
-        |d2 AS (
-        |  SELECT n, beta, e6, ep, CAST(e6 - ep AS DECIMAL(14,6)) AS de
-        |  FROM d WHERE ep IS NOT NULL),
-        |g AS (
-        |  SELECT n, beta, COUNT(*) AS n_diff,
-        |    SUM(CAST(CAST(ep AS DECIMAL(20,6)) * ep AS DECIMAL(30,12)))
-        |      AS see,
-        |    SUM(CAST(CAST(ep AS DECIMAL(20,6)) * de AS DECIMAL(30,12)))
-        |      AS sed,
-        |    SUM(CAST(CAST(e6 AS DECIMAL(20,6)) * e6 AS DECIMAL(30,12)))
-        |      AS se2
-        |  FROM d2 GROUP BY 1, 2)
-        |SELECT CAST(n AS BIGINT) AS n, CAST(n_diff AS BIGINT) AS n_diff,
-        |  ROUND(beta, 6) AS beta,
-        |  ROUND(CAST(sed AS DOUBLE) / CAST(see AS DOUBLE), 6) AS gamma,
-        |  ROUND(1.0 + CAST(sed AS DOUBLE) / CAST(see AS DOUBLE), 6) AS rho,
-        |  ROUND(sqrt(CAST(se2 AS DOUBLE) / CAST(n_diff AS DOUBLE)), 6)
-        |    AS resid_sd
-        |FROM g""".stripMargin,
-
-    // same lag-in-arrival-order replay; `//` vs `div` agree (positive)
-    "ts59_out_of_order" ->
-      """WITH o AS (
-        |  SELECT event_type, epoch_us(ts) AS us,
-        |    LAG(epoch_us(ts), 1) OVER (PARTITION BY event_type
-        |      ORDER BY event_id) AS prev_us
-        |  FROM events)
-        |SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |  CAST(SUM(CASE WHEN us < prev_us THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_inversions,
-        |  CAST(COALESCE(MAX(CASE WHEN us < prev_us THEN prev_us - us END),
-        |    0) AS BIGINT) AS max_backstep_us,
-        |  CAST(SUM(CASE WHEN us < prev_us THEN 1 ELSE 0 END) * 1000000
-        |    // (COUNT(*) - 1) AS BIGINT) AS inv_ppm
-        |FROM o GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // identical moment pipeline; the two directions are the two SELECTs
-    // of a UNION ALL; every double expression is token-matched to the
-    // Spark tree (decimal multiplies carry the (20,6) widen — DuckDB
-    // multiplies DECIMAL(14,6) pairs in int64 and overflows without it)
-    "ts58_granger_causality" ->
-      """WITH hourly AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS bucket,
-        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx, COUNT(*) AS n
-        |  FROM events WHERE event_type IN ('click', 'view')
-        |  GROUP BY 1, 2),
-        |hm AS (
-        |  SELECT event_type, bucket,
-        |    CAST((2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n)
-        |      AS DOUBLE) / 1e6 AS hm
-        |  FROM hourly),
-        |cur AS (
-        |  SELECT a.bucket, a.hm AS c, b.hm AS v
-        |  FROM hm a JOIN hm b ON a.bucket = b.bucket
-        |  WHERE a.event_type = 'click' AND b.event_type = 'view'),
-        |pairs AS (
-        |  SELECT t.bucket, t.c, t.v, p.c AS cp, p.v AS vp
-        |  FROM cur t JOIN cur p
-        |    ON p.bucket + INTERVAL 1 HOUR = t.bucket),
-        |dirs AS (
-        |  SELECT 'click->view' AS direction, v AS y, vp AS yl, cp AS xl
-        |  FROM pairs
-        |  UNION ALL
-        |  SELECT 'view->click', c, cp, vp FROM pairs),
-        |p2 AS (
-        |  SELECT direction,
-        |    CAST(y AS DECIMAL(14,6)) AS yd,
-        |    CAST(yl AS DECIMAL(14,6)) AS y1,
-        |    CAST(xl AS DECIMAL(14,6)) AS x1
-        |  FROM dirs),
-        |p3 AS (
-        |  SELECT direction, yd, y1, x1,
-        |    CAST(CAST(yd AS DECIMAL(20,6)) * yd AS DECIMAL(30,12)) AS pyy,
-        |    CAST(CAST(y1 AS DECIMAL(20,6)) * y1 AS DECIMAL(30,12)) AS p11,
-        |    CAST(CAST(x1 AS DECIMAL(20,6)) * x1 AS DECIMAL(30,12)) AS p22,
-        |    CAST(CAST(y1 AS DECIMAL(20,6)) * yd AS DECIMAL(30,12)) AS p1y,
-        |    CAST(CAST(x1 AS DECIMAL(20,6)) * yd AS DECIMAL(30,12)) AS p2y,
-        |    CAST(CAST(y1 AS DECIMAL(20,6)) * x1 AS DECIMAL(30,12)) AS p12
-        |  FROM p2),
-        |mom AS (
-        |  SELECT direction, COUNT(*) AS n,
-        |    CAST(SUM(yd) AS DECIMAL(14,6)) AS sy,
-        |    CAST(SUM(y1) AS DECIMAL(14,6)) AS s1,
-        |    CAST(SUM(x1) AS DECIMAL(14,6)) AS s2,
-        |    SUM(pyy) AS syy, SUM(p11) AS s11, SUM(p22) AS s22,
-        |    SUM(p1y) AS s1y, SUM(p2y) AS s2y, SUM(p12) AS s12
-        |  FROM p3 GROUP BY direction),
-        |cm AS (
-        |  SELECT direction, n,
-        |    CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-        |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) AS cyy,
-        |    CAST(n AS DOUBLE) * CAST(s11 AS DOUBLE)
-        |      - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE) AS c11,
-        |    CAST(n AS DOUBLE) * CAST(s22 AS DOUBLE)
-        |      - CAST(s2 AS DOUBLE) * CAST(s2 AS DOUBLE) AS c22,
-        |    CAST(n AS DOUBLE) * CAST(s1y AS DOUBLE)
-        |      - CAST(s1 AS DOUBLE) * CAST(sy AS DOUBLE) AS c1y,
-        |    CAST(n AS DOUBLE) * CAST(s2y AS DOUBLE)
-        |      - CAST(s2 AS DOUBLE) * CAST(sy AS DOUBLE) AS c2y,
-        |    CAST(n AS DOUBLE) * CAST(s12 AS DOUBLE)
-        |      - CAST(s1 AS DOUBLE) * CAST(s2 AS DOUBLE) AS c12
-        |  FROM mom),
-        |sol AS (
-        |  SELECT direction, n, cyy, c11, c1y, c2y,
-        |    (c1y * c22 - c2y * c12) / (c11 * c22 - c12 * c12) AS b1,
-        |    (c2y * c11 - c1y * c12) / (c11 * c22 - c12 * c12) AS b2
-        |  FROM cm),
-        |rss AS (
-        |  SELECT direction, n, cyy, b1, b2,
-        |    cyy - b1 * c1y - b2 * c2y AS rssu,
-        |    cyy - c1y * c1y / c11 AS rssr
-        |  FROM sol)
-        |SELECT direction, CAST(n AS BIGINT) AS n,
-        |  ROUND(b1, 6) AS beta_ylag,
-        |  ROUND(b2, 6) AS beta_xlag,
-        |  ROUND((rssr - rssu) * (CAST(n AS DOUBLE) - 3.0) / rssu, 6)
-        |    AS f_stat,
-        |  ROUND(1.0 - rssr / cyy, 6) AS r2_r,
-        |  ROUND(1.0 - rssu / cyy, 6) AS r2_u
-        |FROM rss ORDER BY direction""".stripMargin,
-
-    // the identical CASE ladder — relation names agree string-for-string
-    "ts57_allen_relations" ->
-      """WITH iv AS (
-        |  SELECT CAST(ts AS DATE) AS day,
-        |    MIN(CASE WHEN event_type = 'error' THEN epoch_us(ts) END) AS sa,
-        |    MAX(CASE WHEN event_type = 'error' THEN epoch_us(ts) END) AS ea,
-        |    MIN(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
-        |      AS sb,
-        |    MAX(CASE WHEN event_type = 'purchase' THEN epoch_us(ts) END)
-        |      AS eb
-        |  FROM events WHERE event_type IN ('error', 'purchase')
-        |  GROUP BY 1)
-        |SELECT day, sa, ea, sb, eb,
-        |  CASE WHEN sa = sb AND ea = eb THEN 'equals'
-        |       WHEN ea < sb THEN 'before'
-        |       WHEN sa > eb THEN 'after'
-        |       WHEN ea = sb THEN 'meets'
-        |       WHEN eb = sa THEN 'met_by'
-        |       WHEN sa = sb AND ea < eb THEN 'starts'
-        |       WHEN sa = sb THEN 'started_by'
-        |       WHEN ea = eb AND sa > sb THEN 'finishes'
-        |       WHEN ea = eb THEN 'finished_by'
-        |       WHEN sa > sb AND ea < eb THEN 'during'
-        |       WHEN sa < sb AND ea > eb THEN 'contains'
-        |       WHEN sa < sb THEN 'overlaps'
-        |       ELSE 'overlapped_by' END AS relation
-        |FROM iv WHERE sa IS NOT NULL AND sb IS NOT NULL
-        |ORDER BY day""".stripMargin,
-
-    // integer micro-unit hourly means -> all-integer S / ties / variance
-    // polynomial; z and tau are the identical one-tree IEEE spellings
-    "ts60_mann_kendall" ->
-      s"""WITH $hourlyMicroSql,
-        |pr AS (
-        |  SELECT a.g,
-        |    CASE WHEN b.m > a.m THEN 1 WHEN b.m < a.m THEN -1 ELSE 0 END
-        |      AS sgn
-        |  FROM hm a JOIN hm b ON a.g = b.g AND a.bucket < b.bucket),
-        |s AS (SELECT g, CAST(SUM(sgn) AS BIGINT) AS s_stat FROM pr
-        |      GROUP BY g),
-        |tie AS (
-        |  SELECT g,
-        |    CAST(SUM(t * (t - 1) * (2 * t + 5)) AS BIGINT) AS tie_term
-        |  FROM (SELECT g, m, COUNT(*) AS t FROM hm GROUP BY g, m)
-        |  GROUP BY g),
-        |nn AS (SELECT g, COUNT(*) AS n FROM hm GROUP BY g),
-        |vv AS (
-        |  SELECT s.g, nn.n, s.s_stat, tie.tie_term,
-        |    CAST(nn.n * (nn.n - 1) * (2 * nn.n + 5) - tie.tie_term
-        |      AS BIGINT) AS var_num
-        |  FROM s JOIN tie ON s.g = tie.g JOIN nn ON s.g = nn.g)
-        |SELECT g AS event_type, n, s_stat, tie_term, var_num,
-        |  ROUND(CASE WHEN s_stat > 0 THEN
-        |      (CAST(s_stat AS DOUBLE) - 1.0)
-        |        / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-        |    WHEN s_stat < 0 THEN
-        |      (CAST(s_stat AS DOUBLE) + 1.0)
-        |        / sqrt(CAST(var_num AS DOUBLE) / 18.0)
-        |    ELSE 0.0 END, 6) AS z,
-        |  ROUND(CAST(s_stat AS DOUBLE) /
-        |    (CAST(n AS DOUBLE) * (CAST(n AS DOUBLE) - 1.0) / 2.0), 6) AS tau
-        |FROM vv ORDER BY event_type""".stripMargin,
-
-    // integer gains/losses, 14-row window sums, RSI as the exact
-    // floor-division in micro-units (both operands non-negative)
-    "ts61_rsi" ->
-      s"""WITH $hourlyMicroSql,
-        |d AS (
-        |  SELECT g, bucket,
-        |    m - lag(m, 1) OVER (PARTITION BY g ORDER BY bucket) AS delta
-        |  FROM hm),
-        |gl AS (
-        |  SELECT g, bucket,
-        |    GREATEST(delta, 0) AS gain, GREATEST(-delta, 0) AS loss
-        |  FROM d WHERE delta IS NOT NULL),
-        |r AS (
-        |  SELECT g, bucket,
-        |    ROW_NUMBER() OVER (PARTITION BY g ORDER BY bucket) AS rn,
-        |    CAST(SUM(gain) OVER (PARTITION BY g ORDER BY bucket
-        |      ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS BIGINT) AS g14,
-        |    CAST(SUM(loss) OVER (PARTITION BY g ORDER BY bucket
-        |      ROWS BETWEEN 13 PRECEDING AND CURRENT ROW) AS BIGINT) AS l14
-        |  FROM gl)
-        |SELECT g AS event_type, bucket, g14 AS gain_sum, l14 AS loss_sum,
-        |  CASE WHEN g14 + l14 = 0 THEN CAST(50.0 AS DOUBLE)
-        |    ELSE CAST((g14 * 100000000) // (g14 + l14) AS DOUBLE) / 1e6
-        |  END AS rsi
-        |FROM r WHERE rn >= 14 ORDER BY event_type, bucket""".stripMargin,
-
-    // identical integer coding (equal-to-threshold counts as below), runs
-    // by lag-breaks, one-tree z with the degenerate-series guard
-    "ts62_runs_test" ->
-      s"""WITH $hourlyMicroSql,
-        |thr AS (SELECT g, SUM(m) // COUNT(*) AS tau_m FROM hm GROUP BY g),
-        |coded AS (
-        |  SELECT hm.g, hm.bucket,
-        |    CASE WHEN hm.m > thr.tau_m THEN 1 ELSE 0 END AS sgn
-        |  FROM hm JOIN thr ON hm.g = thr.g),
-        |brks AS (
-        |  SELECT g, sgn,
-        |    lag(sgn, 1) OVER (PARTITION BY g ORDER BY bucket) AS prev
-        |  FROM coded),
-        |agg AS (
-        |  SELECT g, COUNT(*) AS n, CAST(SUM(sgn) AS BIGINT) AS n_above,
-        |    CAST(SUM(CASE WHEN prev IS NULL OR sgn <> prev THEN 1 ELSE 0
-        |      END) AS BIGINT) AS n_runs
-        |  FROM brks GROUP BY g)
-        |SELECT g AS event_type, n, n_above, n_runs,
-        |  ROUND(CASE WHEN n_above = 0 OR n_above = n THEN 0.0 ELSE
-        |    (CAST(n_runs AS DOUBLE) -
-        |     (1.0 + 2.0 * CAST(n_above * (n - n_above) AS DOUBLE)
-        |      / CAST(n AS DOUBLE))) /
-        |    sqrt(2.0 * CAST(n_above * (n - n_above) AS DOUBLE)
-        |     * (2.0 * CAST(n_above * (n - n_above) AS DOUBLE)
-        |        - CAST(n AS DOUBLE))
-        |     / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
-        |        * (CAST(n AS DOUBLE) - 1.0))) END, 6) AS z
-        |FROM agg ORDER BY event_type""".stripMargin,
-
-    // same strictly-greater-than-running-max coding (first row a record
-    // by vacuous truth); all integer micro-units
-    "ts63_record_highs" ->
-      s"""WITH $hourlyMicroSql,
-        |r AS (
-        |  SELECT g, bucket, m,
-        |    MAX(m) OVER (PARTITION BY g ORDER BY bucket
-        |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |  FROM hm),
-        |coded AS (
-        |  SELECT g, bucket, m,
-        |    CASE WHEN pm IS NULL OR m > pm THEN 1 ELSE 0 END AS is_rec
-        |  FROM r)
-        |SELECT g AS event_type, COUNT(*) AS n,
-        |  CAST(SUM(is_rec) AS BIGINT) AS n_records,
-        |  MIN(CASE WHEN is_rec = 1 THEN bucket END) AS first_record,
-        |  MAX(CASE WHEN is_rec = 1 THEN bucket END) AS last_record,
-        |  MAX(m) AS max_micro
-        |FROM coded GROUP BY g ORDER BY event_type""".stripMargin,
-
-    // identical grid/islands construction; counts pinned BIGINT
-    "ts64_downtime_sla" ->
-      """WITH eh AS (
-        |  SELECT DISTINCT CAST(ts AS DATE) AS day,
-        |    CAST(extract(hour FROM ts) AS BIGINT) AS hr
-        |  FROM events WHERE event_type = 'error'),
-        |grid AS (
-        |  SELECT d.day, CAST(t.hr AS BIGINT) AS hr
-        |  FROM (SELECT DISTINCT day FROM eh) d, range(0, 24) t(hr)),
-        |clear AS (
-        |  SELECT g.day, g.hr FROM grid g
-        |  WHERE NOT EXISTS (SELECT 1 FROM eh
-        |    WHERE eh.day = g.day AND eh.hr = g.hr)),
-        |runs AS (
-        |  SELECT day,
-        |    hr - (ROW_NUMBER() OVER (PARTITION BY day ORDER BY hr) - 1)
-        |      AS grp
-        |  FROM clear),
-        |longest AS (
-        |  SELECT day, CAST(MAX(run_len) AS BIGINT) AS longest_clear_run
-        |  FROM (SELECT day, grp, COUNT(*) AS run_len FROM runs
-        |        GROUP BY day, grp)
-        |  GROUP BY day)
-        |SELECT e.day, COUNT(*) AS error_hours,
-        |  24 - COUNT(*) AS uptime_hours,
-        |  COALESCE(MAX(l.longest_clear_run), 0) AS longest_clear_run
-        |FROM eh e LEFT JOIN longest l ON e.day = l.day
-        |GROUP BY e.day ORDER BY e.day""".stripMargin,
-
-    // identical integer ECDF cross-multiplication; distinct mvals per
-    // group make the default RANGE cumsum frame equal to ROWS
-    "ts65_ks_two_sample" ->
-      """WITH pts AS (
-        |  SELECT event_type AS g,
-        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS mval,
-        |    CASE WHEN extract(day FROM ts) <= 15 THEN 1 ELSE 0 END AS h1
-        |  FROM events),
-        |cells AS (
-        |  SELECT g, mval, CAST(SUM(h1) AS BIGINT) AS c1,
-        |    CAST(SUM(1 - h1) AS BIGINT) AS c2
-        |  FROM pts GROUP BY g, mval),
-        |cum AS (
-        |  SELECT g, c1, c2,
-        |    CAST(SUM(c1) OVER (PARTITION BY g ORDER BY mval) AS BIGINT)
-        |      AS cum1,
-        |    CAST(SUM(c2) OVER (PARTITION BY g ORDER BY mval) AS BIGINT)
-        |      AS cum2
-        |  FROM cells),
-        |tot AS (
-        |  SELECT g, CAST(SUM(c1) AS BIGINT) AS n1,
-        |    CAST(SUM(c2) AS BIGINT) AS n2
-        |  FROM cells GROUP BY g),
-        |d AS (
-        |  SELECT c.g, t.n1, t.n2,
-        |    MAX(abs(c.cum1 * t.n2 - c.cum2 * t.n1)) AS d_num
-        |  FROM cum c JOIN tot t ON c.g = t.g
-        |  GROUP BY c.g, t.n1, t.n2)
-        |SELECT g AS event_type, n1, n2, d_num,
-        |  ROUND(CAST(d_num AS DOUBLE)
-        |    / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE)), 6) AS d,
-        |  CAST(d_num AS DOUBLE)
-        |    / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))
-        |    > 1.358 * sqrt((CAST(n1 AS DOUBLE) + CAST(n2 AS DOUBLE))
-        |      / (CAST(n1 AS DOUBLE) * CAST(n2 AS DOUBLE))) AS reject
-        |FROM d ORDER BY event_type""".stripMargin,
-
-    // int64 decimal rendering is portable (float formatting is not);
-    // the Benford CASE literals are the identical spellings
-    "ts66_benford_digits" ->
-      s"""WITH pts AS (
-        |  SELECT event_type,
-        |    CAST(CAST(value AS DECIMAL(18,6)) * 1000000 AS BIGINT) AS mval
-        |  FROM events),
-        |pos AS (
-        |  SELECT event_type,
-        |    CAST(substr(CAST(mval AS VARCHAR), 1, 1) AS BIGINT) AS digit
-        |  FROM pts WHERE mval > 0),
-        |obs AS (SELECT event_type, digit, COUNT(*) AS obs FROM pos
-        |        GROUP BY 1, 2),
-        |tot AS (SELECT event_type, COUNT(*) AS n FROM pos GROUP BY 1),
-        |j AS (
-        |  SELECT o.event_type, o.digit, o.obs, t.n, $BenfordPCase AS p
-        |  FROM obs o JOIN tot t ON o.event_type = t.event_type)
-        |SELECT event_type, digit, obs, n,
-        |  ROUND(CAST(n AS DOUBLE) * p, 6) AS expected,
-        |  ROUND((CAST(obs AS DOUBLE) - CAST(n AS DOUBLE) * p)
-        |    * (CAST(obs AS DOUBLE) - CAST(n AS DOUBLE) * p)
-        |    / (CAST(n AS DOUBLE) * p), 6) AS chi2_term
-        |FROM j ORDER BY event_type, digit""".stripMargin,
-
-    // identical strict-both-neighbors rule and −1-floored ±2 prominence
-    "ts67_peaks" ->
-      s"""WITH $hourlyMicroSql,
-        |nb AS (
-        |  SELECT g, bucket, m,
-        |    lag(m, 1) OVER w AS pm1, lead(m, 1) OVER w AS nm1,
-        |    lag(m, 2) OVER w AS pm2, lead(m, 2) OVER w AS nm2
-        |  FROM hm WINDOW w AS (PARTITION BY g ORDER BY bucket))
-        |SELECT g AS event_type, bucket, m,
-        |  m - GREATEST(COALESCE(pm1, -1), COALESCE(nm1, -1),
-        |    COALESCE(pm2, -1), COALESCE(nm2, -1)) AS prominence
-        |FROM nb
-        |WHERE pm1 IS NOT NULL AND nm1 IS NOT NULL
-        |  AND m > pm1 AND m > nm1
-        |ORDER BY event_type, bucket""".stripMargin,
-
-    // identical (value, event_id)-ranked trim set; counts pinned BIGINT
-    "ts68_trimmed_mean" ->
-      """WITH rk AS (
-        |  SELECT event_type AS g, event_id, value,
-        |    ROW_NUMBER() OVER (PARTITION BY event_type
-        |      ORDER BY value, event_id) AS r,
-        |    COUNT(*) OVER (PARTITION BY event_type) AS n
-        |  FROM events),
-        |ag AS (
-        |  SELECT g, MAX(n) AS n, MAX(n // 10) AS k_trim,
-        |    SUM(CASE WHEN r > n // 10 AND r <= n - n // 10
-        |      THEN CAST(value AS DECIMAL(18,6)) END) AS tsum,
-        |    CAST(SUM(CASE WHEN r > n // 10 AND r <= n - n // 10
-        |      THEN 1 END) AS BIGINT) AS tn,
-        |    SUM(CAST(value AS DECIMAL(18,6))) AS sx
-        |  FROM rk GROUP BY g)
-        |SELECT g AS event_type, CAST(n AS BIGINT) AS n,
-        |  CAST(k_trim AS BIGINT) AS k_trim,
-        |  (2 * CAST(tsum * 1000000 AS BIGINT) + tn) // (2 * tn)
-        |    AS trimmed_micro,
-        |  (2 * CAST(sx * 1000000 AS BIGINT) + n) // (2 * n) AS mean_micro
-        |FROM ag ORDER BY event_type""".stripMargin,
-
-    // identical integer chart geometry and 1000/2660 cross-multiplied
-    // breach rule
-    "ts69_individuals_chart" ->
-      s"""WITH $hourlyMicroSql,
-        |lg AS (
-        |  SELECT g, bucket, m,
-        |    lag(m, 1) OVER (PARTITION BY g ORDER BY bucket) AS pm
-        |  FROM hm),
-        |geom AS (
-        |  SELECT g, COUNT(*) AS n_hours, SUM(m) AS sm,
-        |    SUM(CASE WHEN pm IS NOT NULL THEN abs(m - pm) END) AS smr,
-        |    CAST(SUM(CASE WHEN pm IS NOT NULL THEN 1 END) AS BIGINT)
-        |      AS nmr
-        |  FROM lg GROUP BY g),
-        |gm AS (
-        |  SELECT g, CAST(n_hours AS BIGINT) AS n_hours,
-        |    (2 * CAST(sm AS BIGINT) + n_hours) // (2 * n_hours) AS center,
-        |    (2 * CAST(smr AS BIGINT) + nmr) // (2 * GREATEST(nmr, 1))
-        |      AS mrbar
-        |  FROM geom),
-        |coded AS (
-        |  SELECT l.g, gm.n_hours, gm.center, gm.mrbar, l.bucket,
-        |    CASE WHEN abs(l.m - gm.center) * 1000 > gm.mrbar * 2660
-        |      THEN 1 ELSE 0 END AS breach
-        |  FROM lg l JOIN gm ON l.g = gm.g)
-        |SELECT g AS event_type, n_hours, center, mrbar,
-        |  CAST(SUM(breach) AS BIGINT) AS n_breach,
-        |  MIN(CASE WHEN breach = 1 THEN bucket END) AS first_breach
-        |FROM coded GROUP BY g, n_hours, center, mrbar
-        |ORDER BY event_type""".stripMargin,
-
-    // identical i ↔ i+⌊n/2⌋ pairing and one-tree z (sqrt is
-    // IEEE-correctly-rounded on both engines)
-    "ts70_cox_stuart" ->
-      s"""WITH $hourlyMicroSql,
-        |idx AS (
-        |  SELECT g, m,
-        |    ROW_NUMBER() OVER (PARTITION BY g ORDER BY bucket) AS i,
-        |    COUNT(*) OVER (PARTITION BY g) AS n
-        |  FROM hm),
-        |p AS (
-        |  SELECT a.g,
-        |    CAST(SUM(CASE WHEN b.m > a.m THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_pos,
-        |    CAST(SUM(CASE WHEN b.m < a.m THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_neg
-        |  FROM idx a JOIN idx b
-        |    ON a.g = b.g AND b.i = a.i + (a.n - a.n // 2)
-        |  WHERE a.i <= a.n // 2
-        |  GROUP BY a.g)
-        |SELECT g AS event_type, n_pos, n_neg,
-        |  n_pos + n_neg AS n_pairs,
-        |  CASE WHEN n_pos + n_neg = 0 THEN 0.0 ELSE
-        |    CAST(2 * GREATEST(n_pos, n_neg) - (n_pos + n_neg) AS DOUBLE)
-        |    / sqrt(CAST(n_pos + n_neg AS DOUBLE)) END AS z
-        |FROM p ORDER BY event_type""".stripMargin,
-
-    // identical closed-form index moments and one-tree normal equations
-    "ts71_ols_trend" ->
-      s"""WITH $hourlyMicroSql,
-        |idx AS (
-        |  SELECT g, m,
-        |    ROW_NUMBER() OVER (PARTITION BY g ORDER BY bucket) AS i
-        |  FROM hm),
-        |ag AS (
-        |  SELECT g, COUNT(*) AS n,
-        |    CAST(SUM(m) AS BIGINT) AS sy,
-        |    CAST(SUM(i * m) AS BIGINT) AS sxy
-        |  FROM idx GROUP BY g)
-        |SELECT g AS event_type, CAST(n AS BIGINT) AS n, sy, sxy,
-        |  CAST(n * sxy - (n * (n + 1) // 2) * sy AS DOUBLE)
-        |    / CAST(n * (n * (n + 1) * (2 * n + 1) // 6)
-        |    - (n * (n + 1) // 2) * (n * (n + 1) // 2) AS DOUBLE)
-        |    AS slope_micro_per_hour,
-        |  (CAST(sy AS DOUBLE)
-        |    - CAST(n * sxy - (n * (n + 1) // 2) * sy AS DOUBLE)
-        |    / CAST(n * (n * (n + 1) * (2 * n + 1) // 6)
-        |    - (n * (n + 1) // 2) * (n * (n + 1) // 2) AS DOUBLE)
-        |    * CAST(n * (n + 1) // 2 AS DOUBLE)) / CAST(n AS DOUBLE)
-        |    AS intercept_micro
-        |FROM ag ORDER BY event_type""".stripMargin
-  )
 
   /** The ts21 closed-form EMA kernel as a DuckDB CTE pair (`<out>_pairs`,
     * `<out>`) over a (g, i, x) source — shared by the ts22 oracle's two

@@ -41,7 +41,6 @@ object VectorOps {
     * Ties break on c_id, so results are byte-identical to `row_number`
     * over (sim DESC, c_id). */
   def cosineTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     val topk = udaf(new graft.functions.TopKAggregator(k))
     fanout(corpus)
       .crossJoin(broadcast(queries))
@@ -72,38 +71,75 @@ object VectorOps {
     * fallback: q38's block-collect aggregate ran >2× slower under a
     * blanket raise. The child session (q40's staging discipline) keeps
     * the setting invisible to every other query, including concurrent
-    * ones (ConcurrencySpec). */
+    * ones (ConcurrencySpec). A child session starts from the parent's
+    * extensions, not its registered functions, so it gets the native
+    * functions here when the parent has no GraftExtensions. */
   private[graft] def withHashAggBudget(f: Q): Q = (s, dir) => {
     val s2 = s.newSession()
+    graft.functions.VectorFunctions.ensure(s2)
     s2.conf.set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
       "65536")
     f(s2, dir)
   }
 
-  val queries: Map[String, Q] = Map(
-    "v01_cosine_topk" -> ((s, dir) => {
+  val specs: Seq[QuerySpec] = Seq(
+    QuerySpec("v01_cosine_topk", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 0"))
         .select(col("vec_id").as("q_id"), col("emb").as("qe"), col("norm").as("qn"))
       cosineTopK(e, qs, 5)
-    }),
+    },
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e WHERE vec_id % 100 = 0),
+        |p AS (
+        |  SELECT q_id, vec_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e, q WHERE vec_id <> q_id),
+        |r AS (
+        |  SELECT q_id, vec_id, sim,
+        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rnk
+        |  FROM p)
+        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, vec_id AS c_id, sim
+        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
 
     // per-label centroids: posexplode → (label, dim) mean — one hash agg
-    "v02_label_centroids" -> ((s, dir) =>
+    QuerySpec("v02_label_centroids", (s, dir) =>
       emb(s, dir)
         .select(col("label"), posexplode(col("emb")).as(Seq("pos", "val")))
         .groupBy(col("label"), col("pos").cast("long").as("pos"))
         .agg(round(avg(col("val")), 6).as("centroid"), count(lit(1)).as("n"))
-        .orderBy(col("label"), col("pos")))
-,
+        .orderBy(col("label"), col("pos")),
+      """SELECT label, CAST(sub - 1 AS BIGINT) AS pos,
+        |  ROUND(AVG(val), 6) AS centroid, COUNT(*) AS n
+        |FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
+        |        generate_subscripts(embedding, 1) AS sub FROM embeddings)
+        |GROUP BY label, pos ORDER BY label, pos""".stripMargin),
     // LSH-bucketed near-dup (the ANN scale path): see [[lshPairs]].
     // Density-scaled width (derives the original (16,4,4) at gate scale —
     // oracle unchanged); 62-plane budget keeps all 4 bands at any width.
-    "v03_ann_lsh" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v03_ann_lsh", (s, dir) =>
       lshPairsScaled(emb(s, dir), maxBands = 4, planesBudget = 62)
-        .orderBy(col("vec_a"), col("vec_b"))
-    }),
+        .orderBy(col("vec_a"), col("vec_b")),
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |s AS (SELECT vec_id, emb, norm,
+        |  CAST(list_sum(list_transform(range(0, 16), i ->
+        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
+        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
+        |    >= 0 THEN (1 << CAST(i AS INT)) ELSE 0 END)) AS INT) AS sig FROM e),
+        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
+        |          FROM s, range(0, 4) t(b)),
+        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
+        |      FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
+        |x AS (SELECT vec_a, vec_b,
+        |        round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
+        |      FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
+        |SELECT vec_a, vec_b, sim FROM x WHERE sim >= 0.3 ORDER BY vec_a, vec_b""".stripMargin),
 
     // ANN quality measurement: recall of the LSH path (v03's pipeline)
     // against exact all-pairs ground truth at the same sim >= 0.3
@@ -112,8 +148,7 @@ object VectorOps {
     // path: recall is measured on a bounded sample precisely so the
     // O(n²) ground truth stays affordable while the LSH path under test
     // is the same linear-scale pipeline as v03.
-    "v04_ann_recall" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v04_ann_recall", (s, dir) => {
       val e = recallSample(s, dir)
       val a = e.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"),
         col("norm").as("norm_a"))
@@ -132,7 +167,36 @@ object VectorOps {
         .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
         .withColumn("recall",
           round(col("n_hit").cast("double") / col("n_exact"), 6))
-    }),
+    },
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings WHERE vec_id % 3 = 0),
+        |s AS (SELECT vec_id, emb, norm,
+        |  CAST(list_sum(list_transform(range(0, 16), i ->
+        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
+        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
+        |    >= 0 THEN (1 << CAST(i AS INT)) ELSE 0 END)) AS INT) AS sig FROM e),
+        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
+        |          FROM s, range(0, 4) t(b)),
+        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
+        |      FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
+        |lsh AS (SELECT vec_a, vec_b
+        |        FROM (SELECT vec_a, vec_b,
+        |                round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
+        |              FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
+        |        WHERE sim >= 0.3),
+        |exact AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+        |          FROM e a, e b
+        |          WHERE a.vec_id < b.vec_id
+        |            AND round(list_dot_product(a.emb, b.emb) / (a.norm * b.norm), 6) >= 0.3),
+        |hit AS (SELECT vec_a, vec_b FROM lsh l WHERE EXISTS
+        |  (SELECT 1 FROM exact x WHERE x.vec_a = l.vec_a AND x.vec_b = l.vec_b))
+        |SELECT (SELECT COUNT(*) FROM exact) AS n_exact,
+        |  (SELECT COUNT(*) FROM lsh) AS n_lsh,
+        |  (SELECT COUNT(*) FROM hit) AS n_hit,
+        |  ROUND(CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
+        |      / (SELECT COUNT(*) FROM exact), 6) AS recall""".stripMargin),
 
     // PRODUCTION-recall ANN configuration: the same LSH pipeline as v03/v04
     // with the dial turned to production quality — 60 planes in 15 4-bit
@@ -143,8 +207,7 @@ object VectorOps {
     // recall even probing 8/10 cells, so the band dial is the right one.
     // Scale shape unchanged: signatures map-side, one (band, value)-keyed
     // shuffle, bands multiply shuffle volume linearly, never O(n²).
-    "v07_ann_recall_hi" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v07_ann_recall_hi", (s, dir) => {
       val e = recallSample(s, dir)
       val a = e.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"),
         col("norm").as("norm_a"))
@@ -169,7 +232,37 @@ object VectorOps {
         .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
         .withColumn("recall",
           round(col("n_hit").cast("double") / col("n_exact"), 6))
-    }),
+    },
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings WHERE vec_id % 3 = 0),
+        |s AS (SELECT vec_id, emb, norm,
+        |  CAST(list_sum(list_transform(range(0, 60), i ->
+        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
+        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
+        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
+        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
+        |          FROM s, range(0, 15) t(b)),
+        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
+        |      FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
+        |lsh AS (SELECT vec_a, vec_b
+        |        FROM (SELECT vec_a, vec_b,
+        |                round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
+        |              FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
+        |        WHERE sim >= 0.3),
+        |exact AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+        |          FROM e a, e b
+        |          WHERE a.vec_id < b.vec_id
+        |            AND round(list_dot_product(a.emb, b.emb) / (a.norm * b.norm), 6) >= 0.3),
+        |hit AS (SELECT vec_a, vec_b FROM lsh l WHERE EXISTS
+        |  (SELECT 1 FROM exact x WHERE x.vec_a = l.vec_a AND x.vec_b = l.vec_b))
+        |SELECT (SELECT COUNT(*) FROM exact) AS n_exact,
+        |  (SELECT COUNT(*) FROM p) AS n_cand,
+        |  (SELECT COUNT(*) FROM lsh) AS n_lsh,
+        |  (SELECT COUNT(*) FROM hit) AS n_hit,
+        |  ROUND(CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
+        |      / (SELECT COUNT(*) FROM exact), 6) AS recall""".stripMargin),
 
     // HIGH-recall ANN point completing the recall/cost curve
     // (v04 0.512 → v07 0.936 → v08 ≥0.95): v07's 60-plane/15-band pipeline
@@ -179,8 +272,7 @@ object VectorOps {
     // stages (the probe fan-out lives only inside the existing
     // (band, value) exchange). n_cand is the cost column: pairs
     // exact-scored, the price of the last recall decile.
-    "v08_ann_recall_probe" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v08_ann_recall_probe", (s, dir) => {
       val e = recallSample(s, dir)
       val a = e.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"),
         col("norm").as("norm_a"))
@@ -206,7 +298,44 @@ object VectorOps {
         .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
         .withColumn("recall",
           round(col("n_hit").cast("double") / col("n_exact"), 6))
-    }),
+    },
+      // v07's replay plus a `probes` CTE (band values ∪ their four 1-bit
+      // flips) on one join side — Hamming ≤ 1 band collisions, same as the
+      // engine's multi-probe
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings WHERE vec_id % 3 = 0),
+        |s AS (SELECT vec_id, emb, norm,
+        |  CAST(list_sum(list_transform(range(0, 60), i ->
+        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
+        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
+        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
+        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
+        |          FROM s, range(0, 15) t(b)),
+        |probes AS (SELECT vec_id, b, bv FROM bands
+        |           UNION ALL
+        |           SELECT vec_id, b, xor(bv, 1 << CAST(k AS INT)) AS bv
+        |           FROM bands, range(0, 4) f(k)),
+        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
+        |      FROM bands a JOIN probes c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
+        |lsh AS (SELECT vec_a, vec_b
+        |        FROM (SELECT vec_a, vec_b,
+        |                round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
+        |              FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
+        |        WHERE sim >= 0.3),
+        |exact AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+        |          FROM e a, e b
+        |          WHERE a.vec_id < b.vec_id
+        |            AND round(list_dot_product(a.emb, b.emb) / (a.norm * b.norm), 6) >= 0.3),
+        |hit AS (SELECT vec_a, vec_b FROM lsh l WHERE EXISTS
+        |  (SELECT 1 FROM exact x WHERE x.vec_a = l.vec_a AND x.vec_b = l.vec_b))
+        |SELECT (SELECT COUNT(*) FROM exact) AS n_exact,
+        |  (SELECT COUNT(*) FROM p) AS n_cand,
+        |  (SELECT COUNT(*) FROM lsh) AS n_lsh,
+        |  (SELECT COUNT(*) FROM hit) AS n_hit,
+        |  ROUND(CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
+        |      / (SELECT COUNT(*) FROM exact), 6) AS recall""".stripMargin),
 
     // The PRODUCTION near-dup pair query at the measured-1.0-recall
     // configuration (v08's dial: 60 planes / 15×4-bit bands + 1-bit
@@ -219,14 +348,35 @@ object VectorOps {
     // shuffle, id-only candidate dedup, broadcast payload re-attach,
     // codegen'd exact scoring. This is also the query the 32×/64×
     // scale-up experiment times (PLANS.md).
-    "v09_ann_pairs_hi" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v09_ann_pairs_hi", (s, dir) =>
       // density-scaled width (derives (60,15,4) at gate scale — oracle
       // unchanged): the fix for this query's historical 32× out-of-disk
       // DNF (VLADDER provenance) — candidate volume is now linear in n
       lshPairsScaled(emb(s, dir), maxBands = 15, planesBudget = 60,
-        multiProbe = true).orderBy(col("vec_a"), col("vec_b"))
-    }),
+        multiProbe = true).orderBy(col("vec_a"), col("vec_b")),
+      // v08's signature/probe replay over the FULL corpus, emitting the
+      // thresholded pair list itself (the production output)
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |s AS (SELECT vec_id, emb, norm,
+        |  CAST(list_sum(list_transform(range(0, 60), i ->
+        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
+        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
+        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
+        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
+        |          FROM s, range(0, 15) t(b)),
+        |probes AS (SELECT vec_id, b, bv FROM bands
+        |           UNION ALL
+        |           SELECT vec_id, b, xor(bv, 1 << CAST(k AS INT)) AS bv
+        |           FROM bands, range(0, 4) f(k)),
+        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
+        |      FROM bands a JOIN probes c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
+        |x AS (SELECT vec_a, vec_b,
+        |        round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
+        |      FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
+        |SELECT vec_a, vec_b, sim FROM x WHERE sim >= 0.3 ORDER BY vec_a, vec_b""".stripMargin),
 
     // EMBEDDING-COSINE NEAR-DUP DEDUP — the vector-side twin of tx14: v09's
     // production pair list (cosine ≥ 0.3 through the measured-1.0-recall
@@ -237,8 +387,7 @@ object VectorOps {
     // re-encodings that string-level MinHash can't see). Cost on top of v09:
     // 2-3 label-propagation rounds over the (vec_id, label) frame — two
     // vertex-keyed shuffles of two longs per round, nothing corpus-sized.
-    "v10_embedding_dedup" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v10_embedding_dedup", (s, dir) => {
       // density-scaled width (gate scale derives the original (60,15,4)
       // dials exactly — oracle unchanged); fixed width was the ladder's
       // 32× DNF
@@ -252,7 +401,43 @@ object VectorOps {
         .withColumn("is_kept", col("canonical_id") === col("vec_id"))
         .select(col("vec_id"), col("canonical_id"), col("is_kept"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // v09's pair replay + transitive closure to the per-component minimum
+      // id (same WITH RECURSIVE reachability shape as tx14's oracle), left
+      // joined back so singleton vectors keep themselves
+      """WITH RECURSIVE e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |s AS (SELECT vec_id, emb, norm,
+        |  CAST(list_sum(list_transform(range(0, 60), i ->
+        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
+        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
+        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
+        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
+        |          FROM s, range(0, 15) t(b)),
+        |probes AS (SELECT vec_id, b, bv FROM bands
+        |           UNION ALL
+        |           SELECT vec_id, b, xor(bv, 1 << CAST(k AS INT)) AS bv
+        |           FROM bands, range(0, 4) f(k)),
+        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
+        |      FROM bands a JOIN probes c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
+        |pairs AS (SELECT vec_a AS src, vec_b AS dst
+        |          FROM (SELECT vec_a, vec_b,
+        |                  round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
+        |                FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
+        |          WHERE sim >= 0.3),
+        |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
+        |verts AS (SELECT DISTINCT src AS id FROM sym),
+        |reach(id, r) AS (
+        |  SELECT id, id FROM verts
+        |  UNION
+        |  SELECT sm.src, reach.r FROM sym sm JOIN reach ON sm.dst = reach.id),
+        |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id)
+        |SELECT em.vec_id, COALESCE(comp.label, em.vec_id) AS canonical_id,
+        |  COALESCE(comp.label, em.vec_id) = em.vec_id AS is_kept
+        |FROM embeddings em LEFT JOIN comp ON comp.id = em.vec_id
+        |ORDER BY em.vec_id""".stripMargin),
 
     // IVF (inverted-file) ANN — the other classic scale path next to LSH
     // (v03): a coarse quantizer (per-label centroids, the same aggregate as
@@ -266,17 +451,49 @@ object VectorOps {
     // (no 10× window shuffle, partial combine applies); the probe set is
     // filtered to queries BEFORE any window; the candidate join broadcasts
     // the probes so the corpus side never shuffles at all.
-    "v05_ivf_ann" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
-      ivfTopK(emb(s, dir)).orderBy(col("q_id"), col("rnk"))
-    }),
+    QuerySpec("v05_ivf_ann", (s, dir) =>
+      ivfTopK(emb(s, dir)).orderBy(col("q_id"), col("rnk")),
+      """WITH e AS (
+        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |cd AS (
+        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
+        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
+        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
+        |  GROUP BY label, sub),
+        |cent AS (
+        |  SELECT label AS clabel, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnorm
+        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd GROUP BY label)),
+        |sims AS (
+        |  SELECT vec_id, emb, norm, clabel,
+        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
+        |  FROM e, cent),
+        |assign AS (
+        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
+        |  WHERE crn = 1),
+        |probes AS (
+        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims WHERE vec_id % 100 = 0)
+        |  WHERE crn <= 2),
+        |cand AS (
+        |  SELECT q_id, vec_id AS c_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
+        |r AS (
+        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY sim DESC, c_id) AS rnk FROM cand)
+        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim
+        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
 
     // IVF quality measurement, symmetric to v04's LSH recall: fraction of
     // the exact brute-force top-5 (v01's ground truth) that the 2-probe IVF
     // path recovers. Misses are exactly the true neighbours living outside
     // the probed cells — the nprobe dial's cost made visible.
-    "v06_ivf_recall" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v06_ivf_recall", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 0"))
         .select(col("vec_id").as("q_id"), col("emb").as("qe"), col("norm").as("qn"))
@@ -287,7 +504,56 @@ object VectorOps {
         .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
         .withColumn("recall_at_5",
           round(col("n_hit").cast("double") / col("n_exact"), 6))
-    }),
+    },
+      """WITH e AS (
+        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e WHERE vec_id % 100 = 0),
+        |px AS (
+        |  SELECT q_id, vec_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e, q WHERE vec_id <> q_id),
+        |rx AS (
+        |  SELECT q_id, vec_id AS c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY sim DESC, vec_id) AS rnk FROM px),
+        |exact AS (SELECT q_id, c_id FROM rx WHERE rnk <= 5),
+        |cd AS (
+        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
+        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
+        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
+        |  GROUP BY label, sub),
+        |cent AS (
+        |  SELECT label AS clabel, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnorm
+        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd GROUP BY label)),
+        |sims AS (
+        |  SELECT vec_id, emb, norm, clabel,
+        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
+        |  FROM e, cent),
+        |assign AS (
+        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
+        |  WHERE crn = 1),
+        |probes AS (
+        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims WHERE vec_id % 100 = 0)
+        |  WHERE crn <= 2),
+        |cand AS (
+        |  SELECT q_id, vec_id AS c_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
+        |riv AS (
+        |  SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY sim DESC, c_id) AS rnk FROM cand),
+        |ivf AS (SELECT q_id, c_id FROM riv WHERE rnk <= 5),
+        |hit AS (SELECT q_id, c_id FROM ivf i WHERE EXISTS
+        |  (SELECT 1 FROM exact x WHERE x.q_id = i.q_id AND x.c_id = i.c_id))
+        |SELECT (SELECT COUNT(*) FROM exact) AS n_exact,
+        |  (SELECT COUNT(*) FROM hit) AS n_hit,
+        |  ROUND(CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
+        |      / (SELECT COUNT(*) FROM exact), 6) AS recall_at_5""".stripMargin),
 
     // IVF NPROBE SWEEP — the recall-vs-cost CURVE behind v06's single
     // point, i.e. the measurement an operator actually runs before
@@ -300,8 +566,7 @@ object VectorOps {
     // three arms share the centroid/assignment frames via the same
     // deterministic aggregates. Unrounded integer-ratio recalls
     // (identical IEEE division both engines).
-    "v24_ivf_nprobe_curve" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v24_ivf_nprobe_curve", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 0"))
         .select(col("vec_id").as("q_id"), col("emb").as("qe"), col("norm").as("qn"))
@@ -331,7 +596,66 @@ object VectorOps {
         .select(col("nprobe"), col("n_hit"), col("n_exact"),
           col("recall_at_5"))
         .orderBy(col("nprobe"))
-    }),
+    },
+      // v06's replay swept over nprobe ∈ {1,2,4}: the probe rank cutoff
+      // becomes the sweep variable, everything else is shared
+      """WITH e AS (
+        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e WHERE vec_id % 100 = 0),
+        |px AS (
+        |  SELECT q_id, vec_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e, q WHERE vec_id <> q_id),
+        |rx AS (
+        |  SELECT q_id, vec_id AS c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY sim DESC, vec_id) AS rnk FROM px),
+        |exact AS (SELECT q_id, c_id FROM rx WHERE rnk <= 5),
+        |nex AS (SELECT COUNT(*) AS n_exact FROM exact),
+        |cd AS (
+        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
+        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
+        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
+        |  GROUP BY label, sub),
+        |cent AS (
+        |  SELECT label AS clabel, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnorm
+        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd GROUP BY label)),
+        |sims AS (
+        |  SELECT vec_id, emb, norm, clabel,
+        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
+        |  FROM e, cent),
+        |assign AS (
+        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
+        |  WHERE crn = 1),
+        |nps AS (SELECT unnest([1, 2, 4]) AS np),
+        |probes AS (
+        |  SELECT np, vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell
+        |  FROM (
+        |    SELECT s.*, n.np, ROW_NUMBER() OVER (PARTITION BY s.vec_id, n.np
+        |      ORDER BY csim DESC, clabel) AS crn
+        |    FROM sims s, nps n WHERE vec_id % 100 = 0)
+        |  WHERE crn <= np),
+        |cand AS (
+        |  SELECT np, q_id, vec_id AS c_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
+        |riv AS (
+        |  SELECT np, q_id, c_id, ROW_NUMBER() OVER (PARTITION BY np, q_id
+        |    ORDER BY sim DESC, c_id) AS rnk FROM cand),
+        |ivf AS (SELECT np, q_id, c_id FROM riv WHERE rnk <= 5),
+        |hits AS (
+        |  SELECT np, COUNT(*) AS n_hit FROM ivf i
+        |  WHERE EXISTS (SELECT 1 FROM exact x
+        |                WHERE x.q_id = i.q_id AND x.c_id = i.c_id)
+        |  GROUP BY np)
+        |SELECT CAST(np AS BIGINT) AS nprobe,
+        |  COALESCE(n_hit, 0) AS n_hit, n_exact,
+        |  CAST(COALESCE(n_hit, 0) AS DOUBLE) / n_exact AS recall_at_5
+        |FROM nps LEFT JOIN hits USING (np) CROSS JOIN nex
+        |ORDER BY nprobe""".stripMargin),
 
     // INT8 SCALAR QUANTIZATION (SQ8) + exact rerank — the third classic ANN
     // scale pillar next to LSH (v03-v09) and IVF (v05/v06): the corpus is
@@ -353,8 +677,7 @@ object VectorOps {
     // rows) and the broadcast rerank join. At rest the codes pack into a
     // dim-byte binary column; in-flight they ride as array<int> since the
     // fixture source is float parquet either way.
-    "v11_sq8_topk" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v11_sq8_topk", (s, dir) => {
       val e = emb(s, dir)
       // per-dimension min/max as two dim-length arrays on ONE row
       val mm = e.select(posexplode(col("emb")).as(Seq("pos", "x")))
@@ -395,7 +718,46 @@ object VectorOps {
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("rnk"), col("c_id"), col("sim"))
         .orderBy(col("q_id"), col("rnk"))
-    }),
+    },
+      // full replay of the SQ8 pipeline: per-dim min/max codebook → int8
+      // codes → dequantize → asymmetric candidate top-15 → exact rerank
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |d AS (SELECT unnest(embedding::DOUBLE[]) AS x,
+        |        generate_subscripts(embedding, 1) AS sub FROM embeddings),
+        |mmr AS (SELECT sub, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY sub),
+        |mma AS (SELECT list(mn ORDER BY sub) AS mn, list(mx ORDER BY sub) AS mx
+        |        FROM mmr),
+        |coded AS (
+        |  SELECT vec_id,
+        |    list_transform(range(0, 64), i ->
+        |      mn[CAST(i + 1 AS INT)] +
+        |      CAST(round((emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) * 255.0
+        |             / (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])) AS INT)
+        |        * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) / 255.0) AS dq
+        |  FROM e, mma),
+        |cd AS (SELECT vec_id, dq, sqrt(list_dot_product(dq, dq)) AS dqn FROM coded),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
+        |      WHERE vec_id % 100 = 0),
+        |cand AS (
+        |  SELECT q_id, vec_id AS c_id,
+        |    round(list_dot_product(qe, dq) / (qn * dqn), 6) AS asim
+        |  FROM cd, q WHERE vec_id <> q_id),
+        |top15 AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY asim DESC, c_id) AS r FROM cand)
+        |  WHERE r <= 15),
+        |rr AS (
+        |  SELECT t.q_id, t.c_id,
+        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
+        |  FROM top15 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id)
+        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM (
+        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY sim DESC, c_id) AS rnk FROM rr)
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
 
     // PRODUCT QUANTIZATION (PQ) + exact rerank — the fourth ANN pillar
     // (LSH v03-v09, IVF v05/v06, SQ8 v11): the 64-dim space is split into
@@ -426,8 +788,7 @@ object VectorOps {
     // expression); the only shuffles are the training aggregate, the
     // per-query top-C partial aggregate (TopKAggregator) and the broadcast
     // rerank join. At rest the codes column is 16 tinyints.
-    "v12_pq_topk" -> withHashAggBudget((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v12_pq_topk", withHashAggBudget((s, dir) => {
       val e = emb(s, dir)
       val (m, d, k) = (16, 4, 16)
       // rounded squared L2 between two d-dim arrays (same fold both engines)
@@ -505,6 +866,71 @@ object VectorOps {
         .select(col("q_id"), col("rnk"), col("c_id"), col("sim"))
         .orderBy(col("q_id"), col("rnk"))
     }),
+      // full replay of the PQ pipeline: seed codebook (16 lowest ids) → one
+      // Lloyd step (assign + rounded dim-wise means, empty cells keep the
+      // seed) → encode via per-subspace argmin → ADC candidate top-20 →
+      // exact rerank
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |subs AS (
+        |  SELECT vec_id, s.sub, e.emb[CAST(s.sub * 4 + 1 AS INT) : CAST(s.sub * 4 + 4 AS INT)] AS sv
+        |  FROM e, (SELECT unnest(range(0, 16)) AS sub) s),
+        |seeds AS (SELECT CAST(vec_id AS INT) AS cid, sub, sv AS cv
+        |          FROM subs WHERE vec_id < 16),
+        |d0 AS (
+        |  SELECT v.vec_id, v.sub, c.cid, v.sv,
+        |    round(list_sum(list_transform(range(1, 5), i ->
+        |      (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
+        |      * (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)]))), 6) AS dist
+        |  FROM subs v JOIN seeds c USING (sub)),
+        |a0 AS (
+        |  SELECT vec_id, sub, cid, sv FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
+        |      ORDER BY dist, cid) AS rn FROM d0) WHERE rn = 1),
+        |rf AS (
+        |  SELECT sub, cid, pos, round(AVG(x), 6) AS mu FROM (
+        |    SELECT sub, cid, unnest(sv) AS x, generate_subscripts(sv, 1) AS pos
+        |    FROM a0)
+        |  GROUP BY sub, cid, pos),
+        |rfc AS (SELECT sub, cid, list(mu ORDER BY pos) AS cv FROM rf
+        |        GROUP BY sub, cid),
+        |cb AS (
+        |  SELECT s.sub, s.cid, COALESCE(r.cv, s.cv) AS cv
+        |  FROM seeds s LEFT JOIN rfc r ON r.sub = s.sub AND r.cid = s.cid),
+        |d1 AS (
+        |  SELECT v.vec_id, v.sub, c.cid, c.cv,
+        |    round(list_sum(list_transform(range(1, 5), i ->
+        |      (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
+        |      * (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)]))), 6) AS dist
+        |  FROM subs v JOIN cb c USING (sub)),
+        |enc AS (
+        |  SELECT vec_id, sub, cv FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
+        |      ORDER BY dist, cid) AS rn FROM d1) WHERE rn = 1),
+        |recon AS (
+        |  SELECT vec_id, flatten(list(cv ORDER BY sub)) AS dq FROM enc
+        |  GROUP BY vec_id),
+        |cd AS (SELECT vec_id, dq, sqrt(list_dot_product(dq, dq)) AS dqn FROM recon),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
+        |      WHERE vec_id % 100 = 0),
+        |cand AS (
+        |  SELECT q_id, vec_id AS c_id,
+        |    round(list_dot_product(qe, dq) / (qn * dqn), 6) AS asim
+        |  FROM cd, q WHERE vec_id <> q_id),
+        |topc AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY asim DESC, c_id) AS r FROM cand) WHERE r <= 50),
+        |rr AS (
+        |  SELECT t.q_id, t.c_id,
+        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
+        |  FROM topc t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id)
+        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM (
+        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY sim DESC, c_id) AS rnk FROM rr)
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
 
     // IVF-PQ — the composition FAISS ships as its default billion-scale
     // index (IVFPQ): the IVF coarse quantizer (v05's per-label centroids)
@@ -521,8 +947,7 @@ object VectorOps {
     // rest a vector costs 16 bytes + a cell id; the probed-cell scan reads
     // codes only, and candidates outside the probe cells are never touched
     // — bandwidth per query is |cells probed| × 16 B/vector.
-    "v13_ivfpq_topk" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v13_ivfpq_topk", (s, dir) => {
       val e = emb(s, dir)
       val (m, d, k) = (16, 4, 16)
       // rounded squared L2 via the codegen'd kernel (identical fold order
@@ -616,7 +1041,106 @@ object VectorOps {
         .filter(col("rnk") <= 5)
         .select(col("q_id"), col("rnk"), col("c_id"), col("sim"))
         .orderBy(col("q_id"), col("rnk"))
-    }),
+    },
+      // end-to-end IVFPQ replay: v05's cell assignment/probes + v12's PQ
+      // train/encode, run on RESIDUALS, reconstruct centroid + dq(residual),
+      // ADC inside probed cells, exact rerank of the top-50
+      """WITH e AS (
+        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |cd AS (
+        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
+        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
+        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
+        |  GROUP BY label, sub),
+        |cent AS (
+        |  SELECT label AS clabel, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnorm
+        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd GROUP BY label)),
+        |sims AS (
+        |  SELECT vec_id, emb, norm, clabel,
+        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
+        |  FROM e, cent),
+        |assign AS (
+        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
+        |  WHERE crn = 1),
+        |resid AS (
+        |  SELECT a.vec_id, a.cell,
+        |    list_transform(range(1, 65), i ->
+        |      round(a.emb[CAST(i AS INT)] - c.cvec[CAST(i AS INT)], 6)) AS res
+        |  FROM assign a JOIN cent c ON c.clabel = a.cell),
+        |subs AS (
+        |  SELECT vec_id, s.sub,
+        |    res[CAST(s.sub * 4 + 1 AS INT) : CAST(s.sub * 4 + 4 AS INT)] AS sv
+        |  FROM resid, (SELECT unnest(range(0, 16)) AS sub) s),
+        |seeds AS (SELECT CAST(vec_id AS INT) AS cid, sub, sv AS cv
+        |          FROM subs WHERE vec_id < 16),
+        |d0 AS (
+        |  SELECT v.vec_id, v.sub, c.cid, v.sv,
+        |    round(list_sum(list_transform(range(1, 5), i ->
+        |      (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
+        |      * (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)]))), 6) AS dist
+        |  FROM subs v JOIN seeds c USING (sub)),
+        |a0 AS (
+        |  SELECT vec_id, sub, cid, sv FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
+        |      ORDER BY dist, cid) AS rn FROM d0) WHERE rn = 1),
+        |rf AS (
+        |  SELECT sub, cid, pos, round(AVG(x), 6) AS mu FROM (
+        |    SELECT sub, cid, unnest(sv) AS x, generate_subscripts(sv, 1) AS pos
+        |    FROM a0)
+        |  GROUP BY sub, cid, pos),
+        |rfc AS (SELECT sub, cid, list(mu ORDER BY pos) AS cv FROM rf
+        |        GROUP BY sub, cid),
+        |cb AS (
+        |  SELECT s.sub, s.cid, COALESCE(r.cv, s.cv) AS cv
+        |  FROM seeds s LEFT JOIN rfc r ON r.sub = s.sub AND r.cid = s.cid),
+        |d1 AS (
+        |  SELECT v.vec_id, v.sub, c.cid, c.cv,
+        |    round(list_sum(list_transform(range(1, 5), i ->
+        |      (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
+        |      * (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)]))), 6) AS dist
+        |  FROM subs v JOIN cb c USING (sub)),
+        |enc AS (
+        |  SELECT vec_id, sub, cv FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
+        |      ORDER BY dist, cid) AS rn FROM d1) WHERE rn = 1),
+        |recon0 AS (
+        |  SELECT vec_id, flatten(list(cv ORDER BY sub)) AS dqr FROM enc
+        |  GROUP BY vec_id),
+        |recon AS (
+        |  SELECT r.vec_id, a.cell,
+        |    list_transform(range(1, 65), i ->
+        |      c.cvec[CAST(i AS INT)] + r.dqr[CAST(i AS INT)]) AS rc
+        |  FROM recon0 r JOIN assign a USING (vec_id)
+        |  JOIN cent c ON c.clabel = a.cell),
+        |cdx AS (SELECT vec_id, cell, rc,
+        |          sqrt(list_dot_product(rc, rc)) AS rn FROM recon),
+        |probes AS (
+        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims WHERE vec_id % 100 = 0)
+        |  WHERE crn <= 2),
+        |cand AS (
+        |  SELECT q_id, vec_id AS c_id,
+        |    round(list_dot_product(qe, rc) / (qn * rn), 6) AS asim
+        |  FROM cdx JOIN probes USING (cell) WHERE vec_id <> q_id),
+        |topc AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY asim DESC, c_id) AS r FROM cand) WHERE r <= 50),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
+        |      WHERE vec_id % 100 = 0),
+        |rr AS (
+        |  SELECT t.q_id, t.c_id,
+        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
+        |  FROM topc t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id)
+        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM (
+        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY sim DESC, c_id) AS rnk FROM rr)
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
 
     // MMR diversified top-k — v01 returns the 5 MOST similar, which for a
     // corpus with near-duplicates means 5 copies of the same thing; MMR
@@ -628,8 +1152,7 @@ object VectorOps {
     // ([[graft.operators.Mmr]]) — parallel across queries, O(k·20)
     // within. The oracle unrolls the 5 greedy steps as chained CTEs with
     // the identical rounding and lowest-id tie-break.
-    "v14_mmr_diversify" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v14_mmr_diversify", (s, dir) => {
       val sp = s
       import sp.implicits._
       val e = emb(s, dir)
@@ -649,7 +1172,99 @@ object VectorOps {
         }
         .toDF("q_id", "step", "c_id", "sim", "mmr")
         .orderBy(col("q_id"), col("step"))
-    }),
+    },
+      // greedy MMR unrolled: top-20 pool, pairwise sims among pool members,
+      // then 5 chained argmax steps (score rounded to 6 dp, ties to the
+      // lowest id) — div at step s = greatest over the s-1 picks so far
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
+        |      WHERE vec_id % 100 = 0),
+        |p AS (
+        |  SELECT q_id, vec_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e, q WHERE vec_id <> q_id),
+        |cw AS (
+        |  SELECT q_id, vec_id AS c_id, sim FROM (
+        |    SELECT q_id, vec_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY sim DESC, vec_id) AS rnk FROM p) WHERE rnk <= 20),
+        |ce AS (SELECT w.q_id, w.c_id, e.emb, e.norm
+        |       FROM cw w JOIN e ON e.vec_id = w.c_id),
+        |ps AS (
+        |  SELECT a.q_id, a.c_id AS ca, b.c_id AS cb,
+        |    ROUND(list_dot_product(a.emb, b.emb) / (a.norm * b.norm), 6) AS sim
+        |  FROM ce a JOIN ce b ON b.q_id = a.q_id AND b.c_id <> a.c_id),
+        |s1 AS (
+        |  SELECT q_id, c_id AS sel1, sim AS sim1 FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY sim DESC, c_id) AS rn FROM cw) WHERE rn = 1),
+        |sc2 AS (
+        |  SELECT c.q_id, c.c_id, c.sim,
+        |    CAST(ROUND(0.7 * CAST(c.sim AS DECIMAL(18,6))
+        |      - 0.3 * CAST(p1.sim AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
+        |  FROM cw c JOIN s1 USING (q_id)
+        |  JOIN ps p1 ON p1.q_id = c.q_id AND p1.ca = c.c_id AND p1.cb = s1.sel1
+        |  WHERE c.c_id <> s1.sel1),
+        |s2 AS (
+        |  SELECT q_id, c_id AS sel2, sim AS sim2, mmr AS mmr2 FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY mmr DESC, c_id) AS rn FROM sc2) WHERE rn = 1),
+        |sc3 AS (
+        |  SELECT c.q_id, c.c_id, c.sim,
+        |    CAST(ROUND(0.7 * CAST(c.sim AS DECIMAL(18,6))
+        |      - 0.3 * CAST(greatest(p1.sim, p2.sim) AS DECIMAL(18,6)), 6)
+        |      AS DOUBLE) AS mmr
+        |  FROM cw c JOIN s1 USING (q_id) JOIN s2 USING (q_id)
+        |  JOIN ps p1 ON p1.q_id = c.q_id AND p1.ca = c.c_id AND p1.cb = s1.sel1
+        |  JOIN ps p2 ON p2.q_id = c.q_id AND p2.ca = c.c_id AND p2.cb = s2.sel2
+        |  WHERE c.c_id NOT IN (s1.sel1, s2.sel2)),
+        |s3 AS (
+        |  SELECT q_id, c_id AS sel3, sim AS sim3, mmr AS mmr3 FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY mmr DESC, c_id) AS rn FROM sc3) WHERE rn = 1),
+        |sc4 AS (
+        |  SELECT c.q_id, c.c_id, c.sim,
+        |    CAST(ROUND(0.7 * CAST(c.sim AS DECIMAL(18,6))
+        |      - 0.3 * CAST(greatest(p1.sim, p2.sim, p3.sim) AS DECIMAL(18,6)), 6)
+        |      AS DOUBLE) AS mmr
+        |  FROM cw c JOIN s1 USING (q_id) JOIN s2 USING (q_id) JOIN s3 USING (q_id)
+        |  JOIN ps p1 ON p1.q_id = c.q_id AND p1.ca = c.c_id AND p1.cb = s1.sel1
+        |  JOIN ps p2 ON p2.q_id = c.q_id AND p2.ca = c.c_id AND p2.cb = s2.sel2
+        |  JOIN ps p3 ON p3.q_id = c.q_id AND p3.ca = c.c_id AND p3.cb = s3.sel3
+        |  WHERE c.c_id NOT IN (s1.sel1, s2.sel2, s3.sel3)),
+        |s4 AS (
+        |  SELECT q_id, c_id AS sel4, sim AS sim4, mmr AS mmr4 FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY mmr DESC, c_id) AS rn FROM sc4) WHERE rn = 1),
+        |sc5 AS (
+        |  SELECT c.q_id, c.c_id, c.sim,
+        |    CAST(ROUND(0.7 * CAST(c.sim AS DECIMAL(18,6))
+        |      - 0.3 * CAST(greatest(p1.sim, p2.sim, p3.sim, p4.sim)
+        |                   AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
+        |  FROM cw c JOIN s1 USING (q_id) JOIN s2 USING (q_id)
+        |  JOIN s3 USING (q_id) JOIN s4 USING (q_id)
+        |  JOIN ps p1 ON p1.q_id = c.q_id AND p1.ca = c.c_id AND p1.cb = s1.sel1
+        |  JOIN ps p2 ON p2.q_id = c.q_id AND p2.ca = c.c_id AND p2.cb = s2.sel2
+        |  JOIN ps p3 ON p3.q_id = c.q_id AND p3.ca = c.c_id AND p3.cb = s3.sel3
+        |  JOIN ps p4 ON p4.q_id = c.q_id AND p4.ca = c.c_id AND p4.cb = s4.sel4
+        |  WHERE c.c_id NOT IN (s1.sel1, s2.sel2, s3.sel3, s4.sel4)),
+        |s5 AS (
+        |  SELECT q_id, c_id AS sel5, sim AS sim5, mmr AS mmr5 FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY mmr DESC, c_id) AS rn FROM sc5) WHERE rn = 1)
+        |SELECT q_id, CAST(step AS BIGINT) AS step, c_id, sim, mmr FROM (
+        |  SELECT q_id, 1 AS step, sel1 AS c_id, sim1 AS sim, sim1 AS mmr FROM s1
+        |  UNION ALL
+        |  SELECT q_id, 2, sel2, sim2, mmr2 FROM s2
+        |  UNION ALL
+        |  SELECT q_id, 3, sel3, sim3, mmr3 FROM s3
+        |  UNION ALL
+        |  SELECT q_id, 4, sel4, sim4, mmr4 FROM s4
+        |  UNION ALL
+        |  SELECT q_id, 5, sel5, sim5, mmr5 FROM s5)
+        |ORDER BY q_id, step""".stripMargin),
 
     // FULL LLOYD K-MEANS — the distributed clustering primitive the other
     // vector ops only approximate (v05's cells are label groups, v12/v13
@@ -671,8 +1286,7 @@ object VectorOps {
     // iteration is bit-identical across engines and partitionings — the
     // DuckDB oracle replays seeds → assign → update → assign → update →
     // final assign end-to-end.
-    "v15_kmeans" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v15_kmeans", (s, dir) => {
       val e = emb(s, dir)
       val c2 = kmeansCentroids(e, iters = 2)
       val af = kmeansAssign(e, c2)
@@ -686,7 +1300,18 @@ object VectorOps {
           col("centroid"), coalesce(col("n_members"), lit(0L)).as("n_members"),
           col("avg_sim"))
         .orderBy(col("cluster"), col("pos"))
-    }),
+    },
+      s"""WITH $kmeansSql,
+         |st AS (SELECT cid, COUNT(*) AS n_members,
+         |    ROUND(CAST(SUM(CAST(csim AS DECIMAL(18,6))) AS DOUBLE)
+         |      / COUNT(*), 6) AS avg_sim
+         |  FROM af GROUP BY cid),
+         |fin AS (SELECT cid, unnest(cvec) AS centroid,
+         |    generate_subscripts(cvec, 1) AS pos FROM c2)
+         |SELECT f.cid AS cluster, CAST(f.pos - 1 AS BIGINT) AS pos, f.centroid,
+         |  CAST(coalesce(st.n_members, 0) AS BIGINT) AS n_members, st.avg_sim
+         |FROM fin f LEFT JOIN st ON f.cid = st.cid
+         |ORDER BY cluster, pos""".stripMargin),
 
     // K-SELECTION ELBOW — the measurement that PRECEDES v15/v16 in a real
     // curation pipeline: how many clusters does this corpus need? Run the
@@ -697,8 +1322,7 @@ object VectorOps {
     // agg); the three arms share the corpus scan via the union. The mean
     // is the UNROUNDED quotient of an exact decimal sum by a count — the
     // tx06 discipline, no round-on-quotient hazard.
-    "v25_kmeans_elbow" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v25_kmeans_elbow", (s, dir) => {
       val e = emb(s, dir)
       // the three k-arms are independent Lloyd chains whose per-iteration
       // centroid barriers (kmeansCentroids) would otherwise run as 6
@@ -712,7 +1336,26 @@ object VectorOps {
             (col("s").cast("double") / col("n_vectors").cast("double"))
               .as("mean_best_sim"))): _*)
         .reduce(_.unionByName(_)).orderBy(col("k"))
-    }),
+    },
+      // three suffixed k-means replays sharing one corpus CTE; per arm the
+      // same decimal-sum / count quotient
+      s"""WITH $embSql,
+         |${kmeansSqlFrom("2", "x2")},
+         |${kmeansSqlFrom("4", "x4")},
+         |${kmeansSqlFrom("8", "x8")}
+         |SELECT CAST(2 AS BIGINT) AS k, COUNT(*) AS n_vectors,
+         |  CAST(SUM(CAST(csim AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
+         |    AS mean_best_sim
+         |FROM afx2
+         |UNION ALL
+         |SELECT CAST(4 AS BIGINT), COUNT(*),
+         |  CAST(SUM(CAST(csim AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
+         |FROM afx4
+         |UNION ALL
+         |SELECT CAST(8 AS BIGINT), COUNT(*),
+         |  CAST(SUM(CAST(csim AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
+         |FROM afx8
+         |ORDER BY k""".stripMargin),
 
     // INTRA-LIST DIVERSITY — the retrieval-quality metric that motivates
     // v14's MMR: how self-similar are a query's top-k results? ILD(k) =
@@ -726,8 +1369,7 @@ object VectorOps {
     // bounded fan-out, no corpus² anywhere. Means follow the tx06
     // discipline (exact decimal sum, one pinned IEEE division — no
     // round-on-quotient hazard).
-    "v26_ild_diversity" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v26_ild_diversity", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 0"))
         .select(col("vec_id").as("q_id"), col("emb").as("qe"),
@@ -757,7 +1399,45 @@ object VectorOps {
       }
       ild(5, "n5", "ild5").join(ild(20, "n20", "ild20"), Seq("q_id"))
         .orderBy(col("q_id"))
-    }),
+    },
+      // v01's brute top-k replay (both depths share one ranking CTE), then
+      // pairwise cosines within each list — exact decimal sums, one pinned
+      // IEEE division per mean
+      s"""WITH $embSql,
+         |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
+         |      WHERE vec_id % 100 = 0),
+         |p AS (
+         |  SELECT q_id, vec_id,
+         |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+         |  FROM e, q WHERE vec_id <> q_id),
+         |r AS (
+         |  SELECT q_id, vec_id,
+         |    ROW_NUMBER() OVER (PARTITION BY q_id
+         |      ORDER BY sim DESC, vec_id) AS rnk
+         |  FROM p),
+         |t5 AS (SELECT q_id, vec_id FROM r WHERE rnk <= 5),
+         |t20 AS (SELECT q_id, vec_id FROM r WHERE rnk <= 20),
+         |i5 AS (
+         |  SELECT a.q_id, COUNT(*) AS n5,
+         |    CAST(SUM(CAST(ROUND(list_dot_product(ea.emb, eb.emb)
+         |        / (ea.norm * eb.norm), 6) AS DECIMAL(18,6))) AS DOUBLE)
+         |      / CAST(COUNT(*) AS DOUBLE) AS ild5
+         |  FROM t5 a JOIN t5 b ON b.q_id = a.q_id AND a.vec_id < b.vec_id
+         |  JOIN e ea ON ea.vec_id = a.vec_id
+         |  JOIN e eb ON eb.vec_id = b.vec_id
+         |  GROUP BY a.q_id),
+         |i20 AS (
+         |  SELECT a.q_id, COUNT(*) AS n20,
+         |    CAST(SUM(CAST(ROUND(list_dot_product(ea.emb, eb.emb)
+         |        / (ea.norm * eb.norm), 6) AS DECIMAL(18,6))) AS DOUBLE)
+         |      / CAST(COUNT(*) AS DOUBLE) AS ild20
+         |  FROM t20 a JOIN t20 b ON b.q_id = a.q_id AND a.vec_id < b.vec_id
+         |  JOIN e ea ON ea.vec_id = a.vec_id
+         |  JOIN e eb ON eb.vec_id = b.vec_id
+         |  GROUP BY a.q_id)
+         |SELECT q_id, n5, ild5, n20, ild20
+         |FROM i5 JOIN i20 USING (q_id)
+         |ORDER BY q_id""".stripMargin),
 
     // IVF WITH ADAPTIVE nlist ≈ ⌈√n⌉ — the production remedy the
     // round-10 cost ladder demanded: v05/v13's coarse cells are
@@ -769,12 +1449,43 @@ object VectorOps {
     // nlist≈√n rule. Same assign/probe/rerank plan as v05 (max-struct
     // assign, broadcast probes, corpus never shuffles); only the cell
     // FRAME changes.
-    "v27_ivf_sqrtn_topk" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v27_ivf_sqrtn_topk", (s, dir) => {
       val e = emb(s, dir)
       ivfTopKCents(e, sqrtSeedCents(e), nprobe = 2)
         .orderBy(col("q_id"), col("rnk"))
-    }),
+    },
+      // v05's assign/probe/rerank replay over ⌈√n⌉ seed cells (scalar-
+      // subquery count twin of sqrtSeedCents; sqrt is correctly-rounded
+      // IEEE on both engines, ceil exact)
+      s"""WITH $embSql,
+         |k AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS kk FROM e),
+         |cent AS (
+         |  SELECT vec_id AS clabel, emb AS cvec, norm AS cnorm
+         |  FROM e, k WHERE vec_id < kk),
+         |sims AS (
+         |  SELECT vec_id, emb, norm, clabel,
+         |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
+         |  FROM e, cent),
+         |assign AS (
+         |  SELECT vec_id, emb, norm, clabel AS cell FROM (
+         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+         |      ORDER BY csim DESC, clabel) AS crn FROM sims)
+         |  WHERE crn = 1),
+         |probes AS (
+         |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
+         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+         |      ORDER BY csim DESC, clabel) AS crn FROM sims
+         |    WHERE vec_id % 100 = 0)
+         |  WHERE crn <= 2),
+         |cand AS (
+         |  SELECT q_id, vec_id AS c_id,
+         |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+         |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
+         |r AS (
+         |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
+         |    ORDER BY sim DESC, c_id) AS rnk FROM cand)
+         |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim
+         |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
 
     // SEMANTIC DEDUP, SemDeDup-shaped (Abbas et al. 2023, public): cluster
     // the corpus with k-means (v15's iterated centroids), then find
@@ -790,8 +1501,7 @@ object VectorOps {
     // ⟨cell⟩ ≈ 64 and within-cell pair enumeration (Σ|cell|²) is linear
     // in n BY CONSTRUCTION at any scale; the cross-cluster misses that
     // boundedness costs are the method's documented trade.
-    "v16_semantic_dedup" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v16_semantic_dedup", (s, dir) => {
       val e = emb(s, dir)
       // af feeds THREE consumers (both pair sides + the final output);
       // without a barrier each re-derives the whole 2-iter Lloyd +
@@ -819,7 +1529,30 @@ object VectorOps {
         .select(col("vec_id"), col("cid").as("cluster"), col("canonical_id"),
           col("is_kept"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // v15's k-means replay (adaptive k = ceil(n/64) — the scalar-subquery
+      // twin of kmeansCentroidsAdaptive) + within-cluster pair enumeration
+      // + the same WITH RECURSIVE reachability closure as v10/tx14
+      s"""WITH RECURSIVE $kmeansSqlAdaptive,
+         |pr AS (
+         |  SELECT a.vec_id AS src, b.vec_id AS dst
+         |  FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id
+         |  JOIN e ea ON ea.vec_id = a.vec_id
+         |  JOIN e eb ON eb.vec_id = b.vec_id
+         |  WHERE ROUND(list_dot_product(ea.emb, eb.emb)
+         |          / (ea.norm * eb.norm), 6) >= 0.4),
+         |sym AS (SELECT src, dst FROM pr UNION ALL SELECT dst, src FROM pr),
+         |verts AS (SELECT DISTINCT src AS id FROM sym),
+         |reach(id, r) AS (
+         |  SELECT id, id FROM verts
+         |  UNION
+         |  SELECT sm.src, reach.r FROM sym sm JOIN reach ON sm.dst = reach.id),
+         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id)
+         |SELECT af.vec_id, af.cid AS cluster,
+         |  COALESCE(comp.label, af.vec_id) AS canonical_id,
+         |  COALESCE(comp.label, af.vec_id) = af.vec_id AS is_kept
+         |FROM af LEFT JOIN comp ON comp.id = af.vec_id
+         |ORDER BY af.vec_id""".stripMargin),
 
     // BINARY (sign) QUANTIZATION + Hamming prefilter — the fifth ANN
     // pillar (LSH / IVF / SQ8 / PQ / binary), and the one modern vector
@@ -834,10 +1567,51 @@ object VectorOps {
     // precision — v11's asymmetric-rerank shape with a 32×-smaller
     // candidate index. Scale: codes are map-side; the only shuffles are
     // the per-query top-C partial aggregate and the broadcast rerank.
-    "v17_binary_topk" -> withHashAggBudget((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v17_binary_topk", withHashAggBudget((s, dir) => {
       binaryTopK(emb(s, dir)).orderBy(col("q_id"), col("rnk"))
     }),
+      // full replay of the binary-quantization pipeline: sign-bit pack into
+      // the same two 32-bit halves → XOR/popcount Hamming → top-30 by
+      // ((64−ham)/64 DESC, c_id) → exact cosine rerank. Hamming similarity
+      // is an exact dyadic rational, so no ROUND is needed anywhere in the
+      // candidate stage.
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |bits AS (
+        |  SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
+        |    generate_subscripts(embedding, 1) AS i
+        |  FROM embeddings),
+        |codes AS (
+        |  SELECT vec_id,
+        |    SUM(CASE WHEN x > 0 AND i <= 32
+        |        THEN (1::BIGINT << CAST(i - 1 AS INT)) ELSE 0 END)::BIGINT AS lo,
+        |    SUM(CASE WHEN x > 0 AND i > 32
+        |        THEN (1::BIGINT << CAST(i - 33 AS INT)) ELSE 0 END)::BIGINT AS hi
+        |  FROM bits GROUP BY vec_id),
+        |q AS (SELECT c.vec_id AS q_id, e.emb AS qe, e.norm AS qn,
+        |        c.lo AS qlo, c.hi AS qhi
+        |      FROM codes c JOIN e ON e.vec_id = c.vec_id
+        |      WHERE c.vec_id % 100 = 0),
+        |cand AS (
+        |  SELECT q_id, c.vec_id AS c_id,
+        |    (64 - (bit_count(xor(c.lo, qlo)) + bit_count(xor(c.hi, qhi))))
+        |      / 64.0 AS hsim
+        |  FROM codes c, q WHERE c.vec_id <> q_id),
+        |top30 AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY hsim DESC, c_id) AS r FROM cand)
+        |  WHERE r <= 30),
+        |rr AS (
+        |  SELECT t.q_id, t.c_id,
+        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
+        |  FROM top30 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id)
+        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM (
+        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY sim DESC, c_id) AS rnk FROM rr)
+        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
 
     // NEAREST-CENTROID CLASSIFICATION evaluation — the "is this embedding
     // space any good" diagnostic every labeled corpus gets before heavier
@@ -849,8 +1623,7 @@ object VectorOps {
     // window, no pairwise stage. Self-inclusion (a vector contributes to
     // its own label's centroid) is the standard resubstitution estimate;
     // the oracle replays it identically.
-    "v20_centroid_classify" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v20_centroid_classify", (s, dir) => {
       val e = emb(s, dir)
       val cent = e.select(col("label"), posexplode(col("emb")).as(Seq("pos", "v")))
         .groupBy(col("label"), col("pos"))
@@ -874,15 +1647,44 @@ object VectorOps {
         .withColumn("accuracy",
           round(col("n_correct").cast("double") / col("n"), 6))
         .orderBy(col("label"))
-    }),
+    },
+      // centroids → argmax assignment (ties to lowest label) → diagonal
+      """WITH e AS (
+        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |cm AS (
+        |  SELECT label, pos, ROUND(AVG(v), 6) AS cv FROM (
+        |    SELECT label, unnest(embedding::DOUBLE[]) AS v,
+        |      generate_subscripts(embedding, 1) AS pos
+        |    FROM embeddings)
+        |  GROUP BY label, pos),
+        |c AS (
+        |  SELECT label AS clabel, list(cv ORDER BY pos) AS cvec FROM cm
+        |  GROUP BY label),
+        |sc AS (
+        |  SELECT e.vec_id, e.label, c.clabel,
+        |    ROUND(list_dot_product(e.emb, c.cvec)
+        |      / (e.norm * sqrt(list_dot_product(c.cvec, c.cvec))), 6) AS csim
+        |  FROM e, c),
+        |a AS (
+        |  SELECT vec_id, label, clabel AS pred FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS rk FROM sc)
+        |  WHERE rk = 1)
+        |SELECT label, COUNT(*) AS n,
+        |  CAST(SUM(CASE WHEN pred = label THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_correct,
+        |  ROUND(CAST(SUM(CASE WHEN pred = label THEN 1 ELSE 0 END) AS DOUBLE)
+        |    / COUNT(*), 6) AS accuracy
+        |FROM a GROUP BY label ORDER BY label""".stripMargin),
 
     // binary-quantization quality measurement, symmetric to v04 (LSH) and
     // v06 (IVF): fraction of the exact brute-force top-5 (v01's ground
     // truth) the sign-bit path recovers, with its cost column (n_cand =
     // 30 candidates/query exact-scored — the rerank budget dial). This
     // completes the recall row of the five-pillar ANN matrix.
-    "v19_binary_recall" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v19_binary_recall", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 0"))
         .select(col("vec_id").as("q_id"), col("emb").as("qe"),
@@ -895,7 +1697,60 @@ object VectorOps {
         .crossJoin(qs.agg((count(lit(1)) * 30).as("n_cand")))
         .withColumn("recall_at_5",
           round(col("n_hit").cast("double") / col("n_exact"), 6))
-    }),
+    },
+      // recall of the v17 pipeline against v01's exact ground truth
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
+        |      WHERE vec_id % 100 = 0),
+        |px AS (
+        |  SELECT q_id, vec_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e, q WHERE vec_id <> q_id),
+        |ex AS (
+        |  SELECT q_id, vec_id AS c_id FROM (
+        |    SELECT q_id, vec_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY sim DESC, vec_id) AS rnk FROM px)
+        |  WHERE rnk <= 5),
+        |bits AS (
+        |  SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
+        |    generate_subscripts(embedding, 1) AS i
+        |  FROM embeddings),
+        |codes AS (
+        |  SELECT vec_id,
+        |    SUM(CASE WHEN x > 0 AND i <= 32
+        |        THEN (1::BIGINT << CAST(i - 1 AS INT)) ELSE 0 END)::BIGINT AS lo,
+        |    SUM(CASE WHEN x > 0 AND i > 32
+        |        THEN (1::BIGINT << CAST(i - 33 AS INT)) ELSE 0 END)::BIGINT AS hi
+        |  FROM bits GROUP BY vec_id),
+        |qc AS (SELECT c.vec_id AS q_id, c.lo AS qlo, c.hi AS qhi
+        |       FROM codes c WHERE c.vec_id % 100 = 0),
+        |cand AS (
+        |  SELECT q_id, c.vec_id AS c_id,
+        |    (64 - (bit_count(xor(c.lo, qlo)) + bit_count(xor(c.hi, qhi))))
+        |      / 64.0 AS hsim
+        |  FROM codes c, qc WHERE c.vec_id <> q_id),
+        |top30 AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY hsim DESC, c_id) AS r FROM cand)
+        |  WHERE r <= 30),
+        |rr AS (
+        |  SELECT t.q_id, t.c_id,
+        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
+        |  FROM top30 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id),
+        |b5 AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY sim DESC, c_id) AS rnk FROM rr)
+        |  WHERE rnk <= 5)
+        |SELECT (SELECT COUNT(*) FROM ex) AS n_exact,
+        |  (SELECT COUNT(*) FROM b5 SEMI JOIN ex USING (q_id, c_id)) AS n_hit,
+        |  (SELECT COUNT(*) * 30 FROM q) AS n_cand,
+        |  ROUND((SELECT COUNT(*) FROM b5 SEMI JOIN ex USING (q_id, c_id))
+        |    / CAST((SELECT COUNT(*) FROM ex) AS DOUBLE), 6) AS recall_at_5""".stripMargin),
 
     // FILTERED vector search — the metadata-predicate + ANN combination
     // every production vector store must get right (tenant / language /
@@ -910,8 +1765,7 @@ object VectorOps {
     // instead of wasting it — and the per-query top-k rides the same
     // partial TopKAggregator as v01 (shuffle carries
     // O(queries × partitions × k), never candidates).
-    "v18_filtered_topk" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v18_filtered_topk", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 0"))
         .select(col("vec_id").as("q_id"), col("label").as("q_label"),
@@ -928,7 +1782,25 @@ object VectorOps {
         .select(col("q_id"), (col("i") + 1).cast("long").as("rnk"),
           col("s.c_id").as("c_id"), col("s.sim").as("sim"))
         .orderBy(col("q_id"), col("rnk"))
-    }),
+    },
+      // label-constrained exact top-5: the same v01 ranking inside each
+      // query's label stratum
+      """WITH e AS (
+        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, label AS q_label, emb AS qe, norm AS qn
+        |      FROM e WHERE vec_id % 100 = 0),
+        |p AS (
+        |  SELECT q_id, vec_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e JOIN q ON e.label = q.q_label AND e.vec_id <> q.q_id),
+        |r AS (
+        |  SELECT q_id, vec_id, sim,
+        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rnk
+        |  FROM p)
+        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, vec_id AS c_id, sim
+        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin),
 
     // Graph centrality over the similarity graph: integer-arithmetic
     // PageRank (3 damped power iterations) on the LSH near-neighbour pair
@@ -944,8 +1816,7 @@ object VectorOps {
     // lighter than tx14's measured-sub-linear CC loop. See
     // [[graft.operators.PageRank]] for the all-integer determinism
     // argument.
-    "v21_pagerank" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v21_pagerank", (s, dir) => {
       // density-scaled width (derives (60,15,4) at gate scale — oracle
       // unchanged); the fixed-width edge stage was the ladder's 473 s
       val edges = lshPairsScaled(emb(s, dir), maxBands = 15,
@@ -954,7 +1825,8 @@ object VectorOps {
       graft.operators.PageRank.integerRanks(edges, iters = 3)
         .select(col("id").as("vec_id"), col("deg"), col("rank"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      pageRankSql),
 
     // k-NN majority-vote classification eval — the neighbour-based twin
     // of v20's centroid classifier (together: the two standard
@@ -966,8 +1838,7 @@ object VectorOps {
     // (id, label) projection — corpus payloads never move. Output is
     // v20's per-label confusion-diagonal shape, so the two classifiers
     // are directly comparable.
-    "v22_knn_classify" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v22_knn_classify", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 0"))
         .select(col("vec_id").as("q_id"), col("label").as("true_label"),
@@ -990,7 +1861,35 @@ object VectorOps {
         .withColumn("accuracy",
           round(col("n_correct").cast("double") / col("n"), 6))
         .orderBy(col("label"))
-    }),
+    },
+      // exact top-5 replay (v01's ranking) + per-query label vote with the
+      // (count DESC, label ASC) tie-break, reduced to the confusion diagonal
+      """WITH e AS (
+        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, label AS tl, emb AS qe, norm AS qn
+        |      FROM e WHERE vec_id % 100 = 0),
+        |p AS (
+        |  SELECT q_id, e.vec_id, e.label AS c_label,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e, q WHERE e.vec_id <> q.q_id),
+        |r AS (
+        |  SELECT q_id, c_label FROM (
+        |    SELECT q_id, c_label,
+        |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rnk
+        |    FROM p) WHERE rnk <= 5),
+        |v AS (SELECT q_id, c_label, COUNT(*) AS nv FROM r GROUP BY q_id, c_label),
+        |pr AS (
+        |  SELECT q_id, c_label AS pred FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY nv DESC, c_label) AS rn FROM v) WHERE rn = 1)
+        |SELECT q.tl AS label, COUNT(*) AS n,
+        |  CAST(SUM(CASE WHEN pr.pred = q.tl THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_correct,
+        |  ROUND(CAST(SUM(CASE WHEN pr.pred = q.tl THEN 1 ELSE 0 END) AS DOUBLE)
+        |    / COUNT(*), 6) AS accuracy
+        |FROM q JOIN pr USING (q_id) GROUP BY q.tl ORDER BY label""".stripMargin),
 
     // DIMENSION-TRUNCATION recall curve (the Matryoshka/MRL deployment
     // question: how much of the 64-dim ranking survives searching only
@@ -1005,8 +1904,7 @@ object VectorOps {
     // across dims, so truncation destroys the ranking. Matryoshka-trained
     // embeddings concentrate it in the prefix; the curve is the
     // diagnostic that tells you which kind you're holding.
-    "v23_dim_truncation_recall" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v23_dim_truncation_recall", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 0"))
         .select(col("vec_id").as("q_id"), col("emb").as("qe"), col("norm").as("qn"))
@@ -1030,7 +1928,46 @@ object VectorOps {
               .as("recall_at_5"))
       }
       curves.reduce(_.union(_)).orderBy(col("dims"))
-    }),
+    },
+      // both truncations replayed against the full-dim exact top-5
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn
+        |      FROM e WHERE vec_id % 100 = 0),
+        |px AS (
+        |  SELECT q_id, e.vec_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e, q WHERE e.vec_id <> q.q_id),
+        |ex AS (SELECT q_id, vec_id FROM (
+        |    SELECT q_id, vec_id,
+        |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rnk
+        |    FROM px) WHERE rnk <= 5),
+        |dd AS (SELECT CAST(unnest([16, 32]) AS BIGINT) AS dims),
+        |te AS (
+        |  SELECT dims, vec_id, emb[1:CAST(dims AS INT)] AS temb,
+        |    sqrt(list_dot_product(emb[1:CAST(dims AS INT)],
+        |                          emb[1:CAST(dims AS INT)])) AS tnorm
+        |  FROM e, dd),
+        |tq AS (SELECT dims, vec_id AS q_id, temb AS tqe, tnorm AS tqn
+        |       FROM te WHERE vec_id % 100 = 0),
+        |tp AS (
+        |  SELECT t.dims, q_id, t.vec_id,
+        |    ROUND(list_dot_product(tqe, t.temb) / (tqn * t.tnorm), 6) AS sim
+        |  FROM te t JOIN tq ON tq.dims = t.dims AND t.vec_id <> tq.q_id),
+        |tr AS (SELECT dims, q_id, vec_id FROM (
+        |    SELECT dims, q_id, vec_id,
+        |      ROW_NUMBER() OVER (PARTITION BY dims, q_id
+        |        ORDER BY sim DESC, vec_id) AS rnk
+        |    FROM tp) WHERE rnk <= 5),
+        |h AS (SELECT dims, COUNT(*) AS n_hit
+        |      FROM tr SEMI JOIN ex USING (q_id, vec_id) GROUP BY dims)
+        |SELECT dd.dims, (SELECT COUNT(*) FROM ex) AS n_exact,
+        |  CAST(COALESCE(n_hit, 0) AS BIGINT) AS n_hit,
+        |  ROUND(CAST(COALESCE(n_hit, 0) AS DOUBLE)
+        |    / (SELECT COUNT(*) FROM ex), 6) AS recall_at_5
+        |FROM dd LEFT JOIN h USING (dims) ORDER BY dims""".stripMargin),
 
     // TRIANGLE COUNTING on the semantic-similarity graph (v21's LSH edge
     // list) — the local-clustering signal that separates a tight semantic
@@ -1047,8 +1984,7 @@ object VectorOps {
     // hub never centers a wedge) — the textbook reason this survives
     // power-law graphs where id-ordering explodes. All joins carry
     // (id, id) frames; embeddings never move past the LSH scoring.
-    "v28_graph_triangles" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v28_graph_triangles", (s, dir) => {
       // density-scaled width (derives (60,15,4) at gate scale — oracle
       // unchanged), v10/v21/v30's edge-stage discipline
       val edges = lshPairsScaled(emb(s, dir), maxBands = 15,
@@ -1057,7 +1993,50 @@ object VectorOps {
       graft.operators.Triangles.perVertexCounts(edges)
         .select(col("id").as("vec_id"), col("n_tri"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // v28: v21's exact LSH edge replay (60 planes / 15 bands, sim ≥ 0.3),
+      // then compact-forward triangles — (deg, id) row-value comparisons
+      // orient edges and order wedge pairs identically on both engines;
+      // COUNT is BIGINT on both (no sum to pin)
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |s AS (SELECT vec_id, emb, norm,
+        |  CAST(list_sum(list_transform(range(0, 60), i ->
+        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
+        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
+        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
+        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
+        |          FROM s, range(0, 15) t(b)),
+        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
+        |      FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
+        |x AS (SELECT vec_a, vec_b
+        |      FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b
+        |      WHERE round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) >= 0.3),
+        |ed AS (SELECT vec_a AS id FROM x UNION ALL SELECT vec_b FROM x),
+        |deg AS (SELECT id, COUNT(*) AS deg FROM ed GROUP BY id),
+        |oe AS (
+        |  SELECT CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
+        |           THEN x.vec_a ELSE x.vec_b END AS u,
+        |         CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
+        |           THEN x.vec_b ELSE x.vec_a END AS v,
+        |         CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
+        |           THEN db.deg ELSE da.deg END AS vdeg
+        |  FROM x JOIN deg da ON da.id = x.vec_a
+        |         JOIN deg db ON db.id = x.vec_b),
+        |wg AS (
+        |  SELECT a.u, a.v AS v, b.v AS w
+        |  FROM oe a JOIN oe b ON a.u = b.u
+        |    AND (a.vdeg, a.v) < (b.vdeg, b.v)),
+        |tri AS (
+        |  SELECT wg.u, wg.v, wg.w
+        |  FROM wg SEMI JOIN oe t ON t.u = wg.v AND t.v = wg.w),
+        |tv AS (SELECT u AS id FROM tri
+        |       UNION ALL SELECT v FROM tri
+        |       UNION ALL SELECT w FROM tri)
+        |SELECT id AS vec_id, COUNT(*) AS n_tri
+        |FROM tv GROUP BY id ORDER BY vec_id""".stripMargin),
 
     // TRIANGLES ON THE IVF-BOUNDED GRAPH — v28's kernel fed by the
     // candidate generator that SURVIVES the 32× rung where the LSH
@@ -1069,8 +2048,7 @@ object VectorOps {
     // and documented there); the payoff is an edge stage that scales.
     // The assignment frame is checkpointed (two pair-side consumers),
     // and Triangles checkpoints its own oriented list.
-    "v31_graph_triangles_ivf" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v31_graph_triangles_ivf", (s, dir) => {
       val e = emb(s, dir)
       val cells = coarseAssign(e, sqrtSeedCents(e)).localCheckpoint(true)
       val a = cells.select(col("cell"), col("vec_id").as("vec_a"),
@@ -1085,7 +2063,48 @@ object VectorOps {
       graft.operators.Triangles.perVertexCounts(edges)
         .select(col("id").as("vec_id"), col("n_tri"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // v31: v27's sqrt-cell assign replay (ROW_NUMBER argmax) → same-cell
+      // scored pairs → v28's compact-forward triangle tail verbatim
+      s"""WITH $embSql,
+         |nn AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS kk FROM e),
+         |cents AS (SELECT vec_id AS clabel, emb AS cvec, norm AS cnorm
+         |          FROM e, nn WHERE vec_id < kk),
+         |cells AS (SELECT vec_id, emb, norm, clabel AS cell FROM (
+         |  SELECT e.vec_id, e.emb, e.norm, c.clabel,
+         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+         |      round(list_dot_product(e.emb, c.cvec)
+         |        / (e.norm * c.cnorm), 6) DESC, c.clabel) AS rn
+         |  FROM e, cents c) WHERE rn = 1),
+         |x AS (
+         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
+         |  FROM cells a JOIN cells b
+         |    ON a.cell = b.cell AND a.vec_id < b.vec_id
+         |  WHERE round(list_dot_product(a.emb, b.emb)
+         |          / (a.norm * b.norm), 6) >= 0.3),
+         |ed AS (SELECT vec_a AS id FROM x UNION ALL SELECT vec_b FROM x),
+         |deg AS (SELECT id, COUNT(*) AS deg FROM ed GROUP BY id),
+         |oe AS (
+         |  SELECT CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
+         |           THEN x.vec_a ELSE x.vec_b END AS u,
+         |         CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
+         |           THEN x.vec_b ELSE x.vec_a END AS v,
+         |         CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
+         |           THEN db.deg ELSE da.deg END AS vdeg
+         |  FROM x JOIN deg da ON da.id = x.vec_a
+         |         JOIN deg db ON db.id = x.vec_b),
+         |wg AS (
+         |  SELECT a.u, a.v AS v, b.v AS w
+         |  FROM oe a JOIN oe b ON a.u = b.u
+         |    AND (a.vdeg, a.v) < (b.vdeg, b.v)),
+         |tri AS (
+         |  SELECT wg.u, wg.v, wg.w
+         |  FROM wg SEMI JOIN oe t ON t.u = wg.v AND t.v = wg.w),
+         |tv AS (SELECT u AS id FROM tri
+         |       UNION ALL SELECT v FROM tri
+         |       UNION ALL SELECT w FROM tri)
+         |SELECT id AS vec_id, COUNT(*) AS n_tri
+         |FROM tv GROUP BY id ORDER BY vec_id""".stripMargin),
 
     // 3-CORE of the semantic-similarity graph — the graph-cohesion
     // member of the diagnostic trio (v21 PageRank = centrality, v28
@@ -1096,8 +2115,7 @@ object VectorOps {
     // pipeline treats as topical clusters. Fixed 6-round peeling (part
     // of the operator definition, replayed verbatim by the oracle;
     // extra rounds past convergence are no-ops — see KCore scaladoc).
-    "v30_kcore" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v30_kcore", (s, dir) => {
       // density-scaled width (derives (60,15,4) at gate scale — oracle
       // unchanged); the fixed-width edge stage was the ladder's 587 s
       val edges = lshPairsScaled(emb(s, dir), maxBands = 15,
@@ -1106,7 +2124,10 @@ object VectorOps {
       graft.operators.KCore.core(edges, k = 3, rounds = 6)
         .select(col("id").as("vec_id"), col("core_deg"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // v30: v21's LSH edge replay + 6 unrolled peel rounds; COUNT is
+      // BIGINT on both engines
+      kcoreSql),
 
     // TWO-LEVEL (hierarchical) ASSIGNMENT SemDeDup — the implemented
     // form of the remedy v16's scaladoc and the round-10 cost ladder
@@ -1122,8 +2143,7 @@ object VectorOps {
     // same CC canonicalization, same schema). The within-cell pair
     // stage and min-label components are exactly v16's. The assignment
     // frame feeds three consumers — checkpointed once, like v16.
-    "v29_semdedup_2level" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v29_semdedup_2level", (s, dir) => {
       val e = emb(s, dir)
       val kf = e.agg(
         ceil(count(lit(1)).cast("double") / 64.0).cast("long").as("kk"))
@@ -1189,7 +2209,54 @@ object VectorOps {
         .select(col("vec_id"), col("cid").as("cluster"),
           col("canonical_id"), col("is_kept"))
         .orderBy(col("vec_id"))
-    }),
+    },
+      // v29: the two-level assignment replay — un-refined seeds (first k
+      // as fine, first ⌈√k⌉ as coarse), ROW_NUMBER argmax at each level
+      // (== Spark's max-struct with ties to the lowest id), then v16's
+      // within-cell pair scan and recursive reachability closure verbatim
+      s"""WITH RECURSIVE $embSql,
+         |nn AS (SELECT CAST(CEIL(COUNT(*) / 64.0) AS BIGINT) AS k,
+         |    CAST(CEIL(SQRT(CEIL(COUNT(*) / 64.0))) AS BIGINT) AS kc
+         |  FROM e),
+         |fine AS (SELECT vec_id AS fid, emb AS fvec, norm AS fnorm
+         |  FROM e, nn WHERE vec_id < k),
+         |coarse AS (SELECT vec_id AS ccid, emb AS cvec, norm AS cnorm
+         |  FROM e, nn WHERE vec_id < kc),
+         |f2c AS (SELECT fid, fvec, fnorm, ccid FROM (
+         |  SELECT f.fid, f.fvec, f.fnorm, c.ccid,
+         |    ROW_NUMBER() OVER (PARTITION BY f.fid ORDER BY
+         |      round(list_dot_product(f.fvec, c.cvec)
+         |        / (f.fnorm * c.cnorm), 6) DESC, c.ccid) AS rn
+         |  FROM fine f, coarse c) WHERE rn = 1),
+         |dc AS (SELECT vec_id, emb, norm, ccid FROM (
+         |  SELECT e.vec_id, e.emb, e.norm, c.ccid,
+         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
+         |      round(list_dot_product(e.emb, c.cvec)
+         |        / (e.norm * c.cnorm), 6) DESC, c.ccid) AS rn
+         |  FROM e, coarse c) WHERE rn = 1),
+         |af AS (SELECT vec_id, cid, emb, norm FROM (
+         |  SELECT d.vec_id, f.fid AS cid, d.emb, d.norm,
+         |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
+         |      round(list_dot_product(d.emb, f.fvec)
+         |        / (d.norm * f.fnorm), 6) DESC, f.fid) AS rn
+         |  FROM dc d JOIN f2c f ON f.ccid = d.ccid) WHERE rn = 1),
+         |pr AS (
+         |  SELECT a.vec_id AS src, b.vec_id AS dst
+         |  FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id
+         |  WHERE ROUND(list_dot_product(a.emb, b.emb)
+         |          / (a.norm * b.norm), 6) >= 0.4),
+         |sym AS (SELECT src, dst FROM pr UNION ALL SELECT dst, src FROM pr),
+         |verts AS (SELECT DISTINCT src AS id FROM sym),
+         |reach(id, r) AS (
+         |  SELECT id, id FROM verts
+         |  UNION
+         |  SELECT sm.src, reach.r FROM sym sm JOIN reach ON sm.dst = reach.id),
+         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id)
+         |SELECT af.vec_id, af.cid AS cluster,
+         |  COALESCE(comp.label, af.vec_id) AS canonical_id,
+         |  COALESCE(comp.label, af.vec_id) = af.vec_id AS is_kept
+         |FROM af LEFT JOIN comp ON comp.id = af.vec_id
+         |ORDER BY af.vec_id""".stripMargin),
 
     // CASCADE RETRIEVAL — the production multi-stage ANN shape the five
     // single-index pillars compose into: a cheap wide stage prunes for a
@@ -1206,8 +2273,7 @@ object VectorOps {
     // ride query-count-sized frames. Each survivor frame feeds two
     // consumers (next stage + its cost count) → eager checkpoints, the
     // multi-consumer rule; all are ≤ q×100 rows.
-    "v32_cascade_topk" -> withHashAggBudget((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v32_cascade_topk", withHashAggBudget((s, dir) => {
       val e = emb(s, dir)
       val packLo =
         "aggregate(transform(slice(emb, 1, 32), (x, i) -> " +
@@ -1282,6 +2348,85 @@ object VectorOps {
         .withColumn("recall_at_5",
           round(col("n_hit").cast("double") / col("n_exact"), 6))
     }),
+      // full three-stage replay: sign-bit codes → Hamming top-100 → SQ8
+      // dequantize (survivors only) → asymmetric top-15 → exact rerank
+      // top-5 → recall vs the brute-force ground truth
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |bits AS (
+        |  SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
+        |    generate_subscripts(embedding, 1) AS i
+        |  FROM embeddings),
+        |codes AS (
+        |  SELECT vec_id,
+        |    SUM(CASE WHEN x > 0 AND i <= 32
+        |        THEN (1::BIGINT << CAST(i - 1 AS INT)) ELSE 0 END)::BIGINT AS lo,
+        |    SUM(CASE WHEN x > 0 AND i > 32
+        |        THEN (1::BIGINT << CAST(i - 33 AS INT)) ELSE 0 END)::BIGINT AS hi
+        |  FROM bits GROUP BY vec_id),
+        |q AS (SELECT c.vec_id AS q_id, e.emb AS qe, e.norm AS qn,
+        |        c.lo AS qlo, c.hi AS qhi
+        |      FROM codes c JOIN e ON e.vec_id = c.vec_id
+        |      WHERE c.vec_id % 100 = 0),
+        |cand1 AS (
+        |  SELECT q_id, c.vec_id AS c_id,
+        |    (64 - (bit_count(xor(c.lo, qlo)) + bit_count(xor(c.hi, qhi))))
+        |      / 64.0 AS hsim
+        |  FROM codes c, q WHERE c.vec_id <> q_id),
+        |st1 AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY hsim DESC, c_id) AS r FROM cand1)
+        |  WHERE r <= 100),
+        |d AS (SELECT unnest(embedding::DOUBLE[]) AS x,
+        |        generate_subscripts(embedding, 1) AS sub FROM embeddings),
+        |mmr AS (SELECT sub, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY sub),
+        |mma AS (SELECT list(mn ORDER BY sub) AS mn, list(mx ORDER BY sub) AS mx
+        |        FROM mmr),
+        |cd AS (
+        |  SELECT t.q_id, t.c_id,
+        |    list_transform(range(0, 64), i ->
+        |      mn[CAST(i + 1 AS INT)] +
+        |      CAST(round((c.emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) * 255.0
+        |             / (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])) AS INT)
+        |        * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) / 255.0) AS dq
+        |  FROM st1 t JOIN e c ON c.vec_id = t.c_id, mma),
+        |sc2 AS (
+        |  SELECT cd.q_id, cd.c_id,
+        |    round(list_dot_product(qq.qe, dq)
+        |      / (qq.qn * sqrt(list_dot_product(dq, dq))), 6) AS asim
+        |  FROM cd JOIN q qq ON qq.q_id = cd.q_id),
+        |st2 AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY asim DESC, c_id) AS r FROM sc2)
+        |  WHERE r <= 15),
+        |rr AS (
+        |  SELECT t.q_id, t.c_id,
+        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
+        |  FROM st2 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id),
+        |casc AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY sim DESC, c_id) AS rnk FROM rr)
+        |  WHERE rnk <= 5),
+        |px AS (
+        |  SELECT q_id, vec_id AS c_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e, q WHERE vec_id <> q_id),
+        |ex AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY sim DESC, c_id) AS rnk FROM px)
+        |  WHERE rnk <= 5)
+        |SELECT (SELECT COUNT(*) FROM ex) AS n_exact,
+        |  (SELECT COUNT(*) FROM st1) AS n_stage1,
+        |  (SELECT COUNT(*) FROM st2) AS n_stage2,
+        |  (SELECT COUNT(*) FROM casc SEMI JOIN ex USING (q_id, c_id)) AS n_hit,
+        |  ROUND((SELECT COUNT(*) FROM casc SEMI JOIN ex USING (q_id, c_id))
+        |    / CAST((SELECT COUNT(*) FROM ex) AS DOUBLE), 6) AS recall_at_5""".stripMargin),
 
     // CASCADE BUDGET CURVE — v32's stage-1 width C1 swept over
     // {30, 100, 300} in ONE corpus pass: the Hamming stage keeps top-300
@@ -1293,8 +2438,7 @@ object VectorOps {
     // sized frames; recall@5 per arm against the shared exact ground
     // truth. This is the measured cost/recall curve a serving team reads
     // before picking C1.
-    "v33_cascade_budget_curve" -> withHashAggBudget((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v33_cascade_budget_curve", withHashAggBudget((s, dir) => {
       val e = emb(s, dir)
       val packLo =
         "aggregate(transform(slice(emb, 1, 32), (x, i) -> " +
@@ -1369,6 +2513,87 @@ object VectorOps {
         .select(col("c1"), col("n_hit"), col("n_exact"), col("recall_at_5"))
         .orderBy(col("c1"))
     }),
+      // v32's replay with the Hamming stage ranked once to 300 and each
+      // arm taken as a prefix (r <= c1); per-arm SQ8 + rerank + recall
+      """WITH e AS (
+        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |bits AS (
+        |  SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
+        |    generate_subscripts(embedding, 1) AS i
+        |  FROM embeddings),
+        |codes AS (
+        |  SELECT vec_id,
+        |    SUM(CASE WHEN x > 0 AND i <= 32
+        |        THEN (1::BIGINT << CAST(i - 1 AS INT)) ELSE 0 END)::BIGINT AS lo,
+        |    SUM(CASE WHEN x > 0 AND i > 32
+        |        THEN (1::BIGINT << CAST(i - 33 AS INT)) ELSE 0 END)::BIGINT AS hi
+        |  FROM bits GROUP BY vec_id),
+        |q AS (SELECT c.vec_id AS q_id, e.emb AS qe, e.norm AS qn,
+        |        c.lo AS qlo, c.hi AS qhi
+        |      FROM codes c JOIN e ON e.vec_id = c.vec_id
+        |      WHERE c.vec_id % 100 = 0),
+        |cand1 AS (
+        |  SELECT q_id, c.vec_id AS c_id,
+        |    (64 - (bit_count(xor(c.lo, qlo)) + bit_count(xor(c.hi, qhi))))
+        |      / 64.0 AS hsim
+        |  FROM codes c, q WHERE c.vec_id <> q_id),
+        |rank1 AS (
+        |  SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY hsim DESC, c_id) AS r FROM cand1),
+        |arms AS (SELECT 30 AS c1 UNION ALL SELECT 100 UNION ALL SELECT 300),
+        |st1 AS (
+        |  SELECT a.c1, r.q_id, r.c_id
+        |  FROM rank1 r CROSS JOIN arms a WHERE r.r <= a.c1),
+        |d AS (SELECT unnest(embedding::DOUBLE[]) AS x,
+        |        generate_subscripts(embedding, 1) AS sub FROM embeddings),
+        |mmr AS (SELECT sub, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY sub),
+        |mma AS (SELECT list(mn ORDER BY sub) AS mn, list(mx ORDER BY sub) AS mx
+        |        FROM mmr),
+        |cd AS (
+        |  SELECT t.c1, t.q_id, t.c_id,
+        |    list_transform(range(0, 64), i ->
+        |      mn[CAST(i + 1 AS INT)] +
+        |      CAST(round((c.emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) * 255.0
+        |             / (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])) AS INT)
+        |        * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) / 255.0) AS dq
+        |  FROM st1 t JOIN e c ON c.vec_id = t.c_id, mma),
+        |sc2 AS (
+        |  SELECT cd.c1, cd.q_id, cd.c_id,
+        |    round(list_dot_product(qq.qe, dq)
+        |      / (qq.qn * sqrt(list_dot_product(dq, dq))), 6) AS asim
+        |  FROM cd JOIN q qq ON qq.q_id = cd.q_id),
+        |st2 AS (
+        |  SELECT c1, q_id, c_id FROM (
+        |    SELECT c1, q_id, c_id, ROW_NUMBER() OVER (PARTITION BY c1, q_id
+        |      ORDER BY asim DESC, c_id) AS r FROM sc2)
+        |  WHERE r <= 15),
+        |rr AS (
+        |  SELECT t.c1, t.q_id, t.c_id,
+        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
+        |  FROM st2 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id),
+        |casc AS (
+        |  SELECT c1, q_id, c_id FROM (
+        |    SELECT c1, q_id, c_id, ROW_NUMBER() OVER (PARTITION BY c1, q_id
+        |      ORDER BY sim DESC, c_id) AS rnk FROM rr)
+        |  WHERE rnk <= 5),
+        |px AS (
+        |  SELECT q_id, vec_id AS c_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM e, q WHERE vec_id <> q_id),
+        |ex AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY sim DESC, c_id) AS rnk FROM px)
+        |  WHERE rnk <= 5),
+        |hits AS (
+        |  SELECT c1, COUNT(*) AS n_hit
+        |  FROM casc SEMI JOIN ex USING (q_id, c_id) GROUP BY c1),
+        |nx AS (SELECT COUNT(*) AS n_exact FROM ex)
+        |SELECT c1, n_hit, n_exact,
+        |  ROUND(CAST(n_hit AS DOUBLE) / n_exact, 6) AS recall_at_5
+        |FROM hits, nx ORDER BY c1""".stripMargin),
 
     // GRAPH-BASED ANN BEAM SEARCH — the graph pillar (HNSW/NSG family,
     // single-layer form) completing the index taxonomy: LSH (v03), IVF
@@ -1384,8 +2609,7 @@ object VectorOps {
     // shuffles only (q_id, vec_id) frames bounded by beam×degree×hops
     // per query; scoring joins the corpus by id (hash join on the id
     // key); the graph build is v31's cell-bounded pair join.
-    "v35_graph_beam_search" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v35_graph_beam_search", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 50"))
         .select(col("vec_id").as("q_id"), col("emb").as("qe"),
@@ -1470,7 +2694,8 @@ object VectorOps {
         .select(col("q_id"), col("top1_id"), col("top1_sim"),
           col("n_visited"), col("n_hit"), col("recall_at_5"))
         .orderBy(col("q_id"))
-    }),
+    },
+      beamSql),
 
     // DELTA-INDEX MERGE — how production ANN serves a GROWING corpus
     // without rebuilding: the bulk sits in the IVF index (centroids
@@ -1493,8 +2718,7 @@ object VectorOps {
     // queries at any stress rung, so the exact arm stays O(n) while the
     // served path keeps its 1.4× cell-bounded shape. Unaudited queries
     // emit NULL n_hit/recall (no such rows exist at gate scale).
-    "v37_delta_index_merge" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v37_delta_index_merge", (s, dir) => {
       val e = emb(s, dir)
       val auditStride = 100L * math.max(1L, e.count() / 500L)
       val main = e.filter(col("vec_id") % 20 =!= 0)
@@ -1548,7 +2772,69 @@ object VectorOps {
           when(col("audited"), round(col("n_hit").cast("double") / 5.0, 6)))
         .drop("audited")
         .orderBy(col("q_id"))
-    }),
+    },
+      // main/delta replay: sqrt-cents from MAIN only, nprobe-2 probes,
+      // delta brute union, shared top-5 ladder, full-corpus ground truth
+      s"""WITH $embSql,
+        |m AS (SELECT * FROM e WHERE vec_id % 20 <> 0),
+        |d AS (SELECT * FROM e WHERE vec_id % 20 = 0),
+        |nn AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS kk FROM m),
+        |cents AS (SELECT vec_id AS clabel, emb AS cvec, norm AS cnorm
+        |          FROM m, nn WHERE vec_id < kk),
+        |cells AS (SELECT vec_id, emb, norm, clabel AS cell FROM (
+        |  SELECT m.vec_id, m.emb, m.norm, c.clabel,
+        |    ROW_NUMBER() OVER (PARTITION BY m.vec_id ORDER BY
+        |      round(list_dot_product(m.emb, c.cvec)
+        |        / (m.norm * c.cnorm), 6) DESC, c.clabel) AS rn
+        |  FROM m, cents c) WHERE rn = 1),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
+        |      WHERE vec_id % 100 = 50),
+        |pr AS (SELECT q_id, qe, qn, cell FROM (
+        |  SELECT q.q_id, q.qe, q.qn, c.clabel AS cell,
+        |    ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
+        |      round(list_dot_product(q.qe, c.cvec)
+        |        / (q.qn * c.cnorm), 6) DESC, c.clabel) AS crn
+        |  FROM q, cents c) WHERE crn <= 2),
+        |mc AS (
+        |  SELECT p.q_id, cl.vec_id AS c_id,
+        |    round(list_dot_product(p.qe, cl.emb)
+        |      / (p.qn * cl.norm), 6) AS sim,
+        |    'main' AS src
+        |  FROM pr p JOIN cells cl ON cl.cell = p.cell
+        |  WHERE cl.vec_id <> p.q_id),
+        |dc AS (
+        |  SELECT q.q_id, d.vec_id AS c_id,
+        |    round(list_dot_product(q.qe, d.emb) / (q.qn * d.norm), 6)
+        |      AS sim,
+        |    'delta' AS src
+        |  FROM q, d WHERE d.vec_id <> q.q_id),
+        |u AS (SELECT * FROM mc UNION ALL SELECT * FROM dc),
+        |t5 AS (SELECT q_id, c_id, sim, src, rnk FROM (
+        |  SELECT q_id, c_id, sim, src, ROW_NUMBER() OVER (
+        |    PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk FROM u)
+        |  WHERE rnk <= 5),
+        |px AS (SELECT q.q_id, c.vec_id AS c_id,
+        |    round(list_dot_product(q.qe, c.emb) / (q.qn * c.norm), 6)
+        |      AS sim
+        |  FROM e c, q WHERE c.vec_id <> q.q_id),
+        |ex AS (SELECT q_id, c_id FROM (
+        |  SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |    ORDER BY sim DESC, c_id) AS rnk FROM px) WHERE rnk <= 5),
+        |ht AS (SELECT a.q_id, COUNT(*) AS n_hit FROM t5 a
+        |  SEMI JOIN ex ON ex.q_id = a.q_id AND ex.c_id = a.c_id
+        |  GROUP BY a.q_id),
+        |ndl AS (SELECT q_id,
+        |    CAST(SUM(CASE WHEN src = 'delta' THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_delta
+        |  FROM t5 GROUP BY q_id)
+        |SELECT a.q_id, a.c_id AS top1_id, a.src AS top1_src,
+        |  a.sim AS top1_sim, ndl.n_delta,
+        |  CAST(COALESCE(ht.n_hit, 0) AS BIGINT) AS n_hit,
+        |  ROUND(CAST(COALESCE(ht.n_hit, 0) AS DOUBLE) / 5.0, 6)
+        |    AS recall_at_5
+        |FROM t5 a JOIN ndl ON ndl.q_id = a.q_id
+        |LEFT JOIN ht ON ht.q_id = a.q_id
+        |WHERE a.rnk = 1 ORDER BY a.q_id""".stripMargin),
 
     // JOHNSON-LINDENSTRAUSS RANDOM PROJECTION with a measured distortion
     // certificate: project the 64-dim corpus to k=16 dims through a
@@ -1566,7 +2852,7 @@ object VectorOps {
     // ×k map-side fan-out + one (vec_id, j) aggregate — the 100 TB way
     // to cut ANN storage 4× before any index is built; the audit joins
     // only the sampled pair frame.
-    "v36_random_projection" -> ((s, dir) => {
+    QuerySpec("v36_random_projection", (s, dir) => {
       val e = emb(s, dir)
       val base = e
         .select(col("vec_id"), posexplode(col("emb")).as(Seq("i", "x")))
@@ -1609,7 +2895,39 @@ object VectorOps {
           ((col("d2_proj_m2").cast("double") / lit(16.0))
             / col("d2_orig_m2").cast("double")).as("distortion"))
         .orderBy(col("pair_id"))
-    }),
+    },
+      // same ±1 sign hash, same micro-int lattice; every integer SUM pinned
+      // to BIGINT (DuckDB would widen to HUGEINT)
+      s"""WITH $embSql,
+        |base AS (
+        |  SELECT vec_id, i,
+        |    CAST(CAST(emb[i + 1] AS DECIMAL(18,6)) * 1000000 AS BIGINT)
+        |      AS xm
+        |  FROM e, range(0, 64) t(i)),
+        |proj AS (
+        |  SELECT vec_id, j,
+        |    CAST(SUM(CASE WHEN (strpos('0123456789abcdef',
+        |        substr(md5(i::VARCHAR || '_' || j::VARCHAR), 1, 1)) - 1)
+        |        % 2 = 0
+        |      THEN xm ELSE -xm END) AS BIGINT) AS pm
+        |  FROM base, range(0, 16) u(j) GROUP BY vec_id, j),
+        |d2p AS (
+        |  SELECT a.vec_id,
+        |    CAST(SUM((a.pm - b.pm) * (a.pm - b.pm)) AS BIGINT) AS d2_proj_m2
+        |  FROM proj a JOIN proj b
+        |    ON b.vec_id = a.vec_id + 1 AND b.j = a.j
+        |  WHERE a.vec_id % 50 = 0 GROUP BY a.vec_id),
+        |d2o AS (
+        |  SELECT a.vec_id,
+        |    CAST(SUM((a.xm - b.xm) * (a.xm - b.xm)) AS BIGINT) AS d2_orig_m2
+        |  FROM base a JOIN base b
+        |    ON b.vec_id = a.vec_id + 1 AND b.i = a.i
+        |  WHERE a.vec_id % 50 = 0 GROUP BY a.vec_id)
+        |SELECT o.vec_id AS pair_id, o.d2_orig_m2, p.d2_proj_m2,
+        |  CAST(p.d2_proj_m2 AS DOUBLE) / 16.0 / CAST(o.d2_orig_m2 AS DOUBLE)
+        |    AS distortion
+        |FROM d2o o JOIN d2p p ON p.vec_id = o.vec_id
+        |WHERE o.d2_orig_m2 > 0 ORDER BY pair_id""".stripMargin),
 
     // MAXIMUM-INNER-PRODUCT search with norm-band pruning (the LEMP /
     // FEXIPRO family, simplified): MIPS ranks by RAW dot product, where
@@ -1625,8 +2943,7 @@ object VectorOps {
     // not assumed (both engines count it). Scale: queries broadcast,
     // the corpus streams map-side through both passes (top-k partials +
     // a 16-cell-per-query band rollup); no candidate-grain shuffle.
-    "v34_mips_norm_bands" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v34_mips_norm_bands", (s, dir) => {
       val e = emb(s, dir)
         .crossJoin(broadcast(emb(s, dir).agg(max(col("norm")).as("maxn"))))
         .withColumn("band", least(floor(col("norm")
@@ -1674,7 +2991,52 @@ object VectorOps {
           col("bands_scanned"), col("n_scanned"), col("n_corpus"),
           col("frac_scanned"), col("n_missed"))
         .orderBy(col("q_id"))
-    }),
+    },
+      s"""WITH $embSql,
+        |mx AS (SELECT MAX(norm) AS maxn FROM e),
+        |eb AS (
+        |  SELECT vec_id, emb, norm,
+        |    CAST(least(floor(norm / (maxn / 16.0)), 15.0) AS BIGINT) AS band
+        |  FROM e, mx),
+        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM eb
+        |      WHERE vec_id % 100 = 50),
+        |p AS (
+        |  SELECT q_id, vec_id, band, norm,
+        |    ROUND(list_dot_product(qe, emb), 6) AS ipr
+        |  FROM eb, q WHERE vec_id <> q_id),
+        |r AS (
+        |  SELECT q_id, vec_id, ipr,
+        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY ipr DESC, vec_id)
+        |      AS rnk
+        |  FROM p),
+        |best AS (
+        |  SELECT q_id,
+        |    MAX(CASE WHEN rnk = 1 THEN vec_id END) AS top1_id,
+        |    MAX(CASE WHEN rnk = 1 THEN ipr END) AS top1_ip,
+        |    MAX(CASE WHEN rnk = 5 THEN ipr END) AS kth_ip
+        |  FROM r WHERE rnk <= 5 GROUP BY q_id),
+        |pb AS (
+        |  SELECT q_id, band, MAX(ipr) AS max_ipr, COUNT(*) AS n_b,
+        |    MAX(norm) AS maxn_b
+        |  FROM p GROUP BY 1, 2),
+        |j AS (
+        |  SELECT pb.q_id, pb.band, pb.max_ipr, pb.n_b,
+        |    b.top1_id, b.top1_ip, b.kth_ip,
+        |    ROUND(q.qn * pb.maxn_b, 6) AS ub
+        |  FROM pb JOIN q ON q.q_id = pb.q_id
+        |  JOIN best b ON b.q_id = pb.q_id)
+        |SELECT q_id, top1_id, top1_ip, kth_ip,
+        |  CAST(SUM(CASE WHEN ub >= kth_ip THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS bands_scanned,
+        |  CAST(SUM(CASE WHEN ub >= kth_ip THEN n_b ELSE 0 END) AS BIGINT)
+        |    AS n_scanned,
+        |  CAST(SUM(n_b) AS BIGINT) AS n_corpus,
+        |  ROUND(CAST(SUM(CASE WHEN ub >= kth_ip THEN n_b ELSE 0 END)
+        |        AS DOUBLE)
+        |      / CAST(SUM(n_b) AS DOUBLE), 6) AS frac_scanned,
+        |  CAST(SUM(CASE WHEN ub < kth_ip AND max_ipr > kth_ip
+        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_missed
+        |FROM j GROUP BY 1, 2, 3, 4 ORDER BY q_id""".stripMargin),
 
     // EMBEDDING DRIFT MONITOR (the model-rollout health check an embedding
     // pipeline runs before mixing vectors from two encoder versions into
@@ -1689,7 +3051,7 @@ object VectorOps {
     // oracle). Plan: one embeddings scan → (label, half, dim) partial-agg
     // (the only data-sized shuffle); everything after runs on the
     // |labels|×2×64-row centroid frame.
-    "v38_embedding_drift" -> ((s, dir) => {
+    QuerySpec("v38_embedding_drift", (s, dir) => {
       val cent = emb(s, dir)
         .withColumn("half", (col("vec_id") % 2).cast("int"))
         .select(col("label"), col("half"),
@@ -1719,7 +3081,38 @@ object VectorOps {
           round(expr("sqrt(cast(l2 as double)) / 1e6"), 6).as("l2_shift"),
           col("max_dim_shift_micro"))
         .orderBy(col("label"))
-    }),
+    },
+      // v02's rounded-centroid construction snapped to the integer micro
+      // lattice; exact integer dot/L2 sums; identical one-tree cos/shift
+      """WITH cent AS (
+        |  SELECT label, CAST(vec_id % 2 AS INT) AS half, sub - 1 AS pos,
+        |    COUNT(*) AS nv, ROUND(AVG(val), 6) AS c6
+        |  FROM (SELECT label, vec_id, unnest(embedding::DOUBLE[]) AS val,
+        |          generate_subscripts(embedding, 1) AS sub
+        |        FROM embeddings)
+        |  GROUP BY 1, 2, 3),
+        |cm AS (SELECT label, half, pos, nv,
+        |         CAST(ROUND(c6 * 1000000, 0) AS BIGINT) AS cm
+        |       FROM cent),
+        |j AS (
+        |  SELECT a.label, a.pos, a.cm AS cm0, b.cm AS cm1,
+        |    a.nv AS nv0, b.nv AS nv1
+        |  FROM cm a JOIN cm b ON a.label = b.label AND a.pos = b.pos
+        |    AND a.half = 0 AND b.half = 1),
+        |agg AS (
+        |  SELECT label, MAX(nv0) AS n0, MAX(nv1) AS n1,
+        |    CAST(SUM(cm0 * cm1) AS BIGINT) AS dot,
+        |    CAST(SUM(cm0 * cm0) AS BIGINT) AS n0sq,
+        |    CAST(SUM(cm1 * cm1) AS BIGINT) AS n1sq,
+        |    CAST(SUM((cm0 - cm1) * (cm0 - cm1)) AS BIGINT) AS l2,
+        |    MAX(abs(cm0 - cm1)) AS max_dim_shift_micro
+        |  FROM j GROUP BY label)
+        |SELECT label, n0, n1,
+        |  ROUND(CAST(dot AS DOUBLE) / (sqrt(CAST(n0sq AS DOUBLE))
+        |    * sqrt(CAST(n1sq AS DOUBLE))), 6) AS cos_drift,
+        |  ROUND(sqrt(CAST(l2 AS DOUBLE)) / 1e6, 6) AS l2_shift,
+        |  max_dim_shift_micro
+        |FROM agg ORDER BY label""".stripMargin),
 
     // IVF CELL-BALANCE AUDIT (the index-health dial behind v05/v27's
     // probe-latency guarantees): at 100 TB a skewed inverted file makes
@@ -1731,8 +3124,7 @@ object VectorOps {
     // corpus; its one unpartitioned window is a directory sort, the same
     // class as ts31's bucket ranking. All counts integer; the two
     // fractions are one-tree doubles.
-    "v39_ivf_balance" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v39_ivf_balance", (s, dir) => {
       val e = emb(s, dir)
       // cells feeds three consumers (stats, ranking, coverage) — one
       // eager checkpoint, v16's discipline
@@ -1759,7 +3151,32 @@ object VectorOps {
             " / cast(n as double)"), 6).as("imbalance"),
           round(expr("cast(top_sz as double) / cast(n as double)"), 6)
             .as("top_decile_frac"))
-    }),
+    },
+      // the v16 adaptive-k assignment replay, then pure directory
+      // arithmetic — identical rank rule (sz DESC, cid) and one-tree
+      // fractions
+      s"""WITH $kmeansSqlAdaptive,
+         |cells AS (SELECT cid, COUNT(*) AS sz FROM af GROUP BY cid),
+         |st AS (
+         |  SELECT COUNT(*) AS n_cells, CAST(SUM(sz) AS BIGINT) AS n,
+         |    MIN(sz) AS min_cell, MAX(sz) AS max_cell
+         |  FROM cells),
+         |rk AS (
+         |  SELECT sz, ROW_NUMBER() OVER (ORDER BY sz DESC, cid) AS rk
+         |  FROM cells),
+         |top AS (
+         |  SELECT CAST(SUM(sz) AS BIGINT) AS top_sz,
+         |    COUNT(*) AS top_decile_cells
+         |  FROM rk, st
+         |  WHERE rk <= CAST(ceil(CAST(n_cells AS DOUBLE) / 10.0)
+         |    AS BIGINT))
+         |SELECT st.n, st.n_cells, st.min_cell, st.max_cell,
+         |  top.top_decile_cells,
+         |  ROUND(CAST(st.max_cell AS DOUBLE) * CAST(st.n_cells AS DOUBLE)
+         |    / CAST(st.n AS DOUBLE), 6) AS imbalance,
+         |  ROUND(CAST(top.top_sz AS DOUBLE) / CAST(st.n AS DOUBLE), 6)
+         |    AS top_decile_frac
+         |FROM st, top""".stripMargin),
 
     // SQ8 QUANTIZATION-DISTORTION AUDIT (the error dial behind v11's
     // 4× storage cut, per label — which classes can afford the lossy
@@ -1770,8 +3187,7 @@ object VectorOps {
     // 12-dp-rounded into exact decimals so the label mean is
     // order-independent; mean/max are one-tree finals. One corpus scan
     // + a one-row broadcast of the min/max arrays — fully linear.
-    "v40_sq8_distortion" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v40_sq8_distortion", (s, dir) => {
       val e = emb(s, dir)
       val mm = e.select(posexplode(col("emb")).as(Seq("pos", "x")))
         .groupBy(col("pos")).agg(min(col("x")).as("mn"), max(col("x")).as("mx"))
@@ -1802,7 +3218,40 @@ object VectorOps {
             .as("mean_sq_err"),
           round(col("me").cast("double"), 6).as("max_sq_err"))
         .orderBy(col("label"))
-    }),
+    },
+      // v11's exact dequantize replay → per-vector squared error as the
+      // same in-list sequential fold, 12-dp decimal terms, one-tree finals
+      """WITH e AS (
+        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb
+        |  FROM embeddings),
+        |d AS (SELECT unnest(embedding::DOUBLE[]) AS x,
+        |        generate_subscripts(embedding, 1) AS sub FROM embeddings),
+        |mmr AS (SELECT sub, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY sub),
+        |mma AS (SELECT list(mn ORDER BY sub) AS mn,
+        |          list(mx ORDER BY sub) AS mx FROM mmr),
+        |err AS (
+        |  SELECT label,
+        |    CAST(ROUND(list_sum(list_transform(range(0, 64), i ->
+        |      CASE WHEN mx[CAST(i + 1 AS INT)] = mn[CAST(i + 1 AS INT)]
+        |      THEN 0.0 ELSE
+        |      (emb[CAST(i + 1 AS INT)] - (mn[CAST(i + 1 AS INT)] +
+        |        CAST(round((emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])
+        |               * 255.0 / (mx[CAST(i + 1 AS INT)]
+        |                 - mn[CAST(i + 1 AS INT)])) AS INT)
+        |          * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])
+        |          / 255.0))
+        |      * (emb[CAST(i + 1 AS INT)] - (mn[CAST(i + 1 AS INT)] +
+        |        CAST(round((emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])
+        |               * 255.0 / (mx[CAST(i + 1 AS INT)]
+        |                 - mn[CAST(i + 1 AS INT)])) AS INT)
+        |          * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])
+        |          / 255.0)) END)), 12) AS DECIMAL(28,12)) AS err
+        |  FROM e, mma)
+        |SELECT label, COUNT(*) AS n,
+        |  ROUND(CAST(SUM(err) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
+        |    AS mean_sq_err,
+        |  ROUND(CAST(MAX(err) AS DOUBLE), 6) AS max_sq_err
+        |FROM err GROUP BY label ORDER BY label""".stripMargin),
 
     // RETRIEVAL-QUALITY EVAL (nDCG@5 + MRR — the ranking-aware metrics
     // recall can't see: an index that returns all 5 true neighbors in
@@ -1814,8 +3263,7 @@ object VectorOps {
     // micro are exact 64-bit arithmetic — hash-portable with no float
     // anywhere. The exact arm is the same bounded ground-truth
     // diagnostic as v04/v06 (|queries| × corpus, queries a broadcast).
-    "v41_retrieval_quality" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v41_retrieval_quality", (s, dir) => {
       val e = emb(s, dir)
       val qs = e.filter(expr("vec_id % 100 = 0"))
         .select(col("vec_id").as("q_id"), col("emb").as("qe"),
@@ -1840,7 +3288,76 @@ object VectorOps {
           col("dcg_micro"),
           expr("(dcg_micro * 1000000) div 2948457").as("ndcg_ppm"))
         .orderBy(col("q_id"))
-    }),
+    },
+      // v05's IVF replay judged against v01's exact top-5; the same fixed
+      // micro-unit DCG weights — integer end to end
+      """WITH e AS (
+        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
+        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
+        |  FROM embeddings),
+        |cd AS (
+        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
+        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
+        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
+        |  GROUP BY label, sub),
+        |cent AS (
+        |  SELECT label AS clabel, cvec,
+        |    sqrt(list_dot_product(cvec, cvec)) AS cnorm
+        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd
+        |        GROUP BY label)),
+        |sims AS (
+        |  SELECT vec_id, emb, norm, clabel,
+        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
+        |  FROM e, cent),
+        |assign AS (
+        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
+        |  WHERE crn = 1),
+        |probes AS (
+        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell
+        |  FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims
+        |    WHERE vec_id % 100 = 0)
+        |  WHERE crn <= 2),
+        |cand AS (
+        |  SELECT q_id, vec_id AS c_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
+        |ivf AS (
+        |  SELECT q_id, c_id, rnk FROM (
+        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY sim DESC, c_id) AS rnk FROM cand)
+        |  WHERE rnk <= 5),
+        |q2 AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
+        |       WHERE vec_id % 100 = 0),
+        |exc AS (
+        |  SELECT q_id, vec_id AS c_id, ROW_NUMBER() OVER (
+        |    PARTITION BY q_id ORDER BY sim DESC, vec_id) AS xr
+        |  FROM (SELECT q_id, vec_id,
+        |          ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |        FROM e, q2 WHERE vec_id <> q_id)),
+        |ex AS (SELECT q_id, c_id FROM exc WHERE xr <= 5),
+        |sc AS (
+        |  SELECT i.q_id, i.rnk,
+        |    CASE WHEN ex.c_id IS NOT NULL THEN 1 ELSE 0 END AS rel,
+        |    CASE i.rnk WHEN 1 THEN 1000000 WHEN 2 THEN 630929
+        |      WHEN 3 THEN 500000 WHEN 4 THEN 430676 ELSE 386852 END AS w
+        |  FROM ivf i LEFT JOIN ex ON ex.q_id = i.q_id
+        |    AND ex.c_id = i.c_id),
+        |ag AS (
+        |  SELECT q_id, CAST(SUM(rel) AS BIGINT) AS n_hits,
+        |    MIN(CASE WHEN rel = 1 THEN rnk END) AS fr,
+        |    CAST(SUM(rel * w) AS BIGINT) AS dcg_micro
+        |  FROM sc GROUP BY q_id)
+        |SELECT q_id, n_hits,
+        |  CAST(COALESCE(fr, 0) AS BIGINT) AS first_hit_rank,
+        |  CAST(CASE WHEN COALESCE(fr, 0) > 0 THEN 1000000 // fr
+        |    ELSE 0 END AS BIGINT) AS mrr_micro,
+        |  dcg_micro,
+        |  CAST((dcg_micro * 1000000) // 2948457 AS BIGINT) AS ndcg_ppm
+        |FROM ag ORDER BY q_id""".stripMargin),
 
     // TOMBSTONE-MASKED ANN (v37's sibling: deletes instead of inserts —
     // how production serves DELETES without reindexing: the IVF index is
@@ -1854,8 +3371,7 @@ object VectorOps {
     // (every query at gate scale — oracle exact; ~5 queries at any
     // rung). n_masked per query makes the staleness visible: it counts
     // candidates the index served that no longer exist.
-    "v42_tombstone_ann" -> ((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v42_tombstone_ann", (s, dir) => {
       val e = emb(s, dir)
       val auditStride = 100L * math.max(1L, e.count() / 500L)
       val cents = sqrtSeedCents(e).localCheckpoint(true)
@@ -1898,7 +3414,66 @@ object VectorOps {
           when(col("audited"), round(col("n_hit").cast("double") / 5.0, 6)))
         .drop("audited")
         .orderBy(col("q_id"))
-    }),
+    },
+      // stale-index replay: v27's IVF shape, the tombstone mask as the same
+      // integer predicate, exact ground truth over the LIVE corpus only
+      s"""WITH $embSql,
+        |k AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS kk FROM e),
+        |cent AS (
+        |  SELECT vec_id AS clabel, emb AS cvec, norm AS cnorm
+        |  FROM e, k WHERE vec_id < kk),
+        |sims AS (
+        |  SELECT vec_id, emb, norm, clabel,
+        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
+        |  FROM e, cent),
+        |assign AS (
+        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
+        |  WHERE crn = 1),
+        |probes AS (
+        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
+        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
+        |      ORDER BY csim DESC, clabel) AS crn FROM sims
+        |    WHERE vec_id % 100 = 0)
+        |  WHERE crn <= 2),
+        |cand AS (
+        |  SELECT q_id, vec_id AS c_id,
+        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
+        |mk AS (
+        |  SELECT q_id,
+        |    CAST(SUM(CASE WHEN c_id % 10 = 3 THEN 1 ELSE 0 END) AS BIGINT)
+        |      AS n_masked
+        |  FROM cand GROUP BY q_id),
+        |t5 AS (
+        |  SELECT q_id, c_id, sim, rnk FROM (
+        |    SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
+        |      ORDER BY sim DESC, c_id) AS rnk
+        |    FROM cand WHERE c_id % 10 <> 3)
+        |  WHERE rnk <= 5),
+        |q2 AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
+        |       WHERE vec_id % 100 = 0),
+        |ex AS (
+        |  SELECT q_id, c_id FROM (
+        |    SELECT q_id, vec_id AS c_id, ROW_NUMBER() OVER (
+        |      PARTITION BY q_id ORDER BY sim DESC, vec_id) AS xr
+        |    FROM (SELECT q_id, vec_id,
+        |            ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+        |          FROM e, q2
+        |          WHERE vec_id <> q_id AND vec_id % 10 <> 3))
+        |  WHERE xr <= 5),
+        |h AS (
+        |  SELECT a.q_id, CAST(COUNT(*) AS BIGINT) AS n_hit
+        |  FROM t5 a SEMI JOIN ex ON ex.q_id = a.q_id AND ex.c_id = a.c_id
+        |  GROUP BY a.q_id)
+        |SELECT t.q_id, t.c_id AS top1_id, t.sim AS top1_sim, mk.n_masked,
+        |  CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
+        |  ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / 5.0, 6)
+        |    AS recall_at_5
+        |FROM t5 t JOIN mk ON t.q_id = mk.q_id
+        |LEFT JOIN h ON t.q_id = h.q_id
+        |WHERE t.rnk = 1 ORDER BY t.q_id""".stripMargin),
 
     // SCALE-ROBUST CASCADE (r13 item 3 built it width-robust; r15
     // rebuilt it RECALL-robust after honest measurement — see
@@ -1925,12 +3500,18 @@ object VectorOps {
     // broadcast; stage-2 reconstruct is a map-side expression over
     // broadcast survivor frames; shuffles are the per-query top-C1
     // partial aggregate and nothing else.
-    "v43_cascade_pq" -> withHashAggBudget((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v43_cascade_pq", withHashAggBudget((s, dir) => {
       val (_, _, casc, _) = cascadePqStored(s, dir)
       casc.select(col("q_id"), col("rnk"), col("c_id"), col("sim"))
         .orderBy(col("q_id"), col("rnk"))
     }),
+      // width-robust cascade replay: v32's Hamming stage 1 → v12's PQ
+      // train/encode (sampled: vec_id % 8 = 0, seeds < 128) ADC on stage-1
+      // survivors → exact rerank; serving top-5
+      (cascadePqSqlStages +
+        """
+          |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM casc
+          |ORDER BY q_id, rnk""".stripMargin)),
 
     // v43's cost/quality ledger — recall@5 of the PQ cascade against the
     // exact ground truth, next to each stage's scored-candidate count
@@ -1940,8 +3521,7 @@ object VectorOps {
     // it pins CORRECTNESS of the recall arithmetic, not retrieval
     // quality; quality claims come from CascadeTune's 3,200-row panels
     // at 64k (SWEEP15).
-    "v44_cascade_pq_recall" -> withHashAggBudget((s, dir) => {
-      graft.functions.VectorFunctions.register(s)
+    QuerySpec("v44_cascade_pq_recall", withHashAggBudget((s, dir) => {
       val e = emb(s, dir)
       val (st1, st2, casc, qs) = cascadePqStored(s, dir)
       val top5 = casc.select(col("q_id"), col("c_id")).localCheckpoint(true)
@@ -1956,7 +3536,27 @@ object VectorOps {
         .crossJoin(hit.agg(count(lit(1)).as("n_hit")))
         .withColumn("recall_at_5",
           round(col("n_hit").cast("double") / col("n_exact"), 6))
-    })
+    }),
+      // the cascade's cost/quality ledger: same replay + brute-force exact
+      // ground truth, v32's ledger tail
+      (cascadePqSqlStages +
+        """,
+          |px AS (
+          |  SELECT q_id, vec_id AS c_id,
+          |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
+          |  FROM e, q WHERE vec_id <> q_id),
+          |ex AS (
+          |  SELECT q_id, c_id FROM (
+          |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
+          |      ORDER BY sim DESC, c_id) AS rnk FROM px)
+          |  WHERE rnk <= 5),
+          |c5 AS (SELECT q_id, c_id FROM casc)
+          |SELECT (SELECT COUNT(*) FROM ex) AS n_exact,
+          |  (SELECT COUNT(*) FROM st1) AS n_stage1,
+          |  (SELECT COUNT(*) FROM st2) AS n_stage2,
+          |  (SELECT COUNT(*) FROM c5 SEMI JOIN ex USING (q_id, c_id)) AS n_hit,
+          |  ROUND((SELECT COUNT(*) FROM c5 SEMI JOIN ex USING (q_id, c_id))
+          |    / CAST((SELECT COUNT(*) FROM ex) AS DOUBLE), 6) AS recall_at_5""".stripMargin))
   )
 
   /** The width-robust PQ cascade shared by v43 (serving) and v44
@@ -2583,7 +4183,6 @@ object VectorOps {
     * always collides as (exact x, probe y). */
   private[graft] def lshCandidates(e: DataFrame, planes: Int, bands: Int,
       width: Int, multiProbe: Boolean = false): DataFrame = {
-    graft.functions.VectorFunctions.register(e.sparkSession)
     val mask = (1 << width) - 1
     // (vec_id, one long) per row — barriered because BOTH bucket-join
     // sides (and under multiProbe every bit-flip union branch: width+1
@@ -2709,1733 +4308,6 @@ object VectorOps {
     val (w, bands) = lshDials(e.count(), maxBands, planesBudget)
     lshPairs(e, planes = bands * w, bands = bands, width = w, multiProbe)
   }
-
-  val oracle: Map[String, String] = Map(
-    "v01_cosine_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e WHERE vec_id % 100 = 0),
-        |p AS (
-        |  SELECT q_id, vec_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE vec_id <> q_id),
-        |r AS (
-        |  SELECT q_id, vec_id, sim,
-        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rnk
-        |  FROM p)
-        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, vec_id AS c_id, sim
-        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    "v03_ann_lsh" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, emb, norm,
-        |  CAST(list_sum(list_transform(range(0, 16), i ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
-        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
-        |    >= 0 THEN (1 << CAST(i AS INT)) ELSE 0 END)) AS INT) AS sig FROM e),
-        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
-        |          FROM s, range(0, 4) t(b)),
-        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-        |      FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
-        |x AS (SELECT vec_a, vec_b,
-        |        round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
-        |      FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
-        |SELECT vec_a, vec_b, sim FROM x WHERE sim >= 0.3 ORDER BY vec_a, vec_b""".stripMargin,
-
-    "v02_label_centroids" ->
-      """SELECT label, CAST(sub - 1 AS BIGINT) AS pos,
-        |  ROUND(AVG(val), 6) AS centroid, COUNT(*) AS n
-        |FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
-        |        generate_subscripts(embedding, 1) AS sub FROM embeddings)
-        |GROUP BY label, pos ORDER BY label, pos""".stripMargin,
-
-    "v04_ann_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings WHERE vec_id % 3 = 0),
-        |s AS (SELECT vec_id, emb, norm,
-        |  CAST(list_sum(list_transform(range(0, 16), i ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
-        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
-        |    >= 0 THEN (1 << CAST(i AS INT)) ELSE 0 END)) AS INT) AS sig FROM e),
-        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
-        |          FROM s, range(0, 4) t(b)),
-        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-        |      FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
-        |lsh AS (SELECT vec_a, vec_b
-        |        FROM (SELECT vec_a, vec_b,
-        |                round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
-        |              FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
-        |        WHERE sim >= 0.3),
-        |exact AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |          FROM e a, e b
-        |          WHERE a.vec_id < b.vec_id
-        |            AND round(list_dot_product(a.emb, b.emb) / (a.norm * b.norm), 6) >= 0.3),
-        |hit AS (SELECT vec_a, vec_b FROM lsh l WHERE EXISTS
-        |  (SELECT 1 FROM exact x WHERE x.vec_a = l.vec_a AND x.vec_b = l.vec_b))
-        |SELECT (SELECT COUNT(*) FROM exact) AS n_exact,
-        |  (SELECT COUNT(*) FROM lsh) AS n_lsh,
-        |  (SELECT COUNT(*) FROM hit) AS n_hit,
-        |  ROUND(CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
-        |      / (SELECT COUNT(*) FROM exact), 6) AS recall""".stripMargin,
-
-    "v07_ann_recall_hi" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings WHERE vec_id % 3 = 0),
-        |s AS (SELECT vec_id, emb, norm,
-        |  CAST(list_sum(list_transform(range(0, 60), i ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
-        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
-        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
-        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
-        |          FROM s, range(0, 15) t(b)),
-        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-        |      FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
-        |lsh AS (SELECT vec_a, vec_b
-        |        FROM (SELECT vec_a, vec_b,
-        |                round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
-        |              FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
-        |        WHERE sim >= 0.3),
-        |exact AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |          FROM e a, e b
-        |          WHERE a.vec_id < b.vec_id
-        |            AND round(list_dot_product(a.emb, b.emb) / (a.norm * b.norm), 6) >= 0.3),
-        |hit AS (SELECT vec_a, vec_b FROM lsh l WHERE EXISTS
-        |  (SELECT 1 FROM exact x WHERE x.vec_a = l.vec_a AND x.vec_b = l.vec_b))
-        |SELECT (SELECT COUNT(*) FROM exact) AS n_exact,
-        |  (SELECT COUNT(*) FROM p) AS n_cand,
-        |  (SELECT COUNT(*) FROM lsh) AS n_lsh,
-        |  (SELECT COUNT(*) FROM hit) AS n_hit,
-        |  ROUND(CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
-        |      / (SELECT COUNT(*) FROM exact), 6) AS recall""".stripMargin,
-
-    // v07's replay plus a `probes` CTE (band values ∪ their four 1-bit
-    // flips) on one join side — Hamming ≤ 1 band collisions, same as the
-    // engine's multi-probe
-    "v08_ann_recall_probe" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings WHERE vec_id % 3 = 0),
-        |s AS (SELECT vec_id, emb, norm,
-        |  CAST(list_sum(list_transform(range(0, 60), i ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
-        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
-        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
-        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
-        |          FROM s, range(0, 15) t(b)),
-        |probes AS (SELECT vec_id, b, bv FROM bands
-        |           UNION ALL
-        |           SELECT vec_id, b, xor(bv, 1 << CAST(k AS INT)) AS bv
-        |           FROM bands, range(0, 4) f(k)),
-        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-        |      FROM bands a JOIN probes c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
-        |lsh AS (SELECT vec_a, vec_b
-        |        FROM (SELECT vec_a, vec_b,
-        |                round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
-        |              FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
-        |        WHERE sim >= 0.3),
-        |exact AS (SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-        |          FROM e a, e b
-        |          WHERE a.vec_id < b.vec_id
-        |            AND round(list_dot_product(a.emb, b.emb) / (a.norm * b.norm), 6) >= 0.3),
-        |hit AS (SELECT vec_a, vec_b FROM lsh l WHERE EXISTS
-        |  (SELECT 1 FROM exact x WHERE x.vec_a = l.vec_a AND x.vec_b = l.vec_b))
-        |SELECT (SELECT COUNT(*) FROM exact) AS n_exact,
-        |  (SELECT COUNT(*) FROM p) AS n_cand,
-        |  (SELECT COUNT(*) FROM lsh) AS n_lsh,
-        |  (SELECT COUNT(*) FROM hit) AS n_hit,
-        |  ROUND(CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
-        |      / (SELECT COUNT(*) FROM exact), 6) AS recall""".stripMargin,
-
-    // v08's signature/probe replay over the FULL corpus, emitting the
-    // thresholded pair list itself (the production output)
-    "v09_ann_pairs_hi" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, emb, norm,
-        |  CAST(list_sum(list_transform(range(0, 60), i ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
-        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
-        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
-        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
-        |          FROM s, range(0, 15) t(b)),
-        |probes AS (SELECT vec_id, b, bv FROM bands
-        |           UNION ALL
-        |           SELECT vec_id, b, xor(bv, 1 << CAST(k AS INT)) AS bv
-        |           FROM bands, range(0, 4) f(k)),
-        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-        |      FROM bands a JOIN probes c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
-        |x AS (SELECT vec_a, vec_b,
-        |        round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
-        |      FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
-        |SELECT vec_a, vec_b, sim FROM x WHERE sim >= 0.3 ORDER BY vec_a, vec_b""".stripMargin,
-
-    // v09's pair replay + transitive closure to the per-component minimum
-    // id (same WITH RECURSIVE reachability shape as tx14's oracle), left
-    // joined back so singleton vectors keep themselves
-    "v10_embedding_dedup" ->
-      """WITH RECURSIVE e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, emb, norm,
-        |  CAST(list_sum(list_transform(range(0, 60), i ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
-        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
-        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
-        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
-        |          FROM s, range(0, 15) t(b)),
-        |probes AS (SELECT vec_id, b, bv FROM bands
-        |           UNION ALL
-        |           SELECT vec_id, b, xor(bv, 1 << CAST(k AS INT)) AS bv
-        |           FROM bands, range(0, 4) f(k)),
-        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-        |      FROM bands a JOIN probes c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
-        |pairs AS (SELECT vec_a AS src, vec_b AS dst
-        |          FROM (SELECT vec_a, vec_b,
-        |                  round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) AS sim
-        |                FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b)
-        |          WHERE sim >= 0.3),
-        |sym AS (SELECT src, dst FROM pairs UNION ALL SELECT dst, src FROM pairs),
-        |verts AS (SELECT DISTINCT src AS id FROM sym),
-        |reach(id, r) AS (
-        |  SELECT id, id FROM verts
-        |  UNION
-        |  SELECT sm.src, reach.r FROM sym sm JOIN reach ON sm.dst = reach.id),
-        |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id)
-        |SELECT em.vec_id, COALESCE(comp.label, em.vec_id) AS canonical_id,
-        |  COALESCE(comp.label, em.vec_id) = em.vec_id AS is_kept
-        |FROM embeddings em LEFT JOIN comp ON comp.id = em.vec_id
-        |ORDER BY em.vec_id""".stripMargin,
-
-    "v05_ivf_ann" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |cd AS (
-        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
-        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
-        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
-        |  GROUP BY label, sub),
-        |cent AS (
-        |  SELECT label AS clabel, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnorm
-        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd GROUP BY label)),
-        |sims AS (
-        |  SELECT vec_id, emb, norm, clabel,
-        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
-        |  FROM e, cent),
-        |assign AS (
-        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
-        |  WHERE crn = 1),
-        |probes AS (
-        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims WHERE vec_id % 100 = 0)
-        |  WHERE crn <= 2),
-        |cand AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
-        |r AS (
-        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY sim DESC, c_id) AS rnk FROM cand)
-        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim
-        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    "v06_ivf_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e WHERE vec_id % 100 = 0),
-        |px AS (
-        |  SELECT q_id, vec_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE vec_id <> q_id),
-        |rx AS (
-        |  SELECT q_id, vec_id AS c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY sim DESC, vec_id) AS rnk FROM px),
-        |exact AS (SELECT q_id, c_id FROM rx WHERE rnk <= 5),
-        |cd AS (
-        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
-        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
-        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
-        |  GROUP BY label, sub),
-        |cent AS (
-        |  SELECT label AS clabel, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnorm
-        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd GROUP BY label)),
-        |sims AS (
-        |  SELECT vec_id, emb, norm, clabel,
-        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
-        |  FROM e, cent),
-        |assign AS (
-        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
-        |  WHERE crn = 1),
-        |probes AS (
-        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims WHERE vec_id % 100 = 0)
-        |  WHERE crn <= 2),
-        |cand AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
-        |riv AS (
-        |  SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY sim DESC, c_id) AS rnk FROM cand),
-        |ivf AS (SELECT q_id, c_id FROM riv WHERE rnk <= 5),
-        |hit AS (SELECT q_id, c_id FROM ivf i WHERE EXISTS
-        |  (SELECT 1 FROM exact x WHERE x.q_id = i.q_id AND x.c_id = i.c_id))
-        |SELECT (SELECT COUNT(*) FROM exact) AS n_exact,
-        |  (SELECT COUNT(*) FROM hit) AS n_hit,
-        |  ROUND(CAST((SELECT COUNT(*) FROM hit) AS DOUBLE)
-        |      / (SELECT COUNT(*) FROM exact), 6) AS recall_at_5""".stripMargin,
-
-    // v06's replay swept over nprobe ∈ {1,2,4}: the probe rank cutoff
-    // becomes the sweep variable, everything else is shared
-    "v24_ivf_nprobe_curve" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e WHERE vec_id % 100 = 0),
-        |px AS (
-        |  SELECT q_id, vec_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE vec_id <> q_id),
-        |rx AS (
-        |  SELECT q_id, vec_id AS c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY sim DESC, vec_id) AS rnk FROM px),
-        |exact AS (SELECT q_id, c_id FROM rx WHERE rnk <= 5),
-        |nex AS (SELECT COUNT(*) AS n_exact FROM exact),
-        |cd AS (
-        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
-        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
-        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
-        |  GROUP BY label, sub),
-        |cent AS (
-        |  SELECT label AS clabel, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnorm
-        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd GROUP BY label)),
-        |sims AS (
-        |  SELECT vec_id, emb, norm, clabel,
-        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
-        |  FROM e, cent),
-        |assign AS (
-        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
-        |  WHERE crn = 1),
-        |nps AS (SELECT unnest([1, 2, 4]) AS np),
-        |probes AS (
-        |  SELECT np, vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell
-        |  FROM (
-        |    SELECT s.*, n.np, ROW_NUMBER() OVER (PARTITION BY s.vec_id, n.np
-        |      ORDER BY csim DESC, clabel) AS crn
-        |    FROM sims s, nps n WHERE vec_id % 100 = 0)
-        |  WHERE crn <= np),
-        |cand AS (
-        |  SELECT np, q_id, vec_id AS c_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
-        |riv AS (
-        |  SELECT np, q_id, c_id, ROW_NUMBER() OVER (PARTITION BY np, q_id
-        |    ORDER BY sim DESC, c_id) AS rnk FROM cand),
-        |ivf AS (SELECT np, q_id, c_id FROM riv WHERE rnk <= 5),
-        |hits AS (
-        |  SELECT np, COUNT(*) AS n_hit FROM ivf i
-        |  WHERE EXISTS (SELECT 1 FROM exact x
-        |                WHERE x.q_id = i.q_id AND x.c_id = i.c_id)
-        |  GROUP BY np)
-        |SELECT CAST(np AS BIGINT) AS nprobe,
-        |  COALESCE(n_hit, 0) AS n_hit, n_exact,
-        |  CAST(COALESCE(n_hit, 0) AS DOUBLE) / n_exact AS recall_at_5
-        |FROM nps LEFT JOIN hits USING (np) CROSS JOIN nex
-        |ORDER BY nprobe""".stripMargin,
-
-    // full replay of the SQ8 pipeline: per-dim min/max codebook → int8
-    // codes → dequantize → asymmetric candidate top-15 → exact rerank
-    "v11_sq8_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |d AS (SELECT unnest(embedding::DOUBLE[]) AS x,
-        |        generate_subscripts(embedding, 1) AS sub FROM embeddings),
-        |mmr AS (SELECT sub, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY sub),
-        |mma AS (SELECT list(mn ORDER BY sub) AS mn, list(mx ORDER BY sub) AS mx
-        |        FROM mmr),
-        |coded AS (
-        |  SELECT vec_id,
-        |    list_transform(range(0, 64), i ->
-        |      mn[CAST(i + 1 AS INT)] +
-        |      CAST(round((emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) * 255.0
-        |             / (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])) AS INT)
-        |        * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) / 255.0) AS dq
-        |  FROM e, mma),
-        |cd AS (SELECT vec_id, dq, sqrt(list_dot_product(dq, dq)) AS dqn FROM coded),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
-        |      WHERE vec_id % 100 = 0),
-        |cand AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    round(list_dot_product(qe, dq) / (qn * dqn), 6) AS asim
-        |  FROM cd, q WHERE vec_id <> q_id),
-        |top15 AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY asim DESC, c_id) AS r FROM cand)
-        |  WHERE r <= 15),
-        |rr AS (
-        |  SELECT t.q_id, t.c_id,
-        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
-        |  FROM top15 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id)
-        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM (
-        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY sim DESC, c_id) AS rnk FROM rr)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    // full replay of the PQ pipeline: seed codebook (16 lowest ids) → one
-    // Lloyd step (assign + rounded dim-wise means, empty cells keep the
-    // seed) → encode via per-subspace argmin → ADC candidate top-20 →
-    // exact rerank
-    "v12_pq_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |subs AS (
-        |  SELECT vec_id, s.sub, e.emb[CAST(s.sub * 4 + 1 AS INT) : CAST(s.sub * 4 + 4 AS INT)] AS sv
-        |  FROM e, (SELECT unnest(range(0, 16)) AS sub) s),
-        |seeds AS (SELECT CAST(vec_id AS INT) AS cid, sub, sv AS cv
-        |          FROM subs WHERE vec_id < 16),
-        |d0 AS (
-        |  SELECT v.vec_id, v.sub, c.cid, v.sv,
-        |    round(list_sum(list_transform(range(1, 5), i ->
-        |      (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
-        |      * (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)]))), 6) AS dist
-        |  FROM subs v JOIN seeds c USING (sub)),
-        |a0 AS (
-        |  SELECT vec_id, sub, cid, sv FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-        |      ORDER BY dist, cid) AS rn FROM d0) WHERE rn = 1),
-        |rf AS (
-        |  SELECT sub, cid, pos, round(AVG(x), 6) AS mu FROM (
-        |    SELECT sub, cid, unnest(sv) AS x, generate_subscripts(sv, 1) AS pos
-        |    FROM a0)
-        |  GROUP BY sub, cid, pos),
-        |rfc AS (SELECT sub, cid, list(mu ORDER BY pos) AS cv FROM rf
-        |        GROUP BY sub, cid),
-        |cb AS (
-        |  SELECT s.sub, s.cid, COALESCE(r.cv, s.cv) AS cv
-        |  FROM seeds s LEFT JOIN rfc r ON r.sub = s.sub AND r.cid = s.cid),
-        |d1 AS (
-        |  SELECT v.vec_id, v.sub, c.cid, c.cv,
-        |    round(list_sum(list_transform(range(1, 5), i ->
-        |      (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
-        |      * (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)]))), 6) AS dist
-        |  FROM subs v JOIN cb c USING (sub)),
-        |enc AS (
-        |  SELECT vec_id, sub, cv FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-        |      ORDER BY dist, cid) AS rn FROM d1) WHERE rn = 1),
-        |recon AS (
-        |  SELECT vec_id, flatten(list(cv ORDER BY sub)) AS dq FROM enc
-        |  GROUP BY vec_id),
-        |cd AS (SELECT vec_id, dq, sqrt(list_dot_product(dq, dq)) AS dqn FROM recon),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
-        |      WHERE vec_id % 100 = 0),
-        |cand AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    round(list_dot_product(qe, dq) / (qn * dqn), 6) AS asim
-        |  FROM cd, q WHERE vec_id <> q_id),
-        |topc AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY asim DESC, c_id) AS r FROM cand) WHERE r <= 50),
-        |rr AS (
-        |  SELECT t.q_id, t.c_id,
-        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
-        |  FROM topc t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id)
-        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM (
-        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY sim DESC, c_id) AS rnk FROM rr)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    // end-to-end IVFPQ replay: v05's cell assignment/probes + v12's PQ
-    // train/encode, run on RESIDUALS, reconstruct centroid + dq(residual),
-    // ADC inside probed cells, exact rerank of the top-50
-    "v13_ivfpq_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |cd AS (
-        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
-        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
-        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
-        |  GROUP BY label, sub),
-        |cent AS (
-        |  SELECT label AS clabel, cvec, sqrt(list_dot_product(cvec, cvec)) AS cnorm
-        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd GROUP BY label)),
-        |sims AS (
-        |  SELECT vec_id, emb, norm, clabel,
-        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
-        |  FROM e, cent),
-        |assign AS (
-        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
-        |  WHERE crn = 1),
-        |resid AS (
-        |  SELECT a.vec_id, a.cell,
-        |    list_transform(range(1, 65), i ->
-        |      round(a.emb[CAST(i AS INT)] - c.cvec[CAST(i AS INT)], 6)) AS res
-        |  FROM assign a JOIN cent c ON c.clabel = a.cell),
-        |subs AS (
-        |  SELECT vec_id, s.sub,
-        |    res[CAST(s.sub * 4 + 1 AS INT) : CAST(s.sub * 4 + 4 AS INT)] AS sv
-        |  FROM resid, (SELECT unnest(range(0, 16)) AS sub) s),
-        |seeds AS (SELECT CAST(vec_id AS INT) AS cid, sub, sv AS cv
-        |          FROM subs WHERE vec_id < 16),
-        |d0 AS (
-        |  SELECT v.vec_id, v.sub, c.cid, v.sv,
-        |    round(list_sum(list_transform(range(1, 5), i ->
-        |      (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
-        |      * (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)]))), 6) AS dist
-        |  FROM subs v JOIN seeds c USING (sub)),
-        |a0 AS (
-        |  SELECT vec_id, sub, cid, sv FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-        |      ORDER BY dist, cid) AS rn FROM d0) WHERE rn = 1),
-        |rf AS (
-        |  SELECT sub, cid, pos, round(AVG(x), 6) AS mu FROM (
-        |    SELECT sub, cid, unnest(sv) AS x, generate_subscripts(sv, 1) AS pos
-        |    FROM a0)
-        |  GROUP BY sub, cid, pos),
-        |rfc AS (SELECT sub, cid, list(mu ORDER BY pos) AS cv FROM rf
-        |        GROUP BY sub, cid),
-        |cb AS (
-        |  SELECT s.sub, s.cid, COALESCE(r.cv, s.cv) AS cv
-        |  FROM seeds s LEFT JOIN rfc r ON r.sub = s.sub AND r.cid = s.cid),
-        |d1 AS (
-        |  SELECT v.vec_id, v.sub, c.cid, c.cv,
-        |    round(list_sum(list_transform(range(1, 5), i ->
-        |      (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)])
-        |      * (v.sv[CAST(i AS INT)] - c.cv[CAST(i AS INT)]))), 6) AS dist
-        |  FROM subs v JOIN cb c USING (sub)),
-        |enc AS (
-        |  SELECT vec_id, sub, cv FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-        |      ORDER BY dist, cid) AS rn FROM d1) WHERE rn = 1),
-        |recon0 AS (
-        |  SELECT vec_id, flatten(list(cv ORDER BY sub)) AS dqr FROM enc
-        |  GROUP BY vec_id),
-        |recon AS (
-        |  SELECT r.vec_id, a.cell,
-        |    list_transform(range(1, 65), i ->
-        |      c.cvec[CAST(i AS INT)] + r.dqr[CAST(i AS INT)]) AS rc
-        |  FROM recon0 r JOIN assign a USING (vec_id)
-        |  JOIN cent c ON c.clabel = a.cell),
-        |cdx AS (SELECT vec_id, cell, rc,
-        |          sqrt(list_dot_product(rc, rc)) AS rn FROM recon),
-        |probes AS (
-        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims WHERE vec_id % 100 = 0)
-        |  WHERE crn <= 2),
-        |cand AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    round(list_dot_product(qe, rc) / (qn * rn), 6) AS asim
-        |  FROM cdx JOIN probes USING (cell) WHERE vec_id <> q_id),
-        |topc AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY asim DESC, c_id) AS r FROM cand) WHERE r <= 50),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
-        |      WHERE vec_id % 100 = 0),
-        |rr AS (
-        |  SELECT t.q_id, t.c_id,
-        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
-        |  FROM topc t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id)
-        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM (
-        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY sim DESC, c_id) AS rnk FROM rr)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    // greedy MMR unrolled: top-20 pool, pairwise sims among pool members,
-    // then 5 chained argmax steps (score rounded to 6 dp, ties to the
-    // lowest id) — div at step s = greatest over the s-1 picks so far
-    "v14_mmr_diversify" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
-        |      WHERE vec_id % 100 = 0),
-        |p AS (
-        |  SELECT q_id, vec_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE vec_id <> q_id),
-        |cw AS (
-        |  SELECT q_id, vec_id AS c_id, sim FROM (
-        |    SELECT q_id, vec_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, vec_id) AS rnk FROM p) WHERE rnk <= 20),
-        |ce AS (SELECT w.q_id, w.c_id, e.emb, e.norm
-        |       FROM cw w JOIN e ON e.vec_id = w.c_id),
-        |ps AS (
-        |  SELECT a.q_id, a.c_id AS ca, b.c_id AS cb,
-        |    ROUND(list_dot_product(a.emb, b.emb) / (a.norm * b.norm), 6) AS sim
-        |  FROM ce a JOIN ce b ON b.q_id = a.q_id AND b.c_id <> a.c_id),
-        |s1 AS (
-        |  SELECT q_id, c_id AS sel1, sim AS sim1 FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, c_id) AS rn FROM cw) WHERE rn = 1),
-        |sc2 AS (
-        |  SELECT c.q_id, c.c_id, c.sim,
-        |    CAST(ROUND(0.7 * CAST(c.sim AS DECIMAL(18,6))
-        |      - 0.3 * CAST(p1.sim AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-        |  FROM cw c JOIN s1 USING (q_id)
-        |  JOIN ps p1 ON p1.q_id = c.q_id AND p1.ca = c.c_id AND p1.cb = s1.sel1
-        |  WHERE c.c_id <> s1.sel1),
-        |s2 AS (
-        |  SELECT q_id, c_id AS sel2, sim AS sim2, mmr AS mmr2 FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY mmr DESC, c_id) AS rn FROM sc2) WHERE rn = 1),
-        |sc3 AS (
-        |  SELECT c.q_id, c.c_id, c.sim,
-        |    CAST(ROUND(0.7 * CAST(c.sim AS DECIMAL(18,6))
-        |      - 0.3 * CAST(greatest(p1.sim, p2.sim) AS DECIMAL(18,6)), 6)
-        |      AS DOUBLE) AS mmr
-        |  FROM cw c JOIN s1 USING (q_id) JOIN s2 USING (q_id)
-        |  JOIN ps p1 ON p1.q_id = c.q_id AND p1.ca = c.c_id AND p1.cb = s1.sel1
-        |  JOIN ps p2 ON p2.q_id = c.q_id AND p2.ca = c.c_id AND p2.cb = s2.sel2
-        |  WHERE c.c_id NOT IN (s1.sel1, s2.sel2)),
-        |s3 AS (
-        |  SELECT q_id, c_id AS sel3, sim AS sim3, mmr AS mmr3 FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY mmr DESC, c_id) AS rn FROM sc3) WHERE rn = 1),
-        |sc4 AS (
-        |  SELECT c.q_id, c.c_id, c.sim,
-        |    CAST(ROUND(0.7 * CAST(c.sim AS DECIMAL(18,6))
-        |      - 0.3 * CAST(greatest(p1.sim, p2.sim, p3.sim) AS DECIMAL(18,6)), 6)
-        |      AS DOUBLE) AS mmr
-        |  FROM cw c JOIN s1 USING (q_id) JOIN s2 USING (q_id) JOIN s3 USING (q_id)
-        |  JOIN ps p1 ON p1.q_id = c.q_id AND p1.ca = c.c_id AND p1.cb = s1.sel1
-        |  JOIN ps p2 ON p2.q_id = c.q_id AND p2.ca = c.c_id AND p2.cb = s2.sel2
-        |  JOIN ps p3 ON p3.q_id = c.q_id AND p3.ca = c.c_id AND p3.cb = s3.sel3
-        |  WHERE c.c_id NOT IN (s1.sel1, s2.sel2, s3.sel3)),
-        |s4 AS (
-        |  SELECT q_id, c_id AS sel4, sim AS sim4, mmr AS mmr4 FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY mmr DESC, c_id) AS rn FROM sc4) WHERE rn = 1),
-        |sc5 AS (
-        |  SELECT c.q_id, c.c_id, c.sim,
-        |    CAST(ROUND(0.7 * CAST(c.sim AS DECIMAL(18,6))
-        |      - 0.3 * CAST(greatest(p1.sim, p2.sim, p3.sim, p4.sim)
-        |                   AS DECIMAL(18,6)), 6) AS DOUBLE) AS mmr
-        |  FROM cw c JOIN s1 USING (q_id) JOIN s2 USING (q_id)
-        |  JOIN s3 USING (q_id) JOIN s4 USING (q_id)
-        |  JOIN ps p1 ON p1.q_id = c.q_id AND p1.ca = c.c_id AND p1.cb = s1.sel1
-        |  JOIN ps p2 ON p2.q_id = c.q_id AND p2.ca = c.c_id AND p2.cb = s2.sel2
-        |  JOIN ps p3 ON p3.q_id = c.q_id AND p3.ca = c.c_id AND p3.cb = s3.sel3
-        |  JOIN ps p4 ON p4.q_id = c.q_id AND p4.ca = c.c_id AND p4.cb = s4.sel4
-        |  WHERE c.c_id NOT IN (s1.sel1, s2.sel2, s3.sel3, s4.sel4)),
-        |s5 AS (
-        |  SELECT q_id, c_id AS sel5, sim AS sim5, mmr AS mmr5 FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY mmr DESC, c_id) AS rn FROM sc5) WHERE rn = 1)
-        |SELECT q_id, CAST(step AS BIGINT) AS step, c_id, sim, mmr FROM (
-        |  SELECT q_id, 1 AS step, sel1 AS c_id, sim1 AS sim, sim1 AS mmr FROM s1
-        |  UNION ALL
-        |  SELECT q_id, 2, sel2, sim2, mmr2 FROM s2
-        |  UNION ALL
-        |  SELECT q_id, 3, sel3, sim3, mmr3 FROM s3
-        |  UNION ALL
-        |  SELECT q_id, 4, sel4, sim4, mmr4 FROM s4
-        |  UNION ALL
-        |  SELECT q_id, 5, sel5, sim5, mmr5 FROM s5)
-        |ORDER BY q_id, step""".stripMargin,
-
-    "v15_kmeans" ->
-      s"""WITH $kmeansSql,
-         |st AS (SELECT cid, COUNT(*) AS n_members,
-         |    ROUND(CAST(SUM(CAST(csim AS DECIMAL(18,6))) AS DOUBLE)
-         |      / COUNT(*), 6) AS avg_sim
-         |  FROM af GROUP BY cid),
-         |fin AS (SELECT cid, unnest(cvec) AS centroid,
-         |    generate_subscripts(cvec, 1) AS pos FROM c2)
-         |SELECT f.cid AS cluster, CAST(f.pos - 1 AS BIGINT) AS pos, f.centroid,
-         |  CAST(coalesce(st.n_members, 0) AS BIGINT) AS n_members, st.avg_sim
-         |FROM fin f LEFT JOIN st ON f.cid = st.cid
-         |ORDER BY cluster, pos""".stripMargin,
-
-    // three suffixed k-means replays sharing one corpus CTE; per arm the
-    // same decimal-sum / count quotient
-    "v25_kmeans_elbow" ->
-      s"""WITH $embSql,
-         |${kmeansSqlFrom("2", "x2")},
-         |${kmeansSqlFrom("4", "x4")},
-         |${kmeansSqlFrom("8", "x8")}
-         |SELECT CAST(2 AS BIGINT) AS k, COUNT(*) AS n_vectors,
-         |  CAST(SUM(CAST(csim AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-         |    AS mean_best_sim
-         |FROM afx2
-         |UNION ALL
-         |SELECT CAST(4 AS BIGINT), COUNT(*),
-         |  CAST(SUM(CAST(csim AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-         |FROM afx4
-         |UNION ALL
-         |SELECT CAST(8 AS BIGINT), COUNT(*),
-         |  CAST(SUM(CAST(csim AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-         |FROM afx8
-         |ORDER BY k""".stripMargin,
-
-    // v01's brute top-k replay (both depths share one ranking CTE), then
-    // pairwise cosines within each list — exact decimal sums, one pinned
-    // IEEE division per mean
-    "v26_ild_diversity" ->
-      s"""WITH $embSql,
-         |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
-         |      WHERE vec_id % 100 = 0),
-         |p AS (
-         |  SELECT q_id, vec_id,
-         |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-         |  FROM e, q WHERE vec_id <> q_id),
-         |r AS (
-         |  SELECT q_id, vec_id,
-         |    ROW_NUMBER() OVER (PARTITION BY q_id
-         |      ORDER BY sim DESC, vec_id) AS rnk
-         |  FROM p),
-         |t5 AS (SELECT q_id, vec_id FROM r WHERE rnk <= 5),
-         |t20 AS (SELECT q_id, vec_id FROM r WHERE rnk <= 20),
-         |i5 AS (
-         |  SELECT a.q_id, COUNT(*) AS n5,
-         |    CAST(SUM(CAST(ROUND(list_dot_product(ea.emb, eb.emb)
-         |        / (ea.norm * eb.norm), 6) AS DECIMAL(18,6))) AS DOUBLE)
-         |      / CAST(COUNT(*) AS DOUBLE) AS ild5
-         |  FROM t5 a JOIN t5 b ON b.q_id = a.q_id AND a.vec_id < b.vec_id
-         |  JOIN e ea ON ea.vec_id = a.vec_id
-         |  JOIN e eb ON eb.vec_id = b.vec_id
-         |  GROUP BY a.q_id),
-         |i20 AS (
-         |  SELECT a.q_id, COUNT(*) AS n20,
-         |    CAST(SUM(CAST(ROUND(list_dot_product(ea.emb, eb.emb)
-         |        / (ea.norm * eb.norm), 6) AS DECIMAL(18,6))) AS DOUBLE)
-         |      / CAST(COUNT(*) AS DOUBLE) AS ild20
-         |  FROM t20 a JOIN t20 b ON b.q_id = a.q_id AND a.vec_id < b.vec_id
-         |  JOIN e ea ON ea.vec_id = a.vec_id
-         |  JOIN e eb ON eb.vec_id = b.vec_id
-         |  GROUP BY a.q_id)
-         |SELECT q_id, n5, ild5, n20, ild20
-         |FROM i5 JOIN i20 USING (q_id)
-         |ORDER BY q_id""".stripMargin,
-
-    // v05's assign/probe/rerank replay over ⌈√n⌉ seed cells (scalar-
-    // subquery count twin of sqrtSeedCents; sqrt is correctly-rounded
-    // IEEE on both engines, ceil exact)
-    "v27_ivf_sqrtn_topk" ->
-      s"""WITH $embSql,
-         |k AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS kk FROM e),
-         |cent AS (
-         |  SELECT vec_id AS clabel, emb AS cvec, norm AS cnorm
-         |  FROM e, k WHERE vec_id < kk),
-         |sims AS (
-         |  SELECT vec_id, emb, norm, clabel,
-         |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
-         |  FROM e, cent),
-         |assign AS (
-         |  SELECT vec_id, emb, norm, clabel AS cell FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |      ORDER BY csim DESC, clabel) AS crn FROM sims)
-         |  WHERE crn = 1),
-         |probes AS (
-         |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
-         |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-         |      ORDER BY csim DESC, clabel) AS crn FROM sims
-         |    WHERE vec_id % 100 = 0)
-         |  WHERE crn <= 2),
-         |cand AS (
-         |  SELECT q_id, vec_id AS c_id,
-         |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-         |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
-         |r AS (
-         |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
-         |    ORDER BY sim DESC, c_id) AS rnk FROM cand)
-         |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim
-         |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    // v15's k-means replay (adaptive k = ceil(n/64) — the scalar-subquery
-    // twin of kmeansCentroidsAdaptive) + within-cluster pair enumeration
-    // + the same WITH RECURSIVE reachability closure as v10/tx14
-    "v16_semantic_dedup" ->
-      s"""WITH RECURSIVE $kmeansSqlAdaptive,
-         |pr AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst
-         |  FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |  JOIN e ea ON ea.vec_id = a.vec_id
-         |  JOIN e eb ON eb.vec_id = b.vec_id
-         |  WHERE ROUND(list_dot_product(ea.emb, eb.emb)
-         |          / (ea.norm * eb.norm), 6) >= 0.4),
-         |sym AS (SELECT src, dst FROM pr UNION ALL SELECT dst, src FROM pr),
-         |verts AS (SELECT DISTINCT src AS id FROM sym),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM verts
-         |  UNION
-         |  SELECT sm.src, reach.r FROM sym sm JOIN reach ON sm.dst = reach.id),
-         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id)
-         |SELECT af.vec_id, af.cid AS cluster,
-         |  COALESCE(comp.label, af.vec_id) AS canonical_id,
-         |  COALESCE(comp.label, af.vec_id) = af.vec_id AS is_kept
-         |FROM af LEFT JOIN comp ON comp.id = af.vec_id
-         |ORDER BY af.vec_id""".stripMargin,
-
-    // full replay of the binary-quantization pipeline: sign-bit pack into
-    // the same two 32-bit halves → XOR/popcount Hamming → top-30 by
-    // ((64−ham)/64 DESC, c_id) → exact cosine rerank. Hamming similarity
-    // is an exact dyadic rational, so no ROUND is needed anywhere in the
-    // candidate stage.
-    "v17_binary_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |bits AS (
-        |  SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |codes AS (
-        |  SELECT vec_id,
-        |    SUM(CASE WHEN x > 0 AND i <= 32
-        |        THEN (1::BIGINT << CAST(i - 1 AS INT)) ELSE 0 END)::BIGINT AS lo,
-        |    SUM(CASE WHEN x > 0 AND i > 32
-        |        THEN (1::BIGINT << CAST(i - 33 AS INT)) ELSE 0 END)::BIGINT AS hi
-        |  FROM bits GROUP BY vec_id),
-        |q AS (SELECT c.vec_id AS q_id, e.emb AS qe, e.norm AS qn,
-        |        c.lo AS qlo, c.hi AS qhi
-        |      FROM codes c JOIN e ON e.vec_id = c.vec_id
-        |      WHERE c.vec_id % 100 = 0),
-        |cand AS (
-        |  SELECT q_id, c.vec_id AS c_id,
-        |    (64 - (bit_count(xor(c.lo, qlo)) + bit_count(xor(c.hi, qhi))))
-        |      / 64.0 AS hsim
-        |  FROM codes c, q WHERE c.vec_id <> q_id),
-        |top30 AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY hsim DESC, c_id) AS r FROM cand)
-        |  WHERE r <= 30),
-        |rr AS (
-        |  SELECT t.q_id, t.c_id,
-        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
-        |  FROM top30 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id)
-        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM (
-        |  SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY sim DESC, c_id) AS rnk FROM rr)
-        |WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    // centroids → argmax assignment (ties to lowest label) → diagonal
-    "v20_centroid_classify" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |cm AS (
-        |  SELECT label, pos, ROUND(AVG(v), 6) AS cv FROM (
-        |    SELECT label, unnest(embedding::DOUBLE[]) AS v,
-        |      generate_subscripts(embedding, 1) AS pos
-        |    FROM embeddings)
-        |  GROUP BY label, pos),
-        |c AS (
-        |  SELECT label AS clabel, list(cv ORDER BY pos) AS cvec FROM cm
-        |  GROUP BY label),
-        |sc AS (
-        |  SELECT e.vec_id, e.label, c.clabel,
-        |    ROUND(list_dot_product(e.emb, c.cvec)
-        |      / (e.norm * sqrt(list_dot_product(c.cvec, c.cvec))), 6) AS csim
-        |  FROM e, c),
-        |a AS (
-        |  SELECT vec_id, label, clabel AS pred FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS rk FROM sc)
-        |  WHERE rk = 1)
-        |SELECT label, COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN pred = label THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_correct,
-        |  ROUND(CAST(SUM(CASE WHEN pred = label THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / COUNT(*), 6) AS accuracy
-        |FROM a GROUP BY label ORDER BY label""".stripMargin,
-
-    // recall of the v17 pipeline against v01's exact ground truth
-    "v19_binary_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
-        |      WHERE vec_id % 100 = 0),
-        |px AS (
-        |  SELECT q_id, vec_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE vec_id <> q_id),
-        |ex AS (
-        |  SELECT q_id, vec_id AS c_id FROM (
-        |    SELECT q_id, vec_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, vec_id) AS rnk FROM px)
-        |  WHERE rnk <= 5),
-        |bits AS (
-        |  SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |codes AS (
-        |  SELECT vec_id,
-        |    SUM(CASE WHEN x > 0 AND i <= 32
-        |        THEN (1::BIGINT << CAST(i - 1 AS INT)) ELSE 0 END)::BIGINT AS lo,
-        |    SUM(CASE WHEN x > 0 AND i > 32
-        |        THEN (1::BIGINT << CAST(i - 33 AS INT)) ELSE 0 END)::BIGINT AS hi
-        |  FROM bits GROUP BY vec_id),
-        |qc AS (SELECT c.vec_id AS q_id, c.lo AS qlo, c.hi AS qhi
-        |       FROM codes c WHERE c.vec_id % 100 = 0),
-        |cand AS (
-        |  SELECT q_id, c.vec_id AS c_id,
-        |    (64 - (bit_count(xor(c.lo, qlo)) + bit_count(xor(c.hi, qhi))))
-        |      / 64.0 AS hsim
-        |  FROM codes c, qc WHERE c.vec_id <> q_id),
-        |top30 AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY hsim DESC, c_id) AS r FROM cand)
-        |  WHERE r <= 30),
-        |rr AS (
-        |  SELECT t.q_id, t.c_id,
-        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
-        |  FROM top30 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id),
-        |b5 AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, c_id) AS rnk FROM rr)
-        |  WHERE rnk <= 5)
-        |SELECT (SELECT COUNT(*) FROM ex) AS n_exact,
-        |  (SELECT COUNT(*) FROM b5 SEMI JOIN ex USING (q_id, c_id)) AS n_hit,
-        |  (SELECT COUNT(*) * 30 FROM q) AS n_cand,
-        |  ROUND((SELECT COUNT(*) FROM b5 SEMI JOIN ex USING (q_id, c_id))
-        |    / CAST((SELECT COUNT(*) FROM ex) AS DOUBLE), 6) AS recall_at_5""".stripMargin,
-
-    // label-constrained exact top-5: the same v01 ranking inside each
-    // query's label stratum
-    "v18_filtered_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, label AS q_label, emb AS qe, norm AS qn
-        |      FROM e WHERE vec_id % 100 = 0),
-        |p AS (
-        |  SELECT q_id, vec_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e JOIN q ON e.label = q.q_label AND e.vec_id <> q.q_id),
-        |r AS (
-        |  SELECT q_id, vec_id, sim,
-        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rnk
-        |  FROM p)
-        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, vec_id AS c_id, sim
-        |FROM r WHERE rnk <= 5 ORDER BY q_id, rnk""".stripMargin,
-
-    "v21_pagerank" -> pageRankSql,
-
-    // exact top-5 replay (v01's ranking) + per-query label vote with the
-    // (count DESC, label ASC) tie-break, reduced to the confusion diagonal
-    "v22_knn_classify" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, label AS tl, emb AS qe, norm AS qn
-        |      FROM e WHERE vec_id % 100 = 0),
-        |p AS (
-        |  SELECT q_id, e.vec_id, e.label AS c_label,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE e.vec_id <> q.q_id),
-        |r AS (
-        |  SELECT q_id, c_label FROM (
-        |    SELECT q_id, c_label,
-        |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rnk
-        |    FROM p) WHERE rnk <= 5),
-        |v AS (SELECT q_id, c_label, COUNT(*) AS nv FROM r GROUP BY q_id, c_label),
-        |pr AS (
-        |  SELECT q_id, c_label AS pred FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY nv DESC, c_label) AS rn FROM v) WHERE rn = 1)
-        |SELECT q.tl AS label, COUNT(*) AS n,
-        |  CAST(SUM(CASE WHEN pr.pred = q.tl THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_correct,
-        |  ROUND(CAST(SUM(CASE WHEN pr.pred = q.tl THEN 1 ELSE 0 END) AS DOUBLE)
-        |    / COUNT(*), 6) AS accuracy
-        |FROM q JOIN pr USING (q_id) GROUP BY q.tl ORDER BY label""".stripMargin,
-
-    // both truncations replayed against the full-dim exact top-5
-    "v23_dim_truncation_recall" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn
-        |      FROM e WHERE vec_id % 100 = 0),
-        |px AS (
-        |  SELECT q_id, e.vec_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE e.vec_id <> q.q_id),
-        |ex AS (SELECT q_id, vec_id FROM (
-        |    SELECT q_id, vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY sim DESC, vec_id) AS rnk
-        |    FROM px) WHERE rnk <= 5),
-        |dd AS (SELECT CAST(unnest([16, 32]) AS BIGINT) AS dims),
-        |te AS (
-        |  SELECT dims, vec_id, emb[1:CAST(dims AS INT)] AS temb,
-        |    sqrt(list_dot_product(emb[1:CAST(dims AS INT)],
-        |                          emb[1:CAST(dims AS INT)])) AS tnorm
-        |  FROM e, dd),
-        |tq AS (SELECT dims, vec_id AS q_id, temb AS tqe, tnorm AS tqn
-        |       FROM te WHERE vec_id % 100 = 0),
-        |tp AS (
-        |  SELECT t.dims, q_id, t.vec_id,
-        |    ROUND(list_dot_product(tqe, t.temb) / (tqn * t.tnorm), 6) AS sim
-        |  FROM te t JOIN tq ON tq.dims = t.dims AND t.vec_id <> tq.q_id),
-        |tr AS (SELECT dims, q_id, vec_id FROM (
-        |    SELECT dims, q_id, vec_id,
-        |      ROW_NUMBER() OVER (PARTITION BY dims, q_id
-        |        ORDER BY sim DESC, vec_id) AS rnk
-        |    FROM tp) WHERE rnk <= 5),
-        |h AS (SELECT dims, COUNT(*) AS n_hit
-        |      FROM tr SEMI JOIN ex USING (q_id, vec_id) GROUP BY dims)
-        |SELECT dd.dims, (SELECT COUNT(*) FROM ex) AS n_exact,
-        |  CAST(COALESCE(n_hit, 0) AS BIGINT) AS n_hit,
-        |  ROUND(CAST(COALESCE(n_hit, 0) AS DOUBLE)
-        |    / (SELECT COUNT(*) FROM ex), 6) AS recall_at_5
-        |FROM dd LEFT JOIN h USING (dims) ORDER BY dims""".stripMargin,
-
-    // v28: v21's exact LSH edge replay (60 planes / 15 bands, sim ≥ 0.3),
-    // then compact-forward triangles — (deg, id) row-value comparisons
-    // orient edges and order wedge pairs identically on both engines;
-    // COUNT is BIGINT on both (no sum to pin)
-    "v28_graph_triangles" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |s AS (SELECT vec_id, emb, norm,
-        |  CAST(list_sum(list_transform(range(0, 60), i ->
-        |    CASE WHEN list_sum(list_transform(range(0, 64), j ->
-        |      emb[CAST(j + 1 AS INT)] * ((73856093::BIGINT * (i + 1) * (j + 7)) % 2001 - 1000)))
-        |    >= 0 THEN (1::BIGINT << CAST(i AS INT)) ELSE 0 END)) AS BIGINT) AS sig FROM e),
-        |bands AS (SELECT vec_id, b, (sig >> CAST(4 * b AS INT)) & 15 AS bv
-        |          FROM s, range(0, 15) t(b)),
-        |p AS (SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b
-        |      FROM bands a JOIN bands c ON a.b = c.b AND a.bv = c.bv AND a.vec_id < c.vec_id),
-        |x AS (SELECT vec_a, vec_b
-        |      FROM p JOIN e ea ON ea.vec_id = vec_a JOIN e eb ON eb.vec_id = vec_b
-        |      WHERE round(list_dot_product(ea.emb, eb.emb) / (ea.norm * eb.norm), 6) >= 0.3),
-        |ed AS (SELECT vec_a AS id FROM x UNION ALL SELECT vec_b FROM x),
-        |deg AS (SELECT id, COUNT(*) AS deg FROM ed GROUP BY id),
-        |oe AS (
-        |  SELECT CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
-        |           THEN x.vec_a ELSE x.vec_b END AS u,
-        |         CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
-        |           THEN x.vec_b ELSE x.vec_a END AS v,
-        |         CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
-        |           THEN db.deg ELSE da.deg END AS vdeg
-        |  FROM x JOIN deg da ON da.id = x.vec_a
-        |         JOIN deg db ON db.id = x.vec_b),
-        |wg AS (
-        |  SELECT a.u, a.v AS v, b.v AS w
-        |  FROM oe a JOIN oe b ON a.u = b.u
-        |    AND (a.vdeg, a.v) < (b.vdeg, b.v)),
-        |tri AS (
-        |  SELECT wg.u, wg.v, wg.w
-        |  FROM wg SEMI JOIN oe t ON t.u = wg.v AND t.v = wg.w),
-        |tv AS (SELECT u AS id FROM tri
-        |       UNION ALL SELECT v FROM tri
-        |       UNION ALL SELECT w FROM tri)
-        |SELECT id AS vec_id, COUNT(*) AS n_tri
-        |FROM tv GROUP BY id ORDER BY vec_id""".stripMargin,
-
-    // v30: v21's LSH edge replay + 6 unrolled peel rounds; COUNT is
-    // BIGINT on both engines
-    "v30_kcore" -> kcoreSql,
-
-    // v31: v27's sqrt-cell assign replay (ROW_NUMBER argmax) → same-cell
-    // scored pairs → v28's compact-forward triangle tail verbatim
-    "v31_graph_triangles_ivf" ->
-      s"""WITH $embSql,
-         |nn AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS kk FROM e),
-         |cents AS (SELECT vec_id AS clabel, emb AS cvec, norm AS cnorm
-         |          FROM e, nn WHERE vec_id < kk),
-         |cells AS (SELECT vec_id, emb, norm, clabel AS cell FROM (
-         |  SELECT e.vec_id, e.emb, e.norm, c.clabel,
-         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-         |      round(list_dot_product(e.emb, c.cvec)
-         |        / (e.norm * c.cnorm), 6) DESC, c.clabel) AS rn
-         |  FROM e, cents c) WHERE rn = 1),
-         |x AS (
-         |  SELECT a.vec_id AS vec_a, b.vec_id AS vec_b
-         |  FROM cells a JOIN cells b
-         |    ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |  WHERE round(list_dot_product(a.emb, b.emb)
-         |          / (a.norm * b.norm), 6) >= 0.3),
-         |ed AS (SELECT vec_a AS id FROM x UNION ALL SELECT vec_b FROM x),
-         |deg AS (SELECT id, COUNT(*) AS deg FROM ed GROUP BY id),
-         |oe AS (
-         |  SELECT CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
-         |           THEN x.vec_a ELSE x.vec_b END AS u,
-         |         CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
-         |           THEN x.vec_b ELSE x.vec_a END AS v,
-         |         CASE WHEN (da.deg, x.vec_a) < (db.deg, x.vec_b)
-         |           THEN db.deg ELSE da.deg END AS vdeg
-         |  FROM x JOIN deg da ON da.id = x.vec_a
-         |         JOIN deg db ON db.id = x.vec_b),
-         |wg AS (
-         |  SELECT a.u, a.v AS v, b.v AS w
-         |  FROM oe a JOIN oe b ON a.u = b.u
-         |    AND (a.vdeg, a.v) < (b.vdeg, b.v)),
-         |tri AS (
-         |  SELECT wg.u, wg.v, wg.w
-         |  FROM wg SEMI JOIN oe t ON t.u = wg.v AND t.v = wg.w),
-         |tv AS (SELECT u AS id FROM tri
-         |       UNION ALL SELECT v FROM tri
-         |       UNION ALL SELECT w FROM tri)
-         |SELECT id AS vec_id, COUNT(*) AS n_tri
-         |FROM tv GROUP BY id ORDER BY vec_id""".stripMargin,
-
-    // v29: the two-level assignment replay — un-refined seeds (first k
-    // as fine, first ⌈√k⌉ as coarse), ROW_NUMBER argmax at each level
-    // (== Spark's max-struct with ties to the lowest id), then v16's
-    // within-cell pair scan and recursive reachability closure verbatim
-    "v29_semdedup_2level" ->
-      s"""WITH RECURSIVE $embSql,
-         |nn AS (SELECT CAST(CEIL(COUNT(*) / 64.0) AS BIGINT) AS k,
-         |    CAST(CEIL(SQRT(CEIL(COUNT(*) / 64.0))) AS BIGINT) AS kc
-         |  FROM e),
-         |fine AS (SELECT vec_id AS fid, emb AS fvec, norm AS fnorm
-         |  FROM e, nn WHERE vec_id < k),
-         |coarse AS (SELECT vec_id AS ccid, emb AS cvec, norm AS cnorm
-         |  FROM e, nn WHERE vec_id < kc),
-         |f2c AS (SELECT fid, fvec, fnorm, ccid FROM (
-         |  SELECT f.fid, f.fvec, f.fnorm, c.ccid,
-         |    ROW_NUMBER() OVER (PARTITION BY f.fid ORDER BY
-         |      round(list_dot_product(f.fvec, c.cvec)
-         |        / (f.fnorm * c.cnorm), 6) DESC, c.ccid) AS rn
-         |  FROM fine f, coarse c) WHERE rn = 1),
-         |dc AS (SELECT vec_id, emb, norm, ccid FROM (
-         |  SELECT e.vec_id, e.emb, e.norm, c.ccid,
-         |    ROW_NUMBER() OVER (PARTITION BY e.vec_id ORDER BY
-         |      round(list_dot_product(e.emb, c.cvec)
-         |        / (e.norm * c.cnorm), 6) DESC, c.ccid) AS rn
-         |  FROM e, coarse c) WHERE rn = 1),
-         |af AS (SELECT vec_id, cid, emb, norm FROM (
-         |  SELECT d.vec_id, f.fid AS cid, d.emb, d.norm,
-         |    ROW_NUMBER() OVER (PARTITION BY d.vec_id ORDER BY
-         |      round(list_dot_product(d.emb, f.fvec)
-         |        / (d.norm * f.fnorm), 6) DESC, f.fid) AS rn
-         |  FROM dc d JOIN f2c f ON f.ccid = d.ccid) WHERE rn = 1),
-         |pr AS (
-         |  SELECT a.vec_id AS src, b.vec_id AS dst
-         |  FROM af a JOIN af b ON a.cid = b.cid AND a.vec_id < b.vec_id
-         |  WHERE ROUND(list_dot_product(a.emb, b.emb)
-         |          / (a.norm * b.norm), 6) >= 0.4),
-         |sym AS (SELECT src, dst FROM pr UNION ALL SELECT dst, src FROM pr),
-         |verts AS (SELECT DISTINCT src AS id FROM sym),
-         |reach(id, r) AS (
-         |  SELECT id, id FROM verts
-         |  UNION
-         |  SELECT sm.src, reach.r FROM sym sm JOIN reach ON sm.dst = reach.id),
-         |comp AS (SELECT id, MIN(r) AS label FROM reach GROUP BY id)
-         |SELECT af.vec_id, af.cid AS cluster,
-         |  COALESCE(comp.label, af.vec_id) AS canonical_id,
-         |  COALESCE(comp.label, af.vec_id) = af.vec_id AS is_kept
-         |FROM af LEFT JOIN comp ON comp.id = af.vec_id
-         |ORDER BY af.vec_id""".stripMargin,
-
-    // full three-stage replay: sign-bit codes → Hamming top-100 → SQ8
-    // dequantize (survivors only) → asymmetric top-15 → exact rerank
-    // top-5 → recall vs the brute-force ground truth
-    "v32_cascade_topk" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |bits AS (
-        |  SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |codes AS (
-        |  SELECT vec_id,
-        |    SUM(CASE WHEN x > 0 AND i <= 32
-        |        THEN (1::BIGINT << CAST(i - 1 AS INT)) ELSE 0 END)::BIGINT AS lo,
-        |    SUM(CASE WHEN x > 0 AND i > 32
-        |        THEN (1::BIGINT << CAST(i - 33 AS INT)) ELSE 0 END)::BIGINT AS hi
-        |  FROM bits GROUP BY vec_id),
-        |q AS (SELECT c.vec_id AS q_id, e.emb AS qe, e.norm AS qn,
-        |        c.lo AS qlo, c.hi AS qhi
-        |      FROM codes c JOIN e ON e.vec_id = c.vec_id
-        |      WHERE c.vec_id % 100 = 0),
-        |cand1 AS (
-        |  SELECT q_id, c.vec_id AS c_id,
-        |    (64 - (bit_count(xor(c.lo, qlo)) + bit_count(xor(c.hi, qhi))))
-        |      / 64.0 AS hsim
-        |  FROM codes c, q WHERE c.vec_id <> q_id),
-        |st1 AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY hsim DESC, c_id) AS r FROM cand1)
-        |  WHERE r <= 100),
-        |d AS (SELECT unnest(embedding::DOUBLE[]) AS x,
-        |        generate_subscripts(embedding, 1) AS sub FROM embeddings),
-        |mmr AS (SELECT sub, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY sub),
-        |mma AS (SELECT list(mn ORDER BY sub) AS mn, list(mx ORDER BY sub) AS mx
-        |        FROM mmr),
-        |cd AS (
-        |  SELECT t.q_id, t.c_id,
-        |    list_transform(range(0, 64), i ->
-        |      mn[CAST(i + 1 AS INT)] +
-        |      CAST(round((c.emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) * 255.0
-        |             / (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])) AS INT)
-        |        * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) / 255.0) AS dq
-        |  FROM st1 t JOIN e c ON c.vec_id = t.c_id, mma),
-        |sc2 AS (
-        |  SELECT cd.q_id, cd.c_id,
-        |    round(list_dot_product(qq.qe, dq)
-        |      / (qq.qn * sqrt(list_dot_product(dq, dq))), 6) AS asim
-        |  FROM cd JOIN q qq ON qq.q_id = cd.q_id),
-        |st2 AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY asim DESC, c_id) AS r FROM sc2)
-        |  WHERE r <= 15),
-        |rr AS (
-        |  SELECT t.q_id, t.c_id,
-        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
-        |  FROM st2 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id),
-        |casc AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, c_id) AS rnk FROM rr)
-        |  WHERE rnk <= 5),
-        |px AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE vec_id <> q_id),
-        |ex AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, c_id) AS rnk FROM px)
-        |  WHERE rnk <= 5)
-        |SELECT (SELECT COUNT(*) FROM ex) AS n_exact,
-        |  (SELECT COUNT(*) FROM st1) AS n_stage1,
-        |  (SELECT COUNT(*) FROM st2) AS n_stage2,
-        |  (SELECT COUNT(*) FROM casc SEMI JOIN ex USING (q_id, c_id)) AS n_hit,
-        |  ROUND((SELECT COUNT(*) FROM casc SEMI JOIN ex USING (q_id, c_id))
-        |    / CAST((SELECT COUNT(*) FROM ex) AS DOUBLE), 6) AS recall_at_5""".stripMargin,
-
-    // v32's replay with the Hamming stage ranked once to 300 and each
-    // arm taken as a prefix (r <= c1); per-arm SQ8 + rerank + recall
-    "v33_cascade_budget_curve" ->
-      """WITH e AS (
-        |  SELECT vec_id, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |bits AS (
-        |  SELECT vec_id, unnest(embedding::DOUBLE[]) AS x,
-        |    generate_subscripts(embedding, 1) AS i
-        |  FROM embeddings),
-        |codes AS (
-        |  SELECT vec_id,
-        |    SUM(CASE WHEN x > 0 AND i <= 32
-        |        THEN (1::BIGINT << CAST(i - 1 AS INT)) ELSE 0 END)::BIGINT AS lo,
-        |    SUM(CASE WHEN x > 0 AND i > 32
-        |        THEN (1::BIGINT << CAST(i - 33 AS INT)) ELSE 0 END)::BIGINT AS hi
-        |  FROM bits GROUP BY vec_id),
-        |q AS (SELECT c.vec_id AS q_id, e.emb AS qe, e.norm AS qn,
-        |        c.lo AS qlo, c.hi AS qhi
-        |      FROM codes c JOIN e ON e.vec_id = c.vec_id
-        |      WHERE c.vec_id % 100 = 0),
-        |cand1 AS (
-        |  SELECT q_id, c.vec_id AS c_id,
-        |    (64 - (bit_count(xor(c.lo, qlo)) + bit_count(xor(c.hi, qhi))))
-        |      / 64.0 AS hsim
-        |  FROM codes c, q WHERE c.vec_id <> q_id),
-        |rank1 AS (
-        |  SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY hsim DESC, c_id) AS r FROM cand1),
-        |arms AS (SELECT 30 AS c1 UNION ALL SELECT 100 UNION ALL SELECT 300),
-        |st1 AS (
-        |  SELECT a.c1, r.q_id, r.c_id
-        |  FROM rank1 r CROSS JOIN arms a WHERE r.r <= a.c1),
-        |d AS (SELECT unnest(embedding::DOUBLE[]) AS x,
-        |        generate_subscripts(embedding, 1) AS sub FROM embeddings),
-        |mmr AS (SELECT sub, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY sub),
-        |mma AS (SELECT list(mn ORDER BY sub) AS mn, list(mx ORDER BY sub) AS mx
-        |        FROM mmr),
-        |cd AS (
-        |  SELECT t.c1, t.q_id, t.c_id,
-        |    list_transform(range(0, 64), i ->
-        |      mn[CAST(i + 1 AS INT)] +
-        |      CAST(round((c.emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) * 255.0
-        |             / (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])) AS INT)
-        |        * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)]) / 255.0) AS dq
-        |  FROM st1 t JOIN e c ON c.vec_id = t.c_id, mma),
-        |sc2 AS (
-        |  SELECT cd.c1, cd.q_id, cd.c_id,
-        |    round(list_dot_product(qq.qe, dq)
-        |      / (qq.qn * sqrt(list_dot_product(dq, dq))), 6) AS asim
-        |  FROM cd JOIN q qq ON qq.q_id = cd.q_id),
-        |st2 AS (
-        |  SELECT c1, q_id, c_id FROM (
-        |    SELECT c1, q_id, c_id, ROW_NUMBER() OVER (PARTITION BY c1, q_id
-        |      ORDER BY asim DESC, c_id) AS r FROM sc2)
-        |  WHERE r <= 15),
-        |rr AS (
-        |  SELECT t.c1, t.q_id, t.c_id,
-        |    round(list_dot_product(qq.qe, c.emb) / (qq.qn * c.norm), 6) AS sim
-        |  FROM st2 t JOIN q qq ON qq.q_id = t.q_id JOIN e c ON c.vec_id = t.c_id),
-        |casc AS (
-        |  SELECT c1, q_id, c_id FROM (
-        |    SELECT c1, q_id, c_id, ROW_NUMBER() OVER (PARTITION BY c1, q_id
-        |      ORDER BY sim DESC, c_id) AS rnk FROM rr)
-        |  WHERE rnk <= 5),
-        |px AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE vec_id <> q_id),
-        |ex AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, c_id) AS rnk FROM px)
-        |  WHERE rnk <= 5),
-        |hits AS (
-        |  SELECT c1, COUNT(*) AS n_hit
-        |  FROM casc SEMI JOIN ex USING (q_id, c_id) GROUP BY c1),
-        |nx AS (SELECT COUNT(*) AS n_exact FROM ex)
-        |SELECT c1, n_hit, n_exact,
-        |  ROUND(CAST(n_hit AS DOUBLE) / n_exact, 6) AS recall_at_5
-        |FROM hits, nx ORDER BY c1""".stripMargin,
-
-    "v35_graph_beam_search" -> beamSql,
-
-    // main/delta replay: sqrt-cents from MAIN only, nprobe-2 probes,
-    // delta brute union, shared top-5 ladder, full-corpus ground truth
-    "v37_delta_index_merge" ->
-      s"""WITH $embSql,
-        |m AS (SELECT * FROM e WHERE vec_id % 20 <> 0),
-        |d AS (SELECT * FROM e WHERE vec_id % 20 = 0),
-        |nn AS (SELECT CAST(CEIL(SQRT(COUNT(*))) AS BIGINT) AS kk FROM m),
-        |cents AS (SELECT vec_id AS clabel, emb AS cvec, norm AS cnorm
-        |          FROM m, nn WHERE vec_id < kk),
-        |cells AS (SELECT vec_id, emb, norm, clabel AS cell FROM (
-        |  SELECT m.vec_id, m.emb, m.norm, c.clabel,
-        |    ROW_NUMBER() OVER (PARTITION BY m.vec_id ORDER BY
-        |      round(list_dot_product(m.emb, c.cvec)
-        |        / (m.norm * c.cnorm), 6) DESC, c.clabel) AS rn
-        |  FROM m, cents c) WHERE rn = 1),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
-        |      WHERE vec_id % 100 = 50),
-        |pr AS (SELECT q_id, qe, qn, cell FROM (
-        |  SELECT q.q_id, q.qe, q.qn, c.clabel AS cell,
-        |    ROW_NUMBER() OVER (PARTITION BY q.q_id ORDER BY
-        |      round(list_dot_product(q.qe, c.cvec)
-        |        / (q.qn * c.cnorm), 6) DESC, c.clabel) AS crn
-        |  FROM q, cents c) WHERE crn <= 2),
-        |mc AS (
-        |  SELECT p.q_id, cl.vec_id AS c_id,
-        |    round(list_dot_product(p.qe, cl.emb)
-        |      / (p.qn * cl.norm), 6) AS sim,
-        |    'main' AS src
-        |  FROM pr p JOIN cells cl ON cl.cell = p.cell
-        |  WHERE cl.vec_id <> p.q_id),
-        |dc AS (
-        |  SELECT q.q_id, d.vec_id AS c_id,
-        |    round(list_dot_product(q.qe, d.emb) / (q.qn * d.norm), 6)
-        |      AS sim,
-        |    'delta' AS src
-        |  FROM q, d WHERE d.vec_id <> q.q_id),
-        |u AS (SELECT * FROM mc UNION ALL SELECT * FROM dc),
-        |t5 AS (SELECT q_id, c_id, sim, src, rnk FROM (
-        |  SELECT q_id, c_id, sim, src, ROW_NUMBER() OVER (
-        |    PARTITION BY q_id ORDER BY sim DESC, c_id) AS rnk FROM u)
-        |  WHERE rnk <= 5),
-        |px AS (SELECT q.q_id, c.vec_id AS c_id,
-        |    round(list_dot_product(q.qe, c.emb) / (q.qn * c.norm), 6)
-        |      AS sim
-        |  FROM e c, q WHERE c.vec_id <> q.q_id),
-        |ex AS (SELECT q_id, c_id FROM (
-        |  SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |    ORDER BY sim DESC, c_id) AS rnk FROM px) WHERE rnk <= 5),
-        |ht AS (SELECT a.q_id, COUNT(*) AS n_hit FROM t5 a
-        |  SEMI JOIN ex ON ex.q_id = a.q_id AND ex.c_id = a.c_id
-        |  GROUP BY a.q_id),
-        |ndl AS (SELECT q_id,
-        |    CAST(SUM(CASE WHEN src = 'delta' THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_delta
-        |  FROM t5 GROUP BY q_id)
-        |SELECT a.q_id, a.c_id AS top1_id, a.src AS top1_src,
-        |  a.sim AS top1_sim, ndl.n_delta,
-        |  CAST(COALESCE(ht.n_hit, 0) AS BIGINT) AS n_hit,
-        |  ROUND(CAST(COALESCE(ht.n_hit, 0) AS DOUBLE) / 5.0, 6)
-        |    AS recall_at_5
-        |FROM t5 a JOIN ndl ON ndl.q_id = a.q_id
-        |LEFT JOIN ht ON ht.q_id = a.q_id
-        |WHERE a.rnk = 1 ORDER BY a.q_id""".stripMargin,
-
-    // same ±1 sign hash, same micro-int lattice; every integer SUM pinned
-    // to BIGINT (DuckDB would widen to HUGEINT)
-    "v36_random_projection" ->
-      s"""WITH $embSql,
-        |base AS (
-        |  SELECT vec_id, i,
-        |    CAST(CAST(emb[i + 1] AS DECIMAL(18,6)) * 1000000 AS BIGINT)
-        |      AS xm
-        |  FROM e, range(0, 64) t(i)),
-        |proj AS (
-        |  SELECT vec_id, j,
-        |    CAST(SUM(CASE WHEN (strpos('0123456789abcdef',
-        |        substr(md5(i::VARCHAR || '_' || j::VARCHAR), 1, 1)) - 1)
-        |        % 2 = 0
-        |      THEN xm ELSE -xm END) AS BIGINT) AS pm
-        |  FROM base, range(0, 16) u(j) GROUP BY vec_id, j),
-        |d2p AS (
-        |  SELECT a.vec_id,
-        |    CAST(SUM((a.pm - b.pm) * (a.pm - b.pm)) AS BIGINT) AS d2_proj_m2
-        |  FROM proj a JOIN proj b
-        |    ON b.vec_id = a.vec_id + 1 AND b.j = a.j
-        |  WHERE a.vec_id % 50 = 0 GROUP BY a.vec_id),
-        |d2o AS (
-        |  SELECT a.vec_id,
-        |    CAST(SUM((a.xm - b.xm) * (a.xm - b.xm)) AS BIGINT) AS d2_orig_m2
-        |  FROM base a JOIN base b
-        |    ON b.vec_id = a.vec_id + 1 AND b.i = a.i
-        |  WHERE a.vec_id % 50 = 0 GROUP BY a.vec_id)
-        |SELECT o.vec_id AS pair_id, o.d2_orig_m2, p.d2_proj_m2,
-        |  CAST(p.d2_proj_m2 AS DOUBLE) / 16.0 / CAST(o.d2_orig_m2 AS DOUBLE)
-        |    AS distortion
-        |FROM d2o o JOIN d2p p ON p.vec_id = o.vec_id
-        |WHERE o.d2_orig_m2 > 0 ORDER BY pair_id""".stripMargin,
-
-    "v34_mips_norm_bands" ->
-      s"""WITH $embSql,
-        |mx AS (SELECT MAX(norm) AS maxn FROM e),
-        |eb AS (
-        |  SELECT vec_id, emb, norm,
-        |    CAST(least(floor(norm / (maxn / 16.0)), 15.0) AS BIGINT) AS band
-        |  FROM e, mx),
-        |q AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM eb
-        |      WHERE vec_id % 100 = 50),
-        |p AS (
-        |  SELECT q_id, vec_id, band, norm,
-        |    ROUND(list_dot_product(qe, emb), 6) AS ipr
-        |  FROM eb, q WHERE vec_id <> q_id),
-        |r AS (
-        |  SELECT q_id, vec_id, ipr,
-        |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY ipr DESC, vec_id)
-        |      AS rnk
-        |  FROM p),
-        |best AS (
-        |  SELECT q_id,
-        |    MAX(CASE WHEN rnk = 1 THEN vec_id END) AS top1_id,
-        |    MAX(CASE WHEN rnk = 1 THEN ipr END) AS top1_ip,
-        |    MAX(CASE WHEN rnk = 5 THEN ipr END) AS kth_ip
-        |  FROM r WHERE rnk <= 5 GROUP BY q_id),
-        |pb AS (
-        |  SELECT q_id, band, MAX(ipr) AS max_ipr, COUNT(*) AS n_b,
-        |    MAX(norm) AS maxn_b
-        |  FROM p GROUP BY 1, 2),
-        |j AS (
-        |  SELECT pb.q_id, pb.band, pb.max_ipr, pb.n_b,
-        |    b.top1_id, b.top1_ip, b.kth_ip,
-        |    ROUND(q.qn * pb.maxn_b, 6) AS ub
-        |  FROM pb JOIN q ON q.q_id = pb.q_id
-        |  JOIN best b ON b.q_id = pb.q_id)
-        |SELECT q_id, top1_id, top1_ip, kth_ip,
-        |  CAST(SUM(CASE WHEN ub >= kth_ip THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS bands_scanned,
-        |  CAST(SUM(CASE WHEN ub >= kth_ip THEN n_b ELSE 0 END) AS BIGINT)
-        |    AS n_scanned,
-        |  CAST(SUM(n_b) AS BIGINT) AS n_corpus,
-        |  ROUND(CAST(SUM(CASE WHEN ub >= kth_ip THEN n_b ELSE 0 END)
-        |        AS DOUBLE)
-        |      / CAST(SUM(n_b) AS DOUBLE), 6) AS frac_scanned,
-        |  CAST(SUM(CASE WHEN ub < kth_ip AND max_ipr > kth_ip
-        |    THEN 1 ELSE 0 END) AS BIGINT) AS n_missed
-        |FROM j GROUP BY 1, 2, 3, 4 ORDER BY q_id""".stripMargin,
-
-    // v02's rounded-centroid construction snapped to the integer micro
-    // lattice; exact integer dot/L2 sums; identical one-tree cos/shift
-    "v38_embedding_drift" ->
-      """WITH cent AS (
-        |  SELECT label, CAST(vec_id % 2 AS INT) AS half, sub - 1 AS pos,
-        |    COUNT(*) AS nv, ROUND(AVG(val), 6) AS c6
-        |  FROM (SELECT label, vec_id, unnest(embedding::DOUBLE[]) AS val,
-        |          generate_subscripts(embedding, 1) AS sub
-        |        FROM embeddings)
-        |  GROUP BY 1, 2, 3),
-        |cm AS (SELECT label, half, pos, nv,
-        |         CAST(ROUND(c6 * 1000000, 0) AS BIGINT) AS cm
-        |       FROM cent),
-        |j AS (
-        |  SELECT a.label, a.pos, a.cm AS cm0, b.cm AS cm1,
-        |    a.nv AS nv0, b.nv AS nv1
-        |  FROM cm a JOIN cm b ON a.label = b.label AND a.pos = b.pos
-        |    AND a.half = 0 AND b.half = 1),
-        |agg AS (
-        |  SELECT label, MAX(nv0) AS n0, MAX(nv1) AS n1,
-        |    CAST(SUM(cm0 * cm1) AS BIGINT) AS dot,
-        |    CAST(SUM(cm0 * cm0) AS BIGINT) AS n0sq,
-        |    CAST(SUM(cm1 * cm1) AS BIGINT) AS n1sq,
-        |    CAST(SUM((cm0 - cm1) * (cm0 - cm1)) AS BIGINT) AS l2,
-        |    MAX(abs(cm0 - cm1)) AS max_dim_shift_micro
-        |  FROM j GROUP BY label)
-        |SELECT label, n0, n1,
-        |  ROUND(CAST(dot AS DOUBLE) / (sqrt(CAST(n0sq AS DOUBLE))
-        |    * sqrt(CAST(n1sq AS DOUBLE))), 6) AS cos_drift,
-        |  ROUND(sqrt(CAST(l2 AS DOUBLE)) / 1e6, 6) AS l2_shift,
-        |  max_dim_shift_micro
-        |FROM agg ORDER BY label""".stripMargin,
-
-    // the v16 adaptive-k assignment replay, then pure directory
-    // arithmetic — identical rank rule (sz DESC, cid) and one-tree
-    // fractions
-    "v39_ivf_balance" ->
-      s"""WITH $kmeansSqlAdaptive,
-         |cells AS (SELECT cid, COUNT(*) AS sz FROM af GROUP BY cid),
-         |st AS (
-         |  SELECT COUNT(*) AS n_cells, CAST(SUM(sz) AS BIGINT) AS n,
-         |    MIN(sz) AS min_cell, MAX(sz) AS max_cell
-         |  FROM cells),
-         |rk AS (
-         |  SELECT sz, ROW_NUMBER() OVER (ORDER BY sz DESC, cid) AS rk
-         |  FROM cells),
-         |top AS (
-         |  SELECT CAST(SUM(sz) AS BIGINT) AS top_sz,
-         |    COUNT(*) AS top_decile_cells
-         |  FROM rk, st
-         |  WHERE rk <= CAST(ceil(CAST(n_cells AS DOUBLE) / 10.0)
-         |    AS BIGINT))
-         |SELECT st.n, st.n_cells, st.min_cell, st.max_cell,
-         |  top.top_decile_cells,
-         |  ROUND(CAST(st.max_cell AS DOUBLE) * CAST(st.n_cells AS DOUBLE)
-         |    / CAST(st.n AS DOUBLE), 6) AS imbalance,
-         |  ROUND(CAST(top.top_sz AS DOUBLE) / CAST(st.n AS DOUBLE), 6)
-         |    AS top_decile_frac
-         |FROM st, top""".stripMargin,
-
-    // v11's exact dequantize replay → per-vector squared error as the
-    // same in-list sequential fold, 12-dp decimal terms, one-tree finals
-    "v40_sq8_distortion" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb
-        |  FROM embeddings),
-        |d AS (SELECT unnest(embedding::DOUBLE[]) AS x,
-        |        generate_subscripts(embedding, 1) AS sub FROM embeddings),
-        |mmr AS (SELECT sub, MIN(x) AS mn, MAX(x) AS mx FROM d GROUP BY sub),
-        |mma AS (SELECT list(mn ORDER BY sub) AS mn,
-        |          list(mx ORDER BY sub) AS mx FROM mmr),
-        |err AS (
-        |  SELECT label,
-        |    CAST(ROUND(list_sum(list_transform(range(0, 64), i ->
-        |      CASE WHEN mx[CAST(i + 1 AS INT)] = mn[CAST(i + 1 AS INT)]
-        |      THEN 0.0 ELSE
-        |      (emb[CAST(i + 1 AS INT)] - (mn[CAST(i + 1 AS INT)] +
-        |        CAST(round((emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])
-        |               * 255.0 / (mx[CAST(i + 1 AS INT)]
-        |                 - mn[CAST(i + 1 AS INT)])) AS INT)
-        |          * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])
-        |          / 255.0))
-        |      * (emb[CAST(i + 1 AS INT)] - (mn[CAST(i + 1 AS INT)] +
-        |        CAST(round((emb[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])
-        |               * 255.0 / (mx[CAST(i + 1 AS INT)]
-        |                 - mn[CAST(i + 1 AS INT)])) AS INT)
-        |          * (mx[CAST(i + 1 AS INT)] - mn[CAST(i + 1 AS INT)])
-        |          / 255.0)) END)), 12) AS DECIMAL(28,12)) AS err
-        |  FROM e, mma)
-        |SELECT label, COUNT(*) AS n,
-        |  ROUND(CAST(SUM(err) AS DOUBLE) / CAST(COUNT(*) AS DOUBLE), 6)
-        |    AS mean_sq_err,
-        |  ROUND(CAST(MAX(err) AS DOUBLE), 6) AS max_sq_err
-        |FROM err GROUP BY label ORDER BY label""".stripMargin,
-
-    // v05's IVF replay judged against v01's exact top-5; the same fixed
-    // micro-unit DCG weights — integer end to end
-    "v41_retrieval_quality" ->
-      """WITH e AS (
-        |  SELECT vec_id, label, embedding::DOUBLE[] AS emb,
-        |    sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS norm
-        |  FROM embeddings),
-        |cd AS (
-        |  SELECT label, sub AS pos, ROUND(AVG(val), 6) AS cv
-        |  FROM (SELECT label, unnest(embedding::DOUBLE[]) AS val,
-        |          generate_subscripts(embedding, 1) AS sub FROM embeddings)
-        |  GROUP BY label, sub),
-        |cent AS (
-        |  SELECT label AS clabel, cvec,
-        |    sqrt(list_dot_product(cvec, cvec)) AS cnorm
-        |  FROM (SELECT label, list(cv ORDER BY pos) AS cvec FROM cd
-        |        GROUP BY label)),
-        |sims AS (
-        |  SELECT vec_id, emb, norm, clabel,
-        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
-        |  FROM e, cent),
-        |assign AS (
-        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
-        |  WHERE crn = 1),
-        |probes AS (
-        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell
-        |  FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims
-        |    WHERE vec_id % 100 = 0)
-        |  WHERE crn <= 2),
-        |cand AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
-        |ivf AS (
-        |  SELECT q_id, c_id, rnk FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, c_id) AS rnk FROM cand)
-        |  WHERE rnk <= 5),
-        |q2 AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
-        |       WHERE vec_id % 100 = 0),
-        |exc AS (
-        |  SELECT q_id, vec_id AS c_id, ROW_NUMBER() OVER (
-        |    PARTITION BY q_id ORDER BY sim DESC, vec_id) AS xr
-        |  FROM (SELECT q_id, vec_id,
-        |          ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |        FROM e, q2 WHERE vec_id <> q_id)),
-        |ex AS (SELECT q_id, c_id FROM exc WHERE xr <= 5),
-        |sc AS (
-        |  SELECT i.q_id, i.rnk,
-        |    CASE WHEN ex.c_id IS NOT NULL THEN 1 ELSE 0 END AS rel,
-        |    CASE i.rnk WHEN 1 THEN 1000000 WHEN 2 THEN 630929
-        |      WHEN 3 THEN 500000 WHEN 4 THEN 430676 ELSE 386852 END AS w
-        |  FROM ivf i LEFT JOIN ex ON ex.q_id = i.q_id
-        |    AND ex.c_id = i.c_id),
-        |ag AS (
-        |  SELECT q_id, CAST(SUM(rel) AS BIGINT) AS n_hits,
-        |    MIN(CASE WHEN rel = 1 THEN rnk END) AS fr,
-        |    CAST(SUM(rel * w) AS BIGINT) AS dcg_micro
-        |  FROM sc GROUP BY q_id)
-        |SELECT q_id, n_hits,
-        |  CAST(COALESCE(fr, 0) AS BIGINT) AS first_hit_rank,
-        |  CAST(CASE WHEN COALESCE(fr, 0) > 0 THEN 1000000 // fr
-        |    ELSE 0 END AS BIGINT) AS mrr_micro,
-        |  dcg_micro,
-        |  CAST((dcg_micro * 1000000) // 2948457 AS BIGINT) AS ndcg_ppm
-        |FROM ag ORDER BY q_id""".stripMargin,
-
-    // stale-index replay: v27's IVF shape, the tombstone mask as the same
-    // integer predicate, exact ground truth over the LIVE corpus only
-    "v42_tombstone_ann" ->
-      s"""WITH $embSql,
-        |k AS (SELECT CAST(ceil(sqrt(COUNT(*))) AS BIGINT) AS kk FROM e),
-        |cent AS (
-        |  SELECT vec_id AS clabel, emb AS cvec, norm AS cnorm
-        |  FROM e, k WHERE vec_id < kk),
-        |sims AS (
-        |  SELECT vec_id, emb, norm, clabel,
-        |    ROUND(list_dot_product(emb, cvec) / (norm * cnorm), 6) AS csim
-        |  FROM e, cent),
-        |assign AS (
-        |  SELECT vec_id, emb, norm, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims)
-        |  WHERE crn = 1),
-        |probes AS (
-        |  SELECT vec_id AS q_id, emb AS qe, norm AS qn, clabel AS cell FROM (
-        |    SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-        |      ORDER BY csim DESC, clabel) AS crn FROM sims
-        |    WHERE vec_id % 100 = 0)
-        |  WHERE crn <= 2),
-        |cand AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM assign JOIN probes USING (cell) WHERE vec_id <> q_id),
-        |mk AS (
-        |  SELECT q_id,
-        |    CAST(SUM(CASE WHEN c_id % 10 = 3 THEN 1 ELSE 0 END) AS BIGINT)
-        |      AS n_masked
-        |  FROM cand GROUP BY q_id),
-        |t5 AS (
-        |  SELECT q_id, c_id, sim, rnk FROM (
-        |    SELECT q_id, c_id, sim, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, c_id) AS rnk
-        |    FROM cand WHERE c_id % 10 <> 3)
-        |  WHERE rnk <= 5),
-        |q2 AS (SELECT vec_id AS q_id, emb AS qe, norm AS qn FROM e
-        |       WHERE vec_id % 100 = 0),
-        |ex AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, vec_id AS c_id, ROW_NUMBER() OVER (
-        |      PARTITION BY q_id ORDER BY sim DESC, vec_id) AS xr
-        |    FROM (SELECT q_id, vec_id,
-        |            ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |          FROM e, q2
-        |          WHERE vec_id <> q_id AND vec_id % 10 <> 3))
-        |  WHERE xr <= 5),
-        |h AS (
-        |  SELECT a.q_id, CAST(COUNT(*) AS BIGINT) AS n_hit
-        |  FROM t5 a SEMI JOIN ex ON ex.q_id = a.q_id AND ex.c_id = a.c_id
-        |  GROUP BY a.q_id)
-        |SELECT t.q_id, t.c_id AS top1_id, t.sim AS top1_sim, mk.n_masked,
-        |  CAST(COALESCE(h.n_hit, 0) AS BIGINT) AS n_hit,
-        |  ROUND(CAST(COALESCE(h.n_hit, 0) AS DOUBLE) / 5.0, 6)
-        |    AS recall_at_5
-        |FROM t5 t JOIN mk ON t.q_id = mk.q_id
-        |LEFT JOIN h ON t.q_id = h.q_id
-        |WHERE t.rnk = 1 ORDER BY t.q_id""".stripMargin,
-
-    // width-robust cascade replay: v32's Hamming stage 1 → v12's PQ
-    // train/encode (sampled: vec_id % 8 = 0, seeds < 128) ADC on stage-1
-    // survivors → exact rerank; serving top-5
-    "v43_cascade_pq" -> (cascadePqSqlStages +
-      """
-        |SELECT q_id, CAST(rnk AS BIGINT) AS rnk, c_id, sim FROM casc
-        |ORDER BY q_id, rnk""".stripMargin),
-
-    // the cascade's cost/quality ledger: same replay + brute-force exact
-    // ground truth, v32's ledger tail
-    "v44_cascade_pq_recall" -> (cascadePqSqlStages +
-      """,
-        |px AS (
-        |  SELECT q_id, vec_id AS c_id,
-        |    ROUND(list_dot_product(qe, emb) / (qn * norm), 6) AS sim
-        |  FROM e, q WHERE vec_id <> q_id),
-        |ex AS (
-        |  SELECT q_id, c_id FROM (
-        |    SELECT q_id, c_id, ROW_NUMBER() OVER (PARTITION BY q_id
-        |      ORDER BY sim DESC, c_id) AS rnk FROM px)
-        |  WHERE rnk <= 5),
-        |c5 AS (SELECT q_id, c_id FROM casc)
-        |SELECT (SELECT COUNT(*) FROM ex) AS n_exact,
-        |  (SELECT COUNT(*) FROM st1) AS n_stage1,
-        |  (SELECT COUNT(*) FROM st2) AS n_stage2,
-        |  (SELECT COUNT(*) FROM c5 SEMI JOIN ex USING (q_id, c_id)) AS n_hit,
-        |  ROUND((SELECT COUNT(*) FROM c5 SEMI JOIN ex USING (q_id, c_id))
-        |    / CAST((SELECT COUNT(*) FROM ex) AS DOUBLE), 6) AS recall_at_5""".stripMargin)
-  )
 
   /** Shared CTE prefix of the v43/v44 oracles, replaying the ROUND-15
     * cascade: stage 1 = 8 independent 62-plane FULL-WIDTH hyperplane
@@ -4646,7 +4518,7 @@ object VectorOps {
     * two Lloyd iterations (assign → 6-dp mean update, empty cells keep
     * their centroid) → final assignment `af(vec_id, cid, csim)`. The
     * text is CTE bodies only (no WITH), so callers can prepend RECURSIVE. */
-  // def, not val: the oracle map interpolates this during object init,
+  // def, not val: `specs` interpolates this during object init,
   // BEFORE a later-declared val would be assigned (a val here reads null)
   /** v35's replay: v31's IVF cells → top-4 kNN graph → three unrolled
     * beam-4 hops from the min-id entry → top-5 of the visited set with

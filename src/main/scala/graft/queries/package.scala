@@ -9,6 +9,12 @@ package object queries {
   /** Registry shape the driver calls: (session, sfDir) => result frame. */
   type Q = (SparkSession, String) => DataFrame
 
+  /** One registered query: its name, its builder, and the DuckDB SQL that
+    * checks its result over the same parquet tables. Each family module
+    * lists its queries as `specs`; [[graft.SparkEntry]] derives its
+    * `queries` and `oracleSql` maps from them. */
+  final case class QuerySpec(name: String, build: Q, oracleSql: String)
+
   /** Exact sum of a double column, oracle-stable.
     *
     * Summing raw doubles is order-dependent, and Spark and DuckDB aggregate

@@ -53,7 +53,6 @@ class DensityScaledLshSpec extends SparkSpec {
   }
 
   private def pairs(planes: Int, bands: Int, width: Int): Set[(Long, Long)] = {
-    graft.functions.VectorFunctions.register(spark)
     VectorOps.lshCandidates(corpus, planes, bands, width)
       .select(col("vec_a"), col("vec_b")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

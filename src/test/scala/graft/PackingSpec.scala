@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.queries.TextOps
-
 /** tx19 sequence packing + tx20 stratified sampling (SURVEY.md §2).
   *
   * tx19's running token offset is a TWO-LEVEL prefix sum (bucket subtotals
@@ -21,7 +19,7 @@ import graft.queries.TextOps
 class PackingSpec extends SparkSpec {
 
   private lazy val packed =
-    TextOps.queries("tx19_pack_sequences")(spark, sf).collect()
+    SparkEntry.queries("tx19_pack_sequences")(spark, sf).collect()
 
   test("tx19 two-level prefix sum equals the naive global running sum") {
     val naive = graft.sources.Tables.table(spark, sf, "documents")
@@ -64,7 +62,7 @@ class PackingSpec extends SparkSpec {
     // every Window node either partitions by bucket (parallel, runs on the
     // document frame) or is the unpartitioned cumulative window over the
     // bucket SUBTOTALS — identified by its input aggregate column btok
-    val windows = TextOps.queries("tx19_pack_sequences")(spark, sf)
+    val windows = SparkEntry.queries("tx19_pack_sequences")(spark, sf)
       .queryExecution.optimizedPlan.collect { case w: LWindow => w }
     assert(windows.nonEmpty)
     windows.foreach { w =>
@@ -75,7 +73,7 @@ class PackingSpec extends SparkSpec {
   }
 
   test("tx20 keeps exactly the per-stratum md5-threshold rows") {
-    val kept = TextOps.queries("tx20_stratified_sample")(spark, sf).collect()
+    val kept = SparkEntry.queries("tx20_stratified_sample")(spark, sf).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
     val all = graft.sources.Tables.table(spark, sf, "documents")
       .selectExpr("doc_id", "lang",

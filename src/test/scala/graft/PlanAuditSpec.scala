@@ -314,7 +314,6 @@ class PlanAuditSpec extends SparkSpec {
   }
 
   test("v22: the top-5 vote list is the broadcast side — corpus payloads never reshuffle") {
-    graft.functions.VectorFunctions.register(spark)
     val df = q("v22_knn_classify")
     df.collect()
     val p = planString(df).split("== Initial Plan ==").head

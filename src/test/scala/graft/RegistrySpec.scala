@@ -1,25 +1,32 @@
 package graft
 
 /** Smoke + contract checks over the whole query registry (the driver's t1
-  * shape): every query runs on sf0.001, returns rows, and every oracle key
-  * refers to a registered query. */
+  * shape): every query runs on sf0.001, returns rows, and every spec has a
+  * unique name and an oracle. */
 class RegistrySpec extends SparkSpec {
 
   test("entry returns rows (driver t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
-  test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracle keys without queries: $missing")
+  test("spec names are unique across families") {
+    // queries and oracleSql are maps keyed by name: a repeated name would
+    // silently drop one of the two queries from both
+    val dups = SparkEntry.specs.groupBy(_.name).collect {
+      case (name, ss) if ss.size > 1 => name
+    }
+    assert(dups.isEmpty, s"spec names declared more than once: $dups")
   }
 
-  test("every registered query is oracled — no rows-only verification anywhere") {
+  test("every spec carries a non-blank oracle SQL") {
     // the board has been 100% hash-checked since round 4 (sketch queries
-    // emit accuracy verdicts); a new query landing without an oracle would
-    // silently downgrade itself to the driver's weaker rows-only check
-    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    assert(unoracled.isEmpty, s"queries without an oracle: $unoracled")
+    // emit accuracy verdicts); a query whose oracle is empty (or null, an
+    // oracle val read before its initializer ran) would leave DuckDB
+    // nothing to compare against
+    val blank = SparkEntry.specs.collect {
+      case q if q.oracleSql == null || q.oracleSql.trim.isEmpty => q.name
+    }
+    assert(blank.isEmpty, s"queries without an oracle: $blank")
   }
 
   test("no oracle uses a DuckDB-version-sensitive function (portability denylist)") {

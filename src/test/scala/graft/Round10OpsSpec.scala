@@ -183,7 +183,6 @@ class Round10OpsSpec extends SparkSpec {
   }
 
   test("v30 over sf0.001: fixed 6 rounds are past convergence (round 5 == round 6)") {
-    graft.functions.VectorFunctions.register(spark)
     val e = SparkEntry.queries("v30_kcore")(spark, sf).collect()
     // re-run the peel at 5 and 7 rounds on the same edges: all equal ⇒
     // 6 is past the fixture's convergence depth (and no-op-stable)

@@ -1,7 +1,5 @@
 package graft
 
-import graft.functions.VectorFunctions
-
 /** graft_simhash must equal the dataflow formulation
   * `split(trim(lower(text)), '\s+')` → distinct → md5 → bit majority for
   * EVERY input — including text edged with tabs/newlines, where Java's
@@ -14,7 +12,6 @@ class SimHashSpec extends SparkSpec {
   import spark.implicits._
 
   test("signature equals the SQL dataflow for whitespace edge cases") {
-    VectorFunctions.register(spark)
     Seq(
       (1L, "\tfoo\n bar baz\n\n"), // tab/newline edges → "" token survives trim
       (2L, "  foo  "),             // space edges → no "" token

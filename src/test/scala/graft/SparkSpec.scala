@@ -14,6 +14,9 @@ object SparkSpec {
   lazy val session: SparkSession = {
     val s = graft.util.Sessions.pipeline(4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
+    // the pipeline session has no GraftExtensions; specs that call the
+    // VectorOps/TextOps helpers directly need the native functions too
+    graft.functions.VectorFunctions.ensure(s)
     s
   }
 }
