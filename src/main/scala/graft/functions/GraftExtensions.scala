@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
   * }}}
   *
   * (or `SparkSession.builder().withExtensions(new GraftExtensions)`), so
-  * users never call `VectorFunctions.register` by hand. This is the
+  * users never call `VectorFunctions.ensure` by hand. This is the
   * canonical deployment shape for a library shipping Catalyst extensions —
   * injection happens before any query is analyzed, and the functions
   * resolve from plain SQL text, JDBC/Thrift included.

@@ -570,19 +570,12 @@ object VectorFunctions {
     case _ => -1
   }
 
-  /** Register the native functions in the session's function registry
-    * (idempotent) so they are usable from SQL and `expr(...)`. Replacing a
-    * function the registry already holds logs a WARN per function. */
-  def register(spark: SparkSession): Unit =
-    injectable.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  /** Register only the native functions the session's registry lacks. A
-    * session built with [[GraftExtensions]] already holds them all, so this
-    * leaves it untouched; a session without the extensions (the test
-    * suite's, or `newSession()` of one) gets them here. */
+  /** Register the native functions the session's registry lacks, so they
+    * are usable from SQL and `expr(...)`. A session built with
+    * [[GraftExtensions]] already holds them all, so this leaves it untouched
+    * (replacing a held function would log a WARN per function); a session
+    * without the extensions (the test suite's, or `newSession()` of one)
+    * gets them here. */
   def ensure(spark: SparkSession): Unit = {
     val registry = spark.sessionState.functionRegistry
     injectable.foreach { case (name, builder) =>

@@ -7,7 +7,7 @@ import graft.functions.{GraftExtensions, VectorFunctions}
 /** The session-extension entry point must inject cleanly and the same
   * builders must resolve through SQL (full end-to-end injection needs a
   * fresh SparkContext, which the shared test session precludes — the
-  * registry path is exercised via VectorFunctions.register instead). */
+  * registry path is exercised via VectorFunctions.ensure instead). */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("extension point injects without error") {
@@ -15,7 +15,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("injected builders evaluate from SQL text") {
-    VectorFunctions.register(spark)
+    VectorFunctions.ensure(spark)
     val row = spark.sql(
       """SELECT graft_dot(array(1D, 2D, 3D), array(4D, 5D, 6D)) AS d,
         |       graft_hsig(array_repeat(1D, 64)) AS s""".stripMargin).first()
@@ -30,7 +30,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("kernels follow the HOF on malformed input: length mismatch / null slot -> NULL") {
-    VectorFunctions.register(spark)
+    VectorFunctions.ensure(spark)
     // the HOF forms the kernels claim identity with
     def hofDot(a: String, b: String) =
       s"aggregate(zip_with($a, $b, (x, y) -> x * y), 0D, (acc, x) -> acc + x)"
@@ -66,7 +66,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("plane-count arg widens the signature to long and extends the family") {
-    VectorFunctions.register(spark)
+    VectorFunctions.ensure(spark)
     val row = spark.sql(
       "SELECT graft_hsig(array_repeat(1D, 64), 60) AS s").first()
     val expected = (0 until 60).map { i =>
@@ -83,7 +83,7 @@ class GraftExtensionsSpec extends SparkSpec {
   }
 
   test("graft_cos_argmax agrees with the max-struct aggregate it replaces") {
-    VectorFunctions.register(spark)
+    VectorFunctions.ensure(spark)
     import org.apache.spark.sql.functions._
     // 40 vectors x 7 centroids, deterministic values with engineered ties
     // (centroids 5 and 6 are identical -> equal csim, tie must go to the
