@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.queries.VectorOps
-import graft.util.Sessions
+import graft.util.{Barriers, Sessions}
 
 /** PQ-CASCADE DIAL SWEEP (round-14 verdict item 3): v43's width-robust
   * cascade bought its d=1536 speedup (6.39× → 1.79× cost ratio vs d=64)
@@ -49,7 +49,7 @@ object CascadeTune {
           col("norm").as("qn"))
       VectorOps.cosineTopK(e, qs, 5).select(col("q_id"), col("c_id"))
     }
-    val exact = run(spark, dir).localCheckpoint(true)
+    val exact = Barriers.eager(run(spark, dir))
     val nExact = exact.count()
     System.err.println(s"[tune] exact ground truth: $nExact rows")
 

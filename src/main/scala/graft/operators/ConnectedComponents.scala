@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Barriers
+
 /** Connected components by min-label propagation with pointer jumping, the
   * missing piece between an LSH candidate-pair list and a shippable
   * corpus-dedup verdict: a duplicate CHAIN A~B~C must collapse to one
@@ -64,11 +66,11 @@ object ConnectedComponents {
     val sym = directed
       .union(directed.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(nPart, col("dst"))
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     directed.unpersist() // upstream ran once into the checkpoint
     var labelsCp = sym.select(col("src").as("id")).distinct()
       .withColumn("label", col("id"))
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     var labels = labelsCp
     var converged = labels.isEmpty
     var it = 0
@@ -104,13 +106,13 @@ object ConnectedComponents {
       // flat however many rounds run — the materialized frame is |V| rows
       // of three longs, trivial next to one plan re-walk
       val t0 = System.nanoTime()
-      val stored = next.localCheckpoint(true)
+      val stored = Barriers.eager(next)
       val nChanged = stored.agg(coalesce(sum("changed"), lit(0L)))
         .first().getLong(0)
       // round N−1's label blocks are dead once round N materializes (r17
       // — same unpersist discipline as `directed` above; released via the
       // checkpoint HANDLE, `labels` itself is a projection over it)
-      graft.util.Barriers.release(labelsCp)
+      Barriers.release(labelsCp)
       labelsCp = stored
       System.err.println(f"[graft] CC round ${it + 1}: changed=$nChanged " +
         f"in ${(System.nanoTime() - t0) / 1e9}%.2f s")
@@ -120,7 +122,7 @@ object ConnectedComponents {
     }
     // the edge frame is dead once the loop exits — the returned labels are
     // checkpoint-backed and never re-read it (r17)
-    graft.util.Barriers.release(sym)
+    Barriers.release(sym)
     // one stderr line per run: iteration count == component diameter is the
     // quantity the scale-up experiment tracks (PLANS.md) — a corpus whose
     // duplicate chains lengthen would show up here before it shows up in time

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Barriers
+
 /** k-core decomposition by FIXED-ROUND peeling — the graph-cohesion
   * measure that separates a dense community (every member has ≥ k
   * neighbors inside the group) from incidental connectivity; with
@@ -40,24 +42,19 @@ object KCore {
     // generator upstream, sym0's materialization job re-derived the whole
     // pair pipeline twice (r17). One narrow (a, b) barrier, released as
     // soon as the symmetrized list is at rest.
-    val e0 = graft.util.Barriers.eager(edges)
+    val e0 = Barriers.eager(edges)
     val sym0 = e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
-      .localCheckpoint(true)
-    graft.util.Barriers.release(e0)
-    val surviving = (1 to rounds).foldLeft(sym0) { (sym, _) =>
+      .transform(Barriers.eager)
+    Barriers.release(e0)
+    val surviving = Barriers.iterate(sym0, rounds) { sym =>
       val keep = sym.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select(col("src").as("id"))
-      val next = sym
+      sym
         .join(keep.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(keep.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .select(col("src"), col("dst"))
-        .localCheckpoint(true)
-      // round N−1's survivor blocks are dead once round N materializes
-      // (r17 — the PageRank/CC unpersist discipline)
-      graft.util.Barriers.release(sym)
-      next
     }
     surviving.groupBy(col("src").as("id"))
       .agg(count(lit(1)).as("core_deg"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Barriers
+
 /** PageRank over an undirected similarity graph (Brin & Page 1998) in pure
   * INTEGER arithmetic — the graph-centrality leg of the dedup/similarity
   * toolkit: given the LSH near-neighbour pair list, rank each vector by how
@@ -45,10 +47,10 @@ object PageRank {
     val sym = directed
       .union(directed.select(col("dst").as("src"), col("src").as("dst")))
       .repartition(nPart, col("src"))
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     directed.unpersist() // upstream (LSH band join, say) ran exactly once
     val deg = sym.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     // Enforce the documented headroom instead of silently wrapping:
     // worst-case inflow ≤ |V|·scale, and the damping multiply needs
     // dampNum·inflow inside Long. deg is already checkpointed and

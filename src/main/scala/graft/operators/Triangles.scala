@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Barriers
+
 /** Exactly-once distributed triangle enumeration over an undirected edge
   * list — the "compact forward" / degree-ordered-orientation algorithm
   * (Latapy 2008; the shape every production triangle count uses).
@@ -36,7 +38,7 @@ object Triangles {
     // pipeline per reference (r17; the oe barrier below only deduped the
     // CONSUMERS of oe, not oe's own build). One narrow (a, b) barrier,
     // released as soon as oe is at rest.
-    val e0 = graft.util.Barriers.eager(edges)
+    val e0 = Barriers.eager(edges)
     val deg = e0.select(col("a").as("id"))
       .union(e0.select(col("b").as("id")))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
@@ -55,9 +57,9 @@ object Triangles {
         when(col("fwd"), col("a")).otherwise(col("b")).as("u"),
         when(col("fwd"), col("b")).otherwise(col("a")).as("v"),
         when(col("fwd"), col("db")).otherwise(col("da")).as("vdeg"))
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     // the raw pair list is dead once the oriented list is at rest
-    graft.util.Barriers.release(e0)
+    Barriers.release(e0)
     val wedges = oe.select(col("u"), col("v").as("v1"), col("vdeg").as("d1"))
       .join(oe.select(col("u"), col("v").as("v2"), col("vdeg").as("d2")), "u")
       .filter(struct(col("d1"), col("v1")) < struct(col("d2"), col("v2")))

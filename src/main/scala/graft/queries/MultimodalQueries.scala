@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.multimodal.Multimodal
 import graft.sources.Tables
+import graft.util.Barriers
 
 /** Oracle-checked entries for the multimodal pipeline (graft.multimodal).
   *
@@ -488,8 +489,8 @@ object MultimodalQueries {
       val stride = 2L * math.max(1L, docsT.count() / 500L)
       val media = Multimodal.syntheticNearDupBmps(
         fanout(docsT).filter(col("doc_id") % stride === 0))
-      val dhs = Multimodal.imageDHash(media).toDF().localCheckpoint(true)
-      val ahs = Multimodal.imageAHash(media).toDF().localCheckpoint(true)
+      val dhs = Barriers.eager(Multimodal.imageDHash(media).toDF())
+      val ahs = Barriers.eager(Multimodal.imageAHash(media).toDF())
       val banded = dhs.select(col("media_id"), col("dh"),
         posexplode(array(
           expr("dh & 16383"), expr("shiftrightunsigned(dh, 14) & 16383"),
@@ -587,13 +588,13 @@ object MultimodalQueries {
           count(lit(1)).as("cluster_size"),
           min_by(col("payload"), col("media_id")).as("payload"))
         .drop("sha")
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val sizes = clusters.select(col("media_id"), col("cluster_size"))
       // stage 2: decode + hash the ≤40 representatives only
       val repCont = clusters.select(col("media_id"), col("payload"))
         .as[graft.multimodal.Multimodal.Container]
-      val dhs = Multimodal.imageDHash(repCont).toDF().localCheckpoint(true)
-      val ahs = Multimodal.imageAHash(repCont).toDF().localCheckpoint(true)
+      val dhs = Barriers.eager(Multimodal.imageDHash(repCont).toDF())
+      val ahs = Barriers.eager(Multimodal.imageAHash(repCont).toDF())
       // stage 3: mm17's banding discipline (pigeonhole-complete at
       // dham ≤ 3) over the representative frame
       val banded = dhs.select(col("media_id"), col("dh"),

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 import graft.sources.Tables
+import graft.util.Barriers
 
 /** Core relational operator surface over the driver's TPC-H-ish testdata
   * (SURVEY.md §2.3–§2.8 engine scope). Every query here is paired with an
@@ -684,7 +685,7 @@ object Relational {
       // for everything that runs after (the gs15 provider-pin pattern).
       val prev = s.conf.getOption("spark.sql.cteRecursionRowLimit")
       s.conf.set("spark.sql.cteRecursionRowLimit", "-1")
-      try s.sql(q43Sql).localCheckpoint(true)
+      try Barriers.eager(s.sql(q43Sql))
       finally prev match {
         case Some(v) => s.conf.set("spark.sql.cteRecursionRowLimit", v)
         case None    => s.conf.unset("spark.sql.cteRecursionRowLimit")
@@ -2393,7 +2394,7 @@ object Relational {
         .withColumn("dist",
           levenshtein(col("q_name"), col("p_name"), 1).cast("long"))
         .filter(col("dist") >= 0)
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val nPairs = namePairs.count()
       val fanBack =
         if (nPairs <= 2000000L) broadcast(namePairs) else namePairs

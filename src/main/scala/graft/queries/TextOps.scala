@@ -70,8 +70,8 @@ object TextOps {
     // |docs|×4 rows of (long, int, 32-char hash) — barriered because every
     // bucket self-join consumes BOTH sides of this frame, re-deriving the
     // shingle-explode + 16-way min-md5 aggregate per side otherwise (r16;
-    // six call sites share the fix). NOTE the Barriers.eager contract:
-    // this runs a real job at query-BUILD time for every caller.
+    // six call sites share the fix). The barrier runs a real job at
+    // query-BUILD time for every caller (see Barriers).
     Barriers.eager(
       sigs.selectExpr("doc_id", s"inline(array(${bandStructs.mkString(", ")}))"))
   }
@@ -95,7 +95,7 @@ object TextOps {
       .agg(count(lit(1)).as("nb"))
       // ≤ |docs|×64 rows, three consumers (raw histogram, target histogram,
       // per-doc weight join) — barrier the bigram explode+hash pass (r16;
-      // Barriers.eager contract: a real job runs at query-BUILD time)
+      // a real job runs at query-BUILD time)
       .transform(Barriers.eager)
     val rawB = db.groupBy(col("bucket")).agg(sum(col("nb")).as("raw"))
     val tgtB = db.filter(col("source") === "src0")
@@ -321,7 +321,7 @@ object TextOps {
       // rows through one or two groupBys first.)
       // (doc_id, 16-char hash) per row — barriered: both bucket-join sides
       // re-ran the full tokenize+hash+majority signature pass otherwise
-      // (r16; Barriers.eager = SWEEP17's A/B lever)
+      // (r16)
       val sig = Barriers.eager(fanout(docs(s, dir))
         .selectExpr("doc_id", "graft_simhash(text) AS simhash"))
       val bands = sig
@@ -1596,12 +1596,11 @@ object TextOps {
       // three consumers (gram stream, clean-text rebuild, final stats) —
       // barrier the tokenize pass once (r16; the v16 `af` materialization
       // trade: token arrays ≈ corpus bytes, vs 3 regex-tokenize scans).
-      // CORPUS-SIZED and lineage-truncating under the default arm — on a
-      // cluster, executor loss makes this frame unrecoverable (query
-      // fails and restarts instead of recomputing); see
-      // Barriers.corpusSized for the measured arms and the failure-mode
-      // trade (SWEEP17)
-      val toks = Barriers.corpusSized(fanout(docs(s, dir))
+      // CORPUS-SIZED and lineage-truncating — on a cluster, executor
+      // loss makes this frame unrecoverable (query fails and restarts
+      // instead of recomputing); SWEEP17 measured it against recompute
+      // and persist(DISK_ONLY), see Barriers
+      val toks = Barriers.eager(fanout(docs(s, dir))
         .selectExpr("doc_id", s"$tokExpr AS tk")
         .withColumn("n", expr("size(tk)").cast("long")))
       val grams = toks.filter(col("n") >= k)
@@ -2138,7 +2137,7 @@ object TextOps {
         .filter(length(col("chunk")) >= 4)
         .select(col("source"), expr("md5(cast(chunk as binary))").as("h"))
         .distinct()
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val per = ch.groupBy(col("source")).agg(count(lit(1)).as("n"))
       ch.select(col("source").as("source_a"), col("h"))
         .join(ch.select(col("source").as("source_b"), col("h")), "h")
@@ -2327,7 +2326,7 @@ object TextOps {
       val fps = keyed
         .selectExpr("doc_id", "(ky div 1024) + 1 AS fh")
         .distinct()
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val per = fps.groupBy(col("doc_id")).agg(count(lit(1)).as("nfp"))
       val rare = fps.groupBy(col("fh")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= 10)
@@ -2412,7 +2411,7 @@ object TextOps {
             "collect_list(struct(pos, w))), p -> p.w)"), " ").as("phrase"),
           count(lit(1)).cast("long").as("n_words"))
         .filter(col("n_words") <= 4)
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val wordStats = members
         .join(phrase.select(col("doc_id"), col("grp"), col("n_words")),
           Seq("doc_id", "grp"))
@@ -2513,7 +2512,7 @@ object TextOps {
             .orderBy(col("pc").desc, col("tg"))).cast("long"))
         .filter(col("prank") <= 20)
         .select(col("plang"), col("tg"), col("prank"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val dprof = base.filter(col("doc_id") % 2 === 1)
         .groupBy(col("doc_id"), col("lang"), col("tg"))
         .agg(count(lit(1)).as("dc"))

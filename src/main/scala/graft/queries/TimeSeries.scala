@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.AsOfJoin
 import graft.sources.Tables
+import graft.util.Barriers
 
 /** The reference's query surface, re-expressed natively (SURVEY.md §2.11).
   *
@@ -913,7 +914,7 @@ object TimeSeries {
         // index, deseasonalize) — barrier per the ts42 discipline; the
         // executed plan otherwise re-derived the events aggregate per
         // reference (r16 plan audit: 23 FileScans / 65 Exchanges)
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val mu = daily.groupBy(col("g"))
         .agg(count(lit(1)).as("nm"), sum(sumExactCol(col("x"))).as("sm"))
         .withColumn("gmu", halfUpMean6("sm", "nm"))
@@ -924,15 +925,15 @@ object TimeSeries {
         .join(mu, Seq("g"))
         .select(col("g"), col("p"), round(col("pmu") - col("gmu"), 6).as("sidx"))
         // |types|×7 rows, two consumers (deseasonalize + next-period join)
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val de = daily.join(seas, Seq("g", "p"))
         .withColumn("y", round(col("x") - col("sidx"), 6))
         // three consumers (s1 chain, s2 chain via s1, final join)
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val s1 = emaClosedForm(de.select(col("g"), col("i"), col("y").as("x")))
         .withColumn("s1", round(col("ema"), 6).cast("double")).drop("ema")
         // two consumers (s2 chain + final join) — barrier the window pass
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val s2 = emaClosedForm(s1.select(col("g"), col("i"), col("s1").as("x")))
         .withColumn("s2", round(col("ema"), 6).cast("double")).drop("ema")
       val nextSeas = seas.select(col("g"), col("p").as("np"),
@@ -1134,7 +1135,7 @@ object TimeSeries {
       }
       // |series| rows, two consumers (MAD input + final join) — barrier so
       // the full-series median rank-window runs once, not twice (r16)
-      val medians = med(keyed, "xd", "med").localCheckpoint(true)
+      val medians = Barriers.eager(med(keyed, "xd", "med"))
       val mads = med(
         keyed.join(broadcast(medians), "event_type")
           .withColumn("adev", abs(col("xd") - col("med")).cast("decimal(18,6)")),
@@ -1471,7 +1472,7 @@ object TimeSeries {
           greatest(least(floor(col("value") / 16.0), lit(7L)), lit(0L)))
         .groupBy(col("event_type"), col("day"), col("bin"))
         .agg(count(lit(1)).as("n"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val frame = binned.select(col("event_type"), col("day")).distinct()
         .crossJoin(broadcast(s.range(0, 8).toDF("bin")))
       val dense = frame.join(binned, Seq("event_type", "day", "bin"), "left")
@@ -2775,7 +2776,7 @@ object TimeSeries {
         .withColumn("xd", col("value").cast("decimal(18,6)"))
         .groupBy(col("event_type"), col("bucket"))
         .agg(expr("cast(sum(xd) * 100 as bigint)").as("sc"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val w1 = Window.partitionBy(col("event_type")).orderBy(col("bucket"))
       val pts = hourly
         .withColumn("i", row_number().over(w1).cast("long"))
@@ -3178,7 +3179,7 @@ object TimeSeries {
         // three consumers (1-returns, k-return probe side, k-return build
         // side) — materialize the ≤|hours|×|series| frame once instead of
         // re-running the events scan per branch (ts42's barrier rule)
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val base = hourly
         .withColumn("r1", (col("xd") - lag(col("xd"), 1).over(w))
           .cast("decimal(14,6)"))
@@ -3304,7 +3305,7 @@ object TimeSeries {
         .withColumn("yd", col("y").cast("decimal(14,6)"))
         .withColumn("pxx", (col("xd") * col("xd")).cast("decimal(30,12)"))
         .withColumn("pxy", (col("xd") * col("yd")).cast("decimal(30,12)"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val mom = xy.agg(
           count(lit(1)).as("n"),
           sum(col("xd")).cast("decimal(14,6)").as("sx"),
@@ -3467,7 +3468,7 @@ object TimeSeries {
         .select(col("bucket"), col("hm").as("c"))
       val v = hourly.filter(col("event_type") === "view")
         .select(col("bucket"), col("hm").as("v"))
-      val cur = c.join(v, Seq("bucket")).localCheckpoint(true)
+      val cur = Barriers.eager(c.join(v, Seq("bucket")))
       val prev = cur.select(
         (col("bucket") + expr("INTERVAL 1 HOUR")).as("bucket"),
         col("c").as("cp"), col("v").as("vp"))
@@ -3693,7 +3694,7 @@ object TimeSeries {
     // on the PRE-COMPRESSED hourly frame (|hours|² per series, ts35's
     // class — 720² here), never on raw events; many series shard on g.
     QuerySpec("ts60_mann_kendall", (s, dir) => {
-      val h = hourlyMicroMean(s, dir).localCheckpoint(true)
+      val h = Barriers.eager(hourlyMicroMean(s, dir))
       val later = h.select(col("g"), col("bucket").as("bj"), col("m").as("mj"))
       val sStat = h.join(later, Seq("g"))
         .filter(col("bucket") < col("bj"))
@@ -4010,7 +4011,7 @@ object TimeSeries {
       val cells = pts.groupBy(col("g"), col("mval"))
         .agg(sum(col("h1")).as("c1"),
           sum(lit(1L) - col("h1")).as("c2"))
-        .localCheckpoint(true) // feeds the cumsum AND the totals
+        .transform(Barriers.eager) // feeds the cumsum AND the totals
       val w = Window.partitionBy(col("g")).orderBy(col("mval"))
         .rowsBetween(Window.unboundedPreceding, 0)
       val cum = cells
@@ -4466,7 +4467,7 @@ object TimeSeries {
     val wide = centered.select(leadCols: _*)
       .groupBy(col("g"))
       .agg(aggCols.head, aggCols.tail: _*)
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     val stackArgs = (0 to 10).map(l => s"$l, num$l, np$l").mkString(", ")
     val terms = wide
       .selectExpr("g", s"stack(11, $stackArgs) AS (lag, num, n_pairs)")

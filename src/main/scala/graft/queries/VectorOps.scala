@@ -577,10 +577,10 @@ object VectorOps {
       // and the cents→cells chain are independent: overlap them (§2.6)
       val Seq(Seq(exact), Seq(cents, cells)) = inParallel(
         () => Seq(cosineTopK(e, qs, 5).select(col("q_id"), col("c_id"))
-          .localCheckpoint(true)),
+          .transform(Barriers.eager)),
         () => {
-          val c = cellCentroids(e).localCheckpoint(true)
-          Seq(c, coarseAssign(e, c).localCheckpoint(true))
+          val c = Barriers.eager(cellCentroids(e))
+          Seq(c, Barriers.eager(coarseAssign(e, c)))
         })
       val nEx = exact.agg(count(lit(1)).as("n_exact"))
       val hits = Seq(1, 2, 4).map { np =>
@@ -832,7 +832,7 @@ object VectorOps {
         // one-row codebook barrier (r16): seeds is referenced twice
         // (assign + fallback join), so the lazy form re-derived the subs
         // pipeline per reference; one tiny job materializes the codebook
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       // encode + reconstruct, fully map-side against the broadcast codebook:
       // per subspace, argmin over the 16 centroids = first element of an
       // array_sort by (rounded dist, cid)
@@ -959,7 +959,7 @@ object VectorOps {
       // (r16 plan audit: 52 Exchanges / 17 FileScans). cents is k rows;
       // resid is the corpus-sized residual frame — the v16 `af`
       // materialize-the-cluster-map trade, paid once instead of twice.
-      val cents = cellCentroids(e).localCheckpoint(true)
+      val cents = Barriers.eager(cellCentroids(e))
       // residual vs the assigned cell's centroid, dims rounded to 6 dp so
       // both engines train/encode from byte-identical inputs
       // resid is CORPUS-SIZED (full residual double arrays) with two
@@ -1007,7 +1007,7 @@ object VectorOps {
           .as("cb"))
         // one-row codebook: barrier collapses the whole seeds/refined
         // training pipeline into a single job instead of one per reference
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       // encode the residual, reconstruct as centroid + dequantized residual
       val dqExpr =
         s"""flatten(transform(sequence(0, ${m - 1}), s ->
@@ -1380,7 +1380,7 @@ object VectorOps {
       // the old two-call form paid is gone (r16, guide §1.2 "don't compute
       // things you throw away"). Barriered: both lists + their pair joins
       // consume it.
-      val top20 = cosineTopK(e, qs, 20).localCheckpoint(true)
+      val top20 = Barriers.eager(cosineTopK(e, qs, 20))
       def ild(k: Int, nCol: String, iCol: String): DataFrame = {
         val top = top20.filter(col("rnk") <= k).select(col("q_id"), col("c_id"))
         val we = top.join(
@@ -1511,7 +1511,7 @@ object VectorOps {
       // carry-variant assign keeps emb/norm through the aggregate, so
       // the old corpus join-back to re-attach them is gone (r17).
       val af = kmeansAssignCarry(e, kmeansCentroidsAdaptive(e, iters = 2))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val a = af.select(col("cid"), col("vec_id").as("vec_a"),
         col("emb").as("emb_a"), col("norm").as("norm_a"))
       val b = af.select(col("cid"), col("vec_id").as("vec_b"),
@@ -1911,7 +1911,7 @@ object VectorOps {
       // five consumers (2 semi-joins + 2 n_exact aggs + ...) — barrier the
       // brute-force pass once (r16)
       val exact = cosineTopK(e, qs, 5).select(col("q_id"), col("c_id"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val curves = Seq(16, 32).map { d =>
         val ec = e.select(col("vec_id"),
           expr(s"slice(emb, 1, $d)").as("emb"))
@@ -2050,7 +2050,7 @@ object VectorOps {
     // and Triangles checkpoints its own oriented list.
     QuerySpec("v31_graph_triangles_ivf", (s, dir) => {
       val e = emb(s, dir)
-      val cells = coarseAssign(e, sqrtSeedCents(e)).localCheckpoint(true)
+      val cells = Barriers.eager(coarseAssign(e, sqrtSeedCents(e)))
       val a = cells.select(col("cell"), col("vec_id").as("vec_a"),
         col("emb").as("emb_a"), col("norm").as("norm_a"))
       val b = cells.select(col("cell"), col("vec_id").as("vec_b"),
@@ -2190,7 +2190,7 @@ object VectorOps {
         // sentinel: see kmeansAssign (kills the inferred-isnotnull double eval)
         .select(col("vec_id"), coalesce(col("b.cid"), lit(-1L)).as("cid"),
           col("emb"), col("norm"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val a = af.select(col("cid"), col("vec_id").as("vec_a"),
         col("emb").as("emb_a"), col("norm").as("norm_a"))
       val b = af.select(col("cid"), col("vec_id").as("vec_b"),
@@ -2304,7 +2304,7 @@ object VectorOps {
             .agg(topC(col("vec_id"), col("hsim")).as("top"))
             .select(col("q_id"),
               explode(expr("transform(top, s -> s.c_id)")).as("c_id"))
-            .localCheckpoint(true)
+            .transform(Barriers.eager)
           // stage 2: SQ8 asymmetric scoring of survivors (v11's quantizer —
           // per-dim min/max one-row broadcast, dequantize, cosine vs raw query)
           val mm = e.select(posexplode(col("emb")).as(Seq("pos", "x")))
@@ -2325,7 +2325,7 @@ object VectorOps {
             .withColumn("r", row_number().over(w2))
             .filter(col("r") <= 15)
             .select(col("q_id"), col("c_id"))
-            .localCheckpoint(true)
+            .transform(Barriers.eager)
           val w3 = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
           val casc = e.join(broadcast(st2), col("vec_id") === col("c_id"))
             .join(broadcast(qs.select(col("q_id"), col("qe"), col("qn"))), Seq("q_id"))
@@ -2334,12 +2334,12 @@ object VectorOps {
             .withColumn("rnk", row_number().over(w3))
             .filter(col("rnk") <= 5)
             .select(col("q_id"), col("c_id"))
-            .localCheckpoint(true)
+            .transform(Barriers.eager)
           Seq(st1, st2, casc)
         },
         () => Seq(cosineTopK(e, qs.select(col("q_id"), col("qe"), col("qn")), 5)
           .select(col("q_id"), col("c_id"))
-          .localCheckpoint(true)))
+          .transform(Barriers.eager)))
       val hit = casc.join(exact, Seq("q_id", "c_id"), "left_semi")
       exact.agg(count(lit(1)).as("n_exact"))
         .crossJoin(st1.agg(count(lit(1)).as("n_stage1")))
@@ -2468,10 +2468,10 @@ object VectorOps {
           .select(col("q_id"),
             posexplode(expr("transform(top, s -> s.c_id)"))
               .as(Seq("pos", "c_id")))
-          .localCheckpoint(true),
+          .transform(Barriers.eager),
         () => cosineTopK(e, qs.select(col("q_id"), col("qe"), col("qn")), 5)
           .select(col("q_id"), col("c_id"))
-          .localCheckpoint(true))
+          .transform(Barriers.eager))
       val armed = ranked
         .select(col("q_id"), col("pos"), col("c_id"),
           explode(expr("array(30, 100, 300)")).as("c1"))
@@ -2620,7 +2620,7 @@ object VectorOps {
       // barrier jobs
       val Seq(graph, corpus, exact) = inParallel(
         () => {
-          val cells = coarseAssign(e, sqrtSeedCents(e)).localCheckpoint(true)
+          val cells = Barriers.eager(coarseAssign(e, sqrtSeedCents(e)))
           val ga = cells.select(col("cell"), col("vec_id").as("src"),
             col("emb").as("es"), col("norm").as("ns"))
           val gb = cells.select(col("cell"), col("vec_id").as("dst"),
@@ -2632,17 +2632,17 @@ object VectorOps {
               round(expr("graft_dot(es, ed)") / (col("ns") * col("nd")), 6))
             .withColumn("rn", row_number().over(wK)).filter(col("rn") <= 4)
             .select(col("src"), col("dst"))
-            .localCheckpoint(true)
+            .transform(Barriers.eager)
           // the corpus-sized assignment blocks are dead once the edge
           // list materializes (r17 unpersist discipline)
           Barriers.release(cells)
           g
         },
         () => e.select(col("vec_id").as("cid"), col("emb").as("ce"),
-          col("norm").as("cn")).localCheckpoint(true),
+          col("norm").as("cn")).transform(Barriers.eager),
         () => cosineTopK(e, qs.select(col("q_id"), col("qe"), col("qn")), 5)
           .select(col("q_id"), col("c_id").as("cid"))
-          .localCheckpoint(true))
+          .transform(Barriers.eager))
       def score(df: DataFrame): DataFrame = df
         .join(corpus, Seq("cid"))
         .join(broadcast(qs), Seq("q_id"))
@@ -2662,7 +2662,7 @@ object VectorOps {
       // (≤ q·(4·beam+1)), trivial to materialize.
       var visited = score(
         qs.select(col("q_id")).crossJoin(broadcast(entry)))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       var frontier = visited
       for (_ <- 1 to 3) {
         val prev = visited
@@ -2670,7 +2670,7 @@ object VectorOps {
           .join(graph, col("cid") === col("src"))
           .select(col("q_id"), col("dst").as("cid")).distinct()
         visited = visited.unionByName(score(cand)).distinct()
-          .localCheckpoint(true)
+          .transform(Barriers.eager)
         // round N−1's visited blocks are dead once round N materializes
         // (the eager checkpoint above read them for the last time)
         Barriers.release(prev)
@@ -2723,7 +2723,7 @@ object VectorOps {
       val auditStride = 100L * math.max(1L, e.count() / 500L)
       val main = e.filter(col("vec_id") % 20 =!= 0)
       val delta = e.filter(col("vec_id") % 20 === 0)
-      val cents = sqrtSeedCents(main).localCheckpoint(true)
+      val cents = Barriers.eager(sqrtSeedCents(main))
       val cells = coarseAssign(main, cents)
       val wProbe = Window.partitionBy(col("vec_id"))
         .orderBy(col("csim").desc, col("clabel"))
@@ -2752,7 +2752,7 @@ object VectorOps {
       val top5 = mainCand.unionByName(deltaCand)
         .withColumn("rnk", row_number().over(wTop).cast("long"))
         .filter(col("rnk") <= 5)
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val auditQs = qs.filter(col("q_id") % auditStride === 50L)
       val exact = cosineTopK(e, auditQs, 5).select(col("q_id"), col("c_id"))
       val hits = top5.join(exact, Seq("q_id", "c_id"), "left_semi")
@@ -2948,11 +2948,11 @@ object VectorOps {
         .crossJoin(broadcast(emb(s, dir).agg(max(col("norm")).as("maxn"))))
         .withColumn("band", least(floor(col("norm")
           / (col("maxn") / lit(16.0))), lit(15.0)).cast("long"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val qs = e.filter(expr("vec_id % 100 = 50"))
         .select(col("vec_id").as("q_id"), col("emb").as("qe"),
           col("norm").as("qn"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val topk = udaf(new graft.functions.TopKAggregator(5))
       val best = fanout(e)
         .crossJoin(broadcast(qs))
@@ -3130,7 +3130,7 @@ object VectorOps {
       // eager checkpoint, v16's discipline
       val cells = kmeansAssign(e, kmeansCentroidsAdaptive(e, iters = 2))
         .groupBy(col("cid")).agg(count(lit(1)).as("sz"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val stats = cells.agg(
         count(lit(1)).as("n_cells"),
         sum(col("sz")).cast("long").as("n"),
@@ -3374,7 +3374,7 @@ object VectorOps {
     QuerySpec("v42_tombstone_ann", (s, dir) => {
       val e = emb(s, dir)
       val auditStride = 100L * math.max(1L, e.count() / 500L)
-      val cents = sqrtSeedCents(e).localCheckpoint(true)
+      val cents = Barriers.eager(sqrtSeedCents(e))
       val cells = coarseAssign(e, cents)
       val probes = cellProbes(e, cents, 2)
       val wTop = Window.partitionBy(col("q_id"))
@@ -3386,14 +3386,14 @@ object VectorOps {
         .select(col("q_id"), col("vec_id").as("c_id"), col("sim"))
         // ~q·nprobe·√n three-column rows, two consumers (tombstone count +
         // live top-5) — barrier so the corpus assign+probe join runs once
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val masked = cand.groupBy(col("q_id"))
         .agg(sum(when(col("c_id") % 10 === 3, 1L).otherwise(0L))
           .as("n_masked"))
       val top5 = cand.filter(col("c_id") % 10 =!= 3)
         .withColumn("rnk", row_number().over(wTop).cast("long"))
         .filter(col("rnk") <= 5)
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val auditQs = e.filter(expr("vec_id % 100 = 0"))
         .filter(col("vec_id") % auditStride === 0)
         .select(col("vec_id").as("q_id"), col("emb").as("qe"),
@@ -3524,11 +3524,11 @@ object VectorOps {
     QuerySpec("v44_cascade_pq_recall", withHashAggBudget((s, dir) => {
       val e = emb(s, dir)
       val (st1, st2, casc, qs) = cascadePqStored(s, dir)
-      val top5 = casc.select(col("q_id"), col("c_id")).localCheckpoint(true)
+      val top5 = Barriers.eager(casc.select(col("q_id"), col("c_id")))
       val exact = cosineTopK(e,
         qs.select(col("q_id"), col("qe"), col("qn")), 5)
         .select(col("q_id"), col("c_id"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
       val hit = top5.join(exact, Seq("q_id", "c_id"), "left_semi")
       exact.agg(count(lit(1)).as("n_exact"))
         .crossJoin(st1.agg(count(lit(1)).as("n_stage1")))
@@ -3627,7 +3627,7 @@ object VectorOps {
       .agg(topC(col("vec_id"), col("hsim")).as("top"))
       .select(col("q_id"),
         explode(expr("transform(top, s -> s.c_id)")).as("c_id"))
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     val sw = "(size(emb) div 16)"
     // codegen'd kernel, fold-order-identical to the HOF chain (L2Squared)
     def l2(a: String, b: String) = s"round(graft_l2($a, $b), 6)"
@@ -3660,7 +3660,7 @@ object VectorOps {
       .withColumn("r", row_number().over(w2))
       .filter(col("r") <= c2v)
       .select(col("q_id"), col("c_id"))
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     val w3 = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
     val casc = e.join(broadcast(st2), col("vec_id") === col("c_id"))
       .join(broadcast(qs.select(col("q_id"), col("qe"), col("qn"))), Seq("q_id"))
@@ -3692,7 +3692,7 @@ object VectorOps {
       .select(col("vec_id"), posexplode(expr(
         s"transform(sequence(0, ${m - 1}), s -> slice(emb, s * $sw + 1, $sw))"))
         .as(Seq("sub", "sv")))
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     val seeds = subs.filter(col("vec_id") < k.toLong * stride)
       .select(expr(s"cast(vec_id div $stride as int)").as("cid"), col("sub"),
         col("sv").as("cv"))
@@ -3700,8 +3700,8 @@ object VectorOps {
       * centroid (min-struct, tie on cid — the oracle's ROW_NUMBER order),
       * replace each centroid with the 6-dp dim-wise mean of its members;
       * cells that lost every member keep their previous centroid. The
-      * frame is k×16 rows — checkpointed per step so `steps` rounds chain
-      * without nesting plans. */
+      * frame is k×16 rows — checkpointed per step (Barriers.iterate) so
+      * `steps` rounds chain without nesting plans. */
     def lloyd(cents: DataFrame): DataFrame = {
       val assigned = subs.join(broadcast(cents), Seq("sub"))
         .withColumn("dist", expr(l2("sv", "cv")))
@@ -3719,10 +3719,8 @@ object VectorOps {
       cents.join(means, Seq("sub", "cid"), "left_outer")
         .select(col("sub"), col("cid"),
           coalesce(col("cvNew"), col("cv")).as("cv"))
-        .localCheckpoint(true)
     }
-    val cents = (1 to steps).foldLeft(seeds) { (c, _) => lloyd(c) }
-    cents
+    Barriers.iterate(seeds, steps)(lloyd)
       .groupBy(col("sub"))
       .agg(expr("transform(array_sort(collect_list(struct(cid, cv))), t -> struct(t.cid as cid, t.cv as cv))")
         .as("cents"))
@@ -3851,7 +3849,7 @@ object VectorOps {
       .agg(topC(col("vec_id"), col("hsim")).as("top"))
       .select(col("q_id"),
         explode(expr("transform(top, s -> s.c_id)")).as("c_id"))
-      .localCheckpoint(true)
+      .transform(Barriers.eager)
     val dqExpr =
       "flatten(zip_with(code, cb, (ci, cents) -> element_at(cents, ci + 1).cv))"
     val w2 = Window.partitionBy(col("q_id")).orderBy(col("asim").desc, col("c_id"))
@@ -3870,7 +3868,7 @@ object VectorOps {
         .withColumn("r", row_number().over(w2))
         .filter(col("r") <= c2v)
         .select(col("q_id"), col("c_id"))
-        .localCheckpoint(true)
+        .transform(Barriers.eager)
     val w3 = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("c_id"))
     val casc = e.join(broadcast(st2), col("vec_id") === col("c_id"))
       .join(broadcast(qs.select(col("q_id"), col("qe"), col("qn"))), Seq("q_id"))
@@ -3957,13 +3955,7 @@ object VectorOps {
     val seeds = e.filter(col("vec_id") < k)
       .select(col("vec_id").as("cid"), col("emb").as("cvec"))
       .withColumn("cnorm", expr("sqrt(graft_dot(cvec, cvec))"))
-    (1 to iters).foldLeft(seeds) { (c, _) =>
-      val next = kmeansIter(e, c).localCheckpoint(true)
-      // iteration N−1's blocks are dead once N materializes (r17, the
-      // PageRank/CC unpersist discipline; no-op on the seed frame)
-      Barriers.release(c)
-      next
-    }
+    Barriers.iterate(seeds, iters)(kmeansIter(e, _))
   }
 
   /** k-means with DATA-DERIVED k = ⌈n/64⌉: holds ⟨cell⟩ ≈ 64 by
@@ -3989,12 +3981,7 @@ object VectorOps {
       .filter(col("vec_id") < col("kk"))
       .select(col("vec_id").as("cid"), col("emb").as("cvec"))
       .withColumn("cnorm", expr("sqrt(graft_dot(cvec, cvec))"))
-    // per-iteration barrier + superseded-frame release — see kmeansCentroids
-    (1 to iters).foldLeft(seeds) { (c, _) =>
-      val next = kmeansIter(e, c).localCheckpoint(true)
-      Barriers.release(c)
-      next
-    }
+    Barriers.iterate(seeds, iters)(kmeansIter(e, _))
   }
 
   /** One-row frame holding EVERY centroid as one array element
@@ -4188,10 +4175,9 @@ object VectorOps {
     // sides (and under multiProbe every bit-flip union branch: width+1
     // of them) re-derive it otherwise: v09's executed plan carried 9
     // FileScans, each re-running the planes×dims graft_hsig pass (r16;
-    // Barriers.eager = SWEEP17's A/B lever, and a real job runs at
-    // query-BUILD time — the r16-verdict v03/v04 anomaly suspect, cleared
-    // by the r17 re-measure: 1.45/1.09 s at local[32], see
-    // OPTIMIZATION_r17.md)
+    // a real job runs at query-BUILD time — the r16-verdict v03/v04
+    // anomaly suspect, cleared by the r17 re-measure: 1.45/1.09 s at
+    // local[32], see OPTIMIZATION_r17.md)
     val sig = Barriers.eager(fanout(e).select(col("vec_id"),
       expr(s"graft_hsig(emb, $planes)").as("sig")))
     val banded = sig

@@ -1,67 +1,36 @@
 package graft.util
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
-/** Lifecycle helper for eager `localCheckpoint` barriers (r17, guide §5
-  * "unpersist when done").
+/** The one place the engine makes and drops lineage barriers.
   *
-  * `localCheckpoint(true)` persists the frame's RDD blocks at
-  * MEMORY_AND_DISK; iterative folds (Lloyd steps, beam rounds, k-core
-  * peels, CC label rounds) that barrier every iteration otherwise keep
-  * EVERY superseded iteration's blocks alive until the driver GC happens
-  * to collect the RDD handle — in a 304-query bench JVM that is
-  * accumulated storage pressure charged to whatever query runs later, and
-  * on a cluster it is executor storage held for the whole query. The
-  * PageRank/CC operators already unpersist their superseded `cache()`d
-  * frames; this extends the discipline to checkpoint-barriered frames,
-  * whose RDD sits behind a `LogicalRDD` leaf (reached reflectively — the
-  * class is private[sql]).
+  * A barrier is an eager `localCheckpoint`: the frame's RDD blocks are
+  * persisted at MEMORY_AND_DISK and every later plan starts from a flat
+  * `LogicalRDD` leaf, so a frame with several consumers is derived once
+  * and an iterative fold does not re-analyze a plan that grows per round.
+  *
+  * Two costs come with it:
+  *  - it runs a REAL Spark job at query-BUILD time: a builder that calls
+  *    [[eager]] executes work before any action on the frame it returns,
+  *    plan-only and audit paths included. Helpers that call it say so in
+  *    their scaladoc.
+  *  - it truncates lineage and stores blocks executor-local without
+  *    replication, so on a cluster an executor lost while a corpus-sized
+  *    barrier (tx26 `toks`) is live fails the query instead of
+  *    recomputing it. `persist(DISK_ONLY)` keeps lineage, but CacheManager
+  *    dedupes equivalent plans, so a second build of the same query in one
+  *    session reads the first build's blocks; it was rejected for that
+  *    (OPTIMIZATION_r17.md).
+  *
+  * Superseded barriers must be released: otherwise every round of a fold
+  * keeps its blocks until the driver GC collects the RDD handle, storage
+  * pressure charged to whatever runs later in the same JVM.
   */
 object Barriers {
 
-  /** Eager checkpoint barrier with the EXPERIMENT kill switch
-    * (`SPARK_GRAFT_BARRIER=0`) behind SWEEP17's barrier-on/off scale
-    * measurements: the r16 barriers on tx08/tx26/tx29/v10 cleaned the
-    * plans but REGRESSED the sf0.1 wall clock (materialization cost >
-    * saved re-derivation at toy scale), so the call is made on ≥128×
-    * evidence, and that needs both arms measurable on one binary.
-    * Default ON (the production shape — each avoided re-derivation is a
-    * full scan+shuffle at 100 TB).
-    *
-    * CONTRACT (r16 ADVICE): this runs a REAL Spark job at query-BUILD
-    * time — callers' builders execute work before any action on the
-    * returned frame, including plan-only/audit paths. Helpers that call
-    * it must say so in their scaladoc. */
-  def eager(df: DataFrame): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_BARRIER").contains("0")) df
-    else df.localCheckpoint(true)
-
-  /** Barrier for a CORPUS-SIZED multi-consumer frame (tx26 `toks` — r16
-    * verdict items 3/4): unlike the metadata-sized barriers (centroids,
-    * codebooks, band tables), these store corpus-scale bytes in
-    * executor-local storage with NO replication, and a localCheckpoint
-    * is lineage-truncating — on a cluster, executor loss/decommission
-    * makes the frame unrecoverable and FAILS the query instead of
-    * recomputing it. `SPARK_GRAFT_CORPUS_BARRIER` selects the arm for
-    * the SWEEP17 measurement: `local` (default; measured fastest where
-    * the re-derivation is 3 regex-tokenize corpus scans — tx26 at 128×:
-    * local 76 s vs off/recompute 117 s), `disk` (persist(DISK_ONLY):
-    * lineage KEPT, executor loss recomputes — but CacheManager dedupes
-    * equivalent plans, so a SECOND build of the same query in one
-    * session silently READS the first build's cache; fine in a one-query
-    * production job, measurement-invalid in a multi-pass bench, which is
-    * why it is an experiment arm and not the default), `off` (recompute
-    * per consumer). v13's residual frame chose recompute outright on the
-    * same sweep (see the site comment). */
-  def corpusSized(df: DataFrame): DataFrame =
-    sys.env.getOrElse("SPARK_GRAFT_CORPUS_BARRIER", "local") match {
-      case "off" => df
-      case "disk" =>
-        val p = df.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-        p.count() // materialize eagerly, like the checkpoint arm
-        p
-      case _ => df.localCheckpoint(true)
-    }
+  /** Eager checkpoint barrier; runs a Spark job now (see the object doc). */
+  def eager(df: DataFrame): DataFrame = df.localCheckpoint(true)
 
   /** Release the blocks of a SUPERSEDED checkpoint barrier.
     *
@@ -69,14 +38,22 @@ object Barriers {
     * localCheckpoint is lineage-truncating, so a released frame cannot
     * be recomputed. No-op for plans that are not checkpoint leaves
     * (e.g. the un-checkpointed seed frame a fold starts from). */
-  def release(df: DataFrame): Unit = {
-    val plan = df.queryExecution.logical
-    if (plan.getClass.getSimpleName == "LogicalRDD") {
-      try {
-        val rdd = plan.getClass.getMethod("rdd").invoke(plan)
-          .asInstanceOf[org.apache.spark.rdd.RDD[_]]
-        rdd.unpersist(blocking = false)
-      } catch { case _: ReflectiveOperationException => () }
-    }
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+    case _ => ()
   }
+
+  /** Fixed-count fold: `n` applications of `step` from `seed`, each
+    * output barriered and each step's input released as soon as its
+    * output is at rest — round N−1's blocks are dead once round N
+    * materializes, so only the returned frame keeps blocks. The seed is
+    * released after step 1 when it is itself a checkpoint leaf, so pass
+    * only a seed nothing else references; a plain seed is left alone.
+    * Runs `n` Spark jobs at build time. */
+  def iterate(seed: DataFrame, n: Int)(step: DataFrame => DataFrame): DataFrame =
+    (1 to n).foldLeft(seed) { (prev, _) =>
+      val next = eager(step(prev))
+      release(prev)
+      next
+    }
 }
