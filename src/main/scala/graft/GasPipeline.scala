@@ -38,7 +38,8 @@ object GasPipeline {
     * + `_manifest`: same rows, same idempotent replay, but re-ingesting a
     * day never mutates committed files, so a reader covering that day
     * ([[LongStore.readCommitted]]) gets true snapshot isolation — the
-    * contract the plain layout only gives disjoint windows (IngestStress). */
+    * contract the plain layout only gives disjoint windows
+    * (ConcurrentIngestSpec). */
   def runBatch(spark: SparkSession, inputDir: String, storePath: String,
       ledgerPath: String, snapshot: Boolean = false): DataFrame = {
     val batch = GasIngest.discover(spark, inputDir, ledgerPath)

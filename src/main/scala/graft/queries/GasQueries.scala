@@ -23,7 +23,8 @@ object GasQueries {
     * `_time ∈ [_date, _date + 24 h]` (GasTransform: seconds-of-day 0..86400
     * added to the source day) implies `_date ∈ [date(start) - 1, date(stop)]`,
     * so that derived range is added as an explicit partition predicate —
-    * at 100 TB the scan touches only the bordering days, not the catalog. */
+    * at 100 TB the scan touches only the bordering days, not the catalog
+    * (ManifestSpec's prune gate counts the partitions a scan reads). */
   def timeRange(long: DataFrame, startIso: String, stopIso: String): DataFrame = {
     val start = lit(startIso).cast("timestamp")
     val stop = lit(stopIso).cast("timestamp")
@@ -56,11 +57,12 @@ object GasQueries {
     *
     * Routed through [[timeRange]] so the day filter carries the DERIVED
     * `_date` partition predicate, not just the `_time` one — the r15
-    * IngestStress rung caught the original `_time`-only form scanning
-    * EVERY day partition (at 4,096 days the flagship slice read the
-    * whole calendar; under concurrent tail-day ingest the unpruned scan
-    * also raced the overwrite into FileNotFound). Identical rows by the
-    * store invariant `_time ∈ [_date, _date + 24 h]`. */
+    * concurrent-ingest rung (now ConcurrentIngestSpec) caught the
+    * original `_time`-only form scanning EVERY day partition (at 4,096
+    * days the flagship slice read the whole calendar; under concurrent
+    * tail-day ingest the unpruned scan also raced the overwrite into
+    * FileNotFound). Identical rows by the store invariant
+    * `_time ∈ [_date, _date + 24 h]`. */
   def fieldDayMean(long: DataFrame, field: String, dayIso: String,
       every: String = "1 minute"): DataFrame = {
     val nextDay = java.time.LocalDate.parse(dayIso).plusDays(1)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** The one session factory: every main and the test suite get their
   * SparkSession here, and only here is `SPARK_GRAFT_CPUS` read.
   *
-  * The pipeline session (GasPipeline, the ingest mains, the test suite) is
+  * The pipeline session (GasPipeline and the test suite) is
   * exactly `local[cpus]`, `shuffle.partitions = cpus`, UTC and no UI:
   * perfbench copies these four settings of the `GasPipeline` CLI into its
   * own session, so they must not change. The query session (Verify, Bench,

@@ -1,9 +1,11 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
+import graft.queries.GasQueries
 import graft.store.LongStore
 
 /** PARTITION MANIFEST AT CADENCE (round-14 verdict item 1): the reference
@@ -13,29 +15,12 @@ import graft.store.LongStore
   * real cadence — N single-day `runBatch` calls — plus the two ADVICE
   * robustness holes: phantom entries (a manifest row whose partition was
   * never written) and replay duplicates (the crash-replay contract). The
-  * cadence and phantom cases run for both store layouts: plain
-  * (`_manifest`, [[LongStore.readWindow]]) and snapshot (`_commits`,
-  * [[LongStore.readCommitted]]).
+  * cadence test also holds the prune gate: a 2-day window's executed scan
+  * reads at most 3 of the 40 day partitions. The cadence and phantom cases
+  * run for both store layouts: plain (`_manifest`, [[LongStore.readWindow]])
+  * and snapshot (`_commits`, [[LongStore.readCommitted]]).
   */
 class ManifestSpec extends SparkSpec {
-
-  /** Minimal day file in the reference envelope: the pinned 20-column
-    * header, `rows` samples at 1 s spacing from `t0` seconds, values
-    * derived from the day index so every day's data is distinct. */
-  private def writeDayFile(dir: Path, day: java.time.LocalDate, rows: Int,
-      seed: Int, suffix: String = "210000", t0: Int = 0): String = {
-    val header = "Time (s),CO (ppm),Humidity (%r.h.),Temperature (C)," +
-      "Flow rate (mL/min),Heater voltage (V)," +
-      (1 to 14).map(i => s"R$i (MOhm)").mkString(",")
-    val name = day.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE) +
-      s"_$suffix.csv"
-    val body = (0 until rows).map { r =>
-      (Seq((t0 + r).toDouble) ++ (1 to 19).map(c => (seed * 100 + r * 10 + c) / 7.0))
-        .map(v => f"$v%.4f").mkString(",")
-    }.mkString("\n")
-    Files.write(dir.resolve(name), s"$header\n$body\n".getBytes("UTF-8"))
-    name
-  }
 
   /** The layout's reader: `_manifest` plans a plain store, the `_commits`
     * log a snapshot store. */
@@ -62,7 +47,7 @@ class ManifestSpec extends SparkSpec {
     // one batch per day — the reference's actual ingest cadence; ledger-
     // first discovery scopes each batch to the day just dropped
     (0 until nDays).foreach { d =>
-      writeDayFile(input, start.plusDays(d.toLong), rows = 3, seed = d)
+      DayFiles.write(input, start.plusDays(d.toLong), rows = 3, seed = d)
       val processed = GasPipeline.runBatch(spark, input.toString, store, ledger,
         snapshot)
       assert(processed.count() == 1, s"batch $d should process exactly its day")
@@ -86,7 +71,7 @@ class ManifestSpec extends SparkSpec {
       // re-ingest day 5 with new values as a later generation: the log
       // must resolve every partition to its LATEST generation only
       val redo = Files.createDirectory(work.resolve("redo"))
-      writeDayFile(redo, start.plusDays(5L), rows = 3, seed = 99)
+      DayFiles.write(redo, start.plusDays(5L), rows = 3, seed = 99)
       GasPipeline.runBatch(spark, redo.toString, store,
         work.resolve("ledger2").toString, snapshot = true)
       import org.apache.spark.sql.expressions.Window
@@ -111,6 +96,30 @@ class ManifestSpec extends SparkSpec {
     val sub = readLayout(store, snapshot,
         start.plusDays(10L).toString, start.plusDays(11L).toString)
     assert(sub.select("_date").distinct().count() == 2)
+
+    // the prune gate: a 2-day timeRange scans only the window's days, over
+    // the full listing and over the layout's reader alike. timeRange
+    // widens one day back for the _time/_date store invariant, so at one
+    // source file per day the scan may touch 3 partitions, never 40.
+    val mid = start.plusDays(10L)
+    for ((reader, long) <- Seq(
+        "full listing" -> spark.read.parquet(store),
+        log -> readLayout(store, snapshot, mid.minusDays(1L).toString,
+          mid.plusDays(1L).toString))) {
+      val parts = partitionsRead(GasQueries.timeRange(long, s"$mid 06:00:00",
+        s"${mid.plusDays(1L)} 18:00:00"))
+      assert(parts <= 3, s"the $reader scan read $parts partitions of $nDays")
+    }
+  }
+
+  /** Run `df` and return its one file scan's `numPartitions` metric. */
+  private def partitionsRead(df: org.apache.spark.sql.DataFrame): Long = {
+    df.collect()
+    val scans = ScanCensus.nodes(df.queryExecution.executedPlan).collect {
+      case s: FileSourceScanExec => s.metrics("numPartitions").value
+    }
+    assert(scans.size == 1, s"expected one file scan, got ${scans.size}")
+    scans.head
   }
 
   test("per-day cadence: N single-day batches keep the manifest small and readWindow exact") {
@@ -129,13 +138,13 @@ class ManifestSpec extends SparkSpec {
     val input = Files.createDirectory(work.resolve("input"))
     val store = work.resolve("store").toString
     val ledger = work.resolve("l").toString
-    writeDayFile(input, java.time.LocalDate.of(2016, 10, 7), rows = 4, seed = 1)
+    DayFiles.write(input, java.time.LocalDate.of(2016, 10, 7), rows = 4, seed = 1)
     GasPipeline.runBatch(spark, input.toString, store, ledger, snapshot)
 
     val before = readLayout(store, snapshot, "2016-10-07", "2016-10-09")
       .collect().toSet
 
-    val phantom = writeDayFile(input, java.time.LocalDate.of(2016, 10, 8),
+    val phantom = DayFiles.write(input, java.time.LocalDate.of(2016, 10, 8),
       rows = 4, seed = 2, suffix = "999999", t0 = 90000)
     GasPipeline.runBatch(spark, input.toString, store, ledger, snapshot)
     val log = if (snapshot) "_commits" else "_manifest"
@@ -165,7 +174,7 @@ class ManifestSpec extends SparkSpec {
     val work = Files.createTempDirectory("graft-manifest-all-phantom")
     val input = Files.createDirectory(work.resolve("input"))
     val store = work.resolve("store").toString
-    writeDayFile(input, java.time.LocalDate.of(2016, 10, 8), rows = 4, seed = 2,
+    DayFiles.write(input, java.time.LocalDate.of(2016, 10, 8), rows = 4, seed = 2,
       suffix = "999999", t0 = 90000)
     GasPipeline.runBatch(spark, input.toString, store,
       work.resolve("l").toString, snapshot)
@@ -173,7 +182,7 @@ class ManifestSpec extends SparkSpec {
     assert(empty.count() == 0)
 
     val full = Files.createDirectory(work.resolve("full"))
-    writeDayFile(full, java.time.LocalDate.of(2016, 10, 7), rows = 4, seed = 1)
+    DayFiles.write(full, java.time.LocalDate.of(2016, 10, 7), rows = 4, seed = 1)
     val fullStore = work.resolve("full_store").toString
     GasPipeline.runBatch(spark, full.toString, fullStore,
       work.resolve("l2").toString, snapshot)
@@ -195,7 +204,7 @@ class ManifestSpec extends SparkSpec {
     val work = Files.createTempDirectory("graft-manifest-replay")
     val input = Files.createDirectory(work.resolve("input"))
     val store = work.resolve("store").toString
-    val name = writeDayFile(input, java.time.LocalDate.of(2016, 10, 7),
+    val name = DayFiles.write(input, java.time.LocalDate.of(2016, 10, 7),
       rows = 4, seed = 2)
     GasPipeline.runBatch(spark, input.toString, store, work.resolve("l").toString)
 

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
 import graft.store.LongStore
 
@@ -10,25 +10,10 @@ import graft.store.LongStore
   * files, `_commits` appends are the only publication step, and readers
   * resolve exactly the latest committed generation. This spec pins the
   * protocol's four load-bearing properties at the unit level; the
-  * raced-by-writers version is IngestStress's hard gate, and gs38's oracle
+  * raced-by-writers version is ConcurrentIngestSpec, and gs38's oracle
   * pins the end-to-end read against the raw-CSV ground truth.
   */
 class SnapshotStoreSpec extends SparkSpec {
-
-  private def writeDayFile(dir: Path, day: java.time.LocalDate, rows: Int,
-      seed: Int): String = {
-    val header = "Time (s),CO (ppm),Humidity (%r.h.),Temperature (C)," +
-      "Flow rate (mL/min),Heater voltage (V)," +
-      (1 to 14).map(i => s"R$i (MOhm)").mkString(",")
-    val name = day.format(java.time.format.DateTimeFormatter.BASIC_ISO_DATE) +
-      "_210000.csv"
-    val body = (0 until rows).map { r =>
-      (Seq(r.toDouble) ++ (1 to 19).map(c => (seed * 100 + r * 10 + c) / 7.0))
-        .map(v => f"$v%.4f").mkString(",")
-    }.mkString("\n")
-    Files.write(dir.resolve(name), s"$header\n$body\n".getBytes("UTF-8"))
-    name
-  }
 
   private def rowsOf(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.select("_time", "_field", "_value").collect()
@@ -42,7 +27,7 @@ class SnapshotStoreSpec extends SparkSpec {
 
     // 3 days, one snapshot batch per day (the cadence path)
     (0 until 3).foreach { d =>
-      writeDayFile(input, start.plusDays(d.toLong), rows = 4, seed = d)
+      DayFiles.write(input, start.plusDays(d.toLong), rows = 4, seed = d)
       GasPipeline.runBatch(spark, input.toString, store,
         work.resolve("ledger").toString, snapshot = true)
     }
@@ -64,7 +49,7 @@ class SnapshotStoreSpec extends SparkSpec {
       s"(${v2.size} vs ${v1.size} rows — a generation union doubles)")
 
     // rewrite the middle day with DIFFERENT data: latest generation wins
-    writeDayFile(solo, start.plusDays(1L), rows = 4, seed = 99)
+    DayFiles.write(solo, start.plusDays(1L), rows = 4, seed = 99)
     GasPipeline.runBatch(spark, solo.toString, store,
       work.resolve("ledger3").toString, snapshot = true)
     val v3 = LongStore.readCommitted(spark, store,
